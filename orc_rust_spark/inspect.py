@@ -215,7 +215,8 @@ def main_orc(argv: list[str]) -> int:
                 for g, bf in enumerate(blooms):
                     if bf is None:
                         maybe.append(g)
-                    elif isinstance(value, int) and bf.might_contain_i64(value):
+                    elif isinstance(value, int) and of._bloom_might_contain_i64(
+                            bf, value):
                         maybe.append(g)
                     elif isinstance(value, str) and bf.might_contain_bytes(
                             value.encode()):

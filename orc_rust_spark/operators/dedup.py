@@ -127,10 +127,13 @@ def minhash_signatures(
     hash_family:
       - "xxhash64": perm_i = xxhash64(i, shingle) -> int64 (fastest; the
         production path)
-      - "md5":      perm_i = md5(f"{i}|" + shingle) -> hex string, minimum
-        taken lexicographically. md5 is computed identically by DuckDB, so
-        an external SQL engine can recompute the EXACT signatures — this
-        is what makes the LSH operator oracle-verifiable end to end.
+      - "md5":      one md5 per shingle; h1 = its first 15 hex digits
+        (60 bits), h2 = the next 8 (32 bits), and
+        perm_i = (h1 + i*h2) mod (2^61 - 1) as a bigint, minimum taken
+        numerically. md5 and this integer arithmetic are computed
+        identically by DuckDB, so an external SQL engine can recompute
+        the EXACT signatures — this is what makes the LSH operator
+        oracle-verifiable end to end.
 
     ``with_card`` additionally emits ``card`` = the document's distinct-
     shingle count (the rows feeding each signature ARE the exploded

@@ -21,6 +21,7 @@ public protobuf/ORC specs.
 
 from __future__ import annotations
 
+import math
 import os
 import re
 from dataclasses import dataclass, field
@@ -578,8 +579,11 @@ def read_metadatas(paths: list[str], max_workers: int = 16,
 
 
 def read_metadata(path: str, filesystem=None,
-                  io_retries: int = 2) -> OrcMeta:
+                  io_retries: int = 2, handle=None) -> OrcMeta:
     """Parse the file tail (PostScript/Footer/Metadata) into an OrcMeta.
+    ``handle``, an open input of ``path``, is read through instead of
+    opening the file again (a point lookup reads the tail and its
+    stripes through one handle).
 
     Corruption-hardened (r6 fuzz pass): any low-level failure inside the
     wire parse — a zlib/lzma error from a flipped bit in the compressed
@@ -594,7 +598,7 @@ def read_metadata(path: str, filesystem=None,
     OSError is a bounded re-read before the same wrapped error."""
     try:
         return fsio.call_with_io_retries(
-            lambda: _read_metadata_impl(path, filesystem), io_retries)
+            lambda: _read_metadata_impl(path, filesystem, handle), io_retries)
     except (NotImplementedError, ValueError, FileNotFoundError,
             PermissionError, IsADirectoryError):
         # filesystem errors pass through untouched so callers can still
@@ -608,38 +612,14 @@ def read_metadata(path: str, filesystem=None,
             f"{type(ex).__name__}: {ex}") from ex
 
 
-def _read_metadata_impl(path: str, fs=None) -> OrcMeta:
-    if fs is None:
-        fs, path = fsio.resolve(path)
-    with fsio.open_input(path, fs) as fh:
-        size = os.path.getsize(path) if fs is None else fh.size()
-        if size < len(MAGIC) + 1 or fh.read(len(MAGIC)) != MAGIC:
-            raise ValueError(f"not an ORC file (bad magic): {path!r}")
-        tail_len = min(size, 16 * 1024)
-        fh.seek(size - tail_len)
-        tail = fh.read(tail_len)
-        ps_len = tail[-1]
-        ps = _fields(tail[-1 - ps_len: -1])
-        footer_len = compression = meta_len = 0
-        for fno, _, v in ps:
-            if fno == 1:
-                footer_len = v
-            elif fno == 2:
-                compression = v
-            elif fno == 5:
-                meta_len = v
-        comp = COMPRESSION[compression]
-        if comp not in blockc.readable_codecs():
-            raise NotImplementedError(f"compression {comp} not available in container")
-        footer_end = size - 1 - ps_len
-        if footer_len + meta_len > tail_len - 1 - ps_len:
-            fh.seek(footer_end - footer_len - meta_len)
-            both = fh.read(footer_len + meta_len)
-            meta_raw, footer_raw = both[:meta_len], both[meta_len:]
-        else:
-            start = tail_len - 1 - ps_len - footer_len
-            footer_raw = tail[start: start + footer_len]
-            meta_raw = tail[start - meta_len: start]
+def _read_metadata_impl(path: str, fs=None, handle=None) -> OrcMeta:
+    if handle is not None:
+        comp, footer_raw, meta_raw = _read_tail(handle, path, fs)
+    else:
+        if fs is None:
+            fs, path = fsio.resolve(path)
+        with fsio.open_input(path, fs) as fh:
+            comp, footer_raw, meta_raw = _read_tail(fh, path, fs)
     footer = _fields(_decompress_tail(footer_raw, comp))
     types: list[OrcType] = []
     stripes: list[StripeInfo] = []
@@ -680,7 +660,7 @@ def _read_metadata_impl(path: str, fs=None) -> OrcMeta:
         elif fno == 8:
             stride = v
     stripe_stats: list[dict] = []
-    if meta_len:
+    if meta_raw:
         for fno, _, v in _fields(_decompress_tail(meta_raw, comp)):
             if fno == 1:  # StripeStatistics
                 per_col: dict[int, tuple] = {}
@@ -692,6 +672,37 @@ def _read_metadata_impl(path: str, fs=None) -> OrcMeta:
                         per_col[ci] = mm
                 stripe_stats.append(per_col)
     return OrcMeta(comp, types, stripes, n_rows, stripe_stats, stride)
+
+
+def _read_tail(fh, path: str, fs=None) -> tuple[str, bytes, bytes]:
+    """-> (compression, raw footer, raw metadata) from an open file."""
+    size = os.fstat(fh.fileno()).st_size if fs is None else fh.size()
+    fh.seek(0)
+    if size < len(MAGIC) + 1 or fh.read(len(MAGIC)) != MAGIC:
+        raise ValueError(f"not an ORC file (bad magic): {path!r}")
+    tail_len = min(size, 16 * 1024)
+    fh.seek(size - tail_len)
+    tail = fh.read(tail_len)
+    ps_len = tail[-1]
+    ps = _fields(tail[-1 - ps_len: -1])
+    footer_len = compression = meta_len = 0
+    for fno, _, v in ps:
+        if fno == 1:
+            footer_len = v
+        elif fno == 2:
+            compression = v
+        elif fno == 5:
+            meta_len = v
+    comp = COMPRESSION[compression]
+    if comp not in blockc.readable_codecs():
+        raise NotImplementedError(f"compression {comp} not available in container")
+    footer_end = size - 1 - ps_len
+    if footer_len + meta_len > tail_len - 1 - ps_len:
+        fh.seek(footer_end - footer_len - meta_len)
+        both = fh.read(footer_len + meta_len)
+        return comp, both[meta_len:], both[:meta_len]
+    start = tail_len - 1 - ps_len - footer_len
+    return comp, tail[start: start + footer_len], tail[start - meta_len: start]
 
 
 # --- stripe decode -----------------------------------------------------------
@@ -1094,9 +1105,11 @@ def _parse_stats_nullinfo(raw: bytes) -> tuple[int | None, bool | None]:
     return n_values, has_null
 
 
-def _parse_row_index(raw: bytes) -> list[tuple]:
+def _parse_row_index(raw: bytes, with_stats: bool = True) -> list[tuple]:
     """ROW_INDEX stream -> [(positions, (min,max)|None,
-    (n_values, has_null))] per row group."""
+    (n_values, has_null))] per row group. ``with_stats=False`` parses the
+    positions only (a column that is read but does not prune); its
+    entries carry no statistics."""
     entries = []
     for fno, _, v in _fields(raw):
         if fno != 1:  # RowIndexEntry
@@ -1107,7 +1120,7 @@ def _parse_row_index(raw: bytes) -> list[tuple]:
         for f2, w2, v2 in _fields(v):
             if f2 == 1:  # repeated uint64 positions (packed or not)
                 positions.extend(_packed_u32(v2))
-            elif f2 == 2:  # ColumnStatistics
+            elif f2 == 2 and with_stats:  # ColumnStatistics
                 stats = _parse_column_stats(v2)
                 nullinfo = _parse_stats_nullinfo(v2)
         entries.append((positions, stats, nullinfo))
@@ -1212,66 +1225,177 @@ def _subtree_ids(types: list[OrcType], cid: int) -> list[int]:
     return out
 
 
+def _block_at(raw: bytes, comp: str, pos: int, cache: dict, key):
+    """-> (decompressed bytes, next block offset) of the compression block
+    at offset ``pos``. ``cache`` keeps every block it decompresses under
+    (``key``, offset), so groups that share a block decompress it once
+    per stripe."""
+    hit = cache.get((key, pos))
+    if hit is None:
+        end = pos + 3 + (int.from_bytes(raw[pos: pos + 3], "little") >> 1)
+        hit = cache[(key, pos)] = (
+            blockc.decompress_stream(raw[pos:end], comp), end)
+    return hit
+
+
+def _group_bytes(raw: bytes, comp: str, start: tuple[int, int],
+                 stop: tuple[int, int] | None, cache: dict, key) -> bytes:
+    """One row group's bytes of a stream: decompressed from the group's
+    block on, and only as far as the group reaches.
+
+    ``start`` is the group's (block offset, offset in the block), ``stop``
+    the same position where the group's bytes end, or None for the stream
+    end. Our writer starts every group on a block boundary, so there the
+    read is exactly the group's blocks; liborc's blocks are not aligned,
+    and the read goes through the block that holds ``stop``. A ``stop``
+    off the block grid reads to the stream end. An uncompressed stream's
+    byte offset is its block offset."""
+    if comp == "none":
+        return raw[sum(start): len(raw) if stop is None else sum(stop)]
+    pos, off = start
+    parts: list[bytes] = []
+    got, end = 0, math.inf
+    while pos < len(raw):
+        if stop is not None and pos == stop[0]:
+            end = got + stop[1]
+        if got >= end:
+            break
+        data, pos = _block_at(raw, comp, pos, cache, key)
+        parts.append(data)
+        got += len(data)
+    buf = parts[0] if len(parts) == 1 else b"".join(parts)
+    return buf[off:] if off else buf
+
+
+def _stream_positions(layout, positions, comp: str) -> dict:
+    """{stream kind: (block offset, offset in the block, extras)} from one
+    row-index entry. An uncompressed stream records one byte offset,
+    which stands in for the block offset."""
+    out, cur = {}, 0
+    for kind, extras in layout:
+        if comp == "none":
+            at = (int(positions[cur]), 0)
+            cur += 1
+        else:
+            at = (int(positions[cur]), int(positions[cur + 1]))
+            cur += 2
+        out[kind] = (*at, tuple(int(x) for x in positions[cur: cur + extras]))
+        cur += extras
+    return out
+
+
+def _rle_values(rle, buf, skip: int, n: int, signed: bool,
+                sel: np.ndarray | None = None) -> np.ndarray:
+    """The ``n`` values after the first ``skip`` of an integer RLE stream,
+    or with ``sel`` (sorted offsets below ``n``) only the values at
+    ``sel``, decoded as one stretch from the first of them to the last.
+    RLEv2 passes the runs before the stretch by header arithmetic; RLEv1
+    decodes from the group's start."""
+    if sel is not None and not sel.size:
+        return np.zeros(0, dtype=np.int64)
+    if rle is not decode_rlev2:
+        n_need = n if sel is None else int(sel[-1]) + 1
+        vals = rle(buf, skip + n_need, signed=signed, exact=False)[skip:]
+        return vals if sel is None else vals[sel]
+    if sel is None:
+        return rle(buf, n, signed=signed, skip=skip, exact=False)
+    lo = int(sel[0])
+    vals = rle(buf, int(sel[-1]) - lo + 1, signed=signed, skip=skip + lo,
+               exact=False)
+    return vals[sel - lo]
+
+
 def _decode_column_group(
     col_id: int, t: OrcType, streams: dict, encodings, comp: str, tz: str,
     entries_by_col: dict, g: int, n_g: int, dict_cache: dict, name: str,
-    types: list[OrcType] | None = None, sfx_cache: dict | None = None,
+    types: list[OrcType] | None = None, block_cache: dict | None = None,
+    rows: np.ndarray | None = None,
 ) -> pa.Array:
     """Decode ONE row group of a column (``n_g`` = this column's value
     count within the group — top-level rows for root children, element
     counts for nested children) by seeking to the group's recorded stream
-    positions (reference seek model: src/row_index.rs:42-51) — groups not
-    decoded are never RLE-decoded nor (beyond their compressed suffix)
-    decompressed. Nested columns recurse: the parent derives each child's
-    group value count (PRESENT for struct, LENGTH sums for list/map) and
-    the child seeks via its OWN row-index entry for the same group.
+    positions (reference seek model: src/row_index.rs:42-51). Each stream
+    is decompressed from the group's block up to where the next group
+    starts (_group_bytes; to the stream end when the next group starts
+    inside a run), so no later group is decoded.
+    Nested columns recurse: the parent derives each child's group value
+    count (PRESENT for struct, LENGTH sums for list/map) and the child
+    seeks via its OWN row-index entry for the same group.
 
-    ``sfx_cache`` memoizes suffix decompressions per (col, kind, chunk
-    offset): groups whose positions land in the same compressed block —
-    always true for continuous streams whose chunk offset stays 0 — reuse
-    one decompression instead of re-decompressing the stream tail per
-    group (code-review r6)."""
+    ``rows`` (sorted group-local row numbers) keeps only those rows, and
+    every stream is decoded only as far as the last of them: PRESENT bits
+    and RLE values through that row (RLEv2 skips the runs before the
+    first of them by header arithmetic), floats as a byte slice,
+    dictionary strings as their indices plus the dictionary, direct
+    strings as the lengths and the DATA bytes through that row. Nested
+    and union columns decode the whole group and take the rows.
+
+    ``block_cache`` keeps the decompressed blocks of one stripe decode:
+    groups whose positions share a block — continuous streams whose block
+    offset stays 0, liborc's unaligned blocks — decompress it once."""
+    if rows is not None and t.kind in (K_STRUCT, K_LIST, K_MAP, K_UNION):
+        whole = _decode_column_group(col_id, t, streams, encodings, comp, tz,
+                                     entries_by_col, g, n_g, dict_cache, name,
+                                     types, block_cache)
+        return whole.take(pa.array(rows, type=pa.int64()))
     _trace_decode(name)
+    if block_cache is None:
+        block_cache = {}
     enc_kind, dict_size = encodings[col_id]
     rle = _int_decoder(enc_kind)
     has_present = (col_id, S_PRESENT) in streams
     layout = _position_layout(t, enc_kind, has_present)
-    pos = entries_by_col[col_id][g][0]
-    cur = 0
-    bufs: dict[int, object] = {}
-    exs: dict[int, tuple] = {}
-    for kind, extras in layout:
-        raw = streams[(col_id, kind)]
-        if comp == "none":
-            off = int(pos[cur]); cur += 1
-            buf = raw[off:]
-        else:
-            chunk, dec = int(pos[cur]), int(pos[cur + 1]); cur += 2
-            key = (col_id, kind, chunk)
-            if sfx_cache is None:
-                suffix = blockc.decompress_stream(raw[chunk:], comp)
-            elif key in sfx_cache:
-                suffix = sfx_cache[key]
-            else:
-                suffix = sfx_cache[key] = blockc.decompress_stream(raw[chunk:], comp)
-            buf = suffix[dec:]
-        exs[kind] = tuple(int(x) for x in pos[cur: cur + extras]); cur += extras
-        bufs[kind] = buf
+    entries = entries_by_col[col_id]
+    here = _stream_positions(layout, entries[g][0], comp)
+    after = (_stream_positions(layout, entries[g + 1][0], comp)
+             if g + 1 < len(entries) else None)
+    exs = {kind: at[2] for kind, at in here.items()}
 
+    def read(kind: int, limit: int | None = None) -> bytes:
+        """This group's bytes of stream ``kind`` (the first ``limit``
+        bytes when given)."""
+        chunk, off, _ = here[kind]
+        if limit is not None:
+            stop = (chunk, off + limit)
+        elif after is None or any(after[kind][2]):
+            # the last group, or the next group starts inside a run that
+            # this group also reads: the stream end
+            stop = None
+        else:
+            stop = after[kind][:2]
+        return _group_bytes(streams[(col_id, kind)], comp, (chunk, off), stop,
+                            block_cache, (col_id, kind))
+
+    n_need = n_g if rows is None else int(rows[-1]) + 1
     not_null = None
-    n_dense = n_g
+    n_dense = n_need
     if has_present:
         skip = exs[S_PRESENT][0] * 8 + exs[S_PRESENT][1]
-        bits = decode_boolean_rle(bufs[S_PRESENT], skip + n_g, exact=False)
+        bits = decode_boolean_rle(read(S_PRESENT), skip + n_need, exact=False)
         not_null = np.asarray(bits[skip:])
         n_dense = int(not_null.sum())
+    # sel: dense offsets of the selected non-null rows (None: every row);
+    # valid: the result's validity (None: no nulls)
+    sel, valid = None, not_null
+    if rows is not None:
+        if not_null is None:
+            sel = rows
+        else:
+            valid = not_null[rows]
+            sel = (np.cumsum(not_null) - 1)[rows][valid]
+
+    def pick(a: np.ndarray) -> np.ndarray:
+        return a if sel is None else a[sel]
+
+    def ints(kind: int, signed: bool) -> np.ndarray:
+        return _rle_values(rle, read(kind), exs[kind][0], n_dense, signed, sel)
 
     k = t.kind
     if k == K_STRUCT:
         children = [
             _decode_column_group(cid, types[cid], streams, encodings, comp, tz,
                                  entries_by_col, g, n_dense, dict_cache,
-                                 f"{name}.{fname}", types, sfx_cache)
+                                 f"{name}.{fname}", types, block_cache)
             for cid, fname in zip(t.subtypes, t.field_names)
         ]
         dense = pa.StructArray.from_arrays(children, t.field_names)
@@ -1281,45 +1405,46 @@ def _decode_column_group(
         # is that group's tag count for its variant (children store values
         # densely per tag — same tagged-struct expansion as the full path)
         sk = exs[S_DATA][0]
-        tags = decode_byte_rle(bufs[S_DATA], sk + n_dense, exact=False)[sk:]
+        tags = decode_byte_rle(read(S_DATA), sk + n_dense, exact=False)[sk:]
         fields = [pa.array(tags.view(np.int8), type=pa.int8())]
         names = ["tag"]
         for i, cid in enumerate(t.subtypes):
-            sel = tags == i
-            n_child = int(sel.sum())
+            is_i = tags == i
+            n_child = int(is_i.sum())
             child = _decode_column_group(cid, types[cid], streams, encodings,
                                          comp, tz, entries_by_col, g, n_child,
                                          dict_cache, f"{name}.{i}", types,
-                                         sfx_cache)
+                                         block_cache)
             idx = np.zeros(n_dense, dtype=np.int64)
-            idx[sel] = np.arange(n_child)
-            fields.append(child.take(pa.array(idx, type=pa.int64(), mask=~sel)))
+            idx[is_i] = np.arange(n_child)
+            fields.append(child.take(pa.array(idx, type=pa.int64(), mask=~is_i)))
             names.append(f"f{i}")
         dense = pa.StructArray.from_arrays(fields, names)
         return _respace(dense, not_null)
     if k in (K_LIST, K_MAP):
-        sk = exs[S_LENGTH][0]
-        lengths = rle(bufs[S_LENGTH], sk + n_dense, signed=False, exact=False)[sk:]
+        lengths = ints(S_LENGTH, False)
         n_child = int(lengths.sum())
         if k == K_LIST:
             cid = t.subtypes[0]
             child = _decode_column_group(cid, types[cid], streams, encodings,
                                          comp, tz, entries_by_col, g, n_child,
-                                         dict_cache, f"{name}.item", types, sfx_cache)
+                                         dict_cache, f"{name}.item", types,
+                                         block_cache)
             dense = pa.ListArray.from_arrays(_int32_offsets(lengths), child)
         else:
             kid, vid = t.subtypes[0], t.subtypes[1]
             keys = _decode_column_group(kid, types[kid], streams, encodings,
                                         comp, tz, entries_by_col, g, n_child,
-                                        dict_cache, f"{name}.key", types, sfx_cache)
+                                        dict_cache, f"{name}.key", types,
+                                        block_cache)
             items = _decode_column_group(vid, types[vid], streams, encodings,
                                          comp, tz, entries_by_col, g, n_child,
-                                         dict_cache, f"{name}.value", types, sfx_cache)
+                                         dict_cache, f"{name}.value", types,
+                                         block_cache)
             dense = pa.MapArray.from_arrays(_int32_offsets(lengths), keys, items)
         return _respace(dense, not_null)
     if k in (K_SHORT, K_INT, K_LONG, K_DATE):
-        sk = exs[S_DATA][0]
-        vals = rle(bufs[S_DATA], sk + n_dense, signed=True, exact=False)[sk:]
+        vals = ints(S_DATA, True)
         if k == K_DATE:
             dense = pa.array(vals.astype(np.int32), type=pa.int32()).cast(pa.date32())
         else:
@@ -1329,18 +1454,19 @@ def _decode_column_group(
                 dense = dense.cast(target)
     elif k == K_BYTE:
         sk = exs[S_DATA][0]
-        u8 = decode_byte_rle(bufs[S_DATA], sk + n_dense, exact=False)[sk:]
+        u8 = pick(decode_byte_rle(read(S_DATA), sk + n_dense, exact=False)[sk:])
         dense = pa.array(u8.view(np.int8), type=pa.int8())
     elif k == K_BOOLEAN:
         skip = exs[S_DATA][0] * 8 + exs[S_DATA][1]
-        dense = pa.array(decode_boolean_rle(bufs[S_DATA], skip + n_dense, exact=False)[skip:])
+        bits = decode_boolean_rle(read(S_DATA), skip + n_dense, exact=False)
+        dense = pa.array(pick(bits[skip:]))
     elif k in (K_FLOAT, K_DOUBLE):
-        dtype = np.float32 if k == K_FLOAT else np.float64
-        dense = pa.array(decode_float(bufs[S_DATA], n_dense, dtype))
+        dtype = np.dtype(np.float32 if k == K_FLOAT else np.float64)
+        vals = decode_float(read(S_DATA, n_dense * dtype.itemsize), n_dense, dtype)
+        dense = pa.array(pick(vals))
     elif k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        sk_d, sk_s = exs[S_DATA][0], exs[S_SECONDARY][0]
-        secs = rle(bufs[S_DATA], sk_d + n_dense, signed=True, exact=False)[sk_d:]
-        nanos = rle(bufs[S_SECONDARY], sk_s + n_dense, signed=False, exact=False)[sk_s:]
+        secs = ints(S_DATA, True)
+        nanos = ints(S_SECONDARY, False)
         dense = pa.array(_ts_us(secs, nanos, tz, k), type=pa.int64()).cast(pa.timestamp("us"))
     elif k == K_DECIMAL:
         from ..codecs.decimal_codec import (
@@ -1351,36 +1477,31 @@ def _decode_column_group(
             rescale_i64,
         )
 
-        sk_s = exs[S_SECONDARY][0]
-        scales = rle(bufs[S_SECONDARY], sk_s + n_dense, signed=True, exact=False)[sk_s:]
-        if (t.precision or 38) > 18:
+        scales = _rle_values(rle, read(S_SECONDARY), exs[S_SECONDARY][0],
+                             n_dense, True)
+        data = read(S_DATA)
+        words = None
+        if (t.precision or 38) <= 18:
+            try:
+                mant = rescale_i64(decode_varints_i64(data, n_dense),
+                                   scales, t.scale)
+                words = np.empty((n_dense, 2), dtype=np.uint64)
+                words[:, 0] = mant.view(np.uint64)
+                words[:, 1] = (mant >> np.int64(63)).view(np.uint64)
+            except ValueError:
+                # mantissa varints wider than 64-bit zigzag despite a
+                # declared precision <= 18 (legal on the wire), or an
+                # int64-overflowing rescale: exact i128 fallback, mirroring
+                # _decode_column — without it the SAME file full-decoded
+                # but crashed the pruned read (code-review r6)
+                words = None
+        if words is None:
             # wide decimals: exact Python-int rescale (int64 would overflow)
-            ints = rescale_exact(decode_varints_exact(bufs[S_DATA], n_dense),
-                                 scales, t.scale)
-            return _respace(
-                pa.Array.from_buffers(
-                    pa.decimal128(t.precision or 38, t.scale), n_dense,
-                    [None, pa.py_buffer(i128_words(ints).tobytes())],
-                ),
-                not_null,
-            )
-        try:
-            mant = rescale_i64(decode_varints_i64(bufs[S_DATA], n_dense),
-                               scales, t.scale)
-            words = np.empty((n_dense, 2), dtype=np.uint64)
-            words[:, 0] = mant.view(np.uint64)
-            words[:, 1] = (mant >> np.int64(63)).view(np.uint64)
-        except ValueError:
-            # mantissa varints wider than 64-bit zigzag despite a declared
-            # precision <= 18 (legal on the wire), or an int64-overflowing
-            # rescale: exact i128 fallback, mirroring _decode_column —
-            # without it the SAME file full-decoded but crashed the pruned
-            # read (code-review r6)
-            ints = rescale_exact(decode_varints_exact(bufs[S_DATA], n_dense),
-                                 scales, t.scale)
-            words = i128_words(ints)
+            words = i128_words(rescale_exact(
+                decode_varints_exact(data, n_dense), scales, t.scale))
+        words = pick(words)
         dense = pa.Array.from_buffers(
-            pa.decimal128(t.precision or 38, t.scale), n_dense,
+            pa.decimal128(t.precision or 38, t.scale), len(words),
             [None, pa.py_buffer(words.tobytes())],
         )
     elif k in (K_STRING, K_VARCHAR, K_CHAR, K_BINARY):
@@ -1392,21 +1513,20 @@ def _decode_column_group(
                 dict_cache[col_id] = _split_binary(
                     blockc.decompress_stream(streams[(col_id, S_DICTIONARY_DATA)], comp),
                     dict_lens)
-            sk = exs[S_DATA][0]
-            indices = rle(bufs[S_DATA], sk + n_dense, signed=False, exact=False)[sk:]
-            dense = pa.DictionaryArray.from_arrays(
-                pa.array(indices, type=pa.int64()), dict_cache[col_id]
-            ).cast(pa.large_binary())
+            dense = dict_cache[col_id].take(
+                pa.array(ints(S_DATA, False), type=pa.int64()))
         else:
-            sk = exs[S_LENGTH][0]
-            lengths = rle(bufs[S_LENGTH], sk + n_dense, signed=False, exact=False)[sk:]
+            lengths = _rle_values(rle, read(S_LENGTH), exs[S_LENGTH][0],
+                                  n_dense, False)
             total = int(lengths.sum())
-            dense = _split_binary(bufs[S_DATA][:total], lengths)
+            dense = _split_binary(read(S_DATA, total)[:total], lengths)
+            if sel is not None:
+                dense = dense.take(pa.array(sel, type=pa.int64()))
         if k != K_BINARY:
             dense = dense.cast(pa.large_string())
     else:  # pragma: no cover — layout() already excluded these
         raise NotImplementedError(f"group seek for ORC kind {k} ({name})")
-    return _respace(dense, not_null)
+    return _respace(dense, valid)
 
 
 def _bloom_probe_ok(col_kind: int, eq) -> bool:
@@ -1450,6 +1570,18 @@ def _stats_comparable(mn, bound) -> bool:
     return False
 
 
+def _bloom_might_contain_i64(bf, value: int) -> bool:
+    """Maybe-present in an ORC integer bloom filter under either hash an
+    ORC writer uses: this engine's writer hashes with ``wang_hash_i64``,
+    liborc and ORC Java with ``wang_hash_i64_orc``. A probe that tried
+    only one would rule out values the other writer added."""
+    from ..codecs.bloom import wang_hash_i64, wang_hash_i64_orc
+
+    v = np.array([value], dtype=np.int64)
+    return bool(bf.test_hashes(
+        np.concatenate([wang_hash_i64(v), wang_hash_i64_orc(v)])).any())
+
+
 def _group_may_match(stats, bf, col_kind: int, lo, hi, eq) -> bool:
     """Three-valued per-group test: stats range check, then (for an
     equality probe) the bloom filter — missing/mismatched stats keep."""
@@ -1466,7 +1598,7 @@ def _group_may_match(stats, bf, col_kind: int, lo, hi, eq) -> bool:
             ok = False
     if ok and eq is not None and bf is not None and _bloom_probe_ok(col_kind, eq):
         if isinstance(eq, int):
-            ok = bf.might_contain_i64(eq)
+            ok = _bloom_might_contain_i64(bf, eq)
         else:
             probe = eq.encode() if isinstance(eq, str) else eq
             ok = bf.might_contain_bytes(probe)
@@ -1582,15 +1714,44 @@ def decode_stripe_pruned(
     not_null: bool | None = None,
     predicates: list[dict] | None = None,
     row_ranges: list[tuple[int, int]] | None = None,
+    residual: bool = False,
 ) -> tuple[pa.Table, int, int]:
     """Corruption-guarded entry for the predicate/seek decode path — same
     ``ValueError("corrupt ORC stripe ...")`` contract as decode_stripe
     (code-review r7: this path previously leaked raw IndexErrors).
     Semantics documented on the impl below."""
+    if residual:
+        if (column is None or predicates is not None
+                or isinstance(eq, (list, tuple, set, frozenset))):
+            raise ValueError(
+                "residual=True needs one eq value on one column")
+        if column not in meta.types[0].field_names:
+            raise KeyError(
+                f"column {column!r} not in ORC schema; "
+                f"available: {meta.types[0].field_names}")
+        if columns is not None and column not in columns:
+            raise ValueError(
+                f"residual=True needs the probed column {column!r} in "
+                "the projection")
     return _corrupt_guarded(
         _decode_stripe_pruned_impl, buf, footer_raw, meta, n_rows,
         column=column, eq=eq, lo=lo, hi=hi, columns=columns,
-        not_null=not_null, predicates=predicates, row_ranges=row_ranges)
+        not_null=not_null, predicates=predicates, row_ranges=row_ranges,
+        residual=residual)
+
+
+def _eq_mask(arr: pa.Array, value) -> np.ndarray:
+    """Rows of ``arr`` equal to ``value``; nulls never match, and a probe
+    whose type cannot be compared with the column matches nothing."""
+    import pyarrow.compute as pc
+
+    try:
+        eq = pc.equal(arr, value)
+    except (pa.ArrowNotImplementedError, pa.ArrowInvalid, TypeError):
+        # TypeError covers pa.ArrowTypeError and a value pyarrow cannot
+        # take at all (a frozenset)
+        return np.zeros(len(arr), dtype=bool)
+    return eq.fill_null(False).to_numpy(zero_copy_only=False)
 
 
 def _decode_stripe_pruned_impl(
@@ -1600,6 +1761,7 @@ def _decode_stripe_pruned_impl(
     not_null: bool | None = None,
     predicates: list[dict] | None = None,
     row_ranges: list[tuple[int, int]] | None = None,
+    residual: bool = False,
 ) -> tuple[pa.Table, int, int]:
     """Decode only the row groups of this stripe whose ROW_INDEX stats /
     bloom filter may satisfy the predicate on ``column`` — and only the
@@ -1623,12 +1785,21 @@ def _decode_stripe_pruned_impl(
     sliced EXACTLY to the ranges on every path (seek and full-decode
     fallback alike).
 
-    -> (table of kept groups' rows, groups_decoded, groups_total). The
-    caller applies the residual filter. Falls back to full decode (all
-    groups "decoded") only when no predicate column has a usable index,
-    the index is missing/truncated, or a projected column's type kind is
-    unknown (every known kind, nested and union included, seek-decodes),
-    always respecting the projection.
+    ``residual=True`` (one ``eq`` value on ``column``, which must be
+    projected) also applies that probe exactly, as the late-materialized
+    read of a point lookup: the kept groups' ``column`` is decoded first,
+    ``pc.equal`` picks its matching rows (an incomparable probe matches
+    none), and the other projected columns are decoded at those rows
+    only (_decode_column_group's ``rows``). The table then holds just the
+    matching rows; ``groups_decoded`` still counts the groups kept by
+    pruning.
+
+    -> (table of kept groups' rows, groups_decoded, groups_total).
+    Without ``residual`` the caller applies the residual filter. Falls
+    back to full decode (all groups "decoded") only when no predicate
+    column has a usable index, the index is missing/truncated, or a
+    projected column's type kind is unknown (every known kind, nested and
+    union included, seek-decodes), always respecting the projection.
     """
     stream_list, encodings, tz = _read_stripe_footer(footer_raw, meta.compression)
     streams: dict[tuple[int, int], bytes] = {}
@@ -1651,8 +1822,12 @@ def _decode_stripe_pruned_impl(
             _range_mask(groups, stride, n_rows, row_ranges)))
 
     def full():
-        tbl = decode_stripe(buf, footer_raw, meta, n_rows, columns=columns)
-        return _slice_exact(tbl, range(n_groups)), n_groups, n_groups
+        tbl = _slice_exact(
+            decode_stripe(buf, footer_raw, meta, n_rows, columns=columns),
+            range(n_groups))
+        if residual:
+            tbl = tbl.filter(_eq_mask(tbl.column(column).combine_chunks(), eq))
+        return tbl, n_groups, n_groups
 
     if predicates is None:
         predicates = ([dict(column=column, eq=eq, lo=lo, hi=hi,
@@ -1662,13 +1837,18 @@ def _decode_stripe_pruned_impl(
 
     parsed_ri: dict[int, list] = {}  # decompress+parse each index ONCE
     # (a predicate column that is also projected reused to pay twice —
-    # code-review r6)
+    # code-review r6). Predicate columns parse first, with statistics;
+    # the columns that are only read parse their positions alone.
 
-    def _ri_entries(cid: int):
+    def _ri_entries(cid: int, stats: bool = True):
         if cid not in parsed_ri:
             raw = streams.get((cid, S_ROW_INDEX))
-            parsed_ri[cid] = None if raw is None else _parse_row_index(
-                blockc.decompress_stream(raw, meta.compression))
+            if raw is None:
+                parsed_ri[cid] = None
+            else:
+                raw = blockc.decompress_stream(raw, meta.compression)
+                parsed_ri[cid] = (_parse_row_index(raw) if stats
+                                  else _parse_row_index(raw, with_stats=False))
         return parsed_ri[cid]
 
     keep_sets: list[set[int]] = []
@@ -1704,11 +1884,13 @@ def _decode_stripe_pruned_impl(
     if not keep_sets:
         return full()
     keep = sorted(set.intersection(*keep_sets))
-    if len(keep) >= n_groups:
+    if len(keep) >= n_groups and not residual:
+        # every group kept: one whole-stripe decode is cheaper than a
+        # seek per group — unless the residual probe spares the other
+        # columns all but their matching rows
         return full()
     if not keep:
-        return (decode_stripe(buf, footer_raw, meta, 0, columns=columns),
-                0, n_groups)
+        return _empty_table(meta, columns), 0, n_groups
 
     # seek-decode every PROJECTED column (including its nested subtree)
     # group by group; columns whose type has no seek support or whose
@@ -1733,23 +1915,47 @@ def _decode_stripe_pruned_impl(
                 and (cid, S_DICTIONARY_DATA) in streams
             ):
                 return full()
-            parsed = _ri_entries(cid)
+            parsed = _ri_entries(cid, stats=False)
             if parsed is None:
                 return full()
             if len(parsed) < need:  # truncated/short index: cannot seek
                 return full()
-            per_col_entries[cid] = parsed
+            # entries past the stripe's groups bound nothing: the last
+            # group reads to its streams' end
+            per_col_entries[cid] = parsed[:n_groups]
 
     dict_cache: dict[int, pa.Array] = {}
-    sfx_cache: dict[tuple, bytes] = {}
-    cols: dict[str, list] = {name: [] for name in proj}
-    for g in keep:
-        n_g = min(stride, n_rows - g * stride)
-        for cid, name in zip(proj_ids, proj):
-            cols[name].append(_decode_column_group(
-                cid, meta.types[cid], streams, encodings, meta.compression, tz,
-                per_col_entries, g, n_g, dict_cache, name, meta.types,
-                sfx_cache))
+    block_cache: dict[tuple, tuple] = {}
+
+    def group(cid: int, name: str, g: int, rows=None) -> pa.Array:
+        return _decode_column_group(
+            cid, meta.types[cid], streams, encodings, meta.compression, tz,
+            per_col_entries, g, min(stride, n_rows - g * stride), dict_cache,
+            name, meta.types, block_cache, rows)
+
+    if residual:
+        # late materialization: the probed column first, then every other
+        # projected column at the matching rows of each kept group only
+        key_id = proj_ids[proj.index(column)]
+        hits: dict[int, np.ndarray] = {}
+        key_parts = []
+        for g in keep:
+            keys = group(key_id, column, g)
+            mask = _eq_mask(keys, eq)
+            if row_ranges is not None:
+                mask &= _range_mask([g], stride, n_rows, row_ranges)
+            rows = np.flatnonzero(mask)
+            if rows.size:
+                hits[g] = rows
+                key_parts.append(keys.take(pa.array(rows, type=pa.int64())))
+        if not hits:
+            return _empty_table(meta, columns), len(keep), n_groups
+        cols = {name: key_parts if name == column
+                else [group(cid, name, g, rows) for g, rows in hits.items()]
+                for cid, name in zip(proj_ids, proj)}
+    else:
+        cols = {name: [group(cid, name, g) for g in keep]
+                for cid, name in zip(proj_ids, proj)}
     if not proj:
         # empty projection: the result still carries the kept rows
         # (count(*) semantics — code-review r6)
@@ -1760,6 +1966,8 @@ def _decode_stripe_pruned_impl(
         parts = cols[name]
         out[name] = parts[0] if len(parts) == 1 else pa.concat_arrays(
             [p.cast(parts[0].type) for p in parts])
+    if residual:
+        return pa.table(out), len(keep), n_groups
     return _slice_exact(pa.table(out), keep), len(keep), n_groups
 
 
@@ -1864,6 +2072,14 @@ def orc_to_table(path: str, columns: list[str] | None = None,
     # zero-stripe file: preserve the DECLARED schema (pyarrow.orc does;
     # a schema-less pa.table({}) broke downstream concat/column access —
     # code-review r6, execution-confirmed)
+    return _empty_table(meta, columns, timestamp_unit)
+
+
+def _empty_table(meta: OrcMeta, columns: list[str] | None = None,
+                 timestamp_unit: str = "us") -> pa.Table:
+    """A zero-row table of the ``columns`` projection, typed as the
+    decoders type it — built from the type tree, so an empty result
+    decompresses nothing."""
     root = meta.types[0]
 
     def _t(cid):
@@ -3232,49 +3448,55 @@ def orc_scan(spark, path: str, schema=None, predicate=None,
 def orc_point_lookup(path: str, column: str, value,
                      filesystem=None) -> tuple[pa.Table, int, int]:
     """Local point lookup over a real ORC file with stripe- AND row-group-
-    level pruning -> (matching rows, groups_decoded, groups_total). The
-    group counts make the pruning observable (reference integration tests
-    assert exact row counts after bloom pruning, tests/integration/main.rs
-    :374-488)."""
+    level pruning -> (rows where ``column`` equals ``value``,
+    groups_decoded, groups_total). The group counts make the pruning
+    observable (reference integration tests assert exact row counts after
+    bloom pruning, tests/integration/main.rs:374-488); ``groups_decoded``
+    counts the groups that pruning kept.
+
+    The file tail and the kept stripes are read through one handle. Each
+    kept stripe is read in two phases on one code path
+    (decode_stripe_pruned with ``residual=True``): the kept groups'
+    ``column`` alone is decoded and compared with ``value`` (a probe whose
+    type cannot be compared with the column matches nothing), then the
+    other columns are decoded at the matching rows only. A stream is
+    decompressed only over the blocks that hold the kept groups
+    (_group_bytes)."""
     import datetime as _dt
     import decimal as _decimal
 
-    import pyarrow.compute as pc
-
     if filesystem is None:
         filesystem, path = fsio.resolve(path)
-    meta = read_metadata(path, filesystem=filesystem)
     lo = hi = (value if isinstance(
         value, (int, float, str, _dt.date, _decimal.Decimal)) else None)
-    keep = prune_stripes(meta, column, lo, hi)
+    # a list/set probe prunes as an IN-list but, like any probe that
+    # cannot be compared with the column, matches no row: its kept groups
+    # decode whole and the residual filter drops them
+    residual = not isinstance(value, (list, tuple, set, frozenset))
     parts, decoded, total = [], 0, 0
     with fsio.open_input(path, filesystem) as fh:
+        meta = read_metadata(path, filesystem=filesystem, handle=fh)
+        keep = prune_stripes(meta, column, lo, hi)
+        stride = int(meta.row_index_stride or 10_000)
         for i, st in enumerate(meta.stripes):
-            stride = int(meta.row_index_stride or 10_000)
-            n_groups = (st.number_of_rows + stride - 1) // stride
-            total += n_groups
+            total += (st.number_of_rows + stride - 1) // stride
             if i not in keep:
                 continue
             fh.seek(st.offset)
             body = fh.read(st.index_length + st.data_length)
             footer_raw = fh.read(st.footer_length)
             tbl, kept, _ = decode_stripe_pruned(
-                body, footer_raw, meta, st.number_of_rows, column, eq=value)
+                body, footer_raw, meta, st.number_of_rows, column, eq=value,
+                residual=residual)
             decoded += kept
+            if not residual:
+                tbl = tbl.filter(
+                    _eq_mask(tbl.column(column).combine_chunks(), value))
             if tbl.num_rows:
-                try:
-                    parts.append(tbl.filter(pc.equal(tbl.column(column), value)))
-                except (pa.ArrowNotImplementedError, pa.ArrowInvalid,
-                        pa.ArrowTypeError):
-                    pass  # probe type incomparable to the column: no match
+                parts.append(tbl)
     if parts:
         return pa.concat_tables(parts), decoded, total
-    root = meta.types[0]
     # hit- and miss-path schemas must be IDENTICAL (callers union results
     # across probes): the same recursive kind->arrow mapping the decoder
     # produces, including nested types
-    empty = {
-        n_: pa.array([], type=_arrow_type_of(meta.types, cid))
-        for cid, n_ in zip(root.subtypes, root.field_names)
-    }
-    return pa.table(empty), decoded, total
+    return _empty_table(meta), decoded, total

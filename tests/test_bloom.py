@@ -112,3 +112,22 @@ def test_bloom_i64_and_serialization():
     absent = np.array([3, 5, 11, 9999999], dtype=np.int64)
     fp = clone.test_hashes(wang_hash_i64(absent)).sum()
     assert fp <= 2
+
+
+def test_i64_probe_hash_per_reader():
+    """The engine's own blooms (chunk tables) are probed with the writer's
+    hash alone; the ORC reader, which also reads liborc files, tries
+    liborc's arithmetic-shift hash too."""
+    from orc_rust_spark.codecs.bloom import wang_hash_i64_orc
+    from orc_rust_spark.sources.orc_file import _bloom_might_contain_i64
+
+    probes = np.array([0, -1, -(2**40), 2**62 - 3], dtype=np.int64)
+    assert (wang_hash_i64(probes) != wang_hash_i64_orc(probes)).all()
+    liborc = BloomFilter.for_expected(probes.size)
+    liborc.add_hashes(wang_hash_i64_orc(probes))
+    for v in probes.tolist():
+        assert not liborc.might_contain_i64(v)
+        assert _bloom_might_contain_i64(liborc, v)
+    ours = BloomFilter.for_expected(probes.size)
+    ours.add_i64(probes)
+    assert all(_bloom_might_contain_i64(ours, v) for v in probes.tolist())

@@ -5,6 +5,7 @@ reference's integration suite over official example files
 
 import datetime
 import decimal
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -1806,3 +1807,243 @@ def test_pruned_predicate_property_equals_full_filter(lo, span):
     assert kept <= total
     assert got.num_rows == want.num_rows
     assert got.sort_by("id").equals(want.sort_by("id"))
+
+
+def _stripe_bytes(path, st):
+    with open(path, "rb") as fh:
+        fh.seek(st.offset)
+        body = fh.read(st.index_length + st.data_length)
+        return body, fh.read(st.footer_length)
+
+
+def _same_rows(got: pa.Table, want: pa.Table):
+    assert got.column_names == want.column_names
+    assert got.num_rows == want.num_rows
+    for col in want.column_names:
+        g = got.column(col).combine_chunks().cast(want.schema.field(col).type)
+        assert g.equals(want.column(col).combine_chunks()), col
+
+
+def _liborc_lookup_table(n=12_000, seed=5):
+    """Keys shared by four neighbouring rows (several matches per group),
+    odd keys absent (misses inside the key range), one key repeated in
+    far-apart groups, and nulls in every non-key column family."""
+    rng = np.random.default_rng(seed)
+    k = (np.arange(n) // 4) * 2
+    k[[10, 5_555, n - 7]] = 7  # one key in the first, a middle and the last group
+    null = rng.random(n) < 0.1
+    ints = rng.integers(-10**12, 10**12, n)
+    cats = np.array([f"cat_{i}" for i in range(20)])
+    return pa.table({
+        "k": pa.array(k, type=pa.int64()),
+        "i": pa.array(ints, mask=null),
+        "cat": pa.array(cats[rng.integers(0, 20, n)], mask=rng.random(n) < 0.05),
+        "txt": pa.array([f"row-{i}-{rng.integers(0, 10**9)}" for i in range(n)],
+                        mask=null),
+        "x": pa.array(rng.random(n), mask=rng.random(n) < 0.2),
+        "ts": pa.array(np.int64(1_600_000_000_000_000) + rng.integers(0, 10**13, n),
+                       type=pa.timestamp("us"), mask=null),
+        "dec": pa.array([decimal.Decimal(int(v)) / 100 for v in rng.integers(-10**9, 10**9, n)],
+                        type=pa.decimal128(12, 2)),
+        "st": pa.StructArray.from_arrays(
+            [pa.array(rng.integers(0, 100, n), type=pa.int32()),
+             pa.array([f"s{i % 7}" for i in range(n)])],
+            names=["a", "b"], mask=pa.array(rng.random(n) < 0.1)),
+        "li": pa.array([None if i % 11 == 0 else list(range(i % 4)) for i in range(n)],
+                       type=pa.list_(pa.int64())),
+    })
+
+
+@pytest.mark.parametrize("comp", ["zlib", "zstd", "uncompressed"])
+def test_liborc_small_blocks_lookup_and_row_ranges(tmp_path, comp):
+    """liborc files whose 4 KiB compression blocks are not aligned with
+    the 1000-row groups: a group's bounded read must reach through the
+    block that holds the next group's start, and to the stream end when
+    the next group starts inside a run; the late-materialized lookup must equal
+    a pyarrow filter of the source for hits, misses, several matches per
+    group and keys in the first and last groups; a row-range read must
+    equal the exact slice."""
+    import pyarrow.compute as pc
+
+    from orc_rust_spark.sources import orc_file as of
+
+    tbl = _liborc_lookup_table()
+    path = str(tmp_path / f"small_blocks_{comp}.orc")
+    paorc.write_table(tbl, path, compression=comp, compression_block_size=4096,
+                      row_index_stride=1000, dictionary_key_size_threshold=0.5,
+                      bloom_filter_columns=[1])
+    meta = of.read_metadata(path)
+    assert meta.row_index_stride == 1000
+    # both string encodings are covered: "cat" dictionary, "txt" direct
+    _, encodings, _ = of._read_stripe_footer(
+        _stripe_bytes(path, meta.stripes[0])[1], meta.compression)
+    root = meta.types[0]
+    enc = {n: encodings[c][0] for c, n in zip(root.subtypes, root.field_names)}
+    assert enc["cat"] in (of.E_DICTIONARY, of.E_DICTIONARY_V2)
+    assert enc["txt"] in (of.E_DIRECT, of.E_DIRECT_V2)
+
+    rng = np.random.default_rng(17)
+    keys = tbl.column("k").to_numpy()
+    probes = [int(keys[0]), int(keys[-1]), 7, 2_000, -1, 3, 10**9]
+    probes += [int(keys[r]) for r in rng.integers(0, tbl.num_rows, 12)]
+    probes += [int(v) for v in rng.integers(0, int(keys.max()) // 2, 6) * 2 + 1]
+    for v in probes:
+        got, decoded, total = of.orc_point_lookup(path, "k", v)
+        want = tbl.filter(pc.equal(tbl.column("k"), v))
+        _same_rows(got, want)
+        if want.num_rows and v != 7:
+            assert decoded < total, (v, decoded, total)
+
+    # a stripe of one row group: pruning keeps every group, and the
+    # lookup still takes the late-materialized seek path
+    one = str(tmp_path / f"one_group_{comp}.orc")
+    paorc.write_table(tbl, one, compression=comp, compression_block_size=4096,
+                      row_index_stride=20_000, dictionary_key_size_threshold=0.5)
+    for v in probes[:8]:
+        got, decoded, total = of.orc_point_lookup(one, "k", v)
+        want = tbl.filter(pc.equal(tbl.column("k"), v))
+        _same_rows(got, want)
+        assert total == 1
+        if want.num_rows:
+            assert decoded == 1
+
+    st = meta.stripes[0]
+    body, fr = _stripe_bytes(path, st)
+    for ranges in ([(0, 1)], [(999, 1001)], [(2_500, 2_600), (7_000, 7_050)],
+                   [(11_990, 12_000)]):
+        got, _, _ = of.decode_stripe_pruned(body, fr, meta, st.number_of_rows,
+                                            row_ranges=ranges)
+        want = pa.concat_tables([tbl.slice(a, b - a) for a, b in ranges])
+        _same_rows(got, want)
+
+
+def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeypatch):
+    """Pins the saving of the two-phase lookup on a zstd file from our
+    writer: the compressed bytes decompressed stay within the kept groups'
+    blocks plus the index streams, the dictionary and the footers, and the
+    non-key columns RLE-decode only the matching row."""
+    from orc_rust_spark.codecs import block as blockc
+    from orc_rust_spark.sources import orc_file as of
+
+    n, stride = 60_000, 10_000
+    rng = np.random.default_rng(3)
+    tbl = pa.table({
+        "key": pa.array(rng.permutation(n)),
+        "a": pa.array(rng.integers(0, 10**6, n), type=pa.int32()),
+        "b": pa.array(rng.integers(-10**15, 10**15, n)),
+        "x": pa.array(rng.random(n)),
+        "ts": pa.array(np.int64(1_700_000_000_000_000) + rng.integers(0, 10**12, n),
+                       type=pa.timestamp("us")),
+        "txt": pa.array([f"text-{i}-{rng.integers(0, 10**9)}" for i in range(n)]),
+        "cat": pa.array([f"c{i % 9}" for i in range(n)]),
+    })
+    path = str(tmp_path / "pin.orc")
+    of.write_orc(tbl, path, compression="zstd", bloom_columns=["key"])
+    meta = of.read_metadata(path)
+    assert len(meta.stripes) == 1
+    st = meta.stripes[0]
+    body, fr = _stripe_bytes(path, st)
+    stream_list, encodings, _ = of._read_stripe_footer(fr, meta.compression)
+    root = meta.types[0]
+    enc = {n_: encodings[c][0] for c, n_ in zip(root.subtypes, root.field_names)}
+    assert enc["cat"] == of.E_DICTIONARY_V2 and enc["txt"] == of.E_DIRECT_V2
+
+    row = 12_345  # group 1 of 6: an unbounded read would decompress 5 groups
+    probe = int(tbl.column("key")[row].as_py())
+    want_groups = {row // stride}
+
+    # the compressed bytes a read of ``groups`` may touch: their blocks of
+    # every data stream, whole index / dictionary streams, and the footers
+    streams, pos = {}, 0
+    for col, kind, length in stream_list:
+        streams[(col, kind)] = (pos, length)
+        pos += length
+    allowed = st.footer_length + os.path.getsize(path) - (
+        st.offset + st.index_length + st.data_length + st.footer_length)
+    for (col, kind), (_, length) in streams.items():
+        if col == 0:
+            continue
+        if kind in (of.S_ROW_INDEX, of.S_BLOOM_FILTER, of.S_BLOOM_FILTER_UTF8,
+                    of.S_DICTIONARY_DATA) or (
+                kind == of.S_LENGTH and encodings[col][0] == of.E_DICTIONARY_V2):
+            allowed += length
+            continue
+        t = meta.types[col]
+        layout = of._position_layout(t, encodings[col][0], (col, of.S_PRESENT) in streams)
+        entries = of._parse_row_index(of.blockc.decompress_stream(
+            body[streams[(col, of.S_ROW_INDEX)][0]:][:streams[(col, of.S_ROW_INDEX)][1]],
+            meta.compression))
+        starts = [of._stream_positions(layout, e[0], meta.compression)[kind][0]
+                  for e in entries] + [length]
+        allowed += sum(starts[g + 1] - starts[g] for g in want_groups)
+    assert allowed < st.data_length / 3  # the bound has teeth
+
+    comp_in, rle_ns = [], []
+    real_decompress, real_rle = blockc.decompress_stream, of.decode_rlev2
+
+    def counting_decompress(buf, codec="zlib"):
+        comp_in.append(len(buf))
+        return real_decompress(buf, codec)
+
+    def counting_rle(buf, n, *args, **kwargs):
+        rle_ns.append(n)
+        return real_rle(buf, n, *args, **kwargs)
+
+    monkeypatch.setattr(blockc, "decompress_stream", counting_decompress)
+    monkeypatch.setattr(of, "decode_rlev2", counting_rle)
+    got, decoded, total = of.orc_point_lookup(path, "key", probe)
+    monkeypatch.undo()
+
+    _same_rows(got, tbl.slice(row, 1))
+    assert decoded == len(want_groups) and total == n // stride
+    assert sum(comp_in) <= allowed, (sum(comp_in), allowed)
+    # RLEv2 streams outside the key column: a, b, ts (seconds and nanos)
+    # and cat (indices) decode one value each, txt its lengths through
+    # the matching row, cat its dictionary lengths; the key column
+    # decodes its kept group
+    n_dict = len(set(tbl.column("cat").to_pylist()))
+    want_ns = [1] * 5 + [row % stride + 1, n_dict, stride]
+    assert sorted(rle_ns) == sorted(want_ns), rle_ns
+
+
+def test_liborc_integer_bloom_keeps_zero_negative_and_wide_keys(tmp_path):
+    """liborc's integer bloom hash shifts arithmetically; a probe hashed
+    only with this engine's writer hash ruled out zero, negative and wide
+    keys that are present, and the lookup lost their rows."""
+    from orc_rust_spark.sources.orc_file import orc_point_lookup
+
+    rng = np.random.default_rng(23)
+    vals = np.concatenate([np.arange(-20, 20),
+                           rng.integers(-2**62, 2**62, 40)])
+    tbl = pa.table({"k": np.repeat(vals, 100), "v": np.arange(vals.size * 100)})
+    path = str(tmp_path / "bloom_keys.orc")
+    paorc.write_table(tbl, path, row_index_stride=100, bloom_filter_columns=[1])
+    for v in vals.tolist():
+        out, decoded, total = orc_point_lookup(path, "k", v)
+        assert out.num_rows == 100, v
+        assert decoded < total, (v, decoded, total)
+
+
+@pytest.mark.parametrize("writer", ["liborc", "ours"])
+def test_point_lookup_collection_probe_matches_nothing(tmp_path, writer):
+    """A list/tuple/set probe prunes as an IN-list of its values but, like
+    any probe that cannot be compared with the column, matches no row:
+    the result is the typed empty table and the group counts are those of
+    the pruning."""
+    from orc_rust_spark.sources.orc_file import orc_point_lookup, write_orc
+
+    tbl = pa.table({"k": np.arange(5_000) // 3,
+                    "s": [f"s{i}" for i in range(5_000)]})
+    path = str(tmp_path / f"probe_{writer}.orc")
+    if writer == "liborc":
+        paorc.write_table(tbl, path, row_index_stride=1000,
+                          bloom_filter_columns=[0])
+    else:
+        write_orc(tbl, path, bloom_columns=["k"])
+    hit, hit_decoded, hit_total = orc_point_lookup(path, "k", 1_200)
+    assert hit.num_rows == 3
+    for probe in ([1_200], (1_200,), {1_200}, frozenset([1_200])):
+        got, decoded, total = orc_point_lookup(path, "k", probe)
+        assert got.num_rows == 0, probe
+        assert got.schema == hit.schema
+        assert (decoded, total) == (hit_decoded, hit_total), probe
