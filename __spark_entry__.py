@@ -87,37 +87,51 @@ def _read_sliced(spark: SparkSession, path: str, schema, par: int) -> DataFrame:
     each stream-decode from row 0 and emit only rows [start_i, end_i) —
     parquet cannot seek inside a row group, so early termination at
     ``end_i`` is the only pruning available, and the decoded rows reach
-    the Python side of the pipeline with no Exchange at all."""
+    the Python side of the pipeline with no Exchange at all. Every batch
+    is cast to the Arrow form of ``schema`` (the file's own Arrow types
+    can differ from Spark's, e.g. in timestamp unit)."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     n_rows = pq.ParquetFile(path).metadata.num_rows
-    bounds = [i * n_rows // par for i in range(par + 1)]
-    rows = [(path, bounds[i], bounds[i + 1]) for i in range(par)]
-    names = [f.name for f in schema.fields]
+    rows = [(path, s, e) for s, e in _slice_bounds(n_rows, par)]
     slices = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, par), "p string, s long, e long")
+    return slices.mapInArrow(_slice_reader(to_arrow_schema(schema)), schema=schema)
+
+
+def _slice_bounds(n_rows: int, par: int) -> list[tuple[int, int]]:
+    """``par`` contiguous row ranges [s, e) covering [0, n_rows), as even
+    as integers allow; with fewer rows than slices some are empty."""
+    bounds = [i * n_rows // par for i in range(par + 1)]
+    return list(zip(bounds[:-1], bounds[1:]))
+
+
+def _slice_reader(arrow_schema, batch_size: int = 65536):
+    """The ``mapInArrow`` function of :func:`_read_sliced`: for each
+    (path, start, end) row, the file's rows [start, end) as batches of
+    ``arrow_schema``, decoded from row 0 and stopped at ``end``. It refers
+    to nothing in this module, so Spark ships it to the workers whole."""
+    names = arrow_schema.names
 
     def read_slice(batches):
-        import pyarrow.parquet as pq2
+        import pyarrow.parquet as pq
 
         for b in batches:
-            for i in range(b.num_rows):
-                p = b.column(0)[i].as_py()
-                s = b.column(1)[i].as_py()
-                e = b.column(2)[i].as_py()
-                if e <= s:
+            for path, start, end in zip(*(b.column(i).to_pylist() for i in range(3))):
+                if end <= start:
                     continue
                 pos = 0
-                for rb in pq2.ParquetFile(p).iter_batches(
-                        batch_size=65536, columns=names):
-                    lo, hi = max(s - pos, 0), min(e - pos, rb.num_rows)
+                for rb in pq.ParquetFile(path).iter_batches(
+                        batch_size=batch_size, columns=names):
+                    lo, hi = max(start - pos, 0), min(end - pos, rb.num_rows)
                     if lo < hi:
-                        yield rb.slice(lo, hi - lo)
+                        yield rb.slice(lo, hi - lo).select(names).cast(arrow_schema)
                     pos += rb.num_rows
-                    if pos >= e:
+                    if pos >= end:
                         break
 
-    return slices.mapInArrow(read_slice, schema=schema)
+    return read_slice
 
 
 def _parquet_splits(path: str, cap: int) -> int:

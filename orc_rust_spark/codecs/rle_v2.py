@@ -1,6 +1,6 @@
 """ORC RLEv2 integer run-length encoding (public Apache ORC v1 spec).
 
-Four sub-encodings, selected per run of <= 512 values:
+Four sub-encodings, selected per block of <= 512 values:
 
 - SHORT_REPEAT  header ``00wwwccc`` + big-endian value        (3-10 repeats)
 - DIRECT        ``01`` + 5-bit width code + 9-bit (len-1), bit-packed values
@@ -15,6 +15,16 @@ The encoder reproduces the ORC writer heuristics — the run state machine
 512 through the sub-encoding selector) and the percentile-bit-width based
 DIRECT vs PATCHED_BASE choice.
 
+It works on blocks, not runs. The fixed runs come from one array pass
+over the equal-value runs; the spans between them are cut into 512-value
+blocks plus a short tail block each. Blocks of one length, from anywhere
+in the stream, go through the selector together as a ``(k, m)`` matrix
+of up to BATCH_VALUES values, and the encoded runs are joined in stream
+order at the end. DIRECT and DELTA blocks are bit-packed per batch and
+width, PATCHED_BASE blocks one at a time. Python loops run once per fixed
+run, span, batch and width group, and once per emitted block; no loop
+runs per value.
+
 Reference parity (behavioral, not code): the state machine and selector in
 src/encoding/integer/rle_v2/mod.rs:255-531 and the per-sub-encoding readers
 and writers in rle_v2/{short_repeat,direct,delta,patched_base}.rs. Golden
@@ -26,7 +36,6 @@ varint bases; PATCHED_BASE never zigzags (sign-MSB base); DELTA zigzags
 only the base varint.
 
 Values are int64 throughout (unsigned semantics live in the uint64 view).
-Python loops run per *run* (<=512 values), all inner work is NumPy.
 """
 
 from __future__ import annotations
@@ -34,16 +43,15 @@ from __future__ import annotations
 import numpy as np
 
 from .util import (
-    percentile_bits_pair,
     bitpack,
-    bits_required,
+    bitpack_rows,
     bits_required_scalar,
     bitunpack,
-    closest_aligned_bits,
+    closest_aligned_bits_array,
     closest_fixed_bits,
     decode_bit_width,
     encode_bit_width,
-    percentile_bits,
+    percentile_bits_rows,
     read_signed_varint,
     read_varint,
     write_signed_varint,
@@ -58,9 +66,14 @@ MIN_REPEAT = 3
 MAX_SHORT_REPEAT = 10
 # bases at or above 2**56 don't fit the patched-base BW field safely
 BASE_VALUE_LIMIT = 1 << 56
+# values per selector batch (4 full blocks): bounds each batch temporary
+# to 16 KB whatever the stream length. Spark's Python workers never give
+# freed memory back (session.MALLOC_ENV), and 32-block batches, though
+# ~1.5x faster here, left their heap fragmented enough that a later
+# decode extended it (webtext_encode peak worker RSS +4% median)
+BATCH_VALUES = 4 * MAX_RUN_LENGTH
 
 _U64 = np.uint64
-_I64 = np.int64
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +84,6 @@ _I64 = np.int64
 def encode_rlev2(values: np.ndarray, signed: bool = True) -> bytes:
     """Encode an int64 (or uint64-viewed) array as an ORC RLEv2 stream."""
     v = np.ascontiguousarray(values, dtype=np.int64)
-    out = bytearray()
     if v.size == 0:
         return b""
 
@@ -81,155 +93,179 @@ def encode_rlev2(values: np.ndarray, signed: bool = True) -> bytes:
     lengths = np.diff(np.concatenate((starts, [v.size])))
     # Adaptive fixed-run threshold: churn-heavy data (mean run < MIN_REPEAT,
     # e.g. dictionary indexes of a low-cardinality column) would fragment
-    # into one Python-level segment per 3-value repeat — ~100k segments for
-    # 200k values, each paying header-emission overhead, while a 3-10
-    # repeat saves almost nothing over packed-literal DIRECT blocks at
-    # small bit widths. Folding short repeats into the 512-value variable
-    # blocks is equally spec-valid RLEv2 (the reader accepts any run mix)
-    # and is both ~50x faster and smaller on such data. Runs >= 12 still
-    # become fixed-delta/short-repeat runs.
+    # into one segment per 3-value repeat, each paying header-emission
+    # overhead, while a 3-10 repeat saves almost nothing over packed-literal
+    # DIRECT blocks at small bit widths. Folding short repeats into the
+    # 512-value variable blocks is equally spec-valid RLEv2 (the reader
+    # accepts any run mix) and both faster and smaller on such data. Runs
+    # >= 12 still become fixed-delta/short-repeat runs.
     mean_run = v.size / starts.size
     fixed_threshold = MIN_REPEAT if mean_run >= MIN_REPEAT else 12
-    is_fixed = lengths >= fixed_threshold
+    fixed = np.flatnonzero(lengths >= fixed_threshold)
 
-    # zigzag + per-element bit widths ONCE for the whole array — the
-    # per-run selector then slices instead of recomputing (the small
-    # per-run numpy calls dominated encode time on churny data). Computed
-    # LAZILY on the first variable span: an all-fixed array (constant or
-    # long-run columns) never pays the two full-array passes
-    # (code-review r6)
-    zz_all = w_all = None
+    # Every emitted run covers a value range; collect (range start, bytes)
+    # and join in start order. Fixed runs are written here; the variable
+    # spans between them (and fixed-run tails too short to repeat) become
+    # blocks, grouped by length for the selector.
+    keys: list[int] = []
+    pieces: list[bytes] = []
+    blocks: dict[int, list[int]] = {}  # block length -> block starts
+    pos = 0
+    for start, length, value in zip(starts[fixed].tolist(), lengths[fixed].tolist(),
+                                     v[starts[fixed]].tolist()):
+        if pos < start:
+            _add_span(blocks, pos, start)
+        _fixed_run(keys, pieces, blocks, start, length, value, signed)
+        pos = start + length
+    if pos < v.size:
+        _add_span(blocks, pos, v.size)
 
-    # group consecutive non-fixed runs into variable spans
-    i = 0
-    n_runs = starts.size
-    while i < n_runs:
-        if is_fixed[i]:
-            _write_fixed_run(out, int(v[starts[i]]), int(lengths[i]), signed)
-            i += 1
-        else:
-            j = i
-            while j < n_runs and not is_fixed[j]:
-                j += 1
-            if zz_all is None:
-                zz_all = zigzag_encode(v) if signed else v.view(np.uint64)
-                w_all = bits_required(zz_all)
-            span_start = int(starts[i])
-            span_end = int(starts[j - 1] + lengths[j - 1])
-            for cs in range(span_start, span_end, MAX_RUN_LENGTH):
-                ce = min(cs + MAX_RUN_LENGTH, span_end)
-                _write_variable_run(out, v[cs:ce], signed,
-                                    zz_all[cs:ce], w_all[cs:ce])
-            i = j
-    return bytes(out)
+    for m, block_starts in blocks.items():
+        step = max(1, BATCH_VALUES // m)
+        for a in range(0, len(block_starts), step):
+            batch = block_starts[a:a + step]
+            first = batch[0]
+            # starts rise at least m apart, so this span means adjacent blocks
+            if batch[-1] - first == m * (len(batch) - 1):
+                lit = v[first:first + m * len(batch)].reshape(-1, m)
+            else:
+                lit = v[np.array(batch)[:, None] + np.arange(m)]
+            keys += batch
+            pieces += _encode_blocks(lit, signed)
+    return b"".join([pieces[i] for i in np.argsort(keys).tolist()])
 
 
-def _write_fixed_run(out: bytearray, value: int, length: int, signed: bool) -> None:
+def _add_span(blocks: dict, lo: int, hi: int) -> None:
+    """Cut the variable span [lo, hi) into 512-value blocks and a short
+    tail block."""
+    full = lo + (hi - lo) // MAX_RUN_LENGTH * MAX_RUN_LENGTH
+    if full > lo:
+        blocks.setdefault(MAX_RUN_LENGTH, []).extend(range(lo, full, MAX_RUN_LENGTH))
+    if hi > full:
+        blocks.setdefault(hi - full, []).append(full)
+
+
+def _fixed_run(keys: list, pieces: list, blocks: dict, start: int, length: int,
+               value: int, signed: bool) -> None:
+    """A run of one value, in pieces of <= 512: SHORT_REPEAT for 3-10
+    values, fixed DELTA (delta 0) above, and a block for a 1-2 value
+    tail."""
+    u = zigzag_encode_scalar(value) if signed else value & ((1 << 64) - 1)
     while length > 0:
         take = min(length, MAX_RUN_LENGTH)
         if take < MIN_REPEAT:
-            _write_variable_run(out, np.full(take, value, dtype=np.int64), signed)
-        elif take <= MAX_SHORT_REPEAT:
-            _write_short_repeat(out, value, take, signed)
+            blocks.setdefault(take, []).append(start)
         else:
-            _write_fixed_delta(out, value, take, signed)
+            keys.append(start)
+            if take <= MAX_SHORT_REPEAT:
+                pieces.append(_short_repeat(u, take))
+            else:
+                pieces.append(_delta_head(take, 0, u, 0))
+        start += take
         length -= take
 
 
-def _write_short_repeat(out: bytearray, value: int, count: int, signed: bool) -> None:
-    u = zigzag_encode_scalar(value) if signed else value & ((1 << 64) - 1)
+def _short_repeat(u: int, count: int) -> bytes:
     width_bytes = max(1, (bits_required_scalar(u) + 7) // 8)
-    out.append(((width_bytes - 1) << 3) | (count - MIN_REPEAT))
-    out.extend(u.to_bytes(width_bytes, "big"))
+    return (bytes((((width_bytes - 1) << 3) | (count - MIN_REPEAT),))
+            + u.to_bytes(width_bytes, "big"))
 
 
-def _write_fixed_delta(out: bytearray, value: int, length: int, signed: bool) -> None:
-    # DELTA header with width code 0 (fixed delta), delta = 0
-    out.append(0xC0 | ((length - 1) >> 8))
-    out.append((length - 1) & 0xFF)
-    base = zigzag_encode_scalar(value) if signed else value & ((1 << 64) - 1)
-    out.extend(write_varint(base))
-    out.extend(write_signed_varint(0))
+def _encode_blocks(lit: np.ndarray, signed: bool) -> list[bytes]:
+    """The sub-encoding selector over a ``(k, m)`` matrix of k blocks of m
+    literals each, computed row-wise for the whole batch -> the k encoded
+    blocks:
+
+    - m <= 3: DIRECT;
+    - all deltas equal: fixed DELTA;
+    - first delta != 0 and the row monotone: DELTA at the aligned width
+      of ``max |deltas[1:]|`` (at least 2);
+    - 100th - 90th percentile width <= 1: DIRECT;
+    - otherwise a PATCHED_BASE candidate, written per block, which falls
+      back to DIRECT.
+
+    DIRECT and DELTA blocks are bit-packed in batches that share a width.
+    """
+    k, m = lit.shape
+    zz = zigzag_encode(lit) if signed else lit.view(np.uint64)
+    zz100 = percentile_bits_rows(zz, 1.0)
+    direct = np.ones(k, dtype=bool)
+    pieces: list[bytes | None] = [None] * k
+    if m > MIN_REPEAT:
+        deltas = np.diff(lit, axis=1)
+        dmin = deltas.min(axis=1)
+        dmax = deltas.max(axis=1)
+        fixed = dmin == dmax
+        # the first delta tells the reader the direction, so must be != 0
+        mono = (deltas[:, 0] != 0) & ~fixed & ((dmin >= 0) | (dmax <= 0))
+        direct = ~(fixed | mono)
+        for r in np.flatnonzero(fixed).tolist():
+            pieces[r] = _delta_head(m, 0, int(zz[r, 0]), int(deltas[r, 0]))
+        if mono.any():
+            _delta_rows(pieces, np.flatnonzero(mono), zz, deltas, m)
+        if direct.any():
+            rows = np.flatnonzero(direct)
+            patch = zz100[rows] - percentile_bits_rows(zz[rows], 0.9) > 1
+            if patch.any():
+                _patched_rows(pieces, rows[patch], lit)
+                direct = np.array([p is None for p in pieces])
+    if direct.any():
+        _direct_rows(pieces, np.flatnonzero(direct), zz, zz100, m)
+    return pieces
 
 
-def _write_variable_run(out: bytearray, literals: np.ndarray, signed: bool,
-                        zz: np.ndarray | None = None,
-                        zz_widths: np.ndarray | None = None) -> None:
-    """The sub-encoding selector over one chunk of <= 512 literals.
-    ``zz``/``zz_widths`` carry the precomputed zigzag view and per-element
-    bit widths when the caller already computed them array-wide."""
-    n = literals.size
-    if zz is None:
-        zz = zigzag_encode(literals) if signed else literals.view(np.uint64)
-
-    if n <= MIN_REPEAT:
-        _write_direct(out, zz, percentile_bits(zz, 1.0, zz_widths))
-        return
-
-    deltas = np.diff(literals)
-    if deltas.size and (deltas == deltas[0]).all():
-        _write_delta(out, literals, None, signed, fixed=True)
-        return
-    non_increasing = bool((deltas <= 0).all())
-    non_decreasing = bool((deltas >= 0).all())
-    # first delta signals increasing/decreasing to the reader, so must be != 0
-    if deltas[0] != 0 and (non_increasing or non_decreasing):
-        # bit width over |deltas| excluding the first (stored as varint)
-        abs_deltas = np.abs(deltas[1:]).view(np.uint64)
-        max_bits = int(bits_required(abs_deltas).max()) if abs_deltas.size else 1
-        _write_delta(out, literals, max_bits, signed, fixed=False)
-        return
-
-    zz100, zz90 = percentile_bits_pair(zz, 1.0, 0.9, zz_widths)
-    if zz100 - zz90 <= 1:
-        _write_direct(out, zz, zz100)
-        return
-
-    lo = int(literals.min())
-    hi = int(literals.max())
-    # overflow / base-size guards -> DIRECT
-    if abs(lo) >= BASE_VALUE_LIMIT or (hi - lo) > (1 << 63) - 1:
-        _write_direct(out, zz, zz100)
-        return
-    reduced = (literals.astype(object) - lo).astype(np.uint64) if hi - lo >= 1 << 62 else (
-        literals - lo
-    ).view(np.uint64)
-    br100, br95 = percentile_bits_pair(reduced, 1.0, 0.95)
-    if br100 != br95:
-        if not _write_patched_base(out, literals, reduced, lo, br95, br100):
-            _write_direct(out, zz, zz100)
-    else:
-        _write_direct(out, zz, zz100)
+def _delta_head(n: int, width: int, base_u: int, first_delta: int) -> bytes:
+    """DELTA header, varint base and signed-varint first delta."""
+    code = 0 if width == 0 else encode_bit_width(width) << 1
+    return (bytes((0xC0 | code | ((n - 1) >> 8), (n - 1) & 0xFF))
+            + write_varint(base_u) + write_signed_varint(first_delta))
 
 
-def _write_direct(out: bytearray, zz: np.ndarray, width100p: int) -> None:
-    n = zz.size
-    width = closest_aligned_bits(width100p)
-    out.append(0x40 | (encode_bit_width(width) << 1) | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    out.extend(bitpack(zz, width))
+def _delta_rows(pieces: list, rows: np.ndarray, zz: np.ndarray,
+                deltas: np.ndarray, n: int) -> None:
+    """Monotone DELTA blocks: |deltas[1:]| packed per width group."""
+    mags = np.abs(deltas[rows, 1:]).view(np.uint64)
+    widths = closest_aligned_bits_array(np.maximum(percentile_bits_rows(mags, 1.0), 2))
+    for width in sorted(set(widths.tolist())):
+        sel = np.flatnonzero(widths == width)
+        packed = bitpack_rows(mags[sel], width)
+        for r, row in zip(rows[sel].tolist(), packed):
+            pieces[r] = _delta_head(n, width, int(zz[r, 0]), int(deltas[r, 0])) + row.tobytes()
 
 
-def _write_delta(
-    out: bytearray, literals: np.ndarray, max_delta_bits: int | None, signed: bool, fixed: bool
-) -> None:
-    n = literals.size
-    base = int(literals[0])
-    base_u = zigzag_encode_scalar(base) if signed else base & ((1 << 64) - 1)
-    if fixed:
-        out.append(0xC0 | ((n - 1) >> 8))
-        out.append((n - 1) & 0xFF)
-        out.extend(write_varint(base_u))
-        out.extend(write_signed_varint(int(literals[1]) - base))
-        return
-    width = closest_aligned_bits(max_delta_bits if max_delta_bits and max_delta_bits > 1 else 2)
-    out.append(0xC0 | (encode_bit_width(width) << 1) | ((n - 1) >> 8))
-    out.append((n - 1) & 0xFF)
-    out.extend(write_varint(base_u))
-    deltas = np.diff(literals)
-    out.extend(write_signed_varint(int(deltas[0])))
-    if n > 2:
-        out.extend(bitpack(np.abs(deltas[1:]).view(np.uint64), width))
+def _direct_rows(pieces: list, rows: np.ndarray, zz: np.ndarray,
+                 zz100: np.ndarray, n: int) -> None:
+    """DIRECT blocks, packed and given their headers per width group."""
+    widths = closest_aligned_bits_array(zz100[rows])
+    for width in sorted(set(widths.tolist())):
+        sel = rows[widths == width]
+        packed = bitpack_rows(zz[sel], width)
+        block = np.empty((sel.size, 2 + packed.shape[1]), dtype=np.uint8)
+        block[:, 0] = 0x40 | (encode_bit_width(width) << 1) | ((n - 1) >> 8)
+        block[:, 1] = (n - 1) & 0xFF
+        block[:, 2:] = packed
+        for r, row in zip(sel.tolist(), block):
+            pieces[r] = row.tobytes()
+
+
+def _patched_rows(pieces: list, rows: np.ndarray, lit: np.ndarray) -> None:
+    """PATCHED_BASE candidates; a block that cannot be patched (base or
+    range too wide, 95th == 100th percentile of the reduced widths, or
+    too many patches) keeps its piece None and goes DIRECT."""
+    cand = lit[rows]
+    lo = cand.min(axis=1)
+    # overflow / base-size guards -> DIRECT: |lo| >= 2**56, or a range
+    # hi - lo past int64 (its int64 difference wraps negative)
+    ok = (lo > -BASE_VALUE_LIMIT) & (lo < BASE_VALUE_LIMIT)
+    ok &= cand.max(axis=1) - lo >= 0
+    reduced = (cand - lo[:, None]).view(np.uint64)
+    br100 = percentile_bits_rows(reduced, 1.0)
+    br95 = percentile_bits_rows(reduced, 0.95)
+    for i in np.flatnonzero(ok & (br100 != br95)).tolist():
+        piece = bytearray()
+        if _write_patched_base(piece, cand[i], reduced[i], int(lo[i]),
+                               int(br95[i]), int(br100[i])):
+            pieces[int(rows[i])] = bytes(piece)
 
 
 def _write_patched_base(

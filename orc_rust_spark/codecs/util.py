@@ -7,10 +7,12 @@ encodings (public Apache ORC specification):
 - unsigned LEB128 varint r/w      (util.rs:522-581)
 - big-endian bit-pack/unpack      (util.rs:44-362)
 - 5-bit width codes + closest-fixed-bits + aligned widths (util.rs:370-472)
-- percentile bit widths over the 32-bucket histogram (util.rs:584-610)
+- percentile bit widths (util.rs:584-610)
 
-All array kernels take/return NumPy arrays; Python loops only ever run over
-*runs* (<=512 values each), never over values.
+All array kernels take/return NumPy arrays. The ``*_rows`` kernels work on
+a ``(k, m)`` matrix with one RLEv2 block per row, so the RLEv2 writer
+selects and packs a whole batch of blocks per NumPy call; no Python loop
+here runs over values.
 """
 
 from __future__ import annotations
@@ -47,8 +49,9 @@ def frombuffer_exact(buf, dtype, count: int, offset: int = 0) -> np.ndarray:
 def zigzag_encode(values: np.ndarray) -> np.ndarray:
     """(v << 1) ^ (v >> 63) with int64 wraparound semantics."""
     v = values.astype(np.int64, copy=False)
-    with np.errstate(over="ignore"):
-        return ((v << np.int64(1)) ^ (v >> np.int64(63))).view(np.uint64)
+    z = v << np.int64(1)
+    z ^= v >> np.int64(63)
+    return z.view(np.uint64)
 
 
 def zigzag_decode(values: np.ndarray) -> np.ndarray:
@@ -113,22 +116,22 @@ def read_signed_varint(buf, pos: int) -> tuple[int, int]:
 
 # ORC FixedBitSizes: 1..24, 26, 28, 30, 32, 40, 48, 56, 64 (32 entries).
 _FIXED_BITS = list(range(1, 25)) + [26, 28, 30, 32, 40, 48, 56, 64]
-_FIXED_BITS_ARR = np.array(_FIXED_BITS, dtype=np.int64)
 # width -> 5-bit code (code i encodes width _FIXED_BITS[i])
 _WIDTH_TO_CODE = {w: i for i, w in enumerate(_FIXED_BITS)}
 # aligned widths used by DIRECT packing
 _ALIGNED = np.array([1, 2, 4, 8, 16, 24, 32, 40, 48, 56, 64], dtype=np.int64)
 
 
-# 0..64 -> rounded-up size, as plain-int lookup tables (these sit inside
-# the per-run RLEv2 selector; a numpy searchsorted per scalar was ~25% of
-# churny-int encode time in aggregate)
+# 0..64 -> rounded-up size, as plain-int lookup tables for the scalar
+# helpers and as arrays for the row-wise kernels
 _FIXED_LUT = [1] + [
     next(w for w in _FIXED_BITS if w >= n) for n in range(1, 65)
 ]
 _ALIGNED_LUT = [1] + [
     next(int(w) for w in _ALIGNED.tolist() if w >= n) for n in range(1, 65)
 ]
+_FIXED_LUT_ARR = np.array(_FIXED_LUT, dtype=np.int64)
+_ALIGNED_LUT_ARR = np.array(_ALIGNED_LUT, dtype=np.int64)
 
 
 def closest_fixed_bits(n: int) -> int:
@@ -143,6 +146,11 @@ def closest_aligned_bits(n: int) -> int:
     if n <= 1:
         return 1
     return _ALIGNED_LUT[n]
+
+
+def closest_aligned_bits_array(n: np.ndarray) -> np.ndarray:
+    """:func:`closest_aligned_bits` of each element of an int array."""
+    return _ALIGNED_LUT_ARR[n]
 
 
 def encode_bit_width(width: int) -> int:
@@ -164,9 +172,7 @@ def bits_required(values: np.ndarray) -> np.ndarray:
     One binary search per element against the 64 powers of two
     (``bit_length(u)`` = count of powers <= u) — exact across the full
     64-bit range (float log2 would not be above 2**53) and a single
-    numpy call, so the per-call overhead stays ~8 us on the 512-value
-    runs the RLEv2 selector feeds it (the earlier unpackbits matrix was
-    ~160x slower; a 6-pass branchless shift still paid 5x in dispatch).
+    numpy call.
     """
     u = np.ascontiguousarray(values, dtype=np.uint64)
     if u.size == 0:
@@ -180,55 +186,33 @@ def bits_required_scalar(v: int) -> int:
     return max(1, int(v).bit_length())
 
 
-def percentile_bits(values_u64: np.ndarray, p: float,
-                    widths: np.ndarray | None = None) -> int:
-    """Smallest fixed-bit width covering the p-th percentile of widths.
-
-    Mirrors the ORC writer's histogram walk: per-value widths are first
-    rounded to fixed-bit sizes, then we scan the histogram from the widest
-    bucket down, subtracting counts from ``len * (1 - p)``; the first bucket
-    that overdraws is the answer. ``widths`` may carry precomputed
-    ``bits_required(values_u64)`` (hot callers compute them once per
-    array, not once per 512-value run).
-    """
+def percentile_bits(values_u64: np.ndarray, p: float) -> int:
+    """Smallest fixed-bit width covering the p-th percentile of widths
+    (see :func:`percentile_bits_rows`)."""
     if values_u64.size == 0:
         return 1
-    if widths is None:
-        widths = bits_required(values_u64)
-    return _hist_walk(_width_hist(widths), values_u64.size, p)
+    return int(percentile_bits_rows(values_u64.reshape(1, -1), p)[0])
 
 
-def percentile_bits_pair(
-    values_u64: np.ndarray, p_hi: float, p_lo: float,
-    widths: np.ndarray | None = None,
-) -> tuple[int, int]:
-    """(percentile_bits(p_hi), percentile_bits(p_lo)) from ONE histogram
-    build — the RLEv2 selector always needs two percentiles of the same
-    run, and the bincount dominates the per-run cost."""
-    if values_u64.size == 0:
-        return 1, 1
-    if widths is None:
-        widths = bits_required(values_u64)
-    hist = _width_hist(widths)
-    n = values_u64.size
-    return _hist_walk(hist, n, p_hi), _hist_walk(hist, n, p_lo)
+def percentile_bits_rows(rows_u64: np.ndarray, p: float) -> np.ndarray:
+    """:func:`percentile_bits` of every row of a ``(k, m)`` uint64 matrix.
 
-
-def _width_hist(widths: np.ndarray) -> list[int]:
-    idx = np.searchsorted(_FIXED_BITS_ARR, widths, side="left")
-    return np.bincount(idx, minlength=32).tolist()  # plain ints: the walk
-    # below runs twice per selector probe and np scalars cost 3x
-
-
-def _hist_walk(hist: list[int], n: int, p: float) -> int:
-    # scan from the widest fixed-bit bucket down, subtracting counts
-    # from the allowance n * (1 - p); the first overdraw is the answer
-    per_len = int(n * (1.0 - p))
-    for i in range(31, -1, -1):
-        per_len -= hist[i]
-        if per_len < 0:
-            return _FIXED_BITS[i]
-    return 1
+    The ORC writer rounds each value's width up to a fixed-bit size, then
+    walks that histogram from the widest bucket down, subtracting counts
+    from the allowance ``int(m * (1 - p))``; the first bucket that
+    overdraws is the answer. That bucket is the one holding the
+    allowance-th largest value (0-based), because the fixed-bit rounding
+    of a width is monotone in the value: so one ``np.partition`` per batch
+    gives the answer with no per-value width pass.
+    """
+    m = rows_u64.shape[1]
+    allowance = int(m * (1.0 - p))
+    if allowance == 0:
+        kth = rows_u64.max(axis=1)
+    else:
+        pos = m - 1 - allowance
+        kth = np.partition(rows_u64, pos, axis=1)[:, pos]
+    return _FIXED_LUT_ARR[bits_required(kth)]
 
 
 # --- big-endian bit packing --------------------------------------------------
@@ -239,17 +223,40 @@ def bitpack(values: np.ndarray, width: int) -> bytes:
     if width == 0 or values.size == 0:
         return b""
     u = np.ascontiguousarray(values, dtype=np.uint64)
-    if width == 8:
-        return u.astype(np.uint8).tobytes()
-    if width == 16:
-        return u.astype(">u2").tobytes()
-    if width == 32:
-        return u.astype(">u4").tobytes()
-    if width == 64:
-        return u.astype(">u8").tobytes()
-    # general path: full 64-bit big-endian bit matrix, slice low `width` bits
+    if width in (1, 2, 4) or width % 8 == 0:
+        return bitpack_rows(u.reshape(1, -1), width).tobytes()
+    # other widths: full 64-bit big-endian bit matrix, slice low `width` bits
     bits = np.unpackbits(u.view(np.uint8).reshape(-1, 8)[:, ::-1], axis=1)
     return np.packbits(bits[:, 64 - width :]).tobytes()
+
+
+def bitpack_rows(rows_u64: np.ndarray, width: int) -> np.ndarray:
+    """Pack each row of a ``(k, m)`` uint64 matrix MSB-first at an aligned
+    ``width`` (1, 2, 4 or a multiple of 8), every row zero-padded to whole
+    bytes: -> ``(k, ceil(m * width / 8))`` uint8. Row r equals
+    ``bitpack(rows_u64[r], width)``."""
+    k, m = rows_u64.shape
+    if width % 8 == 0:
+        nbytes = width // 8
+        if nbytes in (1, 2, 4, 8):
+            be = rows_u64.astype(f">u{nbytes}")
+            return be.view(np.uint8).reshape(k, m * nbytes)
+        # 3, 5, 6, 7 bytes: one strided byte plane at a time
+        out = np.empty((k, m, nbytes), dtype=np.uint8)
+        for j in range(nbytes):
+            out[:, :, j] = rows_u64 >> U64(8 * (nbytes - 1 - j))
+        return out.reshape(k, m * nbytes)
+    small = rows_u64.astype(np.uint8)
+    if width == 1:
+        return np.packbits(small, axis=1)
+    per = 8 // width  # values per byte: 4 at width 2, 2 at width 4
+    pad = -m % per
+    if pad:
+        small = np.concatenate((small, np.zeros((k, pad), dtype=np.uint8)), axis=1)
+    packed = small[:, 0::per] << np.uint8(8 - width)
+    for j in range(1, per):
+        packed |= small[:, j::per] << np.uint8(8 - width * (j + 1))
+    return packed
 
 
 def bitunpack(buf, n: int, width: int) -> np.ndarray:

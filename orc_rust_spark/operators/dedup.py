@@ -305,10 +305,14 @@ def minhash_lsh_pairs(
     x, y = sized.alias("x"), sized.alias("y")
     # exact size bound INSIDE the self-join (r8, guide §2.3): jaccard =
     # c/(|A|+|B|-c) with c <= min(|A|,|B|) and |A u B| >= max(|A|,|B|), so
-    # jaccard >= t forces min(|A|,|B|) >= t * max(|A|,|B|). Pairs failing
-    # the bound are provably below threshold and are dropped before they
-    # ever reach the distinct / verify shuffles (measured: 35% of all
-    # candidate pairs at the sf1 proxy).
+    # jaccard >= t forces min(|A|,|B|) >= t * max(|A|,|B|). The verify
+    # accepts round(jaccard, 6) >= t, and rounding adds at most 5e-7, so
+    # every accepted pair has jaccard >= t - 5e-7: the bound uses that and
+    # stays a superset of the verify (a 2-of-3 subset pair at t = 0.666667
+    # passes the verify but not a bound at t). Pairs failing the bound are
+    # provably rejected by the verify and are dropped before they ever
+    # reach the distinct / verify shuffles (measured: 35% of all candidate
+    # pairs at the sf1 proxy).
     cand = (
         x.join(
             y,
@@ -316,7 +320,7 @@ def minhash_lsh_pairs(
             & (F.col("x.bucket") == F.col("y.bucket"))
             & (F.col("x.id") < F.col("y.id"))
             & (F.least(F.col("x.card"), F.col("y.card"))
-               >= F.lit(threshold) * F.greatest(F.col("x.card"), F.col("y.card"))),
+               >= F.lit(threshold - 5e-7) * F.greatest(F.col("x.card"), F.col("y.card"))),
         )
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()

@@ -542,3 +542,23 @@ def test_exact_cosine_matches_jvm_fold(spark):
         np.arange(n), np.arange(n))
     for i in range(n):
         assert ours[i] == jvm[i], (i, ours[i], jvm[i])
+
+
+def test_minhash_lsh_size_bound_rounded_threshold(spark):
+    """The verify accepts round(jaccard, 6) >= t, so the size bound must
+    keep pairs whose raw jaccard is just under t: a 2-shingle doc inside a
+    3-shingle doc has jaccard 2/3, which rounds up to t = 0.666667, while
+    min = 2 < t * max = 2.000001."""
+    from orc_rust_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta gamma"),        # {alpha beta, beta gamma}
+            (2, "alpha beta gamma delta"),  # those two plus gamma delta
+        ],
+        ["doc_id", "text"],
+    )
+    pairs = {(r.id_a, r.id_b): r.jaccard
+             for r in minhash_lsh_pairs(
+                 docs, n=2, num_perm=32, bands=32, threshold=0.666667).collect()}
+    assert pairs == {(1, 2): 0.666667}

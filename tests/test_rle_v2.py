@@ -2,6 +2,8 @@
 unit suite at src/encoding/integer/rle_v2/mod.rs:558-692) + Hypothesis
 roundtrips shaped like the reference's proptest strategies."""
 
+import zlib
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -287,3 +289,255 @@ def test_run_extent_n1_delta_consumes_delta_base():
     full = decode_rlev2(buf, 6, signed=True)
     skipped = decode_rlev2(buf, 5, signed=True, skip=1)
     assert np.array_equal(skipped, full[1:])
+
+
+# --- pinned encoder bytes --------------------------------------------------
+#
+# The writer's choice of runs, sub-encodings and widths is part of the file
+# format we ship: the bytes below were recorded from the run-at-a-time
+# encoder this block-batched one replaced, and any change to them changes
+# every file the engine writes.
+
+I64_MIN, I64_MAX = -(2**63), 2**63 - 1
+
+
+def _runs(rng, lengths, lo=-1000, hi=1000):
+    """One run per length, adjacent runs always of different values."""
+    steps = rng.integers(1, hi - lo, len(lengths))
+    vals = lo + np.cumsum(steps) % (hi - lo)
+    return np.repeat(vals, lengths)
+
+
+def _mean_run_case(rng, extra):
+    # 1000 runs alternating 1 and 5 values (mean exactly 3), one run
+    # shortened or lengthened by one value
+    lengths = np.tile([1, 5], 500)
+    lengths[1] += extra
+    return _runs(rng, lengths)
+
+
+def _widths_case(rng):
+    # one 512-value DIRECT block per aligned width, in one variable span,
+    # in an order that makes width groups interleave within a batch
+    blocks = []
+    for bits in (24, 1, 16, 2, 24, 4, 8, 3, 12, 20, 32, 40, 48, 56, 63, 16, 2):
+        blk = rng.integers(0, 1 << bits, 512, dtype=np.int64)
+        blk[0] = (1 << bits) - 1  # pin the block's top width
+        blocks.append(blk)
+    return np.concatenate(blocks)
+
+
+def _delta_case(rng):
+    parts = [
+        np.cumsum(rng.integers(1, 100, 600)),                # increasing
+        -np.cumsum(rng.integers(1, 1 << 30, 700)),           # decreasing
+        np.cumsum(np.r_[1, rng.integers(0, 2, 511)]),        # |delta| <= 1
+        -np.cumsum(np.r_[1, rng.integers(0, 2, 100)]),
+        np.cumsum(np.r_[0, rng.integers(0, 9, 520)]),        # first delta 0
+        np.cumsum(rng.integers(1 << 40, 1 << 41, 513)),
+    ]
+    # each part its own span (and so starting a block): fixed runs between
+    sep = np.full(12, -(10**15))
+    return np.concatenate([x for part in parts for x in (part, sep)])
+
+
+def _fixed_delta_case(rng):
+    parts = [np.arange(n) * step + int(rng.integers(-10**6, 10**6))
+             for n, step in ((512, 3), (1030, -7), (700, 1), (513, 1 << 33), (5, 2))]
+    return np.concatenate(parts)
+
+
+def _patched_case(rng, outlier_frac, lo, hi, outlier_lo, outlier_hi, n=4096):
+    v = rng.integers(lo, hi, n)
+    k = max(1, int(n * outlier_frac))
+    v[rng.choice(n, k, replace=False)] = rng.integers(outlier_lo, outlier_hi, k)
+    return v
+
+
+def _gap_case(rng):
+    # one outlier per 300 values: patch gaps past 255 need jump entries
+    v = rng.integers(100, 300, 3000)
+    v[7::300] = rng.integers(1 << 30, 1 << 34, v[7::300].size)
+    return v
+
+
+def _percentile_case(rng):
+    # blocks whose count of values within one fixed width of the top is
+    # at, just above and just below the 90th-percentile allowance
+    # int(m * (1 - 0.9)): 51 for m = 512, and 1 and 2 (not 2 and 3) for the
+    # tail lengths 20 and 30, which float rounding pulls down
+    parts = []
+    for m, counts in ((512, (50, 51, 52, 53)), (20, (1, 2, 3)), (30, (2, 3, 4))):
+        for c in counts:
+            blk = rng.integers(0, 256, m)
+            near = rng.choice(m, c, replace=False)
+            blk[near] = rng.integers(1 << 18, 1 << 19, c)
+            blk[near[0]] = (1 << 19) + int(rng.integers(0, 1 << 18))
+            parts += [blk, np.full(12, -1)]
+    return np.concatenate(parts)
+
+
+def _mixed_case(rng):
+    lengths = rng.choice([1, 1, 2, 3, 3, 4, 10, 11, 12, 13, 40, 512, 513], 2000)
+    v = _runs(rng, lengths, -(10**6), 10**6)[:30001]
+    v[rng.integers(0, v.size, 200)] = rng.integers(I64_MIN, I64_MAX, 200)
+    return v
+
+
+ENCODER_CASES = {
+    "short_repeats": lambda r: _runs(r, r.integers(3, 11, 400)),
+    "fixed_runs_3_10_11_12_512_513": lambda r: _runs(
+        r, [3, 10, 11, 12, 512, 513, 514, 515, 1025, 1026, 12, 3]),
+    "mean_run_below_3": lambda r: _mean_run_case(r, -1),
+    "mean_run_above_3": lambda r: _mean_run_case(r, +1),
+    "churny_low_cardinality": lambda r: r.integers(0, 3, 10_000),
+    "direct_every_width": _widths_case,
+    "delta_monotone": _delta_case,
+    "fixed_delta": _fixed_delta_case,
+    "patched_base": lambda r: _patched_case(r, 0.02, 2000, 2200, 1 << 20, 1 << 40),
+    "patched_base_negative": lambda r: _patched_case(r, 0.01, -5000, -4800, 1 << 36, 1 << 37),
+    "patched_gap_over_255": _gap_case,
+    "percentile_boundaries": _percentile_case,
+    "patched_fallback_many_patches": lambda r: _patched_case(r, 0.08, 0, 100, 10**9, 10**9 + 1),
+    "patched_fallback_base_limit": lambda r: _patched_case(r, 0.02, -(1 << 57), -(1 << 57) + 200,
+                                                           1 << 40, 1 << 41),
+    "patched_fallback_range": lambda r: _patched_case(r, 0.02, -(1 << 40), -(1 << 40) + 300,
+                                                      I64_MAX - 100, I64_MAX),
+    "span_one_into_block": lambda r: np.concatenate(
+        [r.integers(0, 1 << 20, 513), np.full(20, 7), r.integers(0, 1 << 20, 1025),
+         np.full(13, -1), r.integers(0, 50, 1)]),
+    "short_tails": lambda r: np.concatenate(
+        [np.r_[r.integers(0, 1 << 10, n), np.full(12, n)] for n in (1, 2, 3, 4, 5, 11, 511)]),
+    "int64_extremes": lambda r: r.choice(np.array([I64_MIN, I64_MAX, 0, -1, 1, I64_MIN + 1]), 3000),
+    "unsigned_high": lambda r: (r.integers(0, 1 << 62, 2000).astype(np.uint64)
+                                | np.uint64(1 << 63)).view(np.int64),
+    "mixed_30001": _mixed_case,
+}
+
+# sha256 of encode_rlev2(v, signed=True) + b"|" + encode_rlev2(v, signed=False)
+ENCODER_DIGESTS = {
+    "churny_low_cardinality":
+        "04e0a1bcd2af7851bc92908accdfac8b22c771c28f4520ef84fe7b83382aa5b4",
+    "delta_monotone":
+        "2c2411c3d5cbef083bc7a627ec911fe9e76692f23fb52a240dfce1a33f1afaa1",
+    "direct_every_width":
+        "6e2372ed0368d571cdd02f04b24d94088eda74455cc3cfcb6d43a6026b428822",
+    "fixed_delta":
+        "5b12855b0d711e06259970cf095fec5e0999d097d4b3b74890fab8e8ac5d419b",
+    "fixed_runs_3_10_11_12_512_513":
+        "0353b3803922c539d8cd850e3ebbb471eb6d70f06ce67519f25e50e60d8a4506",
+    "int64_extremes":
+        "fe63f000e56d10634a376234253149f7c4961c070293e4d71a22735364d41546",
+    "mean_run_above_3":
+        "96ab4d3897104ecaf1aa5473704afe8978b964c105826345b76fac185817b1ae",
+    "mean_run_below_3":
+        "a997dae8f3255725493b390d6b6da29182b1c58244762d6feae4a7a4ee952065",
+    "mixed_30001":
+        "3f0d83c8cd3bd374f36279d0f9f5c1ea894c15da36804167e9ab671873c20738",
+    "patched_base":
+        "da3fb50c93a8950062eb89b8806e016608b8fbe567bc073ef7604f047cb3a0c8",
+    "patched_base_negative":
+        "05104849b1d8bd71f7ecbcb97133c132a31f9e144fe70af68d0b23c17e4455d7",
+    "patched_fallback_base_limit":
+        "ca66a800cf4b3c2a61b9bcec57658a779015027604c38e588b833cce7622307c",
+    "patched_fallback_many_patches":
+        "f22121d2c4a81cbbe6fae5542067d4be5203e21bdd1a12d599c42b328b7657fe",
+    "patched_fallback_range":
+        "8348c446584d7f1a1ff06cabf2cfdd907418fd7e2d6378aa88d9b7c67752c7a6",
+    "patched_gap_over_255":
+        "586fcd8d35df09c66937ea00b1c3523c19841f26fcb8f8b8bbe5477626fa7d10",
+    "percentile_boundaries":
+        "2d033d7e081a6e38463c46472bb58a76e896b974acc61c278c66e690d5c63bea",
+    "short_repeats":
+        "6693a710fc9a4e71a25e3836e95e808e0d6ba4d9cb77e546c6c9154de638f301",
+    "short_tails":
+        "c94153a0c74c912ef0d4ddeff7cc78781ac553f0aaa55d9b577d3f37527482bb",
+    "span_one_into_block":
+        "8d77b814c6ff869466fd3df784c13374e2e08f1d0fd982f78236d3a718c90e5b",
+    "unsigned_high":
+        "3f82bbbee71c5cc89ca0edd59c8ffbf90296e665688ae644bc5831ec572de8fe",
+}
+
+
+def _encoder_case(name):
+    rng = np.random.default_rng(zlib.crc32(name.encode()))
+    return np.ascontiguousarray(ENCODER_CASES[name](rng), dtype=np.int64)
+
+
+def _sub_encodings(enc):
+    """Sub-encoding of every run in a stream, from the run headers."""
+    from orc_rust_spark.codecs.rle_v2 import _run_extent
+
+    names = ["SHORT_REPEAT", "DIRECT", "PATCHED_BASE", "DELTA"]
+    kinds, pos = set(), 0
+    while pos < len(enc):
+        h = enc[pos]
+        kind = names[h >> 6]
+        if kind == "DELTA" and not (h >> 1) & 0x1F:
+            kind = "FIXED_DELTA"
+        kinds.add(kind)
+        pos = _run_extent(enc, pos)[1]
+    return kinds
+
+
+@pytest.mark.parametrize("name", sorted(ENCODER_CASES))
+def test_encoder_bytes_pinned(name):
+    import hashlib
+
+    v = _encoder_case(name)
+    signed, unsigned = encode_rlev2(v, signed=True), encode_rlev2(v, signed=False)
+    for enc, s in ((signed, True), (unsigned, False)):
+        assert np.array_equal(decode_rlev2(enc, v.size, signed=s), v)
+    assert hashlib.sha256(signed + b"|" + unsigned).hexdigest() == ENCODER_DIGESTS[name]
+
+
+def test_encoder_corpus_covers_every_sub_encoding():
+    kinds = {name: _sub_encodings(encode_rlev2(_encoder_case(name), signed=True))
+             for name in ENCODER_CASES}
+    assert set().union(*kinds.values()) == {
+        "SHORT_REPEAT", "DIRECT", "PATCHED_BASE", "DELTA", "FIXED_DELTA"}
+    for name in ("patched_base", "patched_base_negative", "patched_gap_over_255"):
+        assert "PATCHED_BASE" in kinds[name], name
+    # each fallback case is a PATCHED_BASE candidate written DIRECT
+    for name in ("patched_fallback_many_patches", "patched_fallback_base_limit",
+                 "patched_fallback_range"):
+        assert kinds[name] == {"DIRECT"}, name
+    assert kinds["percentile_boundaries"] >= {"DIRECT", "PATCHED_BASE"}
+    assert "DELTA" in kinds["delta_monotone"]
+    assert "FIXED_DELTA" in kinds["fixed_delta"]
+
+
+def _lineitem_like(seed, n_rows):
+    """Lineitem-shaped columns: shuffled order keys four lines each, random
+    part/supplier keys, line numbers, low-cardinality flags and a
+    day-granular ship date."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    perm = rng.permutation(n_rows)
+    ship = np.datetime64("1995-01-02") + rng.integers(0, 2498, n_rows).astype("timedelta64[D]")
+    return pa.table({
+        "l_orderkey": (1 << 17) + perm // 4 * 4,
+        "l_partkey": rng.integers(0, 20_000, n_rows),
+        "l_linenumber": (perm % 4 + 1).astype(np.int32),
+        "l_quantity": rng.integers(1, 51, n_rows).astype(np.float64),
+        "l_returnflag": pa.array(np.array(["R", "A", "N"], dtype=object)[rng.integers(0, 3, n_rows)]),
+        "l_shipdate": pa.array(ship.astype("datetime64[us]"), pa.timestamp("us")),
+    })
+
+
+ORC_FILE_DIGEST = "e97968ae60971dd54c03223b67297ce08e58bf086fdcb94d7f68748decab1f2c"
+
+
+def test_write_orc_bytes_pinned(tmp_path):
+    """An uncompressed file, so the digest pins the writer's RLEv2 streams
+    (and the rest of its layout), not a compression library."""
+    import hashlib
+
+    from orc_rust_spark.sources.orc_file import orc_to_table, write_orc
+
+    table = _lineitem_like(3, 25_000)
+    path = tmp_path / "lineitem.orc"
+    write_orc(table, str(path), compression="none", bloom_columns=["l_orderkey"])
+    assert orc_to_table(str(path)).cast(table.schema).equals(table)
+    assert hashlib.sha256(path.read_bytes()).hexdigest() == ORC_FILE_DIGEST

@@ -51,6 +51,48 @@ def test_percentile_bits():
     assert util.percentile_bits(v, 0.95) == 8
 
 
+def _histogram_walk(values, p):
+    """Reference percentile width: the ORC writer's loop over the fixed-bit
+    width histogram, widest bucket first."""
+    hist = [0] * 65
+    for x in values:
+        hist[util.closest_fixed_bits(int(x).bit_length())] += 1
+    allowance = int(len(values) * (1.0 - p))
+    for width in range(64, 0, -1):
+        allowance -= hist[width]
+        if allowance < 0:
+            return width
+    return 1
+
+
+@pytest.mark.parametrize("m", [1, 2, 4, 10, 20, 30, 100, 512])
+def test_percentile_rows_match_histogram_walk(m):
+    rng = np.random.default_rng(m)
+    # per row: small values plus a random number of wide ones, so the
+    # percentiles land on every side of the top width
+    rows = rng.integers(0, 1 << 8, (300, m)).astype(np.uint64)
+    for r in range(rows.shape[0]):
+        k = int(rng.integers(0, m + 1))
+        top = int(rng.integers(1, 65))
+        rows[r, rng.choice(m, k, replace=False)] = (
+            rng.integers(0, 1 << 62, k).astype(np.uint64) >> np.uint64(64 - top)
+            | np.uint64(1 << (top - 1)))
+    for p in (1.0, 0.95, 0.9):
+        got = util.percentile_bits_rows(rows, p).tolist()
+        assert got == [_histogram_walk(row.tolist(), p) for row in rows], p
+
+
+@pytest.mark.parametrize("width", [1, 2, 4, 8, 16, 24, 32, 40, 48, 56, 64])
+@pytest.mark.parametrize("m", [1, 3, 7, 510, 512])
+def test_bitpack_rows_equals_bitpack_per_row(width, m):
+    rng = np.random.default_rng(width * 1000 + m)
+    rows = rng.integers(0, 1 << 63, (5, m), dtype=np.uint64) * np.uint64(2)
+    rows |= rng.integers(0, 2, (5, m), dtype=np.uint64)
+    rows >>= np.uint64(64 - width)
+    packed = util.bitpack_rows(rows, width)
+    assert [bytes(r) for r in packed] == [util.bitpack(r, width) for r in rows]
+
+
 @given(st.lists(st.integers(0, 2**64 - 1), min_size=1, max_size=200),
        st.integers(1, 64))
 @settings(max_examples=50, deadline=None)
