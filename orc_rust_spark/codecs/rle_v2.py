@@ -25,6 +25,18 @@ width, PATCHED_BASE blocks one at a time. Python loops run once per fixed
 run, span, batch and width group, and once per emitted block; no loop
 runs per value.
 
+The decoder mirrors it in two passes. One walk over the run headers
+records each run's shape, where its packed values start and where its
+values go in the output. Then runs of one shape are decoded together, in
+batches of up to DECODE_BATCH_VALUES values: DIRECT runs of one (width,
+length) are unpacked as one ``(k, nbytes)`` matrix (consecutive ones are
+a strided view of the stream, as they sit a header plus ``nbytes``
+apart) and un-zigzagged once; bit-packed DELTA runs of one shape are
+unpacked and summed row-wise, and fixed DELTA runs of one length are
+computed together. SHORT_REPEAT runs are filled and PATCHED_BASE runs
+decoded one at a time. A stream that ends before its runs do raises
+CorruptStream.
+
 Reference parity (behavioral, not code): the state machine and selector in
 src/encoding/integer/rle_v2/mod.rs:255-531 and the per-sub-encoding readers
 and writers in rle_v2/{short_repeat,direct,delta,patched_base}.rs. Golden
@@ -43,10 +55,12 @@ from __future__ import annotations
 import numpy as np
 
 from .util import (
+    CorruptStream,
     bitpack,
     bitpack_rows,
     bits_required_scalar,
     bitunpack,
+    bitunpack_rows,
     closest_aligned_bits_array,
     closest_fixed_bits,
     decode_bit_width,
@@ -72,6 +86,9 @@ BASE_VALUE_LIMIT = 1 << 56
 # ~1.5x faster here, left their heap fragmented enough that a later
 # decode extended it (webtext_encode peak worker RSS +4% median)
 BATCH_VALUES = 4 * MAX_RUN_LENGTH
+# values per reader batch of same-shape runs: bounds each batch's unpacked
+# matrix and its zigzag or cumsum temporaries to 32 KB, for the same reason
+DECODE_BATCH_VALUES = 8 * MAX_RUN_LENGTH
 
 _U64 = np.uint64
 
@@ -365,7 +382,7 @@ def _run_extent(buf, pos: int) -> tuple[int, int]:
     p = pos + 2
     _, p = read_varint(buf, p)
     # the delta-base varint is ALWAYS present, even for n == 1 (the same
-    # old-Hive contract _read_delta honors above — skipping it here
+    # old-Hive contract the reader's walk honors below — skipping it here
     # desynchronized the SEEK path on exactly the files the full-decode
     # fix targets: next_pos landed inside the varint and the following
     # run header parsed as garbage)
@@ -381,94 +398,207 @@ def decode_rlev2(buf, n: int, signed: bool = True, skip: int = 0,
     skipping ``skip`` values first (whole runs are skipped via header
     arithmetic without materializing). ``exact=False`` tolerates a stream
     that continues past the requested count (decoding a row group out of
-    the middle of a stripe stream) and truncates the final run."""
-    pos = 0
-    head_trim = 0
-    while skip > 0:
-        count, nxt = _run_extent(buf, pos)
-        if count <= skip:
-            skip -= count
-            pos = nxt
-        else:
-            head_trim = skip
-            skip = 0
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    chunks: list[np.ndarray] = []
-    n_target = n
-    n = n + head_trim  # decode the partial first run fully, trim below
-    got = 0
-    while got < n:
-        header = buf[pos]
-        enc = header >> 6
-        if enc == 0:
-            vals, pos = _read_short_repeat(buf, pos, signed)
-        elif enc == 1:
-            vals, pos = _read_direct(buf, pos, signed)
-        elif enc == 2:
-            vals, pos = _read_patched_base(buf, pos)
-        else:
-            vals, pos = _read_delta(buf, pos, signed)
-        chunks.append(vals)
-        got += vals.size
-    if got != n and exact:
-        raise ValueError(f"RLEv2 stream produced {got} values, expected {n}")
-    out = np.concatenate(chunks) if len(chunks) > 1 else chunks[0]
-    return out[head_trim : head_trim + n_target]
+    the middle of a stripe stream) and truncates the final run.
+
+    A stream shorter than its run headers promise raises CorruptStream;
+    ``exact=True`` raises ValueError when the runs overshoot ``n``."""
+    size = len(buf)
+    try:
+        pos = 0
+        head_trim = 0
+        while skip > 0:
+            count, nxt = _run_extent(buf, pos)
+            if count <= skip:
+                skip -= count
+                pos = nxt
+            else:
+                head_trim = skip
+                skip = 0
+        if n == 0:
+            return np.zeros(0, dtype=np.int64)
+        # decode the partial first run fully, trim below
+        runs = _RunWalk(buf, pos, n + head_trim, signed)
+    except IndexError:
+        raise CorruptStream(
+            f"truncated RLEv2 stream: a run header runs past its {size} bytes") from None
+    if runs.end > size:
+        raise CorruptStream(
+            f"truncated RLEv2 stream: runs need {runs.end} bytes, have {size}")
+    if runs.got != n + head_trim and exact:
+        raise ValueError(
+            f"RLEv2 stream produced {runs.got} values, expected {n + head_trim}")
+    out = np.empty(runs.got, dtype=np.int64)
+    for o, count, value in runs.repeats:
+        out[o : o + count] = value
+    data = np.frombuffer(buf, dtype=np.uint8)
+    for (width, count), (starts, outs) in runs.direct.items():
+        _direct_groups(out, data, width, count, starts, outs, signed)
+    for (width, count), group in runs.delta.items():
+        _delta_groups(out, data, width, count, *group)
+    for count, (outs, bases, firsts) in runs.fixed.items():
+        _fixed_groups(out, count, outs, bases, firsts)
+    for p, o in runs.patched:
+        vals, _ = _read_patched_base(buf, p)
+        out[o : o + vals.size] = vals
+    return out[head_trim : head_trim + n]
 
 
-def _read_short_repeat(buf, pos: int, signed: bool) -> tuple[np.ndarray, int]:
-    h = buf[pos]
-    width_bytes = ((h >> 3) & 0x7) + 1
-    count = (h & 0x7) + MIN_REPEAT
-    u = int.from_bytes(bytes(buf[pos + 1 : pos + 1 + width_bytes]), "big")
-    v = ((u >> 1) ^ -(u & 1)) if signed else u
-    if v >= 1 << 63:
-        v -= 1 << 64
-    return np.full(count, v, dtype=np.int64), pos + 1 + width_bytes
+class _RunWalk:
+    """One pass over the run headers from ``pos`` until ``want`` values are
+    covered, sorting the runs by shape. Each run is recorded by where its
+    packed values start in ``buf`` and where its values go in the output:
+
+    - ``direct``: (width, length) -> data starts, output starts;
+    - ``delta``: (width, length) -> data starts, output starts, bases,
+      first deltas (bit-packed DELTA runs of three or more values);
+    - ``fixed``: length -> output starts, bases, deltas (fixed DELTA runs
+      with a non-zero delta, and two-value DELTA runs);
+    - ``repeats``: (output start, length, value) of SHORT_REPEAT runs and
+      of DELTA runs of one value;
+    - ``patched``: (run start, output start) of PATCHED_BASE runs.
+
+    ``got`` is the values covered and ``end`` the byte after the last run.
+    Reading a header past the buffer raises IndexError; a run whose body
+    ends past it shows as ``end > len(buf)``."""
+
+    __slots__ = ("direct", "delta", "fixed", "repeats", "patched", "got", "end")
+
+    def __init__(self, buf, pos: int, want: int, signed: bool):
+        direct: dict = {}
+        delta: dict = {}
+        fixed: dict = {}
+        repeats: list = []
+        patched: list = []
+        got = 0
+        while got < want:
+            h = buf[pos]
+            enc = h >> 6
+            if enc == 1:
+                width = decode_bit_width((h >> 1) & 0x1F)
+                count = (((h & 1) << 8) | buf[pos + 1]) + 1
+                group = direct.get((width, count))
+                if group is None:
+                    group = direct[(width, count)] = ([], [])
+                group[0].append(pos + 2)
+                group[1].append(got)
+                pos += 2 + (count * width + 7) // 8
+            elif enc == 3:
+                code = (h >> 1) & 0x1F
+                count = (((h & 1) << 8) | buf[pos + 1]) + 1
+                base, pos = read_varint(buf, pos + 2)
+                base = _to_int64(((base >> 1) ^ -(base & 1)) if signed else base)
+                # the delta-base varint is ALWAYS present, even for a
+                # declared run length of 1 (old Hive ORIGINAL writers emit
+                # such runs — decimal.orc scale stream): skipping it
+                # desynchronized the stream and every following run parsed
+                # as garbage (reference read_delta_values reads it
+                # unconditionally, src/encoding/integer/rle_v2/delta.rs:73-92)
+                first, pos = read_signed_varint(buf, pos)
+                if count == 1 or (code == 0 and first == 0):
+                    repeats.append((got, count, base))
+                elif code == 0 or count == 2:
+                    group = fixed.get(count)
+                    if group is None:
+                        group = fixed[count] = ([], [], [])
+                    group[0].append(got)
+                    group[1].append(base)
+                    group[2].append(first)
+                else:
+                    width = decode_bit_width(code)
+                    group = delta.get((width, count))
+                    if group is None:
+                        group = delta[(width, count)] = ([], [], [], [])
+                    group[0].append(pos)
+                    group[1].append(got)
+                    group[2].append(base)
+                    group[3].append(first)
+                    pos += ((count - 2) * width + 7) // 8
+            elif enc == 0:
+                width_bytes = ((h >> 3) & 0x7) + 1
+                count = (h & 0x7) + MIN_REPEAT
+                u = int.from_bytes(buf[pos + 1 : pos + 1 + width_bytes], "big")
+                repeats.append((got, count, _to_int64(((u >> 1) ^ -(u & 1)) if signed else u)))
+                pos += 1 + width_bytes
+            else:
+                patched.append((pos, got))
+                count, pos = _run_extent(buf, pos)
+            got += count
+        self.direct, self.delta, self.fixed = direct, delta, fixed
+        self.repeats, self.patched = repeats, patched
+        self.got, self.end = got, pos
 
 
-def _read_direct(buf, pos: int, signed: bool) -> tuple[np.ndarray, int]:
-    h = buf[pos]
-    width = decode_bit_width((h >> 1) & 0x1F)
-    n = (((h & 1) << 8) | buf[pos + 1]) + 1
-    pos += 2
-    nbytes = (n * width + 7) // 8
-    u = bitunpack(bytes(buf[pos : pos + nbytes]), n, width)
-    vals = zigzag_decode(u) if signed else u.view(np.int64)
-    return vals, pos + nbytes
+def _to_int64(v: int) -> int:
+    return v - (1 << 64) if v >= 1 << 63 else v
 
 
-def _read_delta(buf, pos: int, signed: bool) -> tuple[np.ndarray, int]:
-    h = buf[pos]
-    width_code = (h >> 1) & 0x1F
-    width = 0 if width_code == 0 else decode_bit_width(width_code)
-    n = (((h & 1) << 8) | buf[pos + 1]) + 1
-    pos += 2
-    base_u, pos = read_varint(buf, pos)
-    base = ((base_u >> 1) ^ -(base_u & 1)) if signed else base_u
-    if base >= 1 << 63:
-        base -= 1 << 64
-    # the delta-base varint is ALWAYS present, even for a declared run
-    # length of 1 (old Hive ORIGINAL writers emit such runs — decimal.orc
-    # scale stream): skipping it desynchronized the stream and every
-    # following run parsed as garbage (reference read_delta_values reads
-    # it unconditionally, src/encoding/integer/rle_v2/delta.rs:73-92)
-    delta_base, pos = read_signed_varint(buf, pos)
-    if n == 1:
-        return np.array([base], dtype=np.int64), pos
-    if width == 0:  # fixed delta
-        vals = base + delta_base * np.arange(n, dtype=np.int64)
-        return vals, pos
-    nbytes = ((n - 2) * width + 7) // 8
-    packed = bitunpack(bytes(buf[pos : pos + nbytes]), n - 2, width).view(np.int64)
-    pos += nbytes
-    sign = -1 if delta_base < 0 else 1
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = base
-    deltas[1] = delta_base
-    deltas[2:] = sign * packed
-    return np.cumsum(deltas), pos
+def _batch_runs(count: int) -> int:
+    """Runs of ``count`` values per batch: DECODE_BATCH_VALUES values, and
+    at least one run."""
+    return max(1, DECODE_BATCH_VALUES // count)
+
+
+def _packed_rows(data: np.ndarray, starts: list, nbytes: int, stride: int) -> np.ndarray:
+    """The ``(k, nbytes)`` packed bytes of k runs starting at ``starts``.
+    Runs ``stride`` bytes apart (consecutive runs of one DIRECT shape) are
+    a strided view of the buffer; other rows are copied out."""
+    k = len(starts)
+    if stride and starts[-1] - starts[0] == stride * (k - 1):
+        return np.ndarray((k, nbytes), dtype=np.uint8, buffer=data,
+                          offset=starts[0], strides=(stride, 1))
+    return np.concatenate([data[p : p + nbytes] for p in starts]).reshape(k, nbytes)
+
+
+def _scatter(out: np.ndarray, outs: list, vals: np.ndarray) -> None:
+    """Write the rows of ``vals`` to the output at ``outs``."""
+    k, m = vals.shape
+    if outs[-1] - outs[0] == m * (k - 1):
+        out[outs[0] : outs[0] + k * m] = vals.reshape(-1)
+    else:
+        for o, row in zip(outs, vals):
+            out[o : o + m] = row
+
+
+def _direct_groups(out, data, width: int, count: int, starts: list, outs: list,
+                   signed: bool) -> None:
+    """DIRECT runs of one shape: one unpack and zigzag per batch."""
+    nbytes = (count * width + 7) // 8
+    step = _batch_runs(count)
+    for a in range(0, len(starts), step):
+        batch = slice(a, a + step)
+        u = bitunpack_rows(_packed_rows(data, starts[batch], nbytes, 2 + nbytes), count, width)
+        _scatter(out, outs[batch], zigzag_decode(u) if signed else u.view(np.int64))
+
+
+def _delta_groups(out, data, width: int, count: int, starts: list, outs: list,
+                  bases: list, firsts: list) -> None:
+    """Bit-packed DELTA runs of one shape: the |deltas| after the first
+    are unpacked per batch, signed by the first delta, and summed
+    row-wise."""
+    nbytes = ((count - 2) * width + 7) // 8
+    step = _batch_runs(count)
+    for a in range(0, len(starts), step):
+        batch = slice(a, a + step)
+        rows = _packed_rows(data, starts[batch], nbytes, 0)
+        mags = bitunpack_rows(rows, count - 2, width)
+        first = np.array(firsts[batch], dtype=np.int64)
+        deltas = np.empty((first.size, count), dtype=np.int64)
+        deltas[:, 0] = bases[batch]
+        deltas[:, 1] = first
+        np.multiply(mags.view(np.int64), np.where(first < 0, -1, 1)[:, None],
+                    out=deltas[:, 2:])
+        _scatter(out, outs[batch], np.cumsum(deltas, axis=1, out=deltas))
+
+
+def _fixed_groups(out, count: int, outs: list, bases: list, firsts: list) -> None:
+    """Fixed-delta runs of one length: base + delta * i, per batch."""
+    steps = np.arange(count, dtype=np.int64)
+    step = _batch_runs(count)
+    for a in range(0, len(outs), step):
+        batch = slice(a, a + step)
+        vals = np.array(firsts[batch], dtype=np.int64)[:, None] * steps
+        vals += np.array(bases[batch], dtype=np.int64)[:, None]
+        _scatter(out, outs[batch], vals)
 
 
 def _read_patched_base(buf, pos: int) -> tuple[np.ndarray, int]:

@@ -11,8 +11,10 @@ encodings (public Apache ORC specification):
 
 All array kernels take/return NumPy arrays. The ``*_rows`` kernels work on
 a ``(k, m)`` matrix with one RLEv2 block per row, so the RLEv2 writer
-selects and packs a whole batch of blocks per NumPy call; no Python loop
-here runs over values.
+selects and packs a whole batch of blocks per NumPy call, and the reader
+unpacks a batch of same-shape runs per call (``bitunpack_rows`` takes a
+strided view of the stream, one run per row); no Python loop here runs
+over values.
 """
 
 from __future__ import annotations
@@ -55,10 +57,13 @@ def zigzag_encode(values: np.ndarray) -> np.ndarray:
 
 
 def zigzag_decode(values: np.ndarray) -> np.ndarray:
+    """(u >> 1) ^ -(u & 1), the negation wrapping in uint64."""
     u = values.astype(np.uint64, copy=False)
-    return ((u >> np.uint64(1)) ^ (-(u & np.uint64(1)).astype(np.int64)).view(np.uint64)).view(
-        np.int64
-    )
+    sign = u & U64(1)
+    np.negative(sign, out=sign)
+    out = u >> U64(1)
+    out ^= sign
+    return out.view(np.int64)
 
 
 def zigzag_encode_scalar(v: int) -> int:
@@ -259,23 +264,52 @@ def bitpack_rows(rows_u64: np.ndarray, width: int) -> np.ndarray:
     return packed
 
 
+_BIG_ENDIAN = {n: np.dtype(f">u{n}") for n in (1, 2, 4, 8)}
+
+
 def bitunpack(buf, n: int, width: int) -> np.ndarray:
     """Unpack ``n`` uint64 values packed MSB-first at ``width`` bits each."""
     if width == 0 or n == 0:
         return np.zeros(n, dtype=np.uint64)
     raw = frombuffer_exact(buf, np.uint8, (n * width + 7) // 8)
-    if width == 8:
-        return raw[:n].astype(np.uint64)
-    if width == 16:
-        return raw[: 2 * n].view(">u2").astype(np.uint64)
-    if width == 32:
-        return raw[: 4 * n].view(">u4").astype(np.uint64)
-    if width == 64:
-        return raw[: 8 * n].view(">u8").astype(np.uint64)
-    bits = np.unpackbits(raw)[: n * width].reshape(n, width)
-    full = np.zeros((n, 64), dtype=np.uint8)
+    return bitunpack_rows(raw.reshape(1, -1), n, width)[0]
+
+
+def bitunpack_rows(mat: np.ndarray, m: int, width: int) -> np.ndarray:
+    """Unpack each row of a ``(k, ceil(m * width / 8))`` uint8 matrix into
+    m uint64 values packed MSB-first at ``width`` bits: -> ``(k, m)``
+    uint64. The inverse of :func:`bitpack_rows`. ``mat`` may be a strided
+    view (one packed run per row, rows anywhere in a stream) as long as
+    each row's bytes are contiguous.
+
+    Aligned widths take byte views (1, 2, 4 or 8 bytes), byte planes
+    (3, 5, 6 or 7 bytes), shift folds (2 and 4 bits) or ``unpackbits``
+    (1 bit). The other widths go through a 64-column bit matrix: liborc
+    writes DIRECT runs at them, and PATCHED_BASE values and patch lists
+    use them too."""
+    k = mat.shape[0]
+    if width % 8 == 0:
+        nbytes = width // 8
+        raw = mat[:, : m * nbytes]
+        if nbytes in _BIG_ENDIAN:
+            return raw.view(_BIG_ENDIAN[nbytes]).astype(np.uint64)
+        # 3, 5, 6, 7 bytes: right-align each value in an 8-byte word
+        full = np.zeros((k, m, 8), dtype=np.uint8)
+        full[:, :, 8 - nbytes :] = raw.reshape(k, m, nbytes)
+        return full.view(">u8").reshape(k, m).astype(np.uint64)
+    if width == 1:
+        return np.unpackbits(mat, axis=1, count=m).astype(np.uint64)
+    if width in (2, 4):
+        per = 8 // width  # values per byte
+        mask = np.uint8((1 << width) - 1)
+        out = np.empty((k, mat.shape[1] * per), dtype=np.uint8)
+        for j in range(per):
+            out[:, j::per] = (mat >> np.uint8(8 - width * (j + 1))) & mask
+        return out[:, :m].astype(np.uint64)
+    bits = np.unpackbits(mat, axis=1)[:, : m * width].reshape(k * m, width)
+    full = np.zeros((k * m, 64), dtype=np.uint8)
     full[:, 64 - width :] = bits
-    return np.packbits(full, axis=1)[:, ::-1].copy().view(np.uint64).ravel()
+    return np.packbits(full, axis=1)[:, ::-1].copy().view(np.uint64).reshape(k, m)
 
 
 def int32_offsets(lengths) -> "pa.Array":

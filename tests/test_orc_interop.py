@@ -2047,3 +2047,45 @@ def test_point_lookup_collection_probe_matches_nothing(tmp_path, writer):
         assert got.num_rows == 0, probe
         assert got.schema == hit.schema
         assert (decoded, total) == (hit_decoded, hit_total), probe
+
+
+@pytest.mark.parametrize("width", list(range(1, 25)) + [26, 28, 30, 32, 40, 48, 56, 64])
+def test_liborc_direct_runs_at_every_fixed_width(tmp_path, monkeypatch, width):
+    """liborc's COMPRESSION strategy packs DIRECT runs at the exact fixed
+    width (SPEED rounds up to 1, 2, 4, 8 or a multiple of 8, as our
+    writer does), so only these files reach the reader's unaligned
+    widths. Each signed column spans the width's zigzag range; the scan
+    and the seeking point lookup must equal pyarrow."""
+    import pyarrow.compute as pc
+
+    from orc_rust_spark.codecs import rle_v2
+    from orc_rust_spark.sources.orc_file import orc_point_lookup
+
+    widths = set()
+    real = rle_v2.bitunpack_rows
+
+    def spy(mat, m, w):
+        widths.add(w)
+        return real(mat, m, w)
+
+    monkeypatch.setattr(rle_v2, "bitunpack_rows", spy)
+    rng = np.random.default_rng(width)
+    lo, hi = -(1 << (width - 1)), (1 << (width - 1)) - 1
+    n = 5_000
+    v = rng.integers(lo, hi, n, endpoint=True, dtype=np.int64)
+    v[::997] = lo  # zigzags to the width's top value
+    w = rng.integers(lo, hi, n, endpoint=True, dtype=np.int64)
+    tbl = pa.table({"k": np.arange(n), "v": v, "w": w})
+    path = str(tmp_path / f"w{width}.orc")
+    paorc.write_table(tbl, path, compression="zlib", compression_block_size=4096,
+                      compression_strategy="compression", row_index_stride=1000)
+    want = paorc.read_table(path)
+    assert orc_to_table(path).equals(want)
+    assert width in widths
+    for k in rng.choice(n, 6, replace=False).tolist():
+        got, decoded, total = orc_point_lookup(path, "k", k)
+        assert got.equals(want.filter(pc.equal(want["k"], k))), k
+        assert decoded < total
+    probe = int(v[2_345])
+    got, _, _ = orc_point_lookup(path, "v", probe)
+    assert got.equals(want.filter(pc.equal(want["v"], probe)))

@@ -541,3 +541,123 @@ def test_write_orc_bytes_pinned(tmp_path):
     write_orc(table, str(path), compression="none", bloom_columns=["l_orderkey"])
     assert orc_to_table(str(path)).cast(table.schema).equals(table)
     assert hashlib.sha256(path.read_bytes()).hexdigest() == ORC_FILE_DIGEST
+
+
+# --- block-batched reader ----------------------------------------------------
+#
+# The reader walks the run headers once and decodes runs of one shape
+# together, so these tests aim at shapes that meet across the stream:
+# consecutive runs (a strided view of the buffer), the same shape with
+# other runs between (copied rows), a group that ends the buffer, and
+# every skip position relative to a run.
+
+def _run_bounds(enc):
+    """The value offset at which each run starts, then the value count."""
+    from orc_rust_spark.codecs.rle_v2 import _run_extent
+
+    bounds, pos, got = [], 0, 0
+    while pos < len(enc):
+        bounds.append(got)
+        count, pos = _run_extent(enc, pos)
+        got += count
+    return bounds + [got]
+
+
+def _direct_run(u, width):
+    """A DIRECT run at any fixed width; the writer only emits aligned ones."""
+    from orc_rust_spark.codecs.util import bitpack, encode_bit_width
+
+    n = len(u)
+    head = bytes((0x40 | encode_bit_width(width) << 1 | (n - 1) >> 8, (n - 1) & 0xFF))
+    return head + bitpack(u, width)
+
+
+def _mixed_corpus(signed):
+    """-> (values, one stream holding every sub-encoding): pieces of the
+    encoder cases, then hand-made DIRECT runs at unaligned widths, two of
+    one shape adjacent, one shape split by another run, and three adjacent
+    runs that end the stream."""
+    from orc_rust_spark.codecs.util import zigzag_decode
+
+    vals, encs = [], []
+    for name in ("short_repeats", "fixed_delta", "delta_monotone", "patched_base",
+                 "mixed_30001", "direct_every_width"):
+        v = _encoder_case(name)[:700]
+        vals.append(v)
+        encs.append(encode_rlev2(v, signed=signed))
+    rng = np.random.default_rng(5)
+    for width, n in ((3, 512), (3, 512), (26, 100), (5, 7), (26, 100),
+                     (17, 300), (17, 300), (17, 300)):
+        u = rng.integers(0, 1 << width, n, dtype=np.int64).astype(np.uint64)
+        vals.append(zigzag_decode(u) if signed else u.view(np.int64))
+        encs.append(_direct_run(u, width))
+    return np.concatenate(vals), b"".join(encs)
+
+
+def _skips(bounds, rng, picks=15):
+    """Skip 0, skips on run boundaries and one value either side of them,
+    and mid-run skips, over a sample of the runs."""
+    runs = list(zip(bounds, bounds[1:]))
+    if len(runs) > picks:
+        runs = [runs[i] for i in sorted(rng.choice(len(runs), picks, replace=False))]
+    out = {0, bounds[-1] - 1}
+    for a, b in runs:
+        out |= {a - 1, a, a + 1, (a + b) // 2, b - 1}
+    return sorted(s for s in out if 0 <= s < bounds[-1])
+
+
+def test_mixed_corpus_covers_every_sub_encoding():
+    for signed in (True, False):
+        v, enc = _mixed_corpus(signed)
+        assert _sub_encodings(enc) == {
+            "SHORT_REPEAT", "DIRECT", "PATCHED_BASE", "DELTA", "FIXED_DELTA"}
+        assert np.array_equal(decode_rlev2(enc, v.size, signed=signed), v)
+
+
+@pytest.mark.parametrize("signed", [True, False])
+@pytest.mark.parametrize("name", sorted(ENCODER_CASES) + ["<mixed>"])
+def test_reader_skip_and_partial_reads_equal_slices(name, signed):
+    if name == "<mixed>":
+        v, enc = _mixed_corpus(signed)
+    else:
+        v = _encoder_case(name)
+        enc = encode_rlev2(v, signed=signed)
+    bounds = _run_bounds(enc)
+    assert bounds[-1] == v.size
+    rng = np.random.default_rng(zlib.crc32(name.encode()) + signed)
+    for skip in _skips(bounds, rng):
+        got = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip)
+        assert np.array_equal(got, v[skip:]), skip
+        for n in (1, 2, 7, 513, 1500):
+            got = decode_rlev2(enc, min(n, v.size - skip), signed=signed,
+                               skip=skip, exact=False)
+            assert np.array_equal(got, v[skip:skip + n]), (skip, n)
+
+
+def test_reader_count_mismatch_raises_value_error():
+    """exact=True: a count that ends inside a run is a mismatch; one on a
+    run boundary reads the runs before it."""
+    v, enc = _mixed_corpus(True)
+    bounds = _run_bounds(enc)
+    b = bounds[len(bounds) // 2]
+    assert np.array_equal(decode_rlev2(enc, b, signed=True), v[:b])
+    with pytest.raises(ValueError, match="expected"):
+        decode_rlev2(enc, b + 1, signed=True)
+    assert np.array_equal(decode_rlev2(enc, b - 1, signed=True, exact=False), v[:b - 1])
+
+
+@pytest.mark.parametrize("signed", [True, False])
+def test_reader_truncated_stream_raises_corrupt_stream(signed):
+    """A stream cut at any byte raises CorruptStream (a ValueError), never
+    IndexError or a bare NumPy error: on the full read, and on a read that
+    skips half the values first."""
+    from orc_rust_spark.codecs.util import CorruptStream
+
+    v, enc = _mixed_corpus(signed)
+    half = v.size // 2
+    for cut in range(len(enc)):
+        with pytest.raises(CorruptStream):
+            decode_rlev2(enc[:cut], v.size, signed=signed)
+        with pytest.raises(CorruptStream):
+            decode_rlev2(enc[:cut], v.size - half, signed=signed, skip=half,
+                         exact=False)

@@ -93,6 +93,36 @@ def test_bitpack_rows_equals_bitpack_per_row(width, m):
     assert [bytes(r) for r in packed] == [util.bitpack(r, width) for r in rows]
 
 
+def _rows_at_width(seed, k, m, width):
+    rng = np.random.default_rng(seed)
+    rows = rng.integers(0, 1 << 63, (k, m), dtype=np.uint64) * np.uint64(2)
+    rows |= rng.integers(0, 2, (k, m), dtype=np.uint64)
+    return rows >> np.uint64(64 - width)
+
+
+@pytest.mark.parametrize("width", [1, 2, 4, 8, 16, 24, 32, 40, 48, 56, 64])
+@pytest.mark.parametrize("m", [1, 3, 7, 510, 512])
+def test_bitunpack_rows_inverts_bitpack_rows(width, m):
+    rows = _rows_at_width(width * 1000 + m, 5, m, width)
+    packed = util.bitpack_rows(rows, width)
+    got = util.bitunpack_rows(packed, m, width)
+    assert got.dtype == np.uint64 and np.array_equal(got, rows)
+    # the reader passes runs as a strided view of the stream: each row's
+    # bytes follow a 2-byte run header
+    stream = np.zeros((5, 2 + packed.shape[1]), dtype=np.uint8)
+    stream[:, 2:] = packed
+    assert np.array_equal(util.bitunpack_rows(stream[:, 2:], m, width), rows)
+    assert np.array_equal(util.bitunpack(packed[3].tobytes(), m, width), rows[3])
+
+
+@pytest.mark.parametrize("width", [3, 5, 7, 12, 17, 23, 26, 28, 30])
+def test_bitunpack_rows_unaligned_widths(width):
+    """Widths only liborc writes go through the bit-matrix path."""
+    rows = _rows_at_width(width, 4, 37, width)
+    packed = np.array([np.frombuffer(util.bitpack(r, width), np.uint8) for r in rows])
+    assert np.array_equal(util.bitunpack_rows(packed, 37, width), rows)
+
+
 @given(st.lists(st.integers(0, 2**64 - 1), min_size=1, max_size=200),
        st.integers(1, 64))
 @settings(max_examples=50, deadline=None)
