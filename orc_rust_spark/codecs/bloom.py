@@ -129,6 +129,85 @@ def wang_hash_i64_orc(values: np.ndarray) -> np.ndarray:
     return key.view(np.uint64)
 
 
+_U64 = (1 << 64) - 1
+
+
+def _wang_int(value: int, arithmetic: bool) -> int:
+    key = value & _U64
+    if arithmetic:
+        def shr(x: int, n: int) -> int:
+            return ((x - (1 << 64) if x >> 63 else x) >> n) & _U64
+    else:
+        def shr(x: int, n: int) -> int:
+            return x >> n
+    key = (~key + (key << 21)) & _U64
+    key ^= shr(key, 24)
+    key = (key + (key << 3) + (key << 8)) & _U64
+    key ^= shr(key, 14)
+    key = (key + (key << 2) + (key << 4)) & _U64
+    key ^= shr(key, 28)
+    return (key + (key << 31)) & _U64
+
+
+def wang_hash_i64_int(value: int) -> int:
+    """``wang_hash_i64`` of one int64 value, in Python ints (a scalar
+    probe pays no NumPy array set-up)."""
+    return _wang_int(value, False)
+
+
+def wang_hash_i64_orc_int(value: int) -> int:
+    """``wang_hash_i64_orc`` of one int64 value, in Python ints."""
+    return _wang_int(value, True)
+
+
+def bit_positions(h: int, k: int, bit_count: int) -> list[int]:
+    """The ``k`` bit indices of one 64-bit hash ``h`` in a ``bit_count``-bit
+    filter: ``BloomFilter._bit_indices`` for one hash, in Python ints."""
+    h1 = h & 0xFFFFFFFF
+    h2 = (h >> 32) & 0xFFFFFFFF
+    out = []
+    for i in range(1, k + 1):
+        c = (h1 + i * h2) & 0xFFFFFFFF  # int32 wrap-around
+        if c >> 31:
+            c = ~(c - (1 << 32))
+        out.append(c % bit_count)
+    return out
+
+
+class BloomMatrix:
+    """The bloom filters of one column's row groups, tested for every
+    group in one step. Filters of one shape (k, words) sit in a single
+    ``(groups, words)`` uint64 array; a group without a filter always
+    maybe-contains. Filters of unequal shapes keep the per-group test."""
+
+    def __init__(self, filters: list["BloomFilter | None"]):
+        self.n_groups = len(filters)
+        shapes = {(f.k, f.bitset.size) for f in filters if f is not None}
+        self.filters = filters if len(shapes) > 1 else None
+        self.missing = np.array([f is None for f in filters], dtype=bool)
+        self.k, words = shapes.pop() if len(shapes) == 1 else (0, 0)
+        self.bits = np.zeros((self.n_groups, words), dtype=np.uint64)
+        if self.filters is None:
+            for g, f in enumerate(filters):
+                if f is not None:
+                    self.bits[g] = f.bitset
+
+    def may_contain(self, hashes: list[int]) -> np.ndarray:
+        """Per group: does any of ``hashes`` maybe-belong to its filter?"""
+        if self.filters is not None:
+            h = np.array(hashes, dtype=np.uint64)
+            return np.array([f is None or bool(f.test_hashes(h).any())
+                             for f in self.filters], dtype=bool)
+        if not self.bits.shape[1]:
+            return self.missing.copy()
+        bit_count = self.bits.shape[1] * 64
+        pos = np.array([bit_positions(h, self.k, bit_count) for h in hashes],
+                       dtype=np.int64)  # (hashes, k)
+        words = self.bits[:, pos // 64]  # (groups, hashes, k)
+        set_ = (words >> (pos % 64).astype(np.uint64)) & np.uint64(1)
+        return set_.astype(bool).all(axis=2).any(axis=1) | self.missing
+
+
 class BloomFilter:
     def __init__(self, num_hash_functions: int, bitset: np.ndarray):
         self.k = max(1, int(num_hash_functions))

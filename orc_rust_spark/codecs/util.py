@@ -324,3 +324,30 @@ def int32_offsets(lengths) -> "pa.Array":
     offsets = np.zeros(lengths.size + 1, dtype=np.int32)
     np.cumsum(lengths, out=offsets[1:])
     return pa.array(offsets, type=pa.int32())
+
+
+def split_binary(flat, lengths: np.ndarray) -> "pa.LargeBinaryArray":
+    """Arrow large_binary array over ``flat`` (any bytes-like object)
+    cut at per-value ``lengths``, shared by the chunk decoder and the
+    real-ORC reader. The values buffer wraps ``flat`` without a copy: the
+    chunk decoder passes zero-copy memoryviews of uncompressed streams."""
+    import pyarrow as pa
+
+    offsets = np.zeros(lengths.size + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    return pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), lengths.size,
+        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(flat)],
+    )
+
+
+def respace(dense: "pa.Array", not_null: np.ndarray | None) -> "pa.Array":
+    """Scatter a dense array into its null slots via a null-propagating
+    take; ``not_null`` None (no PRESENT stream) returns ``dense``."""
+    import pyarrow as pa
+
+    if not_null is None:
+        return dense
+    idx = np.zeros(not_null.shape[0], dtype=np.int64)
+    idx[not_null] = np.arange(int(not_null.sum()))
+    return dense.take(pa.array(idx, type=pa.int64(), mask=~not_null))

@@ -77,8 +77,10 @@ def _type_paths(types) -> list[tuple[int, str]]:
 def main_orc(argv: list[str]) -> int:
     """Inspect a real ORC file through this engine's metadata/stream
     parsers — info, per-stripe stream layout, per-row-group index stats,
-    and bloom probes."""
-    from .codecs import block as blockc
+    and bloom probes. The stripe commands read each stripe's footer and
+    index region through the reader's StripeIndex."""
+    import numpy as np
+
     from .sources import orc_file as of
 
     path = argv[1]
@@ -150,22 +152,14 @@ def main_orc(argv: list[str]) -> int:
                     print(f"  {label} {si}: min={mm[0]!r} max={mm[1]!r}")
         return 0
 
+    reader = of.OrcReader(meta)
     with fsio.open_input(path, fs) as fh:
         for si, st in enumerate(meta.stripes):
-            fh.seek(st.offset)
-            body = fh.read(st.index_length + st.data_length)
-            footer_raw = fh.read(st.footer_length)
-            streams, encodings, _tz = of._read_stripe_footer(
-                footer_raw, meta.compression)
-            by_col: dict[tuple, bytes] = {}
-            pos = 0
-            for col, kind, length in streams:
-                by_col[(col, kind)] = body[pos: pos + length]
-                pos += length
+            ix = reader.stripe(si, fh)
             if cmd == "layout":
                 print(f"stripe {si}: rows={st.number_of_rows:,} "
                       f"index={st.index_length:,}B data={st.data_length:,}B")
-                for col, kind, length in streams:
+                for col, kind, length in ix.stream_list:
                     kn = {0: "PRESENT", 1: "DATA", 2: "LENGTH",
                           3: "DICTIONARY_DATA", 4: "DICTIONARY_COUNT",
                           5: "SECONDARY", 6: "ROW_INDEX", 7: "BLOOM_FILTER",
@@ -181,12 +175,10 @@ def main_orc(argv: list[str]) -> int:
                 return 2
             cid = root.subtypes[root.field_names.index(col_name)]
             if cmd == "index":
-                raw = by_col.get((cid, of.S_ROW_INDEX))
-                if raw is None:
+                entries = ix.entries(cid)
+                if entries is None:
                     print(f"stripe {si}: no ROW_INDEX for {col_name}")
                     continue
-                entries = of._parse_row_index(
-                    blockc.decompress_stream(raw, meta.compression))
                 print(f"stripe {si}: {len(entries)} row groups")
                 for g, (positions, stats, nullinfo) in enumerate(entries):
                     mm = f"min={stats[0]} max={stats[1]}" if stats else "no stats"
@@ -199,30 +191,17 @@ def main_orc(argv: list[str]) -> int:
                 int_kinds = (of.K_BYTE, of.K_SHORT, of.K_INT, of.K_LONG)
                 value = _parse_probe(
                     value_raw, meta.types[cid].kind in int_kinds)
-                raw = by_col.get((cid, of.S_BLOOM_FILTER_UTF8))
-                if raw is None and isinstance(value, int):
-                    # the reader's charset-safety rule: legacy (pre-ORC-101)
-                    # blooms are trusted for integer probes only
-                    raw = by_col.get((cid, of.S_BLOOM_FILTER))
-                if raw is None:
+                kind = ix.bloom_kind(cid)
+                if kind is None or (kind == of.S_BLOOM_FILTER
+                                    and not isinstance(value, int)):
                     print(f"stripe {si}: no usable bloom filter for "
                           f"{col_name} (legacy blooms serve integer probes "
                           "only)")
                     continue
-                blooms = of._parse_bloom_index(
-                    blockc.decompress_stream(raw, meta.compression))
-                maybe = []
-                for g, bf in enumerate(blooms):
-                    if bf is None:
-                        maybe.append(g)
-                    elif isinstance(value, int) and of._bloom_might_contain_i64(
-                            bf, value):
-                        maybe.append(g)
-                    elif isinstance(value, str) and bf.might_contain_bytes(
-                            value.encode()):
-                        maybe.append(g)
-                print(f"stripe {si}: groups={len(blooms)} "
-                      f"maybe-contain={maybe}")
+                blooms = ix.blooms(cid)
+                maybe = of._bloom_keep(blooms, value, blooms.n_groups)
+                print(f"stripe {si}: groups={blooms.n_groups} "
+                      f"maybe-contain={np.flatnonzero(maybe).tolist()}")
     return 0
 
 

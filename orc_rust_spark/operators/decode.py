@@ -109,24 +109,6 @@ def _arrow_of(dt: T.DataType) -> pa.DataType:
     }[type(dt)]
 
 
-def _split_binary(flat: bytes, lengths: np.ndarray) -> pa.LargeBinaryArray:
-    offsets = np.zeros(lengths.size + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    return pa.LargeBinaryArray.from_buffers(
-        pa.large_binary(), lengths.size,
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(flat)],
-    )
-
-
-def _respace(dense: pa.Array, not_null: np.ndarray) -> pa.Array:
-    """Scatter a dense array into null slots via a null-propagating take."""
-    n = not_null.shape[0]
-    idx = np.zeros(n, dtype=np.int64)
-    idx[not_null] = np.arange(int(not_null.sum()))
-    mask = ~not_null
-    return dense.take(pa.array(idx, type=pa.int64(), mask=mask))
-
-
 def decode_chunk_arrays(
     stream_rows: list[dict], col_kinds: dict[str, str | T.DataType],
     rg_keep: list[int] | None = None,
@@ -184,6 +166,7 @@ def decode_chunk_arrays(
 
 
 from ..codecs.util import int32_offsets as _int32_offsets  # shared helper
+from ..codecs.util import respace as _respace, split_binary as _split_binary
 
 
 def _rg_of(metas: dict) -> dict | None:
@@ -273,19 +256,19 @@ def _decode_column(
         lengths = decode_rlev2(streams[ct.LENGTH], n_dense, signed=False)
         child = _decode_column(f"{name}.item", dt.elementType, by_col)
         dense = pa.ListArray.from_arrays(_int32_offsets(lengths), child)
-        return _respace(dense, not_null) if not_null is not None else dense
+        return _respace(dense, not_null)
     if isinstance(dt, T.StructType):
         children = [
             _decode_column(f"{name}.{f.name}", f.dataType, by_col) for f in dt.fields
         ]
         dense = pa.StructArray.from_arrays(children, [f.name for f in dt.fields])
-        return _respace(dense, not_null) if not_null is not None else dense
+        return _respace(dense, not_null)
     if isinstance(dt, T.MapType):
         lengths = decode_rlev2(streams[ct.LENGTH], n_dense, signed=False)
         keys = _decode_column(f"{name}.key", dt.keyType, by_col)
         items = _decode_column(f"{name}.value", dt.valueType, by_col)
         dense = pa.MapArray.from_arrays(_int32_offsets(lengths), keys, items)
-        return _respace(dense, not_null) if not_null is not None else dense
+        return _respace(dense, not_null)
 
     kind = _kind_of(dt)
     if isinstance(dt, T.DecimalType):
@@ -363,7 +346,7 @@ def _decode_column(
     else:
         raise ValueError(f"unknown codec {codec!r} for column {name!r}")
 
-    return _respace(dense, not_null) if not_null is not None else dense
+    return _respace(dense, not_null)
 
 
 def _rows_to_stream_dicts(pdf: pd.DataFrame) -> list[dict]:

@@ -333,7 +333,7 @@ def call_with_io_retries(fn, retries: int, backoff_s: float = 0.1):
             attempt += 1
 
 
-def latency_filesystem(root: str, latency_s: float):
+def latency_filesystem(root: str, latency_s: float, log_path: str | None = None):
     """A pyarrow filesystem over ``root`` whose every input open sleeps
     ``latency_s`` first — a deterministic local stand-in for object-store
     round-trip latency (S3 first-byte is commonly 10-100 ms). Picklable,
@@ -341,7 +341,8 @@ def latency_filesystem(root: str, latency_s: float):
     MEASURE that the in-task stripe readahead actually hides fetch
     latency (the reference's async-reader overlap claim,
     src/async_arrow_reader.rs:75-190, as a testable number instead of an
-    architecture note)."""
+    architecture note). ``log_path`` records every input open's
+    ``(pid, start, end)`` in that file (latencyfs)."""
     from .latencyfs import make_latency_filesystem
 
-    return make_latency_filesystem(root, latency_s)
+    return make_latency_filesystem(root, latency_s, log_path)

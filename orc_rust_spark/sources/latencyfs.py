@@ -21,16 +21,26 @@ could not resolve it worker-side.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pyarrow.fs as pafs
 
 
 class LatencyFileSystemHandler(pafs.FileSystemHandler):
-    """Delegates to SubTreeFileSystem(root) with a sleep on input opens."""
+    """Delegates to SubTreeFileSystem(root) with a sleep on input opens.
+    With ``log_path``, every input open appends one line
+    ``<pid> <start> <end>`` (``time.monotonic`` seconds, sleep included)
+    to that file, so a test can see which opens of one process overlapped."""
 
-    def __init__(self, root: str, latency_s: float):
+    def __init__(self, root: str, latency_s: float, log_path: str | None = None):
         self.root, self.latency = root, float(latency_s)
+        self.log_path = log_path
+
+    def _log_open(self, start: float) -> None:
+        if self.log_path is not None:
+            with open(self.log_path, "a") as fh:
+                fh.write(f"{os.getpid()} {start!r} {time.monotonic()!r}\n")
 
     def _base(self) -> pafs.SubTreeFileSystem:
         return pafs.SubTreeFileSystem(self.root, pafs.LocalFileSystem())
@@ -66,12 +76,18 @@ class LatencyFileSystemHandler(pafs.FileSystemHandler):
         self._base().copy_file(src, dest)
 
     def open_input_stream(self, path):
+        start = time.monotonic()
         time.sleep(self.latency)
-        return self._base().open_input_stream(path)
+        out = self._base().open_input_stream(path)
+        self._log_open(start)
+        return out
 
     def open_input_file(self, path):
+        start = time.monotonic()
         time.sleep(self.latency)
-        return self._base().open_input_file(path)
+        out = self._base().open_input_file(path)
+        self._log_open(start)
+        return out
 
     def open_output_stream(self, path, metadata=None):
         return self._base().open_output_stream(path)
@@ -83,8 +99,9 @@ class LatencyFileSystemHandler(pafs.FileSystemHandler):
         return path
 
 
-def make_latency_filesystem(root: str, latency_s: float) -> pafs.PyFileSystem:
-    return pafs.PyFileSystem(LatencyFileSystemHandler(root, latency_s))
+def make_latency_filesystem(root: str, latency_s: float,
+                            log_path: str | None = None) -> pafs.PyFileSystem:
+    return pafs.PyFileSystem(LatencyFileSystemHandler(root, latency_s, log_path))
 
 
 # per-process open counters for the flaky filesystem: the failure budget

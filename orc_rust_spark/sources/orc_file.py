@@ -21,9 +21,12 @@ public protobuf/ORC specs.
 
 from __future__ import annotations
 
+import bisect
 import math
 import os
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -40,6 +43,7 @@ from ..codecs.rle_v1 import decode_rlev1
 from ..codecs.rle_v2 import decode_rlev2
 from ..codecs.timestamp_split import combine_timestamp_ns, combine_timestamp_us
 from ..codecs.util import CorruptStream
+from ..codecs.util import respace as _respace, split_binary as _split_binary
 
 MAGIC = b"ORC"
 
@@ -739,23 +743,6 @@ def _int_decoder(enc_kind: int):
     return decode_rlev2
 
 
-def _split_binary(flat: bytes, lengths: np.ndarray) -> pa.Array:
-    offsets = np.zeros(lengths.size + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    return pa.LargeBinaryArray.from_buffers(
-        pa.large_binary(), lengths.size,
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(bytes(flat))],
-    )
-
-
-def _respace(dense: pa.Array, not_null: np.ndarray | None) -> pa.Array:
-    if not_null is None:
-        return dense
-    idx = np.zeros(not_null.shape[0], dtype=np.int64)
-    idx[not_null] = np.arange(int(not_null.sum()))
-    return dense.take(pa.array(idx, type=pa.int64(), mask=~not_null))
-
-
 ORC_EPOCH_UTC_SECONDS = 1_420_070_400  # 2015-01-01 00:00:00 UTC
 
 
@@ -1284,6 +1271,253 @@ def _stream_positions(layout, positions, comp: str) -> dict:
     return out
 
 
+_INDEX_KINDS = (S_ROW_INDEX, S_BLOOM_FILTER, S_BLOOM_FILTER_UTF8)
+_STRING_KINDS = (K_STRING, K_VARCHAR, K_CHAR, K_BINARY)
+_INT_KINDS = (K_BYTE, K_SHORT, K_INT, K_LONG)
+
+
+class StripeIndex:
+    """One stripe's parsed footer, stream offsets, row-index entries and
+    bloom filters: what a pruned read of the stripe needs before it
+    touches a data stream. This is the one constructor of that state.
+    ``decode_stripe_pruned`` builds one per call from the stripe's bytes
+    and drops it; ``OrcReader`` keeps one per stripe across point
+    lookups.
+
+    ``read_index(end)`` returns the stripe's bytes from its start through
+    at least ``end``, the end of its last ROW_INDEX / BLOOM stream (the
+    index region leads the stripe). Row-index entries, seek positions and
+    bloom matrices are parsed on first use, so a read pays only for the
+    columns it prunes on and decodes."""
+
+    def __init__(self, footer_raw: bytes, meta: OrcMeta, n_rows: int,
+                 read_index):
+        self.footer_raw = footer_raw
+        self.comp = meta.compression
+        self.types = meta.types
+        self.stride = int(meta.row_index_stride or 10_000)
+        self.n_groups = (n_rows + self.stride - 1) // self.stride
+        self.stream_list, self.encodings, self.tz = _read_stripe_footer(
+            footer_raw, self.comp)
+        #: (column, kind) -> (stripe offset, length); a repeated stream
+        #: keeps its last entry, as every stripe reader here does
+        self.offsets: dict[tuple[int, int], tuple[int, int]] = {}
+        pos = index_end = 0
+        for col, kind, length in self.stream_list:
+            self.offsets[(col, kind)] = (pos, length)
+            pos += length
+            if kind in _INDEX_KINDS:
+                index_end = pos
+        self.body_length = pos
+        self._index = read_index(index_end)
+        self._entries: dict[tuple[int, bool], list | None] = {}
+        self._blooms: dict[int, object] = {}
+        self._seek: dict[int, tuple | None] = {}
+        self._positions: dict[tuple[int, int], dict] = {}
+        self._starts: dict[tuple[int, int], list[int]] = {}
+
+    def _index_stream(self, cid: int, kind: int) -> bytes | None:
+        at = self.offsets.get((cid, kind))
+        if at is None:
+            return None
+        return self._index[at[0]: at[0] + at[1]]
+
+    def entries(self, cid: int, stats: bool = True) -> list | None:
+        """Column ``cid``'s row-index entries, None without a ROW_INDEX.
+        ``stats=False`` parses the positions alone (a column that is read
+        but does not prune) unless entries with statistics are at hand."""
+        for key in ((cid, True), (cid, False))[: 1 if stats else 2]:
+            if key in self._entries:
+                return self._entries[key]
+        raw = self._index_stream(cid, S_ROW_INDEX)
+        parsed = None
+        if raw is not None:
+            raw = blockc.decompress_stream(raw, self.comp)
+            parsed = (_parse_row_index(raw) if stats
+                      else _parse_row_index(raw, with_stats=False))
+        self._entries[(cid, stats)] = parsed
+        return parsed
+
+    def bloom_kind(self, cid: int) -> int | None:
+        """The bloom stream a probe of column ``cid`` may use. Pre-ORC-101
+        legacy blooms (BLOOM_FILTER) hashed strings in the WRITER's
+        default charset; only integer probes are charset-independent, so
+        the legacy stream is trusted for integer columns alone (a
+        mismatched string probe would false-negative and WRONGLY prune)."""
+        if (cid, S_BLOOM_FILTER_UTF8) in self.offsets:
+            return S_BLOOM_FILTER_UTF8
+        if (self.types[cid].kind in _INT_KINDS
+                and (cid, S_BLOOM_FILTER) in self.offsets):
+            return S_BLOOM_FILTER
+        return None
+
+    def blooms(self, cid: int):
+        """Column ``cid``'s bloom filters as one ``BloomMatrix``, or None."""
+        if cid not in self._blooms:
+            from ..codecs.bloom import BloomMatrix
+
+            kind = self.bloom_kind(cid)
+            self._blooms[cid] = None if kind is None else BloomMatrix(
+                _parse_bloom_index(blockc.decompress_stream(
+                    self._index_stream(cid, kind), self.comp)))
+        return self._blooms[cid]
+
+    def seek_entries(self, cid: int) -> list | None:
+        """Column ``cid``'s row-index entries of this stripe's groups, or
+        None when its groups cannot be seek-decoded: an unknown type kind,
+        a stream its position layout names is missing (a writer-suppressed
+        zero-length stream records no positions, so the per-group position
+        walk would misalign), a dictionary without its streams, or no
+        ROW_INDEX. Entries past the stripe's groups bound nothing: the last
+        group reads to its streams' end."""
+        if cid not in self._seek:
+            self._seek[cid] = self._seek_layout(cid)
+        hit = self._seek[cid]
+        return None if hit is None else hit[1]
+
+    def _seek_layout(self, cid: int) -> tuple | None:
+        enc = self.encodings[cid][0]
+        layout = _position_layout(self.types[cid], enc,
+                                  (cid, S_PRESENT) in self.offsets)
+        if layout is None or any((cid, kind) not in self.offsets
+                                 for kind, _ in layout):
+            return None
+        if enc in (E_DICTIONARY, E_DICTIONARY_V2) and not (
+                (cid, S_LENGTH) in self.offsets
+                and (cid, S_DICTIONARY_DATA) in self.offsets):
+            return None
+        parsed = self.entries(cid, stats=False)
+        return None if parsed is None else (layout, parsed[: self.n_groups])
+
+    def positions(self, cid: int, g: int) -> dict:
+        """{stream kind: (block offset, offset in the block, extras)} where
+        group ``g`` of column ``cid`` starts (seek_entries first)."""
+        hit = self._positions.get((cid, g))
+        if hit is None:
+            layout, entries = self._seek[cid]
+            hit = self._positions[(cid, g)] = _stream_positions(
+                layout, entries[g][0], self.comp)
+        return hit
+
+    def group_stop(self, cid: int, kind: int, g: int) -> tuple[int, int] | None:
+        """Where group ``g``'s bytes of a stream end, as _group_bytes'
+        ``stop``: the next group's position, or None (the stream end) for
+        the last group and where the next group starts inside a run that
+        this group also reads."""
+        if g + 1 >= len(self._seek[cid][1]):
+            return None
+        after = self.positions(cid, g + 1)[kind]
+        return None if any(after[2]) else after[:2]
+
+    def group_range(self, cid: int, kind: int, g: int) -> tuple[int, int]:
+        """The stream bytes [lo, hi) that _group_bytes reads for group
+        ``g``. A next group starting inside a compression block reads that
+        block whole; it ends at the next block start the index records, or
+        at the stream end."""
+        length = self.offsets[(cid, kind)][1]
+        lo = min(self.positions(cid, g)[kind][0], length)
+        stop = self.group_stop(cid, kind, g)
+        if stop is None:
+            return lo, length
+        if self.comp == "none" or not stop[1]:
+            return lo, max(lo, min(stop[0] + stop[1], length))
+        key = (cid, kind)
+        starts = self._starts.get(key)
+        if starts is None:
+            starts = self._starts[key] = sorted(
+                {self.positions(cid, h)[kind][0]
+                 for h in range(len(self._seek[cid][1]))})
+        i = bisect.bisect_right(starts, stop[0])
+        return lo, max(lo, min(starts[i], length) if i < len(starts) else length)
+
+    def ranges(self, top_ids: list[int], groups) -> dict:
+        """{(column, kind): [(lo, hi)]}: the stream bytes a decode of
+        ``groups`` of the columns ``top_ids`` (subtrees included) reads.
+        A dictionary is read whole. Every column passed seek_entries."""
+        want: dict[tuple[int, int], list] = {}
+        for top in top_ids:
+            for cid in _subtree_ids(self.types, top):
+                for kind, _ in self._seek[cid][0]:
+                    want[(cid, kind)] = [self.group_range(cid, kind, g)
+                                         for g in groups]
+                if (self.types[cid].kind in _STRING_KINDS
+                        and self.encodings[cid][0] in (E_DICTIONARY,
+                                                       E_DICTIONARY_V2)):
+                    for kind in (S_LENGTH, S_DICTIONARY_DATA):
+                        want[(cid, kind)] = [(0, self.offsets[(cid, kind)][1])]
+        return want
+
+
+class _StreamBytes:
+    """The read ranges of one stream, sliced in stream offsets: ``len`` is
+    the stream's length, and a slice must lie inside one read range (a
+    slice elsewhere means a block header or position points outside its
+    group: CorruptStream)."""
+
+    __slots__ = ("length", "parts")
+
+    def __init__(self, length: int):
+        self.length = length
+        self.parts: list[tuple[int, int, bytes, int]] = []
+
+    def __len__(self) -> int:
+        return self.length
+
+    def __getitem__(self, s: slice) -> bytes:
+        a = 0 if s.start is None else min(s.start, self.length)
+        b = self.length if s.stop is None else min(s.stop, self.length)
+        if b <= a:
+            return b""
+        for lo, hi, data, shift in self.parts:
+            if lo <= a and b <= hi:
+                return data[a + shift: b + shift]
+        raise CorruptStream(f"stream bytes [{a}, {b}) lie outside the ranges read")
+
+
+def _fetch_streams(ix: StripeIndex, want: dict, fetch) -> dict:
+    """Read the stream ranges ``want`` (StripeIndex.ranges) through
+    ``fetch`` -> {(column, kind): _StreamBytes}. Ranges that touch or
+    overlap are read as one span; ``fetch(spans)`` takes stripe-offset
+    [a, b) spans and returns one (bytes, stripe offset of its first byte)
+    per span."""
+    reqs = sorted((ix.offsets[key][0] + lo, ix.offsets[key][0] + hi, key)
+                  for key, rs in want.items() for lo, hi in rs if hi > lo)
+    spans: list[list[int]] = []
+    for a, b, _ in reqs:
+        if spans and a <= spans[-1][1]:
+            spans[-1][1] = max(spans[-1][1], b)
+        else:
+            spans.append([a, b])
+    got = fetch([(a, b) for a, b in spans])
+    out = {key: _StreamBytes(ix.offsets[key][1]) for key in want}
+    i = 0
+    for a, b, key in reqs:
+        while b > spans[i][1]:
+            i += 1
+        data, at = got[i]
+        base = ix.offsets[key][0]
+        out[key].parts.append((a - base, b - base, data, base - at))
+    return out
+
+
+def _span_reader(fh, offset: int):
+    """``fetch`` for _fetch_streams over an open file whose stripe starts
+    at ``offset``: one seek and read per span."""
+    def fetch(spans):
+        out = []
+        for a, b in spans:
+            fh.seek(offset + a)
+            data = fh.read(b - a)
+            if len(data) != b - a:
+                raise CorruptStream(
+                    f"short read: {len(data)} of {b - a} bytes at stripe "
+                    f"offset {a}")
+            out.append((data, a))
+        return out
+
+    return fetch
+
+
 def _rle_values(rle, buf, skip: int, n: int, signed: bool,
                 sel: np.ndarray | None = None) -> np.ndarray:
     """The ``n`` values after the first ``skip`` of an integer RLE stream,
@@ -1306,9 +1540,8 @@ def _rle_values(rle, buf, skip: int, n: int, signed: bool,
 
 
 def _decode_column_group(
-    col_id: int, t: OrcType, streams: dict, encodings, comp: str, tz: str,
-    entries_by_col: dict, g: int, n_g: int, dict_cache: dict, name: str,
-    types: list[OrcType] | None = None, block_cache: dict | None = None,
+    ix: StripeIndex, streams: dict, col_id: int, g: int, n_g: int,
+    name: str, dict_cache: dict, block_cache: dict | None = None,
     rows: np.ndarray | None = None,
 ) -> pa.Array:
     """Decode ONE row group of a column (``n_g`` = this column's value
@@ -1333,36 +1566,27 @@ def _decode_column_group(
     ``block_cache`` keeps the decompressed blocks of one stripe decode:
     groups whose positions share a block — continuous streams whose block
     offset stays 0, liborc's unaligned blocks — decompress it once."""
+    t = ix.types[col_id]
     if rows is not None and t.kind in (K_STRUCT, K_LIST, K_MAP, K_UNION):
-        whole = _decode_column_group(col_id, t, streams, encodings, comp, tz,
-                                     entries_by_col, g, n_g, dict_cache, name,
-                                     types, block_cache)
+        whole = _decode_column_group(ix, streams, col_id, g, n_g, name,
+                                     dict_cache, block_cache)
         return whole.take(pa.array(rows, type=pa.int64()))
     _trace_decode(name)
     if block_cache is None:
         block_cache = {}
-    enc_kind, dict_size = encodings[col_id]
+    comp = ix.comp
+    enc_kind, dict_size = ix.encodings[col_id]
     rle = _int_decoder(enc_kind)
-    has_present = (col_id, S_PRESENT) in streams
-    layout = _position_layout(t, enc_kind, has_present)
-    entries = entries_by_col[col_id]
-    here = _stream_positions(layout, entries[g][0], comp)
-    after = (_stream_positions(layout, entries[g + 1][0], comp)
-             if g + 1 < len(entries) else None)
+    has_present = (col_id, S_PRESENT) in ix.offsets
+    here = ix.positions(col_id, g)
     exs = {kind: at[2] for kind, at in here.items()}
 
     def read(kind: int, limit: int | None = None) -> bytes:
         """This group's bytes of stream ``kind`` (the first ``limit``
         bytes when given)."""
         chunk, off, _ = here[kind]
-        if limit is not None:
-            stop = (chunk, off + limit)
-        elif after is None or any(after[kind][2]):
-            # the last group, or the next group starts inside a run that
-            # this group also reads: the stream end
-            stop = None
-        else:
-            stop = after[kind][:2]
+        stop = ((chunk, off + limit) if limit is not None
+                else ix.group_stop(col_id, kind, g))
         return _group_bytes(streams[(col_id, kind)], comp, (chunk, off), stop,
                             block_cache, (col_id, kind))
 
@@ -1393,9 +1617,8 @@ def _decode_column_group(
     k = t.kind
     if k == K_STRUCT:
         children = [
-            _decode_column_group(cid, types[cid], streams, encodings, comp, tz,
-                                 entries_by_col, g, n_dense, dict_cache,
-                                 f"{name}.{fname}", types, block_cache)
+            _decode_column_group(ix, streams, cid, g, n_dense,
+                                 f"{name}.{fname}", dict_cache, block_cache)
             for cid, fname in zip(t.subtypes, t.field_names)
         ]
         dense = pa.StructArray.from_arrays(children, t.field_names)
@@ -1411,10 +1634,8 @@ def _decode_column_group(
         for i, cid in enumerate(t.subtypes):
             is_i = tags == i
             n_child = int(is_i.sum())
-            child = _decode_column_group(cid, types[cid], streams, encodings,
-                                         comp, tz, entries_by_col, g, n_child,
-                                         dict_cache, f"{name}.{i}", types,
-                                         block_cache)
+            child = _decode_column_group(ix, streams, cid, g, n_child,
+                                         f"{name}.{i}", dict_cache, block_cache)
             idx = np.zeros(n_dense, dtype=np.int64)
             idx[is_i] = np.arange(n_child)
             fields.append(child.take(pa.array(idx, type=pa.int64(), mask=~is_i)))
@@ -1426,21 +1647,15 @@ def _decode_column_group(
         n_child = int(lengths.sum())
         if k == K_LIST:
             cid = t.subtypes[0]
-            child = _decode_column_group(cid, types[cid], streams, encodings,
-                                         comp, tz, entries_by_col, g, n_child,
-                                         dict_cache, f"{name}.item", types,
-                                         block_cache)
+            child = _decode_column_group(ix, streams, cid, g, n_child,
+                                         f"{name}.item", dict_cache, block_cache)
             dense = pa.ListArray.from_arrays(_int32_offsets(lengths), child)
         else:
             kid, vid = t.subtypes[0], t.subtypes[1]
-            keys = _decode_column_group(kid, types[kid], streams, encodings,
-                                        comp, tz, entries_by_col, g, n_child,
-                                        dict_cache, f"{name}.key", types,
-                                        block_cache)
-            items = _decode_column_group(vid, types[vid], streams, encodings,
-                                         comp, tz, entries_by_col, g, n_child,
-                                         dict_cache, f"{name}.value", types,
-                                         block_cache)
+            keys = _decode_column_group(ix, streams, kid, g, n_child,
+                                        f"{name}.key", dict_cache, block_cache)
+            items = _decode_column_group(ix, streams, vid, g, n_child,
+                                         f"{name}.value", dict_cache, block_cache)
             dense = pa.MapArray.from_arrays(_int32_offsets(lengths), keys, items)
         return _respace(dense, not_null)
     if k in (K_SHORT, K_INT, K_LONG, K_DATE):
@@ -1467,7 +1682,7 @@ def _decode_column_group(
     elif k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
         secs = ints(S_DATA, True)
         nanos = ints(S_SECONDARY, False)
-        dense = pa.array(_ts_us(secs, nanos, tz, k), type=pa.int64()).cast(pa.timestamp("us"))
+        dense = pa.array(_ts_us(secs, nanos, ix.tz, k), type=pa.int64()).cast(pa.timestamp("us"))
     elif k == K_DECIMAL:
         from ..codecs.decimal_codec import (
             decode_varints_exact,
@@ -1508,10 +1723,11 @@ def _decode_column_group(
         if enc_kind in (E_DICTIONARY, E_DICTIONARY_V2):
             if col_id not in dict_cache:
                 dict_lens = rle(
-                    blockc.decompress_stream(streams[(col_id, S_LENGTH)], comp),
+                    blockc.decompress_stream(streams[(col_id, S_LENGTH)][:], comp),
                     dict_size, signed=False)
                 dict_cache[col_id] = _split_binary(
-                    blockc.decompress_stream(streams[(col_id, S_DICTIONARY_DATA)], comp),
+                    blockc.decompress_stream(
+                        streams[(col_id, S_DICTIONARY_DATA)][:], comp),
                     dict_lens)
             dense = dict_cache[col_id].take(
                 pa.array(ints(S_DATA, False), type=pa.int64()))
@@ -1534,9 +1750,9 @@ def _bloom_probe_ok(col_kind: int, eq) -> bool:
     matches what the writer fed it (i64 for integer columns, utf8 bytes
     for string columns) — a mismatched probe false-negatives and would
     WRONGLY prune (three-valued safety)."""
-    if col_kind in (K_BYTE, K_SHORT, K_INT, K_LONG):
+    if col_kind in _INT_KINDS:
         return isinstance(eq, int)
-    if col_kind in (K_STRING, K_VARCHAR, K_CHAR, K_BINARY):
+    if col_kind in _STRING_KINDS:
         return isinstance(eq, (str, bytes))
     return False
 
@@ -1605,8 +1821,35 @@ def _group_may_match(stats, bf, col_kind: int, lo, hi, eq) -> bool:
     return ok
 
 
+def _probe_hashes(value) -> list[int] | None:
+    """The bloom hashes of one probe value, hashed once for all groups:
+    an int64 under both integer hashes (``_bloom_might_contain_i64``), a
+    str or bytes value under Murmur3. None for an int outside int64,
+    which no stored value equals: its groups keep (three-valued)."""
+    from ..codecs.bloom import murmur3_64, wang_hash_i64_int, wang_hash_i64_orc_int
+
+    if isinstance(value, int):
+        if not -(1 << 63) <= value < 1 << 63:
+            return None
+        return [wang_hash_i64_int(value), wang_hash_i64_orc_int(value)]
+    data = value.encode() if isinstance(value, str) else value
+    return [int(murmur3_64(data, np.array([0, len(data)], dtype=np.int64))[0])]
+
+
+def _bloom_keep(blooms, value, n: int) -> np.ndarray:
+    """Per group of the first ``n``: may ``value`` be in its bloom filter?
+    Groups past the filters keep."""
+    hashes = _probe_hashes(value)
+    if hashes is None:
+        return np.ones(n, dtype=bool)
+    may = blooms.may_contain(hashes)[:n]
+    if may.size < n:
+        may = np.concatenate([may, np.ones(n - may.size, dtype=bool)])
+    return may
+
+
 def _rg_keep_for_stripe(
-    entries: list, blooms: list | None, n_rows: int, stride: int,
+    entries: list, blooms, n_rows: int, stride: int,
     eq=None, lo=None, hi=None, col_kind: int = -1,
     not_null: bool | None = None,
 ) -> list[int]:
@@ -1614,30 +1857,41 @@ def _rg_keep_for_stripe(
     reference's evaluate_row_group_predicate (src/row_group_filter.rs:54-205,
     bloom :370-408). Three-valued: missing/mismatched stats keep. ``eq``
     may be a list/set of values (an IN-list probe): a group is kept if ANY
-    value may match. ``not_null`` prunes on the null statistics:
-    True (an IS NOT NULL probe) drops groups with zero non-null values,
-    False (IS NULL) drops groups whose stats say hasNull is false."""
+    value may match. ``blooms`` (a ``BloomMatrix`` or None) tests every
+    group's filter for one value in one step; the keep set equals that of
+    ``_group_may_match`` per group. ``not_null`` prunes on the null
+    statistics: True (an IS NOT NULL probe) drops groups with zero non-null
+    values, False (IS NULL) drops groups whose stats say hasNull is false."""
     eqs = None
     if eq is not None:
         eqs = (sorted(eq) if isinstance(eq, (set, frozenset))
                else list(eq) if isinstance(eq, (list, tuple)) else [eq])
     n_groups = (n_rows + stride - 1) // stride
+    n = min(n_groups, len(entries))
+
+    def stats_ok(lo_, hi_) -> np.ndarray:
+        return np.fromiter((_group_may_match(entries[g][1], None, col_kind,
+                                             lo_, hi_, None) for g in range(n)),
+                           dtype=bool, count=n)
+
+    if eqs is not None:
+        ok = np.zeros(n, dtype=bool)
+        for v in eqs:
+            ok_v = stats_ok(v, v)
+            if blooms is not None and ok_v.any() and _bloom_probe_ok(col_kind, v):
+                ok_v &= _bloom_keep(blooms, v, n)
+            ok |= ok_v
+    else:
+        ok = stats_ok(lo, hi)
     keep = []
-    for g in range(min(n_groups, len(entries))):
-        stats = entries[g][1]
-        bf = blooms[g] if (blooms and g < len(blooms)) else None
-        if eqs is not None:
-            ok = any(_group_may_match(stats, bf, col_kind, v, v, v) for v in eqs)
-        else:
-            ok = _group_may_match(stats, None, col_kind, lo, hi, None)
-        if ok and not_null is not None and len(entries[g]) > 2:
+    for g in np.flatnonzero(ok).tolist():
+        if not_null is not None and len(entries[g]) > 2:
             n_values, has_null = entries[g][2]
             if not_null is True and n_values == 0:
-                ok = False  # every value in the group is null
-            elif not_null is False and has_null is False:
-                ok = False  # stats guarantee the group has no nulls
-        if ok:
-            keep.append(g)
+                continue  # every value in the group is null
+            if not_null is False and has_null is False:
+                continue  # stats guarantee the group has no nulls
+        keep.append(g)
     keep.extend(range(len(entries), n_groups))  # entries missing: keep
     return keep
 
@@ -1715,11 +1969,18 @@ def decode_stripe_pruned(
     predicates: list[dict] | None = None,
     row_ranges: list[tuple[int, int]] | None = None,
     residual: bool = False,
+    index: "StripeIndex | None" = None,
+    fetch=None,
 ) -> tuple[pa.Table, int, int]:
     """Corruption-guarded entry for the predicate/seek decode path — same
     ``ValueError("corrupt ORC stripe ...")`` contract as decode_stripe
     (code-review r7: this path previously leaked raw IndexErrors).
-    Semantics documented on the impl below."""
+    Semantics documented on the impl below.
+
+    ``index`` is the stripe's prebuilt StripeIndex (an OrcReader's); with
+    it, ``footer_raw`` is unused and ``fetch`` may read the stream ranges
+    in place of ``buf`` (see _fetch_streams). Without it, the index is
+    built from ``buf`` and ``footer_raw`` and dropped afterwards."""
     if residual:
         if (column is None or predicates is not None
                 or isinstance(eq, (list, tuple, set, frozenset))):
@@ -1737,7 +1998,7 @@ def decode_stripe_pruned(
         _decode_stripe_pruned_impl, buf, footer_raw, meta, n_rows,
         column=column, eq=eq, lo=lo, hi=hi, columns=columns,
         not_null=not_null, predicates=predicates, row_ranges=row_ranges,
-        residual=residual)
+        residual=residual, index=index, fetch=fetch)
 
 
 def _eq_mask(arr: pa.Array, value) -> np.ndarray:
@@ -1755,13 +2016,15 @@ def _eq_mask(arr: pa.Array, value) -> np.ndarray:
 
 
 def _decode_stripe_pruned_impl(
-    buf: bytes, footer_raw: bytes, meta: OrcMeta, n_rows: int,
+    buf: bytes | None, footer_raw: bytes | None, meta: OrcMeta, n_rows: int,
     column: str | None = None, eq=None, lo=None, hi=None,
     columns: list[str] | None = None,
     not_null: bool | None = None,
     predicates: list[dict] | None = None,
     row_ranges: list[tuple[int, int]] | None = None,
     residual: bool = False,
+    index: StripeIndex | None = None,
+    fetch=None,
 ) -> tuple[pa.Table, int, int]:
     """Decode only the row groups of this stripe whose ROW_INDEX stats /
     bloom filter may satisfy the predicate on ``column`` — and only the
@@ -1794,6 +2057,12 @@ def _decode_stripe_pruned_impl(
     matching rows; ``groups_decoded`` still counts the groups kept by
     pruning.
 
+    The seek path reads only the stream byte ranges it decodes
+    (StripeIndex.ranges through ``fetch``; slices of ``buf`` when no
+    ``fetch`` is given): the kept groups of every projected column, or
+    under ``residual`` the key column's kept groups and then the other
+    columns' groups that hold a match.
+
     -> (table of kept groups' rows, groups_decoded, groups_total).
     Without ``residual`` the caller applies the residual filter. Falls
     back to full decode (all groups "decoded") only when no predicate
@@ -1801,15 +2070,13 @@ def _decode_stripe_pruned_impl(
     projected column's type kind is unknown (every known kind, nested and
     union included, seek-decodes), always respecting the projection.
     """
-    stream_list, encodings, tz = _read_stripe_footer(footer_raw, meta.compression)
-    streams: dict[tuple[int, int], bytes] = {}
-    pos = 0
-    for col, kind, length in stream_list:
-        streams[(col, kind)] = buf[pos: pos + length]
-        pos += length
+    ix = index if index is not None else StripeIndex(
+        footer_raw, meta, n_rows, lambda end: buf)
+    if fetch is None:
+        def fetch(spans):
+            return [(buf, 0)] * len(spans)
     root = meta.types[0]
-    stride = int(meta.row_index_stride or 10_000)
-    n_groups = (n_rows + stride - 1) // stride
+    stride, n_groups = ix.stride, ix.n_groups
     proj = [n for n in root.field_names if columns is None or n in columns]
 
     def _slice_exact(tbl: pa.Table, groups) -> pa.Table:
@@ -1822,8 +2089,9 @@ def _decode_stripe_pruned_impl(
             _range_mask(groups, stride, n_rows, row_ranges)))
 
     def full():
+        body = fetch([(0, ix.body_length)])[0][0]
         tbl = _slice_exact(
-            decode_stripe(buf, footer_raw, meta, n_rows, columns=columns),
+            decode_stripe(body, ix.footer_raw, meta, n_rows, columns=columns),
             range(n_groups))
         if residual:
             tbl = tbl.filter(_eq_mask(tbl.column(column).combine_chunks(), eq))
@@ -1833,48 +2101,24 @@ def _decode_stripe_pruned_impl(
         predicates = ([dict(column=column, eq=eq, lo=lo, hi=hi,
                             not_null=not_null)] if column is not None else [])
     # (stride is always >= 1: a legacy stride-0 footer maps to the 10k
-    # default above, so no stride-0 branch exists here)
+    # default, so no stride-0 branch exists here)
 
-    parsed_ri: dict[int, list] = {}  # decompress+parse each index ONCE
-    # (a predicate column that is also projected reused to pay twice —
-    # code-review r6). Predicate columns parse first, with statistics;
-    # the columns that are only read parse their positions alone.
-
-    def _ri_entries(cid: int, stats: bool = True):
-        if cid not in parsed_ri:
-            raw = streams.get((cid, S_ROW_INDEX))
-            if raw is None:
-                parsed_ri[cid] = None
-            else:
-                raw = blockc.decompress_stream(raw, meta.compression)
-                parsed_ri[cid] = (_parse_row_index(raw) if stats
-                                  else _parse_row_index(raw, with_stats=False))
-        return parsed_ri[cid]
-
+    # predicate columns parse their row index with statistics, and their
+    # blooms only for an equality probe; the index parses each once
     keep_sets: list[set[int]] = []
     for p in predicates:
         try:
             col_id = root.subtypes[root.field_names.index(p["column"])]
         except ValueError:
             continue
-        entries = _ri_entries(col_id)
+        entries = ix.entries(col_id)
         if entries is None:
             continue
-        col_kind = meta.types[col_id].kind
-        bl_raw = streams.get((col_id, S_BLOOM_FILTER_UTF8))
-        if bl_raw is None and col_kind in (K_BYTE, K_SHORT, K_INT, K_LONG):
-            # pre-ORC-101 legacy blooms hashed strings in the WRITER's
-            # default charset — only integer probes are charset-
-            # independent, so the deprecated stream is trusted for
-            # integer columns alone (a mismatched string probe would
-            # false-negative and WRONGLY prune)
-            bl_raw = streams.get((col_id, S_BLOOM_FILTER))
-        blooms = (_parse_bloom_index(
-            blockc.decompress_stream(bl_raw, meta.compression))
-            if bl_raw is not None else None)
+        p_eq = p.get("eq")
         keep_sets.append(set(_rg_keep_for_stripe(
-            entries, blooms, n_rows, stride, eq=p.get("eq"), lo=p.get("lo"),
-            hi=p.get("hi"), col_kind=col_kind, not_null=p.get("not_null"))))
+            entries, ix.blooms(col_id) if p_eq is not None else None,
+            n_rows, stride, eq=p_eq, lo=p.get("lo"), hi=p.get("hi"),
+            col_kind=meta.types[col_id].kind, not_null=p.get("not_null"))))
     if row_ranges is not None:
         keep_sets.append({
             g for g in range(n_groups)
@@ -1897,46 +2141,27 @@ def _decode_stripe_pruned_impl(
     # index is missing/truncated force the full-decode fallback
     proj_ids = [root.subtypes[root.field_names.index(n)] for n in proj]
     need = max(keep) + 1
-    per_col_entries: dict[int, list] = {}
     for top in proj_ids:
         for cid in _subtree_ids(meta.types, top):
-            t = meta.types[cid]
-            layout = _position_layout(t, encodings[cid][0],
-                                      (cid, S_PRESENT) in streams)
-            if layout is None:
-                return full()
-            # a writer-suppressed zero-length stream records no positions,
-            # so the per-group position walk would misalign — full decode
-            # treats absent streams as empty instead (code-review r6)
-            if any((cid, kind) not in streams for kind, _ in layout):
-                return full()
-            if encodings[cid][0] in (E_DICTIONARY, E_DICTIONARY_V2) and not (
-                (cid, S_LENGTH) in streams
-                and (cid, S_DICTIONARY_DATA) in streams
-            ):
-                return full()
-            parsed = _ri_entries(cid, stats=False)
-            if parsed is None:
-                return full()
-            if len(parsed) < need:  # truncated/short index: cannot seek
-                return full()
-            # entries past the stripe's groups bound nothing: the last
-            # group reads to its streams' end
-            per_col_entries[cid] = parsed[:n_groups]
+            entries = ix.seek_entries(cid)
+            if entries is None or len(entries) < need:
+                return full()  # no index, or a truncated/short one
 
     dict_cache: dict[int, pa.Array] = {}
     block_cache: dict[tuple, tuple] = {}
+    streams: dict[tuple[int, int], _StreamBytes] = {}
 
     def group(cid: int, name: str, g: int, rows=None) -> pa.Array:
         return _decode_column_group(
-            cid, meta.types[cid], streams, encodings, meta.compression, tz,
-            per_col_entries, g, min(stride, n_rows - g * stride), dict_cache,
-            name, meta.types, block_cache, rows)
+            ix, streams, cid, g, min(stride, n_rows - g * stride), name,
+            dict_cache, block_cache, rows)
 
     if residual:
         # late materialization: the probed column first, then every other
-        # projected column at the matching rows of each kept group only
+        # projected column at the matching rows of each kept group only;
+        # each phase reads just the byte ranges it decodes
         key_id = proj_ids[proj.index(column)]
+        streams.update(_fetch_streams(ix, ix.ranges([key_id], keep), fetch))
         hits: dict[int, np.ndarray] = {}
         key_parts = []
         for g in keep:
@@ -1950,10 +2175,13 @@ def _decode_stripe_pruned_impl(
                 key_parts.append(keys.take(pa.array(rows, type=pa.int64())))
         if not hits:
             return _empty_table(meta, columns), len(keep), n_groups
+        others = [cid for cid, name in zip(proj_ids, proj) if name != column]
+        streams.update(_fetch_streams(ix, ix.ranges(others, list(hits)), fetch))
         cols = {name: key_parts if name == column
                 else [group(cid, name, g, rows) for g, rows in hits.items()]
                 for cid, name in zip(proj_ids, proj)}
     else:
+        streams.update(_fetch_streams(ix, ix.ranges(proj_ids, keep), fetch))
         cols = {name: [group(cid, name, g) for g in keep]
                 for cid, name in zip(proj_ids, proj)}
     if not proj:
@@ -2929,6 +3157,7 @@ class OrcWriter:
                     "non-UTC writer_timezone")
         if filesystem is None:
             filesystem, path = fsio.resolve(path)
+        self._path, self._fs = path, filesystem
         self._fh = fsio.open_output(path, filesystem)
         self._fh.write(MAGIC)
         self._pos = len(MAGIC)
@@ -3146,6 +3375,7 @@ class OrcWriter:
                         self.compression)
         self._fh.close()
         self._closed = True
+        forget_reader(self._path, self._fs)
 
 
 def write_orc(table: pa.Table, path: str, compression: str = "zlib",
@@ -3445,6 +3675,87 @@ def orc_scan(spark, path: str, schema=None, predicate=None,
     return sdf.mapInArrow(scan, schema=schema)
 
 
+class OrcReader:
+    """An ORC file opened once: its parsed tail (``meta``) and, per
+    stripe, a StripeIndex built on first use from the stripe footer and
+    index region, read through the caller's handle. Point lookups share
+    one reader per file through ``_open_reader``; nothing here holds a
+    file handle or decoded data."""
+
+    def __init__(self, meta: OrcMeta):
+        self.meta = meta
+        self._stripes: dict[int, StripeIndex] = {}
+
+    def stripe(self, i: int, fh) -> StripeIndex:
+        """Stripe ``i``'s index, reading its footer and index region
+        through ``fh`` the first time. A stripe that fails to parse is
+        not kept."""
+        ix = self._stripes.get(i)
+        if ix is None:
+            st = self.meta.stripes[i]
+            fh.seek(st.offset + st.index_length + st.data_length)
+            footer_raw = fh.read(st.footer_length)
+
+            def read_index(end: int) -> bytes:
+                fh.seek(st.offset)
+                return fh.read(end)
+
+            ix = self._stripes[i] = StripeIndex(
+                footer_raw, self.meta, st.number_of_rows, read_index)
+        return ix
+
+
+#: OrcReaders of the files most recently looked up, keyed by _reader_key
+READER_CACHE_FILES = 8
+_READERS: OrderedDict = OrderedDict()
+_READERS_LOCK = threading.Lock()
+
+
+def _reader_key(path: str, fs, fh) -> tuple | None:
+    """The identity of the file ``fh`` has open: a rewrite in place (new
+    size, mtime or ctime) or a rename-over (new inode) gives a new key.
+    On a pyarrow filesystem: (path, size, mtime), or None (not cached)
+    when the filesystem reports no mtime."""
+    if fs is None:
+        st = os.fstat(fh.fileno())
+        return (None, os.path.abspath(path), st.st_dev, st.st_ino,
+                st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+    info = fs.get_file_info(path)
+    if info.mtime_ns is None:
+        return None
+    return (fs.type_name, path, info.size, info.mtime_ns)
+
+
+def _open_reader(path: str, fs, fh) -> OrcReader:
+    """The cached OrcReader of the file open in ``fh``, parsing its tail
+    (read_metadata) on a miss. A file whose tail fails to parse raises
+    and is not cached."""
+    key = _reader_key(path, fs, fh)
+    if key is not None:
+        with _READERS_LOCK:
+            reader = _READERS.get(key)
+            if reader is not None:
+                _READERS.move_to_end(key)
+                return reader
+    reader = OrcReader(read_metadata(path, filesystem=fs, handle=fh))
+    if key is not None:
+        with _READERS_LOCK:
+            _READERS[key] = reader
+            while len(_READERS) > READER_CACHE_FILES:
+                _READERS.popitem(last=False)
+    return reader
+
+
+def forget_reader(path: str, fs=None) -> None:
+    """Drop the cached readers of ``path`` (an fs-native path), as a
+    writer does when it replaces the file. The stat key already misses
+    on a rewritten file; this frees the stale entry at once."""
+    name = os.path.abspath(path) if fs is None else path
+    with _READERS_LOCK:
+        for key in [k for k in _READERS if k[1] == name]:
+            del _READERS[key]
+
+
 def orc_point_lookup(path: str, column: str, value,
                      filesystem=None) -> tuple[pa.Table, int, int]:
     """Local point lookup over a real ORC file with stripe- AND row-group-
@@ -3454,14 +3765,29 @@ def orc_point_lookup(path: str, column: str, value,
     bloom pruning, tests/integration/main.rs:374-488); ``groups_decoded``
     counts the groups that pruning kept.
 
-    The file tail and the kept stripes are read through one handle. Each
-    kept stripe is read in two phases on one code path
-    (decode_stripe_pruned with ``residual=True``): the kept groups'
-    ``column`` alone is decoded and compared with ``value`` (a probe whose
-    type cannot be compared with the column matches nothing), then the
-    other columns are decoded at the matching rows only. A stream is
-    decompressed only over the blocks that hold the kept groups
-    (_group_bytes)."""
+    The file is opened once per process, not once per call: an OrcReader
+    cached per file (the last ``READER_CACHE_FILES`` files, behind a lock)
+    holds the parsed tail and, per stripe, a StripeIndex with the parsed
+    stripe footer, the stream offsets, each column's row-index entries
+    (parsed on first use) and each bloom column as one (groups, words)
+    array. The cache key is (path, st_dev, st_ino, st_size, st_mtime_ns,
+    st_ctime_ns) from an fstat of this call's handle, so a file rewritten
+    in place or renamed over is a new key; on a pyarrow filesystem it is
+    (path, size, mtime) from get_file_info, and a file without an mtime
+    is not cached. A file that fails to parse is never cached, and
+    OrcWriter / orc_merge drop their output path's entry. No decoded data
+    is cached.
+
+    The probe is hashed once (Python ints, under both integer bloom
+    hashes) and each kept stripe's groups are bit-tested in one
+    vectorized step. Each kept stripe is then read in two phases on one
+    code path (decode_stripe_pruned with ``residual=True``): the kept
+    groups' ``column`` alone is decoded and compared with ``value`` (a
+    probe whose type cannot be compared with the column matches nothing),
+    then the other columns are decoded at the matching rows only. Each
+    phase reads just the byte ranges of the streams it decodes, coalesced
+    where they touch, through this call's handle; a stream is decompressed
+    only over the blocks that hold the kept groups (_group_bytes)."""
     import datetime as _dt
     import decimal as _decimal
 
@@ -3475,19 +3801,18 @@ def orc_point_lookup(path: str, column: str, value,
     residual = not isinstance(value, (list, tuple, set, frozenset))
     parts, decoded, total = [], 0, 0
     with fsio.open_input(path, filesystem) as fh:
-        meta = read_metadata(path, filesystem=filesystem, handle=fh)
+        reader = _open_reader(path, filesystem, fh)
+        meta = reader.meta
         keep = prune_stripes(meta, column, lo, hi)
         stride = int(meta.row_index_stride or 10_000)
         for i, st in enumerate(meta.stripes):
             total += (st.number_of_rows + stride - 1) // stride
             if i not in keep:
                 continue
-            fh.seek(st.offset)
-            body = fh.read(st.index_length + st.data_length)
-            footer_raw = fh.read(st.footer_length)
+            ix = _corrupt_guarded(reader.stripe, i, fh)
             tbl, kept, _ = decode_stripe_pruned(
-                body, footer_raw, meta, st.number_of_rows, column, eq=value,
-                residual=residual)
+                None, None, meta, st.number_of_rows, column, eq=value,
+                residual=residual, index=ix, fetch=_span_reader(fh, st.offset))
             decoded += kept
             if not residual:
                 tbl = tbl.filter(

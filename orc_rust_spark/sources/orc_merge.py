@@ -43,6 +43,7 @@ from .orc_file import (
     _pb_field,
     _read_metadata_impl,
     _WRITE_COMP_ENUM,
+    forget_reader,
 )
 from ..codecs import block as blockc
 
@@ -260,6 +261,7 @@ def merge_orc_files(paths: list[str], out_path: str, filesystem=None,
     finally:
         out.close()
     fsio.rename(tmp_path, out_fp, out_fs)
+    forget_reader(out_fp, out_fs)
     return {"files": len(paths), "stripes": n_stripes, "rows": total_rows,
             "bytes": fsio.file_size(out_fp, out_fs)}
 

@@ -131,3 +131,50 @@ def test_i64_probe_hash_per_reader():
     ours = BloomFilter.for_expected(probes.size)
     ours.add_i64(probes)
     assert all(_bloom_might_contain_i64(ours, v) for v in probes.tolist())
+
+
+def test_scalar_int_hashes_equal_numpy_hashes():
+    """The Python-int forms a scalar probe uses equal the NumPy hashes on
+    the edge values (zero, -1, 1, the last and first value where the two
+    hashes part, the int64 extremes) and 10k seeded values."""
+    from orc_rust_spark.codecs.bloom import (
+        wang_hash_i64_int,
+        wang_hash_i64_orc,
+        wang_hash_i64_orc_int,
+    )
+
+    edges = [0, -1, 1, 790_302_200, 790_302_201, -(2**63), 2**63 - 1]
+    rng = np.random.default_rng(10_000)
+    vals = np.concatenate([np.array(edges, dtype=np.int64),
+                           rng.integers(-(2**63), 2**63 - 1, 10_000, dtype=np.int64,
+                                        endpoint=True)])
+    ours, orc = wang_hash_i64(vals), wang_hash_i64_orc(vals)
+    for v, a, b in zip(vals.tolist(), ours.tolist(), orc.tolist()):
+        assert wang_hash_i64_int(v) == a, v
+        assert wang_hash_i64_orc_int(v) == b, v
+
+
+def test_bloom_matrix_equals_per_filter_test():
+    """Bit positions of one hash equal BloomFilter._bit_indices, and the
+    (groups, words) probe equals each filter's own test_hashes, with
+    missing filters kept."""
+    from orc_rust_spark.codecs.bloom import BloomMatrix, bit_positions
+
+    rng = np.random.default_rng(4)
+    filters = []
+    for g in range(6):
+        bf = BloomFilter.for_expected(500)
+        bf.add_i64(rng.integers(0, 5_000, 500))
+        filters.append(None if g == 3 else bf)
+    probes = wang_hash_i64(rng.integers(0, 10_000, 300)).tolist()
+    bf = filters[0]
+    idx = bf._bit_indices(np.array(probes, dtype=np.uint64))
+    for h, row in zip(probes, idx.tolist()):
+        assert bit_positions(h, bf.k, bf.bitset.size * 64) == row
+    bm = BloomMatrix(filters)
+    assert bm.filters is None  # one shape: the array path
+    for i in range(0, len(probes), 3):
+        hs = probes[i: i + 3]
+        want = [f is None or bool(f.test_hashes(np.array(hs, dtype=np.uint64)).any())
+                for f in filters]
+        assert bm.may_contain(hs).tolist() == want

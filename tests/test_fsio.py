@@ -180,16 +180,33 @@ def test_local_paths_still_use_builtin_open(tmp_path):
     assert isinstance(fsio.open_input(p, None), type(open(p, "rb")))
 
 
+def _overlapping_pids(log_path) -> set[str]:
+    """Process ids in a latency-filesystem open log (``pid start end``
+    lines) with two opens whose intervals overlap."""
+    by_pid: dict[str, list[tuple[float, float]]] = {}
+    with open(log_path) as fh:
+        for line in fh:
+            pid, start, end = line.split()
+            by_pid.setdefault(pid, []).append((float(start), float(end)))
+    out = set()
+    for pid, spans in by_pid.items():
+        spans.sort()
+        # sorted by start: an open that overlaps any later one overlaps the next
+        if any(b_start < a_end for (_, a_end), (b_start, _) in zip(spans, spans[1:])):
+            out.add(pid)
+    return out
+
+
 def test_readahead_hides_injected_fetch_latency(spark, tmp_path):
     """The in-task readahead must actually OVERLAP stripe fetches — the
     reference's async-reader behavior (src/async_arrow_reader.rs:75-190)
-    as a measured number, not an architecture note. A latency filesystem
-    (fsio.latency_filesystem) sleeps 120 ms per input open; 12 stripes
-    on a local[4] session give each task ~3 sequential opens at depth 1
-    (~360 ms serial latency per task) vs ~1 open-time at depth 4. The
-    wall-clock ratio must show the overlap with a wide safety margin."""
-    import time
-
+    as an observed fact, not an architecture note. A latency filesystem
+    (fsio.latency_filesystem) sleeps 120 ms per input open and logs each
+    open's (pid, start, end). 12 stripes on a local[4] session give each
+    task about three stripe fetches: at depth 4 some Python worker has two
+    opens in flight at once, at depth 1 none does. The overlap is read
+    from the log, not from wall-clock ratios, so a loaded host cannot
+    flake it."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -205,32 +222,23 @@ def test_readahead_hides_injected_fetch_latency(spark, tmp_path):
     w.write_table(tbl)
     w.close()
 
-    lat = 0.12
-    fsio.register_filesystem(
-        "slowfs", fsio.latency_filesystem(str(tmp_path), lat))
-    try:
-        def run(depth):
+    def run(depth):
+        log = tmp_path / f"opens_depth{depth}.log"
+        fsio.register_filesystem(
+            "slowfs", fsio.latency_filesystem(str(tmp_path), 0.12, str(log)))
+        try:
             df = orc_scan(spark, "slowfs://lat.orc", "id long, name string",
                           readahead=depth)
-            t0 = time.time()
             row = df.agg(F.count(F.lit(1)).alias("n"),
                          F.sum("id").alias("s")).collect()[0]
-            assert (row["n"], row["s"]) == (n, n * (n - 1) // 2)
-            return time.time() - t0
+        finally:
+            fsio.unregister_filesystem("slowfs")
+        assert (row["n"], row["s"]) == (n, n * (n - 1) // 2)
+        assert len(log.read_text().splitlines()) >= 12  # one open per stripe
+        return _overlapping_pids(log)
 
-        run(1)  # warm python workers so JIT/fork cost isn't in either side
-        t1 = min(run(1) for _ in range(3))
-        t4 = min(run(4) for _ in range(3))
-    finally:
-        fsio.unregister_filesystem("slowfs")
-    # 3 serial opens vs overlapped opens per task: expect ~2.5-3x.
-    # Min-of-3 with a 1.25x gate keeps this robust on the documented
-    # ~3x-variance box (code-review r7): the sleeps dominate both sides
-    # (>=360 ms vs ~120 ms of injected latency per task), so scheduler
-    # noise would have to add >200 ms to the FASTEST of three depth-4
-    # runs while sparing depth-1 to flake it
-    assert t1 >= 3 * lat, f"depth-1 scan too fast ({t1:.3f}s) — latency not injected?"
-    assert t4 < t1 / 1.25, f"readahead hid no latency: depth1={t1:.3f}s depth4={t4:.3f}s"
+    assert not run(1), "depth 1 overlapped two fetches in one worker"
+    assert run(4), "readahead=4 never had two fetches in flight in one worker"
 
 
 def test_io_retries_recover_transient_open_failures(spark, tmp_path):

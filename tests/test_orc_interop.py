@@ -2089,3 +2089,302 @@ def test_liborc_direct_runs_at_every_fixed_width(tmp_path, monkeypatch, width):
     probe = int(v[2_345])
     got, _, _ = orc_point_lookup(path, "v", probe)
     assert got.equals(want.filter(pc.equal(want["v"], probe)))
+
+
+# --- the cached OrcReader: freshness, threads, corruption, bloom probe ------
+
+
+def _fresh_pair(tmp_path):
+    """A file and a same-size rewrite of it in which one key value moved
+    below every other key: a reader that kept the first file's stats or
+    blooms would prune the new key's stripe and group and miss its row.
+    -> (path, new file bytes, table, new table, new key)."""
+    from orc_rust_spark.sources import orc_file as of
+
+    rng = np.random.default_rng(5)
+    n = 20_000
+    k = rng.integers((1 << 29) + 1, 1 << 30, n)
+    tbl = pa.table({"k": k, "v": rng.integers(1 << 20, 1 << 21, n)})
+    new_key = 1 << 29  # below every key: stats and blooms of the old file rule it out
+    k2 = k.copy()
+    k2[5] = new_key
+    tbl2 = pa.table({"k": k2, "v": tbl.column("v")})
+    path, other = str(tmp_path / "fresh.orc"), str(tmp_path / "other.orc")
+    for t, p in ((tbl, path), (tbl2, other)):
+        of.write_orc(t, p, compression="none", bloom_columns=["k"],
+                     row_index_stride=1000)
+    assert os.path.getsize(path) == os.path.getsize(other)
+    with open(other, "rb") as fh:
+        data = fh.read()
+    os.remove(other)
+    return path, data, tbl, tbl2, new_key
+
+
+def _lookup_rows(path, value):
+    from orc_rust_spark.sources.orc_file import orc_point_lookup
+
+    return orc_point_lookup(path, "k", value)[0]
+
+
+def test_reader_cache_sees_same_size_rewrite_in_place(tmp_path):
+    """A rewrite in place with the same size and the old mtime keeps the
+    path, inode, size and mtime; the ctime in the reader's stat key still
+    tells the files apart, so the next lookup reads the new tail."""
+    import time
+
+    path, data, tbl, tbl2, new_key = _fresh_pair(tmp_path)
+    assert _lookup_rows(path, new_key).num_rows == 0  # caches the reader
+    before = os.stat(path)
+    time.sleep(0.05)  # past the file-timestamp granularity
+    with open(path, "r+b") as fh:
+        fh.write(data)
+    os.utime(path, ns=(before.st_atime_ns, before.st_mtime_ns))
+    after = os.stat(path)
+    assert (after.st_ino, after.st_size, after.st_mtime_ns) == (
+        before.st_ino, before.st_size, before.st_mtime_ns)
+    _same_rows(_lookup_rows(path, new_key), tbl2.slice(5, 1))
+
+
+def test_reader_cache_sees_rename_over(tmp_path):
+    """A new file renamed over the old path (same size, old mtime) has a
+    new inode: the next lookup reads the new tail."""
+    path, data, tbl, tbl2, new_key = _fresh_pair(tmp_path)
+    _same_rows(_lookup_rows(path, int(tbl.column("k")[5].as_py())), tbl.slice(5, 1))
+    before = os.stat(path)
+    tmp = str(tmp_path / "fresh.orc.tmp")
+    with open(tmp, "wb") as fh:
+        fh.write(data)
+    os.utime(tmp, ns=(before.st_atime_ns, before.st_mtime_ns))
+    os.replace(tmp, path)
+    after = os.stat(path)
+    assert after.st_ino != before.st_ino
+    assert (after.st_size, after.st_mtime_ns) == (before.st_size, before.st_mtime_ns)
+    _same_rows(_lookup_rows(path, new_key), tbl2.slice(5, 1))
+
+
+def test_reader_cache_on_pyarrow_filesystems(tmp_path):
+    """On a pyarrow filesystem the reader is keyed by (path, size, mtime)
+    from get_file_info; a filesystem that reports no mtime is not cached,
+    so a same-size rewrite is read fresh."""
+    import pyarrow.fs as pafs
+
+    from orc_rust_spark.sources import orc_file as of
+    from orc_rust_spark.sources.latencyfs import LatencyFileSystemHandler
+
+    class NoMtime(LatencyFileSystemHandler):
+        def get_file_info(self, paths):
+            return [pafs.FileInfo(i.path, i.type, size=i.size)
+                    for i in super().get_file_info(paths)]
+
+    path, data, tbl, tbl2, new_key = _fresh_pair(tmp_path)
+    key = int(tbl.column("k")[9].as_py())
+    sub = pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem())
+    got, _, _ = of.orc_point_lookup("fresh.orc", "k", key, filesystem=sub)
+    _same_rows(got, tbl.slice(9, 1))
+    assert any(k[:2] == (sub.type_name, "fresh.orc") for k in of._READERS)
+
+    bare = pafs.PyFileSystem(NoMtime(str(tmp_path), 0.0))
+    n_cached = len(of._READERS)
+    got, _, _ = of.orc_point_lookup("fresh.orc", "k", key, filesystem=bare)
+    _same_rows(got, tbl.slice(9, 1))
+    assert len(of._READERS) == n_cached
+    with open(path, "r+b") as fh:
+        fh.write(data)
+    got, _, _ = of.orc_point_lookup("fresh.orc", "k", new_key, filesystem=bare)
+    _same_rows(got, tbl2.slice(5, 1))
+
+
+def test_writer_and_merge_drop_cached_reader(tmp_path):
+    """write_orc and merge_orc_files over a looked-up path drop its
+    cached reader."""
+    from orc_rust_spark.sources import orc_file as of
+    from orc_rust_spark.sources.orc_merge import merge_orc_files
+
+    path, _, tbl, _, _ = _fresh_pair(tmp_path)
+    _lookup_rows(path, 1)
+    assert any(k[1] == path for k in of._READERS)
+    of.write_orc(tbl, path, compression="none", bloom_columns=["k"],
+                 row_index_stride=1000)
+    assert not any(k[1] == path for k in of._READERS)
+    part = str(tmp_path / "part.orc")
+    of.write_orc(tbl.slice(0, 100), part, compression="none",
+                 row_index_stride=1000)
+    _lookup_rows(path, 1)
+    merge_orc_files([part, part], path)
+    assert not any(k[1] == path for k in of._READERS)
+    assert _lookup_rows(path, int(tbl.column("k")[3].as_py())).num_rows == 2
+
+
+def test_truncated_file_raises_every_call_and_recovers(tmp_path):
+    """A truncated file raises the tail parser's ValueError on every call
+    (a file that fails to parse is never cached, and the stat key misses
+    on the new size); rewritten whole, lookups succeed again."""
+    from orc_rust_spark.sources import orc_file as of
+
+    path, _, tbl, _, _ = _fresh_pair(tmp_path)
+    with open(path, "rb") as fh:
+        data = fh.read()
+    key = int(tbl.column("k")[7].as_py())
+    _same_rows(_lookup_rows(path, key), tbl.slice(7, 1))  # caches the reader
+    with open(path, "r+b") as fh:
+        fh.truncate(len(data) // 2)
+    with pytest.raises(ValueError) as direct:
+        of.read_metadata(path)
+    for _ in range(3):
+        with pytest.raises(ValueError) as got:
+            _lookup_rows(path, key)
+        assert str(got.value) == str(direct.value)
+    with open(path, "wb") as fh:
+        fh.write(data)
+    _same_rows(_lookup_rows(path, key), tbl.slice(7, 1))
+
+
+def test_point_lookup_threads_match_serial(tmp_path):
+    """Four threads looking up one file through the shared reader cache
+    (its reader and stripe indexes built on first use, concurrently, with
+    a short interpreter switch interval) get the serial results."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from orc_rust_spark.sources import orc_file as of
+
+    tbl = _liborc_lookup_table()
+    path = str(tmp_path / "threads.orc")
+    of.write_orc(tbl, path, compression="zstd", bloom_columns=["k"],
+                 row_index_stride=1000)
+    keys = tbl.column("k").to_numpy()
+    probes = [int(x) for x in keys[::97]] + [1, 3, 7, -5, 10**9]
+    serial = [_lookup_rows(path, v) for v in probes]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(3):
+            of.forget_reader(path)
+            with ThreadPoolExecutor(max_workers=4) as pool:
+                got = list(pool.map(lambda v: _lookup_rows(path, v), probes * 2,
+                                    timeout=120))
+            assert len(got) == 2 * len(probes)
+            for want, g in zip(serial * 2, got):
+                _same_rows(g, want)
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def _per_group_keep(ix, cid, eq):
+    """The keep set of the per-group test (_group_may_match with each
+    group's own BloomFilter), the reference the array probe must equal."""
+    from orc_rust_spark.sources import orc_file as of
+
+    entries = ix.entries(cid)
+    kind = ix.bloom_kind(cid)
+    filters = ([] if kind is None else of._parse_bloom_index(
+        of.blockc.decompress_stream(ix._index_stream(cid, kind), ix.comp)))
+    eqs = list(eq) if isinstance(eq, list) else [eq]
+    col_kind = ix.types[cid].kind
+    n = min(ix.n_groups, len(entries))
+    keep = [g for g in range(n) if any(
+        of._group_may_match(entries[g][1], filters[g] if g < len(filters) else None,
+                            col_kind, v, v, v) for v in eqs)]
+    return keep + list(range(len(entries), ix.n_groups))
+
+
+def _legacy_bloom_copy(src, dst):
+    """Copy an uncompressed ORC file, relabelling every BLOOM_FILTER_UTF8
+    stream as the pre-ORC-101 BLOOM_FILTER kind (one varint byte of each
+    stripe footer's Stream entry)."""
+    from orc_rust_spark.sources.orc_file import _varint
+
+    meta = read_metadata(src)
+    assert meta.compression == "none"
+    with open(src, "rb") as fh:
+        data = bytearray(fh.read())
+    relabelled = 0
+    for st in meta.stripes:
+        start = st.offset + st.index_length + st.data_length
+        raw = bytes(data[start: start + st.footer_length])
+        pos = 0
+        while pos < len(raw):
+            tag, at = _varint(raw, pos)
+            length, at = _varint(raw, at)
+            if tag == 0x0A and raw[at: at + 2] == b"\x08\x08":  # Stream{kind: 8}
+                data[start + at + 1] = 0x07
+                relabelled += 1
+            pos = at + length
+    assert relabelled
+    with open(dst, "wb") as fh:
+        fh.write(bytes(data))
+
+
+@pytest.mark.parametrize("writer", ["ours", "liborc", "liborc_legacy"])
+def test_bloom_array_probe_equals_per_group_test(tmp_path, writer):
+    """The vectorized bloom probe keeps exactly the groups the per-group
+    test keeps: hits, misses inside and outside the key range, IN-lists,
+    string keys (a legacy bloom is trusted for integer columns only) and
+    the int64 extremes."""
+    from orc_rust_spark.sources import orc_file as of
+
+    rng = np.random.default_rng(41)
+    n = 12_000
+    ints = rng.integers(-10**12, 10**12, n)
+    tbl = pa.table({"i": pa.array(ints), "s": pa.array([f"s{x % 997}" for x in ints])})
+    path = str(tmp_path / f"bloom_{writer}.orc")
+    if writer == "ours":
+        of.write_orc(tbl, path, compression="zstd", bloom_columns=["i", "s"],
+                     row_index_stride=1000)
+    else:
+        src = path if writer == "liborc" else str(tmp_path / "src.orc")
+        paorc.write_table(tbl, src, row_index_stride=1000, bloom_filter_columns=[1, 2],
+                          compression="zstd" if writer == "liborc" else "uncompressed")
+        if writer == "liborc_legacy":
+            _legacy_bloom_copy(src, path)
+    meta = read_metadata(path)
+    hits = [int(v) for v in ints[rng.choice(n, 12, replace=False)]]
+    misses = [int(v) + 1 for v in ints[:12]] + [0, -1, 10**13, -10**13,
+                                                -(1 << 63), (1 << 63) - 1]
+    probes = {"i": hits + misses + [hits[:3], [misses[0], hits[5]], misses[:4]],
+              "s": ["s5", "s996", "nope", "", "s5x", ["s1", "zz"], b"s7"]}
+    root = meta.types[0]
+    for si, st in enumerate(meta.stripes):
+        body, fr = _stripe_bytes(path, st)
+        ix = of.StripeIndex(fr, meta, st.number_of_rows, lambda end: body)
+        for col, values in probes.items():
+            cid = root.subtypes[root.field_names.index(col)]
+            if writer == "liborc_legacy" and col == "s":
+                assert ix.bloom_kind(cid) is None  # charset-dependent: unused
+            else:
+                assert ix.bloom_kind(cid) is not None
+            pruned = 0
+            for v in values:
+                got = of._rg_keep_for_stripe(
+                    ix.entries(cid), ix.blooms(cid), st.number_of_rows, ix.stride,
+                    eq=v, col_kind=meta.types[cid].kind)
+                assert got == _per_group_keep(ix, cid, v), (writer, col, v)
+                pruned += len(got) < ix.n_groups
+            assert pruned  # the probes exercise pruning, not just keeps
+
+
+def test_unequal_bloom_sizes_fall_back_to_per_group_test():
+    """Blooms of unequal shapes within one stripe are tested group by
+    group, with the same keep set as the per-group test."""
+    from orc_rust_spark.codecs.bloom import BloomFilter, BloomMatrix, wang_hash_i64
+    from orc_rust_spark.sources import orc_file as of
+
+    rng = np.random.default_rng(2)
+    groups = [np.arange(g * 100, g * 100 + 100) for g in range(4)]
+    filters = []
+    for g, vals in enumerate(groups):
+        if g == 2:
+            filters.append(None)
+            continue
+        bf = BloomFilter.for_expected(100 * (g + 1))  # a different size per group
+        bf.add_hashes(wang_hash_i64(vals))
+        filters.append(bf)
+    bm = BloomMatrix(filters)
+    assert bm.filters is not None
+    entries = [([0], None, (100, False))] * 4
+    for v in [5, 150, 250, 399, 1000, -3] + rng.integers(0, 400, 20).tolist():
+        got = of._rg_keep_for_stripe(entries, bm, 400, 100, eq=v, col_kind=of.K_LONG)
+        want = [g for g in range(4)
+                if of._group_may_match(None, filters[g], of.K_LONG, v, v, v)]
+        assert got == want, v
+        assert v // 100 not in range(4) or v // 100 in got
