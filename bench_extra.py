@@ -13,6 +13,14 @@ Usage:
 Timing protocol matches bench.py's per-query loop (fn + collect,
 min of reps) so numbers are comparable; each query is additionally
 labeled with setJobDescription for UI attribution.
+
+  python bench_extra.py --lookup-blocks --seed 1 [--workload orc_lookup]
+
+rebuilds a perfbench lookup file (webtext_encode's 4,000-row slice by
+default) in a temp directory, runs its probes through orc_point_lookup,
+checks every result against the source rows, and prints the compression
+blocks and uncompressed bytes decompressed per lookup for each (column,
+stream) of the data streams. No Spark.
 """
 
 from __future__ import annotations
@@ -82,8 +90,66 @@ def build_sf1(spark) -> None:
         print(f"built {out}", file=sys.stderr)
 
 
+def lookup_blocks(seed: int, workload: str) -> dict:
+    """Blocks and bytes the data streams decompress per point lookup on
+    the perfbench ``workload``'s lookup file, by (column, stream)."""
+    import tempfile
+    from collections import defaultdict
+    from pathlib import Path
+
+    from orc_rust_spark.sources import orc_file as of
+    from perfbench import inputs, workloads as wl
+
+    key = wl.LOOKUP_KEY[workload]
+    if workload == "webtext_encode":
+        table = inputs.webtext_table(seed, wl.ROWS[workload]).slice(
+            0, wl.LOOKUP_SLICE_ROWS)
+    else:
+        table = inputs.lineitem_table(seed, wl.ROWS[workload])
+    kinds = {v: k[2:] for k, v in vars(of).items()
+             if k.startswith("S_") and isinstance(v, int)}
+    names = {cid: name for name, cid in zip(table.column_names,
+                                            range(1, table.num_columns + 1))}
+    got: dict = defaultdict(lambda: [0, 0])
+    real = of._block_at
+
+    def counting(raw, comp, pos, cache, ckey):
+        fresh = (ckey, pos) not in cache
+        out = real(raw, comp, pos, cache, ckey)
+        if fresh:
+            got[ckey][0] += 1
+            got[ckey][1] += len(out[0])
+        return out
+
+    with tempfile.TemporaryDirectory() as work:
+        client = wl.lookup_client(table, key, seed, Path(work) / "lookup.orc")
+        of._block_at = counting
+        try:
+            for probe, _ in client.probes:
+                rows = of.orc_point_lookup(client.path, key, probe)[0]
+                if not wl.same_rows(rows, client.rows(probe)):
+                    raise SystemExit(f"lookup of {probe!r} returned wrong rows")
+        finally:
+            of._block_at = real
+        meta = of.read_metadata(client.path)
+    n = len(client.probes)
+    per = {f"{names.get(cid, cid)}.{kinds[kind]}":
+           {"blocks": round(b / n, 2), "mb": round(nb / n / 1e6, 3)}
+           for (cid, kind), (b, nb) in sorted(got.items())}
+    return {"workload": workload, "seed": seed, "lookups": n,
+            "block_size": meta.block_size, "writer": meta.software,
+            "blocks_per_lookup": round(sum(b for b, _ in got.values()) / n, 2),
+            "mb_per_lookup": round(sum(nb for _, nb in got.values()) / n / 1e6, 3),
+            "streams": per}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--lookup-blocks", action="store_true",
+                    help="print the blocks decompressed per point lookup")
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--workload", default="webtext_encode",
+                    choices=["webtext_encode", "orc_lookup"])
     ap.add_argument("--sf", default=SF01)
     ap.add_argument("--queries", default="")
     ap.add_argument("--reps", type=int, default=2)
@@ -93,6 +159,10 @@ def main() -> None:
     ap.add_argument("--warm", action="store_true",
                     help="run entry.warm_caches first (bench.py protocol)")
     args = ap.parse_args()
+
+    if args.lookup_blocks:
+        print(json.dumps(lookup_blocks(args.seed, args.workload), indent=1))
+        return
 
     from orc_rust_spark.session import get_spark
 

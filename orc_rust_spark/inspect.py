@@ -98,6 +98,8 @@ def main_orc(argv: list[str]) -> int:
         print(f"rows       : {meta.number_of_rows:,}")
         print(f"stripes    : {len(meta.stripes)}")
         print(f"compression: {meta.compression}")
+        print(f"block size : {meta.block_size or 'not recorded'}")
+        print(f"writer     : {meta.software or 'not recorded'}")
         print(f"stride     : {meta.row_index_stride}")
         for cid, name in zip(root.subtypes, root.field_names):
             print(f"  {name}: {_orc_kind_name(meta.types[cid].kind)}")

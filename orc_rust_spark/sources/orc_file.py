@@ -33,6 +33,7 @@ import numpy as np
 import pyarrow as pa
 
 from . import fsio
+from .. import __version__
 from ..codecs import block as blockc
 from ..codecs.boolean_rle import decode_boolean_rle
 from ..codecs.present import decode_present
@@ -46,6 +47,10 @@ from ..codecs.util import CorruptStream
 from ..codecs.util import respace as _respace, split_binary as _split_binary
 
 MAGIC = b"ORC"
+#: the first word of the Footer softwareVersion this engine's writer
+#: records; a reader seeks by block arithmetic only in such files
+ENGINE_ID = "orc_rust_spark"
+SOFTWARE_VERSION = f"{ENGINE_ID} {__version__}"
 
 # proto::CompressionKind
 COMPRESSION = {0: "none", 1: "zlib", 2: "snappy", 3: "lzo", 4: "lz4", 5: "zstd"}
@@ -144,6 +149,27 @@ class OrcMeta:
     # StripeStatistics (int stats are zigzag sint64; string stats raw)
     stripe_stats: list[dict] = field(default_factory=list)
     row_index_stride: int = 10_000
+    #: PostScript compressionBlockSize (0 when the file records none)
+    block_size: int = 0
+    #: Footer softwareVersion ("" when the file records none)
+    software: str = ""
+
+    @property
+    def own_writer(self) -> bool:
+        """Whether this engine's writer (or a merge of only its files, of
+        one block size) wrote the file."""
+        return self.software.split(" ")[0] == ENGINE_ID
+
+    @property
+    def seek_block_size(self) -> int:
+        """The block size a read may seek by (see _group_bytes), or 0.
+        Only this engine's writer is known to start every row group of a
+        stream on a block boundary and fill every block but a group's
+        last; other writers' files, and merges of files with mixed block
+        sizes (written without the marker), read from the group start."""
+        if self.compression == "none" or not self.own_writer:
+            return 0
+        return self.block_size
 
 
 def _parse_column_stats(raw: bytes):
@@ -523,14 +549,15 @@ def validate_consistent_types(metas: dict, columns: list[str] | None = None,
 
 def task_meta(meta: "OrcMeta") -> "OrcMeta":
     """The slice of a file's metadata a DECODE task needs: type tree,
-    compression codec, row-index stride. The per-stripe lists
+    compression codec, row-index stride, block size and writer. The
+    per-stripe lists
     (``stripes``, ``stripe_stats``) are dropped — they are only consumed
     driver-side (stripe pruning + split planning), and shipping them per
     task would make every task's closure O(stripes) when the split
     already names its own byte range. A task meta is O(schema): constant
     in file count, stripe count, and row count (VERDICT r4 missing #2)."""
     return OrcMeta(meta.compression, meta.types, [], meta.number_of_rows,
-                   [], meta.row_index_stride)
+                   [], meta.row_index_stride, meta.block_size, meta.software)
 
 
 #: file count at which orc_scan moves the planning tail-parse from the
@@ -592,9 +619,13 @@ def read_metadata(path: str, filesystem=None,
     Corruption-hardened (r6 fuzz pass): any low-level failure inside the
     wire parse — a zlib/lzma error from a flipped bit in the compressed
     tail, a type confusion from a mutated protobuf wire type, a short
-    buffer — surfaces as ``ValueError("corrupt or non-ORC file ...")``
+    buffer, a wire-type ValueError of a tail cut short, a footer without
+    types — surfaces as ``ValueError("corrupt or non-ORC file ...")``
     instead of leaking codec/TypeError internals; 300-mutation fuzz in
     tests/test_orc_interop.py asserts no other exception type escapes.
+    A file without the ORC magic raises ``NotOrcFile`` (a ValueError,
+    "not an ORC file (bad magic)") and an unreadable codec
+    NotImplementedError, both unwrapped.
 
     Transient IO errors (object-store throttling as a bare OSError)
     retry ``io_retries`` times first (fsio.call_with_io_retries) — the
@@ -603,12 +634,13 @@ def read_metadata(path: str, filesystem=None,
     try:
         return fsio.call_with_io_retries(
             lambda: _read_metadata_impl(path, filesystem, handle), io_retries)
-    except (NotImplementedError, ValueError, FileNotFoundError,
+    except (NotImplementedError, NotOrcFile, FileNotFoundError,
             PermissionError, IsADirectoryError):
         # filesystem errors pass through untouched so callers can still
         # branch on FileNotFoundError vs corrupt-file (code-review r6);
         # bare OSError stays wrapped — pyarrow raises it for corrupt
-        # compressed payloads too
+        # compressed payloads too, and so does a ValueError of the wire
+        # parse (a truncated tail's "unsupported wire type")
         raise
     except Exception as ex:
         raise ValueError(
@@ -618,17 +650,22 @@ def read_metadata(path: str, filesystem=None,
 
 def _read_metadata_impl(path: str, fs=None, handle=None) -> OrcMeta:
     if handle is not None:
-        comp, footer_raw, meta_raw = _read_tail(handle, path, fs)
-    else:
-        if fs is None:
-            fs, path = fsio.resolve(path)
-        with fsio.open_input(path, fs) as fh:
-            comp, footer_raw, meta_raw = _read_tail(fh, path, fs)
-    footer = _fields(_decompress_tail(footer_raw, comp))
+        return _parse_tail(_read_tail(handle, path, fs))
+    if fs is None:
+        fs, path = fsio.resolve(path)
+    with fsio.open_input(path, fs) as fh:
+        return _parse_tail(_read_tail(fh, path, fs))
+
+
+def _parse_tail(tail: "OrcTail") -> OrcMeta:
+    """The OrcMeta of a raw tail (_read_tail)."""
+    comp = tail.compression
+    footer = _fields(_decompress_tail(tail.footer_raw, comp))
     types: list[OrcType] = []
     stripes: list[StripeInfo] = []
     n_rows = 0
     stride = 10_000
+    software = ""
     for fno, _, v in footer:
         if fno == 3:  # StripeInformation
             d = {1: 0, 2: 0, 3: 0, 4: 0, 5: 0}
@@ -663,9 +700,15 @@ def _read_metadata_impl(path: str, fs=None, handle=None) -> OrcMeta:
             n_rows = v
         elif fno == 8:
             stride = v
+        elif fno == 12:  # softwareVersion
+            software = v.decode()
+    if not types:
+        # every ORC file types at least its root struct; an empty footer
+        # is what a tail cut short often parses to
+        raise ValueError("footer declares no types")
     stripe_stats: list[dict] = []
-    if meta_raw:
-        for fno, _, v in _fields(_decompress_tail(meta_raw, comp)):
+    if tail.meta_raw:
+        for fno, _, v in _fields(_decompress_tail(tail.meta_raw, comp)):
             if fno == 1:  # StripeStatistics
                 per_col: dict[int, tuple] = {}
                 for ci, (f2, _, v2) in enumerate(
@@ -675,26 +718,46 @@ def _read_metadata_impl(path: str, fs=None, handle=None) -> OrcMeta:
                     if mm is not None:
                         per_col[ci] = mm
                 stripe_stats.append(per_col)
-    return OrcMeta(comp, types, stripes, n_rows, stripe_stats, stride)
+    return OrcMeta(comp, types, stripes, n_rows, stripe_stats, stride,
+                   tail.block_size, software)
 
 
-def _read_tail(fh, path: str, fs=None) -> tuple[str, bytes, bytes]:
-    """-> (compression, raw footer, raw metadata) from an open file."""
+class NotOrcFile(ValueError):
+    """A file without the ORC magic. read_metadata raises it as is; every
+    other ValueError of the tail parse is wrapped as a corrupt file."""
+
+
+@dataclass
+class OrcTail:
+    """A file's PostScript fields and its raw (still compressed) Footer
+    and Metadata, as _read_tail finds them."""
+
+    compression: str
+    block_size: int  # PostScript compressionBlockSize (0 if none)
+    footer_raw: bytes
+    meta_raw: bytes
+
+
+def _read_tail(fh, path: str, fs=None) -> OrcTail:
+    """Parse the PostScript of an open file and read its raw Footer and
+    Metadata."""
     size = os.fstat(fh.fileno()).st_size if fs is None else fh.size()
     fh.seek(0)
     if size < len(MAGIC) + 1 or fh.read(len(MAGIC)) != MAGIC:
-        raise ValueError(f"not an ORC file (bad magic): {path!r}")
+        raise NotOrcFile(f"not an ORC file (bad magic): {path!r}")
     tail_len = min(size, 16 * 1024)
     fh.seek(size - tail_len)
     tail = fh.read(tail_len)
     ps_len = tail[-1]
     ps = _fields(tail[-1 - ps_len: -1])
-    footer_len = compression = meta_len = 0
+    footer_len = compression = meta_len = block_size = 0
     for fno, _, v in ps:
         if fno == 1:
             footer_len = v
         elif fno == 2:
             compression = v
+        elif fno == 3:
+            block_size = v
         elif fno == 5:
             meta_len = v
     comp = COMPRESSION[compression]
@@ -704,9 +767,10 @@ def _read_tail(fh, path: str, fs=None) -> tuple[str, bytes, bytes]:
     if footer_len + meta_len > tail_len - 1 - ps_len:
         fh.seek(footer_end - footer_len - meta_len)
         both = fh.read(footer_len + meta_len)
-        return comp, both[meta_len:], both[:meta_len]
+        return OrcTail(comp, block_size, both[meta_len:], both[:meta_len])
     start = tail_len - 1 - ps_len - footer_len
-    return comp, tail[start: start + footer_len], tail[start - meta_len: start]
+    return OrcTail(comp, block_size, tail[start: start + footer_len],
+                   tail[start - meta_len: start])
 
 
 # --- stripe decode -----------------------------------------------------------
@@ -1226,7 +1290,9 @@ def _block_at(raw: bytes, comp: str, pos: int, cache: dict, key):
 
 
 def _group_bytes(raw: bytes, comp: str, start: tuple[int, int],
-                 stop: tuple[int, int] | None, cache: dict, key) -> bytes:
+                 stop: tuple[int, int] | None, cache: dict, key,
+                 window: tuple[int, int] | None = None,
+                 block_size: int = 0) -> bytes:
     """One row group's bytes of a stream: decompressed from the group's
     block on, and only as far as the group reaches.
 
@@ -1236,22 +1302,67 @@ def _group_bytes(raw: bytes, comp: str, start: tuple[int, int],
     read is exactly the group's blocks; liborc's blocks are not aligned,
     and the read goes through the block that holds ``stop``. A ``stop``
     off the block grid reads to the stream end. An uncompressed stream's
-    byte offset is its block offset."""
+    byte offset is its block offset.
+
+    ``window`` = (lo, hi) asks for just the group's bytes [lo, hi), read
+    through the block that holds ``hi`` (in place of ``stop``). With a
+    ``block_size`` as well (a file of this engine's writer, whose groups
+    start on a block boundary and whose blocks but a group's last hold
+    exactly ``block_size`` bytes) the read seeks: it walks only the
+    3-byte headers of the blocks before the one holding ``lo`` and
+    decompresses from there. A decompressed block of another size that
+    is not the group's last, a group's last block reached by the walk
+    whose predecessor is not full, or a window past the group's end
+    raises CorruptStream: blocks framed at any other size than the one
+    recorded fail loudly instead of returning wrong bytes."""
+    lo, hi = window if window is not None else (0, None)
+    if hi is not None and hi <= lo:
+        return b""
     if comp == "none":
-        return raw[sum(start): len(raw) if stop is None else sum(stop)]
+        at = sum(start)
+        end = at + hi if hi is not None else (
+            len(raw) if stop is None else sum(stop))
+        return raw[at + lo: end]
     pos, off = start
+    group_end = len(raw) if stop is None else stop[0]
+    seek = block_size if off == 0 else 0
+    got = 0
+    if seek and lo >= seek:
+        for _ in range(lo // seek):
+            prev, got = pos, got + seek
+            pos += 3 + (int.from_bytes(raw[pos: pos + 3], "little") >> 1)
+        if pos >= group_end:
+            raise CorruptStream(f"window starts past the group's {got} bytes")
+        after = pos + 3 + (int.from_bytes(raw[pos: pos + 3], "little") >> 1)
+        if after >= group_end and len(
+                _block_at(raw, comp, prev, cache, key)[0]) != seek:
+            # the walk landed on the group's last block, which may be
+            # short: the block it stepped over last must be full
+            raise CorruptStream(
+                f"stream block before the group's last is not {seek} bytes")
+    base = got
     parts: list[bytes] = []
-    got, end = 0, math.inf
+    end = off + hi if hi is not None else math.inf
     while pos < len(raw):
-        if stop is not None and pos == stop[0]:
+        if hi is None and stop is not None and pos == stop[0]:
             end = got + stop[1]
         if got >= end:
             break
         data, pos = _block_at(raw, comp, pos, cache, key)
+        if seek and len(data) != seek and pos < group_end:
+            raise CorruptStream(
+                f"stream block of {len(data)} bytes before the group's "
+                f"last block, not {seek}")
         parts.append(data)
         got += len(data)
+    if hi is not None and got < end:
+        raise CorruptStream(
+            f"group bytes end at {got - off}, before the window's end {hi}")
     buf = parts[0] if len(parts) == 1 else b"".join(parts)
-    return buf[off:] if off else buf
+    lo += off - base
+    if hi is None:
+        return buf[lo:] if lo else buf
+    return buf[lo: off + hi - base]
 
 
 def _stream_positions(layout, positions, comp: str) -> dict:
@@ -1295,6 +1406,7 @@ class StripeIndex:
         self.footer_raw = footer_raw
         self.comp = meta.compression
         self.types = meta.types
+        self.block_size = meta.seek_block_size
         self.stride = int(meta.row_index_stride or 10_000)
         self.n_groups = (n_rows + self.stride - 1) // self.stride
         self.stream_list, self.encodings, self.tz = _read_stripe_footer(
@@ -1558,10 +1670,17 @@ def _decode_column_group(
     ``rows`` (sorted group-local row numbers) keeps only those rows, and
     every stream is decoded only as far as the last of them: PRESENT bits
     and RLE values through that row (RLEv2 skips the runs before the
-    first of them by header arithmetic), floats as a byte slice,
-    dictionary strings as their indices plus the dictionary, direct
-    strings as the lengths and the DATA bytes through that row. Nested
-    and union columns decode the whole group and take the rows.
+    first of them by header arithmetic), dictionary strings as their
+    indices plus the dictionary. Floats, doubles and direct strings and
+    binaries read only the byte window of the selected values: the rows
+    map to dense value indices through PRESENT, and the window is 4 or 8
+    bytes per value, or the LENGTH prefix sum (lengths are decoded
+    through the last selected value). In a file of this engine's writer
+    (``StripeIndex.block_size``) the DATA stream is then decompressed
+    only from the block that holds the window's first byte through the
+    block that holds its last (_group_bytes); in other files from the
+    group's start. Nested and union columns decode the whole group and
+    take the rows.
 
     ``block_cache`` keeps the decompressed blocks of one stripe decode:
     groups whose positions share a block — continuous streams whose block
@@ -1581,14 +1700,17 @@ def _decode_column_group(
     here = ix.positions(col_id, g)
     exs = {kind: at[2] for kind, at in here.items()}
 
-    def read(kind: int, limit: int | None = None) -> bytes:
-        """This group's bytes of stream ``kind`` (the first ``limit``
-        bytes when given)."""
+    # a row selection seeks to the blocks of its byte window (files of
+    # this engine's writer); a whole-group read starts at the group
+    seek = ix.block_size if rows is not None else 0
+
+    def read(kind: int, window: tuple[int, int] | None = None) -> bytes:
+        """This group's bytes of stream ``kind`` (only the bytes [lo, hi)
+        of a ``window``)."""
         chunk, off, _ = here[kind]
-        stop = ((chunk, off + limit) if limit is not None
-                else ix.group_stop(col_id, kind, g))
-        return _group_bytes(streams[(col_id, kind)], comp, (chunk, off), stop,
-                            block_cache, (col_id, kind))
+        return _group_bytes(streams[(col_id, kind)], comp, (chunk, off),
+                            ix.group_stop(col_id, kind, g), block_cache,
+                            (col_id, kind), window, seek)
 
     n_need = n_g if rows is None else int(rows[-1]) + 1
     not_null = None
@@ -1610,6 +1732,12 @@ def _decode_column_group(
 
     def pick(a: np.ndarray) -> np.ndarray:
         return a if sel is None else a[sel]
+
+    def span() -> tuple[int, int]:
+        """The dense values [first, last) a byte-window read covers."""
+        if sel is None:
+            return 0, n_dense
+        return (int(sel[0]), int(sel[-1]) + 1) if sel.size else (0, 0)
 
     def ints(kind: int, signed: bool) -> np.ndarray:
         return _rle_values(rle, read(kind), exs[kind][0], n_dense, signed, sel)
@@ -1677,8 +1805,11 @@ def _decode_column_group(
         dense = pa.array(pick(bits[skip:]))
     elif k in (K_FLOAT, K_DOUBLE):
         dtype = np.dtype(np.float32 if k == K_FLOAT else np.float64)
-        vals = decode_float(read(S_DATA, n_dense * dtype.itemsize), n_dense, dtype)
-        dense = pa.array(pick(vals))
+        w = dtype.itemsize
+        first, last = span()
+        vals = decode_float(read(S_DATA, (first * w, last * w)),
+                            last - first, dtype)
+        dense = pa.array(vals if sel is None else vals[sel - first])
     elif k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
         secs = ints(S_DATA, True)
         nanos = ints(S_SECONDARY, False)
@@ -1734,10 +1865,14 @@ def _decode_column_group(
         else:
             lengths = _rle_values(rle, read(S_LENGTH), exs[S_LENGTH][0],
                                   n_dense, False)
-            total = int(lengths.sum())
-            dense = _split_binary(read(S_DATA, total)[:total], lengths)
+            first, last = span()
+            lo = int(lengths[:first].sum())
+            window_lengths = lengths[first:last]
+            dense = _split_binary(
+                read(S_DATA, (lo, lo + int(window_lengths.sum()))),
+                window_lengths)
             if sel is not None:
-                dense = dense.take(pa.array(sel, type=pa.int64()))
+                dense = dense.take(pa.array(sel - first, type=pa.int64()))
         if k != K_BINARY:
             dense = dense.cast(pa.large_string())
     else:  # pragma: no cover — layout() already excluded these
@@ -3014,7 +3149,7 @@ def _encode_indexed_tree(
 
 #: ORC PostScript CompressionKind values this writer can emit (the
 #: readable set is wider — see blockc.readable_codecs / the enum in
-#: _parse_postscript)
+#: _read_tail)
 _WRITE_COMP_ENUM = {"none": 0, "zlib": 1, "snappy": 2, "lz4": 4, "zstd": 5}
 
 
@@ -3022,7 +3157,8 @@ def _emit_file_tail(fh, content_len: int, stripe_info_protos: list[bytes],
                     stripe_stats_protos: list[bytes], types: list[OrcType],
                     total_rows: int, file_stats: list[tuple | None] | None,
                     row_index_stride: int, compression: str,
-                    block_size: int | None = None) -> None:
+                    block_size: int | None = None,
+                    software: str | None = SOFTWARE_VERSION) -> None:
     """Append the ORC file tail — Metadata + Footer + PostScript — after
     the stripes region. Shared by OrcWriter.close and the stripe-copy
     merge (orc_merge), so the two writers of tails can never drift.
@@ -3033,7 +3169,11 @@ def _emit_file_tail(fh, content_len: int, stripe_info_protos: list[bytes],
     statistics entirely. ``block_size`` overrides the PostScript's
     compressionBlockSize (the merge advertises the max of its inputs so
     readers that size buffers from it never under-allocate for copied
-    stripes written with a larger block)."""
+    stripes written with a larger block). ``software`` is the Footer's
+    softwareVersion, omitted when None; a reader seeks by block
+    arithmetic only in files that name this engine there (the Footer's
+    ``writer`` id is left out, as liborc picks statistics workarounds by
+    it)."""
     meta_bytes = b""
     if stripe_stats_protos:
         meta_bytes = _compress_or_raw(b"".join(
@@ -3054,6 +3194,8 @@ def _emit_file_tail(fh, content_len: int, stripe_info_protos: list[bytes],
             footer += _pb_field(7, 2, _stats_proto(
                 s[0], s[1], types[tid].kind, s[2], s[3]))
     footer += _pb_field(8, 0, row_index_stride)    # rowIndexStride
+    if software is not None:
+        footer += _pb_field(12, 2, software.encode())  # softwareVersion
     footer_bytes = _compress_or_raw(footer, compression)
     fh.write(footer_bytes)
 
@@ -3787,7 +3929,11 @@ def orc_point_lookup(path: str, column: str, value,
     then the other columns are decoded at the matching rows only. Each
     phase reads just the byte ranges of the streams it decodes, coalesced
     where they touch, through this call's handle; a stream is decompressed
-    only over the blocks that hold the kept groups (_group_bytes)."""
+    only over the blocks that hold the kept groups (_group_bytes). At the
+    matching rows, a float or direct string/binary DATA stream of a file
+    that this engine wrote (its Footer softwareVersion) is decompressed
+    only over the blocks that hold those rows' bytes, found by block
+    arithmetic from the PostScript's compressionBlockSize."""
     import datetime as _dt
     import decimal as _decimal
 

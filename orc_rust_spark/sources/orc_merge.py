@@ -32,20 +32,20 @@ from dataclasses import dataclass
 
 from . import fsio
 from .orc_file import (
-    COMPRESSION,
     MAGIC,
+    SOFTWARE_VERSION,
     OrcMeta,
     _decompress_tail,
     _emit_file_tail,
     _fields,
     _parse_column_stats,
     _parse_stats_nullinfo,
+    _parse_tail,
     _pb_field,
-    _read_metadata_impl,
+    _read_tail,
     _WRITE_COMP_ENUM,
     forget_reader,
 )
-from ..codecs import block as blockc
 
 #: chunked stripe copy bound — peak task memory is one chunk, not one
 #: stripe (stripes can be hundreds of MB)
@@ -64,52 +64,24 @@ class _Tail:
     meta: OrcMeta
     stripe_stats_raw: list[bytes]   # metadata field 1 payloads, file order
     file_stats_raw: list[bytes]     # footer field 7 payloads, type order
-    block_size: int                 # PostScript compressionBlockSize (0 if none)
 
 
 def _read_tail_raw(path: str, fs) -> _Tail:
     """Like read_metadata, but KEEPS the raw protobuf payloads the merge
-    re-emits (stripe infos, stripe statistics, file statistics)."""
-    meta = _read_metadata_impl(path, fs)
+    re-emits (stripe statistics, file statistics). Stripe infos are
+    rebuilt from ``meta.stripes`` with shifted offsets."""
     with fsio.open_input(path, fs) as fh:
-        size = fsio.file_size(path, fs)
-        tail_len = min(size, 16 * 1024)
-        fh.seek(size - tail_len)
-        tail = fh.read(tail_len)
-        ps_len = tail[-1]
-        footer_len = comp_enum = meta_len = block_size = 0
-        for fno, _, v in _fields(tail[-1 - ps_len: -1]):
-            if fno == 1:
-                footer_len = v
-            elif fno == 2:
-                comp_enum = v
-            elif fno == 3:
-                block_size = v
-            elif fno == 5:
-                meta_len = v
-        comp = COMPRESSION[comp_enum]
-        if footer_len + meta_len > tail_len - 1 - ps_len:
-            fh.seek(size - 1 - ps_len - footer_len - meta_len)
-            both = fh.read(footer_len + meta_len)
-            meta_raw, footer_raw = both[:meta_len], both[meta_len:]
-        else:
-            start = tail_len - 1 - ps_len - footer_len
-            footer_raw = tail[start: start + footer_len]
-            meta_raw = tail[start - meta_len: start]
-    # stripe infos are NOT kept raw: the merge rebuilds them from
-    # meta.stripes with shifted offsets (code-review r7, second pass —
-    # the raw copies were collected and never read)
-    file_stats_raw = []
-    for fno, _, v in _fields(_decompress_tail(footer_raw, comp)):
-        if fno == 7:
-            file_stats_raw.append(bytes(v))
+        tail = _read_tail(fh, path, fs)
+    meta = _parse_tail(tail)
+    file_stats_raw = [
+        bytes(v) for fno, _, v in _fields(
+            _decompress_tail(tail.footer_raw, meta.compression)) if fno == 7]
     stripe_stats_raw = []
-    if meta_len:
-        for fno, _, v in _fields(_decompress_tail(meta_raw, comp)):
-            if fno == 1:
-                stripe_stats_raw.append(bytes(v))
-    return _Tail(path, meta, stripe_stats_raw,
-                 file_stats_raw, block_size)
+    if tail.meta_raw:
+        stripe_stats_raw = [
+            bytes(v) for fno, _, v in _fields(
+                _decompress_tail(tail.meta_raw, meta.compression)) if fno == 1]
+    return _Tail(path, meta, stripe_stats_raw, file_stats_raw)
 
 
 def _validate_mergeable(tails: list[_Tail]) -> None:
@@ -139,6 +111,17 @@ def _validate_mergeable(tails: list[_Tail]) -> None:
         raise NotImplementedError(
             f"merging {first.meta.compression}-compressed files needs a "
             f"writable codec; this build writes {sorted(_WRITE_COMP_ENUM)}")
+
+
+def _merged_software(tails: list[_Tail]) -> str | None:
+    """The merged file's softwareVersion: this engine's, when every input
+    was written by it with one block size, so a reader may seek by block
+    arithmetic in every copied stripe; else none (readers then read each
+    group from its start)."""
+    if (all(t.meta.own_writer for t in tails)
+            and len({t.meta.block_size for t in tails}) == 1):
+        return SOFTWARE_VERSION
+    return None
 
 
 def _merge_file_stats(tails: list[_Tail]) -> list[tuple | None] | None:
@@ -257,7 +240,8 @@ def merge_orc_files(paths: list[str], out_path: str, filesystem=None,
             out, pos - len(MAGIC), stripe_infos, stripe_stats,
             tails[0].meta.types, total_rows, _merge_file_stats(tails),
             tails[0].meta.row_index_stride, tails[0].meta.compression,
-            block_size=max((t.block_size for t in tails), default=0) or None)
+            block_size=max(t.meta.block_size for t in tails) or None,
+            software=_merged_software(tails))
     finally:
         out.close()
     fsio.rename(tmp_path, out_fp, out_fs)

@@ -136,6 +136,25 @@ def test_orc_file_info(orc_file, capsys):
     assert "id: long" in out and "name: string" in out
 
 
+def test_orc_file_info_block_size_and_writer(orc_file, tmp_path, capsys):
+    """`info` prints the PostScript block size and the Footer's
+    softwareVersion: this engine's for its files, liborc's for pyarrow's."""
+    import pyarrow as pa
+    import pyarrow.orc as paorc
+
+    from orc_rust_spark.sources.orc_file import SOFTWARE_VERSION
+
+    out = _run_orc(capsys, orc_file)
+    assert "block size : 262144" in out
+    assert f"writer     : {SOFTWARE_VERSION}" in out
+    other = str(tmp_path / "liborc.orc")
+    paorc.write_table(pa.table({"a": [1, 2]}), other, compression="zlib",
+                      compression_block_size=4096)
+    out = _run_orc(capsys, other)
+    assert "block size : 4096" in out
+    assert "writer     : orc_rust_spark" not in out
+
+
 def test_orc_file_layout(orc_file, capsys):
     out = _run_orc(capsys, orc_file, "layout")
     assert "ROW_INDEX" in out and "BLOOM_FILTER_UTF8" in out

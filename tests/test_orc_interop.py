@@ -2216,9 +2216,10 @@ def test_writer_and_merge_drop_cached_reader(tmp_path):
 
 
 def test_truncated_file_raises_every_call_and_recovers(tmp_path):
-    """A truncated file raises the tail parser's ValueError on every call
-    (a file that fails to parse is never cached, and the stat key misses
-    on the new size); rewritten whole, lookups succeed again."""
+    """A truncated file raises the tail parser's "corrupt or non-ORC
+    file" ValueError on every call (a file that fails to parse is never
+    cached, and the stat key misses on the new size); rewritten whole,
+    lookups succeed again."""
     from orc_rust_spark.sources import orc_file as of
 
     path, _, tbl, _, _ = _fresh_pair(tmp_path)
@@ -2230,6 +2231,7 @@ def test_truncated_file_raises_every_call_and_recovers(tmp_path):
         fh.truncate(len(data) // 2)
     with pytest.raises(ValueError) as direct:
         of.read_metadata(path)
+    assert str(direct.value).startswith(f"corrupt or non-ORC file {path!r}: ")
     for _ in range(3):
         with pytest.raises(ValueError) as got:
             _lookup_rows(path, key)
@@ -2237,6 +2239,43 @@ def test_truncated_file_raises_every_call_and_recovers(tmp_path):
     with open(path, "wb") as fh:
         fh.write(data)
     _same_rows(_lookup_rows(path, key), tbl.slice(7, 1))
+
+
+@pytest.mark.parametrize("compression", ["none", "zstd"])
+def test_truncated_tail_raises_corrupt_prefix(tmp_path, compression):
+    """A file cut anywhere past its magic raises the documented
+    ValueError("corrupt or non-ORC file ...") from read_metadata and from
+    a lookup: a ValueError of the wire parse is wrapped, and a tail that
+    parses to a footer without types is refused. Cut below the magic, the
+    bad-magic message stays as it is."""
+    from orc_rust_spark.sources import orc_file as of
+
+    rng = np.random.default_rng(5)
+    tbl = pa.table({"k": rng.integers(0, 1 << 30, 20_000),
+                    "s": [f"s{i}" for i in range(20_000)]})
+    path = str(tmp_path / "whole.orc")
+    of.write_orc(tbl, path, compression=compression, bloom_columns=["k"],
+                 row_index_stride=1000)
+    with open(path, "rb") as fh:
+        data = fh.read()
+    cut_path = str(tmp_path / "cut.orc")
+    cuts = sorted({4, 100, len(data) // 3, len(data) // 2, len(data) - 300,
+                   len(data) - 40, len(data) - 2, len(data) - 1}
+                  | set(range(4, len(data), len(data) // 97)))
+    for cut in cuts:
+        with open(cut_path, "wb") as fh:
+            fh.write(data[:cut])
+        with pytest.raises(ValueError) as got:
+            of.read_metadata(cut_path)
+        assert str(got.value).startswith(
+            f"corrupt or non-ORC file {cut_path!r}: "), (cut, got.value)
+        with pytest.raises(ValueError) as looked:
+            _lookup_rows(cut_path, 1)
+        assert str(looked.value) == str(got.value), cut
+    with open(cut_path, "wb") as fh:
+        fh.write(data[:3])
+    with pytest.raises(ValueError, match="bad magic"):
+        of.read_metadata(cut_path)
 
 
 def test_point_lookup_threads_match_serial(tmp_path):

@@ -526,21 +526,30 @@ def _lineitem_like(seed, n_rows):
     })
 
 
-ORC_FILE_DIGEST = "e97968ae60971dd54c03223b67297ce08e58bf086fdcb94d7f68748decab1f2c"
+ORC_FILE_DIGEST = "1b58f98269e13a2e5d305350b6d967dde9b17e7add9c22b2218f66b2c44775fb"
+#: the stripes alone (everything before the file tail)
+ORC_STRIPES_DIGEST = "41e838ef32327567ddd2531befaa0b00b76a3b15b09edc7495793d9afc5adc76"
 
 
 def test_write_orc_bytes_pinned(tmp_path):
-    """An uncompressed file, so the digest pins the writer's RLEv2 streams
-    (and the rest of its layout), not a compression library."""
+    """An uncompressed file, so the digests pin the writer's RLEv2 streams
+    (and the rest of its layout), not a compression library. The stripes
+    have their own digest, so a change to the tail alone (such as the
+    Footer's softwareVersion) shows as one."""
     import hashlib
 
-    from orc_rust_spark.sources.orc_file import orc_to_table, write_orc
+    from orc_rust_spark.sources.orc_file import (orc_to_table, read_metadata,
+                                                 write_orc)
 
     table = _lineitem_like(3, 25_000)
     path = tmp_path / "lineitem.orc"
     write_orc(table, str(path), compression="none", bloom_columns=["l_orderkey"])
     assert orc_to_table(str(path)).cast(table.schema).equals(table)
-    assert hashlib.sha256(path.read_bytes()).hexdigest() == ORC_FILE_DIGEST
+    data = path.read_bytes()
+    end = 3 + sum(st.index_length + st.data_length + st.footer_length
+                  for st in read_metadata(str(path)).stripes)
+    assert hashlib.sha256(data[:end]).hexdigest() == ORC_STRIPES_DIGEST
+    assert hashlib.sha256(data).hexdigest() == ORC_FILE_DIGEST
 
 
 # --- block-batched reader ----------------------------------------------------
