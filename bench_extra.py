@@ -21,6 +21,14 @@ default) in a temp directory, runs its probes through orc_point_lookup,
 checks every result against the source rows, and prints the compression
 blocks and uncompressed bytes decompressed per lookup for each (column,
 stream) of the data streams. No Spark.
+
+  python bench_extra.py --python-task-cost [--reps 9]
+
+starts a session from ``get_spark`` (``local[$SPARK_GRAFT_CPUS]``) and
+times the fixed cost of a Python task: ``spark.range(0, 4, 1, 4)``
+through an identity ``mapInArrow`` into the ``noop`` sink. It prints the
+process-tree CPU per query and the Python workers' CPU per task, as
+medians over the runs after two warm-up queries.
 """
 
 from __future__ import annotations
@@ -28,6 +36,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -143,10 +152,53 @@ def lookup_blocks(seed: int, workload: str) -> dict:
             "streams": per}
 
 
+def _identity(batches):
+    return batches
+
+
+def python_task_cost(reps: int) -> dict:
+    """CPU of a trivial 4-task Python stage: the whole process tree per
+    query, and the PySpark workers' share per task."""
+    from orc_rust_spark.session import get_spark
+    from perfbench import procstat
+
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "1g")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
+    spark = get_spark("bench-extra-task-cost", master=f"local[{cpus}]",
+                      shuffle_partitions=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    tasks = 4
+    df = spark.range(0, tasks, 1, tasks).mapInArrow(_identity, "id long")
+
+    def python_cpu() -> dict[int, float]:
+        return {p: procstat.cpu_seconds(p) for p in procstat.python_workers()}
+
+    query, per_task, workers = [], [], set()
+    try:
+        for i in range(2 + reps):
+            w0, c0 = python_cpu(), procstat.tree_cpu_seconds()
+            df.write.format("noop").mode("overwrite").save()
+            c1, w1 = procstat.tree_cpu_seconds(), python_cpu()
+            if i >= 2:
+                query.append(c1 - c0)
+                per_task.append(sum(v - w0.get(p, 0.0)
+                                    for p, v in w1.items()) / tasks)
+                workers |= set(w1)
+    finally:
+        spark.stop()
+    return {"reps": reps, "tasks_per_query": tasks,
+            "python_processes": len(workers),
+            "query_cpu_s": round(statistics.median(query), 3),
+            "worker_cpu_s_per_task": round(statistics.median(per_task), 3),
+            "query_cpu_s_runs": [round(x, 3) for x in query]}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--lookup-blocks", action="store_true",
                     help="print the blocks decompressed per point lookup")
+    ap.add_argument("--python-task-cost", action="store_true",
+                    help="print the CPU of a trivial 4-task Python stage")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--workload", default="webtext_encode",
                     choices=["webtext_encode", "orc_lookup"])
@@ -162,6 +214,9 @@ def main() -> None:
 
     if args.lookup_blocks:
         print(json.dumps(lookup_blocks(args.seed, args.workload), indent=1))
+        return
+    if args.python_task_cost:
+        print(json.dumps(python_task_cost(max(args.reps, 7))))
         return
 
     from orc_rust_spark.session import get_spark

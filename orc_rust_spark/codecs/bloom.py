@@ -23,6 +23,7 @@ the utf8bitset proto field.
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 
@@ -149,6 +150,31 @@ def _wang_int(value: int, arithmetic: bool) -> int:
     return (key + (key << 31)) & _U64
 
 
+def _rotl_int(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def murmur3_64_int(data: bytes) -> int:
+    """``murmur3_64`` of one byte string, in Python ints (a scalar probe
+    pays no NumPy array set-up)."""
+    n = len(data)
+    c1, c2, n1 = int(_C1), int(_C2), int(_N1)
+    h = int(_SEED)
+    full = n - n % 8
+    for (k,) in struct.iter_unpack("<Q", data[:full]):
+        k = _rotl_int(k * c1 & _U64, 31) * c2 & _U64
+        h = (_rotl_int(h ^ k, 27) * 5 + n1) & _U64
+    if full < n:
+        k = int.from_bytes(data[full:], "little")
+        h ^= _rotl_int(k * c1 & _U64, 31) * c2 & _U64
+    h ^= n
+    h ^= h >> 33
+    h = h * int(_MIX1) & _U64
+    h ^= h >> 33
+    h = h * int(_MIX2) & _U64
+    return h ^ (h >> 33)
+
+
 def wang_hash_i64_int(value: int) -> int:
     """``wang_hash_i64`` of one int64 value, in Python ints (a scalar
     probe pays no NumPy array set-up)."""
@@ -254,8 +280,8 @@ class BloomFilter:
         self.add_hashes(murmur3_64(data, offsets))
 
     def might_contain_bytes(self, value: bytes) -> bool:
-        h = murmur3_64(value, np.array([0, len(value)], dtype=np.int64))
-        return bool(self.test_hashes(h)[0])
+        bits = bit_positions(murmur3_64_int(value), self.k, self.bitset.size * 64)
+        return all(int(self.bitset[p >> 6]) >> (p & 63) & 1 for p in bits)
 
     def add_i64(self, values: np.ndarray) -> None:
         self.add_hashes(wang_hash_i64(values))

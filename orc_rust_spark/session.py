@@ -5,6 +5,14 @@
 - glibc malloc tuning exported to Python workers: this sandbox has very
   slow first-touch pages, so worker processes must reuse freed arenas
   instead of munmap-ing them (MALLOC_MMAP_THRESHOLD_/MALLOC_TRIM_THRESHOLD_).
+- the Python daemon started through ``worker_daemon``: every PySpark task
+  calls ``importlib.invalidate_caches()``, which on CPython 3.11 re-reads
+  the central directory of every zip archive on the import path. With
+  pyspark imported from ``pyspark.zip`` that re-read was most of a
+  trivial task's CPU (~0.19 CPU-s per task on 4 vCPU). The wrapper skips
+  archives whose (inode, size, mtime) are unchanged; without zip imports
+  it changes nothing. The package's parent directory is put on the
+  workers' PYTHONPATH, so the daemon module resolves from any driver cwd.
 """
 
 from __future__ import annotations
@@ -12,6 +20,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds this package, for the workers' import path
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 MALLOC_ENV = {
     "MALLOC_MMAP_THRESHOLD_": "2147483648",
@@ -72,6 +83,8 @@ def get_spark(
         # threshold after arrow expansion
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.python.worker.reuse", "true")
+        .config("spark.python.daemon.module", "orc_rust_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # let Catalyst push filters into our Python DataSource (orcx)
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )

@@ -1961,14 +1961,14 @@ def _probe_hashes(value) -> list[int] | None:
     an int64 under both integer hashes (``_bloom_might_contain_i64``), a
     str or bytes value under Murmur3. None for an int outside int64,
     which no stored value equals: its groups keep (three-valued)."""
-    from ..codecs.bloom import murmur3_64, wang_hash_i64_int, wang_hash_i64_orc_int
+    from ..codecs.bloom import murmur3_64_int, wang_hash_i64_int, wang_hash_i64_orc_int
 
     if isinstance(value, int):
         if not -(1 << 63) <= value < 1 << 63:
             return None
         return [wang_hash_i64_int(value), wang_hash_i64_orc_int(value)]
     data = value.encode() if isinstance(value, str) else value
-    return [int(murmur3_64(data, np.array([0, len(data)], dtype=np.int64))[0])]
+    return [murmur3_64_int(data)]
 
 
 def _bloom_keep(blooms, value, n: int) -> np.ndarray:

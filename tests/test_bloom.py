@@ -178,3 +178,37 @@ def test_bloom_matrix_equals_per_filter_test():
         want = [f is None or bool(f.test_hashes(np.array(hs, dtype=np.uint64)).any())
                 for f in filters]
         assert bm.may_contain(hs).tolist() == want
+
+
+def test_scalar_murmur3_equals_numpy_murmur3():
+    """The Python-int Murmur3 a string probe uses equals the NumPy hash on
+    a seeded corpus: every length 0-40 (so every tail length 0-7 after
+    0-5 full blocks), 255-257, non-ASCII UTF-8 and high bytes."""
+    from orc_rust_spark.codecs.bloom import murmur3_64_int
+
+    rng = np.random.default_rng(3)
+    corpus = [rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+              for n in [*range(41), 255, 256, 257] for _ in range(4)]
+    corpus += [s.encode() for s in ["é", "日本語のテキスト", "naïve café ☕", "\x00" * 9]]
+    corpus += [b"\xff" * n for n in range(17)]
+    off = np.zeros(len(corpus) + 1, dtype=np.int64)
+    np.cumsum([len(s) for s in corpus], out=off[1:])
+    want = murmur3_64(b"".join(corpus), off).tolist()
+    assert [murmur3_64_int(s) for s in corpus] == want
+    assert {len(s) % 8 for s in corpus} == set(range(8))
+
+
+def test_might_contain_bytes_equals_test_hashes():
+    """The scalar string probe answers as ``test_hashes`` on the NumPy
+    hash, for members and for absent values."""
+    urls = [f"https://h{i}.example.com/{i}".encode() for i in range(300)]
+    off = np.zeros(len(urls) + 1, dtype=np.int64)
+    np.cumsum([len(u) for u in urls], out=off[1:])
+    bf = BloomFilter.for_expected(len(urls), fpp=0.05)
+    bf.add_bytes(b"".join(urls), off)
+    probes = urls + [f"absent-{i}".encode() for i in range(300)]
+    off = np.zeros(len(probes) + 1, dtype=np.int64)
+    np.cumsum([len(p) for p in probes], out=off[1:])
+    want = bf.test_hashes(murmur3_64(b"".join(probes), off)).tolist()
+    assert [bf.might_contain_bytes(p) for p in probes] == want
+    assert all(want[:300]) and not all(want[300:])
