@@ -29,6 +29,16 @@ times the fixed cost of a Python task: ``spark.range(0, 4, 1, 4)``
 through an identity ``mapInArrow`` into the ``noop`` sink. It prints the
 process-tree CPU per query and the Python workers' CPU per task, as
 medians over the runs after two warm-up queries.
+
+  python bench_extra.py --decode-path --seed 1 [--reps 9]
+
+rebuilds perfbench's webtext_encode stored chunk table in a temp
+directory (``local[$SPARK_GRAFT_CPUS]``, as perfbench) and prints the
+path ``decode_table_arrow`` takes on it with the reason, then the median
+process-tree CPU of that decode and of the plan it replaces
+(repartition + sortWithinPartitions on the chunk key, then a map-only
+decode), alternating the two after one warm-up round of each. Every
+decode is checked against the source digest.
 """
 
 from __future__ import annotations
@@ -193,12 +203,62 @@ def python_task_cost(reps: int) -> dict:
             "query_cpu_s_runs": [round(x, 3) for x in query]}
 
 
+def decode_path(seed: int, reps: int) -> dict:
+    """Path and CPU of ``decode_table_arrow`` on the webtext_encode stored
+    chunk table, against the repartition + sort plan it replaces."""
+    import tempfile
+    from pathlib import Path
+
+    from orc_rust_spark.operators.decode import chunk_layout, decode_table_arrow
+    from orc_rust_spark.operators.encode import encode_table
+    from perfbench import procstat, workloads as wl
+
+    keys = ("part_id", "chunk_ord")
+    with tempfile.TemporaryDirectory() as tmp:
+        work = Path(tmp)
+        cpus = wl.cpus()
+        spark = wl.start_spark(work, cpus)
+        try:
+            s = wl.spark_inputs(spark, seed, work, wl.ROWS["webtext_encode"],
+                                wl.PARTS_PER_CPU * cpus)
+            encode_table(s.src, plan=s.plan).write.parquet(str(work / "chunks"))
+            chunks = spark.read.parquet(str(work / "chunks"))
+            schema = s.src.schema
+            map_only, reason = chunk_layout(chunks, keys)
+            plans = {
+                "proven": lambda: decode_table_arrow(chunks, schema),
+                "shuffle": lambda: decode_table_arrow(
+                    chunks.repartition(*keys).sortWithinPartitions(*keys),
+                    schema, co_locate=False),
+            }
+            cpu: dict[str, list[float]] = {name: [] for name in plans}
+            for i in range(1 + reps):
+                for name in (list(plans) if i % 2 else list(plans)[::-1]):
+                    c0 = procstat.tree_cpu_seconds()
+                    got = wl.digest(plans[name]())
+                    c1 = procstat.tree_cpu_seconds()
+                    if got != s.src_digest:
+                        raise SystemExit(f"{name} decode digest {got} != source {s.src_digest}")
+                    if i:
+                        cpu[name].append(c1 - c0)
+            files = len(chunks.inputFiles())
+            partitions = chunks.rdd.getNumPartitions()
+        finally:
+            wl.stop_spark(spark)
+    return {"seed": seed, "reps": reps, "files": files, "partitions": partitions,
+            "path": "map-only" if map_only else "shuffle", "reason": reason,
+            "cpu_s": {name: round(statistics.median(xs), 3) for name, xs in cpu.items()},
+            "cpu_s_runs": {name: [round(x, 3) for x in xs] for name, xs in cpu.items()}}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--lookup-blocks", action="store_true",
                     help="print the blocks decompressed per point lookup")
     ap.add_argument("--python-task-cost", action="store_true",
                     help="print the CPU of a trivial 4-task Python stage")
+    ap.add_argument("--decode-path", action="store_true",
+                    help="print the stored-table decode path and its CPU")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--workload", default="webtext_encode",
                     choices=["webtext_encode", "orc_lookup"])
@@ -217,6 +277,9 @@ def main() -> None:
         return
     if args.python_task_cost:
         print(json.dumps(python_task_cost(max(args.reps, 7))))
+        return
+    if args.decode_path:
+        print(json.dumps(decode_path(args.seed, max(args.reps, 7))))
         return
 
     from orc_rust_spark.session import get_spark

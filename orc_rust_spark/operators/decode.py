@@ -9,14 +9,22 @@ the RLE/FSST decoders, then re-space nulls.
 Two execution strategies over the same Arrow-array core:
 - decode_table        groupBy(part_id, chunk_ord).applyInPandas — robust,
                       works on any row layout
-- decode_table_arrow  repartition+sortWithinPartitions then mapInArrow —
+- decode_table_arrow  mapInArrow over runs of one chunk's stream rows —
                       decoded values stay Arrow end to end (no Python
-                      string objects), the fast path
+                      string objects), the fast path. It reads a stored
+                      chunk table in place (one map-only stage, like the
+                      reference decoding a stripe where it lies) when
+                      chunk_layout proves from the parquet footers that
+                      no chunk can reach two tasks, and otherwise first
+                      co-locates each chunk with repartition +
+                      sortWithinPartitions.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import logging
+import os
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -33,6 +41,8 @@ from ..codecs.fsst import FsstTable, fsst_decode
 from ..codecs.rle_v2 import decode_rlev2
 from ..codecs.timestamp_split import combine_timestamp_us
 from ..sources import chunk_table as ct
+
+log = logging.getLogger(__name__)
 
 
 def _kind_of(dt: T.DataType) -> str:
@@ -404,6 +414,133 @@ def _binary_views(arr: pa.Array) -> list[memoryview]:
     return [mv[offs[i]: offs[i + 1]] for i in range(len(arr))]
 
 
+def _first_overlap(boxes: list[tuple], members: list[int], col: int) -> tuple[int, int] | None:
+    """Two of ``members`` whose key boxes intersect on every column, or None.
+
+    ``boxes[i]`` holds one (min, max) per group column. Sweeping the
+    members by their min on ``col`` splits them into runs that chain-
+    overlap on it; only boxes in one run can intersect, so each run
+    recurses on the next column, and the runs left after the last column
+    (small in practice) are checked pair by pair."""
+    if len(members) < 2:
+        return None
+    if col == len(boxes[members[0]]):
+        for n, a in enumerate(members):
+            for b in members[n + 1:]:
+                if all(la <= hb and lb <= ha
+                       for (la, ha), (lb, hb) in zip(boxes[a], boxes[b])):
+                    return a, b
+        return None
+    run: list[int] = []
+    reach = None
+    for i in sorted(members, key=lambda i: boxes[i][col][0]):
+        lo, hi = boxes[i][col]
+        if run and lo > reach:
+            found = _first_overlap(boxes, run, col + 1)
+            if found:
+                return found
+            run = []
+        reach = hi if not run else max(reach, hi)
+        run.append(i)
+    return _first_overlap(boxes, run, col + 1)
+
+
+def chunk_layout(chunks: DataFrame, group_cols: Sequence[str]) -> tuple[bool, str]:
+    """-> (map_only, reason): do the parquet footers prove that no chunk's
+    stream rows can be split across tasks? Runs on the driver.
+
+    The proof holds when
+    - the optimized plan of ``chunks`` is a parquet scan under at most
+      ``Project``s that pass every group column through unchanged (a
+      repartition, union, sort, filter, join or cache fails it);
+    - every row group of every input file has min/max statistics for each
+      group column, or takes it as a Hive partition value from its path
+      (``part_id=`` for encode_dataset, ``stream_batch_id=`` for the
+      streaming sink);
+    - no two row groups can share a chunk key: their key ranges are
+      disjoint on at least one group column.
+    Spark reads each row group in the one split that holds its midpoint,
+    so a chunk inside one row group reaches exactly one task, in the order
+    it was written. ``reason`` names the path and why it was chosen.
+    """
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    cols = tuple(group_cols)
+    try:
+        node = chunks._jdf.queryExecution().optimizedPlan()
+    except AttributeError:  # a frame with no JVM behind it (Spark Connect)
+        return False, "shuffle: no JVM plan to inspect"
+    while node.nodeName() == "Project":
+        exprs = node.projectList()
+        for i in range(exprs.size()):
+            e = exprs.apply(i)
+            if e.name() in cols and e.getClass().getSimpleName() != "AttributeReference":
+                return False, f"shuffle: {e.name()} is computed, not read from the files"
+        node = node.child()
+    if node.nodeName() != "LogicalRelation":
+        return False, f"shuffle: the plan is not a bare parquet scan ({node.nodeName()})"
+    rel = node.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"):
+        return False, "shuffle: the scan does not read parquet files"
+    part_cols = set(rel.partitionSchema().fieldNames())
+    files = chunks.inputFiles()
+
+    boxes: list[tuple] = []
+    where: list[tuple[str, int]] = []
+    for uri in files:
+        try:
+            fs, path = pafs.FileSystem.from_uri(uri)
+            md = pq.read_metadata(path, filesystem=fs)
+        except (OSError, pa.ArrowException) as e:
+            return False, f"shuffle: cannot read the footer of {uri} ({e})"
+        name = os.path.basename(path)
+        in_path = dict(seg.split("=", 1) for seg in path.split("/")[:-1] if "=" in seg)
+        leaf = {md.schema.column(j).path: j for j in range(md.num_columns)}
+        fixed: dict[str, tuple[int, int]] = {}
+        for c in cols:
+            if c in part_cols:
+                try:
+                    v = int(in_path[c])
+                except (KeyError, ValueError):
+                    return False, f"shuffle: no integer {c}= value in the path of {name}"
+                fixed[c] = (v, v)
+            elif c not in leaf:
+                return False, f"shuffle: {name} has no column {c}"
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            box = []
+            for c in cols:
+                if c in fixed:
+                    box.append(fixed[c])
+                    continue
+                st = rg.column(leaf[c]).statistics
+                if st is None or not st.has_min_max:
+                    return False, f"shuffle: row group {g} of {name} has no min/max statistics for {c}"
+                box.append((st.min, st.max))
+            boxes.append(tuple(box))
+            where.append((name, g))
+
+    pair = _first_overlap(boxes, list(range(len(boxes))), 0)
+    if pair is not None:
+        a, b = pair
+        shared = []
+        for (la, ha), (lb, hb) in zip(boxes[a], boxes[b]):
+            lo, hi = max(la, lb), min(ha, hb)
+            shared.append(str(lo) if lo == hi else f"{lo}..{hi}")
+        return False, (f"shuffle: row group {where[a][1]} of {where[a][0]} and row group "
+                       f"{where[b][1]} of {where[b][0]} may share chunk ({', '.join(shared)})")
+    return True, (f"map-only: {len(files)} files, {len(boxes)} row groups, "
+                  f"disjoint ({', '.join(cols)})")
+
+
+def _key_str(group_cols: Sequence[str], key: tuple) -> str:
+    return "(" + ", ".join(f"{c}={v}" for c, v in zip(group_cols, key)) + ")"
+
+
 def decode_table_arrow(
     chunks: DataFrame, schema: T.StructType, co_locate: bool = True,
     group_cols: tuple[str, ...] = ("part_id", "chunk_ord"),
@@ -415,11 +552,28 @@ def decode_table_arrow(
     slices of the batch buffer — the analog of the reference handing
     Bytes slices to its decoders (src/stripe.rs:312-336).
 
-    ``co_locate=False`` skips the repartition shuffle: valid whenever each
-    chunk's stream rows are already contiguous within a partition, which
-    is true for encode_table output piped directly in (each encode task
-    emits one RecordBatch per chunk) — the whole roundtrip then runs as a
-    single map-only stage with no exchange.
+    ``co_locate=True`` makes sure every chunk's stream rows arrive in one
+    task, contiguously. When ``chunk_layout`` proves from the parquet
+    footers that no chunk can be split across tasks (a bare scan of a
+    stored chunk table whose row groups have disjoint chunk keys: the
+    layout encode_table, encode_dataset and the streaming sink write),
+    the decode is one map-only stage over the scan. Otherwise it falls
+    back to repartition + sortWithinPartitions on ``group_cols``. Either
+    way one INFO line on this module's logger names the path and why.
+
+    ``co_locate=False`` takes the map-only path unchecked: right for
+    encode_table output piped directly in (each encode task emits one
+    RecordBatch per chunk), so the whole roundtrip runs as one stage.
+
+    On the map-only path a chunk key that comes back after a different
+    key within one partition raises ValueError naming it. Each Arrow
+    batch is checked before any chunk in it is decoded, so a partial
+    chunk is decoded only when its rows span batches, and then the error
+    still fails the task, so none of it reaches the output. A stored
+    table whose writer interleaved chunks inside one row group (sorted by
+    another column, say) raises it too; decode such a table through a
+    plan that is not a bare scan, for example
+    ``chunks.repartition(*group_cols)``, which takes the shuffle.
 
     ``group_cols`` identifies one chunk (tuple-compared per row — no
     packed-integer key, so no bound on chunk_ord or part_id magnitude);
@@ -444,6 +598,7 @@ def decode_table_arrow(
         # waits in `pending`.
         pending: list[dict] = []
         pending_key = None
+        seen: set[tuple] = set()
 
         def flush(rows):
             arrays = decode_chunk_arrays(rows, col_kinds)
@@ -491,8 +646,19 @@ def decode_table_arrow(
             bounds = np.flatnonzero(changed) + 1
             starts = np.concatenate(([0], bounds))
             ends = np.concatenate((bounds, [m]))
-            for s, e in zip(starts, ends):
-                k = tuple(int(col[s]) for col in gcols)
+            keys = [tuple(int(col[s]) for col in gcols) for s in starts]
+            # a chunk key that comes back is caught for the whole batch
+            # before any of its chunks is decoded
+            prev = pending_key
+            for k in keys:
+                if k != prev and k in seen:
+                    raise ValueError(
+                        f"chunk {_key_str(group_cols, k)} came back after chunk "
+                        f"{_key_str(group_cols, prev)} in one partition: its stream "
+                        "rows are not contiguous, so a map-only decode would split it")
+                seen.add(k)
+                prev = k
+            for s, e, k in zip(starts, ends, keys):
                 if pending and k != pending_key:
                     yield flush(pending)
                     pending = []
@@ -504,9 +670,13 @@ def decode_table_arrow(
         if pending:
             yield flush(pending)
 
+    map_only, reason = (chunk_layout(chunks, group_cols) if co_locate
+                        else (True, "map-only: co_locate=False"))
+    log.info("decode_table_arrow %s", reason)
     src = chunks
-    if co_locate:
+    if not map_only:
         src = chunks.repartition(
             *[F.col(c) for c in group_cols]
         ).sortWithinPartitions(*group_cols)
     return src.mapInArrow(decode_iter, schema=schema)
+

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..codecs import block as blockc
 from ..codecs.fsst import train_fsst
-from ..operators.decode import decode_table_arrow as decode_table
+from ..operators.decode import decode_table_arrow
 from ..operators.encode import STRIPE_BYTES, encode_table
 
 FSST_TRAIN_STRINGS = 512
@@ -284,7 +284,7 @@ def verify_roundtrip(
     AnalysisException); verify a map-bearing schema by exploding the map
     column first or excluding it from ``source``."""
     chunks = spark.read.parquet(chunks_dir)
-    decoded = decode_table(chunks, source.schema)
+    decoded = decode_table_arrow(chunks, source.schema)
     cols = [f.name for f in source.schema.fields if f.name != key]
     s = source.alias("s")
     d = decoded.alias("d")

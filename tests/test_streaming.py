@@ -254,3 +254,37 @@ def test_orcx_stream_writer_manifest_retention(tmp_path):
     # data files are untouched by retention
     orc = [f for f in os.listdir(out_dir) if f.endswith(".orc")]
     assert len(orc) == keep + 5
+
+
+def test_decode_streamed_chunks_map_only(spark, tmp_path):
+    """Two micro-batches land in stream_batch_id=<id> dirs and reuse
+    part_ids; the directory column makes their chunk keys disjoint, so
+    the stored table decodes map-only and equals the source."""
+    from orc_rust_spark.operators.decode import chunk_layout, decode_table_arrow
+    from orc_rust_spark.sources.webtext import WEBTEXT_SCHEMA
+
+    input_dir = str(tmp_path / "in4")
+    out_dir = str(tmp_path / "out4")
+    keys = ("stream_batch_id", "part_id", "chunk_ord")
+    for seed in (4, 5):
+        webtext_df(spark, 200, num_partitions=2, seed=seed).write.mode(
+            "append").parquet(input_dir)
+        encode_stream(spark, input_dir, out_dir, trigger_once=True).awaitTermination(120)
+
+    chunks = spark.read.parquet(os.path.join(out_dir, "chunks"))
+    per_batch = chunks.select("stream_batch_id", "part_id").distinct().collect()
+    assert {r.stream_batch_id for r in per_batch} == {0, 1}
+    assert len({r.part_id for r in per_batch}) < len(per_batch)  # part_ids repeat
+
+    map_only, reason = chunk_layout(chunks, keys)
+    assert map_only, reason
+    assert reason.endswith("disjoint (stream_batch_id, part_id, chunk_ord)")
+    decoded = decode_table_arrow(chunks, WEBTEXT_SCHEMA, group_cols=keys)
+    source = spark.read.schema(WEBTEXT_SCHEMA).parquet(input_dir)
+
+    def digest(df):
+        return df.agg(F.count(F.lit(1)), F.sum(
+            F.xxhash64(*df.columns).cast("decimal(38,0)"))).collect()[0]
+
+    assert digest(decoded) == digest(source)
+    assert decoded.count() == 400
