@@ -22,6 +22,19 @@ checks every result against the source rows, and prints the compression
 blocks and uncompressed bytes decompressed per lookup for each (column,
 stream) of the data streams. No Spark.
 
+  python bench_extra.py --lookup-cost --seed 1 [--workload orc_lookup] [--reps 3]
+      [--probe-column l_linenumber]
+
+rebuilds the same lookup file, checks every probe's rows, then runs the
+probes ``--reps`` times and prints the median CPU per lookup, split by
+self time into block decompression, RLEv2 reads (``decode_rlev2`` and
+the point walker ``decode_rlev2_points``), the key phase (the probed
+column's group decodes and comparisons) and the rest, plus the RLEv2
+calls per lookup. ``--probe-column`` probes the first 8 distinct values
+of another column instead of the workload's key: on a low-cardinality
+column each lookup matches thousands of rows per group (a dense point
+read). No Spark, no profiler.
+
   python bench_extra.py --python-task-cost [--reps 9]
 
 starts a session from ``get_spark`` (``local[$SPARK_GRAFT_CPUS]``) and
@@ -114,21 +127,12 @@ def lookup_blocks(seed: int, workload: str) -> dict:
     the perfbench ``workload``'s lookup file, by (column, stream)."""
     import tempfile
     from collections import defaultdict
-    from pathlib import Path
 
     from orc_rust_spark.sources import orc_file as of
-    from perfbench import inputs, workloads as wl
+    from perfbench import workloads as wl
 
-    key = wl.LOOKUP_KEY[workload]
-    if workload == "webtext_encode":
-        table = inputs.webtext_table(seed, wl.ROWS[workload]).slice(
-            0, wl.LOOKUP_SLICE_ROWS)
-    else:
-        table = inputs.lineitem_table(seed, wl.ROWS[workload])
     kinds = {v: k[2:] for k, v in vars(of).items()
              if k.startswith("S_") and isinstance(v, int)}
-    names = {cid: name for name, cid in zip(table.column_names,
-                                            range(1, table.num_columns + 1))}
     got: dict = defaultdict(lambda: [0, 0])
     real = of._block_at
 
@@ -141,16 +145,17 @@ def lookup_blocks(seed: int, workload: str) -> dict:
         return out
 
     with tempfile.TemporaryDirectory() as work:
-        client = wl.lookup_client(table, key, seed, Path(work) / "lookup.orc")
+        client = _lookup_file(seed, workload, work)
         of._block_at = counting
         try:
             for probe, _ in client.probes:
-                rows = of.orc_point_lookup(client.path, key, probe)[0]
+                rows = of.orc_point_lookup(client.path, client.key, probe)[0]
                 if not wl.same_rows(rows, client.rows(probe)):
                     raise SystemExit(f"lookup of {probe!r} returned wrong rows")
         finally:
             of._block_at = real
         meta = of.read_metadata(client.path)
+    names = dict(enumerate(meta.types[0].field_names, start=1))
     n = len(client.probes)
     per = {f"{names.get(cid, cid)}.{kinds[kind]}":
            {"blocks": round(b / n, 2), "mb": round(nb / n / 1e6, 3)}
@@ -160,6 +165,107 @@ def lookup_blocks(seed: int, workload: str) -> dict:
             "blocks_per_lookup": round(sum(b for b, _ in got.values()) / n, 2),
             "mb_per_lookup": round(sum(nb for _, nb in got.values()) / n / 1e6, 3),
             "streams": per}
+
+
+def _lookup_file(seed: int, workload: str, work: str, column: str = ""):
+    """The perfbench ``workload``'s lookup client, its file written under
+    ``work``; with ``column``, a client that probes that column's first 8
+    distinct values."""
+    from pathlib import Path
+
+    import pyarrow.compute as pc
+
+    from perfbench import inputs, workloads as wl
+
+    if workload == "webtext_encode":
+        table = inputs.webtext_table(seed, wl.ROWS[workload]).slice(
+            0, wl.LOOKUP_SLICE_ROWS)
+    else:
+        table = inputs.lineitem_table(seed, wl.ROWS[workload])
+    client = wl.lookup_client(table, wl.LOOKUP_KEY[workload], seed,
+                              Path(work) / "lookup.orc")
+    if not column:
+        return client
+    values = pc.unique(table.column(column)).to_pylist()[:8]
+    return wl.Lookups(client.path, column, [(v, True) for v in values],
+                      lambda v: table.filter(pc.equal(table.column(column), v)))
+
+
+def lookup_cost(seed: int, workload: str, reps: int, column: str = "") -> dict:
+    """Median CPU per point lookup on the perfbench ``workload``'s lookup
+    file (probing ``column`` if given, else the workload's key), split
+    by self time into block decompression, RLEv2 reads, the key phase
+    (the probed column's group decodes and comparisons) and the rest,
+    with the RLEv2 calls per lookup."""
+    import tempfile
+
+    from orc_rust_spark.codecs import block as blockc
+    from orc_rust_spark.sources import orc_file as of
+    from perfbench import workloads as wl
+
+    clock = time.process_time
+    self_s: dict[str, float] = {}
+    calls: dict[str, int] = {}
+    stack: list[list] = []  # [part, start] of the open wrapped calls
+
+    def timed(fn, part):
+        def run(*args, **kwargs):
+            now = clock()
+            if stack:
+                outer = stack[-1]
+                self_s[outer[0]] = self_s.get(outer[0], 0.0) + now - outer[1]
+            calls[part] = calls.get(part, 0) + 1
+            frame = [part, now]
+            stack.append(frame)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                end = clock()
+                self_s[part] = self_s.get(part, 0.0) + end - frame[1]
+                stack.pop()
+                if stack:
+                    stack[-1][1] = end
+        return run
+
+    # the key phase decodes whole groups: the point read of the other
+    # columns opens its own part, so a nested column's group decodes
+    # inside it are not counted as the key's
+    targets = [(blockc, "decompress_stream", "decompress"),
+               (of, "decode_rlev2", "rlev2"), (of, "decode_rlev2_points", "rlev2"),
+               (of, "_decode_column_group", "key"), (of, "_eq_mask", "key"),
+               (of, "_decode_column_rows", "rest")]
+    saved = [(mod, name, getattr(mod, name)) for mod, name, _ in targets]
+    per_lookup: dict[str, list[float]] = {k: [] for k in (
+        "total", "decompress", "rlev2", "key", "rest")}
+    rle_calls: list[int] = []
+    with tempfile.TemporaryDirectory() as work:
+        client = _lookup_file(seed, workload, work, column)
+        for probe, _ in client.probes:
+            rows = of.orc_point_lookup(client.path, client.key, probe)[0]
+            if not wl.same_rows(rows, client.rows(probe)):
+                raise SystemExit(f"lookup of {probe!r} returned wrong rows")
+        for mod, name, part in targets:
+            setattr(mod, name, timed(getattr(mod, name), part))
+        lookup = timed(of.orc_point_lookup, "rest")
+        try:
+            for _ in range(reps):
+                for probe, _ in client.probes:
+                    self_s.clear()
+                    calls.clear()
+                    lookup(client.path, client.key, probe)
+                    for part in ("decompress", "rlev2", "key", "rest"):
+                        per_lookup[part].append(self_s.get(part, 0.0))
+                    per_lookup["total"].append(sum(self_s.values()))
+                    rle_calls.append(calls.get("rlev2", 0))
+        finally:
+            for mod, name, fn in saved:
+                setattr(mod, name, fn)
+    return {"workload": workload, "seed": seed, "column": client.key,
+            "lookups": len(client.probes),
+            "reps": reps,
+            "cpu_ms_per_lookup": {k: round(statistics.median(v) * 1e3, 3)
+                                  for k, v in per_lookup.items()},
+            "rlev2_calls_per_lookup": round(statistics.mean(rle_calls), 2)}
 
 
 def _identity(batches):
@@ -255,10 +361,14 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--lookup-blocks", action="store_true",
                     help="print the blocks decompressed per point lookup")
+    ap.add_argument("--lookup-cost", action="store_true",
+                    help="print the CPU per point lookup, split by layer")
     ap.add_argument("--python-task-cost", action="store_true",
                     help="print the CPU of a trivial 4-task Python stage")
     ap.add_argument("--decode-path", action="store_true",
                     help="print the stored-table decode path and its CPU")
+    ap.add_argument("--probe-column", default="",
+                    help="with --lookup-cost: probe this column, not the key")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--workload", default="webtext_encode",
                     choices=["webtext_encode", "orc_lookup"])
@@ -274,6 +384,11 @@ def main() -> None:
 
     if args.lookup_blocks:
         print(json.dumps(lookup_blocks(args.seed, args.workload), indent=1))
+        return
+    if args.lookup_cost:
+        print(json.dumps(lookup_cost(args.seed, args.workload, max(args.reps, 3),
+                                     args.probe_column),
+                         indent=1))
         return
     if args.python_task_cost:
         print(json.dumps(python_task_cost(max(args.reps, 7))))

@@ -460,6 +460,28 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit) -> None:
         first = False
 
 
+#: the input column that carries each row's Spark partition id into the
+#: encode task; dropped before the rows are encoded
+PART_ID_COL = "__encode_part_id"
+
+
+def _with_part_id(df: DataFrame) -> DataFrame:
+    """``df`` plus PART_ID_COL = ``spark_partition_id()``. The column is
+    computed below the encode's ``mapInArrow``, so it names the input
+    partition even where a later ``coalesce`` runs the encode of several
+    input partitions inside one task, whose ``TaskContext.partitionId()``
+    is the same for all of them: keyed by it, their chunks would share a
+    ``(part_id, chunk_ord)``."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn(PART_ID_COL, F.spark_partition_id())
+
+
+def _split_part_id(b: pa.RecordBatch) -> tuple[pa.RecordBatch, int]:
+    """-> (the batch without PART_ID_COL, its rows' partition id)."""
+    return b.drop_columns([PART_ID_COL]), b.column(PART_ID_COL)[0].as_py()
+
+
 def encode_parquet_files(
     spark,
     input_dir: str,
@@ -484,19 +506,20 @@ def encode_parquet_files(
     if not files:
         raise FileNotFoundError(f"no parquet files under {input_dir}")
     n_slots = max(1, spark.sparkContext.defaultParallelism)
-    paths_df = spark.createDataFrame(
+    paths_df = _with_part_id(spark.createDataFrame(
         [(f,) for f in files], "path string"
-    ).repartition(min(len(files), n_slots * 4))
+    ).repartition(min(len(files), n_slots * 4)))
 
     def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
-        from pyspark import TaskContext
 
-        part_id = TaskContext.get().partitionId()
         chunk_ord = 0
         buf: list[pa.RecordBatch] = []
         buffered = 0
         for b in batches:
+            if b.num_rows == 0:
+                continue
+            b, part_id = _split_part_id(b)
             for path in b.column("path").to_pylist():
                 pf = pq.ParquetFile(path)
                 for rb in pf.iter_batches(batch_size=65536, columns=columns):
@@ -523,15 +546,13 @@ def encode_table(
     plan = plan or {}
 
     def encode_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        part_id = TaskContext.get().partitionId()
         buf: list[pa.RecordBatch] = []
         buffered = 0
         chunk_ord = 0
         for b in batches:
             if b.num_rows == 0:
                 continue
+            b, part_id = _split_part_id(b)
             buf.append(b)
             buffered += b.nbytes
             if buffered >= stripe_bytes:
@@ -541,4 +562,4 @@ def encode_table(
         if buf:
             yield encode_chunk(pa.Table.from_batches(buf), part_id, chunk_ord, plan)
 
-    return df.mapInArrow(encode_iter, schema=ct.CHUNK_SPARK_SCHEMA)
+    return _with_part_id(df).mapInArrow(encode_iter, schema=ct.CHUNK_SPARK_SCHEMA)

@@ -41,7 +41,7 @@ from ..codecs.byte_rle import decode_byte_rle
 from ..codecs.decimal_codec import decode_decimal
 from ..codecs.float_plain import decode_float
 from ..codecs.rle_v1 import decode_rlev1
-from ..codecs.rle_v2 import decode_rlev2
+from ..codecs.rle_v2 import decode_rlev2, decode_rlev2_points
 from ..codecs.timestamp_split import combine_timestamp_ns, combine_timestamp_us
 from ..codecs.util import CorruptStream
 from ..codecs.util import respace as _respace, split_binary as _split_binary
@@ -1408,6 +1408,7 @@ class StripeIndex:
         self.types = meta.types
         self.block_size = meta.seek_block_size
         self.stride = int(meta.row_index_stride or 10_000)
+        self.n_rows = n_rows
         self.n_groups = (n_rows + self.stride - 1) // self.stride
         self.stream_list, self.encodings, self.tz = _read_stripe_footer(
             footer_raw, self.comp)
@@ -1500,6 +1501,10 @@ class StripeIndex:
             return None
         parsed = self.entries(cid, stats=False)
         return None if parsed is None else (layout, parsed[: self.n_groups])
+
+    def group_rows(self, g: int) -> int:
+        """The rows of group ``g``: the stride, or fewer in the last."""
+        return min(self.stride, self.n_rows - g * self.stride)
 
     def positions(self, cid: int, g: int) -> dict:
         """{stream kind: (block offset, offset in the block, extras)} where
@@ -1630,31 +1635,182 @@ def _span_reader(fh, offset: int):
     return fetch
 
 
-def _rle_values(rle, buf, skip: int, n: int, signed: bool,
-                sel: np.ndarray | None = None) -> np.ndarray:
-    """The ``n`` values after the first ``skip`` of an integer RLE stream,
-    or with ``sel`` (sorted offsets below ``n``) only the values at
-    ``sel``, decoded as one stretch from the first of them to the last.
-    RLEv2 passes the runs before the stretch by header arithmetic; RLEv1
-    decodes from the group's start."""
-    if sel is not None and not sel.size:
-        return np.zeros(0, dtype=np.int64)
+def _rle_values(rle, buf, skip: int, n: int, signed: bool) -> np.ndarray:
+    """The ``n`` values after the first ``skip`` of an integer RLE stream.
+    RLEv2 passes the runs before them by header arithmetic; RLEv1 decodes
+    from the stream's start."""
     if rle is not decode_rlev2:
-        n_need = n if sel is None else int(sel[-1]) + 1
-        vals = rle(buf, skip + n_need, signed=signed, exact=False)[skip:]
-        return vals if sel is None else vals[sel]
-    if sel is None:
-        return rle(buf, n, signed=signed, skip=skip, exact=False)
-    lo = int(sel[0])
-    vals = rle(buf, int(sel[-1]) - lo + 1, signed=signed, skip=skip + lo,
-               exact=False)
-    return vals[sel - lo]
+        return rle(buf, skip + n, signed=signed, exact=False)[skip:]
+    return rle(buf, n, signed=signed, skip=skip, exact=False)
+
+
+def _group_reader(ix: StripeIndex, streams: dict, cid: int, g: int, cache: dict,
+                  seek: int = 0):
+    """``read(kind, window=None)``: group ``g``'s bytes of column ``cid``'s
+    stream ``kind`` (_group_bytes; only the bytes [lo, hi) of a
+    ``window``)."""
+    here = ix.positions(cid, g)
+
+    def read(kind: int, window: tuple[int, int] | None = None) -> bytes:
+        return _group_bytes(streams[(cid, kind)], ix.comp, here[kind][:2],
+                            ix.group_stop(cid, kind, g), cache, (cid, kind),
+                            window, seek)
+    return read
+
+
+def _present(read, exs: dict, n: int) -> np.ndarray:
+    """The first ``n`` bits of a group's PRESENT stream (True: not null)."""
+    skip = exs[S_PRESENT][0] * 8 + exs[S_PRESENT][1]
+    return np.asarray(decode_boolean_rle(read(S_PRESENT), skip + n, exact=False)[skip:])
+
+
+def _dictionary(ix: StripeIndex, streams: dict, cid: int, dict_cache: dict) -> pa.Array:
+    """Column ``cid``'s string dictionary, decoded once per stripe read."""
+    d = dict_cache.get(cid)
+    if d is None:
+        enc_kind, dict_size = ix.encodings[cid]
+        lens = _int_decoder(enc_kind)(
+            blockc.decompress_stream(streams[(cid, S_LENGTH)][:], ix.comp),
+            dict_size, signed=False)
+        d = dict_cache[cid] = _split_binary(
+            blockc.decompress_stream(streams[(cid, S_DICTIONARY_DATA)][:], ix.comp),
+            lens)
+    return d
+
+
+def _decimal_words(t: OrcType, data: bytes, scales: np.ndarray, n: int) -> np.ndarray:
+    """The first ``n`` decimals of a DATA stream's varint mantissas at
+    their ``scales``, rescaled to the column's scale -> ``(n, 2)`` uint64
+    little-endian i128 words."""
+    from ..codecs.decimal_codec import (
+        decode_varints_exact,
+        decode_varints_i64,
+        i128_words,
+        rescale_exact,
+        rescale_i64,
+    )
+
+    if (t.precision or 38) <= 18:
+        try:
+            mant = rescale_i64(decode_varints_i64(data, n), scales, t.scale)
+            words = np.empty((n, 2), dtype=np.uint64)
+            words[:, 0] = mant.view(np.uint64)
+            words[:, 1] = (mant >> np.int64(63)).view(np.uint64)
+            return words
+        except ValueError:
+            # mantissa varints wider than 64-bit zigzag despite a
+            # declared precision <= 18 (legal on the wire), or an
+            # int64-overflowing rescale: exact i128 fallback, mirroring
+            # _decode_column — without it the SAME file full-decoded
+            # but crashed the pruned read (code-review r6)
+            pass
+    # wide decimals: exact Python-int rescale (int64 would overflow)
+    return i128_words(rescale_exact(decode_varints_exact(data, n), scales, t.scale))
+
+
+def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
+                   sel: np.ndarray | None) -> tuple:
+    """One group's values of a scalar column of type ``t``: its first
+    ``n`` dense values, or with ``sel`` (sorted dense offsets, the last
+    ``n - 1``) only the values at ``sel``. ``read`` reads the group's
+    streams (_group_reader) and ``exs`` holds their run offsets. Returns
+    the parts _scalar_array joins: (ints,), (seconds, nanos), (floats,),
+    (dictionary indices,), (string bytes, lengths), (int8s or bools,) or
+    (i128 words,).
+
+    Integer streams are read whole, or at ``sel`` by decode_rlev2_points
+    (RLEv2) or a decode from the group's start through ``n`` (RLEv1).
+    Byte, boolean and decimal streams decode through ``n`` and take
+    ``sel``. Floats, doubles and direct strings and binaries read only the
+    byte window of ``sel``: 4 or 8 bytes per value, or the LENGTH prefix
+    sum (lengths decoded through ``n``)."""
+    k = t.kind
+    rle = _int_decoder(enc_kind)
+
+    def ints(kind: int, signed: bool) -> np.ndarray:
+        buf, skip = read(kind), exs[kind][0]
+        if sel is None:
+            return _rle_values(rle, buf, skip, n, signed)
+        if rle is decode_rlev2:
+            return decode_rlev2_points(buf, sel, signed, skip)
+        return _rle_values(rle, buf, skip, n, signed)[sel]
+
+    def pick(a: np.ndarray) -> np.ndarray:
+        return a if sel is None else a[sel]
+
+    if k in (K_SHORT, K_INT, K_LONG, K_DATE):
+        return (ints(S_DATA, True),)
+    if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
+        return ints(S_DATA, True), ints(S_SECONDARY, False)
+    if k in (K_FLOAT, K_DOUBLE):
+        dtype = np.dtype(np.float32 if k == K_FLOAT else np.float64)
+        first = 0 if sel is None else int(sel[0])
+        w = dtype.itemsize
+        vals = decode_float(read(S_DATA, (first * w, n * w)), n - first, dtype)
+        return (vals if sel is None else vals[sel - first],)
+    if k in _STRING_KINDS and enc_kind in (E_DICTIONARY, E_DICTIONARY_V2):
+        return (ints(S_DATA, False),)
+    if k in _STRING_KINDS:
+        lengths = _rle_values(rle, read(S_LENGTH), exs[S_LENGTH][0], n, False)
+        if sel is None:
+            return read(S_DATA, (0, int(lengths.sum()))), lengths
+        picked = lengths[sel]
+        starts = np.cumsum(lengths)[sel] - picked
+        lo = int(starts[0])
+        window = np.frombuffer(read(S_DATA, (lo, int(starts[-1] + picked[-1]))),
+                               dtype=np.uint8)
+        # byte j of picked value i sits at window[starts[i] - lo + j]
+        shift = starts - lo - (np.cumsum(picked) - picked)
+        at = np.arange(int(picked.sum())) + np.repeat(shift, picked)
+        return window[at].tobytes(), picked
+    if k == K_BYTE:
+        sk = exs[S_DATA][0]
+        return (pick(decode_byte_rle(read(S_DATA), sk + n, exact=False)[sk:]),)
+    if k == K_BOOLEAN:
+        skip = exs[S_DATA][0] * 8 + exs[S_DATA][1]
+        return (pick(np.asarray(decode_boolean_rle(read(S_DATA), skip + n,
+                                                   exact=False)[skip:])),)
+    if k == K_DECIMAL:
+        scales = _rle_values(rle, read(S_SECONDARY), exs[S_SECONDARY][0], n, True)
+        return (pick(_decimal_words(t, read(S_DATA), scales, n)),)
+    # layout() already excluded every other kind
+    raise NotImplementedError(f"group seek for ORC kind {k}")  # pragma: no cover
+
+
+def _scalar_array(ix: StripeIndex, streams: dict, col_id: int, parts: list,
+                  dict_cache: dict) -> pa.Array:
+    """ONE Arrow array of scalar column ``col_id`` from the per-group
+    _scalar_values ``parts``, in order (no nulls)."""
+    t = ix.types[col_id]
+    k = t.kind
+    cols = [c[0] if len(c) == 1
+            else b"".join(c) if isinstance(c[0], bytes) else np.concatenate(c)
+            for c in zip(*parts)]
+    if k == K_DATE:
+        return pa.array(cols[0].astype(np.int32), type=pa.date32())
+    if k in (K_SHORT, K_INT, K_LONG):
+        dense = pa.array(cols[0], type=pa.int64())
+        return dense if k == K_LONG else dense.cast(_K_TO_ARROW[k])
+    if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
+        return pa.array(_ts_us(cols[0], cols[1], ix.tz, k), type=pa.timestamp("us"))
+    if k == K_DECIMAL:
+        return pa.Array.from_buffers(pa.decimal128(t.precision or 38, t.scale),
+                                     len(cols[0]), [None, pa.py_buffer(cols[0].tobytes())])
+    if k == K_BYTE:
+        return pa.array(cols[0].view(np.int8), type=pa.int8())
+    if k not in _STRING_KINDS:
+        return pa.array(cols[0])
+    if ix.encodings[col_id][0] in (E_DICTIONARY, E_DICTIONARY_V2):
+        dense = _dictionary(ix, streams, col_id, dict_cache).take(
+            pa.array(cols[0], type=pa.int64()))
+    else:
+        dense = _split_binary(cols[0], cols[1])
+    return dense if k == K_BINARY else dense.cast(pa.large_string())
 
 
 def _decode_column_group(
     ix: StripeIndex, streams: dict, col_id: int, g: int, n_g: int,
     name: str, dict_cache: dict, block_cache: dict | None = None,
-    rows: np.ndarray | None = None,
 ) -> pa.Array:
     """Decode ONE row group of a column (``n_g`` = this column's value
     count within the group — top-level rows for root children, element
@@ -1665,82 +1821,25 @@ def _decode_column_group(
     inside a run), so no later group is decoded.
     Nested columns recurse: the parent derives each child's group value
     count (PRESENT for struct, LENGTH sums for list/map) and the child
-    seeks via its OWN row-index entry for the same group.
-
-    ``rows`` (sorted group-local row numbers) keeps only those rows, and
-    every stream is decoded only as far as the last of them: PRESENT bits
-    and RLE values through that row (RLEv2 skips the runs before the
-    first of them by header arithmetic), dictionary strings as their
-    indices plus the dictionary. Floats, doubles and direct strings and
-    binaries read only the byte window of the selected values: the rows
-    map to dense value indices through PRESENT, and the window is 4 or 8
-    bytes per value, or the LENGTH prefix sum (lengths are decoded
-    through the last selected value). In a file of this engine's writer
-    (``StripeIndex.block_size``) the DATA stream is then decompressed
-    only from the block that holds the window's first byte through the
-    block that holds its last (_group_bytes); in other files from the
-    group's start. Nested and union columns decode the whole group and
-    take the rows.
+    seeks via its OWN row-index entry for the same group. Scalar columns
+    read through _scalar_values and _scalar_array, which a point read of
+    a few rows (_decode_column_rows) shares.
 
     ``block_cache`` keeps the decompressed blocks of one stripe decode:
     groups whose positions share a block — continuous streams whose block
     offset stays 0, liborc's unaligned blocks — decompress it once."""
-    t = ix.types[col_id]
-    if rows is not None and t.kind in (K_STRUCT, K_LIST, K_MAP, K_UNION):
-        whole = _decode_column_group(ix, streams, col_id, g, n_g, name,
-                                     dict_cache, block_cache)
-        return whole.take(pa.array(rows, type=pa.int64()))
     _trace_decode(name)
     if block_cache is None:
         block_cache = {}
-    comp = ix.comp
-    enc_kind, dict_size = ix.encodings[col_id]
-    rle = _int_decoder(enc_kind)
-    has_present = (col_id, S_PRESENT) in ix.offsets
-    here = ix.positions(col_id, g)
-    exs = {kind: at[2] for kind, at in here.items()}
+    t = ix.types[col_id]
+    exs = {kind: at[2] for kind, at in ix.positions(col_id, g).items()}
+    read = _group_reader(ix, streams, col_id, g, block_cache)
 
-    # a row selection seeks to the blocks of its byte window (files of
-    # this engine's writer); a whole-group read starts at the group
-    seek = ix.block_size if rows is not None else 0
-
-    def read(kind: int, window: tuple[int, int] | None = None) -> bytes:
-        """This group's bytes of stream ``kind`` (only the bytes [lo, hi)
-        of a ``window``)."""
-        chunk, off, _ = here[kind]
-        return _group_bytes(streams[(col_id, kind)], comp, (chunk, off),
-                            ix.group_stop(col_id, kind, g), block_cache,
-                            (col_id, kind), window, seek)
-
-    n_need = n_g if rows is None else int(rows[-1]) + 1
     not_null = None
-    n_dense = n_need
-    if has_present:
-        skip = exs[S_PRESENT][0] * 8 + exs[S_PRESENT][1]
-        bits = decode_boolean_rle(read(S_PRESENT), skip + n_need, exact=False)
-        not_null = np.asarray(bits[skip:])
+    n_dense = n_g
+    if (col_id, S_PRESENT) in ix.offsets:
+        not_null = _present(read, exs, n_g)
         n_dense = int(not_null.sum())
-    # sel: dense offsets of the selected non-null rows (None: every row);
-    # valid: the result's validity (None: no nulls)
-    sel, valid = None, not_null
-    if rows is not None:
-        if not_null is None:
-            sel = rows
-        else:
-            valid = not_null[rows]
-            sel = (np.cumsum(not_null) - 1)[rows][valid]
-
-    def pick(a: np.ndarray) -> np.ndarray:
-        return a if sel is None else a[sel]
-
-    def span() -> tuple[int, int]:
-        """The dense values [first, last) a byte-window read covers."""
-        if sel is None:
-            return 0, n_dense
-        return (int(sel[0]), int(sel[-1]) + 1) if sel.size else (0, 0)
-
-    def ints(kind: int, signed: bool) -> np.ndarray:
-        return _rle_values(rle, read(kind), exs[kind][0], n_dense, signed, sel)
 
     k = t.kind
     if k == K_STRUCT:
@@ -1750,8 +1849,7 @@ def _decode_column_group(
             for cid, fname in zip(t.subtypes, t.field_names)
         ]
         dense = pa.StructArray.from_arrays(children, t.field_names)
-        return _respace(dense, not_null)
-    if k == K_UNION:
+    elif k == K_UNION:
         # per-group seek of the tag stream; each child's group value count
         # is that group's tag count for its variant (children store values
         # densely per tag — same tagged-struct expansion as the full path)
@@ -1769,9 +1867,9 @@ def _decode_column_group(
             fields.append(child.take(pa.array(idx, type=pa.int64(), mask=~is_i)))
             names.append(f"f{i}")
         dense = pa.StructArray.from_arrays(fields, names)
-        return _respace(dense, not_null)
-    if k in (K_LIST, K_MAP):
-        lengths = ints(S_LENGTH, False)
+    elif k in (K_LIST, K_MAP):
+        lengths = _rle_values(_int_decoder(ix.encodings[col_id][0]), read(S_LENGTH),
+                              exs[S_LENGTH][0], n_dense, False)
         n_child = int(lengths.sum())
         if k == K_LIST:
             cid = t.subtypes[0]
@@ -1785,99 +1883,58 @@ def _decode_column_group(
             items = _decode_column_group(ix, streams, vid, g, n_child,
                                          f"{name}.value", dict_cache, block_cache)
             dense = pa.MapArray.from_arrays(_int32_offsets(lengths), keys, items)
-        return _respace(dense, not_null)
-    if k in (K_SHORT, K_INT, K_LONG, K_DATE):
-        vals = ints(S_DATA, True)
-        if k == K_DATE:
-            dense = pa.array(vals.astype(np.int32), type=pa.int32()).cast(pa.date32())
-        else:
-            dense = pa.array(vals, type=pa.int64())
-            target = {K_SHORT: pa.int16(), K_INT: pa.int32(), K_LONG: pa.int64()}[k]
-            if target != pa.int64():
-                dense = dense.cast(target)
-    elif k == K_BYTE:
-        sk = exs[S_DATA][0]
-        u8 = pick(decode_byte_rle(read(S_DATA), sk + n_dense, exact=False)[sk:])
-        dense = pa.array(u8.view(np.int8), type=pa.int8())
-    elif k == K_BOOLEAN:
-        skip = exs[S_DATA][0] * 8 + exs[S_DATA][1]
-        bits = decode_boolean_rle(read(S_DATA), skip + n_dense, exact=False)
-        dense = pa.array(pick(bits[skip:]))
-    elif k in (K_FLOAT, K_DOUBLE):
-        dtype = np.dtype(np.float32 if k == K_FLOAT else np.float64)
-        w = dtype.itemsize
-        first, last = span()
-        vals = decode_float(read(S_DATA, (first * w, last * w)),
-                            last - first, dtype)
-        dense = pa.array(vals if sel is None else vals[sel - first])
-    elif k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        secs = ints(S_DATA, True)
-        nanos = ints(S_SECONDARY, False)
-        dense = pa.array(_ts_us(secs, nanos, ix.tz, k), type=pa.int64()).cast(pa.timestamp("us"))
-    elif k == K_DECIMAL:
-        from ..codecs.decimal_codec import (
-            decode_varints_exact,
-            decode_varints_i64,
-            i128_words,
-            rescale_exact,
-            rescale_i64,
-        )
+    else:
+        dense = _scalar_array(ix, streams, col_id, [_scalar_values(
+            t, ix.encodings[col_id][0], read, exs, n_dense, None)], dict_cache)
+    return _respace(dense, not_null)
 
-        scales = _rle_values(rle, read(S_SECONDARY), exs[S_SECONDARY][0],
-                             n_dense, True)
-        data = read(S_DATA)
-        words = None
-        if (t.precision or 38) <= 18:
-            try:
-                mant = rescale_i64(decode_varints_i64(data, n_dense),
-                                   scales, t.scale)
-                words = np.empty((n_dense, 2), dtype=np.uint64)
-                words[:, 0] = mant.view(np.uint64)
-                words[:, 1] = (mant >> np.int64(63)).view(np.uint64)
-            except ValueError:
-                # mantissa varints wider than 64-bit zigzag despite a
-                # declared precision <= 18 (legal on the wire), or an
-                # int64-overflowing rescale: exact i128 fallback, mirroring
-                # _decode_column — without it the SAME file full-decoded
-                # but crashed the pruned read (code-review r6)
-                words = None
-        if words is None:
-            # wide decimals: exact Python-int rescale (int64 would overflow)
-            words = i128_words(rescale_exact(
-                decode_varints_exact(data, n_dense), scales, t.scale))
-        words = pick(words)
-        dense = pa.Array.from_buffers(
-            pa.decimal128(t.precision or 38, t.scale), len(words),
-            [None, pa.py_buffer(words.tobytes())],
-        )
-    elif k in (K_STRING, K_VARCHAR, K_CHAR, K_BINARY):
-        if enc_kind in (E_DICTIONARY, E_DICTIONARY_V2):
-            if col_id not in dict_cache:
-                dict_lens = rle(
-                    blockc.decompress_stream(streams[(col_id, S_LENGTH)][:], comp),
-                    dict_size, signed=False)
-                dict_cache[col_id] = _split_binary(
-                    blockc.decompress_stream(
-                        streams[(col_id, S_DICTIONARY_DATA)][:], comp),
-                    dict_lens)
-            dense = dict_cache[col_id].take(
-                pa.array(ints(S_DATA, False), type=pa.int64()))
-        else:
-            lengths = _rle_values(rle, read(S_LENGTH), exs[S_LENGTH][0],
-                                  n_dense, False)
-            first, last = span()
-            lo = int(lengths[:first].sum())
-            window_lengths = lengths[first:last]
-            dense = _split_binary(
-                read(S_DATA, (lo, lo + int(window_lengths.sum()))),
-                window_lengths)
-            if sel is not None:
-                dense = dense.take(pa.array(sel - first, type=pa.int64()))
-        if k != K_BINARY:
-            dense = dense.cast(pa.large_string())
-    else:  # pragma: no cover — layout() already excluded these
-        raise NotImplementedError(f"group seek for ORC kind {k} ({name})")
-    return _respace(dense, valid)
+
+def _decode_column_rows(
+    ix: StripeIndex, streams: dict, col_id: int, hits: dict, name: str,
+    dict_cache: dict, block_cache: dict,
+) -> pa.Array:
+    """A point read of one column: its values at the rows ``hits`` picks
+    ({group: sorted group-local rows}, groups ascending), as ONE Arrow
+    array of _decode_column_group's type.
+
+    Each hit group's PRESENT is decoded through its last picked row and
+    maps the rows to dense value offsets once; _scalar_values reads the
+    group's values at those offsets (an RLEv2 stream by one walk over its
+    run headers, decode_rlev2_points) and _scalar_array joins the groups,
+    indexing a dictionary once. In a file of this engine's writer
+    (``StripeIndex.block_size``) a float or direct string DATA stream is
+    decompressed only from the block that holds the picked values' first
+    byte through the block that holds their last (_group_bytes); in other
+    files from the group's start. Nested and union columns decode each
+    hit group whole and take the rows."""
+    t = ix.types[col_id]
+    if t.kind in (K_STRUCT, K_LIST, K_MAP, K_UNION):
+        parts = [_decode_column_group(ix, streams, col_id, g, ix.group_rows(g), name,
+                                      dict_cache, block_cache).take(
+                     pa.array(rows, type=pa.int64()))
+                 for g, rows in hits.items()]
+        return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
+    _trace_decode(name)
+    has_present = (col_id, S_PRESENT) in ix.offsets
+    parts, valids = [], []
+    for g, rows in hits.items():
+        exs = {kind: at[2] for kind, at in ix.positions(col_id, g).items()}
+        read = _group_reader(ix, streams, col_id, g, block_cache, ix.block_size)
+        sel = rows
+        if has_present:
+            not_null = _present(read, exs, int(rows[-1]) + 1)
+            valid = not_null[rows]
+            valids.append(valid)
+            sel = (np.cumsum(not_null) - 1)[rows][valid]
+            if not sel.size:
+                continue
+        parts.append(_scalar_values(t, ix.encodings[col_id][0], read, exs,
+                                    int(sel[-1]) + 1, sel))
+    valid = np.concatenate(valids) if has_present else None
+    if not parts:
+        # every picked row is null
+        return pa.nulls(len(valid), _arrow_type_of(ix.types, col_id))
+    return _respace(_scalar_array(ix, streams, col_id, parts, dict_cache), valid)
 
 
 def _bloom_probe_ok(col_kind: int, eq) -> bool:
@@ -2187,8 +2244,9 @@ def _decode_stripe_pruned_impl(
     projected) also applies that probe exactly, as the late-materialized
     read of a point lookup: the kept groups' ``column`` is decoded first,
     ``pc.equal`` picks its matching rows (an incomparable probe matches
-    none), and the other projected columns are decoded at those rows
-    only (_decode_column_group's ``rows``). The table then holds just the
+    none), and each other projected column is read at those rows only,
+    over all the hit groups at once (_decode_column_rows). The table then
+    holds just the
     matching rows; ``groups_decoded`` still counts the groups kept by
     pruning.
 
@@ -2286,10 +2344,9 @@ def _decode_stripe_pruned_impl(
     block_cache: dict[tuple, tuple] = {}
     streams: dict[tuple[int, int], _StreamBytes] = {}
 
-    def group(cid: int, name: str, g: int, rows=None) -> pa.Array:
-        return _decode_column_group(
-            ix, streams, cid, g, min(stride, n_rows - g * stride), name,
-            dict_cache, block_cache, rows)
+    def group(cid: int, name: str, g: int) -> pa.Array:
+        return _decode_column_group(ix, streams, cid, g, ix.group_rows(g), name,
+                                    dict_cache, block_cache)
 
     if residual:
         # late materialization: the probed column first, then every other
@@ -2313,7 +2370,8 @@ def _decode_stripe_pruned_impl(
         others = [cid for cid, name in zip(proj_ids, proj) if name != column]
         streams.update(_fetch_streams(ix, ix.ranges(others, list(hits)), fetch))
         cols = {name: key_parts if name == column
-                else [group(cid, name, g, rows) for g, rows in hits.items()]
+                else [_decode_column_rows(ix, streams, cid, hits, name,
+                                          dict_cache, block_cache)]
                 for cid, name in zip(proj_ids, proj)}
     else:
         streams.update(_fetch_streams(ix, ix.ranges(proj_ids, keep), fetch))
@@ -3926,14 +3984,20 @@ def orc_point_lookup(path: str, column: str, value,
     code path (decode_stripe_pruned with ``residual=True``): the kept
     groups' ``column`` alone is decoded and compared with ``value`` (a
     probe whose type cannot be compared with the column matches nothing),
-    then the other columns are decoded at the matching rows only. Each
-    phase reads just the byte ranges of the streams it decodes, coalesced
-    where they touch, through this call's handle; a stream is decompressed
-    only over the blocks that hold the kept groups (_group_bytes). At the
-    matching rows, a float or direct string/binary DATA stream of a file
-    that this engine wrote (its Footer softwareVersion) is decompressed
-    only over the blocks that hold those rows' bytes, found by block
-    arithmetic from the PostScript's compressionBlockSize."""
+    then each other column is read at the matching rows only, once over
+    all the hit groups (_decode_column_rows): an RLEv2 stream by one walk
+    over its run headers (decode_rlev2_points), which decodes no run but
+    a bit-packed DELTA or PATCHED_BASE one that holds a matching row (a
+    probe matching a large share of a group's rows decodes the stretch
+    from its first match through its last instead), and one Arrow array
+    per column. Each phase reads just the byte ranges of the streams it
+    decodes, coalesced where they touch, through this call's handle; a
+    stream is decompressed only over the blocks that hold the kept
+    groups (_group_bytes). At the matching rows, a float or direct
+    string/binary DATA stream of a file that this engine wrote (its
+    Footer softwareVersion) is decompressed only over the blocks that
+    hold those rows' bytes, found by block arithmetic from the
+    PostScript's compressionBlockSize."""
     import datetime as _dt
     import decimal as _decimal
 

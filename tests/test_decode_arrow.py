@@ -65,6 +65,21 @@ def test_encode_parquet_files_roundtrip(spark, tmp_path):
     assert bad == 0 and decoded.count() == 1500
 
 
+def test_coalesce_after_encode_keeps_chunk_keys_unique(spark, tmp_path):
+    """A coalesce(1) after encode_table runs the encode of both input
+    partitions inside one task. Each chunk still takes its input
+    partition's id (spark_partition_id below the mapInArrow), so no two
+    chunks share a key and the stored table decodes to the source."""
+    src = webtext_df(spark, 200, num_partitions=2)
+    path = str(tmp_path / "coalesced")
+    encode_table(src).coalesce(1).write.parquet(path)
+    chunks = spark.read.parquet(path)
+    keys = ("part_id", "chunk_ord", "column", "stream_kind")
+    assert chunks.groupBy(*keys).count().where("count > 1").count() == 0
+    assert sorted(r.part_id for r in chunks.select("part_id").distinct().collect()) == [0, 1]
+    assert _digest(decode_table_arrow(chunks, WEBTEXT_SCHEMA)) == _digest(src)
+
+
 # --- map-only decode of stored chunk tables: the footer proof and its fallbacks
 
 KEYS = ("part_id", "chunk_ord")

@@ -1978,8 +1978,9 @@ def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeyp
         allowed += sum(starts[g + 1] - starts[g] for g in want_groups)
     assert allowed < st.data_length / 3  # the bound has teeth
 
-    comp_in, rle_ns = [], []
+    comp_in, rle_ns, point_ns = [], [], []
     real_decompress, real_rle = blockc.decompress_stream, of.decode_rlev2
+    real_points = of.decode_rlev2_points
 
     def counting_decompress(buf, codec="zlib"):
         comp_in.append(len(buf))
@@ -1989,8 +1990,13 @@ def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeyp
         rle_ns.append(n)
         return real_rle(buf, n, *args, **kwargs)
 
+    def counting_points(buf, sel, *args, **kwargs):
+        point_ns.append(len(sel))
+        return real_points(buf, sel, *args, **kwargs)
+
     monkeypatch.setattr(blockc, "decompress_stream", counting_decompress)
     monkeypatch.setattr(of, "decode_rlev2", counting_rle)
+    monkeypatch.setattr(of, "decode_rlev2_points", counting_points)
     got, decoded, total = of.orc_point_lookup(path, "key", probe)
     monkeypatch.undo()
 
@@ -1998,11 +2004,12 @@ def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeyp
     assert decoded == len(want_groups) and total == n // stride
     assert sum(comp_in) <= allowed, (sum(comp_in), allowed)
     # RLEv2 streams outside the key column: a, b, ts (seconds and nanos)
-    # and cat (indices) decode one value each, txt its lengths through
-    # the matching row, cat its dictionary lengths; the key column
-    # decodes its kept group
+    # and cat (indices) are read at the matching row alone by the point
+    # walker; txt decodes its lengths through the matching row, cat its
+    # dictionary lengths; the key column decodes its kept group
+    assert point_ns == [1] * 5, point_ns
     n_dict = len(set(tbl.column("cat").to_pylist()))
-    want_ns = [1] * 5 + [row % stride + 1, n_dict, stride]
+    want_ns = [row % stride + 1, n_dict, stride]
     assert sorted(rle_ns) == sorted(want_ns), rle_ns
 
 
