@@ -36,14 +36,13 @@ from . import fsio
 from .. import __version__
 from ..codecs import block as blockc
 from ..codecs.boolean_rle import decode_boolean_rle
-from ..codecs.present import decode_present
 from ..codecs.byte_rle import decode_byte_rle
-from ..codecs.decimal_codec import decode_decimal
 from ..codecs.float_plain import decode_float
 from ..codecs.rle_v1 import decode_rlev1
 from ..codecs.rle_v2 import decode_rlev2, decode_rlev2_points
 from ..codecs.timestamp_split import combine_timestamp_ns, combine_timestamp_us
 from ..codecs.util import CorruptStream
+from ..codecs.util import int32_offsets as _int32_offsets
 from ..codecs.util import respace as _respace, split_binary as _split_binary
 
 MAGIC = b"ORC"
@@ -886,161 +885,6 @@ def _ts_us(secs: np.ndarray, nanos_enc: np.ndarray, tz: str, kind: int,
     return combine_timestamp_us(secs, nanos_enc)
 
 
-from ..codecs.util import int32_offsets as _int32_offsets  # shared helper
-
-
-def _decode_column(col_id: int, t: OrcType, streams: dict, encodings, n: int,
-                   comp: str, name: str, tz: str = "UTC",
-                   types: list[OrcType] | None = None,
-                   unit: str = "us") -> pa.Array:
-    _trace_decode(name)
-
-    def get(kind):
-        # writers may suppress zero-length streams from the stripe footer
-        # (e.g. an all-null column carries no DATA/LENGTH): absent decodes
-        # as an empty stream rather than crashing (code-review r6)
-        raw = streams.get((col_id, kind))
-        return b"" if raw is None else blockc.decompress_stream(raw, comp)
-
-    enc_kind, dict_size = encodings[col_id]
-    rle = _int_decoder(enc_kind)
-    has_present = (col_id, S_PRESENT) in streams
-    not_null = decode_present(get(S_PRESENT), n) if has_present else None
-    n_dense = int(not_null.sum()) if not_null is not None else n
-    data = get(S_DATA)
-    k = t.kind
-
-    # --- nested types: same offsets model as the chunk engine -------------
-    # (reference src/array_decoder/{list.rs:36-104, map.rs:35-123,
-    # struct_decoder.rs:33-95}: struct children carry one entry per present
-    # parent row, list/map children one entry per element, each with their
-    # own PRESENT; parent nulls respaced after assembly)
-    if k == K_STRUCT:
-        children = [
-            _decode_column(cid, types[cid], streams, encodings, n_dense, comp,
-                           f"{name}.{fname}", tz, types, unit)
-            for cid, fname in zip(t.subtypes, t.field_names)
-        ]
-        dense = pa.StructArray.from_arrays(children, t.field_names)
-        return _respace(dense, not_null)
-    if k == K_LIST:
-        lengths = rle(get(S_LENGTH), n_dense, signed=False)
-        cid = t.subtypes[0]
-        child = _decode_column(cid, types[cid], streams, encodings,
-                               int(lengths.sum()), comp, f"{name}.item", tz,
-                               types, unit)
-        dense = pa.ListArray.from_arrays(_int32_offsets(lengths), child)
-        return _respace(dense, not_null)
-    if k == K_MAP:
-        lengths = rle(get(S_LENGTH), n_dense, signed=False)
-        n_child = int(lengths.sum())
-        kid, vid = t.subtypes[0], t.subtypes[1]
-        keys = _decode_column(kid, types[kid], streams, encodings, n_child,
-                              comp, f"{name}.key", tz, types, unit)
-        items = _decode_column(vid, types[vid], streams, encodings, n_child,
-                               comp, f"{name}.value", tz, types, unit)
-        dense = pa.MapArray.from_arrays(_int32_offsets(lengths), keys, items)
-        return _respace(dense, not_null)
-    if k == K_UNION:
-        # ORC union (src/array_decoder/union.rs:36-163): DATA = byte-RLE
-        # variant tags; each child column stores values DENSELY for its
-        # own tag only. Spark has no union type, so the decode target is
-        # the tagged-struct expansion struct<tag:int8, f0:T0, f1:T1, ...>
-        # with f_i null wherever tag != i — lossless and SQL-queryable.
-        tags = decode_byte_rle(data, n_dense)
-        fields = [pa.array(tags.view(np.int8), type=pa.int8())]
-        names = ["tag"]
-        for i, cid in enumerate(t.subtypes):
-            sel = tags == i
-            n_child = int(sel.sum())
-            child = _decode_column(cid, types[cid], streams, encodings,
-                                   n_child, comp, f"{name}.{i}", tz, types,
-                                   unit)
-            idx = np.zeros(n_dense, dtype=np.int64)
-            idx[sel] = np.arange(n_child)
-            fields.append(child.take(pa.array(idx, type=pa.int64(), mask=~sel)))
-            names.append(f"f{i}")
-        dense = pa.StructArray.from_arrays(fields, names)
-        return _respace(dense, not_null)
-
-    if k in (K_SHORT, K_INT, K_LONG):
-        vals = rle(data, n_dense, signed=True)
-        dense = pa.array(vals, type=pa.int64())
-        target = {K_SHORT: pa.int16(), K_INT: pa.int32(), K_LONG: pa.int64()}[k]
-        out = _respace(dense, not_null)
-        return out if target == pa.int64() else out.cast(target)
-    if k == K_BYTE:
-        u8 = decode_byte_rle(data, n_dense)
-        return _respace(pa.array(u8.view(np.int8), type=pa.int8()), not_null)
-    if k == K_BOOLEAN:
-        bits = decode_boolean_rle(data, n_dense)
-        return _respace(pa.array(bits), not_null)
-    if k == K_FLOAT:
-        return _respace(pa.array(decode_float(data, n_dense, np.float32)), not_null)
-    if k == K_DOUBLE:
-        return _respace(pa.array(decode_float(data, n_dense, np.float64)), not_null)
-    if k == K_DATE:
-        days = rle(data, n_dense, signed=True)
-        dense = pa.array(days.astype(np.int32), type=pa.int32()).cast(pa.date32())
-        return _respace(dense, not_null)
-    if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        secs = rle(data, n_dense, signed=True)
-        nanos = rle(get(S_SECONDARY), n_dense, signed=False)
-        vals = _ts_us(secs, nanos, tz, k, unit)
-        dense = pa.array(vals, type=pa.int64()).cast(pa.timestamp(unit))
-        return _respace(dense, not_null)
-    if k == K_DECIMAL:
-        try:
-            if (t.precision or 38) > 18:
-                # rescaling a 64-bit mantissa to a wide declared scale can
-                # silently overflow int64 — wide decimals always take the
-                # exact path
-                raise ValueError("precision > 18")
-            # the SECONDARY scale stream follows the column's int encoding
-            # (RLEv1 under legacy DIRECT, RLEv2 under DIRECT_V2) — pass the
-            # encoding-selected decoder, and let rescale overflow raise
-            # into the exact path (code-review r6)
-            mant = decode_decimal(data, get(S_SECONDARY), n_dense,
-                                  t.scale, rle=rle)
-            words = np.empty((n_dense, 2), dtype=np.uint64)
-            words[:, 0] = mant.view(np.uint64)
-            words[:, 1] = (mant >> np.int64(63)).view(np.uint64)
-        except ValueError:
-            # mantissa varints wider than 64-bit zigzag (precision > 18) or
-            # an int64-overflowing rescale: exact i128 slow path, mirroring
-            # operators.decode — including the SECONDARY per-value scale
-            # rescale to the declared scale
-            from ..codecs.decimal_codec import (
-                decode_varints_exact,
-                i128_words,
-                rescale_exact,
-            )
-
-            ints = decode_varints_exact(data, n_dense)
-            scales = rle(get(S_SECONDARY), n_dense, signed=True)
-            words = i128_words(rescale_exact(ints, scales, t.scale))
-        dense = pa.Array.from_buffers(
-            pa.decimal128(t.precision or 38, t.scale), n_dense,
-            [None, pa.py_buffer(words.tobytes())],
-        )
-        return _respace(dense, not_null)
-    if k in (K_STRING, K_BINARY, K_VARCHAR, K_CHAR):
-        if enc_kind in (E_DICTIONARY, E_DICTIONARY_V2):
-            indices = rle(data, n_dense, signed=False)
-            dict_lens = rle(get(S_LENGTH), dict_size, signed=False)
-            dictionary = _split_binary(get(S_DICTIONARY_DATA), dict_lens)
-            dense = pa.DictionaryArray.from_arrays(
-                pa.array(indices, type=pa.int64()), dictionary
-            ).cast(pa.large_binary())
-        else:
-            lengths = rle(get(S_LENGTH), n_dense, signed=False)
-            dense = _split_binary(data, lengths)
-        if k != K_BINARY:
-            dense = dense.cast(pa.large_string())
-        return _respace(dense, not_null)
-    raise NotImplementedError(f"ORC type kind {k} for column {name!r}")
-
-
 def decode_stripe(buf: bytes, footer_raw: bytes, meta: OrcMeta, n_rows: int,
                   columns: list[str] | None = None,
                   timestamp_unit: str = "us") -> pa.Table:
@@ -1048,7 +892,11 @@ def decode_stripe(buf: bytes, footer_raw: bytes, meta: OrcMeta, n_rows: int,
 
     The stripe footer lists ALL streams in file order — index-region
     streams (ROW_INDEX/BLOOM) first, then data streams — so offsets are
-    walked across the whole region (src/stripe.rs:154-182 analog).
+    walked across the whole region (src/stripe.rs:154-182 analog;
+    StripeIndex). Each projected root column decodes as one group that
+    spans the stripe (_decode_column_group with ``g`` None), through the
+    same per-kind read rules as pruned and point reads; no ROW_INDEX is
+    needed.
 
     Corruption-hardened like read_metadata (r7, driven by the official
     corrupt/ fixtures): low-level failures from truncated/contradictory
@@ -1108,21 +956,16 @@ def _decode_stripe_impl(buf: bytes, footer_raw: bytes, meta: OrcMeta,
                         n_rows: int,
                         columns: list[str] | None = None,
                         timestamp_unit: str = "us") -> pa.Table:
-    stream_list, encodings, tz = _read_stripe_footer(footer_raw, meta.compression)
-    streams: dict[tuple[int, int], bytes] = {}
-    pos = 0
-    for col, kind, length in stream_list:
-        streams[(col, kind)] = buf[pos: pos + length]
-        pos += length
+    ix = StripeIndex(footer_raw, meta, n_rows, lambda end: buf)
+    body = memoryview(buf)
+    streams = {key: body[at: at + length] for key, (at, length) in ix.offsets.items()}
     root = meta.types[0]
-    cols = {}
-    for child_id, name in zip(root.subtypes, root.field_names):
-        if columns is not None and name not in columns:
-            continue  # projection: unprojected streams are never decoded
-        cols[name] = _decode_column(
-            child_id, meta.types[child_id], streams, encodings, n_rows,
-            meta.compression, name, tz, meta.types, timestamp_unit,
-        )
+    dict_cache: dict[int, pa.Array] = {}
+    # projection: unprojected streams are never decoded
+    cols = {name: _decode_column_group(ix, streams, cid, None, n_rows, name, dict_cache,
+                                       unit=timestamp_unit)
+            for cid, name in zip(root.subtypes, root.field_names)
+            if columns is None or name in columns}
     if not cols:
         # empty projection (count(*)-style scans request NO columns): a
         # plain pa.table({}) would report 0 rows and under-count — Arrow
@@ -1635,20 +1478,45 @@ def _span_reader(fh, offset: int):
     return fetch
 
 
-def _rle_values(rle, buf, skip: int, n: int, signed: bool) -> np.ndarray:
-    """The ``n`` values after the first ``skip`` of an integer RLE stream.
-    RLEv2 passes the runs before them by header arithmetic; RLEv1 decodes
-    from the stream's start."""
+def _rle_values(rle, buf, exs: dict | None, kind: int, n: int,
+                signed: bool) -> np.ndarray:
+    """The ``n`` values of integer RLE stream ``kind`` from its group run
+    offset ``exs[kind][0]``; RLEv2 passes the runs before them by header
+    arithmetic, RLEv1 decodes from the stream's start. With ``exs`` None
+    (a whole-stripe read) the stream must hold exactly ``n`` values."""
+    if exs is None:
+        return rle(buf, n, signed=signed)
+    skip = exs[kind][0]
     if rle is not decode_rlev2:
         return rle(buf, skip + n, signed=signed, exact=False)[skip:]
     return rle(buf, n, signed=signed, skip=skip, exact=False)
 
 
-def _group_reader(ix: StripeIndex, streams: dict, cid: int, g: int, cache: dict,
-                  seek: int = 0):
+def _byte_values(buf, exs: dict | None, kind: int, n: int, bits: bool) -> np.ndarray:
+    """The ``n`` values of byte-RLE stream ``kind``, or with ``bits`` of a
+    boolean stream, from its group offset (a boolean stream's is a byte
+    and a bit). With ``exs`` None the stream must hold exactly the bytes
+    of ``n`` values."""
+    decode = decode_boolean_rle if bits else decode_byte_rle
+    if exs is None:
+        return decode(buf, n)
+    skip = exs[kind][0] * 8 + exs[kind][1] if bits else exs[kind][0]
+    return decode(buf, skip + n, exact=False)[skip:]
+
+
+def _group_reader(ix: StripeIndex, streams: dict, cid: int, g: int | None,
+                  cache: dict, seek: int = 0):
     """``read(kind, window=None)``: group ``g``'s bytes of column ``cid``'s
     stream ``kind`` (_group_bytes; only the bytes [lo, hi) of a
-    ``window``)."""
+    ``window``). With ``g`` None the group is the whole stripe: ``read``
+    decompresses the whole stream, and a stream the writer left out reads
+    as empty."""
+    if g is None:
+        def read(kind: int, window: tuple[int, int] | None = None):
+            raw = streams.get((cid, kind))
+            data = b"" if raw is None else blockc.decompress_stream(raw[:], ix.comp)
+            return data if window is None else memoryview(data)[window[0]: window[1]]
+        return read
     here = ix.positions(cid, g)
 
     def read(kind: int, window: tuple[int, int] | None = None) -> bytes:
@@ -1658,30 +1526,24 @@ def _group_reader(ix: StripeIndex, streams: dict, cid: int, g: int, cache: dict,
     return read
 
 
-def _present(read, exs: dict, n: int) -> np.ndarray:
-    """The first ``n`` bits of a group's PRESENT stream (True: not null)."""
-    skip = exs[S_PRESENT][0] * 8 + exs[S_PRESENT][1]
-    return np.asarray(decode_boolean_rle(read(S_PRESENT), skip + n, exact=False)[skip:])
-
-
 def _dictionary(ix: StripeIndex, streams: dict, cid: int, dict_cache: dict) -> pa.Array:
-    """Column ``cid``'s string dictionary, decoded once per stripe read."""
+    """Column ``cid``'s string dictionary, decoded once per stripe read
+    (an empty one may come without its LENGTH and DICTIONARY_DATA)."""
     d = dict_cache.get(cid)
     if d is None:
         enc_kind, dict_size = ix.encodings[cid]
-        lens = _int_decoder(enc_kind)(
-            blockc.decompress_stream(streams[(cid, S_LENGTH)][:], ix.comp),
-            dict_size, signed=False)
-        d = dict_cache[cid] = _split_binary(
-            blockc.decompress_stream(streams[(cid, S_DICTIONARY_DATA)][:], ix.comp),
-            lens)
+        read = _group_reader(ix, streams, cid, None, {})
+        lens = _int_decoder(enc_kind)(read(S_LENGTH), dict_size, signed=False)
+        d = dict_cache[cid] = _split_binary(read(S_DICTIONARY_DATA), lens)
     return d
 
 
 def _decimal_words(t: OrcType, data: bytes, scales: np.ndarray, n: int) -> np.ndarray:
     """The first ``n`` decimals of a DATA stream's varint mantissas at
     their ``scales``, rescaled to the column's scale -> ``(n, 2)`` uint64
-    little-endian i128 words."""
+    little-endian i128 words: every ORC read's decimal rule (whole
+    stripe, group and point read). Precision <= 18 decodes in int64; a
+    wider precision, mantissa or rescale takes the exact i128 path."""
     from ..codecs.decimal_codec import (
         decode_varints_exact,
         decode_varints_i64,
@@ -1700,9 +1562,7 @@ def _decimal_words(t: OrcType, data: bytes, scales: np.ndarray, n: int) -> np.nd
         except ValueError:
             # mantissa varints wider than 64-bit zigzag despite a
             # declared precision <= 18 (legal on the wire), or an
-            # int64-overflowing rescale: exact i128 fallback, mirroring
-            # _decode_column — without it the SAME file full-decoded
-            # but crashed the pruned read (code-review r6)
+            # int64-overflowing rescale: exact i128 fallback
             pass
     # wide decimals: exact Python-int rescale (int64 would overflow)
     return i128_words(rescale_exact(decode_varints_exact(data, n), scales, t.scale))
@@ -1713,7 +1573,9 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
     """One group's values of a scalar column of type ``t``: its first
     ``n`` dense values, or with ``sel`` (sorted dense offsets, the last
     ``n - 1``) only the values at ``sel``. ``read`` reads the group's
-    streams (_group_reader) and ``exs`` holds their run offsets. Returns
+    streams (_group_reader) and ``exs`` holds their run offsets, or is
+    None for a whole-stripe read, whose RLE, byte-RLE and boolean streams
+    must hold exactly ``n`` values. Returns
     the parts _scalar_array joins: (ints,), (seconds, nanos), (floats,),
     (dictionary indices,), (string bytes, lengths), (int8s or bools,) or
     (i128 words,).
@@ -1728,12 +1590,12 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
     rle = _int_decoder(enc_kind)
 
     def ints(kind: int, signed: bool) -> np.ndarray:
-        buf, skip = read(kind), exs[kind][0]
+        buf = read(kind)
         if sel is None:
-            return _rle_values(rle, buf, skip, n, signed)
+            return _rle_values(rle, buf, exs, kind, n, signed)
         if rle is decode_rlev2:
-            return decode_rlev2_points(buf, sel, signed, skip)
-        return _rle_values(rle, buf, skip, n, signed)[sel]
+            return decode_rlev2_points(buf, sel, signed, exs[kind][0])
+        return _rle_values(rle, buf, exs, kind, n, signed)[sel]
 
     def pick(a: np.ndarray) -> np.ndarray:
         return a if sel is None else a[sel]
@@ -1751,7 +1613,7 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
     if k in _STRING_KINDS and enc_kind in (E_DICTIONARY, E_DICTIONARY_V2):
         return (ints(S_DATA, False),)
     if k in _STRING_KINDS:
-        lengths = _rle_values(rle, read(S_LENGTH), exs[S_LENGTH][0], n, False)
+        lengths = _rle_values(rle, read(S_LENGTH), exs, S_LENGTH, n, False)
         if sel is None:
             return read(S_DATA, (0, int(lengths.sum()))), lengths
         picked = lengths[sel]
@@ -1763,24 +1625,18 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
         shift = starts - lo - (np.cumsum(picked) - picked)
         at = np.arange(int(picked.sum())) + np.repeat(shift, picked)
         return window[at].tobytes(), picked
-    if k == K_BYTE:
-        sk = exs[S_DATA][0]
-        return (pick(decode_byte_rle(read(S_DATA), sk + n, exact=False)[sk:]),)
-    if k == K_BOOLEAN:
-        skip = exs[S_DATA][0] * 8 + exs[S_DATA][1]
-        return (pick(np.asarray(decode_boolean_rle(read(S_DATA), skip + n,
-                                                   exact=False)[skip:])),)
+    if k in (K_BYTE, K_BOOLEAN):
+        return (pick(_byte_values(read(S_DATA), exs, S_DATA, n, k == K_BOOLEAN)),)
     if k == K_DECIMAL:
-        scales = _rle_values(rle, read(S_SECONDARY), exs[S_SECONDARY][0], n, True)
+        scales = _rle_values(rle, read(S_SECONDARY), exs, S_SECONDARY, n, True)
         return (pick(_decimal_words(t, read(S_DATA), scales, n)),)
-    # layout() already excluded every other kind
-    raise NotImplementedError(f"group seek for ORC kind {k}")  # pragma: no cover
+    raise NotImplementedError(f"ORC type kind {k}")
 
 
 def _scalar_array(ix: StripeIndex, streams: dict, col_id: int, parts: list,
-                  dict_cache: dict) -> pa.Array:
+                  dict_cache: dict, unit: str = "us") -> pa.Array:
     """ONE Arrow array of scalar column ``col_id`` from the per-group
-    _scalar_values ``parts``, in order (no nulls)."""
+    _scalar_values ``parts``, in order (no nulls); timestamps in ``unit``."""
     t = ix.types[col_id]
     k = t.kind
     cols = [c[0] if len(c) == 1
@@ -1792,7 +1648,7 @@ def _scalar_array(ix: StripeIndex, streams: dict, col_id: int, parts: list,
         dense = pa.array(cols[0], type=pa.int64())
         return dense if k == K_LONG else dense.cast(_K_TO_ARROW[k])
     if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        return pa.array(_ts_us(cols[0], cols[1], ix.tz, k), type=pa.timestamp("us"))
+        return pa.array(_ts_us(cols[0], cols[1], ix.tz, k, unit), type=pa.timestamp(unit))
     if k == K_DECIMAL:
         return pa.Array.from_buffers(pa.decimal128(t.precision or 38, t.scale),
                                      len(cols[0]), [None, pa.py_buffer(cols[0].tobytes())])
@@ -1809,8 +1665,9 @@ def _scalar_array(ix: StripeIndex, streams: dict, col_id: int, parts: list,
 
 
 def _decode_column_group(
-    ix: StripeIndex, streams: dict, col_id: int, g: int, n_g: int,
+    ix: StripeIndex, streams: dict, col_id: int, g: int | None, n_g: int,
     name: str, dict_cache: dict, block_cache: dict | None = None,
+    unit: str = "us",
 ) -> pa.Array:
     """Decode ONE row group of a column (``n_g`` = this column's value
     count within the group — top-level rows for root children, element
@@ -1819,11 +1676,18 @@ def _decode_column_group(
     is decompressed from the group's block up to where the next group
     starts (_group_bytes; to the stream end when the next group starts
     inside a run), so no later group is decoded.
+
+    ``g`` None decodes the whole stripe as one group (decode_stripe): its
+    positions and run offsets are zero, each stream is read whole, its
+    RLE, byte-RLE and boolean streams must hold exactly the values the
+    group needs, and no ROW_INDEX is read.
+
     Nested columns recurse: the parent derives each child's group value
-    count (PRESENT for struct, LENGTH sums for list/map) and the child
-    seeks via its OWN row-index entry for the same group. Scalar columns
-    read through _scalar_values and _scalar_array, which a point read of
-    a few rows (_decode_column_rows) shares.
+    count (PRESENT for struct, LENGTH sums for list/map, tag counts for
+    union) and the child seeks via its OWN row-index entry for the same
+    group. Scalar columns read through _scalar_values and _scalar_array,
+    which a point read of a few rows (_decode_column_rows) shares: each
+    ORC kind has one read rule there. Timestamps decode in ``unit``.
 
     ``block_cache`` keeps the decompressed blocks of one stripe decode:
     groups whose positions share a block — continuous streams whose block
@@ -1832,60 +1696,58 @@ def _decode_column_group(
     if block_cache is None:
         block_cache = {}
     t = ix.types[col_id]
-    exs = {kind: at[2] for kind, at in ix.positions(col_id, g).items()}
+    exs = None if g is None else {
+        kind: at[2] for kind, at in ix.positions(col_id, g).items()}
     read = _group_reader(ix, streams, col_id, g, block_cache)
+
+    def child(cid: int, n: int, label: str) -> pa.Array:
+        return _decode_column_group(ix, streams, cid, g, n, f"{name}.{label}",
+                                    dict_cache, block_cache, unit)
 
     not_null = None
     n_dense = n_g
     if (col_id, S_PRESENT) in ix.offsets:
-        not_null = _present(read, exs, n_g)
+        not_null = _byte_values(read(S_PRESENT), exs, S_PRESENT, n_g, bits=True)
         n_dense = int(not_null.sum())
 
     k = t.kind
     if k == K_STRUCT:
-        children = [
-            _decode_column_group(ix, streams, cid, g, n_dense,
-                                 f"{name}.{fname}", dict_cache, block_cache)
-            for cid, fname in zip(t.subtypes, t.field_names)
-        ]
-        dense = pa.StructArray.from_arrays(children, t.field_names)
+        dense = pa.StructArray.from_arrays(
+            [child(cid, n_dense, fname) for cid, fname in zip(t.subtypes, t.field_names)],
+            t.field_names)
     elif k == K_UNION:
-        # per-group seek of the tag stream; each child's group value count
-        # is that group's tag count for its variant (children store values
-        # densely per tag — same tagged-struct expansion as the full path)
-        sk = exs[S_DATA][0]
-        tags = decode_byte_rle(read(S_DATA), sk + n_dense, exact=False)[sk:]
+        # ORC union (src/array_decoder/union.rs:36-163): DATA = byte-RLE
+        # variant tags; each child column stores values DENSELY for its
+        # own tag only. Spark has no union type, so the decode target is
+        # the tagged-struct expansion struct<tag:int8, f0:T0, f1:T1, ...>
+        # with f_i null wherever tag != i — lossless and SQL-queryable.
+        tags = _byte_values(read(S_DATA), exs, S_DATA, n_dense, bits=False)
         fields = [pa.array(tags.view(np.int8), type=pa.int8())]
         names = ["tag"]
         for i, cid in enumerate(t.subtypes):
             is_i = tags == i
             n_child = int(is_i.sum())
-            child = _decode_column_group(ix, streams, cid, g, n_child,
-                                         f"{name}.{i}", dict_cache, block_cache)
             idx = np.zeros(n_dense, dtype=np.int64)
             idx[is_i] = np.arange(n_child)
-            fields.append(child.take(pa.array(idx, type=pa.int64(), mask=~is_i)))
+            fields.append(child(cid, n_child, str(i)).take(
+                pa.array(idx, type=pa.int64(), mask=~is_i)))
             names.append(f"f{i}")
         dense = pa.StructArray.from_arrays(fields, names)
     elif k in (K_LIST, K_MAP):
+        # (reference src/array_decoder/{list.rs:36-104, map.rs:35-123}:
+        # children carry one entry per element, each with its own PRESENT)
         lengths = _rle_values(_int_decoder(ix.encodings[col_id][0]), read(S_LENGTH),
-                              exs[S_LENGTH][0], n_dense, False)
+                              exs, S_LENGTH, n_dense, False)
         n_child = int(lengths.sum())
+        offsets = _int32_offsets(lengths)
         if k == K_LIST:
-            cid = t.subtypes[0]
-            child = _decode_column_group(ix, streams, cid, g, n_child,
-                                         f"{name}.item", dict_cache, block_cache)
-            dense = pa.ListArray.from_arrays(_int32_offsets(lengths), child)
+            dense = pa.ListArray.from_arrays(offsets, child(t.subtypes[0], n_child, "item"))
         else:
-            kid, vid = t.subtypes[0], t.subtypes[1]
-            keys = _decode_column_group(ix, streams, kid, g, n_child,
-                                        f"{name}.key", dict_cache, block_cache)
-            items = _decode_column_group(ix, streams, vid, g, n_child,
-                                         f"{name}.value", dict_cache, block_cache)
-            dense = pa.MapArray.from_arrays(_int32_offsets(lengths), keys, items)
+            dense = pa.MapArray.from_arrays(offsets, child(t.subtypes[0], n_child, "key"),
+                                            child(t.subtypes[1], n_child, "value"))
     else:
         dense = _scalar_array(ix, streams, col_id, [_scalar_values(
-            t, ix.encodings[col_id][0], read, exs, n_dense, None)], dict_cache)
+            t, ix.encodings[col_id][0], read, exs, n_dense, None)], dict_cache, unit)
     return _respace(dense, not_null)
 
 
@@ -1922,7 +1784,8 @@ def _decode_column_rows(
         read = _group_reader(ix, streams, col_id, g, block_cache, ix.block_size)
         sel = rows
         if has_present:
-            not_null = _present(read, exs, int(rows[-1]) + 1)
+            not_null = _byte_values(read(S_PRESENT), exs, S_PRESENT,
+                                    int(rows[-1]) + 1, bits=True)
             valid = not_null[rows]
             valids.append(valid)
             sel = (np.cumsum(not_null) - 1)[rows][valid]
@@ -2403,8 +2266,9 @@ _K_TO_ARROW = {
 
 
 def _arrow_type_of(types: list[OrcType], cid: int) -> pa.DataType:
-    """The Arrow type _decode_column produces for type-tree column cid,
-    including nested types (union -> its tagged-struct expansion)."""
+    """The Arrow type _decode_column_group produces (at timestamp unit
+    "us") for type-tree column cid, including nested types (union -> its
+    tagged-struct expansion)."""
     t = types[cid]
     k = t.kind
     if k == K_DECIMAL:
@@ -2767,7 +2631,7 @@ def _encode_indexed_column(
     Exception — BIT-PACKED streams (boolean DATA with nulls, any
     boolean/PRESENT stream under irregular counts): their per-group bit
     count is arbitrary, so byte-aligned restarts would desynchronize
-    continuous readers (liborc, our full decoder). These are encoded as
+    continuous readers (liborc, decode_stripe). These are encoded as
     ONE continuous stream with real (byte-RLE bytes, bits) position
     extras per group — the spec's native boolean seek model, which
     _decode_column_group already consumes (exs[k][0]*8 + exs[k][1]).
@@ -3313,7 +3177,7 @@ class OrcWriter:
             # boolean/PRESENT sub-streams pad each group to a byte
             # boundary (np.packbits); a non-multiple-of-8 stride would
             # misalign every row after group 0 for any CONTINUOUS reader
-            # (liborc, our full decode) — corrupt output, so reject
+            # (liborc, decode_stripe) — corrupt output, so reject
             raise ValueError(
                 f"row_index_stride must be a multiple of 8, got {row_index_stride}")
         if compression not in _WRITE_COMP_ENUM:

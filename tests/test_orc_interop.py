@@ -1493,26 +1493,135 @@ def test_mixed_type_bounds_keep_not_crash(tmp_path):
     assert out.column("c").to_pylist() == sorted(out.column("c").to_pylist())
 
 
+def _stripe_footer(streams, encodings) -> bytes:
+    """A StripeFooter proto: ``streams`` [(column, kind, length)],
+    ``encodings`` [(encoding kind, dictionary size)] by column."""
+    from orc_rust_spark.sources.orc_file import _pb_field
+
+    return b"".join(
+        _pb_field(1, 2, _pb_field(1, 0, kind) + _pb_field(2, 0, col)
+                  + _pb_field(3, 0, length))
+        for col, kind, length in streams) + b"".join(
+        _pb_field(2, 2, _pb_field(1, 0, kind) + _pb_field(2, 0, size))
+        for kind, size in encodings)
+
+
 def test_decode_column_tolerates_suppressed_streams():
     """Writers may suppress zero-length streams from the stripe footer
-    (an all-null column carries no DATA/LENGTH): full decode must treat
-    the absent stream as empty, not crash (code-review r6)."""
+    (an all-null column carries no DATA/LENGTH, an empty dictionary no
+    LENGTH/DICTIONARY_DATA): a whole-stripe decode must treat the absent
+    stream as empty, not crash (code-review r6)."""
     from orc_rust_spark.codecs.boolean_rle import encode_boolean_rle
     from orc_rust_spark.sources.orc_file import (
+        E_DICTIONARY_V2,
+        E_DIRECT_V2,
         K_LONG,
         K_STRING,
+        K_STRUCT,
         S_PRESENT,
+        OrcMeta,
         OrcType,
-        _decode_column,
+        decode_stripe,
     )
 
     present = encode_boolean_rle(np.zeros(5, dtype=bool))
-    out = _decode_column(1, OrcType(kind=K_LONG), {(1, S_PRESENT): present},
-                         {1: (2, 0)}, 5, "none", "v")
+
+    def decode(kind, encoding):
+        meta = OrcMeta("none", [OrcType(K_STRUCT, [1], ["v"]), OrcType(kind)], [], 5)
+        footer = _stripe_footer([(1, S_PRESENT, len(present))],
+                                [(E_DIRECT_V2, 0), encoding])
+        return decode_stripe(present, footer, meta, 5).column("v")
+
+    out = decode(K_LONG, (E_DIRECT_V2, 0))
     assert len(out) == 5 and out.null_count == 5
-    out = _decode_column(1, OrcType(kind=K_STRING), {(1, S_PRESENT): present},
-                         {1: (2, 0)}, 5, "none", "s")
+    out = decode(K_STRING, (E_DIRECT_V2, 0))
     assert len(out) == 5 and out.null_count == 5
+    out = decode(K_STRING, (E_DICTIONARY_V2, 0))
+    assert len(out) == 5 and out.null_count == 5
+
+
+@pytest.mark.parametrize("rle_version", [1, 2])
+def test_decode_stripe_rejects_a_short_row_count(tmp_path, rle_version):
+    """A whole-stripe decode reads every RLE-coded stream to its end, so
+    a row count one short of the stripe's raises ValueError for each kind
+    rather than dropping the last value. A boolean stream counts bytes,
+    so 1001 rows (one in the last byte) make one row fewer visible."""
+    from orc_rust_spark.sources.orc_file import (
+        E_DICTIONARY,
+        E_DICTIONARY_V2,
+        _read_stripe_footer,
+        decode_stripe,
+        write_orc,
+    )
+
+    n = 1001
+    rng = np.random.default_rng(5)
+    tbl = pa.table({
+        "i": pa.array(rng.integers(-10**12, 10**12, n)),
+        "i_null": pa.array(rng.integers(0, 9, n), mask=rng.random(n) < 0.3),
+        "y": pa.array(rng.integers(-128, 128, n).astype(np.int8)),
+        "d": pa.array(rng.integers(0, 20000, n).astype(np.int32), type=pa.date32()),
+        "ts": pa.array(rng.integers(0, 2 * 10**15, n), type=pa.timestamp("us")),
+        "txt": pa.array([f"text-{v}" for v in rng.integers(0, 10**9, n)]),
+        "lang": pa.array([f"l{v}" for v in rng.integers(0, 5, n)]),
+        "b": pa.array(rng.random(n) < 0.5),
+        "dec": pa.array([decimal.Decimal(int(v)).scaleb(-2)
+                         for v in rng.integers(-10**9, 10**9, n)],
+                        type=pa.decimal128(10, 2)),
+    })
+    path = str(tmp_path / "short.orc")
+    write_orc(tbl, path, rle_version=rle_version)
+    meta = read_metadata(path)
+    (st,) = meta.stripes
+    with open(path, "rb") as fh:
+        fh.seek(st.offset)
+        body = fh.read(st.index_length + st.data_length)
+        footer = fh.read(st.footer_length)
+    encodings = _read_stripe_footer(footer, meta.compression)[1]
+    ids = dict(zip(meta.types[0].field_names, meta.types[0].subtypes))
+    dictionary = (E_DICTIONARY, E_DICTIONARY_V2)
+    assert encodings[ids["lang"]][0] in dictionary
+    assert encodings[ids["txt"]][0] not in dictionary
+    assert decode_stripe(body, footer, meta, n).cast(tbl.schema).equals(tbl)
+    for name in tbl.column_names:
+        with pytest.raises(ValueError):
+            decode_stripe(body, footer, meta, n - 1, columns=[name])
+
+
+def test_ns_unit_equals_liborc(tmp_path):
+    """timestamp_unit="ns" reads sub-microsecond timestamps, at top level
+    and inside a struct and a list, plus a decimal wider than int64, bit
+    for bit as liborc reads them; the default us read refuses to drop
+    their nanoseconds."""
+    rng = np.random.default_rng(3)
+    n = 3000
+    ns = rng.integers(-2 * 10**18, 2 * 10**18, n)
+    ns[:4] = [-1, 1, -1_000_000_001, 1_700_000_000_000_000_001]
+    mask = rng.random(n) < 0.1
+    ts = pa.array(ns, type=pa.timestamp("ns"), mask=mask)
+    lens = rng.integers(0, 4, n)
+    offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+    items = pa.array(rng.integers(-2 * 10**18, 2 * 10**18, int(lens.sum())),
+                     type=pa.timestamp("ns"))
+    tbl = pa.table({
+        "ts": ts,
+        "st": pa.StructArray.from_arrays([ts, pa.array(np.arange(n))], ["t", "k"]),
+        "lt": pa.ListArray.from_arrays(pa.array(offsets), items),
+        "dec": pa.array([decimal.Decimal(int(v) * 10**9 + 7).scaleb(-4)
+                         for v in rng.integers(-10**10, 10**10, n)],
+                        type=pa.decimal128(20, 4)),
+    })
+    path = str(tmp_path / "ns.orc")
+    paorc.write_table(tbl, path, compression="ZLIB", stripe_size=64 * 1024)
+    ref = paorc.read_table(path)
+    ours = orc_to_table(path, timestamp_unit="ns")
+    assert ours.num_rows == n
+    for name in tbl.column_names:
+        want = ref.column(name).combine_chunks()
+        assert ours.column(name).combine_chunks().cast(want.type).equals(want), name
+    for name in ("ts", "st", "lt"):
+        with pytest.raises(ValueError, match="sub-microsecond"):
+            orc_to_table(path, columns=[name])
 
 
 def test_orc_writer_rejects_non_orc_compression(tmp_path):
