@@ -19,8 +19,12 @@ It works on blocks, not runs. The fixed runs come from one array pass
 over the equal-value runs; the spans between them are cut into 512-value
 blocks plus a short tail block each. Blocks of one length, from anywhere
 in the stream, go through the selector together as a ``(k, m)`` matrix
-of up to BATCH_VALUES values, and the encoded runs are joined in stream
-order at the end. DIRECT and DELTA blocks are bit-packed per batch and
+of up to ``batch_values`` values, and the encoded runs are joined in
+stream order at the end. The cap is BATCH_VALUES (4 blocks) for the
+chunk-table encoder, which runs inside Spark's Python workers and must
+keep their temporaries small, and FILE_BATCH_VALUES (32 blocks) for the
+ORC file writer, where it makes one batch per block length of a row
+group piece. The bytes are the same at any cap. DIRECT and DELTA blocks are bit-packed per batch and
 width, PATCHED_BASE blocks one at a time. Python loops run once per fixed
 run, span, batch and width group, and once per emitted block; no loop
 runs per value.
@@ -89,12 +93,24 @@ MIN_REPEAT = 3
 MAX_SHORT_REPEAT = 10
 # bases at or above 2**56 don't fit the patched-base BW field safely
 BASE_VALUE_LIMIT = 1 << 56
-# values per selector batch (4 full blocks): bounds each batch temporary
-# to 16 KB whatever the stream length. Spark's Python workers never give
-# freed memory back (session.MALLOC_ENV), and 32-block batches, though
-# ~1.5x faster here, left their heap fragmented enough that a later
-# decode extended it (webtext_encode peak worker RSS +4% median)
+# values per selector batch, by caller. The batch size never changes the
+# bytes, only how many Python-level selector passes a stream costs and
+# how large each pass's temporaries are.
+# - BATCH_VALUES (4 full blocks, the default): the chunk-table encoder
+#   (encode_chunk, run by encode_table inside Spark's Python workers) and
+#   every other caller. It bounds each batch temporary to 16 KB whatever
+#   the stream length. Those workers never give freed memory back
+#   (session.MALLOC_ENV), and 32-block batches there, though ~1.5x faster,
+#   left the heap fragmented enough that a later decode extended it
+#   (webtext_encode peak worker RSS +4% median).
+# - FILE_BATCH_VALUES (32 full blocks): the ORC file writer
+#   (orc_file._encode_indexed_column and _encode_indexed_tree), whose
+#   streams are one row group piece each, so one batch per block length
+#   covers a whole 10,000-value piece. write_orc spent ~18% less CPU than
+#   with 4-block batches on the lineitem-shaped perfbench orc_lookup
+#   table (4-vCPU x86 host).
 BATCH_VALUES = 4 * MAX_RUN_LENGTH
+FILE_BATCH_VALUES = 32 * MAX_RUN_LENGTH
 # values per reader batch of same-shape runs: bounds each batch's unpacked
 # matrix and its zigzag or cumsum temporaries to 32 KB, for the same reason
 DECODE_BATCH_VALUES = 8 * MAX_RUN_LENGTH
@@ -114,8 +130,12 @@ _MASK64 = (1 << 64) - 1
 # ---------------------------------------------------------------------------
 
 
-def encode_rlev2(values: np.ndarray, signed: bool = True) -> bytes:
-    """Encode an int64 (or uint64-viewed) array as an ORC RLEv2 stream."""
+def encode_rlev2(values: np.ndarray, signed: bool = True, *,
+                 batch_values: int = BATCH_VALUES) -> bytes:
+    """Encode an int64 (or uint64-viewed) array as an ORC RLEv2 stream.
+
+    ``batch_values`` caps the values per selector batch (see
+    BATCH_VALUES); the output does not depend on it."""
     v = np.ascontiguousarray(values, dtype=np.int64)
     if v.size == 0:
         return b""
@@ -154,7 +174,7 @@ def encode_rlev2(values: np.ndarray, signed: bool = True) -> bytes:
         _add_span(blocks, pos, v.size)
 
     for m, block_starts in blocks.items():
-        step = max(1, BATCH_VALUES // m)
+        step = max(1, batch_values // m)
         for a in range(0, len(block_starts), step):
             batch = block_starts[a:a + step]
             first = batch[0]

@@ -60,31 +60,37 @@ def split_timestamp_us(ts_us: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return _pack_secs_nanos(secs, rem * 1000)  # nanos in (-1e9, 1e9)
 
 
+# nanosecond multiplier by the 3-bit zeros code: code z > 0 means z + 1
+# zeros were stripped
+_ZEROS_MULT = np.array([1] + [10**(z + 1) for z in range(1, 8)], dtype=np.int64)
+
+
 def _pack_secs_nanos(secs: np.ndarray, nanos: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     stored_secs = secs - ORC_EPOCH_SECONDS
 
-    # trailing decimal zero stripping, vectorized: try removing 8..2 zeros.
-    # Works unchanged for SIGNED nanos (liborc convention): an exact
-    # multiple has remainder 0 under floored mod too, x << 3 keeps the
-    # low 3 bits clear in two's complement, and | sets the zeros code.
+    # trailing decimal zero stripping, over the nonzero nanos only: count
+    # their trailing zeros (at most 8, as |nanos| < 1e9) by an 8/4/2/1
+    # cascade and strip them where there are at least 2. Works unchanged
+    # for SIGNED nanos (liborc convention): an exact multiple has
+    # remainder 0 under floored mod too, x << 3 keeps the low 3 bits clear
+    # in two's complement, and | sets the zeros code.
     enc = nanos << np.int64(3)
-    removed = np.zeros_like(nanos)
-    stripped = nanos.copy()
-    for r in range(8, 1, -1):
-        p = np.int64(10**r)
-        hit = (removed == 0) & (nanos != 0) & (nanos % p == 0)
-        removed[hit] = r
-        stripped[hit] = nanos[hit] // p
-    has = removed > 0
-    enc[has] = (stripped[has] << np.int64(3)) | (removed[has] - 1)
+    nz = np.flatnonzero(nanos)
+    if nz.size:
+        x = nanos[nz]
+        zeros = np.zeros_like(x)
+        for r in (8, 4, 2, 1):
+            p = np.int64(10**r)
+            hit = x % p == 0
+            x[hit] //= p
+            zeros[hit] += r
+        strip = zeros >= 2
+        enc[nz[strip]] = (x[strip] << np.int64(3)) | (zeros[strip] - 1)
     return stored_secs, enc
 
 
 def _unpack_secs_nanos(stored_secs: np.ndarray, enc_nanos: np.ndarray):
-    zeros = enc_nanos & np.int64(0x7)
-    nanos = enc_nanos >> np.int64(3)
-    mult = np.power(10, np.where(zeros != 0, zeros + 1, 0)).astype(np.int64)
-    nanos = nanos * mult
+    nanos = (enc_nanos >> np.int64(3)) * _ZEROS_MULT[enc_nanos & np.int64(0x7)]
     secs = stored_secs + ORC_EPOCH_SECONDS
     secs = np.where((secs < 0) & (nanos > 999_999), secs - 1, secs)
     return secs, nanos

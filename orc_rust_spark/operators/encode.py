@@ -25,7 +25,7 @@ from ..codecs.boolean_rle import encode_boolean_rle
 from ..codecs.present import encode_present
 from ..codecs.float_plain import encode_float
 from ..codecs.fsst import FsstTable, fsst_encode
-from ..codecs.rle_v2 import encode_rlev2
+from ..codecs.rle_v2 import BATCH_VALUES, encode_rlev2
 from ..codecs.selector import choose_string_codec, integer_chunk_stats, string_chunk_stats
 from ..codecs.string_codec import sorted_dictionary
 from ..codecs.timestamp_split import split_timestamp_us
@@ -265,7 +265,12 @@ def _encode_column_row_groups(name: str, arr: pa.Array, col_plan: dict, emit) ->
              null_count=total_nulls)
 
 
-def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit) -> None:
+def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit, *,
+                   rle_batch: int = BATCH_VALUES) -> None:
+    """Encode one column, calling ``emit`` once per stream. ``rle_batch``
+    is the RLEv2 selector batch cap of an integer, date or timestamp
+    column's streams (rle_v2.BATCH_VALUES); only the ORC file writer
+    raises it."""
     n = len(arr)
     if col_plan.get("row_index") and not (
         pa.types.is_list(arr.type) or pa.types.is_large_list(arr.type)
@@ -341,7 +346,8 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit) -> None:
             streams = [(ct.DATA, encode_rlev1(vals, signed=True))]
         else:
             codec = "rle_v2"
-            streams = [(ct.DATA, encode_rlev2(vals, signed=True))]
+            streams = [(ct.DATA, encode_rlev2(vals, signed=True,
+                                              batch_values=rle_batch))]
         raw = n * 8
         if vals.size:
             minv, maxv = str(int(vals.min())), str(int(vals.max()))
@@ -349,7 +355,8 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit) -> None:
         # ORC Date = days since epoch as signed RLEv2 (src/schema.rs:529)
         days = dense.cast(pa.int32()).to_numpy(zero_copy_only=False).astype(np.int64)
         codec = "date"
-        streams = [(ct.DATA, encode_rlev2(days, signed=True))]
+        streams = [(ct.DATA, encode_rlev2(days, signed=True,
+                                          batch_values=rle_batch))]
         raw = n * 4
         if days.size:
             minv, maxv = str(int(days.min())), str(int(days.max()))
@@ -360,8 +367,9 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit) -> None:
         secs, nanos = split_timestamp_us(us)
         codec = "timestamp_split"
         streams = [
-            (ct.DATA, encode_rlev2(secs, signed=True)),
-            (ct.SECONDARY, encode_rlev2(nanos, signed=False)),
+            (ct.DATA, encode_rlev2(secs, signed=True, batch_values=rle_batch)),
+            (ct.SECONDARY, encode_rlev2(nanos, signed=False,
+                                        batch_values=rle_batch)),
         ]
         raw = n * 8
         if us.size:

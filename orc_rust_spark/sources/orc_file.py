@@ -2502,42 +2502,100 @@ def _stats_proto(n_values: int, has_null: bool, kind: int, mn, mx) -> bytes:
     return out
 
 
-def _group_min_max(kind: int, g_dense: pa.Array):
-    """Full-precision per-group (min, max) for the stat families we emit —
-    never truncated (a truncated max below the true max would WRONGLY
-    prune an equality probe on it)."""
-    import math as _math
+def _dense_starts(arr: pa.Array, group_starts: np.ndarray) -> np.ndarray:
+    """Each group's first offset among ``arr``'s non-null values (and,
+    last, their count), for the group boundaries ``group_starts``."""
+    if not arr.null_count:
+        return group_starts
+    prefix = np.zeros(len(arr) + 1, dtype=np.int64)
+    np.cumsum(np.asarray(arr.is_valid()), out=prefix[1:])
+    return prefix[group_starts]
 
+
+def _group_bounds(kind: int, arr: pa.Array, group_starts: np.ndarray,
+                  dictionary: tuple | None = None) -> list[tuple]:
+    """Full-precision (min, max) of each row group of one column, from
+    one reduce over the column's non-null values; (None, None) for an
+    all-null group and for kinds without typed statistics. Never
+    truncated: a truncated max below the true max would WRONGLY prune an
+    equality probe on it. The values are those pyarrow's ``min_max``
+    gives each group:
+
+    - integer, date and timestamp groups: ``np.minimum/maximum.reduceat``
+      over the raw values, as Python ints, dates and datetimes
+      (tz-aware ones as naive UTC instants);
+    - float groups: ``np.fmin/fmax.reduceat``, which skip NaN; a NaN-only
+      group gives (inf, -inf), and a zero bound is taken from pyarrow so
+      its sign is that of the group's first zero, as pyarrow picks it;
+    - dictionary strings (``dictionary`` = (dense ranks, dictionary
+      bytes, entry lengths) of ``arr``'s sorted dictionary): the entries
+      at each group's min and max rank, which is byte order;
+    - direct strings and decimals: one pyarrow ``min_max`` per group.
+    """
     import pyarrow.compute as pc
 
-    if not len(g_dense):
-        return None, None
-    if kind in (K_BYTE, K_SHORT, K_INT, K_LONG):
-        mm = pc.min_max(g_dense)
-        return int(mm["min"].as_py()), int(mm["max"].as_py())
-    if kind in (K_FLOAT, K_DOUBLE):
-        mm = pc.min_max(g_dense)
-        mn, mx = mm["min"].as_py(), mm["max"].as_py()
-        if mn is None or mx is None or _math.isnan(mn) or _math.isnan(mx):
-            return None, None
-        return float(mn), float(mx)
-    if kind in (K_STRING, K_VARCHAR, K_CHAR):
-        mm = pc.min_max(g_dense.cast(pa.large_string()))
-        return mm["min"].as_py(), mm["max"].as_py()
-    if kind == K_DECIMAL:
-        mm = pc.min_max(g_dense)
-        return mm["min"].as_py(), mm["max"].as_py()  # decimal.Decimal
-    if kind in (K_DATE, K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        import datetime as _dt
+    n_groups = len(group_starts) - 1
+    out = [(None, None)] * n_groups
+    stringy = kind in (K_STRING, K_VARCHAR, K_CHAR)
+    floaty = kind in (K_FLOAT, K_DOUBLE)
+    if not (stringy or floaty or kind in _INT_KINDS
+            or kind in (K_DATE, K_TIMESTAMP, K_TIMESTAMP_INSTANT, K_DECIMAL)):
+        return out
+    dense_starts = _dense_starts(arr, group_starts)
+    dense = arr.drop_null() if arr.null_count else arr
+    live = np.flatnonzero(np.diff(dense_starts))
+    starts = dense_starts[live]
+    lo, hi = starts.tolist(), dense_starts[live + 1].tolist()
+    if not lo:
+        return out
 
-        mm = pc.min_max(g_dense)
-        mn, mx = mm["min"].as_py(), mm["max"].as_py()
-        if isinstance(mn, _dt.datetime) and mn.tzinfo is not None:
+    def arrow_min_max(i: int) -> tuple:  # live group i, by pyarrow
+        mm = pc.min_max(dense.slice(lo[i], hi[i] - lo[i]))
+        return mm["min"].as_py(), mm["max"].as_py()
+
+    if (stringy and dictionary is None) or kind == K_DECIMAL:
+        if stringy:
+            dense = dense.cast(pa.large_string())
+        mins, maxs = zip(*map(arrow_min_max, range(len(lo))))
+    elif stringy:
+        ranks, dict_data, dict_lens = dictionary
+        offs = np.zeros(len(dict_lens) + 1, dtype=np.int64)
+        np.cumsum(dict_lens, out=offs[1:])
+        offs = offs.tolist()
+
+        def entries(rs: np.ndarray) -> list[str]:
+            return [dict_data[offs[r]: offs[r + 1]].decode() for r in rs.tolist()]
+
+        mins = entries(np.minimum.reduceat(ranks, starts))
+        maxs = entries(np.maximum.reduceat(ranks, starts))
+    elif floaty:
+        vals = dense.to_numpy(zero_copy_only=False)
+        mins = np.fmin.reduceat(vals, starts)
+        maxs = np.fmax.reduceat(vals, starts)
+        mins[np.isnan(mins)] = np.inf
+        maxs[np.isnan(maxs)] = -np.inf
+        for i in np.flatnonzero((mins == 0) | (maxs == 0)).tolist():
+            mins[i], maxs[i] = arrow_min_max(i)
+        mins, maxs = mins.tolist(), maxs.tolist()
+    elif kind in _INT_KINDS:
+        vals = dense.to_numpy(zero_copy_only=False)
+        mins = np.minimum.reduceat(vals, starts).tolist()
+        maxs = np.maximum.reduceat(vals, starts).tolist()
+    else:  # date32 days or timestamp ticks in the column's unit
+        vals = dense.view(pa.int32() if kind == K_DATE else pa.int64())
+        vals = vals.to_numpy(zero_copy_only=False)
+        mins = pa.array(np.minimum.reduceat(vals, starts)).view(arr.type).to_pylist()
+        maxs = pa.array(np.maximum.reduceat(vals, starts)).view(arr.type).to_pylist()
+        if getattr(arr.type, "tz", None) is not None:
             # tz-aware arrow timestamps: stats as naive UTC instants
-            mn = mn.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            mx = mx.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return mn, mx
-    return None, None
+            import datetime as _dt
+
+            utc = _dt.timezone.utc
+            mins = [v.astimezone(utc).replace(tzinfo=None) for v in mins]
+            maxs = [v.astimezone(utc).replace(tzinfo=None) for v in maxs]
+    for g, mn, mx in zip(live.tolist(), mins, maxs):
+        out[g] = (mn, mx)
+    return out
 
 
 def _agg_stats(kind: int, group_stats: list[tuple]) -> tuple:
@@ -2648,7 +2706,7 @@ def _encode_indexed_column(
     import pyarrow.compute as pc  # noqa: F401
 
     from ..codecs.boolean_rle import encode_boolean_rle
-    from ..codecs.rle_v2 import encode_rlev2
+    from ..codecs.rle_v2 import FILE_BATCH_VALUES, encode_rlev2
     from ..operators.encode import (
         _bloomable,
         _encode_column,
@@ -2662,6 +2720,7 @@ def _encode_indexed_column(
     valid = np.asarray(arr.is_valid()) if has_nulls else None
     group_starts = np.zeros(len(group_counts) + 1, dtype=np.int64)
     np.cumsum(group_counts, out=group_starts[1:])
+    dense_starts = _dense_starts(arr, group_starts)
     if stats_arr is None:
         stats_arr = arr
     plan = {"block_codec": "none", "rle_version": rle_version}
@@ -2672,11 +2731,11 @@ def _encode_indexed_column(
     use_dict = False
     dict_streams: list[tuple[int, bytes]] = []
     dict_size = 0
-    dense_ranks = None
+    if is_stringy:
+        dense_all = arr.drop_null().cast(pa.large_binary())
     if is_stringy and n:
         from ..codecs.selector import choose_string_codec, string_chunk_stats
 
-        dense_all = arr.drop_null().cast(pa.large_binary())
         reuse: dict = {}
         codec0, _ = choose_string_codec(
             dense_all, string_chunk_stats(dense_all, reuse), None)
@@ -2685,7 +2744,8 @@ def _encode_indexed_column(
             dense_ranks, dict_data, dict_lens, dict_size = sorted_dictionary(
                 dense_all, reuse.get("denc"))
             dict_streams = [
-                (S_LENGTH, encode_rlev2(dict_lens, signed=False)),
+                (S_LENGTH, encode_rlev2(dict_lens, signed=False,
+                                        batch_values=FILE_BATCH_VALUES)),
                 (S_DICTIONARY_DATA, dict_data),
             ]
 
@@ -2705,29 +2765,31 @@ def _encode_indexed_column(
         extra_vals[S_PRESENT] = [
             (int(s) // 8, int(s) % 8) for s in group_starts[:-1]]
 
+    bounds = _group_bounds(
+        kind, stats_arr, group_starts,
+        (dense_ranks, dict_data, dict_lens) if use_dict else None)
     group_parts: list[dict[int, bytes]] = []
     group_stats: list[tuple] = []
     data_codec = None
-    dense_prefix = 0
-    for g, g_start in enumerate(group_starts[:-1]):
-        g_start = int(g_start)
+    for g, (g_start, d0, d1) in enumerate(zip(
+            group_starts[:-1].tolist(), dense_starts[:-1].tolist(),
+            dense_starts[1:].tolist())):
         g_n = int(group_counts[g])
-        sl = arr.slice(g_start, g_n)
-        g_dense = sl.drop_null()
         parts: dict[int, bytes] = {}
         if has_nulls and not present_cont:
             parts[S_PRESENT] = encode_boolean_rle(valid[g_start: g_start + g_n])
         if bool_cont:
-            extra_vals[S_DATA].append((dense_prefix // 8, dense_prefix % 8))
+            extra_vals[S_DATA].append((d0 // 8, d0 % 8))
             data_codec = "boolean_rle"
         elif is_stringy and use_dict:
-            idxs = dense_ranks[dense_prefix: dense_prefix + len(g_dense)]
-            parts[S_DATA] = encode_rlev2(idxs, signed=False)
+            parts[S_DATA] = encode_rlev2(dense_ranks[d0:d1], signed=False,
+                                         batch_values=FILE_BATCH_VALUES)
             data_codec = "dict"
         elif is_stringy:
-            bdata, boffs = _flatten_large_binary(g_dense.cast(pa.large_binary()))
+            bdata, boffs = _flatten_large_binary(dense_all.slice(d0, d1 - d0))
             parts[S_DATA] = bdata
-            parts[S_LENGTH] = encode_rlev2(np.diff(boffs), signed=False)
+            parts[S_LENGTH] = encode_rlev2(np.diff(boffs), signed=False,
+                                           batch_values=FILE_BATCH_VALUES)
             data_codec = "direct"
         elif g_n:
             captured: list[tuple[str, str, bytes]] = []
@@ -2735,16 +2797,15 @@ def _encode_indexed_column(
             def cap(_col, k_, codec, data_bytes, **kw):
                 captured.append((k_, codec, data_bytes))
 
-            _encode_column(name, sl, plan, cap)
+            _encode_column(name, arr.slice(g_start, g_n), plan, cap,
+                           rle_batch=FILE_BATCH_VALUES)
             for k_, codec, data_bytes in captured:
                 if k_ == ct.PRESENT:
                     continue  # our own per-group PRESENT covers all groups
                 parts[_KIND_TO_ORC[k_]] = data_bytes
                 if k_ == ct.DATA:
                     data_codec = codec
-        dense_prefix += len(g_dense)
-        mn, mx = _group_min_max(kind, stats_arr.slice(g_start, g_n).drop_null())
-        group_stats.append((len(g_dense), sl.null_count > 0, mn, mx))
+        group_stats.append((d1 - d0, d1 - d0 < g_n, *bounds[g]))
         group_parts.append(parts)
 
     enc_kind = E_DICTIONARY_V2 if use_dict else (
@@ -2941,7 +3002,7 @@ def _encode_indexed_tree(
     (data_streams, row_index_proto, bloom_proto, enc_proto, agg_stats)
     tuple."""
     from ..codecs.boolean_rle import encode_boolean_rle
-    from ..codecs.rle_v2 import encode_rlev2
+    from ..codecs.rle_v2 import FILE_BATCH_VALUES, encode_rlev2
 
     t = types[tid]
     k = t.kind
@@ -3010,7 +3071,8 @@ def _encode_indexed_tree(
         if k in (K_LIST, K_MAP):
             g_lens = lengths_all[dense_prefix: dense_prefix + g_dense]
             if g_dense:
-                parts[S_LENGTH] = encode_rlev2(g_lens, signed=False)
+                parts[S_LENGTH] = encode_rlev2(g_lens, signed=False,
+                                               batch_values=FILE_BATCH_VALUES)
             child_counts.append(int(g_lens.sum()))
         elif k == K_UNION:
             g_tags = tags_all[dense_prefix: dense_prefix + g_dense]

@@ -623,6 +623,44 @@ def test_mixed_corpus_covers_every_sub_encoding():
         assert np.array_equal(decode_rlev2(enc, v.size, signed=signed), v)
 
 
+def _near_block_multiples():
+    """Streams 512 * k + {-1, 0, 1} values long, of runs and noise mixed so
+    that every block length and sub-encoding meets batch edges."""
+    rng = np.random.default_rng(11)
+    out = []
+    for k in (1, 3, 4, 5, 31, 32, 33):
+        for d in (-1, 0, 1):
+            n = 512 * k + d
+            lengths = rng.choice([1, 1, 2, 3, 12, 40, 300, 600], n)
+            v = _runs(rng, lengths, -(10**5), 10**5)[:n]
+            v[rng.integers(0, n, max(1, n // 50))] = rng.integers(1 << 30, 1 << 40)
+            out.append(v)
+    return out
+
+
+@pytest.mark.parametrize("name", sorted(ENCODER_CASES) + ["<mixed>", "<near 512k>"])
+def test_encoder_bytes_do_not_depend_on_batch_size(name):
+    """The selector batch cap (rle_v2.BATCH_VALUES for the chunk encoder,
+    FILE_BATCH_VALUES for the ORC writer) changes no byte: caps of 1, 4
+    and 32 blocks and one larger than any stream."""
+    from orc_rust_spark.codecs.rle_v2 import (BATCH_VALUES, FILE_BATCH_VALUES,
+                                              MAX_RUN_LENGTH)
+
+    assert (BATCH_VALUES, FILE_BATCH_VALUES) == (4 * 512, 32 * 512)
+    caps = (MAX_RUN_LENGTH, BATCH_VALUES, FILE_BATCH_VALUES, 1 << 40)
+    if name == "<mixed>":
+        streams = [_mixed_corpus(s)[0] for s in (True, False)]
+    elif name == "<near 512k>":
+        streams = _near_block_multiples()
+    else:
+        streams = [_encoder_case(name)]
+    for v in streams:
+        for signed in (True, False):
+            want = encode_rlev2(v, signed=signed)
+            for cap in caps:
+                assert encode_rlev2(v, signed=signed, batch_values=cap) == want, cap
+
+
 @pytest.mark.parametrize("signed", [True, False])
 @pytest.mark.parametrize("name", sorted(ENCODER_CASES) + ["<mixed>"])
 def test_reader_skip_and_partial_reads_equal_slices(name, signed):

@@ -163,3 +163,66 @@ def test_negative_boundary_liborc_both_directions(tmp_path):
         assert paorc.ORCFile(p).read().column("t").cast(
             pa.timestamp("us")).cast(pa.int64()).to_pylist() == vals, \
             f"liborc on {p}"
+
+
+def _seven_pass_pack(secs, nanos):
+    """The nanos packing before the 8/4/2/1 cascade: one modulo pass per
+    candidate zero count, 8 down to 2."""
+    enc = nanos << np.int64(3)
+    removed = np.zeros_like(nanos)
+    stripped = nanos.copy()
+    for r in range(8, 1, -1):
+        p = np.int64(10**r)
+        hit = (removed == 0) & (nanos != 0) & (nanos % p == 0)
+        removed[hit] = r
+        stripped[hit] = nanos[hit] // p
+    has = removed > 0
+    enc[has] = (stripped[has] << np.int64(3)) | (removed[has] - 1)
+    return secs - ORC_EPOCH_SECONDS, enc
+
+
+def _granular_us():
+    """Day-, second-, ms- and us-granular values around 1900, 1970, 2038
+    and 3000, negative ones, zero, and sub-second offsets with every
+    trailing-zero count."""
+    from orc_rust_spark.codecs.timestamp_split import _trunc_div
+
+    rng = np.random.default_rng(9)
+    day = 86_400 * 10**6
+    anchors = np.array([-2_208_988_800, 0, 2_147_483_647, 32_503_680_000],
+                       dtype=np.int64) * 10**6  # 1900, 1970, 2038, 3000
+    parts = [np.array([0, 1, -1, 10, -10, 100, 999_999, -999_999, 10**6, -(10**6)])]
+    for a in anchors:
+        parts += [a + rng.integers(-3650, 3650, 300) * day,            # days
+                  a + rng.integers(-10**9, 10**9, 300) * 10**6,        # seconds
+                  a + rng.integers(-10**12, 10**12, 300) * 1000,       # ms
+                  a + rng.integers(-10**15, 10**15, 300),              # us
+                  a + rng.integers(-10**6, 10**6, 300) * 10**6         # sub-second:
+                  + (rng.integers(1, 10, 300) * 10 ** rng.integers(0, 6, 300))]
+    us = np.concatenate(parts).astype(np.int64)
+    _, rem = _trunc_div(us, 10**6)
+    assert (rem < 0).any() and (rem == 0).any()
+    return us
+
+
+def test_split_equals_seven_pass_packing_and_round_trips():
+    from orc_rust_spark.codecs.timestamp_split import (_trunc_div, combine_timestamp_us,
+                                                       split_timestamp_us)
+
+    us = _granular_us()
+    secs, rem = _trunc_div(us, 10**6)
+    want = _seven_pass_pack(secs, rem * 1000)
+    got = split_timestamp_us(us)
+    assert all(np.array_equal(g, w) for g, w in zip(got, want))
+    # us-granular nanos keep 3 to 8 trailing zeros: every stripping code
+    assert set((got[1][rem != 0] & 7).tolist()) == {2, 3, 4, 5, 6, 7}
+    assert np.array_equal(combine_timestamp_us(*got), us)
+
+    in_ns = us[np.abs(us) < 9 * 10**15]  # 1685 to 2255
+    ns = in_ns * 1000 + in_ns % 3 * 70  # some with 0 or 1 trailing zeros
+    secs, rem = _trunc_div(ns, 10**9)
+    want = _seven_pass_pack(secs, rem)
+    got = split_timestamp_ns(ns)
+    assert all(np.array_equal(g, w) for g, w in zip(got, want))
+    assert set((got[1][rem != 0] & 7).tolist()) == {0, 2, 3, 4, 5, 6, 7}
+    assert np.array_equal(combine_timestamp_ns(*got), ns)
