@@ -19,21 +19,27 @@ labeled with setJobDescription for UI attribution.
 rebuilds a perfbench lookup file (webtext_encode's 4,000-row slice by
 default) in a temp directory, runs its probes through orc_point_lookup,
 checks every result against the source rows, and prints the compression
-blocks and uncompressed bytes decompressed per lookup for each (column,
-stream) of the data streams. No Spark.
+blocks and uncompressed bytes decompressed per cold lookup (the file's
+pooled data dropped first) for each (column, stream) of the data
+streams, then the blocks per lookup of a second, warm sweep over the
+decoded-data pool. No Spark.
 
   python bench_extra.py --lookup-cost --seed 1 [--workload orc_lookup] [--reps 3]
-      [--probe-column l_linenumber]
+      [--probe-column l_linenumber] [--cold]
 
 rebuilds the same lookup file, checks every probe's rows, then runs the
 probes ``--reps`` times and prints the median CPU per lookup, split by
 self time into block decompression, RLEv2 reads (``decode_rlev2`` and
 the point walker ``decode_rlev2_points``), the key phase (the probed
 column's group decodes and comparisons) and the rest, plus the RLEv2
-calls per lookup. ``--probe-column`` probes the first 8 distinct values
-of another column instead of the workload's key: on a low-cardinality
-column each lookup matches thousands of rows per group (a dense point
-read). No Spark, no profiler.
+calls per lookup and the decoded-data pool's counters
+(``orc_file.pool_stats``). These lookups are warm: the checking sweep
+has filled the pool. ``--cold`` also prints the same split of cold
+lookups, each timed after the file's pooled data is dropped.
+``--probe-column`` probes the first 8 distinct values of another column
+instead of the workload's key: on a low-cardinality column each lookup
+matches thousands of rows per group (a dense point read). No Spark, no
+profiler.
 
   python bench_extra.py --python-task-cost [--reps 9]
 
@@ -122,9 +128,20 @@ def build_sf1(spark) -> None:
         print(f"built {out}", file=sys.stderr)
 
 
+def _drop_pool(of, path: str) -> None:
+    """Empty the decoded-data pool of ``path``'s cached reader, which
+    keeps its parsed metadata and goes on pooling."""
+    name = os.path.abspath(path)
+    with of._READERS_LOCK:
+        readers = [r for key, r in of._READERS.items() if key[1] == name]
+    for reader in readers:
+        of._POOL.drop(reader, retire=False)
+
+
 def lookup_blocks(seed: int, workload: str) -> dict:
-    """Blocks and bytes the data streams decompress per point lookup on
-    the perfbench ``workload``'s lookup file, by (column, stream)."""
+    """Blocks and bytes the data streams decompress per cold point lookup
+    on the perfbench ``workload``'s lookup file, by (column, stream), and
+    the blocks per lookup of a warm sweep."""
     import tempfile
     from collections import defaultdict
 
@@ -144,27 +161,35 @@ def lookup_blocks(seed: int, workload: str) -> dict:
             got[ckey][1] += len(out[0])
         return out
 
+    def sweep(cold: bool) -> None:
+        for probe, _ in client.probes:
+            if cold:
+                _drop_pool(of, client.path)
+            rows = of.orc_point_lookup(client.path, client.key, probe)[0]
+            if not wl.same_rows(rows, client.rows(probe)):
+                raise SystemExit(f"lookup of {probe!r} returned wrong rows")
+
     with tempfile.TemporaryDirectory() as work:
         client = _lookup_file(seed, workload, work)
         of._block_at = counting
         try:
-            for probe, _ in client.probes:
-                rows = of.orc_point_lookup(client.path, client.key, probe)[0]
-                if not wl.same_rows(rows, client.rows(probe)):
-                    raise SystemExit(f"lookup of {probe!r} returned wrong rows")
+            sweep(cold=True)
+            cold = {ckey: tuple(v) for ckey, v in got.items()}
+            sweep(cold=False)
         finally:
             of._block_at = real
         meta = of.read_metadata(client.path)
     names = dict(enumerate(meta.types[0].field_names, start=1))
     n = len(client.probes)
+    warm = sum(b for b, _ in got.values()) - sum(b for b, _ in cold.values())
     per = {f"{names.get(cid, cid)}.{kinds[kind]}":
            {"blocks": round(b / n, 2), "mb": round(nb / n / 1e6, 3)}
-           for (cid, kind), (b, nb) in sorted(got.items())}
+           for (cid, kind), (b, nb) in sorted(cold.items())}
     return {"workload": workload, "seed": seed, "lookups": n,
             "block_size": meta.block_size, "writer": meta.software,
-            "blocks_per_lookup": round(sum(b for b, _ in got.values()) / n, 2),
-            "mb_per_lookup": round(sum(nb for _, nb in got.values()) / n / 1e6, 3),
-            "streams": per}
+            "blocks_per_lookup": round(sum(b for b, _ in cold.values()) / n, 2),
+            "mb_per_lookup": round(sum(nb for _, nb in cold.values()) / n / 1e6, 3),
+            "streams": per, "warm_blocks_per_lookup": round(warm / n, 2)}
 
 
 def _lookup_file(seed: int, workload: str, work: str, column: str = ""):
@@ -191,12 +216,15 @@ def _lookup_file(seed: int, workload: str, work: str, column: str = ""):
                       lambda v: table.filter(pc.equal(table.column(column), v)))
 
 
-def lookup_cost(seed: int, workload: str, reps: int, column: str = "") -> dict:
-    """Median CPU per point lookup on the perfbench ``workload``'s lookup
-    file (probing ``column`` if given, else the workload's key), split
-    by self time into block decompression, RLEv2 reads, the key phase
-    (the probed column's group decodes and comparisons) and the rest,
-    with the RLEv2 calls per lookup."""
+def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
+                cold: bool = False) -> dict:
+    """Median CPU per warm point lookup on the perfbench ``workload``'s
+    lookup file (probing ``column`` if given, else the workload's key),
+    split by self time into block decompression, RLEv2 reads, the key
+    phase (the probed column's group decodes and comparisons) and the
+    rest, with the RLEv2 calls per lookup and the pool's counters; with
+    ``cold``, the same of lookups each made after the file's pooled data
+    is dropped."""
     import tempfile
 
     from orc_rust_spark.codecs import block as blockc
@@ -235,9 +263,26 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "") -> dict:
                (of, "_decode_column_group", "key"), (of, "_eq_mask", "key"),
                (of, "_decode_column_rows", "rest")]
     saved = [(mod, name, getattr(mod, name)) for mod, name, _ in targets]
-    per_lookup: dict[str, list[float]] = {k: [] for k in (
-        "total", "decompress", "rlev2", "key", "rest")}
-    rle_calls: list[int] = []
+
+    def split(drop: bool) -> tuple[dict, float]:
+        per_lookup: dict[str, list[float]] = {k: [] for k in (
+            "total", "decompress", "rlev2", "key", "rest")}
+        rle_calls: list[int] = []
+        for _ in range(reps):
+            for probe, _ in client.probes:
+                if drop:
+                    _drop_pool(of, client.path)
+                self_s.clear()
+                calls.clear()
+                lookup(client.path, client.key, probe)
+                for part in ("decompress", "rlev2", "key", "rest"):
+                    per_lookup[part].append(self_s.get(part, 0.0))
+                per_lookup["total"].append(sum(self_s.values()))
+                rle_calls.append(calls.get("rlev2", 0))
+        return ({k: round(statistics.median(v) * 1e3, 3) for k, v in per_lookup.items()},
+                round(statistics.mean(rle_calls), 2))
+
+    out: dict = {}
     with tempfile.TemporaryDirectory() as work:
         client = _lookup_file(seed, workload, work, column)
         for probe, _ in client.probes:
@@ -248,24 +293,17 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "") -> dict:
             setattr(mod, name, timed(getattr(mod, name), part))
         lookup = timed(of.orc_point_lookup, "rest")
         try:
-            for _ in range(reps):
-                for probe, _ in client.probes:
-                    self_s.clear()
-                    calls.clear()
-                    lookup(client.path, client.key, probe)
-                    for part in ("decompress", "rlev2", "key", "rest"):
-                        per_lookup[part].append(self_s.get(part, 0.0))
-                    per_lookup["total"].append(sum(self_s.values()))
-                    rle_calls.append(calls.get("rlev2", 0))
+            out["cpu_ms_per_lookup"], out["rlev2_calls_per_lookup"] = split(False)
+            out["pool"] = of.pool_stats()
+            if cold:
+                (out["cold_cpu_ms_per_lookup"],
+                 out["cold_rlev2_calls_per_lookup"]) = split(True)
         finally:
             for mod, name, fn in saved:
                 setattr(mod, name, fn)
     return {"workload": workload, "seed": seed, "column": client.key,
-            "lookups": len(client.probes),
-            "reps": reps,
-            "cpu_ms_per_lookup": {k: round(statistics.median(v) * 1e3, 3)
-                                  for k, v in per_lookup.items()},
-            "rlev2_calls_per_lookup": round(statistics.mean(rle_calls), 2)}
+            "lookups": len(client.probes), "reps": reps,
+            "pool_bytes_cap": of.POOL_BYTES, **out}
 
 
 def _identity(batches):
@@ -369,6 +407,8 @@ def main() -> None:
                     help="print the stored-table decode path and its CPU")
     ap.add_argument("--probe-column", default="",
                     help="with --lookup-cost: probe this column, not the key")
+    ap.add_argument("--cold", action="store_true",
+                    help="with --lookup-cost: also time lookups on an emptied pool")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--workload", default="webtext_encode",
                     choices=["webtext_encode", "orc_lookup"])
@@ -387,7 +427,7 @@ def main() -> None:
         return
     if args.lookup_cost:
         print(json.dumps(lookup_cost(args.seed, args.workload, max(args.reps, 3),
-                                     args.probe_column),
+                                     args.probe_column, args.cold),
                          indent=1))
         return
     if args.python_task_cost:

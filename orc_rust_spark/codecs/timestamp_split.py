@@ -35,11 +35,10 @@ ORC_EPOCH_SECONDS = 1_420_070_400
 def _trunc_div(ts: np.ndarray, unit: int) -> tuple[np.ndarray, np.ndarray]:
     """(value // unit, value % unit) with C-style truncation toward zero
     (signed remainder) — liborc's writer split, exact for every input."""
-    secs = np.floor_divide(ts, np.int64(unit))
-    rem = ts - secs * np.int64(unit)
-    fixup = (ts < 0) & (rem != 0)
-    secs = np.where(fixup, secs + 1, secs)
-    return secs, ts - secs * np.int64(unit)
+    rem = np.fmod(ts, np.int64(unit))
+    # ts - rem is a multiple of unit (and cannot overflow: rem has ts'
+    # sign), so the floor division is exact
+    return (ts - rem) // np.int64(unit), rem
 
 
 def split_timestamp_ns(ts_ns: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -86,9 +86,11 @@ def _same_rows(got: pa.Table, want: pa.Table):
         assert g.equals(want.column(col).combine_chunks()), col
 
 
-def _lookup(path, table, key):
+def _lookup(path, table, key, cold=True):
     """The lookup of ``key``, checked against a filter of ``table``;
-    -> {(column name, stream kind): blocks decompressed}."""
+    -> {(column name, stream kind): blocks decompressed}. A ``cold``
+    lookup first drops the file's reader and its pooled data, so the
+    counts do not depend on the lookups before it."""
     blocks: Counter = Counter()
     real = of._block_at
     names = dict(zip(range(1, table.num_columns + 1), table.column_names))
@@ -98,6 +100,8 @@ def _lookup(path, table, key):
             blocks[(names[ckey[0]], ckey[1])] += 1
         return real(raw, comp, pos, cache, ckey)
 
+    if cold:
+        of.forget_reader(path)
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(of, "_block_at", counting)
         got, decoded, total = of.orc_point_lookup(path, "k", key)
@@ -202,6 +206,16 @@ def test_rows_in_every_block_share_one_read(ours, table):
     every block, and each selected value is picked out of it."""
     _lookup(ours, table, -1)
     assert table.filter(pc.equal(table.column("k"), -1)).num_rows == len(DUP)
+
+
+def test_repeated_lookup_decompresses_no_pooled_block(ours, table):
+    """A lookup repeated on the same reader finds every block the first
+    one decompressed, and the probed column's group, in the DataPool."""
+    key = N // 3
+    assert sum(_lookup(ours, table, key).values()) > 0
+    before = of.pool_stats()
+    assert sum(_lookup(ours, table, key, cold=False).values()) == 0
+    assert of.pool_stats()["hits"] > before["hits"]
 
 
 def test_rows_spread_over_the_group(ours, table):

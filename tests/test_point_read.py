@@ -11,6 +11,7 @@ the first and last bytes of the group's blocks.
 """
 
 import decimal
+import os
 
 import numpy as np
 import pyarrow as pa
@@ -216,3 +217,242 @@ def test_writer_zone_timestamps_match_the_source(table, tmp_path):
     for row in (10, 1_234, 4_321):
         got = of.orc_point_lookup(path, "k", row)[0]
         assert got.column("ts").to_pylist() == [table.column("ts")[row].as_py()]
+
+
+# --- the decoded-data pool (orc_file.DataPool) --------------------------------
+
+
+@pytest.fixture
+def pool(monkeypatch):
+    """A fresh, empty process pool for one test."""
+    fresh = of.DataPool()
+    monkeypatch.setattr(of, "_POOL", fresh)
+    return fresh
+
+
+def _reader_of(path):
+    """The cached OrcReader of ``path``, or None."""
+    name = str(path)
+    found = [r for k, r in of._READERS.items() if k[1] == name]
+    assert len(found) <= 1
+    return found[0] if found else None
+
+
+def _entries_of(pool, reader) -> int:
+    return sum(1 for k in pool._items if k[0] is reader)
+
+
+def _blob_table(seed: int) -> pa.Table:
+    """A key, a dictionary string and 16-byte random binaries: the
+    binaries are stored uncompressed, so two seeds give files of one
+    size that differ in the binaries alone."""
+    rng = np.random.default_rng(seed)
+    words = np.array(["red", "green", "blue"])
+    return pa.table({
+        "k": pa.array(np.arange(N, dtype=np.int64) % 1_700),
+        "lang": pa.array(words[np.arange(N) % 3].tolist()),
+        "blob": pa.array([rng.bytes(16) for _ in range(N)], pa.binary()),
+    })
+
+
+@pytest.mark.parametrize("how", ["in-place", "rename"])
+def test_rewritten_file_never_serves_pooled_rows(pool, tmp_path, how):
+    """A file replaced at the same path and size, in place (same inode)
+    or renamed over, by a writer that does not tell the reader cache:
+    the lookup returns the new file's rows, and the old reader's pooled
+    blocks, dictionary and key groups are dropped."""
+    old, new = _blob_table(1), _blob_table(2)
+    path = str(tmp_path / "f.orc")
+    spare = str(tmp_path / "new.orc")
+    _ours(old, path, "zstd")
+    _ours(new, spare, "zstd")
+    with open(spare, "rb") as fh:
+        data = fh.read()
+    assert len(data) == len(open(path, "rb").read())
+    probes = (5, 1_699, 0)
+    for key in probes * 2:
+        _same(of.orc_point_lookup(path, "k", key)[0],
+              old.filter(pc.equal(old.column("k"), key)))
+    stale = _reader_of(path)
+    assert _entries_of(pool, stale) and pool.stats()["hits"]
+    kinds = {k[2] for k in pool._items if k[0] is stale}
+    assert kinds == {"block", "dict", "key"}
+    if how == "in-place":
+        with open(path, "r+b") as fh:
+            fh.write(data)
+    else:
+        os.replace(spare, path)
+    for key in probes:
+        _same(of.orc_point_lookup(path, "k", key)[0],
+              new.filter(pc.equal(new.column("k"), key)))
+    assert _reader_of(path) is not stale
+    assert not _entries_of(pool, stale) and not stale.pooled
+
+
+def test_pool_stays_under_its_cap_with_four_threads(pool, table, tmp_path, monkeypatch):
+    """Four threads make mixed lookups (hits, misses, an integer and a
+    dictionary-string key) over three files with a small cap: after every
+    lookup the pool holds at most the cap, it evicts and it hits, and
+    every result equals a filter of the source."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    cap = 96 * 1024
+    monkeypatch.setattr(of, "POOL_BYTES", cap)
+    paths = []
+    for i, name in enumerate(("ours-zstd", "ours-zlib", "pyarrow-zstd")):
+        paths.append(str(tmp_path / f"{i}.orc"))
+        FILES[name](table, paths[-1])
+    probes = [("k", v) for v in (-1, -2, 10, 1_234, 4_998, -5)] + [
+        ("lang", "gamma"), ("lang_n", "beta"), ("k", 3_333)]
+    jobs = [(p, c, v) for _ in range(3) for p in paths for c, v in probes]
+    want = {(c, v): table.filter(pc.equal(table.column(c), v)) for c, v in probes}
+    over = []
+
+    def lookup(job):
+        path, column, value = job
+        got = of.orc_point_lookup(path, column, value)[0]
+        held = pool.stats()["bytes"]
+        if held > cap:
+            over.append(held)
+        return got
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=4) as workers:
+            got = list(workers.map(lookup, jobs, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(got) == len(jobs) and not over
+    for (_, column, value), g in zip(jobs, got):
+        _same(g, want[(column, value)])
+    stats = pool.stats()
+    assert stats["bytes"] == sum(b for _, b in pool._items.values()) <= cap
+    assert stats["evictions"] and stats["hits"] and stats["entries"]
+
+
+def test_forget_and_reader_eviction_empty_the_readers_entries(pool, table, tmp_path,
+                                                             monkeypatch):
+    """forget_reader drops a reader's pooled entries and retires it, and
+    so does its eviction from the reader cache; other readers keep theirs."""
+    monkeypatch.setattr(of, "READER_CACHE_FILES", 2)
+    paths = [str(tmp_path / f"{i}.orc") for i in range(3)]
+    for p in paths:
+        _ours(table, p, "zstd")
+    of.orc_point_lookup(paths[0], "k", -1)
+    first = _reader_of(paths[0])
+    assert _entries_of(pool, first)
+    of.forget_reader(paths[0])
+    assert _reader_of(paths[0]) is None
+    assert not _entries_of(pool, first) and not first.pooled
+    for p in paths:
+        of.orc_point_lookup(p, "k", -2)
+    readers = [_reader_of(p) for p in paths]
+    assert readers[0] is None
+    assert all(_entries_of(pool, r) for r in readers[1:])
+    assert pool.stats()["bytes"] == sum(b for _, b in pool._items.values())
+    evicted = {k[0] for k in pool._items} - set(readers[1:])
+    assert not evicted
+
+
+def test_lookup_on_a_dropped_reader_files_nothing(pool, table, tmp_path, monkeypatch):
+    """A lookup still running on a reader when its file is replaced (here:
+    forget_reader between the key phase's compare and the point reads)
+    returns its rows but files none of what it decoded into the pool."""
+    path = str(tmp_path / "f.orc")
+    _ours(table, path, "zstd")
+    real = of._eq_mask
+
+    def forget_midway(arr, value):
+        of.forget_reader(path)
+        return real(arr, value)
+
+    of.orc_point_lookup(path, "k", -2)
+    reader = _reader_of(path)
+    assert _entries_of(pool, reader)
+    monkeypatch.setattr(of, "_eq_mask", forget_midway)
+    _same(of.orc_point_lookup(path, "k", -1)[0],
+          table.filter(pc.equal(table.column("k"), -1)))
+    monkeypatch.undo()
+    assert _reader_of(path) is None and not pool._items
+
+
+def test_writer_drops_the_paths_reader_when_it_truncates(pool, table, tmp_path):
+    """OrcWriter forgets the reader of the file it replaces as soon as
+    it opens it, not only at close."""
+    path = str(tmp_path / "w.orc")
+    _ours(table, path, "zstd")
+    of.orc_point_lookup(path, "k", -1)
+    reader = _reader_of(path)
+    assert reader is not None and _entries_of(pool, reader)
+    writer = of.OrcWriter(path, table.schema, compression="zstd")
+    try:
+        assert _reader_of(path) is None
+        assert not _entries_of(pool, reader)
+        writer.write_table(table)
+    finally:
+        writer.close()
+    _same(of.orc_point_lookup(path, "k", -2)[0],
+          table.filter(pc.equal(table.column("k"), -2)))
+
+
+def _nested_table(seed=5) -> pa.Table:
+    """_table plus a list and a struct column, with nulls."""
+    tbl = _table(seed)
+    rng = np.random.default_rng(seed)
+    tags = [None if i % 7 == 3 else [f"t{j}" for j in range(int(m))]
+            for i, m in enumerate(rng.integers(0, 4, N))]
+    pt = pa.StructArray.from_arrays(
+        [pa.array(rng.integers(-100, 100, N)),
+         pa.array([f"p{i % 13}" for i in range(N)])], ["a", "b"],
+        mask=pa.array(rng.random(N) < 0.2))
+    return tbl.append_column("tags", pa.array(tags, pa.list_(pa.string()))).append_column(
+        "pt", pt)
+
+
+@pytest.mark.parametrize("writer", ["ours-zstd", "pyarrow-zstd"])
+def test_warm_lookups_equal_cold_lookups(pool, tmp_path, writer):
+    """A probe sweep of hits, misses, rows null in every "_n" column,
+    dictionary strings, timestamps and nested columns: lookups served
+    from the pool equal lookups on an empty pool and a filter of the
+    source."""
+    tbl = _nested_table()
+    path = str(tmp_path / "sweep.orc")
+    FILES[writer](tbl, path)
+    ts = tbl.column("ts")
+    probes = [("k", v) for v in (-1, -2, 10, 4_998, -5, 10**9)] + [
+        ("lang", "alpha"), ("lang_n", "gamma"), ("lang", "omega"),
+        ("ts", ts[1_234].as_py()), ("ts_n", ts[3_000].as_py())]
+    cold = []
+    for column, value in probes:
+        of.forget_reader(path)
+        got = of.orc_point_lookup(path, column, value)[0]
+        _same(got, tbl.filter(pc.equal(tbl.column(column), value)))
+        cold.append(got)
+    for _ in range(2):
+        hits = pool.stats()["hits"]
+        for (column, value), want in zip(probes, cold):
+            got = of.orc_point_lookup(path, column, value)[0]
+            assert got.schema == want.schema
+            _same(got, want)
+        assert pool.stats()["hits"] > hits
+
+
+@pytest.mark.parametrize("dtype", [pa.int8(), pa.int16(), pa.int32(), pa.int64()])
+def test_integer_eq_mask_equals_pyarrow_equal(dtype):
+    """An integer probe of a null-free integer group is compared in NumPy:
+    the same rows as pyarrow's equal, at the type's and int64's extremes,
+    past the type's range, and for a bool probe."""
+    import pyarrow.compute as pc
+
+    info = np.iinfo(dtype.to_pandas_dtype())
+    vals = np.array([0, 1, -1, info.min, info.max, 7, 7], dtype=info.dtype)
+    arr = pa.array(vals, dtype)
+    for probe in (0, 7, -1, 3, int(info.min), int(info.max), int(info.max) + 1,
+                  int(info.min) - 1, I64_MIN, I64_MAX, True, 2**64):
+        try:
+            want = pc.equal(arr, probe).fill_null(False).to_numpy(zero_copy_only=False)
+        except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
+            want = np.zeros(len(arr), dtype=bool)
+        assert np.array_equal(of._eq_mask(arr, probe), want), (dtype, probe)

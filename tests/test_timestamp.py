@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -226,3 +227,28 @@ def test_split_equals_seven_pass_packing_and_round_trips():
     assert all(np.array_equal(g, w) for g, w in zip(got, want))
     assert set((got[1][rem != 0] & 7).tolist()) == {0, 2, 3, 4, 5, 6, 7}
     assert np.array_equal(combine_timestamp_ns(*got), ns)
+
+
+def _floor_fixup_trunc_div(ts: np.ndarray, unit: int) -> tuple[np.ndarray, np.ndarray]:
+    """The floor-divide-and-fix-up form of the truncating split, kept as
+    the reference of ``_trunc_div``."""
+    secs = np.floor_divide(ts, np.int64(unit))
+    rem = ts - secs * np.int64(unit)
+    secs = np.where((ts < 0) & (rem != 0), secs + 1, secs)
+    return secs, ts - secs * np.int64(unit)
+
+
+@pytest.mark.parametrize("unit", [10**6, 10**9])
+def test_trunc_div_equals_floor_fixup_form(unit):
+    """The fmod split equals the floor-divide-and-fix-up one at the int64
+    extremes, around zero and one either side of a unit multiple."""
+    from orc_rust_spark.codecs.timestamp_split import _trunc_div
+
+    i64 = np.iinfo(np.int64)
+    edge = [i64.min, i64.min + 1, i64.max, i64.max - 1, 0, 1, -1,
+            unit, -unit, unit + 1, unit - 1, -unit + 1, -unit - 1]
+    ts = np.concatenate([np.array(edge, dtype=np.int64), _granular_us()])
+    got, want = _trunc_div(ts, unit), _floor_fixup_trunc_div(ts, unit)
+    assert got[0].dtype == got[1].dtype == np.int64
+    assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
+    assert np.array_equal(got[0] * unit + got[1], ts)
