@@ -33,8 +33,10 @@ self time into block decompression, RLEv2 reads (``decode_rlev2`` and
 the point walker ``decode_rlev2_points``), the key phase (the probed
 column's group decodes and comparisons) and the rest, plus the RLEv2
 calls per lookup and the decoded-data pool's counters
-(``orc_file.pool_stats``). These lookups are warm: the checking sweep
-has filled the pool. ``--cold`` also prints the same split of cold
+(``orc_file.pool_stats``), its bytes by entry kind (block, dict, key,
+float) and how many float pieces it holds as scaled integers and how
+many as raw values. These lookups are warm: the checking sweep has
+filled the pool. ``--cold`` also prints the same split of cold
 lookups, each timed after the file's pooled data is dropped.
 ``--probe-column`` probes the first 8 distinct values of another column
 instead of the workload's key: on a low-cardinality column each lookup
@@ -138,6 +140,19 @@ def _drop_pool(of, path: str) -> None:
         of._POOL.drop(reader, retire=False)
 
 
+def _pool_contents(of) -> dict:
+    """The decoded-data pool's bytes by entry kind (block, dict, key,
+    float) and its float pieces by form: scaled integers or raw values."""
+    held: dict[str, int] = {}
+    forms = {"scaled": 0, "raw": 0}
+    with of._POOL._lock:
+        for key, (value, size) in of._POOL._items.items():
+            held[key[2]] = held.get(key[2], 0) + size
+            if key[2] == "float":
+                forms["raw" if value[1] is None else "scaled"] += 1
+    return {"bytes_by_kind": held, "float_pieces": forms}
+
+
 def lookup_blocks(seed: int, workload: str) -> dict:
     """Blocks and bytes the data streams decompress per cold point lookup
     on the perfbench ``workload``'s lookup file, by (column, stream), and
@@ -222,9 +237,9 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
     lookup file (probing ``column`` if given, else the workload's key),
     split by self time into block decompression, RLEv2 reads, the key
     phase (the probed column's group decodes and comparisons) and the
-    rest, with the RLEv2 calls per lookup and the pool's counters; with
-    ``cold``, the same of lookups each made after the file's pooled data
-    is dropped."""
+    rest, with the RLEv2 calls per lookup and the pool's counters and
+    contents; with ``cold``, the same of lookups each made after the
+    file's pooled data is dropped."""
     import tempfile
 
     from orc_rust_spark.codecs import block as blockc
@@ -294,7 +309,7 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
         lookup = timed(of.orc_point_lookup, "rest")
         try:
             out["cpu_ms_per_lookup"], out["rlev2_calls_per_lookup"] = split(False)
-            out["pool"] = of.pool_stats()
+            out["pool"] = {**of.pool_stats(), **_pool_contents(of)}
             if cold:
                 (out["cold_cpu_ms_per_lookup"],
                  out["cold_rlev2_calls_per_lookup"]) = split(True)

@@ -40,6 +40,9 @@ try:  # snappy / lz4 / zstd fallbacks via pyarrow's bundled codecs
 except Exception:  # pragma: no cover
     _pa = None
     _PA_SNAPPY = _PA_LZ4 = _PA_ZSTD = False
+#: the decompressing pyarrow codecs, made once
+_PA_CODECS = {name: _pa.Codec(name) for name, ok in
+              (("zstd", _PA_ZSTD), ("snappy", _PA_SNAPPY)) if ok}
 
 
 #: golden LZ4 block (lz4_raw compress of the probe below) so the native
@@ -322,26 +325,27 @@ def _zstd_content_size(buf: bytes) -> int:
     return int.from_bytes(buf[pos: pos + 8], "little")
 
 
-def _decompress_one(codec: str, comp: bytes) -> bytes:
+def _decompress_one(codec: str, comp) -> bytes:
+    """One block's bytes; ``comp`` is any bytes-like object, read in
+    place by zlib and the pyarrow codecs, which decompress straight into
+    the returned bytes."""
     if codec == "zlib":
         return zlib.decompress(comp, -15)
     if codec == "zstd":
         if _HAS_ZSTD:
             return _zstd.ZstdDecompressor().decompress(comp)
-        raw = bytes(comp)
         try:
-            size = _zstd_content_size(raw)
+            size = _zstd_content_size(comp)
         except ValueError:
             # RFC 8878 makes Frame_Content_Size optional (streaming
             # writers omit it); pyarrow's one-shot decompress needs the
             # exact size, but its CompressedInputStream decodes without
             # it (code-review r6)
-            with _pa.CompressedInputStream(_pa.BufferReader(raw), "zstd") as f:
+            with _pa.CompressedInputStream(_pa.BufferReader(comp), "zstd") as f:
                 return f.read()
-        return _pa.Codec("zstd").decompress(raw, size).to_pybytes()
+        return _PA_CODECS["zstd"].decompress(comp, size, asbytes=True)
     if codec == "snappy":
-        raw = bytes(comp)
-        return _pa.Codec("snappy").decompress(raw, _snappy_len(raw)).to_pybytes()
+        return _PA_CODECS["snappy"].decompress(comp, _snappy_len(comp), asbytes=True)
     if codec == "lz4":
         return lz4_block_decompress(comp)
     if codec == "lzo":
@@ -417,17 +421,21 @@ def compress_stream(
     return b"".join(parts)
 
 
-def decompress_stream(buf: bytes, codec: str = "zlib") -> bytes:
+def decompress_stream(buf, codec: str = "zlib") -> bytes:
+    """The bytes of a framed stream ``buf`` (any bytes-like object; its
+    blocks are handed to the codec as zero-copy views). codec='none'
+    returns ``buf`` itself."""
     if codec == "none":
         return buf
+    view = memoryview(buf)
     parts = []  # one join at the end — no quadratic-ish bytearray growth
     pos = 0
-    n = len(buf)
+    n = len(view)
     while pos < n:
-        header = int.from_bytes(buf[pos : pos + 3], "little")
+        header = int.from_bytes(view[pos : pos + 3], "little")
         pos += 3
         length = header >> 1
-        chunk = buf[pos : pos + length]
+        chunk = view[pos : pos + length]
         pos += length
         parts.append(chunk if header & 1 else _decompress_one(codec, chunk))
     if len(parts) == 1:

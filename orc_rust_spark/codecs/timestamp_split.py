@@ -88,10 +88,18 @@ def _pack_secs_nanos(secs: np.ndarray, nanos: np.ndarray) -> tuple[np.ndarray, n
     return stored_secs, enc
 
 
+_THREE, _LOW3, _EPOCH = np.int64(3), np.int64(0x7), np.int64(ORC_EPOCH_SECONDS)
+_US, _US_SPAN, _US_MAX = np.int64(1000), np.int64(999_999), np.uint64(1_999_998)
+
+
 def _unpack_secs_nanos(stored_secs: np.ndarray, enc_nanos: np.ndarray):
-    nanos = (enc_nanos >> np.int64(3)) * _ZEROS_MULT[enc_nanos & np.int64(0x7)]
-    secs = stored_secs + ORC_EPOCH_SECONDS
-    secs = np.where((secs < 0) & (nanos > 999_999), secs - 1, secs)
+    nanos = (enc_nanos >> _THREE) * _ZEROS_MULT[enc_nanos & _LOW3]
+    secs = stored_secs + _EPOCH
+    neg = secs < 0
+    if np.count_nonzero(neg):
+        # Java/ORC-763: a negative second with a positive sub-second is
+        # one second early (int64 minus bool)
+        secs -= neg & (nanos > 999_999)
     return secs, nanos
 
 
@@ -135,12 +143,17 @@ def combine_timestamp_us(stored_secs: np.ndarray, enc_nanos: np.ndarray) -> np.n
     would silently alter values); unlike the ns-space combine it does not
     wrap for timestamps past ~year 2262 (code-review r6)."""
     secs, nanos = _unpack_secs_nanos(stored_secs, enc_nanos)
-    _check_nanos_range(nanos)
-    if nanos.size and int(np.count_nonzero(nanos % 1000)):
+    us, sub_us = np.divmod(nanos, _US)
+    # valid nanos are whole micros in (-1e9, 1e9), so |us| <= 999_999:
+    # one unsigned compare tests both signs; a failure is told apart
+    # (corrupt range first) off the common path
+    if np.count_nonzero(sub_us) or np.count_nonzero(
+            (us + _US_SPAN).view(np.uint64) > _US_MAX):
+        _check_nanos_range(nanos)
         raise ValueError(
             "ORC timestamp has sub-microsecond precision; decoding to "
             "Spark's us-precision timestamps would silently alter values")
-    return secs * np.int64(1_000_000) + nanos // 1000
+    return secs * np.int64(1_000_000) + us
 
 
 def encode_timestamp(ts_ns: np.ndarray) -> tuple[bytes, bytes]:

@@ -456,3 +456,183 @@ def test_integer_eq_mask_equals_pyarrow_equal(dtype):
         except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
             want = np.zeros(len(arr), dtype=bool)
         assert np.array_equal(of._eq_mask(arr, probe), want), (dtype, probe)
+
+
+# --- decimal-like doubles pooled as exact scaled integers ---------------------
+
+#: rows of key -7, one in every group's first piece and one in every group's
+#: second (ours: 512 doubles a 4 KiB block)
+SCALED_ROWS = tuple(g * STRIDE + r for g in range(N // STRIDE) for r in (3, 700))
+#: (column, e, dtype) of the decimal-like columns, e = 0..6; "i8"/"i16" span
+#: their dtype's whole range
+SCALED = [("e0", 0, np.int32), ("e1", 1, np.int16), ("e2", 2, np.int32),
+          ("e3", 3, np.int32), ("e4", 4, np.int32), ("e5", 5, np.int32),
+          ("e6", 6, np.int32), ("i8", 2, np.int8), ("i16", 1, np.int16)]
+#: columns that must be pooled as plain values: each holds its odd value
+#: at every key -7 row
+ODD = {"neg_zero": -0.0, "nan": float("nan"), "inf": float("inf"),
+       "ninf": float("-inf"), "subnormal": 5e-324, "inexact": 0.1 + 0.2,
+       "near_2_53": float(2**53 - 1), "int64_range": 3.0e12}
+
+
+def _scaled_table(seed=3) -> pa.Table:
+    """A key ``k`` (-7 at SCALED_ROWS), the SCALED columns, the ODD
+    columns (cents otherwise), ``mixed`` (cents with a random double in
+    group 2), ``shifting`` (e = 1, 3, 0, 3, 1 by group), a float32
+    column and a nullable cents column."""
+    rng = np.random.default_rng(seed)
+    k = np.arange(N, dtype=np.int64)
+    k[list(SCALED_ROWS)] = -7
+    cols = {"k": pa.array(k)}
+    for name, e, dtype in SCALED:
+        info = np.iinfo(dtype)
+        if name in ("i8", "i16"):
+            ints = rng.integers(info.min, int(info.max) + 1, N)
+            ints[[1, 2]] = info.min, info.max
+        else:
+            # a last digit that is not 0: every value needs all e digits
+            span = min(int(info.max) // 10, 10**7)
+            ints = rng.integers(-span, span, N) * 10 + rng.integers(1, 10, N)
+        cols[name] = pa.array(ints / 10.0**e)
+    cents = rng.integers(0, 100_000, N) / 100
+    for name, odd in ODD.items():
+        vals = cents.copy()
+        vals[list(SCALED_ROWS)] = odd
+        cols[name] = pa.array(vals)
+    mixed = cents.copy()
+    mixed[2 * STRIDE + 500] = rng.random()
+    cols["mixed"] = pa.array(mixed)
+    shifting = np.concatenate([rng.integers(1, 10**6, STRIDE) / 10.0**e
+                               for e in (1, 3, 0, 3, 1)])
+    cols["shifting"] = pa.array(shifting)
+    cols["f32"] = pa.array((rng.integers(0, 1000, N) / 4).astype(np.float32))
+    cols["cents_n"] = pa.array(cents, mask=rng.random(N) < 0.3)
+    return pa.table(cols)
+
+
+@pytest.fixture(scope="module")
+def scaled_table():
+    return _scaled_table()
+
+
+def _float_entries(pool, path) -> dict:
+    """{column name: [(dtype or None, e) of each pooled piece]} of
+    ``path``'s reader, None standing for plain values."""
+    reader = _reader_of(path)
+    names = dict(zip(reader.meta.types[0].subtypes, reader.meta.types[0].field_names))
+    out: dict = {}
+    for key, (entry, size) in pool._items.items():
+        if key[0] is reader and key[2] == "float":
+            values, e = entry
+            assert size == values.nbytes
+            out.setdefault(names[key[3][0]], []).append(
+                (None if e is None else values.dtype, e))
+    return out
+
+
+@pytest.mark.parametrize("writer", ["ours-zstd", "pyarrow-zstd"])
+def test_scaled_pool_lookups_equal_filter_cold_and_warm(pool, scaled_table, tmp_path,
+                                                        writer):
+    """Lookups of keys in every group and piece: cold (an empty pool) and
+    warm results equal a filter of the source, bit for bit, for every
+    scaled, fallen-back, float32 and nullable column."""
+    path = str(tmp_path / "scaled.orc")
+    FILES[writer](scaled_table, path)
+    keys = [-7, 10, 1_234, 2_500, 3_999, 4_998]
+    cold = []
+    for key in keys:
+        of.forget_reader(path)
+        got = of.orc_point_lookup(path, "k", key)[0]
+        _same(got, scaled_table.filter(pc.equal(scaled_table.column("k"), key)))
+        cold.append(got)
+    for _ in range(2):
+        for key in keys:
+            of.orc_point_lookup(path, "k", key)
+        hits = pool.stats()["hits"]
+        for key, want in zip(keys, cold):
+            _same(of.orc_point_lookup(path, "k", key)[0], want)
+        assert pool.stats()["hits"] > hits
+    assert pool.stats()["misses"] and not pool.stats()["evictions"]
+
+
+@pytest.mark.parametrize("writer", ["ours-zstd", "pyarrow-zstd"])
+def test_decimal_like_doubles_pool_as_narrow_scaled_ints(pool, scaled_table, tmp_path,
+                                                         writer):
+    """Every piece of a decimal-like column is pooled scaled, in the
+    narrowest integer type at the smallest exponent; odd values, a
+    group mixing exact and inexact values and float32 pool plain; a
+    column whose exponent changes by group keeps each piece's own."""
+    path = str(tmp_path / "scaled.orc")
+    FILES[writer](scaled_table, path)
+    of.orc_point_lookup(path, "k", -7)
+    got = _float_entries(pool, path)
+    pieces = 2 * (N // STRIDE) if writer.startswith("ours") else N // STRIDE
+    for name, e, dtype in SCALED:
+        assert got[name] == [(np.dtype(dtype), e)] * pieces, name
+    for name in ODD:
+        assert got[name] == [(None, None)] * pieces, name
+    assert got["f32"] == [(None, None)] * (N // STRIDE)  # 4,000 bytes a group
+    assert all(e == 2 for _, e in got["cents_n"])
+    reader = _reader_of(path)
+    names = reader.meta.types[0].field_names
+    e_of = {(names[key[3][0] - 1], *key[3][1:]): entry[1]
+            for key, (entry, _) in pool._items.items()
+            if key[0] is reader and key[2] == "float"}
+    # the piece that holds mixed's random double, row 500 of group 2
+    assert {at: e for at, e in e_of.items() if at[0] == "mixed" and e != 2} == {
+        ("mixed", 2, 0): None}
+    # a group of e = 0 or 1 values after one of e = 3 takes the column's 3
+    assert {g: {e for at, e in e_of.items() if at[:2] == ("shifting", g)}
+            for g in range(5)} == {0: {1}, 1: {3}, 2: {3}, 3: {3}, 4: {3}}
+
+
+def test_pooled_decimal_like_doubles_take_at_most_half_their_bytes(pool, tmp_path):
+    """A cents column of 4 KiB pieces pools at most half the bytes of its
+    raw doubles; the pool holds no block of it."""
+    tbl = pa.table({"k": pa.array(np.arange(N, dtype=np.int64) % 50),
+                    "price": pa.array(np.round(np.random.default_rng(2).uniform(
+                        900.68, 104_999.91, N), 2))})
+    path = str(tmp_path / "price.orc")
+    _ours(tbl, path, "zstd")
+    of.orc_point_lookup(path, "k", 7)
+    held = raw = 0
+    for key, (entry, size) in pool._items.items():
+        if key[2] == "float":
+            assert entry[1] == 2
+            held += size
+            raw += 8 * len(entry[0])
+    assert raw == 8 * N and 2 * held <= raw
+    assert not any(k[2] == "block" and k[3][0][0] == 2 for k in pool._items)
+
+
+def test_scaled_ints_round_trip_bit_for_bit():
+    """encode_scaled at e = 0..6 gives back every value bit for bit in
+    the narrowest type; odd values, float32 and empty arrays give None."""
+    from orc_rust_spark.codecs.float_plain import decode_scaled, encode_scaled
+
+    rng = np.random.default_rng(4)
+    for e in range(7):
+        for lo, hi, dtype in ((-128, 128, np.int8), (-(2**15), 2**15, np.int16),
+                              (-(2**31), 2**31, np.int32)):
+            ints = rng.integers(lo, hi, 2_000)
+            ints[:2] = lo, hi - 1
+            if e:
+                ints[2] = 1  # one value needs all e digits
+            vals = ints / 10.0**e
+            # a larger hint that still fits scales by it; a smaller one fails
+            for hint in (None, e, e + 1, max(e - 1, 0)):
+                got = encode_scaled(vals, hint)
+                assert got is not None, (e, dtype, hint)
+                if hint == e + 1 and got[1] == hint:
+                    assert got[0].itemsize >= np.dtype(dtype).itemsize
+                else:
+                    assert (got[0].dtype, got[1]) == (dtype, e), (e, dtype, hint)
+                assert decode_scaled(*got).view(np.uint64).tolist() == \
+                    vals.view(np.uint64).tolist()
+    cents = rng.integers(0, 10**6, 1_000) / 100
+    for odd in ODD.values():
+        vals = cents.copy()
+        vals[500] = odd
+        assert encode_scaled(vals) is None and encode_scaled(vals, 2) is None, odd
+    assert encode_scaled(cents.astype(np.float32)) is None
+    assert encode_scaled(np.array([], dtype=np.float64)) is None

@@ -105,6 +105,25 @@ def test_truncated_file_fails_orc_scan_and_orcx(spark, tmp_path):
             list(reader.read(part))
 
 
+# --- orc_scan spreads its splits over tasks without a shuffle ---------------
+
+
+def test_orc_scan_spreads_splits_without_a_shuffle(spark, tmp_path):
+    """Ten equal stripes on a local[4] session: the scan's executed plan
+    has no Exchange, and its four partitions hold 2 or 3 stripes each."""
+    from pyspark.sql import functions as F
+
+    p = str(tmp_path / "ten.orc")
+    of.write_orc(_table(0, 10_000), p, compression="zstd", stripe_rows=1_000)
+    assert len(of.read_metadata(p).stripes) == 10
+    df = of.orc_scan(spark, p)
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism == 4
+    rows = [r["count"] for r in df.groupBy(F.spark_partition_id()).count().collect()]
+    assert sum(rows) == 10_000 and len(rows) == 4
+    assert max(rows) - min(rows) <= 1_000  # one stripe apart at most
+
+
 # --- the stream reader's planning honours io_retries, no Spark --------------
 
 
