@@ -31,13 +31,14 @@ rebuilds the same lookup file, checks every probe's rows, then runs the
 probes ``--reps`` times and prints the median CPU per lookup, split by
 self time into block decompression, RLEv2 reads (``decode_rlev2`` and
 the point walker ``decode_rlev2_points``), the key phase (the probed
-column's group decodes and comparisons) and the rest, plus the RLEv2
-calls per lookup and the decoded-data pool's counters
-(``orc_file.pool_stats``), its bytes by entry kind (block, dict, key,
-float) and how many float pieces it holds as scaled integers and how
-many as raw values. These lookups are warm: the checking sweep has
-filled the pool. ``--cold`` also prints the same split of cold
-lookups, each timed after the file's pooled data is dropped.
+column's comparisons and group decodes) and the rest, plus per lookup
+the RLEv2 calls, the pieces decoded whole (``orc_file._build_piece``)
+and the spans read from the file, and the decoded-data pool's counters
+(``orc_file.pool_stats``) with its bytes and entries by kind: a piece's
+form (for, codes, scaled, dense, present) or dict, block and key.
+These lookups are warm: the checking sweep has filled the pool.
+``--cold`` also prints the same split and counts of cold lookups, each
+timed after the file's pooled data is dropped.
 ``--probe-column`` probes the first 8 distinct values of another column
 instead of the workload's key: on a low-cardinality column each lookup
 matches thousands of rows per group (a dense point read). No Spark, no
@@ -141,16 +142,16 @@ def _drop_pool(of, path: str) -> None:
 
 
 def _pool_contents(of) -> dict:
-    """The decoded-data pool's bytes by entry kind (block, dict, key,
-    float) and its float pieces by form: scaled integers or raw values."""
+    """The decoded-data pool's bytes and entries by kind: a piece's form
+    (for, codes, scaled, dense, present), or dict, block and key."""
     held: dict[str, int] = {}
-    forms = {"scaled": 0, "raw": 0}
+    entries: dict[str, int] = {}
     with of._POOL._lock:
         for key, (value, size) in of._POOL._items.items():
-            held[key[2]] = held.get(key[2], 0) + size
-            if key[2] == "float":
-                forms["raw" if value[1] is None else "scaled"] += 1
-    return {"bytes_by_kind": held, "float_pieces": forms}
+            kind = value.kind if key[2] == "piece" else key[2]
+            held[kind] = held.get(kind, 0) + size
+            entries[kind] = entries.get(kind, 0) + 1
+    return {"bytes_by_kind": held, "entries_by_kind": entries}
 
 
 def lookup_blocks(seed: int, workload: str) -> dict:
@@ -236,10 +237,10 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
     """Median CPU per warm point lookup on the perfbench ``workload``'s
     lookup file (probing ``column`` if given, else the workload's key),
     split by self time into block decompression, RLEv2 reads, the key
-    phase (the probed column's group decodes and comparisons) and the
-    rest, with the RLEv2 calls per lookup and the pool's counters and
-    contents; with ``cold``, the same of lookups each made after the
-    file's pooled data is dropped."""
+    phase (the probed column's comparisons and group decodes) and the
+    rest; the RLEv2 calls, whole-piece decodes and file reads per
+    lookup; and the pool's counters and contents. With ``cold``, the
+    same of lookups each made after the file's pooled data is dropped."""
     import tempfile
 
     from orc_rust_spark.codecs import block as blockc
@@ -276,13 +277,26 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
     targets = [(blockc, "decompress_stream", "decompress"),
                (of, "decode_rlev2", "rlev2"), (of, "decode_rlev2_points", "rlev2"),
                (of, "_decode_column_group", "key"), (of, "_eq_mask", "key"),
-               (of, "_decode_column_rows", "rest")]
-    saved = [(mod, name, getattr(mod, name)) for mod, name, _ in targets]
+               (of, "_key_mask", "key"), (of, "_decode_column_rows", "rest")]
+    saved = [(mod, name, getattr(mod, name)) for mod, name, _ in targets] + [
+        (of, "_build_piece", of._build_piece), (of, "_span_reader", of._span_reader)]
 
-    def split(drop: bool) -> tuple[dict, float]:
+    def counted(fn, what):
+        def run(*args, **kwargs):
+            calls[what] = calls.get(what, 0) + 1
+            return fn(*args, **kwargs)
+        return run
+
+    def span_reader(fh, offset):
+        return counted(saved[-1][2](fh, offset), "file_reads")
+
+    def split(drop: bool) -> tuple[dict, dict]:
         per_lookup: dict[str, list[float]] = {k: [] for k in (
             "total", "decompress", "rlev2", "key", "rest")}
-        rle_calls: list[int] = []
+        # reported name -> the ``calls`` counter it reads
+        counted_as = {"rlev2_calls": "rlev2", "piece_decodes": "piece_decodes",
+                      "file_reads": "file_reads"}
+        counts: dict[str, list[int]] = {k: [] for k in counted_as}
         for _ in range(reps):
             for probe, _ in client.probes:
                 if drop:
@@ -293,9 +307,10 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
                 for part in ("decompress", "rlev2", "key", "rest"):
                     per_lookup[part].append(self_s.get(part, 0.0))
                 per_lookup["total"].append(sum(self_s.values()))
-                rle_calls.append(calls.get("rlev2", 0))
+                for what, counter in counted_as.items():
+                    counts[what].append(calls.get(counter, 0))
         return ({k: round(statistics.median(v) * 1e3, 3) for k, v in per_lookup.items()},
-                round(statistics.mean(rle_calls), 2))
+                {f"{k}_per_lookup": round(statistics.mean(v), 2) for k, v in counts.items()})
 
     out: dict = {}
     with tempfile.TemporaryDirectory() as work:
@@ -306,13 +321,16 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
                 raise SystemExit(f"lookup of {probe!r} returned wrong rows")
         for mod, name, part in targets:
             setattr(mod, name, timed(getattr(mod, name), part))
+        of._build_piece = counted(of._build_piece, "piece_decodes")
+        # the file's spans read: one seek and read each (a file's tail and
+        # stripe indexes are read by a reader's first lookups alone)
+        of._span_reader = span_reader
         lookup = timed(of.orc_point_lookup, "rest")
         try:
-            out["cpu_ms_per_lookup"], out["rlev2_calls_per_lookup"] = split(False)
+            out["cpu_ms_per_lookup"], out["warm"] = split(False)
             out["pool"] = {**of.pool_stats(), **_pool_contents(of)}
             if cold:
-                (out["cold_cpu_ms_per_lookup"],
-                 out["cold_rlev2_calls_per_lookup"]) = split(True)
+                out["cold_cpu_ms_per_lookup"], out["cold"] = split(True)
         finally:
             for mod, name, fn in saved:
                 setattr(mod, name, fn)

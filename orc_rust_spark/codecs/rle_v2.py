@@ -32,14 +32,16 @@ runs per value.
 The decoder mirrors it in two passes. One walk over the run headers
 records each run's shape, where its packed values start and where its
 values go in the output. Then runs of one shape are decoded together, in
-batches of up to DECODE_BATCH_VALUES values: DIRECT runs of one (width,
-length) are unpacked as one ``(k, nbytes)`` matrix (consecutive ones are
-a strided view of the stream, as they sit a header plus ``nbytes``
-apart) and un-zigzagged once; bit-packed DELTA runs of one shape are
-unpacked and summed row-wise, and fixed DELTA runs of one length are
-computed together. SHORT_REPEAT runs are filled and PATCHED_BASE runs
-decoded one at a time. A stream that ends before its runs do raises
-CorruptStream.
+batches of up to DECODE_BATCH_VALUES values (or the caller's
+``batch_values``): DIRECT runs of one (width, length) are unpacked as one
+``(k, nbytes)`` matrix (consecutive ones are a strided view of the
+stream, as they sit a header plus ``nbytes`` apart) and un-zigzagged
+once, in the width's own 8, 16 or 32-bit dtype where it has one (with
+``narrow`` the output keeps the narrowest dtype the runs prove);
+bit-packed DELTA runs of one shape are unpacked and summed row-wise, and
+fixed DELTA runs of one length are computed together. SHORT_REPEAT runs
+are filled and PATCHED_BASE runs decoded one at a time. A stream that
+ends before its runs do raises CorruptStream.
 
 A point read of a few values out of thousands (decode_rlev2_points, the
 ORC reader's row-selected read) walks the run headers once, up to the
@@ -112,7 +114,9 @@ BASE_VALUE_LIMIT = 1 << 56
 BATCH_VALUES = 4 * MAX_RUN_LENGTH
 FILE_BATCH_VALUES = 32 * MAX_RUN_LENGTH
 # values per reader batch of same-shape runs: bounds each batch's unpacked
-# matrix and its zigzag or cumsum temporaries to 32 KB, for the same reason
+# matrix and its zigzag or cumsum temporaries to 32 KB, for the same reason.
+# The point-lookup pool decodes a touched row group whole in one batch of
+# FILE_BATCH_VALUES: it runs in the process that owns the pool
 DECODE_BATCH_VALUES = 8 * MAX_RUN_LENGTH
 # a point read pays ~1 us of Python per selected value, a stretch decode
 # ~30 us of set-up plus ~20 ns per value of its span (10,000-value
@@ -429,12 +433,18 @@ def _run_extent(buf, pos: int) -> tuple[int, int]:
 
 
 def decode_rlev2(buf, n: int, signed: bool = True, skip: int = 0,
-                 exact: bool = True) -> np.ndarray:
+                 exact: bool = True, *, batch_values: int = DECODE_BATCH_VALUES,
+                 narrow: bool = False) -> np.ndarray:
     """Decode ``n`` int64 values from an ORC RLEv2 stream, optionally
     skipping ``skip`` values first (whole runs are skipped via header
     arithmetic without materializing). ``exact=False`` tolerates a stream
     that continues past the requested count (decoding a row group out of
-    the middle of a stripe stream) and truncates the final run.
+    the middle of a stripe stream) and truncates the final run. Runs of
+    one shape decode in batches of up to ``batch_values`` values; the
+    values never depend on it. With ``narrow`` the values come in the
+    narrowest 8, 16 or 32-bit dtype (signed like the stream) that the
+    runs' widths prove holds them, where every run decoded is DIRECT or
+    SHORT_REPEAT, and as int64 otherwise.
 
     A stream shorter than its run headers promise raises CorruptStream;
     ``exact=True`` raises ValueError when the runs overshoot ``n``."""
@@ -463,20 +473,42 @@ def decode_rlev2(buf, n: int, signed: bool = True, skip: int = 0,
     if runs.got != n + head_trim and exact:
         raise ValueError(
             f"RLEv2 stream produced {runs.got} values, expected {n + head_trim}")
-    out = np.empty(runs.got, dtype=np.int64)
+    out = np.empty(runs.got, dtype=_narrow_dtype(runs, signed) if narrow else np.int64)
     for o, count, value in runs.repeats:
         out[o : o + count] = value
     data = np.frombuffer(buf, dtype=np.uint8)
     for (width, count), (starts, outs) in runs.direct.items():
-        _direct_groups(out, data, width, count, starts, outs, signed)
+        _direct_groups(out, data, width, count, starts, outs, signed, batch_values)
     for (width, count), group in runs.delta.items():
-        _delta_groups(out, data, width, count, *group)
+        _delta_groups(out, data, width, count, *group, batch_values)
     for count, (outs, bases, firsts) in runs.fixed.items():
-        _fixed_groups(out, count, outs, bases, firsts)
+        _fixed_groups(out, count, outs, bases, firsts, batch_values)
     for p, o in runs.patched:
         vals, _ = _read_patched_base(buf, p)
         out[o : o + vals.size] = vals
     return out[head_trim : head_trim + n]
+
+
+_NARROW_DTYPES = {True: (np.int8, np.int16, np.int32), False: (np.uint8, np.uint16, np.uint32)}
+
+
+def _narrow_dtype(runs: "_RunWalk", signed: bool) -> type:
+    """The narrowest of the 8, 16 and 32-bit dtypes (signed like the
+    stream) that holds every value of ``runs``: a DIRECT run of width w
+    holds w-bit values (zigzagged ones when signed), a SHORT_REPEAT run
+    its one value. int64 if any other run is among them."""
+    if runs.delta or runs.fixed or runs.patched:
+        return np.int64
+    bits = max((width for width, _ in runs.direct), default=1)
+    for _, _, value in runs.repeats:
+        if signed:
+            bits = max(bits, (value if value >= 0 else ~value).bit_length() + 1)
+        else:
+            bits = max(bits, value.bit_length() if value >= 0 else 64)
+    for size, dtype in zip((8, 16, 32), _NARROW_DTYPES[signed]):
+        if bits <= size:
+            return dtype
+    return np.int64
 
 
 class _RunWalk:
@@ -650,7 +682,7 @@ def _run_points(buf, pos: int, count: int, offs: list, signed: bool) -> list:
             return [_to_int64((base + o * delta) & _MASK64) for o in offs]
         vals = np.empty(count, dtype=np.int64)
         _delta_groups(vals, np.frombuffer(buf, dtype=np.uint8), decode_bit_width(code),
-                      count, [p], [0], [base], [delta])
+                      count, [p], [0], [base], [delta], DECODE_BATCH_VALUES)
         return vals[offs].tolist()
     return _read_patched_base(buf, pos)[0][offs].tolist()
 
@@ -659,10 +691,10 @@ def _to_int64(v: int) -> int:
     return v - (1 << 64) if v >= 1 << 63 else v
 
 
-def _batch_runs(count: int) -> int:
-    """Runs of ``count`` values per batch: DECODE_BATCH_VALUES values, and
+def _batch_runs(count: int, batch_values: int) -> int:
+    """Runs of ``count`` values per batch: ``batch_values`` values, and
     at least one run."""
-    return max(1, DECODE_BATCH_VALUES // count)
+    return max(1, batch_values // count)
 
 
 def _packed_rows(data: np.ndarray, starts: list, nbytes: int, stride: int) -> np.ndarray:
@@ -687,23 +719,27 @@ def _scatter(out: np.ndarray, outs: list, vals: np.ndarray) -> None:
 
 
 def _direct_groups(out, data, width: int, count: int, starts: list, outs: list,
-                   signed: bool) -> None:
-    """DIRECT runs of one shape: one unpack and zigzag per batch."""
+                   signed: bool, batch_values: int) -> None:
+    """DIRECT runs of one shape: one unpack and zigzag per batch, in the
+    narrowest dtype of the width where it has one; the values take
+    ``out``'s dtype as they are written out."""
     nbytes = (count * width + 7) // 8
-    step = _batch_runs(count)
+    step = _batch_runs(count, batch_values)
     for a in range(0, len(starts), step):
         batch = slice(a, a + step)
-        u = bitunpack_rows(_packed_rows(data, starts[batch], nbytes, 2 + nbytes), count, width)
-        _scatter(out, outs[batch], zigzag_decode(u) if signed else u.view(np.int64))
+        u = bitunpack_rows(_packed_rows(data, starts[batch], nbytes, 2 + nbytes),
+                           count, width, narrow=True)
+        _scatter(out, outs[batch], zigzag_decode(u) if signed else
+                 u.view(np.int64) if u.dtype == np.uint64 else u)
 
 
 def _delta_groups(out, data, width: int, count: int, starts: list, outs: list,
-                  bases: list, firsts: list) -> None:
+                  bases: list, firsts: list, batch_values: int) -> None:
     """Bit-packed DELTA runs of one shape: the |deltas| after the first
     are unpacked per batch, signed by the first delta, and summed
     row-wise."""
     nbytes = ((count - 2) * width + 7) // 8
-    step = _batch_runs(count)
+    step = _batch_runs(count, batch_values)
     for a in range(0, len(starts), step):
         batch = slice(a, a + step)
         rows = _packed_rows(data, starts[batch], nbytes, 0)
@@ -717,10 +753,11 @@ def _delta_groups(out, data, width: int, count: int, starts: list, outs: list,
         _scatter(out, outs[batch], np.cumsum(deltas, axis=1, out=deltas))
 
 
-def _fixed_groups(out, count: int, outs: list, bases: list, firsts: list) -> None:
+def _fixed_groups(out, count: int, outs: list, bases: list, firsts: list,
+                  batch_values: int) -> None:
     """Fixed-delta runs of one length: base + delta * i, per batch."""
     steps = np.arange(count, dtype=np.int64)
-    step = _batch_runs(count)
+    step = _batch_runs(count, batch_values)
     for a in range(0, len(outs), step):
         batch = slice(a, a + step)
         vals = np.array(firsts[batch], dtype=np.int64)[:, None] * steps

@@ -142,6 +142,10 @@ def combine_timestamp_us(stored_secs: np.ndarray, enc_nanos: np.ndarray) -> np.n
     Raises on sub-microsecond precision (decoding to Spark's us grid
     would silently alter values); unlike the ns-space combine it does not
     wrap for timestamps past ~year 2262 (code-review r6)."""
+    if not np.count_nonzero(enc_nanos):
+        # whole seconds (a day- or second-granular column): no sub-second
+        # to unpack, check or add, and no ORC-763 adjustment
+        return (stored_secs + _EPOCH) * np.int64(1_000_000)
     secs, nanos = _unpack_secs_nanos(stored_secs, enc_nanos)
     us, sub_us = np.divmod(nanos, _US)
     # valid nanos are whole micros in (-1e9, 1e9), so |us| <= 999_999:

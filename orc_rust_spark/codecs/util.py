@@ -57,13 +57,17 @@ def zigzag_encode(values: np.ndarray) -> np.ndarray:
 
 
 def zigzag_decode(values: np.ndarray) -> np.ndarray:
-    """(u >> 1) ^ -(u & 1), the negation wrapping in uint64."""
-    u = values.astype(np.uint64, copy=False)
-    sign = u & U64(1)
+    """(u >> 1) ^ -(u & 1), the negation wrapping in the unsigned dtype:
+    int64 from uint64 (or any other dtype), and from a narrower unsigned
+    array the signed integers of its width."""
+    if values.dtype.kind != "u" or values.dtype == np.uint64:
+        values = values.astype(np.uint64, copy=False)
+    one = values.dtype.type(1)
+    sign = values & one
     np.negative(sign, out=sign)
-    out = u >> U64(1)
+    out = values >> one
     out ^= sign
-    return out.view(np.int64)
+    return out.view(values.dtype.str.replace("u", "i"))
 
 
 def zigzag_encode_scalar(v: int) -> int:
@@ -275,37 +279,51 @@ def bitunpack(buf, n: int, width: int) -> np.ndarray:
     return bitunpack_rows(raw.reshape(1, -1), n, width)[0]
 
 
-def bitunpack_rows(mat: np.ndarray, m: int, width: int) -> np.ndarray:
+def bitunpack_rows(mat: np.ndarray, m: int, width: int, narrow: bool = False) -> np.ndarray:
     """Unpack each row of a ``(k, ceil(m * width / 8))`` uint8 matrix into
     m uint64 values packed MSB-first at ``width`` bits: -> ``(k, m)``
     uint64. The inverse of :func:`bitpack_rows`. ``mat`` may be a strided
     view (one packed run per row, rows anywhere in a stream) as long as
-    each row's bytes are contiguous.
+    each row's bytes are contiguous. With ``narrow`` the values come in
+    the narrowest native unsigned dtype that holds ``width`` bits where
+    one of the aligned paths below reads them (at most 32 bits), and as
+    uint64 otherwise.
 
-    Aligned widths take byte views (1, 2, 4 or 8 bytes), byte planes
-    (3, 5, 6 or 7 bytes), shift folds (2 and 4 bits) or ``unpackbits``
-    (1 bit). The other widths go through a 64-column bit matrix: liborc
-    writes DIRECT runs at them, and PATCHED_BASE values and patch lists
-    use them too."""
+    Aligned widths take byte views (1, 2, 4 or 8 bytes), overlapping
+    4-byte words (3 bytes), byte planes (5, 6 or 7 bytes), shift folds (2
+    and 4 bits) or ``unpackbits`` (1 bit). The other widths go through a
+    64-column bit matrix: liborc writes DIRECT runs at them, and
+    PATCHED_BASE values and patch lists use them too."""
     k = mat.shape[0]
     if width % 8 == 0:
         nbytes = width // 8
         raw = mat[:, : m * nbytes]
         if nbytes in _BIG_ENDIAN:
-            return raw.view(_BIG_ENDIAN[nbytes]).astype(np.uint64)
-        # 3, 5, 6, 7 bytes: right-align each value in an 8-byte word
+            out = raw.view(_BIG_ENDIAN[nbytes])
+            return out.astype(out.dtype.newbyteorder("=") if narrow else np.uint64)
+        if nbytes == 3:
+            # value i is the top 3 bytes of the big-endian word at byte 3i
+            # of a row copied with one byte of padding
+            full = np.zeros((k, m * 3 + 1), dtype=np.uint8)
+            full[:, : m * 3] = raw
+            words = np.ndarray((k, m), dtype=">u4", buffer=full,
+                               strides=(full.strides[0], 3))
+            return (words >> np.uint32(8)).astype(np.uint32 if narrow else np.uint64)
+        # 5, 6, 7 bytes: right-align each value in an 8-byte word
         full = np.zeros((k, m, 8), dtype=np.uint8)
         full[:, :, 8 - nbytes :] = raw.reshape(k, m, nbytes)
         return full.view(">u8").reshape(k, m).astype(np.uint64)
     if width == 1:
-        return np.unpackbits(mat, axis=1, count=m).astype(np.uint64)
+        out = np.unpackbits(mat, axis=1, count=m)
+        return out if narrow else out.astype(np.uint64)
     if width in (2, 4):
-        per = 8 // width  # values per byte
-        mask = np.uint8((1 << width) - 1)
-        out = np.empty((k, mat.shape[1] * per), dtype=np.uint8)
+        per = 8 // width  # values per byte, the first in the high bits
+        out = np.empty((k, mat.shape[1], per), dtype=np.uint8)
         for j in range(per):
-            out[:, j::per] = (mat >> np.uint8(8 - width * (j + 1))) & mask
-        return out[:, :m].astype(np.uint64)
+            np.right_shift(mat, np.uint8(8 - width * (j + 1)), out=out[:, :, j])
+        out &= np.uint8((1 << width) - 1)
+        out = out.reshape(k, -1)[:, :m]
+        return out if narrow else out.astype(np.uint64)
     bits = np.unpackbits(mat, axis=1)[:, : m * width].reshape(k * m, width)
     full = np.zeros((k * m, 64), dtype=np.uint8)
     full[:, 64 - width :] = bits

@@ -39,7 +39,12 @@ from ..codecs.boolean_rle import decode_boolean_rle
 from ..codecs.byte_rle import decode_byte_rle
 from ..codecs.float_plain import decode_float, decode_scaled, encode_scaled
 from ..codecs.rle_v1 import decode_rlev1
-from ..codecs.rle_v2 import decode_rlev2, decode_rlev2_points
+from ..codecs.rle_v2 import (
+    DECODE_BATCH_VALUES,
+    FILE_BATCH_VALUES,
+    decode_rlev2,
+    decode_rlev2_points,
+)
 from ..codecs.timestamp_split import combine_timestamp_ns, combine_timestamp_us
 from ..codecs.util import CorruptStream
 from ..codecs.util import int32_offsets as _int32_offsets
@@ -834,6 +839,10 @@ def _writer_epoch_delta_ns(tz: str) -> int:
     return local - ORC_EPOCH_UTC_SECONDS * 1_000_000_000
 
 
+#: writer zones whose wall clock is UTC
+_UTC_ZONES = ("UTC", "GMT", "")
+
+
 def _ts_us(secs: np.ndarray, nanos_enc: np.ndarray, tz: str, kind: int,
            unit: str = "us") -> np.ndarray:
     """(seconds, encoded nanos) -> int64 in ``unit`` ("us" or "ns").
@@ -850,7 +859,7 @@ def _ts_us(secs: np.ndarray, nanos_enc: np.ndarray, tz: str, kind: int,
       decoded value presents that instant's wall-clock in the writer tz
       (naive_local reinterpreted as UTC). K_TIMESTAMP_INSTANT is pure UTC.
     """
-    if kind == K_TIMESTAMP and tz not in ("UTC", "GMT", ""):
+    if kind == K_TIMESTAMP and tz not in _UTC_ZONES:
         # writer-tz wall-clock path stays in ns-space (pandas tz math is
         # ns-native; such files are bounded to the ns-representable range)
         import pandas as pd
@@ -1487,17 +1496,20 @@ def _span_reader(fh, offset: int):
 
 
 def _rle_values(rle, buf, exs: dict | None, kind: int, n: int,
-                signed: bool) -> np.ndarray:
+                signed: bool, batch: int = DECODE_BATCH_VALUES,
+                narrow: bool = False) -> np.ndarray:
     """The ``n`` values of integer RLE stream ``kind`` from its group run
     offset ``exs[kind][0]``; RLEv2 passes the runs before them by header
     arithmetic, RLEv1 decodes from the stream's start. With ``exs`` None
-    (a whole-stripe read) the stream must hold exactly ``n`` values."""
+    (a whole-stripe read) the stream must hold exactly ``n`` values.
+    ``batch`` and ``narrow`` go to decode_rlev2 (``batch_values``)."""
     if exs is None:
         return rle(buf, n, signed=signed)
     skip = exs[kind][0]
     if rle is not decode_rlev2:
         return rle(buf, skip + n, signed=signed, exact=False)[skip:]
-    return rle(buf, n, signed=signed, skip=skip, exact=False)
+    return rle(buf, n, signed=signed, skip=skip, exact=False,
+               batch_values=batch, narrow=narrow)
 
 
 def _byte_values(buf, exs: dict | None, kind: int, n: int, bits: bool) -> np.ndarray:
@@ -1535,15 +1547,19 @@ def _group_reader(ix: StripeIndex, streams: dict, cid: int, g: int | None,
 
 
 def _dictionary(ix: StripeIndex, streams: dict, cid: int, dict_cache: dict) -> pa.Array:
-    """Column ``cid``'s string dictionary, decoded once per stripe read
-    (an empty one may come without its LENGTH and DICTIONARY_DATA)."""
+    """Column ``cid``'s string dictionary in the column's Arrow type,
+    decoded once per stripe read (an empty one may come without its
+    LENGTH and DICTIONARY_DATA)."""
     d = dict_cache.get(cid)
     if d is None:
         enc_kind, dict_size = ix.encodings[cid]
         read = _group_reader(ix, streams, cid, None, {})
         lens = _int_decoder(enc_kind)(read(S_LENGTH), dict_size, signed=False)
         # its own bytes: a pooled dictionary keeps no view of a fetched span
-        d = dict_cache[cid] = _split_binary(bytes(read(S_DICTIONARY_DATA)), lens)
+        d = _split_binary(bytes(read(S_DICTIONARY_DATA)), lens)
+        if ix.types[cid].kind != K_BINARY:
+            d = d.cast(pa.large_string())
+        dict_cache[cid] = d
     return d
 
 
@@ -1578,7 +1594,7 @@ def _decimal_words(t: OrcType, data: bytes, scales: np.ndarray, n: int) -> np.nd
 
 
 def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
-                   sel: np.ndarray | None) -> tuple:
+                   sel: np.ndarray | None, piece: bool = False) -> tuple:
     """One group's values of a scalar column of type ``t``: its first
     ``n`` dense values, or with ``sel`` (sorted dense offsets, the last
     ``n - 1``) only the values at ``sel``. ``read`` reads the group's
@@ -1587,7 +1603,10 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
     must hold exactly ``n`` values. Returns
     the parts _scalar_array joins: (ints,), (seconds, nanos), (floats,),
     (dictionary indices,), (string bytes, lengths), (int8s or bools,) or
-    (i128 words,).
+    (i128 words,). ``piece`` (a group decoded whole for a _Piece)
+    decodes RLEv2 in one batch a group, and an integer, date or
+    dictionary column's DATA in the narrowest dtype its runs allow
+    (decode_rlev2's ``narrow``).
 
     Integer streams are read whole, or at ``sel`` by decode_rlev2_points
     (RLEv2) or a decode from the group's start through ``n`` (RLEv1).
@@ -1598,10 +1617,12 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
     k = t.kind
     rle = _int_decoder(enc_kind)
 
-    def ints(kind: int, signed: bool) -> np.ndarray:
+    def ints(kind: int, signed: bool, narrow: bool = piece) -> np.ndarray:
         buf = read(kind)
         if sel is None:
-            return _rle_values(rle, buf, exs, kind, n, signed)
+            return _rle_values(rle, buf, exs, kind, n, signed,
+                               FILE_BATCH_VALUES if piece else DECODE_BATCH_VALUES,
+                               narrow)
         if rle is decode_rlev2:
             return decode_rlev2_points(buf, sel, signed, exs[kind][0])
         return _rle_values(rle, buf, exs, kind, n, signed)[sel]
@@ -1612,7 +1633,8 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
     if k in (K_SHORT, K_INT, K_LONG, K_DATE):
         return (ints(S_DATA, True),)
     if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        return ints(S_DATA, True), ints(S_SECONDARY, False)
+        # the seconds scale to microseconds in int64
+        return ints(S_DATA, True, False), ints(S_SECONDARY, False, False)
     if k in (K_FLOAT, K_DOUBLE):
         dtype = np.dtype(np.float32 if k == K_FLOAT else np.float64)
         first = 0 if sel is None else int(sel[0])
@@ -1642,35 +1664,69 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
     raise NotImplementedError(f"ORC type kind {k}")
 
 
+def _is_dict(ix: StripeIndex, col_id: int) -> bool:
+    """Is column ``col_id`` a dictionary-encoded string or binary?"""
+    return (ix.types[col_id].kind in _STRING_KINDS
+            and ix.encodings[col_id][0] in (E_DICTIONARY, E_DICTIONARY_V2))
+
+
+def _final_values(ix: StripeIndex, col_id: int, cols: list, unit: str = "us") -> np.ndarray:
+    """A scalar column's joined _scalar_values parts (not a direct
+    string's) -> its values as its Arrow array holds them: int64 for
+    integers, dates, timestamps (in ``unit``) and dictionary codes,
+    int8 bytes, bools, floats or (n, 2) decimal i128 words."""
+    k = ix.types[col_id].kind
+    if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
+        return _ts_us(cols[0], cols[1], ix.tz, k, unit)
+    if k == K_BYTE:
+        return cols[0].view(np.int8)
+    return cols[0]
+
+
+#: short and int kinds -> (NumPy dtype, its min, its max)
+_NP_INT = {k: (dt, int(np.iinfo(dt).min), int(np.iinfo(dt).max))
+           for k, dt in ((K_SHORT, np.int16), (K_INT, np.int32))}
+
+
+def _values_array(ix: StripeIndex, col_id: int, vals: np.ndarray,
+                  dictionary: pa.Array | None = None, unit: str = "us") -> pa.Array:
+    """ONE Arrow array (no nulls) of scalar column ``col_id`` from its
+    _final_values ``vals``; a dictionary column's codes index
+    ``dictionary`` (_dictionary). A short or int value outside its
+    type's range is corrupt."""
+    t = ix.types[col_id]
+    k = t.kind
+    if k == K_DATE:
+        return pa.array(vals.astype(np.int32), type=pa.date32())
+    if k in _NP_INT:
+        dtype, lo, hi = _NP_INT[k]
+        if vals.size and (vals.min() < lo or vals.max() > hi):
+            raise CorruptStream(f"ORC {_K_TO_ARROW[k]} value outside the type's range")
+        return pa.array(vals.astype(dtype), type=_K_TO_ARROW[k])
+    if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
+        return pa.array(vals, type=pa.timestamp(unit))
+    if k == K_DECIMAL:
+        return pa.Array.from_buffers(pa.decimal128(t.precision or 38, t.scale),
+                                     len(vals), [None, pa.py_buffer(vals.tobytes())])
+    if k in _STRING_KINDS:
+        return dictionary.take(pa.array(vals, type=pa.int64()))
+    return pa.array(vals, type=_K_TO_ARROW[k])
+
+
 def _scalar_array(ix: StripeIndex, streams: dict, col_id: int, parts: list,
                   dict_cache: dict, unit: str = "us") -> pa.Array:
     """ONE Arrow array of scalar column ``col_id`` from the per-group
     _scalar_values ``parts``, in order (no nulls); timestamps in ``unit``."""
-    t = ix.types[col_id]
-    k = t.kind
+    k = ix.types[col_id].kind
     cols = [c[0] if len(c) == 1
             else b"".join(c) if isinstance(c[0], bytes) else np.concatenate(c)
             for c in zip(*parts)]
-    if k == K_DATE:
-        return pa.array(cols[0].astype(np.int32), type=pa.date32())
-    if k in (K_SHORT, K_INT, K_LONG):
-        dense = pa.array(cols[0], type=pa.int64())
-        return dense if k == K_LONG else dense.cast(_K_TO_ARROW[k])
-    if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        return pa.array(_ts_us(cols[0], cols[1], ix.tz, k, unit), type=pa.timestamp(unit))
-    if k == K_DECIMAL:
-        return pa.Array.from_buffers(pa.decimal128(t.precision or 38, t.scale),
-                                     len(cols[0]), [None, pa.py_buffer(cols[0].tobytes())])
-    if k == K_BYTE:
-        return pa.array(cols[0].view(np.int8), type=pa.int8())
-    if k not in _STRING_KINDS:
-        return pa.array(cols[0])
-    if ix.encodings[col_id][0] in (E_DICTIONARY, E_DICTIONARY_V2):
-        dense = _dictionary(ix, streams, col_id, dict_cache).take(
-            pa.array(cols[0], type=pa.int64()))
-    else:
+    if k in _STRING_KINDS and not _is_dict(ix, col_id):
         dense = _split_binary(cols[0], cols[1])
-    return dense if k == K_BINARY else dense.cast(pa.large_string())
+        return dense if k == K_BINARY else dense.cast(pa.large_string())
+    return _values_array(ix, col_id, _final_values(ix, col_id, cols, unit),
+                         _dictionary(ix, streams, col_id, dict_cache)
+                         if k in _STRING_KINDS else None, unit)
 
 
 def _decode_column_group(
@@ -1760,66 +1816,294 @@ def _decode_column_group(
     return _respace(dense, not_null)
 
 
-def _pooled_float_values(ix: StripeIndex, streams: dict, col_id: int, g: int,
-                         read, exs: dict, sel: np.ndarray, floats,
-                         blocks: dict) -> np.ndarray:
-    """Float or double column ``col_id``'s values at the dense offsets
-    ``sel`` of group ``g``, through its DataPool pieces in ``floats``.
+_MASK64 = (1 << 64) - 1
+#: the piece number of a group's PRESENT map (a float or double column's
+#: value pieces count from 0, every other column's value piece is 0)
+_PRESENT = -1
+#: offsets a frame-of-reference piece wider than 16 bits takes its step's
+#: guess from
+_STEP_SAMPLE = 64
+_FLOAT_KINDS = (K_FLOAT, K_DOUBLE)
+_NESTED_KINDS = (K_STRUCT, K_LIST, K_MAP, K_UNION)
 
-    A piece is (values, e) under (column, group, piece): the group's
-    dense values whole, or in a file with a seek block size
-    (StripeIndex.block_size) one block's worth of them, so a miss
-    decompresses only the blocks that hold the picked values, as a read
-    without the pool does. A missed piece is decoded through ``blocks``
-    (a per-call dict: the blocks stay out of the pool) and kept as exact
-    scaled integers (encode_scaled, trying the exponent of the column's
-    last scaled piece first) or, failing that, as its plain values
-    (``e`` None). ``read`` is the group's reader, for its PRESENT."""
-    t = ix.types[col_id]
-    dtype = np.dtype(np.float32 if t.kind == K_FLOAT else np.float64)
-    w = dtype.itemsize
-    per = ix.block_size // w if ix.block_size and not ix.block_size % w else 0
-    first, last = (int(sel[0]) // per, int(sel[-1]) // per) if per else (0, 0)
+
+class _Piece:
+    """One row group's decoded values of a scalar column as the DataPool
+    keeps them for point lookups, read at dense offsets by ``at``. One
+    form serves every kind:
+
+    - frame of reference (``base`` an int): a value is ``base + step *
+      values[i]`` (integers, dates, dictionary codes and timestamps as
+      their final int64 microseconds). ``values`` are the offsets from
+      the minimum in the narrowest unsigned dtype, or, where the group's
+      RLEv2 runs prove its values fit 8, 16 or 32 bits, the values as
+      decoded in that dtype with ``base`` 0 (decode_rlev2's ``narrow``).
+      ``step`` is 1 unless offsets wider than 16 bits share a factor, as
+      a day- or second-granular timestamp's do. With a ``scale`` the
+      value is that over ``10**scale``: a decimal-like double piece
+      (float_plain.encode_scaled), whose ``values`` are its narrowest
+      signed integers and ``base`` 0.
+    - dense (``base`` None): the values themselves (booleans, bytes,
+      other floats and doubles, decimal i128 words), or a PRESENT piece's
+      dense offset of each row of the group, -1 where it is null.
+
+    ``kind`` names the form: "for", "codes" (a dictionary column's),
+    "scaled", "dense" or "present"."""
+
+    __slots__ = ("values", "base", "step", "scale", "kind")
+
+    def __init__(self, values: np.ndarray, base: int | None = None, step: int = 1,
+                 scale: int | None = None, kind: str = "dense"):
+        self.values, self.base, self.step = values, base, step
+        self.scale, self.kind = scale, kind
+
+    def at(self, sel) -> np.ndarray:
+        """The values at dense offsets ``sel``: int64 (float64 with a
+        ``scale``) from a frame-of-reference piece, ``values``' own dtype
+        from a dense one."""
+        v = self.values[sel]
+        if self.base is None:
+            return v
+        # modulo 2**64, as the offsets were taken: a span wider than
+        # int64 comes back exact
+        shift = np.uint64(self.base & _MASK64)
+        if self.step == 1:
+            out = np.add(v, shift, dtype=np.uint64, casting="unsafe")
+        else:
+            out = np.multiply(v, np.uint64(self.step), dtype=np.uint64, casting="unsafe")
+            out += shift
+        out = out.view(np.int64)
+        return out if self.scale is None else decode_scaled(out, self.scale)
+
+    def equals(self, value: int) -> np.ndarray:
+        """Which values of a frame-of-reference piece (no ``scale``) equal
+        the integer ``value``, compared as offsets."""
+        q, r = divmod(value - self.base, self.step)
+        info = np.iinfo(self.values.dtype)
+        if r or not info.min <= q <= info.max:
+            return np.zeros(len(self.values), dtype=bool)
+        return self.values == q
+
+
+def _narrowest(span: int) -> type:
+    """The narrowest unsigned dtype that holds 0 through ``span``."""
+    for dtype in (np.uint8, np.uint16, np.uint32):
+        if span < 1 << 8 * np.dtype(dtype).itemsize:
+            return dtype
+    return np.uint64
+
+
+def _for_piece(vals: np.ndarray, kind: str = "for") -> _Piece:
+    """int64 ``vals`` as a frame-of-reference _Piece: the base is their
+    minimum, the offsets take the narrowest unsigned dtype, and offsets
+    wider than 16 bits are divided by their common step (one a sample of
+    them shares, kept if every offset has it)."""
+    if not vals.size:
+        return _Piece(np.zeros(0, dtype=np.uint8), 0, kind=kind)
+    base = int(vals.min())
+    span = int(vals.max()) - base
+    off = vals.view(np.uint64) - np.uint64(base & _MASK64)
+    step = 1
+    if span >> 16:
+        guess = int(np.gcd.reduce(off[:_STEP_SAMPLE]))
+        if guess > 1:
+            q = off // np.uint64(guess)
+            if np.array_equal(q * np.uint64(guess), off):
+                off, step, span = q, guess, span // guess
+    return _Piece(off.astype(_narrowest(span)), base, step, kind=kind)
+
+
+def _has_pieces(ix: StripeIndex, col_id: int) -> bool:
+    """Does a pooled point read of column ``col_id`` go through _Pieces?
+    Every scalar column does but a direct string or binary, which reads
+    its rows' bytes alone."""
+    k = ix.types[col_id].kind
+    return k not in _NESTED_KINDS and (k not in _STRING_KINDS or _is_dict(ix, col_id))
+
+
+def _float_per(ix: StripeIndex, col_id: int) -> int:
+    """Values per piece of a float or double column: a seek block's worth
+    in a file with a seek block size (StripeIndex.block_size), else 0 (one
+    piece a group)."""
+    w = 4 if ix.types[col_id].kind == K_FLOAT else 8
+    return ix.block_size // w if ix.block_size and not ix.block_size % w else 0
+
+
+def _split_pieces(sel: np.ndarray, per: int) -> list[tuple[int, np.ndarray]]:
+    """[(piece j, offsets in piece j)] of the sorted dense offsets ``sel``
+    of a group cut into pieces of ``per`` values (0: one piece)."""
+    if not per:
+        return [(0, sel)]
+    first, last = int(sel[0]) // per, int(sel[-1]) // per
     if first == last:
-        pieces = [(first, sel - first * per)]
-    else:
-        cuts = np.searchsorted(sel, np.arange(first + 1, last + 1) * per)
-        pieces = [(j, at - j * per) for j, at in zip(
-            range(first, last + 1), np.split(sel, cuts)) if at.size]
-    n = None
+        return [(first, sel - first * per)]
+    cuts = np.searchsorted(sel, np.arange(first + 1, last + 1) * per)
+    return [(j, at - j * per) for j, at in zip(
+        range(first, last + 1), np.split(sel, cuts)) if at.size]
+
+
+def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
+                 present: _Piece | None, blocks: dict) -> _Piece | None:
+    """Piece ``j`` of group ``g`` of column ``col_id`` (_PRESENT: its
+    PRESENT map), decoded whole from ``streams`` through ``blocks``, a
+    per-call cache: the pieces stand in for their blocks. A float or
+    double column's piece ``j`` holds the group's j-th ``_float_per``
+    values, so a miss decompresses only the blocks that hold them; its
+    values are kept as exact scaled integers (encode_scaled, trying the
+    exponent of the column's last scaled piece first) or, failing that,
+    as they are. ``present`` is the group's PRESENT piece, or None.
+
+    None for a timestamp group whose values do not all convert (a
+    sub-microsecond one, or one out of the writer zone's range): its
+    picked rows are read alone, and raise only if they hold such a value."""
+    t = ix.types[col_id]
+    k = t.kind
+    exs = {kind: at[2] for kind, at in ix.positions(col_id, g).items()}
+    read = _group_reader(ix, streams, col_id, g, blocks, ix.block_size)
+    n = ix.group_rows(g)
+    if j == _PRESENT:
+        not_null = _byte_values(read(S_PRESENT), exs, S_PRESENT, n, bits=True)
+        slots = np.cumsum(not_null) - 1
+        slots[~not_null] = -1
+        return _Piece(slots.astype(np.int16 if n <= 1 << 15 else np.int32), kind="present")
+    if present is not None:
+        n = int(np.count_nonzero(present.values >= 0))
+    if k in _FLOAT_KINDS:
+        dtype = np.dtype(np.float32 if k == K_FLOAT else np.float64)
+        per = _float_per(ix, col_id)
+        lo, hi = (j * per, min(j * per + per, n)) if per else (0, n)
+        w = dtype.itemsize
+        dense = decode_float(read(S_DATA, (lo * w, hi * w)), hi - lo, dtype)
+        scaled = encode_scaled(dense, ix.scales.get(col_id))
+        if scaled is None:
+            return _Piece(dense)
+        ix.scales[col_id] = scaled[1]
+        return _Piece(scaled[0], 0, scale=scaled[1], kind="scaled")
+    parts = _scalar_values(t, ix.encodings[col_id][0], read, exs, n, None, piece=True)
+    if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
+        if ((k == K_TIMESTAMP_INSTANT or ix.tz in _UTC_ZONES)
+                and not np.count_nonzero(parts[1])):
+            # whole seconds in UTC (_ts_us's value): a frame of reference
+            # of the seconds, scaled to microseconds
+            secs = _for_piece(parts[0])
+            return _Piece(secs.values, (secs.base + ORC_EPOCH_UTC_SECONDS) * 1_000_000,
+                          secs.step * 1_000_000, kind="for")
+        try:
+            return _for_piece(_ts_us(parts[0], parts[1], ix.tz, k))
+        except ValueError:
+            return None
+    if k in (K_BOOLEAN, K_BYTE, K_DECIMAL):
+        return _Piece(_final_values(ix, col_id, parts))
+    kind = "codes" if k in _STRING_KINDS else "for"
+    if parts[0].dtype != np.int64:
+        # decoded in the narrowest dtype its runs allow: the offsets of 0
+        return _Piece(parts[0], 0, kind=kind)
+    return _for_piece(parts[0], kind)
+
+
+def _piece(ix: StripeIndex, streams: dict | None, col_id: int, g: int, j: int,
+           present: _Piece | None, pieces, blocks: dict) -> _Piece | None:
+    """Piece ``j`` of group ``g`` of column ``col_id`` from ``pieces`` (a
+    DataPool view), built and filed there on a miss when ``streams``
+    holds the group's bytes; None on a miss without them, or where
+    _build_piece gives none."""
+    p = pieces.get((col_id, g, j))
+    if p is None and streams is not None:
+        p = _build_piece(ix, streams, col_id, g, j, present, blocks)
+        if p is not None:
+            pieces[(col_id, g, j)] = p
+    return p
+
+
+def _piece_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
+                rows: np.ndarray, pieces, blocks: dict) -> tuple | None:
+    """(validity of ``rows`` or None, the values at its non-null rows or
+    None when all are null) of group ``g``, from the group's pieces
+    (_piece). None when a piece is missed and ``streams`` is None."""
+    t = ix.types[col_id]
+    present, valid, sel = None, None, rows
+    if (col_id, S_PRESENT) in ix.offsets:
+        present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces, blocks)
+        if present is None:
+            return None
+        slots = present.values[rows]
+        valid = slots >= 0
+        sel = slots[valid]
+        if not sel.size:
+            return valid, None
     out = []
-    for j, at in pieces:
-        entry = floats.get((col_id, g, j))
-        if entry is None:
-            if n is None:
-                n = ix.group_rows(g)
-                if (col_id, S_PRESENT) in ix.offsets:
-                    n = int(_byte_values(read(S_PRESENT), exs, S_PRESENT, n,
-                                         bits=True).sum())
-            lo, hi = (j * per, min(j * per + per, n)) if per else (0, n)
-            dense = decode_float(_group_reader(ix, streams, col_id, g, blocks, ix.block_size)(
-                S_DATA, (lo * w, hi * w)), hi - lo, dtype)
-            entry = encode_scaled(dense, ix.scales.get(col_id))
-            if entry is None:
-                entry = (dense, None)
-            else:
-                ix.scales[col_id] = entry[1]
-            floats[(col_id, g, j)] = entry
-        values, e = entry
-        out.append(values[at] if e is None else decode_scaled(values[at], e))
-    return out[0] if len(out) == 1 else np.concatenate(out)
+    for j, at in _split_pieces(sel, _float_per(ix, col_id) if t.kind in _FLOAT_KINDS else 0):
+        p = _piece(ix, streams, col_id, g, j, present, pieces, blocks)
+        if p is None:
+            if streams is None:
+                return None
+            # a timestamp group no piece holds (the only kind with one
+            # piece a group that _build_piece may refuse): its rows alone
+            exs = {kind: pos[2] for kind, pos in ix.positions(col_id, g).items()}
+            parts = _scalar_values(t, ix.encodings[col_id][0],
+                                   _group_reader(ix, streams, col_id, g, blocks),
+                                   exs, int(sel[-1]) + 1, sel)
+            return valid, _final_values(ix, col_id, parts)
+        out.append(p.at(at))
+    return valid, out[0] if len(out) == 1 else np.concatenate(out)
+
+
+def _pooled_rows(ix: StripeIndex, streams: dict | None, col_id: int, hits: dict,
+                 dict_cache, pieces, blocks: dict) -> pa.Array | list[int]:
+    """A point read of column ``col_id`` (_has_pieces) at the rows
+    ``hits`` picks, from its DataPool pieces: each hit group's values by
+    one NumPy gather from its piece (_Piece.at) and ONE Arrow array over
+    them, with no Arrow cast or concat per group. A missed piece is
+    decoded whole from ``streams`` and pooled (_build_piece). With
+    ``streams`` None nothing is built: -> the hit groups whose pieces are
+    missed instead, empty when only the dictionary is."""
+    missing, valids, vals = [], [], []
+    for g, rows in hits.items():
+        got = _piece_rows(ix, streams, col_id, g, rows, pieces, blocks)
+        if got is None:
+            missing.append(g)
+            continue
+        if got[0] is not None:
+            valids.append(got[0])
+        if got[1] is not None:
+            vals.append(got[1])
+    dictionary = None
+    if _is_dict(ix, col_id):
+        dictionary = dict_cache.get(col_id)
+        if dictionary is None:
+            if streams is None:
+                return missing
+            dictionary = _dictionary(ix, streams, col_id, dict_cache)
+    if missing:
+        return missing
+    valid = np.concatenate(valids) if valids else None
+    if not vals:
+        # every picked row is null
+        return pa.nulls(len(valid), _arrow_type_of(ix.types, col_id))
+    dense = _values_array(ix, col_id, vals[0] if len(vals) == 1 else np.concatenate(vals),
+                          dictionary)
+    return _respace(dense, valid)
 
 
 def _decode_column_rows(
-    ix: StripeIndex, streams: dict, col_id: int, hits: dict, name: str,
-    dict_cache: dict, block_cache: dict, floats=None,
-) -> pa.Array:
+    ix: StripeIndex, streams: dict | None, col_id: int, hits: dict, name: str,
+    dict_cache: dict, block_cache: dict, pieces=None,
+) -> pa.Array | list[int]:
     """A point read of one column: its values at the rows ``hits`` picks
     ({group: sorted group-local rows}, groups ascending), as ONE Arrow
     array of _decode_column_group's type.
 
-    Each hit group's PRESENT is decoded through its last picked row and
-    maps the rows to dense value offsets once; _scalar_values reads the
+    With ``pieces`` (the DataPool view of a cached reader's stripe read)
+    a scalar column other than a direct string or binary is read from
+    its pooled pieces (_pooled_rows): the first touch of a group decodes
+    its piece whole (_Piece: a frame of reference, dictionary codes,
+    scaled doubles or dense values, plus the PRESENT map), and every
+    later read of the group is one gather. ``streams`` None asks the
+    pool alone: -> the hit groups whose bytes the read needs instead of
+    the array (every hit group for a column without pieces).
+
+    Otherwise each hit group's PRESENT is decoded through its last picked
+    row and maps the rows to dense offsets once; _scalar_values reads the
     group's values at those offsets (an RLEv2 stream by one walk over its
     run headers, decode_rlev2_points) and _scalar_array joins the groups,
     indexing a dictionary once. In a file of this engine's writer
@@ -1827,25 +2111,21 @@ def _decode_column_rows(
     decompressed only from the block that holds the picked values' first
     byte through the block that holds their last (_group_bytes); in other
     files from the group's start. Nested and union columns decode each
-    hit group whole and take the rows.
-
-    ``floats`` (a DataPool view) keeps a float or double column's decoded
-    values (_pooled_float_values): a decimal-like double piece as exact
-    scaled integers, read at the picked rows as ``ints[sel] / 10**e``,
-    any other as its plain values; its blocks are not pooled."""
+    hit group whole and take the rows."""
     t = ix.types[col_id]
-    if t.kind in (K_STRUCT, K_LIST, K_MAP, K_UNION):
+    _trace_decode(name)
+    if pieces is not None and _has_pieces(ix, col_id):
+        return _pooled_rows(ix, streams, col_id, hits, dict_cache, pieces, {})
+    if streams is None:
+        return list(hits)
+    if t.kind in _NESTED_KINDS:
         parts = [_decode_column_group(ix, streams, col_id, g, ix.group_rows(g), name,
                                       dict_cache, block_cache).take(
                      pa.array(rows, type=pa.int64()))
                  for g, rows in hits.items()]
         return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
-    _trace_decode(name)
     has_present = (col_id, S_PRESENT) in ix.offsets
     enc_kind = ix.encodings[col_id][0]
-    if t.kind not in (K_FLOAT, K_DOUBLE):
-        floats = None
-    raw_blocks: dict = {}  # a miss's float blocks: not pooled
     parts, valids = [], []
     for g, rows in hits.items():
         exs = {kind: at[2] for kind, at in ix.positions(col_id, g).items()}
@@ -1859,16 +2139,54 @@ def _decode_column_rows(
             sel = (np.cumsum(not_null) - 1)[rows][valid]
             if not sel.size:
                 continue
-        if floats is None:
-            parts.append(_scalar_values(t, enc_kind, read, exs, int(sel[-1]) + 1, sel))
-        else:
-            parts.append((_pooled_float_values(ix, streams, col_id, g, read, exs, sel,
-                                               floats, raw_blocks),))
+        parts.append(_scalar_values(t, enc_kind, read, exs, int(sel[-1]) + 1, sel))
     valid = np.concatenate(valids) if has_present else None
     if not parts:
         # every picked row is null
         return pa.nulls(len(valid), _arrow_type_of(ix.types, col_id))
     return _respace(_scalar_array(ix, streams, col_id, parts, dict_cache), valid)
+
+
+def _key_mask(ix: StripeIndex, streams: dict | None, col_id: int, g: int, eq,
+              dict_cache, pieces, blocks: dict) -> np.ndarray | list[int]:
+    """Which rows of group ``g`` of the probed column ``col_id``
+    (_has_pieces) equal ``eq``, as _eq_mask finds them, from the group's
+    pieces: an integer probe of an integer column is compared with the
+    piece's offsets in place (_Piece.equals), a dictionary column's
+    probe with the dictionary and then looked up by code, any other
+    probe with the group read as an Arrow array. A null row never
+    matches. With ``streams`` None a missed piece is not built: -> the
+    groups to fetch, as _pooled_rows."""
+    t = ix.types[col_id]
+    is_dict = _is_dict(ix, col_id)
+    if is_dict or (type(eq) is int and t.kind in _INT_KINDS):
+        present = None
+        if (col_id, S_PRESENT) in ix.offsets:
+            present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces, blocks)
+            if present is None:
+                return [g]
+        piece = _piece(ix, streams, col_id, g, 0, present, pieces, blocks)
+        if piece is None:
+            return [g]
+        dense = None
+        if is_dict:
+            dictionary = dict_cache.get(col_id)
+            if dictionary is None:
+                if streams is None:
+                    return []
+                dictionary = _dictionary(ix, streams, col_id, dict_cache)
+            dense = _eq_mask(dictionary, eq)[piece.at(slice(None))]
+        elif piece.base is not None:  # a byte column's piece is dense
+            dense = piece.equals(eq)
+        if dense is not None:
+            if present is None:
+                return dense
+            mask = np.zeros(ix.group_rows(g), dtype=bool)
+            mask[present.values >= 0] = dense
+            return mask
+    arr = _pooled_rows(ix, streams, col_id, {g: np.arange(ix.group_rows(g))},
+                       dict_cache, pieces, blocks)
+    return arr if isinstance(arr, list) else _eq_mask(arr, eq)
 
 
 def _bloom_probe_ok(col_kind: int, eq) -> bool:
@@ -1990,8 +2308,10 @@ def _rg_keep_for_stripe(
     values, False (IS NULL) drops groups whose stats say hasNull is false."""
     eqs = None
     if eq is not None:
-        eqs = (sorted(eq) if isinstance(eq, (set, frozenset))
-               else list(eq) if isinstance(eq, (list, tuple)) else [eq])
+        # the values' keep masks are OR-ed, so a set is taken in any order
+        # (sorting one of mixed types would raise)
+        eqs = (list(eq) if isinstance(eq, (list, tuple, set, frozenset))
+               else [eq])
     n_groups = (n_rows + stride - 1) // stride
     n = min(n_groups, len(entries))
 
@@ -2196,12 +2516,18 @@ def _decode_stripe_pruned_impl(
     columns' groups that hold a match.
 
     An ``index`` of a cached OrcReader (``index.owner``) keeps what the
-    seek path decodes in the process's DataPool: decompressed blocks,
-    string dictionaries and, under ``residual``, the key column's decoded
-    groups and the float columns' decoded values (_decode_column_rows),
-    so a later read of the same stripe skips them. A kept group
-    whose keys are pooled is not fetched again; the key phase's blocks
-    stay in a per-call cache, since its decoded groups stand in for them.
+    seek path decodes in the process's DataPool: string dictionaries,
+    decompressed blocks and, under ``residual``, each scalar column's
+    hit groups as _Pieces, the key column's included. The residual read
+    asks the pool first: the key is compared on its pooled pieces
+    (_key_mask) and every column the pool holds is gathered from it
+    (_decode_column_rows without streams), so a stripe whose wanted
+    pieces are all pooled calls neither StripeIndex.ranges nor
+    ``fetch``. Only the groups whose pieces it misses (and direct string
+    and nested columns) are fetched, in one read per phase, and their
+    pieces are decoded whole and pooled; the blocks they were decoded
+    from stay in a per-call cache, since the pieces stand in for them. A
+    stripe whose key groups are all missed skips the asking.
 
     -> (table of kept groups' rows, groups_decoded, groups_total).
     Without ``residual`` the caller applies the residual filter. Falls
@@ -2289,50 +2615,86 @@ def _decode_stripe_pruned_impl(
 
     read = None if ix.owner is None else _PoolRead(ix.owner)
     if read is None:
-        dict_cache, block_cache = {}, {}
+        dict_cache, block_cache, pieces = {}, {}, None
     else:
         dict_cache = read.view(("dict",), _array_bytes)
         block_cache = read.view(("block",), _block_bytes)
-    floats = None if read is None else read.view(("float",), _float_bytes)
+        pieces = read.view(("piece",), _piece_bytes)
     streams: dict[tuple[int, int], _StreamBytes] = {}
 
     def group(cid: int, name: str, g: int, blocks=block_cache) -> pa.Array:
         return _decode_column_group(ix, streams, cid, g, ix.group_rows(g), name,
                                     dict_cache, blocks)
 
+    def fetch_groups(want: dict) -> None:
+        """Read {column: its groups} of the stream bytes (and dictionaries)."""
+        ranges: dict = {}
+        for cid, groups in want.items():
+            ranges.update(ix.ranges([cid], groups))
+        streams.update(_fetch_streams(ix, ranges, fetch))
+
     try:
         if residual:
             # late materialization: the probed column first, then every other
             # projected column at the matching rows of each kept group only;
-            # each phase reads just the byte ranges it decodes
+            # each phase reads just the byte ranges it decodes, and a pooled
+            # read only those of the pieces it misses
             key_id = proj_ids[proj.index(column)]
-            pooled = {} if read is None else read.view(("key", key_id), _array_bytes)
-            key_groups = {g: pooled.get(g) for g in keep}
-            missing = [g for g, keys in key_groups.items() if keys is None]
-            if missing:
-                streams.update(_fetch_streams(ix, ix.ranges([key_id], missing), fetch))
+            # a miss's blocks: what the pool keeps is decoded from them
             key_blocks: dict[tuple, tuple] = {}
+            cols: dict[str, list] = {}
+            if pieces is not None and _has_pieces(ix, key_id):
+                masks = {g: _key_mask(ix, None, key_id, g, eq, dict_cache, pieces,
+                                      key_blocks) for g in keep}
+                missing = {g for g, m in masks.items() if isinstance(m, list)}
+                if missing:
+                    fetch_groups({key_id: sorted(
+                        {h for g in missing for h in masks[g]})})
+                    for g in missing:
+                        masks[g] = _key_mask(ix, streams, key_id, g, eq, dict_cache,
+                                             pieces, key_blocks)
+            else:
+                pooled = {} if read is None else read.view(("key", key_id), _array_bytes)
+                key_groups = {g: pooled.get(g) for g in keep}
+                missing = [g for g, keys in key_groups.items() if keys is None]
+                if missing:
+                    fetch_groups({key_id: missing})
+                for g in missing:
+                    key_groups[g] = pooled[g] = group(key_id, column, g, key_blocks)
+                masks = {g: _eq_mask(keys, eq) for g, keys in key_groups.items()}
             hits: dict[int, np.ndarray] = {}
-            key_parts = []
             for g in keep:
-                keys = key_groups[g]
-                if keys is None:
-                    keys = pooled[g] = group(key_id, column, g, key_blocks)
-                mask = _eq_mask(keys, eq)
+                mask = masks[g]
                 if row_ranges is not None:
                     mask &= _range_mask([g], stride, n_rows, row_ranges)
                 rows = np.flatnonzero(mask)
                 if rows.size:
                     hits[g] = rows
-                    key_parts.append(keys.take(pa.array(rows, type=pa.int64())))
             if not hits:
                 return _empty_table(meta, columns), len(keep), n_groups
-            others = [cid for cid, name in zip(proj_ids, proj) if name != column]
-            streams.update(_fetch_streams(ix, ix.ranges(others, list(hits)), fetch))
-            cols = {name: key_parts if name == column
-                    else [_decode_column_rows(ix, streams, cid, hits, name,
-                                              dict_cache, block_cache, floats)]
-                    for cid, name in zip(proj_ids, proj)}
+            if pieces is None or not _has_pieces(ix, key_id):
+                cols[column] = [key_groups[g].take(pa.array(rows, type=pa.int64()))
+                                for g, rows in hits.items()]
+            # every column the pool holds is read from it; the others, and
+            # the pieces it misses, are read after one fetch of their bytes.
+            # A stripe whose key groups were all missed is taken as cold:
+            # its columns are not looked up in the pool first
+            cold = pieces is None or len(missing) == len(keep)
+            need: dict[int, tuple[str, list]] = {}
+            for cid, name in zip(proj_ids, proj):
+                if name in cols:
+                    continue
+                got = list(hits) if cold and cid != key_id else _decode_column_rows(
+                    ix, None, cid, hits, name, dict_cache, block_cache, pieces)
+                if isinstance(got, list):
+                    need[cid] = (name, got)
+                else:
+                    cols[name] = [got]
+            if need:
+                fetch_groups({cid: groups for cid, (_, groups) in need.items()})
+                for cid, (name, _) in need.items():
+                    cols[name] = [_decode_column_rows(ix, streams, cid, hits, name,
+                                                      dict_cache, block_cache, pieces)]
         else:
             streams.update(_fetch_streams(ix, ix.ranges(proj_ids, keep), fetch))
             cols = {name: [group(cid, name, g) for g in keep]
@@ -2484,6 +2846,10 @@ def _empty_table(meta: OrcMeta, columns: list[str] | None = None,
 # --- write side: emit real ORC v1 files from this engine's streams -----------
 
 
+#: the one-byte varints, 0 through 127 (field tags, flags, small counts)
+_VARINT_BYTES = [bytes([v]) for v in range(128)]
+
+
 def _pb_varint(v: int) -> bytes:
     if v < 0:
         # ORC's footer ints are all unsigned on the wire; a negative here
@@ -2491,6 +2857,8 @@ def _pb_varint(v: int) -> bytes:
         # forever on the arithmetic right shift — refuse loudly instead
         # (code-review r6, execution-confirmed hang)
         raise ValueError(f"protobuf varint cannot encode negative {v}")
+    if v < 128:
+        return _VARINT_BYTES[v]
     out = bytearray()
     while True:
         b = v & 0x7F
@@ -2751,21 +3119,25 @@ def _index_entries(layout, offsets, extra_vals, compression, group_stats,
                    kind: int) -> bytes:
     """RowIndex proto for one column: per-group positions (real extras
     for continuous streams, zeros for per-group-restart ones) + typed
-    statistics."""
+    statistics. A position is field 1's tag byte and its varint."""
+    zeros = {kind_: b"\x08\x00" * extras for kind_, extras in layout}
+    in_block = b"" if compression == "none" else b"\x08\x00"
     entries = bytearray()
     for g in range(len(group_stats)):
-        positions = b""
-        for kind_, extras in layout:
-            positions += _pb_field(1, 0, offsets[kind_][g])
-            if compression != "none":
-                positions += _pb_field(1, 0, 0)  # in-block offset
+        entry = bytearray()
+        for kind_, _ in layout:
+            entry += b"\x08"
+            entry += _pb_varint(offsets[kind_][g])
+            entry += in_block
             ev = extra_vals.get(kind_)
-            if ev is not None:
-                positions += b"".join(_pb_field(1, 0, x) for x in ev[g])
+            if ev is None:
+                entry += zeros[kind_]
             else:
-                positions += b"".join(_pb_field(1, 0, 0) for _ in range(extras))
+                for x in ev[g]:
+                    entry += b"\x08"
+                    entry += _pb_varint(x)
         nd, gnull, mn, mx = group_stats[g]
-        entry = positions + _pb_field(2, 2, _stats_proto(nd, gnull, kind, mn, mx))
+        entry += _pb_field(2, 2, _stats_proto(nd, gnull, kind, mn, mx))
         entries += _pb_field(1, 2, entry)
     return bytes(entries)
 
@@ -4032,24 +4404,32 @@ POOL_BYTES = 4 << 20
 class DataPool:
     """Decoded data that point lookups reuse across calls: one LRU, counted
     in bytes and capped at ``POOL_BYTES`` over the entries of every cached
-    OrcReader. A key is (reader, stripe, part, ...): a decompressed block
-    ("block", ((column, stream kind), block offset)), a string dictionary
-    ("dict", column), a decoded group of a point lookup's key column
-    ("key", column, group) or a float or double column's decoded values
-    ("float", (column, group, piece)), _pooled_float_values. A float
-    piece is (values, e): a decimal-like double piece as exact scaled
-    integers in the narrowest of int8, int16 and int32 (values / 10**e
-    is the doubles bit for bit, float_plain.encode_scaled), any other as
-    its plain values with ``e`` None; its blocks are never pooled. So on
-    ``orc_lookup`` the four doubles take 0.84 of a 2.9 MB working set
-    instead of 3.84 of 5.9 MB, and it fits the cap.
+    OrcReader. A key is (reader, stripe, part, ...):
+
+    - ("piece", (column, group, j)): a _Piece, one row group's values of
+      a scalar column decoded whole (_build_piece). Integers, dates,
+      timestamps and dictionary codes are frames of reference (a base and
+      the narrowest unsigned offsets), decimal-like doubles exact scaled
+      integers (float_plain.encode_scaled), and booleans, bytes, decimals
+      and other floats dense values; j is _PRESENT for the group's
+      PRESENT map, and a float or double group has a piece per seek
+      block's worth of values (_float_per). The key column's groups are
+      pieces too.
+    - ("dict", column): a string dictionary in its Arrow type.
+    - ("block", ((column, stream kind), block offset)): a decompressed
+      block of a direct string or binary, or of a nested column.
+    - ("key", column, group): a decoded group of a probed column without
+      pieces (a direct string, say).
+
+    So a warm lookup gathers each column's rows from its pieces: on
+    ``orc_lookup`` the pool holds 2.4 MB, and no block.
 
     A stripe read works through a _PoolRead: it reads entries without the
-    lock (one dict read) and files what it decoded, with its hits'
-    recency and its counts, in one locked ``commit``. ``drop`` removes a
-    reader's entries and retires it; a retired reader files nothing, so
-    a lookup still running on it cannot put bytes of a replaced file
-    back."""
+    lock (one dict read), keeps each one it found for the rest of the
+    read, and files what it decoded, with its hits' recency and its
+    counts, in one locked ``commit``. ``drop`` removes a reader's entries
+    and retires it; a retired reader files nothing, so a lookup still
+    running on it cannot put bytes of a replaced file back."""
 
     def __init__(self):
         self._lock = threading.Lock()
@@ -4116,15 +4496,18 @@ def pool_stats() -> dict:
 class _PoolRead:
     """One stripe read's use of the DataPool for the stripe ``owner`` =
     (reader, stripe): its caches (``view``) look in what the read decoded
-    itself, then in the pool; what it decodes stays with the read until
-    ``commit``."""
+    itself, then in what it found in the pool, then in the pool; what it
+    decodes stays with the read until ``commit``. An entry the read found
+    stays found for it, so a read that first asks the pool alone and then
+    decodes what it missed sees one set of entries whatever other threads
+    evict meanwhile."""
 
     __slots__ = ("owner", "new", "used", "misses")
 
     def __init__(self, owner: tuple):
         self.owner = owner
         self.new: dict = {}  # key -> (value, bytes)
-        self.used: list = []  # keys found in the pool
+        self.used: dict = {}  # key -> (value, bytes) found in the pool
         self.misses = 0
 
     def view(self, part: tuple, size) -> "_Pooled":
@@ -4136,8 +4519,9 @@ class _PoolRead:
 
 class _Pooled:
     """The dict-like cache a stripe read passes (a _block_at ``cache``,
-    a ``dict_cache``, the key phase's groups) over its _PoolRead's entries
-    under ``prefix``; ``size`` gives a value's bytes."""
+    a ``dict_cache``, the pieces, the key phase's groups) over its
+    _PoolRead's entries under ``prefix``; ``size`` gives a value's
+    bytes."""
 
     __slots__ = ("read", "prefix", "size")
 
@@ -4148,18 +4532,19 @@ class _Pooled:
 
     def get(self, k):
         key = self.prefix + (k,)
-        hit = self.read.new.get(key)
+        read = self.read
+        hit = read.new.get(key) or read.used.get(key)
         if hit is None:
             hit = _POOL.peek(key)
             if hit is None:
-                self.read.misses += 1
+                read.misses += 1
                 return None
-            self.read.used.append(key)
+            read.used[key] = hit
         return hit[0]
 
     def __contains__(self, k) -> bool:
         key = self.prefix + (k,)
-        return key in self.read.new or key in _POOL
+        return key in self.read.new or key in self.read.used or key in _POOL
 
     def __setitem__(self, k, value) -> None:
         self.read.new[self.prefix + (k,)] = (value, self.size(value))
@@ -4173,8 +4558,8 @@ def _array_bytes(arr: pa.Array) -> int:
     return arr.get_total_buffer_size()
 
 
-def _float_bytes(entry: tuple) -> int:
-    return entry[0].nbytes
+def _piece_bytes(piece: _Piece) -> int:
+    return piece.values.nbytes
 
 
 #: OrcReaders of the files most recently looked up, keyed by _reader_key
@@ -4264,15 +4649,19 @@ def orc_point_lookup(path: str, column: str, value,
 
     A cached reader keeps the decoded data its lookups make in the
     process's DataPool, ``POOL_BYTES`` in all over every cached file (an
-    LRU; ``pool_stats()`` reports it): decompressed blocks, string
-    dictionaries, the probed column's decoded groups and the float and
-    double columns' decoded values, decimal-like doubles as exact scaled
-    integers (half to an eighth of their bytes). A repeated lookup of a
-    stripe then decompresses and decodes only what is not pooled, and
-    fetches no key bytes when every kept group's keys are.
-    The entries go with their reader: a rewritten file's new stat key,
-    forget_reader and the reader cache's eviction drop them, so a
-    replaced file is never served pooled data.
+    LRU; ``pool_stats()`` reports it). The first lookup that touches a
+    row group decodes each scalar column's piece of it whole and pools
+    it (_Piece: integers, dates, timestamps and dictionary codes as a
+    frame of reference in the narrowest dtype, decimal-like doubles as
+    exact scaled integers, booleans, bytes, decimals and other floats
+    dense, and each group's PRESENT map); string dictionaries and the
+    blocks of direct strings and nested columns are pooled too. A later
+    lookup of the group reads each column with one NumPy gather from its
+    piece and reads no file bytes for it: a stripe whose pieces are all
+    pooled is served without a read. The entries go with their reader:
+    a rewritten file's new stat key, forget_reader and the reader
+    cache's eviction drop them, so a replaced file is never served
+    pooled data.
 
     The probe is hashed once (Python ints, under both integer bloom
     hashes) and each kept stripe's groups are bit-tested in one
@@ -4281,19 +4670,19 @@ def orc_point_lookup(path: str, column: str, value,
     groups' ``column`` alone is decoded and compared with ``value`` (a
     probe whose type cannot be compared with the column matches nothing),
     then each other column is read at the matching rows only, once over
-    all the hit groups (_decode_column_rows): an RLEv2 stream by one walk
-    over its run headers (decode_rlev2_points), which decodes no run but
-    a bit-packed DELTA or PATCHED_BASE one that holds a matching row (a
-    probe matching a large share of a group's rows decodes the stretch
-    from its first match through its last instead), and one Arrow array
-    per column. Each phase reads just the byte ranges of the streams it
-    decodes, coalesced where they touch, through this call's handle; a
-    stream is decompressed only over the blocks that hold the kept
-    groups (_group_bytes). At the matching rows, a float or direct
+    all the hit groups, as one Arrow array per column
+    (_decode_column_rows): from the pooled pieces, or for a direct
+    string or binary at its rows' bytes alone. Each phase reads just the
+    byte ranges of the streams it decodes, coalesced where they touch,
+    through this call's handle; a stream is decompressed only over the
+    blocks that hold the kept groups (_group_bytes). A float or direct
     string/binary DATA stream of a file that this engine wrote (its
     Footer softwareVersion) is decompressed only over the blocks that
-    hold those rows' bytes, found by block arithmetic from the
-    PostScript's compressionBlockSize."""
+    hold the wanted values' bytes, found by block arithmetic from the
+    PostScript's compressionBlockSize. A reader that is not cached (a
+    filesystem without mtimes) reads each column at the matching rows
+    alone: an RLEv2 stream by one walk over its run headers
+    (decode_rlev2_points)."""
     import datetime as _dt
     import decimal as _decimal
 

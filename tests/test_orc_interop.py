@@ -2029,8 +2029,10 @@ def test_liborc_small_blocks_lookup_and_row_ranges(tmp_path, comp):
 def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeypatch):
     """Pins the saving of the two-phase lookup on a zstd file from our
     writer: the compressed bytes decompressed stay within the kept groups'
-    blocks plus the index streams, the dictionary and the footers, and the
-    non-key columns RLE-decode only the matching row."""
+    blocks plus the index streams, the dictionary and the footers. A read
+    without the pool RLE-decodes the non-key columns at the matching row
+    only; a cached reader's lookup decodes each non-key RLEv2 stream of
+    the hit group once, whole, into the pool's pieces."""
     from orc_rust_spark.codecs import block as blockc
     from orc_rust_spark.sources import orc_file as of
 
@@ -2106,20 +2108,37 @@ def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeyp
     monkeypatch.setattr(blockc, "decompress_stream", counting_decompress)
     monkeypatch.setattr(of, "decode_rlev2", counting_rle)
     monkeypatch.setattr(of, "decode_rlev2_points", counting_points)
+    with open(path, "rb") as fh:
+        # the same read on a reader that is not cached: no pool
+        unpooled = of.decode_stripe_pruned(
+            None, None, meta, st.number_of_rows, "key", eq=probe, residual=True,
+            index=of.OrcReader(meta).stripe(0, fh), fetch=of._span_reader(fh, st.offset))
+    reads = {"unpooled": (comp_in[:], rle_ns[:], point_ns[:])}
+    del comp_in[:], rle_ns[:], point_ns[:]
+    of.forget_reader(path)
     got, decoded, total = of.orc_point_lookup(path, "key", probe)
+    reads["pooled"] = (comp_in, rle_ns, point_ns)
     monkeypatch.undo()
 
+    _same_rows(unpooled[0], tbl.slice(row, 1))
     _same_rows(got, tbl.slice(row, 1))
-    assert decoded == len(want_groups) and total == n // stride
-    assert sum(comp_in) <= allowed, (sum(comp_in), allowed)
-    # RLEv2 streams outside the key column: a, b, ts (seconds and nanos)
-    # and cat (indices) are read at the matching row alone by the point
-    # walker; txt decodes its lengths through the matching row, cat its
-    # dictionary lengths; the key column decodes its kept group
-    assert point_ns == [1] * 5, point_ns
+    assert decoded == unpooled[1] == len(want_groups) and total == n // stride
     n_dict = len(set(tbl.column("cat").to_pylist()))
+    # both: txt decodes its lengths through the matching row, cat its
+    # dictionary lengths, and the key column its kept group
     want_ns = [row % stride + 1, n_dict, stride]
-    assert sorted(rle_ns) == sorted(want_ns), rle_ns
+    for how, (comp, rles, points) in reads.items():
+        assert sum(comp) <= allowed, (how, sum(comp), allowed)
+        if how == "unpooled":
+            # RLEv2 streams outside the key column: a, b, ts (seconds and
+            # nanos) and cat (indices) are read at the matching row alone
+            # by the point walker
+            assert points == [1] * 5, points
+            assert sorted(rles) == sorted(want_ns), rles
+        else:
+            # the same five streams decode once each, the whole group
+            assert points == [], points
+            assert sorted(rles) == sorted(want_ns + [stride] * 5), rles
 
 
 def test_liborc_integer_bloom_keeps_zero_negative_and_wide_keys(tmp_path):
@@ -2180,9 +2199,9 @@ def test_liborc_direct_runs_at_every_fixed_width(tmp_path, monkeypatch, width):
     widths = set()
     real = rle_v2.bitunpack_rows
 
-    def spy(mat, m, w):
+    def spy(mat, m, w, **kwargs):
         widths.add(w)
-        return real(mat, m, w)
+        return real(mat, m, w, **kwargs)
 
     monkeypatch.setattr(rle_v2, "bitunpack_rows", spy)
     rng = np.random.default_rng(width)

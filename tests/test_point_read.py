@@ -276,7 +276,7 @@ def test_rewritten_file_never_serves_pooled_rows(pool, tmp_path, how):
     stale = _reader_of(path)
     assert _entries_of(pool, stale) and pool.stats()["hits"]
     kinds = {k[2] for k in pool._items if k[0] is stale}
-    assert kinds == {"block", "dict", "key"}
+    assert kinds == {"block", "dict", "piece"}
     if how == "in-place":
         with open(path, "r+b") as fh:
             fh.write(data)
@@ -362,16 +362,16 @@ def test_lookup_on_a_dropped_reader_files_nothing(pool, table, tmp_path, monkeyp
     returns its rows but files none of what it decoded into the pool."""
     path = str(tmp_path / "f.orc")
     _ours(table, path, "zstd")
-    real = of._eq_mask
+    real = of._key_mask
 
-    def forget_midway(arr, value):
+    def forget_midway(*args):
         of.forget_reader(path)
-        return real(arr, value)
+        return real(*args)
 
     of.orc_point_lookup(path, "k", -2)
     reader = _reader_of(path)
     assert _entries_of(pool, reader)
-    monkeypatch.setattr(of, "_eq_mask", forget_midway)
+    monkeypatch.setattr(of, "_key_mask", forget_midway)
     _same(of.orc_point_lookup(path, "k", -1)[0],
           table.filter(pc.equal(table.column("k"), -1)))
     monkeypatch.undo()
@@ -516,17 +516,18 @@ def scaled_table():
 
 
 def _float_entries(pool, path) -> dict:
-    """{column name: [(dtype or None, e) of each pooled piece]} of
-    ``path``'s reader, None standing for plain values."""
+    """{column name: [(dtype or None, e) of each pooled value piece]} of
+    ``path``'s float and double columns, None standing for plain values."""
     reader = _reader_of(path)
     names = dict(zip(reader.meta.types[0].subtypes, reader.meta.types[0].field_names))
+    floats = {c for c in names if reader.meta.types[c].kind in (of.K_FLOAT, of.K_DOUBLE)}
     out: dict = {}
-    for key, (entry, size) in pool._items.items():
-        if key[0] is reader and key[2] == "float":
-            values, e = entry
-            assert size == values.nbytes
+    for key, (piece, size) in pool._items.items():
+        if key[0] is reader and key[2] == "piece" and key[3][0] in floats \
+                and key[3][2] != of._PRESENT:
+            assert size == piece.values.nbytes
             out.setdefault(names[key[3][0]], []).append(
-                (None if e is None else values.dtype, e))
+                (None if piece.scale is None else piece.values.dtype, piece.scale))
     return out
 
 
@@ -575,9 +576,9 @@ def test_decimal_like_doubles_pool_as_narrow_scaled_ints(pool, scaled_table, tmp
     assert all(e == 2 for _, e in got["cents_n"])
     reader = _reader_of(path)
     names = reader.meta.types[0].field_names
-    e_of = {(names[key[3][0] - 1], *key[3][1:]): entry[1]
-            for key, (entry, _) in pool._items.items()
-            if key[0] is reader and key[2] == "float"}
+    e_of = {(names[key[3][0] - 1], *key[3][1:]): piece.scale
+            for key, (piece, _) in pool._items.items()
+            if key[0] is reader and key[2] == "piece" and key[3][2] != of._PRESENT}
     # the piece that holds mixed's random double, row 500 of group 2
     assert {at: e for at, e in e_of.items() if at[0] == "mixed" and e != 2} == {
         ("mixed", 2, 0): None}
@@ -596,13 +597,13 @@ def test_pooled_decimal_like_doubles_take_at_most_half_their_bytes(pool, tmp_pat
     _ours(tbl, path, "zstd")
     of.orc_point_lookup(path, "k", 7)
     held = raw = 0
-    for key, (entry, size) in pool._items.items():
-        if key[2] == "float":
-            assert entry[1] == 2
+    for key, (piece, size) in pool._items.items():
+        if key[2] == "piece" and key[3][0] == 2:
+            assert piece.scale == 2
             held += size
-            raw += 8 * len(entry[0])
+            raw += 8 * len(piece.values)
     assert raw == 8 * N and 2 * held <= raw
-    assert not any(k[2] == "block" and k[3][0][0] == 2 for k in pool._items)
+    assert not any(k[2] == "block" for k in pool._items)
 
 
 def test_scaled_ints_round_trip_bit_for_bit():
@@ -636,3 +637,221 @@ def test_scaled_ints_round_trip_bit_for_bit():
         assert encode_scaled(vals) is None and encode_scaled(vals, 2) is None, odd
     assert encode_scaled(cents.astype(np.float32)) is None
     assert encode_scaled(np.array([], dtype=np.float64)) is None
+
+
+# --- warm lookups gather from pooled pieces (orc_file._Piece) -----------------
+
+#: rows of key -1 in every group: a lookup of it gathers from five pieces a column
+SPREAD = (3, 1_500, 2_600, 3_700, 4_999)
+#: (column, row, value) at a row the probes below pick: each column's span
+#: in a group, one past an unsigned dtype's range, in groups decoded as
+#: int64 (their runs are not all DIRECT), so the frame of reference must
+#: widen its offsets
+SPANS = [("span8", 1_500, 256), ("span16", 2_600, 1 << 16), ("span32", 3_700, 1 << 32)]
+
+
+def _piece_table(seed=7) -> pa.Table:
+    """A key ``k`` (-1 at SPREAD) and a column for each piece form: ints
+    at their type's extremes (int64's min and max in one group), the
+    SPANS, dates, whole-second and microsecond timestamps before and
+    after 1970, dictionary strings with an empty one and a column of
+    them all null (an empty dictionary), booleans, bytes, decimals,
+    decimal-like and other doubles, and a column null in all of group 2."""
+    rng = np.random.default_rng(seed)
+    k = np.arange(N, dtype=np.int64)
+    k[list(SPREAD)] = -1
+    # in every group: a ramp of fixed steps (DELTA runs) up to the span,
+    # then the span repeated; the SPANS rows hold it
+    local = np.arange(N, dtype=np.int64) % STRIDE
+    span8, span16, span32 = (np.minimum(local * step, value) for step, (_, _, value)
+                             in zip((1, 131, 6_700_000), SPANS))
+    i64 = rng.integers(-(10**15), 10**15, N)
+    i64[[0, 999, 3]] = I64_MIN, I64_MAX, I64_MIN
+    secs = rng.integers(-40 * 365, 40 * 365, N) * 86_400  # days either side of 1970
+    us = rng.integers(-(2**40), 2**40, N) * 1_000 + rng.integers(0, 1_000, N)
+    words = np.array(["", "alpha", "beta", "gamma"])
+    cents = rng.integers(-(10**6), 10**6, N) / 100
+    nulls = rng.random(N) < 0.3
+    nulls[2 * STRIDE: 3 * STRIDE] = True
+    nulls[list(SPREAD)] = False
+    nulls[2_600] = True
+    return pa.table({
+        "k": pa.array(k),
+        "i8": pa.array(np.r_[-128, 127, rng.integers(-128, 128, N - 2)], pa.int8()),
+        "i16": pa.array(np.r_[-(2**15), 2**15 - 1, rng.integers(-9, 9, N - 2)], pa.int16()),
+        "i32": pa.array(np.r_[-(2**31), 2**31 - 1, rng.integers(0, 2**20, N - 2)], pa.int32()),
+        "i64": pa.array(i64),
+        "span8": pa.array(span8), "span16": pa.array(span16), "span32": pa.array(span32),
+        "day": pa.array(rng.integers(-30_000, 30_000, N).astype(np.int32), pa.date32()),
+        "ts_s": pa.array(secs * 1_000_000, pa.timestamp("us")),
+        "ts_us": pa.array(us, pa.timestamp("us")),
+        "lang": pa.array(words[rng.integers(0, 4, N)].tolist()),
+        "none": pa.nulls(N, pa.string()),
+        "flag": pa.array(rng.random(N) < 0.5, mask=rng.random(N) < 0.2),
+        "dec": pa.array([decimal.Decimal(int(c)).scaleb(-3) for c in i64 % 10**9],
+                        pa.decimal128(12, 3)),
+        "wide": pa.array([decimal.Decimal(int(c)).scaleb(-4) for c in i64], pa.decimal128(30, 4)),
+        "cents": pa.array(cents),
+        "f64": pa.array(rng.normal(size=N)),
+        "i64_n": pa.array(i64, mask=nulls),
+    })
+
+
+PIECE_FILES = {
+    "ours-zstd": lambda t, p: of.write_orc(t, p, compression="zstd", row_index_stride=STRIDE),
+    "pyarrow-zstd": FILES["pyarrow-zstd"],
+}
+#: (column, value): the key's, and probes of other columns' pieces, with
+#: and without nulls (an empty string, the empty dictionary's column,
+#: bytes, an int missing from the file)
+PIECE_PROBES = [("k", v) for v in [-1, 0, 999, 1_234, 2_100, 4_321, 2_600, 3_700]] + [
+    ("lang", ""), ("lang", "beta"), ("none", "alpha"), ("i8", -128), ("i16", 3),
+    ("i64_n", None), ("span8", 256), ("day", None), ("i64", I64_MAX), ("i64", 5)]
+
+
+@pytest.fixture(scope="module")
+def piece_table():
+    return _piece_table()
+
+
+@pytest.mark.parametrize("writer", sorted(PIECE_FILES))
+def test_pieces_warm_cold_and_filter_agree(pool, piece_table, tmp_path, writer):
+    """Every piece form read warm (from the pool), cold (each lookup on an
+    emptied pool) and by a filter of the source agree, value for value;
+    the warm sweep decodes no piece and hits the pool."""
+    path = str(tmp_path / "pieces.orc")
+    PIECE_FILES[writer](piece_table, path)
+    # a None value stands for the column's value at row 1_500 (not null)
+    probes = [(c, piece_table.column(c)[1_500].as_py() if v is None else v)
+              for c, v in PIECE_PROBES]
+    want = {p: piece_table.filter(pc.equal(piece_table.column(p[0]), p[1])) for p in probes}
+    assert want[("i64_n", probes[13][1])].num_rows and not want[("i64", 5)].num_rows
+    for column, value in probes:
+        of.forget_reader(path)
+        _same(of.orc_point_lookup(path, column, value)[0], want[(column, value)])
+    for column, value in probes:
+        of.orc_point_lookup(path, column, value)
+    kinds = {p.kind for p, _ in pool._items.values() if isinstance(p, of._Piece)}
+    assert kinds == {"for", "codes", "scaled", "dense", "present"}
+    built = []
+    real = of._build_piece
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(of, "_build_piece", lambda *a: built.append(a[2:5]) or real(*a))
+        hits = pool.stats()["hits"]
+        for column, value in probes:
+            _same(of.orc_point_lookup(path, column, value)[0], want[(column, value)])
+    assert not built and pool.stats()["hits"] > hits
+
+
+@pytest.mark.parametrize("writer", sorted(PIECE_FILES))
+def test_wide_spans_keep_their_values(pool, piece_table, tmp_path, writer):
+    """int64's min and max in one group (a span of 2**64 - 1) and spans
+    one past uint8, uint16 and uint32 come back exact, cold and warm, and
+    their pieces hold the span's offsets in the dtype that fits it."""
+    path = str(tmp_path / "spans.orc")
+    PIECE_FILES[writer](piece_table, path)
+    for _ in range(2):
+        for name, row, value in SPANS + [("i64", 999, I64_MAX), ("i64", 0, I64_MIN)]:
+            key = piece_table.column("k")[row].as_py()
+            got = of.orc_point_lookup(path, "k", key)[0].column(name).to_pylist()
+            assert got == piece_table.filter(pc.equal(piece_table.column("k"), key)
+                                             ).column(name).to_pylist(), (name, row)
+            assert value in got
+    reader = _reader_of(path)
+    names = dict(zip(reader.meta.types[0].subtypes, reader.meta.types[0].field_names))
+    dtypes = {(names[key[3][0]], key[3][1]): piece.values.dtype
+              for key, (piece, _) in pool._items.items()
+              if key[0] is reader and key[2] == "piece" and piece.kind == "for"}
+    assert dtypes[("span8", 1)] == np.uint16
+    assert dtypes[("span16", 2)] == np.uint32
+    assert dtypes[("span32", 3)] == np.uint64
+    assert dtypes[("i64", 0)] == np.uint64
+
+
+def test_sub_microsecond_timestamps_read_alone(pool, tmp_path):
+    """A group holding sub-microsecond timestamps, and pre-1970 ones with
+    sub-second parts, has no piece: a row of it with whole microseconds
+    reads exact, cold and warm, and a sub-microsecond row raises, cold
+    and warm."""
+    ns = np.array([-1_500_000_000_123, -1_000, 5, 1_000_000_001_000_000_000,
+                   -86_400_000_000_000, 2_000_000], dtype=np.int64)
+    tbl = pa.table({"k": pa.array(np.arange(ns.size)),
+                    "ts": pa.array(ns.astype("datetime64[ns]"))})
+    path = str(tmp_path / "ns.orc")
+    paorc.write_table(tbl, path, row_index_stride=STRIDE)
+    for _ in range(2):
+        for row in (1, 3, 4, 5):
+            got = of.orc_point_lookup(path, "k", row)[0]
+            assert got.column("ts").cast(pa.int64()).to_pylist() == [ns[row] // 1_000], row
+        for row in (0, 2):
+            with pytest.raises(ValueError, match="sub-microsecond"):
+                of.orc_point_lookup(path, "k", row)
+
+
+def test_warm_lookup_of_a_pooled_stripe_reads_nothing(pool, piece_table, tmp_path,
+                                                      monkeypatch):
+    """A repeated lookup whose stripe's pieces are all pooled reads no
+    byte of the file and plans no stream range. (A direct string column,
+    such as this engine's writer makes of the all-null one, is read at
+    its rows' bytes on every lookup.)"""
+    piece_table = piece_table.drop_columns(["none"])
+    path = str(tmp_path / "warm.orc")
+    PIECE_FILES["ours-zstd"](piece_table, path)
+    of.orc_point_lookup(path, "k", -1)
+    reads = []
+    real_open = of.fsio.open_input
+
+    class Counting:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            self.fh.__enter__()
+            return self
+
+        def __exit__(self, *exc):
+            return self.fh.__exit__(*exc)
+
+        def read(self, *args):
+            reads.append(args)
+            return self.fh.read(*args)
+
+        def __getattr__(self, name):
+            return getattr(self.fh, name)
+
+    def planned(*args):
+        raise AssertionError("a pooled stripe planned or fetched stream bytes")
+
+    monkeypatch.setattr(of.fsio, "open_input", lambda *a: Counting(real_open(*a)))
+    monkeypatch.setattr(of.StripeIndex, "ranges", planned)
+    monkeypatch.setattr(of, "_fetch_streams", planned)
+    got = of.orc_point_lookup(path, "k", -1)[0]
+    assert not reads
+    _same(got, piece_table.filter(pc.equal(piece_table.column("k"), -1)))
+
+
+def test_mixed_type_set_probe_keeps_and_matches_nothing(table, tmp_path):
+    """A set IN-probe of mixed types neither raises nor sorts: a point
+    lookup returns no row, as the same values as a list do, and a pruned
+    read keeps the same groups as the list (the string, which no integer
+    statistic can rule out, keeps every one)."""
+    path = str(tmp_path / "mixed.orc")
+    _ours(table, path, "zstd")
+    for probe in ({10, "a"}, [10, "a"], frozenset({"a", 10})):
+        got, decoded, total = of.orc_point_lookup(path, "k", probe)
+        assert got.num_rows == 0 and 0 < decoded <= total, probe
+    meta = of.read_metadata(path)
+    st = meta.stripes[0]
+    with open(path, "rb") as fh:
+        fh.seek(st.offset)
+        body = fh.read(st.index_length + st.data_length)
+        footer = fh.read(st.footer_length)
+    got = [of.decode_stripe_pruned(body, footer, meta, st.number_of_rows, "k", eq=probe)
+           for probe in ({10, "a"}, [10, "a"], {1_500, 1_600})]
+    as_predicate = of.decode_stripe_pruned(body, footer, meta, st.number_of_rows,
+                                           predicates=[{"column": "k", "eq": {"a", 10}}])
+    assert as_predicate[1:] == got[0][1:]
+    assert got[0][1:] == got[1][1:] == (N // STRIDE, N // STRIDE)
+    _same(got[0][0], got[1][0])
+    assert 10 in got[0][0].column("k").to_pylist()
+    assert got[2][1] < N // STRIDE  # a set of comparable values still prunes

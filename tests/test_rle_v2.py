@@ -681,6 +681,61 @@ def test_reader_skip_and_partial_reads_equal_slices(name, signed):
             assert np.array_equal(got, v[skip:skip + n]), (skip, n)
 
 
+def _narrow_corpus(signed):
+    """-> (values, stream, expected narrow dtype) per aligned DIRECT width
+    of at most 32 bits: runs at the width's extreme values, and a short
+    repeat of the extreme that fits the same dtype."""
+    from orc_rust_spark.codecs.rle_v2 import _short_repeat
+    from orc_rust_spark.codecs.util import zigzag_decode, zigzag_encode_scalar
+
+    rng = np.random.default_rng(17)
+    out = []
+    for width in (1, 2, 4, 8, 16, 24, 32):
+        u = rng.integers(0, 1 << width, 700, dtype=np.int64).astype(np.uint64)
+        u[:2] = 0, (1 << width) - 1
+        vals = zigzag_decode(u) if signed else u.view(np.int64)
+        bits = 8 if width <= 8 else 16 if width <= 16 else 32
+        extreme = -(1 << (bits - 1)) if signed else (1 << bits) - 1
+        rep = zigzag_encode_scalar(extreme) if signed else extreme
+        enc = (_direct_run(u[:512], width) + _short_repeat(rep, 5)
+               + _direct_run(u[512:], width))
+        vals = np.concatenate([vals[:512], np.full(5, extreme), vals[512:]])
+        dtype = np.dtype(f"{'i' if signed else 'u'}{bits // 8}")
+        out.append((vals, enc, dtype))
+    return out
+
+
+@pytest.mark.parametrize("signed", [True, False])
+@pytest.mark.parametrize("name", sorted(ENCODER_CASES) + ["<mixed>", "<narrow>"])
+def test_reader_batch_and_narrow_keep_every_value(name, signed):
+    """decode_rlev2's ``batch_values`` changes no value, and ``narrow``
+    only the dtype: the narrowest of 8, 16 and 32 bits (signed like the
+    stream) that the runs prove, where every run decoded is DIRECT or
+    SHORT_REPEAT, and int64 otherwise."""
+    from orc_rust_spark.codecs.rle_v2 import DECODE_BATCH_VALUES, FILE_BATCH_VALUES
+
+    if name == "<narrow>":
+        cases = _narrow_corpus(signed)
+    elif name == "<mixed>":
+        cases = [(*_mixed_corpus(signed), np.dtype(np.int64))]
+    else:
+        v = _encoder_case(name)
+        cases = [(v, encode_rlev2(v, signed=signed), None)]
+    for v, enc, dtype in cases:
+        for skip in (0, 1, v.size // 2):
+            want = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip)
+            assert np.array_equal(want, v[skip:])
+            for batch in (512, DECODE_BATCH_VALUES, FILE_BATCH_VALUES, 1 << 40):
+                got = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip,
+                                   batch_values=batch)
+                assert got.dtype == np.int64 and np.array_equal(got, want), batch
+                got = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip,
+                                   batch_values=batch, narrow=True)
+                assert np.array_equal(got.astype(np.int64), want), batch
+                if dtype is not None and skip == 0:
+                    assert got.dtype == dtype, (batch, got.dtype)
+
+
 def test_reader_count_mismatch_raises_value_error():
     """exact=True: a count that ends inside a run is a mismatch; one on a
     run boundary reads the runs before it."""
