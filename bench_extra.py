@@ -29,13 +29,13 @@ decoded-data pool. No Spark.
 
 rebuilds the same lookup file, checks every probe's rows, then runs the
 probes ``--reps`` times and prints the median CPU per lookup, split by
-self time into block decompression, RLEv2 reads (``decode_rlev2`` and
-the point walker ``decode_rlev2_points``), the key phase (the probed
-column's comparisons and group decodes) and the rest, plus per lookup
-the RLEv2 calls, the pieces decoded whole (``orc_file._build_piece``)
-and the spans read from the file, and the decoded-data pool's counters
+self time into block decompression, RLEv2 reads (``decode_rlev2``),
+the key phase (the probed column's comparisons, ``orc_file._key_mask``)
+and the rest, plus per lookup the RLEv2 calls, the pieces decoded whole
+(``orc_file._build_piece``) and the spans read from the file, and the
+decoded-data pool's counters
 (``orc_file.pool_stats``) with its bytes and entries by kind: a piece's
-form (for, codes, scaled, dense, present) or dict, block and key.
+form (for, codes, scaled, dense, present) or dict and block.
 These lookups are warm: the checking sweep has filled the pool.
 ``--cold`` also prints the same split and counts of cold lookups, each
 timed after the file's pooled data is dropped.
@@ -143,7 +143,7 @@ def _drop_pool(of, path: str) -> None:
 
 def _pool_contents(of) -> dict:
     """The decoded-data pool's bytes and entries by kind: a piece's form
-    (for, codes, scaled, dense, present), or dict, block and key."""
+    (for, codes, scaled, dense, present), or dict and block."""
     held: dict[str, int] = {}
     entries: dict[str, int] = {}
     with of._POOL._lock:
@@ -237,8 +237,7 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
     """Median CPU per warm point lookup on the perfbench ``workload``'s
     lookup file (probing ``column`` if given, else the workload's key),
     split by self time into block decompression, RLEv2 reads, the key
-    phase (the probed column's comparisons and group decodes) and the
-    rest; the RLEv2 calls, whole-piece decodes and file reads per
+    phase (the probed column's comparisons) and the rest; the RLEv2 calls, whole-piece decodes and file reads per
     lookup; and the pool's counters and contents. With ``cold``, the
     same of lookups each made after the file's pooled data is dropped."""
     import tempfile
@@ -271,12 +270,10 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
                     stack[-1][1] = end
         return run
 
-    # the key phase decodes whole groups: the point read of the other
-    # columns opens its own part, so a nested column's group decodes
-    # inside it are not counted as the key's
+    # the point reads open their own part: a key without pieces (a direct
+    # string) is read by _decode_column_rows, and its read counts as rest
     targets = [(blockc, "decompress_stream", "decompress"),
-               (of, "decode_rlev2", "rlev2"), (of, "decode_rlev2_points", "rlev2"),
-               (of, "_decode_column_group", "key"), (of, "_eq_mask", "key"),
+               (of, "decode_rlev2", "rlev2"), (of, "_eq_mask", "key"),
                (of, "_key_mask", "key"), (of, "_decode_column_rows", "rest")]
     saved = [(mod, name, getattr(mod, name)) for mod, name, _ in targets] + [
         (of, "_build_piece", of._build_piece), (of, "_span_reader", of._span_reader)]

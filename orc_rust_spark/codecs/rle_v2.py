@@ -32,25 +32,25 @@ runs per value.
 The decoder mirrors it in two passes. One walk over the run headers
 records each run's shape, where its packed values start and where its
 values go in the output. Then runs of one shape are decoded together, in
-batches of up to DECODE_BATCH_VALUES values (or the caller's
-``batch_values``): DIRECT runs of one (width, length) are unpacked as one
-``(k, nbytes)`` matrix (consecutive ones are a strided view of the
-stream, as they sit a header plus ``nbytes`` apart) and un-zigzagged
-once, in the width's own 8, 16 or 32-bit dtype where it has one (with
-``narrow`` the output keeps the narrowest dtype the runs prove);
-bit-packed DELTA runs of one shape are unpacked and summed row-wise, and
-fixed DELTA runs of one length are computed together. SHORT_REPEAT runs
-are filled and PATCHED_BASE runs decoded one at a time. A stream that
-ends before its runs do raises CorruptStream.
+batches of up to DECODE_BATCH_VALUES int64s' bytes: DIRECT runs of one
+(width, length) are unpacked as one ``(k, nbytes)`` matrix (consecutive
+ones are a strided view of the stream, as they sit a header plus
+``nbytes`` apart) and un-zigzagged once, in the width's own 8, 16 or
+32-bit dtype where it has one (with ``narrow`` the output keeps the
+narrowest dtype the runs prove); bit-packed DELTA runs of one shape are
+unpacked and summed row-wise, and fixed DELTA runs of one length are
+computed together. SHORT_REPEAT runs are filled and PATCHED_BASE runs
+decoded one at a time. A stream that ends before its runs do raises
+CorruptStream.
 
-A point read of a few values out of thousands (decode_rlev2_points, the
-ORC reader's row-selected read) walks the run headers once, up to the
-run that holds the last selected value, and decodes no run it does not
-need: DIRECT and SHORT_REPEAT values are read by bit arithmetic and
-fixed-delta values as ``base + i * delta``; only a bit-packed DELTA or a
-PATCHED_BASE run that holds a selected value is decoded, alone. A
-selection too dense for that per-value work (POINT_VALUES) is decoded
-as one stretch by decode_rlev2 instead.
+A point read of a few values out of thousands (decode_rlev2_points)
+walks the run headers once, up to the run that holds the last selected
+value, and decodes no run it does not need: DIRECT and SHORT_REPEAT
+values are read by bit arithmetic and fixed-delta values as ``base + i *
+delta``; only a bit-packed DELTA or a PATCHED_BASE run that holds a
+selected value is decoded, alone. A selection too dense for that
+per-value work (POINT_VALUES) is decoded as one stretch by decode_rlev2
+instead.
 
 Reference parity (behavioral, not code): the state machine and selector in
 src/encoding/integer/rle_v2/mod.rs:255-531 and the per-sub-encoding readers
@@ -113,10 +113,9 @@ BASE_VALUE_LIMIT = 1 << 56
 #   table (4-vCPU x86 host).
 BATCH_VALUES = 4 * MAX_RUN_LENGTH
 FILE_BATCH_VALUES = 32 * MAX_RUN_LENGTH
-# values per reader batch of same-shape runs: bounds each batch's unpacked
-# matrix and its zigzag or cumsum temporaries to 32 KB, for the same reason.
-# The point-lookup pool decodes a touched row group whole in one batch of
-# FILE_BATCH_VALUES: it runs in the process that owns the pool
+# int64 values per reader batch of same-shape runs: bounds each batch's
+# unpacked matrix and its zigzag or cumsum temporaries to 32 KB, for the
+# same reason (a DIRECT width that unpacks narrower holds more values)
 DECODE_BATCH_VALUES = 8 * MAX_RUN_LENGTH
 # a point read pays ~1 us of Python per selected value, a stretch decode
 # ~30 us of set-up plus ~20 ns per value of its span (10,000-value
@@ -433,18 +432,15 @@ def _run_extent(buf, pos: int) -> tuple[int, int]:
 
 
 def decode_rlev2(buf, n: int, signed: bool = True, skip: int = 0,
-                 exact: bool = True, *, batch_values: int = DECODE_BATCH_VALUES,
-                 narrow: bool = False) -> np.ndarray:
+                 exact: bool = True, narrow: bool = False) -> np.ndarray:
     """Decode ``n`` int64 values from an ORC RLEv2 stream, optionally
     skipping ``skip`` values first (whole runs are skipped via header
     arithmetic without materializing). ``exact=False`` tolerates a stream
     that continues past the requested count (decoding a row group out of
-    the middle of a stripe stream) and truncates the final run. Runs of
-    one shape decode in batches of up to ``batch_values`` values; the
-    values never depend on it. With ``narrow`` the values come in the
-    narrowest 8, 16 or 32-bit dtype (signed like the stream) that the
-    runs' widths prove holds them, where every run decoded is DIRECT or
-    SHORT_REPEAT, and as int64 otherwise.
+    the middle of a stripe stream) and truncates the final run. With
+    ``narrow`` the values come in the narrowest 8, 16 or 32-bit dtype
+    (signed like the stream) that the runs prove holds them, where every
+    run decoded is DIRECT or SHORT_REPEAT, and as int64 otherwise.
 
     A stream shorter than its run headers promise raises CorruptStream;
     ``exact=True`` raises ValueError when the runs overshoot ``n``."""
@@ -478,11 +474,11 @@ def decode_rlev2(buf, n: int, signed: bool = True, skip: int = 0,
         out[o : o + count] = value
     data = np.frombuffer(buf, dtype=np.uint8)
     for (width, count), (starts, outs) in runs.direct.items():
-        _direct_groups(out, data, width, count, starts, outs, signed, batch_values)
+        _direct_groups(out, data, width, count, starts, outs, signed)
     for (width, count), group in runs.delta.items():
-        _delta_groups(out, data, width, count, *group, batch_values)
+        _delta_groups(out, data, width, count, *group)
     for count, (outs, bases, firsts) in runs.fixed.items():
-        _fixed_groups(out, count, outs, bases, firsts, batch_values)
+        _fixed_groups(out, count, outs, bases, firsts)
     for p, o in runs.patched:
         vals, _ = _read_patched_base(buf, p)
         out[o : o + vals.size] = vals
@@ -682,7 +678,7 @@ def _run_points(buf, pos: int, count: int, offs: list, signed: bool) -> list:
             return [_to_int64((base + o * delta) & _MASK64) for o in offs]
         vals = np.empty(count, dtype=np.int64)
         _delta_groups(vals, np.frombuffer(buf, dtype=np.uint8), decode_bit_width(code),
-                      count, [p], [0], [base], [delta], DECODE_BATCH_VALUES)
+                      count, [p], [0], [base], [delta])
         return vals[offs].tolist()
     return _read_patched_base(buf, pos)[0][offs].tolist()
 
@@ -691,10 +687,11 @@ def _to_int64(v: int) -> int:
     return v - (1 << 64) if v >= 1 << 63 else v
 
 
-def _batch_runs(count: int, batch_values: int) -> int:
-    """Runs of ``count`` values per batch: ``batch_values`` values, and
-    at least one run."""
-    return max(1, batch_values // count)
+def _batch_runs(count: int, itemsize: int = 8) -> int:
+    """Runs of ``count`` values per batch: as many values of ``itemsize``
+    bytes as fit the bytes of DECODE_BATCH_VALUES int64s, and at least
+    one run."""
+    return max(1, DECODE_BATCH_VALUES * 8 // (itemsize * count))
 
 
 def _packed_rows(data: np.ndarray, starts: list, nbytes: int, stride: int) -> np.ndarray:
@@ -718,13 +715,19 @@ def _scatter(out: np.ndarray, outs: list, vals: np.ndarray) -> None:
             out[o : o + m] = row
 
 
+#: bytes a value of each DIRECT width that bitunpack_rows unpacks narrow
+#: takes (every other width unpacks to uint64)
+_UNPACKED_BYTES = {1: 1, 2: 1, 4: 1, 8: 1, 16: 2, 24: 4, 32: 4}
+
+
 def _direct_groups(out, data, width: int, count: int, starts: list, outs: list,
-                   signed: bool, batch_values: int) -> None:
+                   signed: bool) -> None:
     """DIRECT runs of one shape: one unpack and zigzag per batch, in the
-    narrowest dtype of the width where it has one; the values take
+    narrowest dtype of the width where it has one (so a batch of a
+    narrow width holds more values in the same bytes); the values take
     ``out``'s dtype as they are written out."""
     nbytes = (count * width + 7) // 8
-    step = _batch_runs(count, batch_values)
+    step = _batch_runs(count, _UNPACKED_BYTES.get(width, 8))
     for a in range(0, len(starts), step):
         batch = slice(a, a + step)
         u = bitunpack_rows(_packed_rows(data, starts[batch], nbytes, 2 + nbytes),
@@ -734,12 +737,12 @@ def _direct_groups(out, data, width: int, count: int, starts: list, outs: list,
 
 
 def _delta_groups(out, data, width: int, count: int, starts: list, outs: list,
-                  bases: list, firsts: list, batch_values: int) -> None:
+                  bases: list, firsts: list) -> None:
     """Bit-packed DELTA runs of one shape: the |deltas| after the first
     are unpacked per batch, signed by the first delta, and summed
     row-wise."""
     nbytes = ((count - 2) * width + 7) // 8
-    step = _batch_runs(count, batch_values)
+    step = _batch_runs(count)
     for a in range(0, len(starts), step):
         batch = slice(a, a + step)
         rows = _packed_rows(data, starts[batch], nbytes, 0)
@@ -753,11 +756,10 @@ def _delta_groups(out, data, width: int, count: int, starts: list, outs: list,
         _scatter(out, outs[batch], np.cumsum(deltas, axis=1, out=deltas))
 
 
-def _fixed_groups(out, count: int, outs: list, bases: list, firsts: list,
-                  batch_values: int) -> None:
+def _fixed_groups(out, count: int, outs: list, bases: list, firsts: list) -> None:
     """Fixed-delta runs of one length: base + delta * i, per batch."""
     steps = np.arange(count, dtype=np.int64)
-    step = _batch_runs(count, batch_values)
+    step = _batch_runs(count)
     for a in range(0, len(outs), step):
         batch = slice(a, a + step)
         vals = np.array(firsts[batch], dtype=np.int64)[:, None] * steps

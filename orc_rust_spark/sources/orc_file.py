@@ -39,12 +39,7 @@ from ..codecs.boolean_rle import decode_boolean_rle
 from ..codecs.byte_rle import decode_byte_rle
 from ..codecs.float_plain import decode_float, decode_scaled, encode_scaled
 from ..codecs.rle_v1 import decode_rlev1
-from ..codecs.rle_v2 import (
-    DECODE_BATCH_VALUES,
-    FILE_BATCH_VALUES,
-    decode_rlev2,
-    decode_rlev2_points,
-)
+from ..codecs.rle_v2 import decode_rlev2
 from ..codecs.timestamp_split import combine_timestamp_ns, combine_timestamp_us
 from ..codecs.util import CorruptStream
 from ..codecs.util import int32_offsets as _int32_offsets
@@ -839,10 +834,6 @@ def _writer_epoch_delta_ns(tz: str) -> int:
     return local - ORC_EPOCH_UTC_SECONDS * 1_000_000_000
 
 
-#: writer zones whose wall clock is UTC
-_UTC_ZONES = ("UTC", "GMT", "")
-
-
 def _ts_us(secs: np.ndarray, nanos_enc: np.ndarray, tz: str, kind: int,
            unit: str = "us") -> np.ndarray:
     """(seconds, encoded nanos) -> int64 in ``unit`` ("us" or "ns").
@@ -859,7 +850,7 @@ def _ts_us(secs: np.ndarray, nanos_enc: np.ndarray, tz: str, kind: int,
       decoded value presents that instant's wall-clock in the writer tz
       (naive_local reinterpreted as UTC). K_TIMESTAMP_INSTANT is pure UTC.
     """
-    if kind == K_TIMESTAMP and tz not in _UTC_ZONES:
+    if kind == K_TIMESTAMP and tz not in ("UTC", "GMT", ""):
         # writer-tz wall-clock path stays in ns-space (pandas tz math is
         # ns-native; such files are bounded to the ns-representable range)
         import pandas as pd
@@ -1496,20 +1487,18 @@ def _span_reader(fh, offset: int):
 
 
 def _rle_values(rle, buf, exs: dict | None, kind: int, n: int,
-                signed: bool, batch: int = DECODE_BATCH_VALUES,
-                narrow: bool = False) -> np.ndarray:
+                signed: bool, narrow: bool = False) -> np.ndarray:
     """The ``n`` values of integer RLE stream ``kind`` from its group run
     offset ``exs[kind][0]``; RLEv2 passes the runs before them by header
     arithmetic, RLEv1 decodes from the stream's start. With ``exs`` None
     (a whole-stripe read) the stream must hold exactly ``n`` values.
-    ``batch`` and ``narrow`` go to decode_rlev2 (``batch_values``)."""
+    ``narrow`` goes to decode_rlev2 (RLEv1 values are int64)."""
     if exs is None:
         return rle(buf, n, signed=signed)
     skip = exs[kind][0]
     if rle is not decode_rlev2:
         return rle(buf, skip + n, signed=signed, exact=False)[skip:]
-    return rle(buf, n, signed=signed, skip=skip, exact=False,
-               batch_values=batch, narrow=narrow)
+    return rle(buf, n, signed=signed, skip=skip, exact=False, narrow=narrow)
 
 
 def _byte_values(buf, exs: dict | None, kind: int, n: int, bits: bool) -> np.ndarray:
@@ -1594,74 +1583,67 @@ def _decimal_words(t: OrcType, data: bytes, scales: np.ndarray, n: int) -> np.nd
 
 
 def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
-                   sel: np.ndarray | None, piece: bool = False) -> tuple:
-    """One group's values of a scalar column of type ``t``: its first
-    ``n`` dense values, or with ``sel`` (sorted dense offsets, the last
-    ``n - 1``) only the values at ``sel``. ``read`` reads the group's
-    streams (_group_reader) and ``exs`` holds their run offsets, or is
-    None for a whole-stripe read, whose RLE, byte-RLE and boolean streams
-    must hold exactly ``n`` values. Returns
-    the parts _scalar_array joins: (ints,), (seconds, nanos), (floats,),
-    (dictionary indices,), (string bytes, lengths), (int8s or bools,) or
-    (i128 words,). ``piece`` (a group decoded whole for a _Piece)
-    decodes RLEv2 in one batch a group, and an integer, date or
-    dictionary column's DATA in the narrowest dtype its runs allow
-    (decode_rlev2's ``narrow``).
-
-    Integer streams are read whole, or at ``sel`` by decode_rlev2_points
-    (RLEv2) or a decode from the group's start through ``n`` (RLEv1).
-    Byte, boolean and decimal streams decode through ``n`` and take
-    ``sel``. Floats, doubles and direct strings and binaries read only the
-    byte window of ``sel``: 4 or 8 bytes per value, or the LENGTH prefix
-    sum (lengths decoded through ``n``)."""
+                   narrow: bool = False) -> tuple:
+    """One group's first ``n`` dense values of a scalar column of type
+    ``t``. ``read`` reads the group's streams (_group_reader) and ``exs``
+    holds their run offsets, or is None for a whole-stripe read, whose
+    RLE, byte-RLE and boolean streams must hold exactly ``n`` values.
+    Returns the parts _scalar_array joins: (ints,), (seconds, nanos),
+    (floats,), (dictionary indices,), (string bytes, lengths), (int8s or
+    bools,) or (i128 words,). Float, double and direct string DATA is read
+    only as far as the ``n`` values reach. With ``narrow`` an integer,
+    date or dictionary column's RLEv2 DATA comes in the narrowest dtype
+    its runs prove (decode_rlev2's ``narrow``)."""
     k = t.kind
     rle = _int_decoder(enc_kind)
 
-    def ints(kind: int, signed: bool, narrow: bool = piece) -> np.ndarray:
-        buf = read(kind)
-        if sel is None:
-            return _rle_values(rle, buf, exs, kind, n, signed,
-                               FILE_BATCH_VALUES if piece else DECODE_BATCH_VALUES,
-                               narrow)
-        if rle is decode_rlev2:
-            return decode_rlev2_points(buf, sel, signed, exs[kind][0])
-        return _rle_values(rle, buf, exs, kind, n, signed)[sel]
-
-    def pick(a: np.ndarray) -> np.ndarray:
-        return a if sel is None else a[sel]
+    def ints(kind: int, signed: bool, narrow: bool = False) -> np.ndarray:
+        return _rle_values(rle, read(kind), exs, kind, n, signed, narrow)
 
     if k in (K_SHORT, K_INT, K_LONG, K_DATE):
-        return (ints(S_DATA, True),)
+        return (ints(S_DATA, True, narrow),)
     if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
         # the seconds scale to microseconds in int64
-        return ints(S_DATA, True, False), ints(S_SECONDARY, False, False)
-    if k in (K_FLOAT, K_DOUBLE):
+        return ints(S_DATA, True), ints(S_SECONDARY, False)
+    if k in _FLOAT_KINDS:
         dtype = np.dtype(np.float32 if k == K_FLOAT else np.float64)
-        first = 0 if sel is None else int(sel[0])
-        w = dtype.itemsize
-        vals = decode_float(read(S_DATA, (first * w, n * w)), n - first, dtype)
-        return (vals if sel is None else vals[sel - first],)
+        return (decode_float(read(S_DATA, (0, n * dtype.itemsize)), n, dtype),)
     if k in _STRING_KINDS and enc_kind in (E_DICTIONARY, E_DICTIONARY_V2):
-        return (ints(S_DATA, False),)
+        return (ints(S_DATA, False, narrow),)
     if k in _STRING_KINDS:
-        lengths = _rle_values(rle, read(S_LENGTH), exs, S_LENGTH, n, False)
-        if sel is None:
-            return read(S_DATA, (0, int(lengths.sum()))), lengths
-        picked = lengths[sel]
-        starts = np.cumsum(lengths)[sel] - picked
-        lo = int(starts[0])
-        window = np.frombuffer(read(S_DATA, (lo, int(starts[-1] + picked[-1]))),
-                               dtype=np.uint8)
-        # byte j of picked value i sits at window[starts[i] - lo + j]
-        shift = starts - lo - (np.cumsum(picked) - picked)
-        at = np.arange(int(picked.sum())) + np.repeat(shift, picked)
-        return window[at].tobytes(), picked
+        lengths = ints(S_LENGTH, False)
+        return read(S_DATA, (0, int(lengths.sum()))), lengths
     if k in (K_BYTE, K_BOOLEAN):
-        return (pick(_byte_values(read(S_DATA), exs, S_DATA, n, k == K_BOOLEAN)),)
+        return (_byte_values(read(S_DATA), exs, S_DATA, n, k == K_BOOLEAN),)
     if k == K_DECIMAL:
-        scales = _rle_values(rle, read(S_SECONDARY), exs, S_SECONDARY, n, True)
-        return (pick(_decimal_words(t, read(S_DATA), scales, n)),)
+        scales = ints(S_SECONDARY, True)
+        return (_decimal_words(t, read(S_DATA), scales, n),)
     raise NotImplementedError(f"ORC type kind {k}")
+
+
+def _string_rows(ix: StripeIndex, streams: dict, col_id: int, g: int,
+                 sel: np.ndarray, offsets: "_Piece", blocks: dict) -> tuple:
+    """(bytes, lengths) of direct string or binary column ``col_id``'s
+    values at the sorted dense offsets ``sel`` of group ``g``, whose
+    values' byte offsets are the piece ``offsets``. DATA is read as the
+    byte window of the picked values alone: in a file of this engine's
+    writer (``StripeIndex.block_size``) decompressed from the block that
+    holds its first byte through the block that holds its last
+    (_group_bytes), in other files from the group's start. ``blocks``
+    caches the decompressed blocks."""
+    read = _group_reader(ix, streams, col_id, g, blocks, ix.block_size)
+    starts = offsets.at(sel)
+    # sel may be a PRESENT piece's int16 slots: the next offset in int64
+    picked = offsets.at(sel.astype(np.int64) + 1) - starts
+    lo, hi = int(starts[0]), int(starts[-1] + picked[-1])
+    if int(sel[-1]) - int(sel[0]) + 1 == sel.size:
+        # a run of values: their bytes are one window
+        return bytes(read(S_DATA, (lo, hi))), picked
+    window = np.frombuffer(read(S_DATA, (lo, hi)), dtype=np.uint8)
+    # byte j of picked value i sits at window[starts[i] - lo + j]
+    shift = starts - lo - (np.cumsum(picked) - picked)
+    at = np.arange(int(picked.sum())) + np.repeat(shift, picked)
+    return window[at].tobytes(), picked
 
 
 def _is_dict(ix: StripeIndex, col_id: int) -> bool:
@@ -1713,17 +1695,20 @@ def _values_array(ix: StripeIndex, col_id: int, vals: np.ndarray,
     return pa.array(vals, type=_K_TO_ARROW[k])
 
 
-def _scalar_array(ix: StripeIndex, streams: dict, col_id: int, parts: list,
+def _binary_array(ix: StripeIndex, col_id: int, data, lengths: np.ndarray) -> pa.Array:
+    """ONE Arrow array (no nulls) of direct string or binary column
+    ``col_id`` from its values' bytes and lengths."""
+    dense = _split_binary(data, lengths)
+    return dense if ix.types[col_id].kind == K_BINARY else dense.cast(pa.large_string())
+
+
+def _scalar_array(ix: StripeIndex, streams: dict, col_id: int, cols: tuple,
                   dict_cache: dict, unit: str = "us") -> pa.Array:
-    """ONE Arrow array of scalar column ``col_id`` from the per-group
-    _scalar_values ``parts``, in order (no nulls); timestamps in ``unit``."""
+    """ONE Arrow array of scalar column ``col_id`` from one group's
+    _scalar_values parts (no nulls); timestamps in ``unit``."""
     k = ix.types[col_id].kind
-    cols = [c[0] if len(c) == 1
-            else b"".join(c) if isinstance(c[0], bytes) else np.concatenate(c)
-            for c in zip(*parts)]
     if k in _STRING_KINDS and not _is_dict(ix, col_id):
-        dense = _split_binary(cols[0], cols[1])
-        return dense if k == K_BINARY else dense.cast(pa.large_string())
+        return _binary_array(ix, col_id, *cols)
     return _values_array(ix, col_id, _final_values(ix, col_id, cols, unit),
                          _dictionary(ix, streams, col_id, dict_cache)
                          if k in _STRING_KINDS else None, unit)
@@ -1750,9 +1735,9 @@ def _decode_column_group(
     Nested columns recurse: the parent derives each child's group value
     count (PRESENT for struct, LENGTH sums for list/map, tag counts for
     union) and the child seeks via its OWN row-index entry for the same
-    group. Scalar columns read through _scalar_values and _scalar_array,
-    which a point read of a few rows (_decode_column_rows) shares: each
-    ORC kind has one read rule there. Timestamps decode in ``unit``.
+    group. Scalar columns read through _scalar_values, which a point
+    read's whole-group pieces (_build_piece) share: each ORC kind has one
+    read rule there. Timestamps decode in ``unit``.
 
     ``block_cache`` keeps the decompressed blocks of one stripe decode:
     groups whose positions share a block — continuous streams whose block
@@ -1811,8 +1796,8 @@ def _decode_column_group(
             dense = pa.MapArray.from_arrays(offsets, child(t.subtypes[0], n_child, "key"),
                                             child(t.subtypes[1], n_child, "value"))
     else:
-        dense = _scalar_array(ix, streams, col_id, [_scalar_values(
-            t, ix.encodings[col_id][0], read, exs, n_dense, None)], dict_cache, unit)
+        dense = _scalar_array(ix, streams, col_id, _scalar_values(
+            t, ix.encodings[col_id][0], read, exs, n_dense), dict_cache, unit)
     return _respace(dense, not_null)
 
 
@@ -1833,9 +1818,10 @@ class _Piece:
     form serves every kind:
 
     - frame of reference (``base`` an int): a value is ``base + step *
-      values[i]`` (integers, dates, dictionary codes and timestamps as
-      their final int64 microseconds). ``values`` are the offsets from
-      the minimum in the narrowest unsigned dtype, or, where the group's
+      values[i]`` (integers, dates, dictionary codes, timestamps as their
+      final int64 microseconds, and a direct string or binary's n + 1
+      value byte offsets in DATA). ``values`` are the offsets from the
+      minimum in the narrowest unsigned dtype, or, where the group's
       RLEv2 runs prove its values fit 8, 16 or 32 bits, the values as
       decoded in that dtype with ``base`` 0 (decode_rlev2's ``narrow``).
       ``step`` is 1 unless offsets wider than 16 bits share a factor, as
@@ -1913,14 +1899,6 @@ def _for_piece(vals: np.ndarray, kind: str = "for") -> _Piece:
     return _Piece(off.astype(_narrowest(span)), base, step, kind=kind)
 
 
-def _has_pieces(ix: StripeIndex, col_id: int) -> bool:
-    """Does a pooled point read of column ``col_id`` go through _Pieces?
-    Every scalar column does but a direct string or binary, which reads
-    its rows' bytes alone."""
-    k = ix.types[col_id].kind
-    return k not in _NESTED_KINDS and (k not in _STRING_KINDS or _is_dict(ix, col_id))
-
-
 def _float_per(ix: StripeIndex, col_id: int) -> int:
     """Values per piece of a float or double column: a seek block's worth
     in a file with a seek block size (StripeIndex.block_size), else 0 (one
@@ -1943,15 +1921,18 @@ def _split_pieces(sel: np.ndarray, per: int) -> list[tuple[int, np.ndarray]]:
 
 
 def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
-                 present: _Piece | None, blocks: dict) -> _Piece | None:
+                 present: _Piece | None) -> _Piece | None:
     """Piece ``j`` of group ``g`` of column ``col_id`` (_PRESENT: its
-    PRESENT map), decoded whole from ``streams`` through ``blocks``, a
-    per-call cache: the pieces stand in for their blocks. A float or
-    double column's piece ``j`` holds the group's j-th ``_float_per``
-    values, so a miss decompresses only the blocks that hold them; its
-    values are kept as exact scaled integers (encode_scaled, trying the
-    exponent of the column's last scaled piece first) or, failing that,
-    as they are. ``present`` is the group's PRESENT piece, or None.
+    PRESENT map), decoded whole from ``streams``. Its blocks are not
+    cached: the piece stands in for them. A float or double column's
+    piece ``j`` holds the group's j-th ``_float_per`` values, so a miss
+    decompresses only the blocks that hold them; its values are kept as
+    exact scaled integers (encode_scaled, trying the exponent of the
+    column's last scaled piece first) or, failing that, as they are. A
+    direct string or binary column's piece holds its values' byte
+    offsets in DATA (the n + 1 of an Arrow offsets buffer) as a frame of
+    reference; their bytes are read from the blocks. ``present`` is the
+    group's PRESENT piece, or None.
 
     None for a timestamp group whose values do not all convert (a
     sub-microsecond one, or one out of the writer zone's range): its
@@ -1959,7 +1940,7 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
     t = ix.types[col_id]
     k = t.kind
     exs = {kind: at[2] for kind, at in ix.positions(col_id, g).items()}
-    read = _group_reader(ix, streams, col_id, g, blocks, ix.block_size)
+    read = _group_reader(ix, streams, col_id, g, {}, ix.block_size)
     n = ix.group_rows(g)
     if j == _PRESENT:
         not_null = _byte_values(read(S_PRESENT), exs, S_PRESENT, n, bits=True)
@@ -1979,15 +1960,14 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
             return _Piece(dense)
         ix.scales[col_id] = scaled[1]
         return _Piece(scaled[0], 0, scale=scaled[1], kind="scaled")
-    parts = _scalar_values(t, ix.encodings[col_id][0], read, exs, n, None, piece=True)
+    if k in _STRING_KINDS and not _is_dict(ix, col_id):
+        lengths = _rle_values(_int_decoder(ix.encodings[col_id][0]), read(S_LENGTH),
+                              exs, S_LENGTH, n, False)
+        offsets = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(lengths, out=offsets[1:])
+        return _for_piece(offsets)
+    parts = _scalar_values(t, ix.encodings[col_id][0], read, exs, n, narrow=True)
     if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        if ((k == K_TIMESTAMP_INSTANT or ix.tz in _UTC_ZONES)
-                and not np.count_nonzero(parts[1])):
-            # whole seconds in UTC (_ts_us's value): a frame of reference
-            # of the seconds, scaled to microseconds
-            secs = _for_piece(parts[0])
-            return _Piece(secs.values, (secs.base + ORC_EPOCH_UTC_SECONDS) * 1_000_000,
-                          secs.step * 1_000_000, kind="for")
         try:
             return _for_piece(_ts_us(parts[0], parts[1], ix.tz, k))
         except ValueError:
@@ -1996,34 +1976,37 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
         return _Piece(_final_values(ix, col_id, parts))
     kind = "codes" if k in _STRING_KINDS else "for"
     if parts[0].dtype != np.int64:
-        # decoded in the narrowest dtype its runs allow: the offsets of 0
+        # decoded in the narrowest dtype its runs prove: offsets from 0
         return _Piece(parts[0], 0, kind=kind)
     return _for_piece(parts[0], kind)
 
 
 def _piece(ix: StripeIndex, streams: dict | None, col_id: int, g: int, j: int,
-           present: _Piece | None, pieces, blocks: dict) -> _Piece | None:
+           present: _Piece | None, pieces) -> _Piece | None:
     """Piece ``j`` of group ``g`` of column ``col_id`` from ``pieces`` (a
-    DataPool view), built and filed there on a miss when ``streams``
-    holds the group's bytes; None on a miss without them, or where
-    _build_piece gives none."""
+    DataPool view, or a plain dict for a read without a pool), built and
+    filed there on a miss when ``streams`` holds the group's bytes; None
+    on a miss without them, or where _build_piece gives none."""
     p = pieces.get((col_id, g, j))
     if p is None and streams is not None:
-        p = _build_piece(ix, streams, col_id, g, j, present, blocks)
+        p = _build_piece(ix, streams, col_id, g, j, present)
         if p is not None:
             pieces[(col_id, g, j)] = p
     return p
 
 
-def _piece_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
+def _group_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
                 rows: np.ndarray, pieces, blocks: dict) -> tuple | None:
-    """(validity of ``rows`` or None, the values at its non-null rows or
-    None when all are null) of group ``g``, from the group's pieces
-    (_piece). None when a piece is missed and ``streams`` is None."""
+    """(validity of ``rows`` or None, their non-null values or None when
+    all are null) of group ``g`` of scalar column ``col_id``: a gather
+    from the group's pieces (_piece), or for a direct string or binary
+    (bytes, lengths) of its rows alone (_string_rows, through ``blocks``).
+    None when a piece is missed, or a direct string's bytes are wanted,
+    and ``streams`` is None."""
     t = ix.types[col_id]
     present, valid, sel = None, None, rows
     if (col_id, S_PRESENT) in ix.offsets:
-        present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces, blocks)
+        present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces)
         if present is None:
             return None
         slots = present.values[rows]
@@ -2031,9 +2014,14 @@ def _piece_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
         sel = slots[valid]
         if not sel.size:
             return valid, None
+    if t.kind in _STRING_KINDS and not _is_dict(ix, col_id):
+        if streams is None:
+            return None
+        offsets = _piece(ix, streams, col_id, g, 0, present, pieces)
+        return valid, _string_rows(ix, streams, col_id, g, sel, offsets, blocks)
     out = []
     for j, at in _split_pieces(sel, _float_per(ix, col_id) if t.kind in _FLOAT_KINDS else 0):
-        p = _piece(ix, streams, col_id, g, j, present, pieces, blocks)
+        p = _piece(ix, streams, col_id, g, j, present, pieces)
         if p is None:
             if streams is None:
                 return None
@@ -2041,25 +2029,50 @@ def _piece_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
             # piece a group that _build_piece may refuse): its rows alone
             exs = {kind: pos[2] for kind, pos in ix.positions(col_id, g).items()}
             parts = _scalar_values(t, ix.encodings[col_id][0],
-                                   _group_reader(ix, streams, col_id, g, blocks),
-                                   exs, int(sel[-1]) + 1, sel)
-            return valid, _final_values(ix, col_id, parts)
+                                   _group_reader(ix, streams, col_id, g, {}),
+                                   exs, int(sel[-1]) + 1)
+            return valid, _final_values(ix, col_id, [c[sel] for c in parts])
         out.append(p.at(at))
     return valid, out[0] if len(out) == 1 else np.concatenate(out)
 
 
-def _pooled_rows(ix: StripeIndex, streams: dict | None, col_id: int, hits: dict,
-                 dict_cache, pieces, blocks: dict) -> pa.Array | list[int]:
-    """A point read of column ``col_id`` (_has_pieces) at the rows
-    ``hits`` picks, from its DataPool pieces: each hit group's values by
-    one NumPy gather from its piece (_Piece.at) and ONE Arrow array over
-    them, with no Arrow cast or concat per group. A missed piece is
-    decoded whole from ``streams`` and pooled (_build_piece). With
-    ``streams`` None nothing is built: -> the hit groups whose pieces are
-    missed instead, empty when only the dictionary is."""
+def _decode_column_rows(
+    ix: StripeIndex, streams: dict | None, col_id: int, hits: dict, name: str,
+    dict_cache: dict, block_cache: dict, pieces=None,
+) -> pa.Array | list[int]:
+    """A point read of one column: its values at the rows ``hits`` picks
+    ({group: sorted group-local rows}, groups ascending), as ONE Arrow
+    array of _decode_column_group's type.
+
+    A scalar column is read from ``pieces`` (_Piece; the DataPool view of
+    a cached reader's stripe read, or a dict for a read without a pool,
+    by default this call's own): the first touch of a group decodes its
+    piece whole (a frame of reference, dictionary codes, scaled doubles
+    or dense values, plus the PRESENT map), and every later read of the
+    group is one NumPy gather. A direct string or binary's piece holds
+    its values' byte offsets, and its rows' bytes are read alone
+    (_string_rows, through ``block_cache``). ONE Arrow array is built
+    over the hit groups, with no Arrow cast or concat per group. Nested
+    and union columns decode each hit group whole and take the rows.
+
+    ``streams`` None asks ``pieces`` and ``dict_cache`` alone: -> the hit
+    groups whose bytes the read needs instead of the array (every hit
+    group for a nested, direct string or binary column), empty when only
+    the dictionary is missed."""
+    _trace_decode(name)
+    if pieces is None:
+        pieces = {}
+    if ix.types[col_id].kind in _NESTED_KINDS:
+        if streams is None:
+            return list(hits)
+        parts = [_decode_column_group(ix, streams, col_id, g, ix.group_rows(g), name,
+                                      dict_cache, block_cache).take(
+                     pa.array(rows, type=pa.int64()))
+                 for g, rows in hits.items()]
+        return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
     missing, valids, vals = [], [], []
     for g, rows in hits.items():
-        got = _piece_rows(ix, streams, col_id, g, rows, pieces, blocks)
+        got = _group_rows(ix, streams, col_id, g, rows, pieces, block_cache)
         if got is None:
             missing.append(g)
             continue
@@ -2080,92 +2093,34 @@ def _pooled_rows(ix: StripeIndex, streams: dict | None, col_id: int, hits: dict,
     if not vals:
         # every picked row is null
         return pa.nulls(len(valid), _arrow_type_of(ix.types, col_id))
-    dense = _values_array(ix, col_id, vals[0] if len(vals) == 1 else np.concatenate(vals),
-                          dictionary)
+    if ix.types[col_id].kind in _STRING_KINDS and not _is_dict(ix, col_id):
+        dense = _binary_array(ix, col_id, b"".join(v[0] for v in vals),
+                              np.concatenate([v[1] for v in vals]))
+    else:
+        dense = _values_array(ix, col_id, vals[0] if len(vals) == 1 else np.concatenate(vals),
+                              dictionary)
     return _respace(dense, valid)
 
 
-def _decode_column_rows(
-    ix: StripeIndex, streams: dict | None, col_id: int, hits: dict, name: str,
-    dict_cache: dict, block_cache: dict, pieces=None,
-) -> pa.Array | list[int]:
-    """A point read of one column: its values at the rows ``hits`` picks
-    ({group: sorted group-local rows}, groups ascending), as ONE Arrow
-    array of _decode_column_group's type.
-
-    With ``pieces`` (the DataPool view of a cached reader's stripe read)
-    a scalar column other than a direct string or binary is read from
-    its pooled pieces (_pooled_rows): the first touch of a group decodes
-    its piece whole (_Piece: a frame of reference, dictionary codes,
-    scaled doubles or dense values, plus the PRESENT map), and every
-    later read of the group is one gather. ``streams`` None asks the
-    pool alone: -> the hit groups whose bytes the read needs instead of
-    the array (every hit group for a column without pieces).
-
-    Otherwise each hit group's PRESENT is decoded through its last picked
-    row and maps the rows to dense offsets once; _scalar_values reads the
-    group's values at those offsets (an RLEv2 stream by one walk over its
-    run headers, decode_rlev2_points) and _scalar_array joins the groups,
-    indexing a dictionary once. In a file of this engine's writer
-    (``StripeIndex.block_size``) a float or direct string DATA stream is
-    decompressed only from the block that holds the picked values' first
-    byte through the block that holds their last (_group_bytes); in other
-    files from the group's start. Nested and union columns decode each
-    hit group whole and take the rows."""
-    t = ix.types[col_id]
-    _trace_decode(name)
-    if pieces is not None and _has_pieces(ix, col_id):
-        return _pooled_rows(ix, streams, col_id, hits, dict_cache, pieces, {})
-    if streams is None:
-        return list(hits)
-    if t.kind in _NESTED_KINDS:
-        parts = [_decode_column_group(ix, streams, col_id, g, ix.group_rows(g), name,
-                                      dict_cache, block_cache).take(
-                     pa.array(rows, type=pa.int64()))
-                 for g, rows in hits.items()]
-        return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
-    has_present = (col_id, S_PRESENT) in ix.offsets
-    enc_kind = ix.encodings[col_id][0]
-    parts, valids = [], []
-    for g, rows in hits.items():
-        exs = {kind: at[2] for kind, at in ix.positions(col_id, g).items()}
-        read = _group_reader(ix, streams, col_id, g, block_cache, ix.block_size)
-        sel = rows
-        if has_present:
-            not_null = _byte_values(read(S_PRESENT), exs, S_PRESENT,
-                                    int(rows[-1]) + 1, bits=True)
-            valid = not_null[rows]
-            valids.append(valid)
-            sel = (np.cumsum(not_null) - 1)[rows][valid]
-            if not sel.size:
-                continue
-        parts.append(_scalar_values(t, enc_kind, read, exs, int(sel[-1]) + 1, sel))
-    valid = np.concatenate(valids) if has_present else None
-    if not parts:
-        # every picked row is null
-        return pa.nulls(len(valid), _arrow_type_of(ix.types, col_id))
-    return _respace(_scalar_array(ix, streams, col_id, parts, dict_cache), valid)
-
-
 def _key_mask(ix: StripeIndex, streams: dict | None, col_id: int, g: int, eq,
-              dict_cache, pieces, blocks: dict) -> np.ndarray | list[int]:
-    """Which rows of group ``g`` of the probed column ``col_id``
-    (_has_pieces) equal ``eq``, as _eq_mask finds them, from the group's
-    pieces: an integer probe of an integer column is compared with the
-    piece's offsets in place (_Piece.equals), a dictionary column's
-    probe with the dictionary and then looked up by code, any other
-    probe with the group read as an Arrow array. A null row never
-    matches. With ``streams`` None a missed piece is not built: -> the
-    groups to fetch, as _pooled_rows."""
+              name: str, dict_cache, block_cache: dict, pieces) -> np.ndarray | list[int]:
+    """Which rows of group ``g`` of the probed column ``col_id`` equal
+    ``eq``, as _eq_mask finds them. An integer probe of an integer column
+    is compared with the group's piece offsets in place (_Piece.equals),
+    a dictionary column's probe with the dictionary and then looked up by
+    code; any other probe with the group read as an Arrow array
+    (_decode_column_rows). A null row never matches. With ``streams``
+    None nothing is read: -> the groups to fetch, as
+    _decode_column_rows."""
     t = ix.types[col_id]
     is_dict = _is_dict(ix, col_id)
     if is_dict or (type(eq) is int and t.kind in _INT_KINDS):
         present = None
         if (col_id, S_PRESENT) in ix.offsets:
-            present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces, blocks)
+            present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces)
             if present is None:
                 return [g]
-        piece = _piece(ix, streams, col_id, g, 0, present, pieces, blocks)
+        piece = _piece(ix, streams, col_id, g, 0, present, pieces)
         if piece is None:
             return [g]
         dense = None
@@ -2184,8 +2139,8 @@ def _key_mask(ix: StripeIndex, streams: dict | None, col_id: int, g: int, eq,
             mask = np.zeros(ix.group_rows(g), dtype=bool)
             mask[present.values >= 0] = dense
             return mask
-    arr = _pooled_rows(ix, streams, col_id, {g: np.arange(ix.group_rows(g))},
-                       dict_cache, pieces, blocks)
+    arr = _decode_column_rows(ix, streams, col_id, {g: np.arange(ix.group_rows(g))},
+                              name, dict_cache, block_cache, pieces)
     return arr if isinstance(arr, list) else _eq_mask(arr, eq)
 
 
@@ -2501,33 +2456,27 @@ def _decode_stripe_pruned_impl(
 
     ``residual=True`` (one ``eq`` value on ``column``, which must be
     projected) also applies that probe exactly, as the late-materialized
-    read of a point lookup: the kept groups' ``column`` is decoded first,
-    ``pc.equal`` picks its matching rows (an incomparable probe matches
-    none), and each other projected column is read at those rows only,
-    over all the hit groups at once (_decode_column_rows). The table then
-    holds just the
-    matching rows; ``groups_decoded`` still counts the groups kept by
-    pruning.
+    read of a point lookup: the kept groups' ``column`` is compared first
+    (_key_mask; an incomparable probe matches none), and each projected
+    column is read at the matching rows only, over all the hit groups at
+    once (_decode_column_rows). The table then holds just the matching
+    rows; ``groups_decoded`` still counts the groups kept by pruning.
 
     The seek path reads only the stream byte ranges it decodes
     (StripeIndex.ranges through ``fetch``; slices of ``buf`` when no
     ``fetch`` is given): the kept groups of every projected column, or
     under ``residual`` the key column's kept groups and then the other
-    columns' groups that hold a match.
+    columns' groups that hold a match, no stream range twice.
 
-    An ``index`` of a cached OrcReader (``index.owner``) keeps what the
-    seek path decodes in the process's DataPool: string dictionaries,
-    decompressed blocks and, under ``residual``, each scalar column's
-    hit groups as _Pieces, the key column's included. The residual read
-    asks the pool first: the key is compared on its pooled pieces
-    (_key_mask) and every column the pool holds is gathered from it
-    (_decode_column_rows without streams), so a stripe whose wanted
-    pieces are all pooled calls neither StripeIndex.ranges nor
-    ``fetch``. Only the groups whose pieces it misses (and direct string
-    and nested columns) are fetched, in one read per phase, and their
-    pieces are decoded whole and pooled; the blocks they were decoded
-    from stay in a per-call cache, since the pieces stand in for them. A
-    stripe whose key groups are all missed skips the asking.
+    Under ``residual`` each scalar column's hit groups are decoded whole
+    into _Pieces, the key column's included, and its rows gathered from
+    them. An ``index`` of a cached OrcReader (``index.owner``) keeps the
+    pieces, string dictionaries and the decompressed blocks of direct
+    strings and nested columns in the process's DataPool; a read without
+    one keeps them for the call. Each phase asks those first (the
+    streams-less _key_mask and _decode_column_rows) and fetches, in one
+    read, only what they miss, so a stripe whose wanted pieces are all
+    pooled calls neither StripeIndex.ranges nor ``fetch``.
 
     -> (table of kept groups' rows, groups_decoded, groups_total).
     Without ``residual`` the caller applies the residual filter. Falls
@@ -2615,53 +2564,47 @@ def _decode_stripe_pruned_impl(
 
     read = None if ix.owner is None else _PoolRead(ix.owner)
     if read is None:
-        dict_cache, block_cache, pieces = {}, {}, None
+        dict_cache, block_cache, pieces = {}, {}, {}
     else:
         dict_cache = read.view(("dict",), _array_bytes)
         block_cache = read.view(("block",), _block_bytes)
         pieces = read.view(("piece",), _piece_bytes)
     streams: dict[tuple[int, int], _StreamBytes] = {}
-
-    def group(cid: int, name: str, g: int, blocks=block_cache) -> pa.Array:
-        return _decode_column_group(ix, streams, cid, g, ix.group_rows(g), name,
-                                    dict_cache, blocks)
+    fetched: dict[int, set[int]] = {}
 
     def fetch_groups(want: dict) -> None:
-        """Read {column: its groups} of the stream bytes (and dictionaries)."""
+        """Read {column: its groups} of the stream bytes (and dictionaries)
+        that this read has not read yet."""
         ranges: dict = {}
         for cid, groups in want.items():
-            ranges.update(ix.ranges([cid], groups))
-        streams.update(_fetch_streams(ix, ranges, fetch))
+            done = fetched.get(cid)
+            new = [g for g in groups if done is None or g not in done]
+            if done is None or new:
+                ranges.update(ix.ranges([cid], new))
+                fetched.setdefault(cid, set()).update(new)
+        if not ranges:
+            return
+        for key, got in _fetch_streams(ix, ranges, fetch).items():
+            if key in streams:
+                streams[key].parts += got.parts
+            else:
+                streams[key] = got
 
     try:
         if residual:
-            # late materialization: the probed column first, then every other
-            # projected column at the matching rows of each kept group only;
-            # each phase reads just the byte ranges it decodes, and a pooled
-            # read only those of the pieces it misses
+            # late materialization: the probed column first, then every
+            # projected column at the matching rows of each kept group only.
+            # Each phase asks the pool first and then reads, in one fetch,
+            # just the byte ranges of what it missed
             key_id = proj_ids[proj.index(column)]
-            # a miss's blocks: what the pool keeps is decoded from them
-            key_blocks: dict[tuple, tuple] = {}
-            cols: dict[str, list] = {}
-            if pieces is not None and _has_pieces(ix, key_id):
-                masks = {g: _key_mask(ix, None, key_id, g, eq, dict_cache, pieces,
-                                      key_blocks) for g in keep}
-                missing = {g for g, m in masks.items() if isinstance(m, list)}
-                if missing:
-                    fetch_groups({key_id: sorted(
-                        {h for g in missing for h in masks[g]})})
-                    for g in missing:
-                        masks[g] = _key_mask(ix, streams, key_id, g, eq, dict_cache,
-                                             pieces, key_blocks)
-            else:
-                pooled = {} if read is None else read.view(("key", key_id), _array_bytes)
-                key_groups = {g: pooled.get(g) for g in keep}
-                missing = [g for g, keys in key_groups.items() if keys is None]
-                if missing:
-                    fetch_groups({key_id: missing})
-                for g in missing:
-                    key_groups[g] = pooled[g] = group(key_id, column, g, key_blocks)
-                masks = {g: _eq_mask(keys, eq) for g, keys in key_groups.items()}
+            masks = {g: _key_mask(ix, None, key_id, g, eq, column, dict_cache,
+                                  block_cache, pieces) for g in keep}
+            missed = [m for m in masks.values() if isinstance(m, list)]
+            if missed:
+                fetch_groups({key_id: sorted({h for m in missed for h in m})})
+                masks = {g: _key_mask(ix, streams, key_id, g, eq, column, dict_cache,
+                                      block_cache, pieces) if isinstance(m, list) else m
+                         for g, m in masks.items()}
             hits: dict[int, np.ndarray] = {}
             for g in keep:
                 mask = masks[g]
@@ -2672,45 +2615,33 @@ def _decode_stripe_pruned_impl(
                     hits[g] = rows
             if not hits:
                 return _empty_table(meta, columns), len(keep), n_groups
-            if pieces is None or not _has_pieces(ix, key_id):
-                cols[column] = [key_groups[g].take(pa.array(rows, type=pa.int64()))
-                                for g, rows in hits.items()]
-            # every column the pool holds is read from it; the others, and
-            # the pieces it misses, are read after one fetch of their bytes.
-            # A stripe whose key groups were all missed is taken as cold:
-            # its columns are not looked up in the pool first
-            cold = pieces is None or len(missing) == len(keep)
+            cols: dict[str, pa.Array] = {}
             need: dict[int, tuple[str, list]] = {}
             for cid, name in zip(proj_ids, proj):
-                if name in cols:
-                    continue
-                got = list(hits) if cold and cid != key_id else _decode_column_rows(
-                    ix, None, cid, hits, name, dict_cache, block_cache, pieces)
+                got = _decode_column_rows(ix, None, cid, hits, name, dict_cache,
+                                          block_cache, pieces)
                 if isinstance(got, list):
                     need[cid] = (name, got)
                 else:
-                    cols[name] = [got]
+                    cols[name] = got
             if need:
                 fetch_groups({cid: groups for cid, (_, groups) in need.items()})
                 for cid, (name, _) in need.items():
-                    cols[name] = [_decode_column_rows(ix, streams, cid, hits, name,
-                                                      dict_cache, block_cache, pieces)]
-        else:
-            streams.update(_fetch_streams(ix, ix.ranges(proj_ids, keep), fetch))
-            cols = {name: [group(cid, name, g) for g in keep]
-                    for cid, name in zip(proj_ids, proj)}
+                    cols[name] = _decode_column_rows(ix, streams, cid, hits, name,
+                                                     dict_cache, block_cache, pieces)
+            return pa.table({name: cols[name] for name in proj}), len(keep), n_groups
+        streams.update(_fetch_streams(ix, ix.ranges(proj_ids, keep), fetch))
         if not proj:
             # empty projection: the result still carries the kept rows
             # (count(*) semantics — code-review r6)
             kept_rows = sum(min(stride, n_rows - g * stride) for g in keep)
             return _slice_exact(_rows_only_table(kept_rows), keep), len(keep), n_groups
         out = {}
-        for name in proj:
-            parts = cols[name]
+        for cid, name in zip(proj_ids, proj):
+            parts = [_decode_column_group(ix, streams, cid, g, ix.group_rows(g), name,
+                                          dict_cache, block_cache) for g in keep]
             out[name] = parts[0] if len(parts) == 1 else pa.concat_arrays(
                 [p.cast(parts[0].type) for p in parts])
-        if residual:
-            return pa.table(out), len(keep), n_groups
         return _slice_exact(pa.table(out), keep), len(keep), n_groups
     finally:
         if read is not None:
@@ -4408,18 +4339,17 @@ class DataPool:
 
     - ("piece", (column, group, j)): a _Piece, one row group's values of
       a scalar column decoded whole (_build_piece). Integers, dates,
-      timestamps and dictionary codes are frames of reference (a base and
-      the narrowest unsigned offsets), decimal-like doubles exact scaled
-      integers (float_plain.encode_scaled), and booleans, bytes, decimals
-      and other floats dense values; j is _PRESENT for the group's
+      timestamps, dictionary codes and a direct string's value byte
+      offsets are frames of reference (a base and the narrowest unsigned
+      offsets, or narrow values as decoded), decimal-like doubles exact
+      scaled integers (float_plain.encode_scaled), and booleans, bytes,
+      decimals and other floats dense values; j is _PRESENT for the group's
       PRESENT map, and a float or double group has a piece per seek
       block's worth of values (_float_per). The key column's groups are
       pieces too.
     - ("dict", column): a string dictionary in its Arrow type.
     - ("block", ((column, stream kind), block offset)): a decompressed
       block of a direct string or binary, or of a nested column.
-    - ("key", column, group): a decoded group of a probed column without
-      pieces (a direct string, say).
 
     So a warm lookup gathers each column's rows from its pieces: on
     ``orc_lookup`` the pool holds 2.4 MB, and no block.
@@ -4519,9 +4449,8 @@ class _PoolRead:
 
 class _Pooled:
     """The dict-like cache a stripe read passes (a _block_at ``cache``,
-    a ``dict_cache``, the pieces, the key phase's groups) over its
-    _PoolRead's entries under ``prefix``; ``size`` gives a value's
-    bytes."""
+    a ``dict_cache``, the pieces) over its _PoolRead's entries under
+    ``prefix``; ``size`` gives a value's bytes."""
 
     __slots__ = ("read", "prefix", "size")
 
@@ -4651,8 +4580,9 @@ def orc_point_lookup(path: str, column: str, value,
     process's DataPool, ``POOL_BYTES`` in all over every cached file (an
     LRU; ``pool_stats()`` reports it). The first lookup that touches a
     row group decodes each scalar column's piece of it whole and pools
-    it (_Piece: integers, dates, timestamps and dictionary codes as a
-    frame of reference in the narrowest dtype, decimal-like doubles as
+    it (_Piece: integers, dates, timestamps, dictionary codes and direct
+    strings' value byte offsets as a frame of reference in the narrowest
+    dtype, decimal-like doubles as
     exact scaled integers, booleans, bytes, decimals and other floats
     dense, and each group's PRESENT map); string dictionaries and the
     blocks of direct strings and nested columns are pooled too. A later
@@ -4667,22 +4597,21 @@ def orc_point_lookup(path: str, column: str, value,
     hashes) and each kept stripe's groups are bit-tested in one
     vectorized step. Each kept stripe is then read in two phases on one
     code path (decode_stripe_pruned with ``residual=True``): the kept
-    groups' ``column`` alone is decoded and compared with ``value`` (a
-    probe whose type cannot be compared with the column matches nothing),
-    then each other column is read at the matching rows only, once over
-    all the hit groups, as one Arrow array per column
-    (_decode_column_rows): from the pooled pieces, or for a direct
-    string or binary at its rows' bytes alone. Each phase reads just the
-    byte ranges of the streams it decodes, coalesced where they touch,
-    through this call's handle; a stream is decompressed only over the
-    blocks that hold the kept groups (_group_bytes). A float or direct
+    groups' ``column`` alone is compared with ``value`` (a probe whose
+    type cannot be compared with the column matches nothing), then each
+    column is read at the matching rows only, once over all the hit
+    groups, as one Arrow array per column (_decode_column_rows): from
+    the pieces, a direct string or binary's rows' bytes read alone.
+    Each phase reads just the byte ranges of the streams it decodes,
+    coalesced where they touch, through this call's handle; a stream is
+    decompressed only over the blocks that hold the kept groups
+    (_group_bytes). A float or direct
     string/binary DATA stream of a file that this engine wrote (its
     Footer softwareVersion) is decompressed only over the blocks that
     hold the wanted values' bytes, found by block arithmetic from the
     PostScript's compressionBlockSize. A reader that is not cached (a
-    filesystem without mtimes) reads each column at the matching rows
-    alone: an RLEv2 stream by one walk over its run headers
-    (decode_rlev2_points)."""
+    filesystem without mtimes) reads the same way, keeping its pieces
+    for the call only."""
     import datetime as _dt
     import decimal as _decimal
 

@@ -2030,9 +2030,8 @@ def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeyp
     """Pins the saving of the two-phase lookup on a zstd file from our
     writer: the compressed bytes decompressed stay within the kept groups'
     blocks plus the index streams, the dictionary and the footers. A read
-    without the pool RLE-decodes the non-key columns at the matching row
-    only; a cached reader's lookup decodes each non-key RLEv2 stream of
-    the hit group once, whole, into the pool's pieces."""
+    without the pool and a cached reader's lookup alike decode each
+    non-key RLEv2 stream of the hit group once, whole, into pieces."""
     from orc_rust_spark.codecs import block as blockc
     from orc_rust_spark.sources import orc_file as of
 
@@ -2089,9 +2088,8 @@ def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeyp
         allowed += sum(starts[g + 1] - starts[g] for g in want_groups)
     assert allowed < st.data_length / 3  # the bound has teeth
 
-    comp_in, rle_ns, point_ns = [], [], []
+    comp_in, rle_ns = [], []
     real_decompress, real_rle = blockc.decompress_stream, of.decode_rlev2
-    real_points = of.decode_rlev2_points
 
     def counting_decompress(buf, codec="zlib"):
         comp_in.append(len(buf))
@@ -2101,44 +2099,32 @@ def test_point_lookup_reads_only_kept_groups_and_matching_rows(tmp_path, monkeyp
         rle_ns.append(n)
         return real_rle(buf, n, *args, **kwargs)
 
-    def counting_points(buf, sel, *args, **kwargs):
-        point_ns.append(len(sel))
-        return real_points(buf, sel, *args, **kwargs)
-
     monkeypatch.setattr(blockc, "decompress_stream", counting_decompress)
     monkeypatch.setattr(of, "decode_rlev2", counting_rle)
-    monkeypatch.setattr(of, "decode_rlev2_points", counting_points)
     with open(path, "rb") as fh:
         # the same read on a reader that is not cached: no pool
         unpooled = of.decode_stripe_pruned(
             None, None, meta, st.number_of_rows, "key", eq=probe, residual=True,
             index=of.OrcReader(meta).stripe(0, fh), fetch=of._span_reader(fh, st.offset))
-    reads = {"unpooled": (comp_in[:], rle_ns[:], point_ns[:])}
-    del comp_in[:], rle_ns[:], point_ns[:]
+    reads = {"unpooled": (comp_in[:], rle_ns[:])}
+    del comp_in[:], rle_ns[:]
     of.forget_reader(path)
     got, decoded, total = of.orc_point_lookup(path, "key", probe)
-    reads["pooled"] = (comp_in, rle_ns, point_ns)
+    reads["pooled"] = (comp_in, rle_ns)
     monkeypatch.undo()
 
     _same_rows(unpooled[0], tbl.slice(row, 1))
     _same_rows(got, tbl.slice(row, 1))
     assert decoded == unpooled[1] == len(want_groups) and total == n // stride
     n_dict = len(set(tbl.column("cat").to_pylist()))
-    # both: txt decodes its lengths through the matching row, cat its
-    # dictionary lengths, and the key column its kept group
-    want_ns = [row % stride + 1, n_dict, stride]
-    for how, (comp, rles, points) in reads.items():
+    # cat decodes its dictionary lengths, and the key column its kept
+    # group; the RLEv2 streams outside the key column (a, b, ts seconds
+    # and nanos, cat indices, txt lengths) decode once each, the whole hit
+    # group, pooled or not
+    want_ns = [n_dict, stride] + [stride] * 6
+    for how, (comp, rles) in reads.items():
         assert sum(comp) <= allowed, (how, sum(comp), allowed)
-        if how == "unpooled":
-            # RLEv2 streams outside the key column: a, b, ts (seconds and
-            # nanos) and cat (indices) are read at the matching row alone
-            # by the point walker
-            assert points == [1] * 5, points
-            assert sorted(rles) == sorted(want_ns), rles
-        else:
-            # the same five streams decode once each, the whole group
-            assert points == [], points
-            assert sorted(rles) == sorted(want_ns + [stride] * 5), rles
+        assert sorted(rles) == sorted(want_ns), (how, rles)
 
 
 def test_liborc_integer_bloom_keeps_zero_negative_and_wide_keys(tmp_path):

@@ -1,8 +1,8 @@
 """Point lookups read the non-key columns at the matching rows only
 (sources/orc_file.py:_decode_column_rows): PRESENT maps the rows to dense
-offsets once per group, RLEv2 streams are read by one walk over their run
-headers, raw streams by their byte windows, and each column becomes one
-Arrow array. Every scalar kind, with and without nulls, must come back as
+offsets once per group, a scalar column is gathered from its hit groups
+decoded whole (pieces), a direct string by its byte windows, and each
+column becomes one Arrow array. Every scalar kind, with and without nulls, must come back as
 a filter of the source table and as a whole-group decode of the hit
 groups followed by a take, on this engine's files (4 KiB blocks, so a
 1,000-row group spans several) and on pyarrow's, under none, zlib and
@@ -855,3 +855,41 @@ def test_mixed_type_set_probe_keeps_and_matches_nothing(table, tmp_path):
     _same(got[0][0], got[1][0])
     assert 10 in got[0][0].column("k").to_pylist()
     assert got[2][1] < N // STRIDE  # a set of comparable values still prunes
+
+
+def test_lookup_fetches_no_stream_range_twice(pool, table, tmp_path, monkeypatch):
+    """A direct string key has no piece, so both phases of a lookup read
+    its group's bytes: the second reuses what the first fetched, cold and
+    warm, and every other stream range is fetched once as well."""
+    path = str(tmp_path / "text.orc")
+    _ours(table, path, "zstd")
+    wanted = []
+    real = of._fetch_streams
+
+    def recording(ix, want, fetch):
+        wanted.append(want)
+        return real(ix, want, fetch)
+
+    monkeypatch.setattr(of, "_fetch_streams", recording)
+    value = table.column("text")[1_501].as_py()
+    for _ in range(2):
+        del wanted[:]
+        got = of.orc_point_lookup(path, "text", value)[0]
+        _same(got, table.filter(pc.equal(table.column("text"), value)))
+        ranges = [(key, r) for want in wanted for key, rs in want.items() for r in rs]
+        assert wanted and len(ranges) == len(set(ranges))
+
+
+def test_direct_string_at_the_last_slot_of_a_full_group(pool, tmp_path):
+    """A group of 2**15 rows with no null in a column whose PRESENT stream
+    exists (the next group has one) maps its last row to dense slot
+    32,767: that row's string reads exact, cold and warm."""
+    n = 1 << 15
+    text = [f"row-{i}" for i in range(2 * n)]
+    text[n + 5] = None
+    tbl = pa.table({"k": pa.array(np.arange(2 * n)), "text": pa.array(text)})
+    path = str(tmp_path / "full.orc")
+    of.write_orc(tbl, path, compression="zstd", row_index_stride=n)
+    for _ in range(2):
+        got = of.orc_point_lookup(path, "k", n - 1)[0]
+        assert got.column("text").to_pylist() == [f"row-{n - 1}"]

@@ -683,8 +683,10 @@ def test_reader_skip_and_partial_reads_equal_slices(name, signed):
 
 def _narrow_corpus(signed):
     """-> (values, stream, expected narrow dtype) per aligned DIRECT width
-    of at most 32 bits: runs at the width's extreme values, and a short
-    repeat of the extreme that fits the same dtype."""
+    of at most 32 bits, which the reader unpacks and un-zigzags in the
+    width's own dtype: runs at the width's extreme values around a short
+    repeat of the extreme that fits the same narrow dtype, and around one
+    of the value one past it, which needs the next wider dtype."""
     from orc_rust_spark.codecs.rle_v2 import _short_repeat
     from orc_rust_spark.codecs.util import zigzag_decode, zigzag_encode_scalar
 
@@ -696,24 +698,24 @@ def _narrow_corpus(signed):
         vals = zigzag_decode(u) if signed else u.view(np.int64)
         bits = 8 if width <= 8 else 16 if width <= 16 else 32
         extreme = -(1 << (bits - 1)) if signed else (1 << bits) - 1
-        rep = zigzag_encode_scalar(extreme) if signed else extreme
-        enc = (_direct_run(u[:512], width) + _short_repeat(rep, 5)
-               + _direct_run(u[512:], width))
-        vals = np.concatenate([vals[:512], np.full(5, extreme), vals[512:]])
-        dtype = np.dtype(f"{'i' if signed else 'u'}{bits // 8}")
-        out.append((vals, enc, dtype))
+        for past, wide in ((0, bits), (1, 2 * bits if bits < 32 else 64)):
+            value = extreme - past if signed else extreme + past
+            rep = zigzag_encode_scalar(value) if signed else value
+            enc = (_direct_run(u[:512], width) + _short_repeat(rep, 5)
+                   + _direct_run(u[512:], width))
+            dtype = np.dtype(f"{'i' if signed else 'u'}{wide // 8}")
+            out.append((np.concatenate([vals[:512], np.full(5, value), vals[512:]]), enc,
+                        np.dtype(np.int64) if wide == 64 else dtype))
     return out
 
 
 @pytest.mark.parametrize("signed", [True, False])
 @pytest.mark.parametrize("name", sorted(ENCODER_CASES) + ["<mixed>", "<narrow>"])
-def test_reader_batch_and_narrow_keep_every_value(name, signed):
-    """decode_rlev2's ``batch_values`` changes no value, and ``narrow``
-    only the dtype: the narrowest of 8, 16 and 32 bits (signed like the
-    stream) that the runs prove, where every run decoded is DIRECT or
-    SHORT_REPEAT, and int64 otherwise."""
-    from orc_rust_spark.codecs.rle_v2 import DECODE_BATCH_VALUES, FILE_BATCH_VALUES
-
+def test_reader_narrow_keeps_every_value(name, signed):
+    """Every value decodes exact as int64, whole and from a skip, and
+    decode_rlev2's ``narrow`` changes only the dtype: the narrowest of 8,
+    16 and 32 bits (signed like the stream) that the runs prove, where
+    every run decoded is DIRECT or SHORT_REPEAT, and int64 otherwise."""
     if name == "<narrow>":
         cases = _narrow_corpus(signed)
     elif name == "<mixed>":
@@ -723,17 +725,12 @@ def test_reader_batch_and_narrow_keep_every_value(name, signed):
         cases = [(v, encode_rlev2(v, signed=signed), None)]
     for v, enc, dtype in cases:
         for skip in (0, 1, v.size // 2):
-            want = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip)
-            assert np.array_equal(want, v[skip:])
-            for batch in (512, DECODE_BATCH_VALUES, FILE_BATCH_VALUES, 1 << 40):
-                got = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip,
-                                   batch_values=batch)
-                assert got.dtype == np.int64 and np.array_equal(got, want), batch
-                got = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip,
-                                   batch_values=batch, narrow=True)
-                assert np.array_equal(got.astype(np.int64), want), batch
-                if dtype is not None and skip == 0:
-                    assert got.dtype == dtype, (batch, got.dtype)
+            got = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip)
+            assert got.dtype == np.int64 and np.array_equal(got, v[skip:]), skip
+            got = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip, narrow=True)
+            assert np.array_equal(got.astype(np.int64), v[skip:]), skip
+            if dtype is not None and skip == 0:
+                assert got.dtype == dtype, got.dtype
 
 
 def test_reader_count_mismatch_raises_value_error():
