@@ -28,12 +28,13 @@ decoded-data pool. No Spark.
       [--probe-column l_linenumber] [--cold]
 
 rebuilds the same lookup file, checks every probe's rows, then runs the
-probes ``--reps`` times and prints the median CPU per lookup, split by
-self time into block decompression, RLEv2 reads (``decode_rlev2``),
-the key phase (the probed column's comparisons, ``orc_file._key_mask``)
-and the rest, plus per lookup the RLEv2 calls, the pieces decoded whole
-(``orc_file._build_piece``) and the spans read from the file, and the
-decoded-data pool's counters
+probes ``--reps`` times and prints the median and 90th percentile CPU
+per lookup (``total``, ``total_p90``) and the median split by self time
+into block decompression, RLEv2 reads (``decode_rlev2``), the key phase
+(the probed column's read and comparisons, ``orc_file._key_mask``) and
+the rest, plus per lookup the block decompressions, the RLEv2 calls, the
+pieces decoded whole (``orc_file._build_piece``) and the file reads (a
+phase's ranges, one read each), and the decoded-data pool's counters
 (``orc_file.pool_stats``) with its bytes and entries by kind: a piece's
 form (for, codes, scaled, dense, present) or dict and block.
 These lookups are warm: the checking sweep has filled the pool.
@@ -234,12 +235,14 @@ def _lookup_file(seed: int, workload: str, work: str, column: str = ""):
 
 def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
                 cold: bool = False) -> dict:
-    """Median CPU per warm point lookup on the perfbench ``workload``'s
-    lookup file (probing ``column`` if given, else the workload's key),
-    split by self time into block decompression, RLEv2 reads, the key
-    phase (the probed column's comparisons) and the rest; the RLEv2 calls, whole-piece decodes and file reads per
-    lookup; and the pool's counters and contents. With ``cold``, the
-    same of lookups each made after the file's pooled data is dropped."""
+    """Median and 90th percentile CPU per warm point lookup on the
+    perfbench ``workload``'s lookup file (probing ``column`` if given,
+    else the workload's key), the median split by self time into block
+    decompression, RLEv2 reads, the key phase (the probed column's read
+    and comparisons) and the rest; the block decompressions, RLEv2 calls,
+    whole-piece decodes and file reads per lookup; and the pool's
+    counters and contents. With ``cold``, the same of lookups each made
+    after the file's pooled data is dropped."""
     import tempfile
 
     from orc_rust_spark.codecs import block as blockc
@@ -254,24 +257,28 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
     def timed(fn, part):
         def run(*args, **kwargs):
             now = clock()
+            own = part
             if stack:
                 outer = stack[-1]
                 self_s[outer[0]] = self_s.get(outer[0], 0.0) + now - outer[1]
-            calls[part] = calls.get(part, 0) + 1
-            frame = [part, now]
+                if part == "rest" and outer[0] == "key":
+                    # the rest of the key phase (its column's read) is key
+                    own = "key"
+            calls[own] = calls.get(own, 0) + 1
+            frame = [own, now]
             stack.append(frame)
             try:
                 return fn(*args, **kwargs)
             finally:
                 end = clock()
-                self_s[part] = self_s.get(part, 0.0) + end - frame[1]
+                self_s[own] = self_s.get(own, 0.0) + end - frame[1]
                 stack.pop()
                 if stack:
                     stack[-1][1] = end
         return run
 
-    # the point reads open their own part: a key without pieces (a direct
-    # string) is read by _decode_column_rows, and its read counts as rest
+    # the point reads open their own part; a key phase that reads its
+    # column as an Arrow array (_decode_column_rows) keeps it as key
     targets = [(blockc, "decompress_stream", "decompress"),
                (of, "decode_rlev2", "rlev2"), (of, "_eq_mask", "key"),
                (of, "_key_mask", "key"), (of, "_decode_column_rows", "rest")]
@@ -291,8 +298,8 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
         per_lookup: dict[str, list[float]] = {k: [] for k in (
             "total", "decompress", "rlev2", "key", "rest")}
         # reported name -> the ``calls`` counter it reads
-        counted_as = {"rlev2_calls": "rlev2", "piece_decodes": "piece_decodes",
-                      "file_reads": "file_reads"}
+        counted_as = {"decompress_calls": "decompress", "rlev2_calls": "rlev2",
+                      "piece_decodes": "piece_decodes", "file_reads": "file_reads"}
         counts: dict[str, list[int]] = {k: [] for k in counted_as}
         for _ in range(reps):
             for probe, _ in client.probes:
@@ -306,7 +313,9 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
                 per_lookup["total"].append(sum(self_s.values()))
                 for what, counter in counted_as.items():
                     counts[what].append(calls.get(counter, 0))
-        return ({k: round(statistics.median(v) * 1e3, 3) for k, v in per_lookup.items()},
+        cpu = {k: round(statistics.median(v) * 1e3, 3) for k, v in per_lookup.items()}
+        cpu["total_p90"] = round(statistics.quantiles(per_lookup["total"], n=10)[-1] * 1e3, 3)
+        return (cpu,
                 {f"{k}_per_lookup": round(statistics.mean(v), 2) for k, v in counts.items()})
 
     out: dict = {}

@@ -41,11 +41,24 @@ def _trunc_div(ts: np.ndarray, unit: int) -> tuple[np.ndarray, np.ndarray]:
     return (ts - rem) // np.int64(unit), rem
 
 
+#: ticks per second of each Arrow timestamp unit
+TICKS_PER_SECOND = {"s": 1, "ms": 1_000, "us": 1_000_000, "ns": NANOS_PER_SECOND}
+
+
+def split_timestamp(ticks: np.ndarray, unit: str) -> tuple[np.ndarray, np.ndarray]:
+    """int64 ticks of Arrow timestamp ``unit`` ("s", "ms", "us" or "ns")
+    since the unix epoch -> (orc_seconds, encoded_nanos), exact for every
+    unit and value: ORC's seconds+nanos have no int64 range limit, so no
+    unit is scaled to another first."""
+    per = TICKS_PER_SECOND[unit]
+    ts = np.ascontiguousarray(ticks, dtype=np.int64)
+    secs, rem = _trunc_div(ts, per)
+    return _pack_secs_nanos(secs, rem * (NANOS_PER_SECOND // per))  # nanos in (-1e9, 1e9)
+
+
 def split_timestamp_ns(ts_ns: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """int64 nanos-since-unix-epoch -> (orc_seconds, encoded_nanos)."""
-    ts = np.ascontiguousarray(ts_ns, dtype=np.int64)
-    secs, nanos = _trunc_div(ts, NANOS_PER_SECOND)  # nanos in (-1e9, 1e9)
-    return _pack_secs_nanos(secs, nanos)
+    return split_timestamp(ts_ns, "ns")
 
 
 def split_timestamp_us(ts_us: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -54,9 +67,7 @@ def split_timestamp_us(ts_us: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     The ns-space API caps out at ~year 2262 (us * 1000 wraps int64 —
     code-review r6); ORC's seconds+nanos representation has no such
     limit, so Spark's us-precision timestamps split directly."""
-    us = np.ascontiguousarray(ts_us, dtype=np.int64)
-    secs, rem = _trunc_div(us, 1_000_000)
-    return _pack_secs_nanos(secs, rem * 1000)  # nanos in (-1e9, 1e9)
+    return split_timestamp(ts_us, "us")
 
 
 # nanosecond multiplier by the 3-bit zeros code: code z > 0 means z + 1

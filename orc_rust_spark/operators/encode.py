@@ -28,7 +28,7 @@ from ..codecs.fsst import FsstTable, fsst_encode
 from ..codecs.rle_v2 import BATCH_VALUES, encode_rlev2
 from ..codecs.selector import choose_string_codec, integer_chunk_stats, string_chunk_stats
 from ..codecs.string_codec import sorted_dictionary
-from ..codecs.timestamp_split import split_timestamp_us
+from ..codecs.timestamp_split import TICKS_PER_SECOND, split_timestamp, split_timestamp_us
 from ..sources import chunk_table as ct
 
 STRIPE_BYTES = 64 * 1024 * 1024  # reference stripe flush threshold
@@ -361,10 +361,13 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit, *,
         if days.size:
             minv, maxv = str(int(days.min())), str(int(days.max()))
     elif pa.types.is_timestamp(typ):
-        us = dense.cast(pa.int64()).to_numpy(zero_copy_only=False)
-        # us-space split: us*1000 wrapped int64 past ~year 2262
-        # (code-review r6)
-        secs, nanos = split_timestamp_us(us)
+        ticks = dense.cast(pa.int64()).to_numpy(zero_copy_only=False)
+        # each unit splits into seconds and nanos exactly, with no scaling
+        # to another unit first (us*1000 wraps int64 past ~year 2262);
+        # Spark's us go through split_timestamp_us, the name perfbench's
+        # trace times as the codec's layer
+        secs, nanos = (split_timestamp_us(ticks) if typ.unit == "us"
+                       else split_timestamp(ticks, typ.unit))
         codec = "timestamp_split"
         streams = [
             (ct.DATA, encode_rlev2(secs, signed=True, batch_values=rle_batch)),
@@ -372,8 +375,11 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit, *,
                                         batch_values=rle_batch)),
         ]
         raw = n * 8
-        if us.size:
-            minv, maxv = str(int(us.min())), str(int(us.max()))
+        if ticks.size:
+            # bounds in microseconds: a sub-microsecond value widens them
+            per = TICKS_PER_SECOND[typ.unit]
+            lo, hi = int(ticks.min()), int(ticks.max())
+            minv, maxv = str(lo * 10**6 // per), str(-(-hi * 10**6 // per))
     elif pa.types.is_decimal(typ):
         from ..codecs.decimal_codec import encode_decimal, encode_varints_exact
         from ..codecs.rle_v2 import encode_rlev2 as _enc_rle

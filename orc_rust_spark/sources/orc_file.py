@@ -152,6 +152,9 @@ class OrcMeta:
     block_size: int = 0
     #: Footer softwareVersion ("" when the file records none)
     software: str = ""
+    #: (projection, timestamp unit) -> its zero-row table (_empty_table)
+    empty_tables: dict = field(default_factory=dict, init=False, repr=False,
+                               compare=False)
 
     @property
     def own_writer(self) -> bool:
@@ -1441,6 +1444,10 @@ class _StreamBytes:
                 return data[a + shift: b + shift]
         raise CorruptStream(f"stream bytes [{a}, {b}) lie outside the ranges read")
 
+    def holds(self, a: int, b: int) -> bool:
+        """Whether the stream bytes [a, b) lie inside one read range."""
+        return b <= a or any(lo <= a and b <= hi for lo, hi, _, _ in self.parts)
+
 
 def _fetch_streams(ix: StripeIndex, want: dict, fetch) -> dict:
     """Read the stream ranges ``want`` (StripeIndex.ranges) through
@@ -1456,7 +1463,7 @@ def _fetch_streams(ix: StripeIndex, want: dict, fetch) -> dict:
             spans[-1][1] = max(spans[-1][1], b)
         else:
             spans.append([a, b])
-    got = fetch([(a, b) for a, b in spans])
+    got = fetch([(a, b) for a, b in spans]) if spans else []
     out = {key: _StreamBytes(ix.offsets[key][1]) for key in want}
     i = 0
     for a, b, key in reqs:
@@ -1621,29 +1628,197 @@ def _scalar_values(t: OrcType, enc_kind: int, read, exs: dict, n: int,
     raise NotImplementedError(f"ORC type kind {k}")
 
 
-def _string_rows(ix: StripeIndex, streams: dict, col_id: int, g: int,
-                 sel: np.ndarray, offsets: "_Piece", blocks: dict) -> tuple:
+#: the span of the blocks an uncompressed DATA stream is cut into for the
+#: DataPool (its bytes have no blocks of their own)
+_RAW_BLOCK = 256 << 10
+
+
+def _block_directory(ix: StripeIndex, raw, col_id: int, g: int,
+                     total: int) -> tuple[np.ndarray, np.ndarray]:
+    """(bounds, starts): the directory of the blocks that hold group
+    ``g``'s ``total`` DATA bytes of direct string or binary column
+    ``col_id``, read from the group's stream bytes ``raw``. Block i spans
+    the stream bytes [bounds[i], bounds[i + 1]) and decompresses to the
+    group's bytes [starts[i], starts[i + 1]); a first block shared with
+    the group before starts below 0.
+
+    In a file of this engine's writer (``StripeIndex.block_size``) only
+    the 3-byte headers are walked: every block but the last holds
+    ``block_size`` bytes, and the blocks must end where the group's DATA
+    ends, or the blocks are framed at another size and CorruptStream is
+    raised. An uncompressed stream is cut into _RAW_BLOCK spans. In other
+    files a block's size is known only once it is decompressed, so the
+    directory starts empty (bounds = [the group's block], starts = [its
+    offset in it, negated]) and _value_bytes extends it by the blocks
+    that reads decompress."""
+    pos, off = ix.positions(col_id, g)[S_DATA][:2]
+    if ix.comp == "none":
+        bounds = np.append(np.arange(pos, pos + total, _RAW_BLOCK), pos + total)
+        return bounds, bounds - pos
+    size = ix.block_size if off == 0 else 0
+    if not (size and total):
+        return np.array([pos]), np.array([-off])
+    bounds = [pos]
+    for _ in range(-(-total // size)):
+        pos += 3 + (int.from_bytes(raw[pos: pos + 3], "little") >> 1)
+        bounds.append(pos)
+    end = ix.group_range(col_id, S_DATA, g)[1]
+    if pos != end:
+        raise CorruptStream(
+            f"{len(bounds) - 1} blocks of {size} bytes end at stream byte "
+            f"{pos}, the group's DATA at {end}")
+    return np.array(bounds), np.minimum(np.arange(len(bounds)) * size, total)
+
+
+def _value_bytes(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
+                 piece: "_Piece", starts: np.ndarray, lengths: np.ndarray, blocks):
+    """(buffer, at): the blocks that hold the values of direct string or
+    binary column ``col_id`` at the ascending byte offsets ``starts``
+    with ``lengths`` of group ``g``, as one uint8 buffer in which value i
+    starts at ``at[i]``. ``piece`` is the group's offsets piece, whose
+    block directory names the blocks; each one is read from ``blocks``
+    (the DataPool view or a call's own cache), or decompressed from
+    ``streams`` and filed there. A directory that does not reach the
+    values yet (a file of another writer) is extended first, by
+    decompressing its next blocks from ``streams``. With a block in
+    neither -> {(column, DATA): [stream span of each such block]} (the
+    group's whole span for a directory to extend), the reads that would
+    supply them. A block whose size is not its directory span raises
+    CorruptStream."""
+    if not lengths.any():
+        return np.zeros(0, dtype=np.uint8), np.zeros(len(starts), dtype=np.int64)
+    key = (col_id, S_DATA)
+    raw = None if streams is None else streams.get(key)
+    bounds, dstarts = piece.blocks
+    # the last value's end: no value before it ends later
+    reach = int(starts[-1] + lengths[-1])
+    if reach > dstarts[-1]:
+        if raw is None:
+            return {key: [ix.group_range(col_id, S_DATA, g)]}
+        pos, got = int(bounds[-1]), int(dstarts[-1])
+        more, ends = [], []
+        while got < reach:
+            if pos >= len(raw):
+                raise CorruptStream(f"group bytes end at {got}, before its value's end {reach}")
+            data, pos = _block_at(raw, ix.comp, pos, blocks, key)
+            got += len(data)
+            more.append(pos)
+            ends.append(got)
+        bounds, dstarts = np.append(bounds, more), np.append(dstarts, ends)
+        # a longer prefix of the same directory: safe to share as it grows
+        piece.blocks = (bounds, dstarts)
+    n = len(bounds) - 1
+    first = np.searchsorted(dstarts, starts, "right") - 1
+    # the block of each value's last byte (an empty value's: of the byte
+    # before it, which no later block than the values before it need)
+    last = np.searchsorted(dstarts, starts + lengths - 1, "right") - 1
+    lo, hi = int(first[0]), int(last[-1])
+    if lo == hi:
+        need = [lo]
+    else:
+        live = lengths > 0
+        cover = np.cumsum(np.bincount(first[live], minlength=n + 1)
+                          - np.bincount(last[live] + 1, minlength=n + 1))
+        need = np.flatnonzero(cover[:n]).tolist()
+    datas, want = [], []
+    for i in need:
+        a, b = int(bounds[i]), int(bounds[i + 1])
+        if raw is None:
+            hit = blocks.get((key, a))
+            if hit is None:
+                want.append((a, b))
+                continue
+        elif ix.comp == "none":
+            hit = blocks.get((key, a))
+            if hit is None:
+                hit = blocks[(key, a)] = (bytes(raw[a: b]), b)
+        else:
+            hit = _block_at(raw, ix.comp, a, blocks, key)
+        size = int(dstarts[i + 1] - dstarts[i])
+        if len(hit[0]) != size:
+            raise CorruptStream(f"DATA block at stream byte {a} holds "
+                                f"{len(hit[0])} bytes, its group's directory {size}")
+        datas.append(hit[0])
+    if want:
+        return {key: want}
+    if len(need) == 1:
+        return np.frombuffer(datas[0], dtype=np.uint8), starts - dstarts[lo]
+    # group byte d of needed block i sits at buf[d + shift[i]]
+    sizes = np.diff(dstarts)[need]
+    shift = np.zeros(n, dtype=np.int64)
+    shift[need] = np.cumsum(sizes) - sizes - dstarts[need]
+    buf = np.frombuffer(b"".join(datas), dtype=np.uint8)
+    return buf, starts + shift[np.minimum(first, n - 1)]
+
+
+def _string_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
+                 sel: np.ndarray, offsets: "_Piece", blocks):
     """(bytes, lengths) of direct string or binary column ``col_id``'s
     values at the sorted dense offsets ``sel`` of group ``g``, whose
-    values' byte offsets are the piece ``offsets``. DATA is read as the
-    byte window of the picked values alone: in a file of this engine's
-    writer (``StripeIndex.block_size``) decompressed from the block that
-    holds its first byte through the block that holds its last
-    (_group_bytes), in other files from the group's start. ``blocks``
-    caches the decompressed blocks."""
-    read = _group_reader(ix, streams, col_id, g, blocks, ix.block_size)
-    starts = offsets.at(sel)
+    offsets piece is ``offsets``: gathered from the blocks that hold
+    them alone (_value_bytes), or the reads of the blocks that neither
+    ``blocks`` nor ``streams`` holds."""
     # sel may be a PRESENT piece's int16 slots: the next offset in int64
-    picked = offsets.at(sel.astype(np.int64) + 1) - starts
-    lo, hi = int(starts[0]), int(starts[-1] + picked[-1])
-    if int(sel[-1]) - int(sel[0]) + 1 == sel.size:
-        # a run of values: their bytes are one window
-        return bytes(read(S_DATA, (lo, hi))), picked
-    window = np.frombuffer(read(S_DATA, (lo, hi)), dtype=np.uint8)
-    # byte j of picked value i sits at window[starts[i] - lo + j]
-    shift = starts - lo - (np.cumsum(picked) - picked)
-    at = np.arange(int(picked.sum())) + np.repeat(shift, picked)
-    return window[at].tobytes(), picked
+    sel = sel.astype(np.int64)
+    starts, ends = offsets.at(np.stack((sel, sel + 1)))
+    picked = ends - starts
+    got = _value_bytes(ix, streams, col_id, g, offsets, starts, picked, blocks)
+    if isinstance(got, dict):
+        return got
+    buf, at = got
+    total = int(picked.sum())
+    if sel.size == 1 or (starts[1:] == starts[:-1] + picked[:-1]).all():
+        # values back to back: their bytes are one slice
+        return buf[at[0]: at[0] + total].tobytes(), picked
+    # byte j of picked value i sits at buf[at[i] + j]
+    idx = np.arange(total) + np.repeat(at - (np.cumsum(picked) - picked), picked)
+    return buf[idx].tobytes(), picked
+
+
+def _probe_bytes(kind: int, eq) -> bytes | None:
+    """The bytes a str or bytes probe of a direct string or binary column
+    equals, as pyarrow compares them: a str by its UTF-8, bytes as they
+    are (a string column's only when they are UTF-8). None for any other
+    probe, which the key phase compares on the group read whole."""
+    try:
+        if isinstance(eq, str):
+            return eq.encode("utf-8")
+        if isinstance(eq, (bytes, bytearray)):
+            if kind != K_BINARY:
+                bytes(eq).decode("utf-8")
+            return bytes(eq)
+    except UnicodeError:
+        pass
+    return None
+
+
+def _string_equals(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
+                   piece: "_Piece", probe: bytes, blocks):
+    """Which dense values of group ``g`` of a direct string or binary
+    column, whose offsets piece is ``piece``, equal ``probe`` byte for
+    byte: the values of its length are the candidates (compared as the
+    piece's offsets), and their bytes are gathered over their blocks
+    (_value_bytes, which may instead return the reads of missing
+    blocks), checked at the probe's last byte and then whole."""
+    n = len(piece.values) - 1
+    q, r = divmod(len(probe), piece.step)
+    cand = (np.zeros(0, dtype=np.int64) if r
+            else np.flatnonzero(np.diff(piece.values) == q))
+    if cand.size and probe:
+        starts = piece.at(cand)
+        got = _value_bytes(ix, streams, col_id, g, piece, starts,
+                           np.full(cand.size, len(probe), dtype=np.int64), blocks)
+        if isinstance(got, dict):
+            return got
+        buf, at = got
+        last = buf[at + (len(probe) - 1)] == probe[-1]
+        cand, at = cand[last], at[last]
+        same = buf[at[:, None] + np.arange(len(probe))] == np.frombuffer(
+            probe, dtype=np.uint8)
+        cand = cand[same.all(axis=1)]
+    dense = np.zeros(n, dtype=bool)
+    dense[cand] = True
+    return dense
 
 
 def _is_dict(ix: StripeIndex, col_id: int) -> bool:
@@ -1834,14 +2009,18 @@ class _Piece:
       dense offset of each row of the group, -1 where it is null.
 
     ``kind`` names the form: "for", "codes" (a dictionary column's),
-    "scaled", "dense" or "present"."""
+    "scaled", "dense" or "present". A direct string or binary's offsets
+    piece also holds ``blocks``, the directory of the group's DATA blocks
+    (_block_directory), so its values' bytes are read from the pooled
+    blocks alone."""
 
-    __slots__ = ("values", "base", "step", "scale", "kind")
+    __slots__ = ("values", "base", "step", "scale", "kind", "blocks")
 
     def __init__(self, values: np.ndarray, base: int | None = None, step: int = 1,
                  scale: int | None = None, kind: str = "dense"):
         self.values, self.base, self.step = values, base, step
         self.scale, self.kind = scale, kind
+        self.blocks: tuple[np.ndarray, np.ndarray] | None = None
 
     def at(self, sel) -> np.ndarray:
         """The values at dense offsets ``sel``: int64 (float64 with a
@@ -1931,8 +2110,9 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
     column's last scaled piece first) or, failing that, as they are. A
     direct string or binary column's piece holds its values' byte
     offsets in DATA (the n + 1 of an Arrow offsets buffer) as a frame of
-    reference; their bytes are read from the blocks. ``present`` is the
-    group's PRESENT piece, or None.
+    reference, and the directory of the group's DATA blocks
+    (_block_directory); their bytes are read from the blocks.
+    ``present`` is the group's PRESENT piece, or None.
 
     None for a timestamp group whose values do not all convert (a
     sub-microsecond one, or one out of the writer zone's range): its
@@ -1965,7 +2145,10 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
                               exs, S_LENGTH, n, False)
         offsets = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(lengths, out=offsets[1:])
-        return _for_piece(offsets)
+        piece = _for_piece(offsets)
+        piece.blocks = _block_directory(ix, streams[(col_id, S_DATA)], col_id, g,
+                                        int(offsets[-1]))
+        return piece
     parts = _scalar_values(t, ix.encodings[col_id][0], read, exs, n, narrow=True)
     if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
         try:
@@ -2000,9 +2183,9 @@ def _group_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
     """(validity of ``rows`` or None, their non-null values or None when
     all are null) of group ``g`` of scalar column ``col_id``: a gather
     from the group's pieces (_piece), or for a direct string or binary
-    (bytes, lengths) of its rows alone (_string_rows, through ``blocks``).
-    None when a piece is missed, or a direct string's bytes are wanted,
-    and ``streams`` is None."""
+    (bytes, lengths) of its rows alone (_string_rows, from ``blocks``).
+    None when a piece is missed and ``streams`` is None; the reads of its
+    blocks (a dict) when a direct string's blocks are missed."""
     t = ix.types[col_id]
     present, valid, sel = None, None, rows
     if (col_id, S_PRESENT) in ix.offsets:
@@ -2015,10 +2198,11 @@ def _group_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
         if not sel.size:
             return valid, None
     if t.kind in _STRING_KINDS and not _is_dict(ix, col_id):
-        if streams is None:
-            return None
         offsets = _piece(ix, streams, col_id, g, 0, present, pieces)
-        return valid, _string_rows(ix, streams, col_id, g, sel, offsets, blocks)
+        if offsets is None:
+            return None
+        got = _string_rows(ix, streams, col_id, g, sel, offsets, blocks)
+        return got if isinstance(got, dict) else (valid, got)
     out = []
     for j, at in _split_pieces(sel, _float_per(ix, col_id) if t.kind in _FLOAT_KINDS else 0):
         p = _piece(ix, streams, col_id, g, j, present, pieces)
@@ -2036,10 +2220,19 @@ def _group_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
     return valid, out[0] if len(out) == 1 else np.concatenate(out)
 
 
+def _wants(parts) -> dict:
+    """Several reads' stream ranges ({(column, kind): [(lo, hi)]}) as one."""
+    out: dict = {}
+    for want in parts:
+        for key, rs in want.items():
+            out.setdefault(key, []).extend(rs)
+    return out
+
+
 def _decode_column_rows(
     ix: StripeIndex, streams: dict | None, col_id: int, hits: dict, name: str,
     dict_cache: dict, block_cache: dict, pieces=None,
-) -> pa.Array | list[int]:
+) -> pa.Array | dict:
     """A point read of one column: its values at the rows ``hits`` picks
     ({group: sorted group-local rows}, groups ascending), as ONE Arrow
     array of _decode_column_group's type.
@@ -2050,31 +2243,36 @@ def _decode_column_rows(
     piece whole (a frame of reference, dictionary codes, scaled doubles
     or dense values, plus the PRESENT map), and every later read of the
     group is one NumPy gather. A direct string or binary's piece holds
-    its values' byte offsets, and its rows' bytes are read alone
+    its values' byte offsets and its DATA block directory, and its rows'
+    bytes are gathered from the blocks that hold them alone
     (_string_rows, through ``block_cache``). ONE Arrow array is built
     over the hit groups, with no Arrow cast or concat per group. Nested
     and union columns decode each hit group whole and take the rows.
 
-    ``streams`` None asks ``pieces`` and ``dict_cache`` alone: -> the hit
-    groups whose bytes the read needs instead of the array (every hit
-    group for a nested, direct string or binary column), empty when only
-    the dictionary is missed."""
+    ``streams`` None asks ``pieces``, ``block_cache`` and ``dict_cache``
+    alone: -> the stream ranges the read needs ({(column, kind): [(lo,
+    hi)]}) instead of the array when any is missed: a missed group's
+    (every hit group of a nested column), the dictionary's, or a missed
+    direct string block's own span."""
     _trace_decode(name)
     if pieces is None:
         pieces = {}
     if ix.types[col_id].kind in _NESTED_KINDS:
         if streams is None:
-            return list(hits)
+            return ix.ranges([col_id], list(hits))
         parts = [_decode_column_group(ix, streams, col_id, g, ix.group_rows(g), name,
                                       dict_cache, block_cache).take(
                      pa.array(rows, type=pa.int64()))
                  for g, rows in hits.items()]
         return parts[0] if len(parts) == 1 else pa.concat_arrays(parts)
-    missing, valids, vals = [], [], []
+    missing, wants, valids, vals = [], [], [], []
     for g, rows in hits.items():
         got = _group_rows(ix, streams, col_id, g, rows, pieces, block_cache)
         if got is None:
             missing.append(g)
+            continue
+        if isinstance(got, dict):
+            wants.append(got)
             continue
         if got[0] is not None:
             valids.append(got[0])
@@ -2085,10 +2283,10 @@ def _decode_column_rows(
         dictionary = dict_cache.get(col_id)
         if dictionary is None:
             if streams is None:
-                return missing
+                return ix.ranges([col_id], missing)
             dictionary = _dictionary(ix, streams, col_id, dict_cache)
-    if missing:
-        return missing
+    if missing or wants:
+        return _wants([ix.ranges([col_id], missing)] + wants if missing else wants)
     valid = np.concatenate(valids) if valids else None
     if not vals:
         # every picked row is null
@@ -2103,32 +2301,42 @@ def _decode_column_rows(
 
 
 def _key_mask(ix: StripeIndex, streams: dict | None, col_id: int, g: int, eq,
-              name: str, dict_cache, block_cache: dict, pieces) -> np.ndarray | list[int]:
+              name: str, dict_cache, block_cache: dict, pieces) -> np.ndarray | dict:
     """Which rows of group ``g`` of the probed column ``col_id`` equal
-    ``eq``, as _eq_mask finds them. An integer probe of an integer column
-    is compared with the group's piece offsets in place (_Piece.equals),
-    a dictionary column's probe with the dictionary and then looked up by
-    code; any other probe with the group read as an Arrow array
+    ``eq``, as _eq_mask finds them, from the group's pieces. An integer
+    probe of an integer column is compared with the piece's offsets in
+    place (_Piece.equals); a dictionary column's probe with the
+    dictionary and then looked up by code; a str or bytes probe of a
+    direct string or binary column (_probe_bytes) with the values of its
+    length alone, byte for byte, over the blocks that hold them
+    (_string_equals), with no Arrow cast or compute call. Any other
+    probe is compared with the group read as an Arrow array
     (_decode_column_rows). A null row never matches. With ``streams``
-    None nothing is read: -> the groups to fetch, as
+    None nothing is read: -> the stream ranges to fetch, as
     _decode_column_rows."""
     t = ix.types[col_id]
     is_dict = _is_dict(ix, col_id)
-    if is_dict or (type(eq) is int and t.kind in _INT_KINDS):
+    probe = (_probe_bytes(t.kind, eq)
+             if t.kind in _STRING_KINDS and not is_dict else None)
+    if is_dict or probe is not None or (type(eq) is int and t.kind in _INT_KINDS):
         present = None
         if (col_id, S_PRESENT) in ix.offsets:
             present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces)
             if present is None:
-                return [g]
+                return ix.ranges([col_id], [g])
         piece = _piece(ix, streams, col_id, g, 0, present, pieces)
         if piece is None:
-            return [g]
+            return ix.ranges([col_id], [g])
         dense = None
-        if is_dict:
+        if probe is not None:
+            dense = _string_equals(ix, streams, col_id, g, piece, probe, block_cache)
+            if isinstance(dense, dict):
+                return dense
+        elif is_dict:
             dictionary = dict_cache.get(col_id)
             if dictionary is None:
                 if streams is None:
-                    return []
+                    return ix.ranges([col_id], [])
                 dictionary = _dictionary(ix, streams, col_id, dict_cache)
             dense = _eq_mask(dictionary, eq)[piece.at(slice(None))]
         elif piece.base is not None:  # a byte column's piece is dense
@@ -2141,7 +2349,7 @@ def _key_mask(ix: StripeIndex, streams: dict | None, col_id: int, g: int, eq,
             return mask
     arr = _decode_column_rows(ix, streams, col_id, {g: np.arange(ix.group_rows(g))},
                               name, dict_cache, block_cache, pieces)
-    return arr if isinstance(arr, list) else _eq_mask(arr, eq)
+    return arr if isinstance(arr, dict) else _eq_mask(arr, eq)
 
 
 def _bloom_probe_ok(col_kind: int, eq) -> bool:
@@ -2465,18 +2673,21 @@ def _decode_stripe_pruned_impl(
     The seek path reads only the stream byte ranges it decodes
     (StripeIndex.ranges through ``fetch``; slices of ``buf`` when no
     ``fetch`` is given): the kept groups of every projected column, or
-    under ``residual`` the key column's kept groups and then the other
-    columns' groups that hold a match, no stream range twice.
+    under ``residual`` what each phase misses, no stream range twice.
 
     Under ``residual`` each scalar column's hit groups are decoded whole
     into _Pieces, the key column's included, and its rows gathered from
-    them. An ``index`` of a cached OrcReader (``index.owner``) keeps the
-    pieces, string dictionaries and the decompressed blocks of direct
-    strings and nested columns in the process's DataPool; a read without
-    one keeps them for the call. Each phase asks those first (the
-    streams-less _key_mask and _decode_column_rows) and fetches, in one
-    read, only what they miss, so a stripe whose wanted pieces are all
-    pooled calls neither StripeIndex.ranges nor ``fetch``.
+    them; a direct string or binary's piece holds its value offsets and
+    the directory of its DATA blocks, and its rows' bytes (a str or bytes
+    key's candidates among them) are gathered from those blocks. An
+    ``index`` of a cached OrcReader (``index.owner``) keeps the pieces,
+    string dictionaries and the decompressed blocks of direct strings and
+    nested columns in the process's DataPool; a read without one keeps
+    them for the call. Each phase asks those first (the streams-less
+    _key_mask and _decode_column_rows) and fetches, in one read, only the
+    stream ranges they miss: a missed piece's group, or a missed block's
+    own span. So a stripe whose wanted pieces and blocks are all pooled
+    calls neither StripeIndex.ranges nor ``fetch``.
 
     -> (table of kept groups' rows, groups_decoded, groups_total).
     Without ``residual`` the caller applies the residual filter. Falls
@@ -2570,21 +2781,19 @@ def _decode_stripe_pruned_impl(
         block_cache = read.view(("block",), _block_bytes)
         pieces = read.view(("piece",), _piece_bytes)
     streams: dict[tuple[int, int], _StreamBytes] = {}
-    fetched: dict[int, set[int]] = {}
 
-    def fetch_groups(want: dict) -> None:
-        """Read {column: its groups} of the stream bytes (and dictionaries)
+    def fetch_ranges(want: dict) -> None:
+        """Read the stream ranges ``want`` ({(column, kind): [(lo, hi)]})
         that this read has not read yet."""
-        ranges: dict = {}
-        for cid, groups in want.items():
-            done = fetched.get(cid)
-            new = [g for g in groups if done is None or g not in done]
-            if done is None or new:
-                ranges.update(ix.ranges([cid], new))
-                fetched.setdefault(cid, set()).update(new)
-        if not ranges:
+        new: dict = {}
+        for key, rs in want.items():
+            have = streams.get(key)
+            rs = sorted({r for r in rs if have is None or not have.holds(*r)})
+            if have is None or rs:
+                new[key] = rs
+        if not new:
             return
-        for key, got in _fetch_streams(ix, ranges, fetch).items():
+        for key, got in _fetch_streams(ix, new, fetch).items():
             if key in streams:
                 streams[key].parts += got.parts
             else:
@@ -2599,11 +2808,11 @@ def _decode_stripe_pruned_impl(
             key_id = proj_ids[proj.index(column)]
             masks = {g: _key_mask(ix, None, key_id, g, eq, column, dict_cache,
                                   block_cache, pieces) for g in keep}
-            missed = [m for m in masks.values() if isinstance(m, list)]
+            missed = [m for m in masks.values() if isinstance(m, dict)]
             if missed:
-                fetch_groups({key_id: sorted({h for m in missed for h in m})})
+                fetch_ranges(_wants(missed))
                 masks = {g: _key_mask(ix, streams, key_id, g, eq, column, dict_cache,
-                                      block_cache, pieces) if isinstance(m, list) else m
+                                      block_cache, pieces) if isinstance(m, dict) else m
                          for g, m in masks.items()}
             hits: dict[int, np.ndarray] = {}
             for g in keep:
@@ -2616,16 +2825,16 @@ def _decode_stripe_pruned_impl(
             if not hits:
                 return _empty_table(meta, columns), len(keep), n_groups
             cols: dict[str, pa.Array] = {}
-            need: dict[int, tuple[str, list]] = {}
+            need: dict[int, tuple[str, dict]] = {}
             for cid, name in zip(proj_ids, proj):
                 got = _decode_column_rows(ix, None, cid, hits, name, dict_cache,
                                           block_cache, pieces)
-                if isinstance(got, list):
+                if isinstance(got, dict):
                     need[cid] = (name, got)
                 else:
                     cols[name] = got
             if need:
-                fetch_groups({cid: groups for cid, (_, groups) in need.items()})
+                fetch_ranges(_wants(want for _, want in need.values()))
                 for cid, (name, _) in need.items():
                     cols[name] = _decode_column_rows(ix, streams, cid, hits, name,
                                                      dict_cache, block_cache, pieces)
@@ -2757,7 +2966,12 @@ def _empty_table(meta: OrcMeta, columns: list[str] | None = None,
                  timestamp_unit: str = "us") -> pa.Table:
     """A zero-row table of the ``columns`` projection, typed as the
     decoders type it — built from the type tree, so an empty result
-    decompresses nothing."""
+    decompresses nothing. Built once per ``meta``, projection and unit
+    (an Arrow table is immutable, so every empty result shares it)."""
+    key = (None if columns is None else tuple(columns), timestamp_unit)
+    hit = meta.empty_tables.get(key)
+    if hit is not None:
+        return hit
     root = meta.types[0]
 
     def _t(cid):
@@ -2767,11 +2981,12 @@ def _empty_table(meta: OrcMeta, columns: list[str] | None = None,
         # because one file was empty (code-review r7, twice)
         return _retype_ts(t, "ns") if timestamp_unit == "ns" else t
 
-    return pa.table({
+    hit = meta.empty_tables[key] = pa.table({
         name: pa.nulls(0, type=_t(cid))
         for cid, name in zip(root.subtypes, root.field_names)
         if columns is None or name in columns
     })
+    return hit
 
 
 # --- write side: emit real ORC v1 files from this engine's streams -----------
@@ -3730,6 +3945,8 @@ class OrcWriter:
         pre-shift: wall -> instant -> minus the epoch delta."""
         import pandas as pd
 
+        from ..codecs.timestamp_split import NANOS_PER_SECOND, TICKS_PER_SECOND
+
         delta = _writer_epoch_delta_ns(self.writer_timezone)
         cols = []
         for name in table.column_names:
@@ -3737,13 +3954,15 @@ class OrcWriter:
             if self.types[self._top_ids[name]].kind == K_TIMESTAMP:
                 # int64 end-to-end (a to_numpy of a nullable array
                 # silently becomes float64: NaN nulls -> garbage values,
-                # lost mask, and >2^53 ns values perturbed)
+                # lost mask, and >2^53 ns values perturbed), shifted in
+                # ns and put back in the column's own unit
                 mask = (np.asarray(arr.is_valid()) if arr.null_count else None)
-                us = (arr.cast(pa.int64()).fill_null(0)
-                      .to_numpy(zero_copy_only=False).astype(np.int64))
-                lim = np.iinfo(np.int64).max // 1000
-                if us.size and (int(us.min()) < -lim or int(us.max()) > lim):
-                    # us*1000 below would wrap int64 and write silently
+                ticks = (arr.cast(pa.int64()).fill_null(0)
+                         .to_numpy(zero_copy_only=False).astype(np.int64))
+                scale = NANOS_PER_SECOND // TICKS_PER_SECOND[arr.type.unit]
+                lim = np.iinfo(np.int64).max // scale
+                if ticks.size and (int(ticks.min()) < -lim or int(ticks.max()) > lim):
+                    # ticks*scale below would wrap int64 and write silently
                     # WRONG instants (code-review r7) — the wall-clock
                     # shift is ns-native, so such values need UTC
                     raise ValueError(
@@ -3751,12 +3970,12 @@ class OrcWriter:
                         "the ns-representable range (~1677-2262); a "
                         "non-UTC writer_timezone cannot represent them — "
                         "write with writer_timezone='UTC'")
-                idx = pd.DatetimeIndex((us * 1000).astype("datetime64[ns]"))
+                idx = pd.DatetimeIndex((ticks * scale).astype("datetime64[ns]"))
                 inst = idx.tz_localize(
                     _tzinfo(self.writer_timezone), ambiguous=True,
                     nonexistent="shift_forward"
                 ).tz_convert("UTC").tz_localize(None).asi8
-                shifted = (inst - delta) // 1000
+                shifted = (inst - delta) // scale
                 arr = pa.array(
                     shifted, type=pa.int64(),
                     mask=None if mask is None else ~mask,
@@ -4349,10 +4568,13 @@ class DataPool:
       pieces too.
     - ("dict", column): a string dictionary in its Arrow type.
     - ("block", ((column, stream kind), block offset)): a decompressed
-      block of a direct string or binary, or of a nested column.
+      block of a direct string or binary (its offsets piece holds the
+      group's block directory; an uncompressed stream is cut into
+      _RAW_BLOCK spans), or of a nested column.
 
-    So a warm lookup gathers each column's rows from its pieces: on
-    ``orc_lookup`` the pool holds 2.4 MB, and no block.
+    So a warm lookup gathers each column's rows from its pieces, and a
+    direct string's bytes from its blocks: on ``orc_lookup`` the pool
+    holds 2.4 MB, and no block.
 
     A stripe read works through a _PoolRead: it reads entries without the
     lock (one dict read), keeps each one it found for the rest of the
@@ -4381,7 +4603,7 @@ class DataPool:
         cap = POOL_BYTES
         with self._lock:
             self.hits += len(read.used)
-            self.misses += read.misses
+            self.misses += len(read.missed)
             for key in read.used:
                 if key in self._items:
                     self._items.move_to_end(key)
@@ -4419,7 +4641,8 @@ _POOL = DataPool()
 
 def pool_stats() -> dict:
     """{bytes, entries, hits, misses, evictions} of the process's
-    DataPool; hits and misses count its lookups of single entries."""
+    DataPool; hits and misses count the entries each stripe read found
+    or missed, once per read."""
     return _POOL.stats()
 
 
@@ -4432,13 +4655,13 @@ class _PoolRead:
     decodes what it missed sees one set of entries whatever other threads
     evict meanwhile."""
 
-    __slots__ = ("owner", "new", "used", "misses")
+    __slots__ = ("owner", "new", "used", "missed")
 
     def __init__(self, owner: tuple):
         self.owner = owner
         self.new: dict = {}  # key -> (value, bytes)
         self.used: dict = {}  # key -> (value, bytes) found in the pool
-        self.misses = 0
+        self.missed: set = set()  # keys asked for and not in the pool
 
     def view(self, part: tuple, size) -> "_Pooled":
         return _Pooled(self, self.owner + part, size)
@@ -4466,7 +4689,7 @@ class _Pooled:
         if hit is None:
             hit = _POOL.peek(key)
             if hit is None:
-                read.misses += 1
+                read.missed.add(key)
                 return None
             read.used[key] = hit
         return hit[0]
@@ -4488,7 +4711,9 @@ def _array_bytes(arr: pa.Array) -> int:
 
 
 def _piece_bytes(piece: _Piece) -> int:
-    return piece.values.nbytes
+    if piece.blocks is None:
+        return piece.values.nbytes
+    return piece.values.nbytes + sum(a.nbytes for a in piece.blocks)
 
 
 #: OrcReaders of the files most recently looked up, keyed by _reader_key
@@ -4587,11 +4812,12 @@ def orc_point_lookup(path: str, column: str, value,
     dense, and each group's PRESENT map); string dictionaries and the
     blocks of direct strings and nested columns are pooled too. A later
     lookup of the group reads each column with one NumPy gather from its
-    piece and reads no file bytes for it: a stripe whose pieces are all
-    pooled is served without a read. The entries go with their reader:
-    a rewritten file's new stat key, forget_reader and the reader
-    cache's eviction drop them, so a replaced file is never served
-    pooled data.
+    piece (a direct string's bytes from its pooled blocks) and reads no
+    file bytes for it: a stripe whose pieces and blocks are all pooled
+    is served without a read, and a missed block is read alone. The
+    entries go with their reader: a rewritten file's new stat key,
+    forget_reader and the reader cache's eviction drop them, so a
+    replaced file is never served pooled data.
 
     The probe is hashed once (Python ints, under both integer bloom
     hashes) and each kept stripe's groups are bit-tested in one
@@ -4601,17 +4827,19 @@ def orc_point_lookup(path: str, column: str, value,
     type cannot be compared with the column matches nothing), then each
     column is read at the matching rows only, once over all the hit
     groups, as one Arrow array per column (_decode_column_rows): from
-    the pieces, a direct string or binary's rows' bytes read alone.
+    the pieces, a direct string or binary's rows' bytes from the blocks
+    that hold them alone. A str or bytes probe of a direct string key is
+    compared byte for byte with the values of its length only.
     Each phase reads just the byte ranges of the streams it decodes,
     coalesced where they touch, through this call's handle; a stream is
     decompressed only over the blocks that hold the kept groups
-    (_group_bytes). A float or direct
-    string/binary DATA stream of a file that this engine wrote (its
-    Footer softwareVersion) is decompressed only over the blocks that
-    hold the wanted values' bytes, found by block arithmetic from the
-    PostScript's compressionBlockSize. A reader that is not cached (a
-    filesystem without mtimes) reads the same way, keeping its pieces
-    for the call only."""
+    (_group_bytes). A float DATA stream of a file that this engine wrote
+    (its Footer softwareVersion) is decompressed only over the blocks
+    that hold the wanted values' bytes, found by block arithmetic from
+    the PostScript's compressionBlockSize; a direct string or binary's,
+    in every file, by its group's block directory. A reader that is not
+    cached (a filesystem without mtimes) reads the same way, keeping its
+    pieces for the call only."""
     import datetime as _dt
     import decimal as _decimal
 

@@ -4,11 +4,13 @@ Files of this engine's writer start every row group of a stream on a
 compression-block boundary, and every block but a group's last holds
 exactly the PostScript's compressionBlockSize bytes; the Footer's
 softwareVersion names the engine. A lookup then decompresses a direct
-string, binary or float DATA stream only from the block that holds the
-selected values' first byte (sources/orc_file.py:_group_bytes). Every
-lookup here must equal a filter of the source table; the block counts
-show the seek; files of other writers, and merges of mixed inputs, read
-from the group start; a marker whose blocks are short fails loudly.
+string or binary DATA stream only over the blocks that hold the selected
+values (sources/orc_file.py:_value_bytes, by the group's block
+directory), and a float DATA stream from the block that holds the first
+selected value (_group_bytes). Every lookup here must equal a filter of
+the source table; the block counts show the seek; files of other
+writers, and merges of mixed inputs, read from the group start; a
+marker whose blocks are short fails loudly.
 """
 
 from collections import Counter
@@ -167,12 +169,13 @@ def test_nullable_string_rows_seek_to_their_blocks(ours, table, where):
     """A selected string in the first block, a middle one, the last
     block, and one straddling a block edge: the rows map to dense values
     through PRESENT (30% of txt is null), and txt's DATA decompresses
-    only the blocks that hold the value; a seek that lands on the
-    group's last block also checks that the block before it is full."""
+    only the blocks that hold the value. The group's block directory
+    checks that its blocks end where its DATA ends, and each block's size,
+    so a value in the group's last block reads that block alone."""
     row = _edge_rows(table.column("txt").combine_chunks())[where]
     key = int(table.column("k")[row].as_py())
     blocks = _lookup(ours, table, key)
-    assert blocks[("txt", of.S_DATA)] == (1 if where in ("first", "middle") else 2)
+    assert blocks[("txt", of.S_DATA)] == (2 if where == "edge" else 1)
     assert len(_data_stream_blocks(ours, 2)) > 8
 
 
@@ -185,7 +188,7 @@ def test_original_binary_blocks_seek(ours, table, where):
     assert all(n == BLOCK for n, _ in stored[:-1])
     row = _edge_rows(table.column("blob").combine_chunks())[where]
     blocks = _lookup(ours, table, int(table.column("k")[row].as_py()))
-    assert blocks[("blob", of.S_DATA)] == (1 if where in ("first", "middle") else 2)
+    assert blocks[("blob", of.S_DATA)] == (2 if where == "edge" else 1)
 
 
 @pytest.mark.parametrize("where", ["first", "last"])
@@ -253,7 +256,7 @@ def test_other_block_size_recorded_seeks_by_it(table, tmp_path):
     assert of.read_metadata(path).seek_block_size == SMALL
     row = _edge_rows(table.column("txt").combine_chunks())["last"]
     blocks = _lookup(path, table, int(table.column("k")[row].as_py()))
-    assert blocks[("txt", of.S_DATA)] == 2
+    assert blocks[("txt", of.S_DATA)] == 1
     _lookup(path, table, -1)
 
 
@@ -271,6 +274,23 @@ def test_marker_with_short_blocks_raises(table, tmp_path, where):
     assert isinstance(got.value.__cause__, CorruptStream)
     assert of.orc_to_table(path).equals(of.orc_to_table(_write(
         table, str(tmp_path / "whole.orc"))))  # a scan reads no window
+
+
+def test_marker_whose_last_block_fits_the_frame_raises(tmp_path):
+    """Blocks of 64 KiB under a PostScript that says 256 KiB, over a group
+    of 320 KiB: the group's block directory ends in a 64 KiB block, as
+    large as the file's second block, so only the count of the group's
+    blocks tells the framing apart; a lookup of a value past 256 KiB
+    raises instead of reading the second block's bytes."""
+    n = (BLOCK + SMALL) // 64
+    rng = np.random.default_rng(2)
+    tbl = pa.table({"k": pa.array(np.arange(n)),
+                    "blob": pa.array([rng.bytes(64) for _ in range(n)], pa.binary())})
+    path = _write(tbl, str(tmp_path / "lying.orc"), block=SMALL, record=False)
+    assert len(_data_stream_blocks(path, 2)) == 5
+    with pytest.raises(ValueError, match="corrupt ORC stripe") as got:
+        of.orc_point_lookup(path, "k", n - 1)
+    assert isinstance(got.value.__cause__, CorruptStream)
 
 
 def test_group_bytes_window_checks():

@@ -678,7 +678,8 @@ def test_in_list_pruning(tmp_path):
 
 def test_point_lookup_miss_schema_matches_hit(tmp_path):
     """ADVICE r3 #4: hit- and miss-path tables share one schema, nested
-    columns included (callers union results across probes)."""
+    columns included (callers union results across probes); every miss
+    returns the one empty table built for the file's reader."""
     from orc_rust_spark.sources.orc_file import orc_point_lookup
 
     tbl, path = _nested_rg_file(tmp_path, n=20000)
@@ -686,6 +687,7 @@ def test_point_lookup_miss_schema_matches_hit(tmp_path):
     miss, _, _ = orc_point_lookup(path, "id", 10**15)
     assert miss.num_rows == 0 and hit.num_rows == 1
     assert miss.schema.equals(hit.schema), (miss.schema, hit.schema)
+    assert orc_point_lookup(path, "id", -(10**15))[0] is miss
 
 
 def _our_indexed_file(tmp_path, n=100000, compression="zlib"):

@@ -1,12 +1,12 @@
 """Point lookups read the non-key columns at the matching rows only
 (sources/orc_file.py:_decode_column_rows): PRESENT maps the rows to dense
 offsets once per group, a scalar column is gathered from its hit groups
-decoded whole (pieces), a direct string by its byte windows, and each
-column becomes one Arrow array. Every scalar kind, with and without nulls, must come back as
-a filter of the source table and as a whole-group decode of the hit
-groups followed by a take, on this engine's files (4 KiB blocks, so a
-1,000-row group spans several) and on pyarrow's, under none, zlib and
-zstd. The probed key sits in a group's first and last rows, which hold
+decoded whole (pieces), a direct string from the blocks of its rows, and
+each column becomes one Arrow array. Every scalar kind, with and without
+nulls, must come back as a filter of the source table and as a
+whole-group decode of the hit groups followed by a take, on this
+engine's files (4 KiB blocks, so a 1,000-row group spans several) and on
+pyarrow's, under none, zlib and zstd. The probed key sits in a group's first and last rows, which hold
 the first and last bytes of the group's blocks.
 """
 
@@ -290,10 +290,12 @@ def test_rewritten_file_never_serves_pooled_rows(pool, tmp_path, how):
 
 
 def test_pool_stays_under_its_cap_with_four_threads(pool, table, tmp_path, monkeypatch):
-    """Four threads make mixed lookups (hits, misses, an integer and a
-    dictionary-string key) over three files with a small cap: after every
-    lookup the pool holds at most the cap, it evicts and it hits, and
-    every result equals a filter of the source."""
+    """Four threads make mixed lookups (hits, misses, an integer, a
+    dictionary-string, a direct string and a binary key, whose block
+    directories a pyarrow file's lookups extend as they go) over three
+    files with a small cap: after every lookup the pool holds at most the
+    cap, it evicts and it hits, and every result equals a filter of the
+    source."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
@@ -304,7 +306,9 @@ def test_pool_stays_under_its_cap_with_four_threads(pool, table, tmp_path, monke
         paths.append(str(tmp_path / f"{i}.orc"))
         FILES[name](table, paths[-1])
     probes = [("k", v) for v in (-1, -2, 10, 1_234, 4_998, -5)] + [
-        ("lang", "gamma"), ("lang_n", "beta"), ("k", 3_333)]
+        ("lang", "gamma"), ("lang_n", "beta"), ("k", 3_333)] + [
+        (c, table.column(c)[r].as_py()) for c, r in (
+            ("text", 4_321), ("text_n", 999), ("blob", 2_999), ("text", 12))]
     jobs = [(p, c, v) for _ in range(3) for p in paths for c, v in probes]
     want = {(c, v): table.filter(pc.equal(table.column(c), v)) for c, v in probes}
     over = []
@@ -790,14 +794,23 @@ def test_sub_microsecond_timestamps_read_alone(pool, tmp_path):
 
 def test_warm_lookup_of_a_pooled_stripe_reads_nothing(pool, piece_table, tmp_path,
                                                       monkeypatch):
-    """A repeated lookup whose stripe's pieces are all pooled reads no
-    byte of the file and plans no stream range. (A direct string column,
-    such as this engine's writer makes of the all-null one, is read at
-    its rows' bytes on every lookup.)"""
-    piece_table = piece_table.drop_columns(["none"])
+    """A repeated lookup whose stripe's pieces and blocks are all pooled
+    reads no byte of the file and plans no stream range, by an integer and
+    by a direct string key, with direct string and binary columns (the
+    all-null one among them) read at their rows."""
+    rng = np.random.default_rng(3)
+    piece_table = piece_table.append_column(
+        "url", pa.array([f"https://example.org/{i * 7919 % N}" for i in range(N)])
+    ).append_column(
+        "text", pa.array([f"{i} " + "lorem " * int(m)
+                          for i, m in enumerate(rng.integers(0, 30, N))])
+    ).append_column("blob", pa.array([rng.bytes(int(m)) for m in rng.integers(0, 50, N)]))
     path = str(tmp_path / "warm.orc")
     PIECE_FILES["ours-zstd"](piece_table, path)
-    of.orc_point_lookup(path, "k", -1)
+    assert all(_direct(path, c) for c in ("url", "text", "blob", "none"))
+    probes = [("k", -1), ("url", piece_table.column("url")[SPREAD[2]].as_py())]
+    for key, value in probes:
+        of.orc_point_lookup(path, key, value)
     reads = []
     real_open = of.fsio.open_input
 
@@ -825,9 +838,10 @@ def test_warm_lookup_of_a_pooled_stripe_reads_nothing(pool, piece_table, tmp_pat
     monkeypatch.setattr(of.fsio, "open_input", lambda *a: Counting(real_open(*a)))
     monkeypatch.setattr(of.StripeIndex, "ranges", planned)
     monkeypatch.setattr(of, "_fetch_streams", planned)
-    got = of.orc_point_lookup(path, "k", -1)[0]
-    assert not reads
-    _same(got, piece_table.filter(pc.equal(piece_table.column("k"), -1)))
+    for key, value in probes:
+        got = of.orc_point_lookup(path, key, value)[0]
+        assert not reads and got.num_rows
+        _same(got, piece_table.filter(pc.equal(piece_table.column(key), value)))
 
 
 def test_mixed_type_set_probe_keeps_and_matches_nothing(table, tmp_path):
@@ -858,9 +872,10 @@ def test_mixed_type_set_probe_keeps_and_matches_nothing(table, tmp_path):
 
 
 def test_lookup_fetches_no_stream_range_twice(pool, table, tmp_path, monkeypatch):
-    """A direct string key has no piece, so both phases of a lookup read
-    its group's bytes: the second reuses what the first fetched, cold and
-    warm, and every other stream range is fetched once as well."""
+    """A direct string key's group is fetched by the key phase, and the
+    rows' phase reuses its bytes and blocks: a cold lookup fetches every
+    stream range once, and a warm one, whose pieces and blocks are
+    pooled, fetches nothing."""
     path = str(tmp_path / "text.orc")
     _ours(table, path, "zstd")
     wanted = []
@@ -872,12 +887,12 @@ def test_lookup_fetches_no_stream_range_twice(pool, table, tmp_path, monkeypatch
 
     monkeypatch.setattr(of, "_fetch_streams", recording)
     value = table.column("text")[1_501].as_py()
-    for _ in range(2):
+    for warm in (False, True):
         del wanted[:]
         got = of.orc_point_lookup(path, "text", value)[0]
         _same(got, table.filter(pc.equal(table.column("text"), value)))
         ranges = [(key, r) for want in wanted for key, rs in want.items() for r in rs]
-        assert wanted and len(ranges) == len(set(ranges))
+        assert (not wanted) if warm else (wanted and len(ranges) == len(set(ranges)))
 
 
 def test_direct_string_at_the_last_slot_of_a_full_group(pool, tmp_path):
@@ -893,3 +908,114 @@ def test_direct_string_at_the_last_slot_of_a_full_group(pool, tmp_path):
     for _ in range(2):
         got = of.orc_point_lookup(path, "k", n - 1)[0]
         assert got.column("text").to_pylist() == [f"row-{n - 1}"]
+
+
+# --- direct string keys: a length filter, then a byte compare -------------
+
+
+def _direct(path, column):
+    """Whether ``column`` of the file's first stripe is a direct (not a
+    dictionary) string or binary column, or None if it is neither."""
+    meta = of.read_metadata(path)
+    cid = meta.types[0].subtypes[meta.types[0].field_names.index(column)]
+    if meta.types[cid].kind not in of._STRING_KINDS:
+        return None
+    st = meta.stripes[0]
+    with open(path, "rb") as fh:
+        fh.seek(st.offset + st.index_length + st.data_length)
+        ix = of.StripeIndex(fh.read(st.footer_length), meta, st.number_of_rows,
+                            lambda end: b"")
+    return not of._is_dict(ix, cid)
+
+
+def _string_key_table(seed=5) -> pa.Table:
+    """A direct string key ``url`` and the same bytes as a binary key
+    ``raw``, with a string and a binary payload, over five 1,000-row
+    groups: keys that are prefixes of others ("a", "ab", "abc", each in
+    two groups), the empty string, nulls, long values that cross 4 KiB
+    blocks, and a key every group repeats."""
+    rng = np.random.default_rng(seed)
+    url = [f"https://example.org/{i:05d}/" + "x" * int(m)
+           for i, m in enumerate(rng.integers(0, 80, N))]
+    for rows, value in [((7, 3_990), "a"), ((8, 2_001), "ab"), ((9, 4_999), "abc"),
+                        ((0, 1_500, 1_501), ""), ((999, 1_999, 2_999, 3_999, 4_000), "same"),
+                        ((2_500,), "y" * 9_000), ((2_501,), "y" * 8_999 + "z")]:
+        for r in rows:
+            url[r] = value
+    nulls = rng.random(N) < 0.1
+    nulls[[7, 8, 9, 0, 1_500, 1_501, 999, 1_999, 2_999, 3_999, 4_000, 2_500, 2_501]] = False
+    nulls[[10, 3_000]] = True
+    url = pa.array(url, mask=nulls)
+    return pa.table({
+        "url": url,
+        "raw": url.cast(pa.binary()),
+        "text": pa.array([f"{i} " + "lorem " * int(m)
+                          for i, m in enumerate(rng.integers(0, 40, N))],
+                         mask=rng.random(N) < 0.2),
+        "blob": pa.array([rng.bytes(int(m)) for m in rng.integers(0, 60, N)]),
+    })
+
+
+STRING_FILES = {"ours-zstd": FILES["ours-zstd"], "ours-none": FILES["ours-none"],
+                "pyarrow-zstd": FILES["pyarrow-zstd"], "pyarrow-zlib": FILES["pyarrow-zlib"]}
+#: (column, probe): prefixes of one another, the empty string, a key every
+#: group repeats, long keys one byte apart, a key of a common length that
+#: is absent, a str probe of the binary column and a bytes probe of the
+#: string one, a bytes probe that is not UTF-8, and probes of other types
+STRING_PROBES = [("url", "a"), ("url", "ab"), ("url", "abc"), ("url", ""), ("url", "same"),
+                 ("url", "y" * 9_000), ("url", "y" * 8_999 + "z"), ("url", "zz"),
+                 ("raw", "ab"), ("url", b"abc"), ("raw", b""), ("url", b"\xff"),
+                 ("raw", "same"), ("url", 5), ("raw", 5), ("url", None)]
+
+
+def _filtered(table: pa.Table, column: str, value) -> pa.Table:
+    """The rows of ``table`` whose ``column`` equals ``value`` by
+    pyarrow; none for a probe pyarrow cannot compare with the column."""
+    try:
+        mask = pc.equal(table.column(column), value)
+    except (pa.ArrowNotImplementedError, pa.ArrowInvalid, TypeError):
+        return table.slice(0, 0)
+    return table.filter(mask.combine_chunks().fill_null(False))
+
+
+@pytest.mark.parametrize("writer", sorted(STRING_FILES))
+def test_direct_string_lookups_equal_filter(pool, tmp_path, monkeypatch, writer):
+    """Lookups by a direct string and a direct binary key equal a filter of
+    the source cold (each on an emptied pool, whose misses count each
+    entry once), warm (from pooled pieces and blocks: no piece decoded,
+    nothing fetched, nothing decompressed) and with a pool too small to
+    keep a group's blocks, on this engine's files (4 KiB blocks,
+    compressed or not) and on pyarrow's."""
+    table = _string_key_table()
+    path = str(tmp_path / "strings.orc")
+    STRING_FILES[writer](table, path)
+    assert all(_direct(path, c) for c in ("url", "raw", "text", "blob"))
+    want = {p: _filtered(table, *p) for p in STRING_PROBES}
+    assert all(want[p].num_rows for p in STRING_PROBES[:7])
+    assert want[("url", "same")].num_rows == 5 and not want[("url", "zz")].num_rows
+    for column, value in STRING_PROBES:
+        of.forget_reader(path)
+        before = pool.stats()
+        got, decoded, total = of.orc_point_lookup(path, column, value)
+        _same(got, want[(column, value)])
+        assert total == N // STRIDE
+        # every entry a cold lookup missed was filed, and counted once
+        after = pool.stats()
+        assert after["misses"] - before["misses"] == after["entries"]
+    for column, value in STRING_PROBES:
+        of.orc_point_lookup(path, column, value)
+    fetched, decompressed = [], []
+    real_fetch, real_block = of._fetch_streams, of._block_at
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(of, "_build_piece", lambda *a: pytest.fail("a warm lookup built a piece"))
+        mp.setattr(of, "_fetch_streams", lambda *a: fetched.append(a[1]) or real_fetch(*a))
+        mp.setattr(of, "_block_at", lambda *a: decompressed.append(a[2]) or real_block(*a))
+        for column, value in STRING_PROBES:
+            _same(of.orc_point_lookup(path, column, value)[0], want[(column, value)])
+    assert not fetched and not decompressed
+    monkeypatch.setattr(of, "POOL_BYTES", 8 << 10)
+    of.forget_reader(path)
+    for _ in range(2):
+        for column, value in STRING_PROBES:
+            _same(of.orc_point_lookup(path, column, value)[0], want[(column, value)])
+    assert pool.stats()["evictions"] and pool.stats()["bytes"] <= 8 << 10

@@ -661,14 +661,44 @@ def test_encoder_bytes_do_not_depend_on_batch_size(name):
                 assert encode_rlev2(v, signed=signed, batch_values=cap) == want, cap
 
 
-@pytest.mark.parametrize("signed", [True, False])
-@pytest.mark.parametrize("name", sorted(ENCODER_CASES) + ["<mixed>"])
-def test_reader_skip_and_partial_reads_equal_slices(name, signed):
+def _delta_shapes(signed):
+    """-> (values, stream) of DELTA runs the encoder does not write: one
+    value under a width code (old Hive writers), two values under a width
+    code, a fixed run with a negative delta, and a fixed run that wraps
+    past the int64 range (for unsigned values: across 2**63)."""
+    from orc_rust_spark.codecs.rle_v2 import _delta_head
+    from orc_rust_spark.codecs.util import zigzag_encode_scalar
+
+    def u(v):
+        return zigzag_encode_scalar(v) if signed else v & (2**64 - 1)
+
+    wrap = (np.arange(6, dtype=np.uint64) + np.uint64(I64_MAX - 2)).view(np.int64)
+    runs = [
+        ([-3], _delta_head(1, 2, u(-3), 0)),
+        ([7, 4], _delta_head(2, 2, u(7), -3)),
+        ([100 - 7 * i for i in range(12)], _delta_head(12, 0, u(100), -7)),
+        (wrap.tolist(), _delta_head(6, 0, u(I64_MAX - 2), 1)),
+        ([I64_MIN, I64_MIN + 5], _delta_head(2, 4, u(I64_MIN), 5)),
+    ]
+    return (np.array([x for vals, _ in runs for x in vals], dtype=np.int64),
+            b"".join(enc for _, enc in runs))
+
+
+def _rle_case(name, signed):
+    """-> (values, stream) of an encoder case, the mixed corpus or the
+    DELTA shapes."""
     if name == "<mixed>":
-        v, enc = _mixed_corpus(signed)
-    else:
-        v = _encoder_case(name)
-        enc = encode_rlev2(v, signed=signed)
+        return _mixed_corpus(signed)
+    if name == "<delta shapes>":
+        return _delta_shapes(signed)
+    v = _encoder_case(name)
+    return v, encode_rlev2(v, signed=signed)
+
+
+@pytest.mark.parametrize("signed", [True, False])
+@pytest.mark.parametrize("name", sorted(ENCODER_CASES) + ["<mixed>", "<delta shapes>"])
+def test_reader_skip_and_partial_reads_equal_slices(name, signed):
+    v, enc = _rle_case(name, signed)
     bounds = _run_bounds(enc)
     assert bounds[-1] == v.size
     rng = np.random.default_rng(zlib.crc32(name.encode()) + signed)
@@ -769,38 +799,6 @@ def test_reader_truncated_stream_raises_corrupt_stream(signed):
 # a slice of the full decode for every sub-encoding, at run edges, after
 # any skip, and fail as the full decode does on a cut stream.
 
-def _delta_shapes(signed):
-    """-> (values, stream) of DELTA runs the encoder does not write: one
-    value under a width code (old Hive writers), two values under a width
-    code, a fixed run with a negative delta, and a fixed run that wraps
-    past the int64 range (for unsigned values: across 2**63)."""
-    from orc_rust_spark.codecs.rle_v2 import _delta_head
-    from orc_rust_spark.codecs.util import zigzag_encode_scalar
-
-    def u(v):
-        return zigzag_encode_scalar(v) if signed else v & (2**64 - 1)
-
-    wrap = (np.arange(6, dtype=np.uint64) + np.uint64(I64_MAX - 2)).view(np.int64)
-    runs = [
-        ([-3], _delta_head(1, 2, u(-3), 0)),
-        ([7, 4], _delta_head(2, 2, u(7), -3)),
-        ([100 - 7 * i for i in range(12)], _delta_head(12, 0, u(100), -7)),
-        (wrap.tolist(), _delta_head(6, 0, u(I64_MAX - 2), 1)),
-        ([I64_MIN, I64_MIN + 5], _delta_head(2, 4, u(I64_MIN), 5)),
-    ]
-    return (np.array([x for vals, _ in runs for x in vals], dtype=np.int64),
-            b"".join(enc for _, enc in runs))
-
-
-def _walker_case(name, signed):
-    if name == "<mixed>":
-        return _mixed_corpus(signed)
-    if name == "<delta shapes>":
-        return _delta_shapes(signed)
-    v = _encoder_case(name)
-    return v, encode_rlev2(v, signed=signed)
-
-
 def _selections(bounds, skip, size, rng):
     """Offsets after ``skip``: every run's first and last value, single
     run edges, random picks, and a dense window (whole runs unpacked)."""
@@ -819,7 +817,7 @@ def _selections(bounds, skip, size, rng):
 def test_point_walker_equals_decode_slices(name, signed):
     from orc_rust_spark.codecs.rle_v2 import decode_rlev2_points
 
-    v, enc = _walker_case(name, signed)
+    v, enc = _rle_case(name, signed)
     bounds = _run_bounds(enc)
     assert bounds[-1] == v.size
     rng = np.random.default_rng(zlib.crc32(name.encode()) + signed)
@@ -837,12 +835,12 @@ def test_walker_cases_cover_every_shape():
     encoder never writes, int64 extremes and unsigned values >= 2**63."""
     kinds = set()
     for name in list(ENCODER_CASES) + ["<mixed>"]:
-        kinds |= _sub_encodings(_walker_case(name, True)[1])
+        kinds |= _sub_encodings(_rle_case(name, True)[1])
     assert kinds == {"SHORT_REPEAT", "DIRECT", "PATCHED_BASE", "DELTA", "FIXED_DELTA"}
     v, enc = _delta_shapes(False)
     assert _run_bounds(enc) == [0, 1, 3, 15, 21, 23]
     assert v.min() == I64_MIN and v.max() == I64_MAX
-    assert (_walker_case("unsigned_high", False)[0] < 0).all()  # >= 2**63 as uint64
+    assert (_rle_case("unsigned_high", False)[0] < 0).all()  # >= 2**63 as uint64
 
 
 def test_point_walker_decodes_dense_selections_as_one_stretch(monkeypatch):
@@ -883,7 +881,7 @@ def test_point_walker_truncated_stream_raises_corrupt_stream(name, signed):
     from orc_rust_spark.codecs.rle_v2 import decode_rlev2_points
     from orc_rust_spark.codecs.util import CorruptStream
 
-    v, enc = _walker_case(name, signed)
+    v, enc = _rle_case(name, signed)
     half = v.size // 2
     reach_end = np.array([0, half, v.size - 1])
     for cut in range(len(enc)):

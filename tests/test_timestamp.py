@@ -252,3 +252,37 @@ def test_trunc_div_equals_floor_fixup_form(unit):
     assert got[0].dtype == got[1].dtype == np.int64
     assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
     assert np.array_equal(got[0] * unit + got[1], ts)
+
+
+#: values of each Arrow unit: sub-second parts, pre-1970, and (ns) one in
+#: 2001 that a microsecond reading of the ticks would put out of range
+UNIT_VALUES = {"s": [5, 2_000_000, -86_401, 1_700_000_000],
+               "ms": [5, 2_000_000, -1, 1_700_000_000_123],
+               "us": [5, 2_000_000, -1, 1_700_000_000_123_456],
+               "ns": [5, 2_000_000, -1, 10**18, 1_700_000_000_123_456_789]}
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/New_York"])
+@pytest.mark.parametrize("unit", sorted(UNIT_VALUES))
+def test_write_orc_keeps_every_timestamp_unit(tmp_path, unit, zone):
+    """write_orc stores a timestamp column of every Arrow unit as the
+    instants it holds, under UTC and a non-UTC writer zone: this engine's
+    reader (at ns) and pyarrow's read the same values back, and a
+    microsecond read of a sub-microsecond value raises."""
+    import pyarrow as pa
+    import pyarrow.orc as paorc
+
+    from orc_rust_spark.sources import orc_file as of
+
+    arr = pa.array(np.array(UNIT_VALUES[unit], dtype=f"datetime64[{unit}]"))
+    path = str(tmp_path / f"{unit}.orc")
+    of.write_orc(pa.table({"t": arr}), path, compression="zstd", writer_timezone=zone)
+    want = arr.cast(pa.timestamp("ns")).to_pylist()
+    ours = of.orc_to_table(path, timestamp_unit="ns").column("t")
+    assert ours.cast(pa.timestamp("ns")).to_pylist() == want
+    assert paorc.read_table(path).column("t").cast(pa.timestamp("ns")).to_pylist() == want
+    if unit == "ns":
+        with pytest.raises(ValueError, match="sub-microsecond"):
+            of.orc_to_table(path)
+    else:
+        assert of.orc_to_table(path).column("t").cast(pa.timestamp("ns")).to_pylist() == want
