@@ -2285,8 +2285,10 @@ def _decode_column_rows(
             if streams is None:
                 return ix.ranges([col_id], missing)
             dictionary = _dictionary(ix, streams, col_id, dict_cache)
-    if missing or wants:
-        return _wants([ix.ranges([col_id], missing)] + wants if missing else wants)
+    if missing:
+        wants.append(ix.ranges([col_id], missing))
+    if wants:
+        return _wants(wants)
     valid = np.concatenate(valids) if valids else None
     if not vals:
         # every picked row is null
