@@ -30,10 +30,11 @@ decoded-data pool. No Spark.
 rebuilds the same lookup file, checks every probe's rows, then runs the
 probes ``--reps`` times and prints the median and 90th percentile CPU
 per lookup (``total``, ``total_p90``) and the median split by self time
-into block decompression, RLEv2 reads (``decode_rlev2``), the key phase
-(the probed column's read and comparisons, ``orc_file._key_mask``) and
-the rest, plus per lookup the block decompressions, the RLEv2 calls, the
-pieces decoded whole (``orc_file._build_piece``) and the file reads (a
+into block decompression, RLEv2 reads (``decode_rlev2``), stripe and
+row-group pruning (``orc_file.keep_mask``), the key phase (the probed
+column's read and comparisons, ``orc_file._key_mask``) and the rest,
+plus per lookup the block decompressions, the RLEv2 calls, the pieces
+decoded whole (``orc_file._build_piece``) and the file reads (a
 phase's ranges, one read each), and the decoded-data pool's counters
 (``orc_file.pool_stats``) with its bytes and entries by kind: a piece's
 form (for, codes, scaled, dense, present) or dict and block.
@@ -238,8 +239,8 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
     """Median and 90th percentile CPU per warm point lookup on the
     perfbench ``workload``'s lookup file (probing ``column`` if given,
     else the workload's key), the median split by self time into block
-    decompression, RLEv2 reads, the key phase (the probed column's read
-    and comparisons) and the rest; the block decompressions, RLEv2 calls,
+    decompression, RLEv2 reads, pruning (keep_mask), the key phase (the
+    probed column's read and comparisons) and the rest; the block decompressions, RLEv2 calls,
     whole-piece decodes and file reads per lookup; and the pool's
     counters and contents. With ``cold``, the same of lookups each made
     after the file's pooled data is dropped."""
@@ -281,7 +282,8 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
     # column as an Arrow array (_decode_column_rows) keeps it as key
     targets = [(blockc, "decompress_stream", "decompress"),
                (of, "decode_rlev2", "rlev2"), (of, "_eq_mask", "key"),
-               (of, "_key_mask", "key"), (of, "_decode_column_rows", "rest")]
+               (of, "keep_mask", "prune"), (of, "_key_mask", "key"),
+               (of, "_decode_column_rows", "rest")]
     saved = [(mod, name, getattr(mod, name)) for mod, name, _ in targets] + [
         (of, "_build_piece", of._build_piece), (of, "_span_reader", of._span_reader)]
 
@@ -296,7 +298,7 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
 
     def split(drop: bool) -> tuple[dict, dict]:
         per_lookup: dict[str, list[float]] = {k: [] for k in (
-            "total", "decompress", "rlev2", "key", "rest")}
+            "total", "decompress", "rlev2", "prune", "key", "rest")}
         # reported name -> the ``calls`` counter it reads
         counted_as = {"decompress_calls": "decompress", "rlev2_calls": "rlev2",
                       "piece_decodes": "piece_decodes", "file_reads": "file_reads"}
@@ -308,7 +310,7 @@ def lookup_cost(seed: int, workload: str, reps: int, column: str = "",
                 self_s.clear()
                 calls.clear()
                 lookup(client.path, client.key, probe)
-                for part in ("decompress", "rlev2", "key", "rest"):
+                for part in ("decompress", "rlev2", "prune", "key", "rest"):
                     per_lookup[part].append(self_s.get(part, 0.0))
                 per_lookup["total"].append(sum(self_s.values()))
                 for what, counter in counted_as.items():

@@ -203,7 +203,8 @@ def bit_positions(h: int, k: int, bit_count: int) -> list[int]:
 class BloomMatrix:
     """The bloom filters of one column's row groups, tested for every
     group in one step. Filters of one shape (k, words) sit in a single
-    ``(groups, words)`` uint64 array; a group without a filter always
+    ``(words, groups)`` uint64 array, so one bit of every group's filter
+    is one short contiguous row; a group without a filter always
     maybe-contains. Filters of unequal shapes keep the per-group test."""
 
     def __init__(self, filters: list["BloomFilter | None"]):
@@ -211,27 +212,38 @@ class BloomMatrix:
         shapes = {(f.k, f.bitset.size) for f in filters if f is not None}
         self.filters = filters if len(shapes) > 1 else None
         self.missing = np.array([f is None for f in filters], dtype=bool)
-        self.k, words = shapes.pop() if len(shapes) == 1 else (0, 0)
-        self.bits = np.zeros((self.n_groups, words), dtype=np.uint64)
+        self.any_missing = bool(self.missing.any())
+        self.k, self.n_words = shapes.pop() if len(shapes) == 1 else (0, 0)
+        self.bits = np.zeros((self.n_words, self.n_groups), dtype=np.uint64)
         if self.filters is None:
             for g, f in enumerate(filters):
                 if f is not None:
-                    self.bits[g] = f.bitset
+                    self.bits[:, g] = f.bitset
 
-    def may_contain(self, hashes: list[int]) -> np.ndarray:
-        """Per group: does any of ``hashes`` maybe-belong to its filter?"""
+    def positions(self, hashes: list[int]) -> tuple | None:
+        """The word (hashes, k) and bit mask (hashes, k, 1) arrays of
+        ``hashes``' bits in this matrix's filters, for ``may_contain`` to
+        reuse; None for filters of unequal shapes or none at all."""
+        if self.filters is not None or not self.n_words:
+            return None
+        pos = [p for h in hashes for p in bit_positions(h, self.k, self.n_words * 64)]
+        return (np.array([p >> 6 for p in pos], dtype=np.intp).reshape(len(hashes), self.k),
+                np.array([1 << (p & 63) for p in pos],
+                         dtype=np.uint64).reshape(len(hashes), self.k, 1))
+
+    def may_contain(self, hashes: list[int], at: tuple | None = None) -> np.ndarray:
+        """Per group: does any of ``hashes`` maybe-belong to its filter?
+        ``at`` is their ``positions`` when the caller kept them."""
         if self.filters is not None:
             h = np.array(hashes, dtype=np.uint64)
             return np.array([f is None or bool(f.test_hashes(h).any())
                              for f in self.filters], dtype=bool)
-        if not self.bits.shape[1]:
+        if not self.n_words:
             return self.missing.copy()
-        bit_count = self.bits.shape[1] * 64
-        pos = np.array([bit_positions(h, self.k, bit_count) for h in hashes],
-                       dtype=np.int64)  # (hashes, k)
-        words = self.bits[:, pos // 64]  # (groups, hashes, k)
-        set_ = (words >> (pos % 64).astype(np.uint64)) & np.uint64(1)
-        return set_.astype(bool).all(axis=2).any(axis=1) | self.missing
+        word, mask = at if at is not None else self.positions(hashes)
+        # (hashes, k, groups) words masked to their bit: all set, for any hash
+        may = np.logical_or.reduce(np.logical_and.reduce(self.bits[word] & mask, axis=1))
+        return may | self.missing if self.any_missing else may
 
 
 class BloomFilter:

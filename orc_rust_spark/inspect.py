@@ -201,7 +201,10 @@ def main_orc(argv: list[str]) -> int:
                           "only)")
                     continue
                 blooms = ix.blooms(cid)
-                maybe = of._bloom_keep(blooms, value, blooms.n_groups)
+                n, col_kind = blooms.n_groups, meta.types[cid].kind
+                # without statistics the evaluator asks the filters alone
+                maybe = of.keep_mask(of.Probe(value), of.ColumnStats(col_kind, [None] * n),
+                                     n, blooms, col_kind)
                 print(f"stripe {si}: groups={blooms.n_groups} "
                       f"maybe-contain={np.flatnonzero(maybe).tolist()}")
     return 0

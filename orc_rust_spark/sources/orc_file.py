@@ -22,6 +22,8 @@ public protobuf/ORC specs.
 from __future__ import annotations
 
 import bisect
+import datetime as _dt
+import decimal as _decimal
 import math
 import os
 import re
@@ -31,6 +33,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from . import fsio
 from .. import __version__
@@ -155,6 +158,21 @@ class OrcMeta:
     #: (projection, timestamp unit) -> its zero-row table (_empty_table)
     empty_tables: dict = field(default_factory=dict, init=False, repr=False,
                                compare=False)
+    #: column -> its stripe statistics as arrays (column_stats)
+    stats_arrays: dict = field(default_factory=dict, init=False, repr=False,
+                               compare=False)
+
+    def column_stats(self, cid: int) -> "ColumnStats":
+        """Column ``cid``'s stripe statistics as ColumnStats, built on first
+        use (min and max; the stripe statistics parse keeps no null
+        counts)."""
+        hit = self.stats_arrays.get(cid)
+        if hit is None:
+            per = self.stripe_stats
+            hit = self.stats_arrays[cid] = ColumnStats(self.types[cid].kind, [
+                per[i].get(cid) if i < len(per) else None
+                for i in range(len(self.stripes))])
+        return hit
 
     @property
     def own_writer(self) -> bool:
@@ -310,13 +328,6 @@ def resolve_scan(path: str, filesystem=None) -> tuple[object, list[str]]:
                 "flat file sets")
         raise FileNotFoundError(f"no ORC files at {path!r}")
     return fs, out
-
-
-def expand_paths(path: str) -> list[str]:
-    """A single .orc file, a directory of them, or a glob -> file list.
-    For ``scheme://`` URIs the returned paths are fs-native (pair them
-    with ``resolve_scan``'s filesystem); plain local behavior unchanged."""
-    return resolve_scan(path)[1]
 
 
 _KIND_TO_DDL = {
@@ -1247,7 +1258,14 @@ class StripeIndex:
     at least ``end``, the end of its last ROW_INDEX / BLOOM stream (the
     index region leads the stripe). Row-index entries, seek positions and
     bloom matrices are parsed on first use, so a read pays only for the
-    columns it prunes on and decodes."""
+    columns it prunes on and decodes.
+
+    What every read of the stripe would derive again is made once, on
+    first use, and kept: a column's row-group statistics as the NumPy
+    arrays keep_mask prunes with (``stats``), each projection's read plan
+    (``plan``: its names, column ids and seek check), and each column's
+    read facts (``cols``: kind, dictionary-ness, PRESENT stream, float
+    piece size and Arrow type)."""
 
     def __init__(self, footer_raw: bytes, meta: OrcMeta, n_rows: int,
                  read_index):
@@ -1280,8 +1298,15 @@ class StripeIndex:
         #: shares (OrcReader.stripe), or None: per-call caches only
         self.owner: tuple | None = None
         #: column -> the exponent of its last double piece pooled scaled
-        #: (_pooled_float_values tries it first on the next)
+        #: (_build_piece tries it first on the next)
         self.scales: dict[int, int] = {}
+        root = self.types[0]
+        #: root field name -> its column (the first of a repeated name)
+        self.col_ids = dict(zip(reversed(root.field_names), reversed(root.subtypes)))
+        #: column -> its read facts (_Column), found on first use
+        self.cols = _Columns(self)
+        self._stats: dict[int, ColumnStats | None] = {}
+        self._plans: dict[tuple | None, _Plan] = {}
 
     def _index_stream(self, cid: int, kind: int) -> bytes | None:
         at = self.offsets.get((cid, kind))
@@ -1304,6 +1329,27 @@ class StripeIndex:
                       else _parse_row_index(raw, with_stats=False))
         self._entries[(cid, stats)] = parsed
         return parsed
+
+    def stats(self, cid: int) -> "ColumnStats | None":
+        """Column ``cid``'s row-group statistics as ColumnStats (keep_mask),
+        built on first use from its row-index entries; None without a
+        ROW_INDEX. Entries past the stripe's groups are dropped, and
+        groups past the entries have none."""
+        if cid not in self._stats:
+            entries = self.entries(cid)
+            self._stats[cid] = None if entries is None else ColumnStats(
+                self.types[cid].kind, [e[1] for e in entries[: self.n_groups]],
+                [e[2] for e in entries[: self.n_groups]])
+        return self._stats[cid]
+
+    def plan(self, columns: list[str] | None) -> "_Plan":
+        """The read plan of the ``columns`` projection (None: every
+        column), made on its first read of the stripe and kept."""
+        key = None if columns is None else tuple(columns)
+        hit = self._plans.get(key)
+        if hit is None:
+            hit = self._plans[key] = _Plan(self, columns)
+        return hit
 
     def bloom_kind(self, cid: int) -> int | None:
         """The bloom stream a probe of column ``cid`` may use. Pre-ORC-101
@@ -1411,12 +1457,79 @@ class StripeIndex:
                 for kind, _ in self._seek[cid][0]:
                     want[(cid, kind)] = [self.group_range(cid, kind, g)
                                          for g in groups]
-                if (self.types[cid].kind in _STRING_KINDS
-                        and self.encodings[cid][0] in (E_DICTIONARY,
-                                                       E_DICTIONARY_V2)):
+                if self.cols[cid].is_dict:
                     for kind in (S_LENGTH, S_DICTIONARY_DATA):
                         want[(cid, kind)] = [(0, self.offsets[(cid, kind)][1])]
         return want
+
+
+class _Plan:
+    """A projection's read plan in one stripe (StripeIndex.plan): the
+    projected root ``names`` in file order, their column ``ids``, and
+    ``cids``, those columns with their subtrees."""
+
+    __slots__ = ("names", "ids", "cids", "seekable")
+
+    def __init__(self, ix: StripeIndex, columns: list[str] | None):
+        self.names = [n for n in ix.types[0].field_names
+                      if columns is None or n in columns]
+        self.ids = [ix.col_ids[n] for n in self.names]
+        self.cids = [cid for top in self.ids for cid in _subtree_ids(ix.types, top)]
+        #: the groups every column can seek-decode (the fewest of their
+        #: seek_entries), once one check has found them all
+        self.seekable: int | None = None
+
+    def seeks(self, ix: StripeIndex, need: int) -> bool:
+        """Can every column seek-decode the stripe's first ``need`` groups?
+        A column cannot without seek_entries; the check stops there, or
+        at a column whose entries are too few."""
+        if self.seekable is None:
+            lens = []
+            for cid in self.cids:
+                entries = ix.seek_entries(cid)
+                if entries is None or len(entries) < need:
+                    return False
+                lens.append(len(entries))
+            self.seekable = min(lens, default=ix.n_groups)
+        return need <= self.seekable
+
+
+class _Column:
+    """What a read of one column of a stripe asks of its type and
+    encoding, found once (StripeIndex.cols): its type ``kind``;
+    ``is_dict``, a dictionary-encoded string or binary; ``direct``, a
+    direct one; ``present``, whether it has a PRESENT stream; ``per``,
+    the values of a float or double piece (a seek block's worth in a
+    file with a seek block size, else 0: one piece a group; 0 for other
+    kinds); and ``arrow``, the Arrow type of its reads (_arrow_type_of,
+    None for an unknown kind)."""
+
+    __slots__ = ("kind", "is_dict", "direct", "present", "per", "arrow")
+
+    def __init__(self, ix: StripeIndex, cid: int):
+        k = self.kind = ix.types[cid].kind
+        self.is_dict = (k in _STRING_KINDS
+                        and ix.encodings[cid][0] in (E_DICTIONARY, E_DICTIONARY_V2))
+        self.direct = k in _STRING_KINDS and not self.is_dict
+        self.present = (cid, S_PRESENT) in ix.offsets
+        w, bs = (4 if k == K_FLOAT else 8), ix.block_size
+        self.per = bs // w if k in _FLOAT_KINDS and bs and not bs % w else 0
+        try:
+            self.arrow = _arrow_type_of(ix.types, cid)
+        except KeyError:
+            self.arrow = None
+
+
+class _Columns(dict):
+    """StripeIndex.cols: column -> its _Column, made on first use."""
+
+    def __init__(self, ix: StripeIndex):
+        super().__init__()
+        self.ix = ix
+
+    def __missing__(self, cid: int) -> _Column:
+        col = self[cid] = _Column(self.ix, cid)
+        return col
 
 
 class _StreamBytes:
@@ -1821,12 +1934,6 @@ def _string_equals(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
     return dense
 
 
-def _is_dict(ix: StripeIndex, col_id: int) -> bool:
-    """Is column ``col_id`` a dictionary-encoded string or binary?"""
-    return (ix.types[col_id].kind in _STRING_KINDS
-            and ix.encodings[col_id][0] in (E_DICTIONARY, E_DICTIONARY_V2))
-
-
 def _final_values(ix: StripeIndex, col_id: int, cols: list, unit: str = "us") -> np.ndarray:
     """A scalar column's joined _scalar_values parts (not a direct
     string's) -> its values as its Arrow array holds them: int64 for
@@ -1840,34 +1947,44 @@ def _final_values(ix: StripeIndex, col_id: int, cols: list, unit: str = "us") ->
     return cols[0]
 
 
-#: short and int kinds -> (NumPy dtype, its min, its max)
-_NP_INT = {k: (dt, int(np.iinfo(dt).min), int(np.iinfo(dt).max))
-           for k, dt in ((K_SHORT, np.int16), (K_INT, np.int32))}
+#: pyarrow's take kernel, called without pyarrow.compute.take's option
+#: handling (a point read's few dictionary codes cost that much again)
+_ARRAY_TAKE = pc.get_function("array_take")
+#: integer dtype -> (its min, its max)
+_INT_DTYPE_RANGE = {np.dtype(t): (int(np.iinfo(t).min), int(np.iinfo(t).max))
+                    for t in (np.int8, np.int16, np.int32, np.int64,
+                              np.uint8, np.uint16, np.uint32, np.uint64)}
+#: fixed-width kinds -> the NumPy dtype of their Arrow array's values
+_NP_OF_KIND = {k: np.dtype(t) for k, t in (
+    (K_BYTE, np.int8), (K_SHORT, np.int16), (K_INT, np.int32), (K_LONG, np.int64),
+    (K_FLOAT, np.float32), (K_DOUBLE, np.float64), (K_DATE, np.int32),
+    (K_TIMESTAMP, np.int64), (K_TIMESTAMP_INSTANT, np.int64))}
 
 
 def _values_array(ix: StripeIndex, col_id: int, vals: np.ndarray,
                   dictionary: pa.Array | None = None, unit: str = "us") -> pa.Array:
     """ONE Arrow array (no nulls) of scalar column ``col_id`` from its
     _final_values ``vals``; a dictionary column's codes index
-    ``dictionary`` (_dictionary). A short or int value outside its
-    type's range is corrupt."""
-    t = ix.types[col_id]
-    k = t.kind
-    if k == K_DATE:
-        return pa.array(vals.astype(np.int32), type=pa.date32())
-    if k in _NP_INT:
-        dtype, lo, hi = _NP_INT[k]
-        if vals.size and (vals.min() < lo or vals.max() > hi):
-            raise CorruptStream(f"ORC {_K_TO_ARROW[k]} value outside the type's range")
-        return pa.array(vals.astype(dtype), type=_K_TO_ARROW[k])
-    if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT):
-        return pa.array(vals, type=pa.timestamp(unit))
-    if k == K_DECIMAL:
-        return pa.Array.from_buffers(pa.decimal128(t.precision or 38, t.scale),
-                                     len(vals), [None, pa.py_buffer(vals.tobytes())])
+    ``dictionary`` (_dictionary). A fixed-width kind's array wraps its
+    values' buffer. A short or int value outside its type's range is
+    corrupt."""
+    c = ix.cols[col_id]
+    k = c.kind
     if k in _STRING_KINDS:
-        return dictionary.take(pa.array(vals, type=pa.int64()))
-    return pa.array(vals, type=_K_TO_ARROW[k])
+        codes = np.ascontiguousarray(vals, dtype=np.int64)
+        return _ARRAY_TAKE.call([dictionary, pa.Array.from_buffers(
+            pa.int64(), len(codes), [None, pa.py_buffer(codes)])])
+    if k == K_BOOLEAN:
+        return pa.array(vals, type=pa.bool_())
+    if k in (K_SHORT, K_INT):
+        lo, hi = _INT_DTYPE_RANGE[_NP_OF_KIND[k]]
+        if vals.size and (vals.min() < lo or vals.max() > hi):
+            raise CorruptStream(f"ORC {c.arrow} value outside the type's range")
+    if k != K_DECIMAL:
+        vals = vals.astype(_NP_OF_KIND[k], copy=False)
+    typ = pa.timestamp(unit) if k in (K_TIMESTAMP, K_TIMESTAMP_INSTANT) else c.arrow
+    return pa.Array.from_buffers(typ, len(vals),
+                                 [None, pa.py_buffer(np.ascontiguousarray(vals))])
 
 
 def _binary_array(ix: StripeIndex, col_id: int, data, lengths: np.ndarray) -> pa.Array:
@@ -1881,12 +1998,12 @@ def _scalar_array(ix: StripeIndex, streams: dict, col_id: int, cols: tuple,
                   dict_cache: dict, unit: str = "us") -> pa.Array:
     """ONE Arrow array of scalar column ``col_id`` from one group's
     _scalar_values parts (no nulls); timestamps in ``unit``."""
-    k = ix.types[col_id].kind
-    if k in _STRING_KINDS and not _is_dict(ix, col_id):
+    c = ix.cols[col_id]
+    if c.direct:
         return _binary_array(ix, col_id, *cols)
     return _values_array(ix, col_id, _final_values(ix, col_id, cols, unit),
                          _dictionary(ix, streams, col_id, dict_cache)
-                         if k in _STRING_KINDS else None, unit)
+                         if c.is_dict else None, unit)
 
 
 def _decode_column_group(
@@ -1931,7 +2048,7 @@ def _decode_column_group(
 
     not_null = None
     n_dense = n_g
-    if (col_id, S_PRESENT) in ix.offsets:
+    if ix.cols[col_id].present:
         not_null = _byte_values(read(S_PRESENT), exs, S_PRESENT, n_g, bits=True)
         n_dense = int(not_null.sum())
 
@@ -2029,6 +2146,11 @@ class _Piece:
         v = self.values[sel]
         if self.base is None:
             return v
+        if self.scale is not None:
+            # base 0 and step 1: the scaled integers themselves
+            return decode_scaled(v, self.scale)
+        if not self.base and self.step == 1:
+            return v.astype(np.int64)
         # modulo 2**64, as the offsets were taken: a span wider than
         # int64 comes back exact
         shift = np.uint64(self.base & _MASK64)
@@ -2037,15 +2159,14 @@ class _Piece:
         else:
             out = np.multiply(v, np.uint64(self.step), dtype=np.uint64, casting="unsafe")
             out += shift
-        out = out.view(np.int64)
-        return out if self.scale is None else decode_scaled(out, self.scale)
+        return out.view(np.int64)
 
     def equals(self, value: int) -> np.ndarray:
         """Which values of a frame-of-reference piece (no ``scale``) equal
         the integer ``value``, compared as offsets."""
         q, r = divmod(value - self.base, self.step)
-        info = np.iinfo(self.values.dtype)
-        if r or not info.min <= q <= info.max:
+        lo, hi = _INT_DTYPE_RANGE[self.values.dtype]
+        if r or not lo <= q <= hi:
             return np.zeros(len(self.values), dtype=bool)
         return self.values == q
 
@@ -2078,19 +2199,9 @@ def _for_piece(vals: np.ndarray, kind: str = "for") -> _Piece:
     return _Piece(off.astype(_narrowest(span)), base, step, kind=kind)
 
 
-def _float_per(ix: StripeIndex, col_id: int) -> int:
-    """Values per piece of a float or double column: a seek block's worth
-    in a file with a seek block size (StripeIndex.block_size), else 0 (one
-    piece a group)."""
-    w = 4 if ix.types[col_id].kind == K_FLOAT else 8
-    return ix.block_size // w if ix.block_size and not ix.block_size % w else 0
-
-
 def _split_pieces(sel: np.ndarray, per: int) -> list[tuple[int, np.ndarray]]:
     """[(piece j, offsets in piece j)] of the sorted dense offsets ``sel``
-    of a group cut into pieces of ``per`` values (0: one piece)."""
-    if not per:
-        return [(0, sel)]
+    of a group cut into pieces of ``per`` values."""
     first, last = int(sel[0]) // per, int(sel[-1]) // per
     if first == last:
         return [(first, sel - first * per)]
@@ -2104,7 +2215,7 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
     """Piece ``j`` of group ``g`` of column ``col_id`` (_PRESENT: its
     PRESENT map), decoded whole from ``streams``. Its blocks are not
     cached: the piece stands in for them. A float or double column's
-    piece ``j`` holds the group's j-th ``_float_per`` values, so a miss
+    piece ``j`` holds the group's j-th ``_Column.per`` values, so a miss
     decompresses only the blocks that hold them; its values are kept as
     exact scaled integers (encode_scaled, trying the exponent of the
     column's last scaled piece first) or, failing that, as they are. A
@@ -2118,7 +2229,8 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
     sub-microsecond one, or one out of the writer zone's range): its
     picked rows are read alone, and raise only if they hold such a value."""
     t = ix.types[col_id]
-    k = t.kind
+    c = ix.cols[col_id]
+    k = c.kind
     exs = {kind: at[2] for kind, at in ix.positions(col_id, g).items()}
     read = _group_reader(ix, streams, col_id, g, {}, ix.block_size)
     n = ix.group_rows(g)
@@ -2131,7 +2243,7 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
         n = int(np.count_nonzero(present.values >= 0))
     if k in _FLOAT_KINDS:
         dtype = np.dtype(np.float32 if k == K_FLOAT else np.float64)
-        per = _float_per(ix, col_id)
+        per = c.per
         lo, hi = (j * per, min(j * per + per, n)) if per else (0, n)
         w = dtype.itemsize
         dense = decode_float(read(S_DATA, (lo * w, hi * w)), hi - lo, dtype)
@@ -2140,7 +2252,7 @@ def _build_piece(ix: StripeIndex, streams: dict, col_id: int, g: int, j: int,
             return _Piece(dense)
         ix.scales[col_id] = scaled[1]
         return _Piece(scaled[0], 0, scale=scaled[1], kind="scaled")
-    if k in _STRING_KINDS and not _is_dict(ix, col_id):
+    if c.direct:
         lengths = _rle_values(_int_decoder(ix.encodings[col_id][0]), read(S_LENGTH),
                               exs, S_LENGTH, n, False)
         offsets = np.zeros(n + 1, dtype=np.int64)
@@ -2186,9 +2298,9 @@ def _group_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
     (bytes, lengths) of its rows alone (_string_rows, from ``blocks``).
     None when a piece is missed and ``streams`` is None; the reads of its
     blocks (a dict) when a direct string's blocks are missed."""
-    t = ix.types[col_id]
+    c = ix.cols[col_id]
     present, valid, sel = None, None, rows
-    if (col_id, S_PRESENT) in ix.offsets:
+    if c.present:
         present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces)
         if present is None:
             return None
@@ -2197,14 +2309,14 @@ def _group_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
         sel = slots[valid]
         if not sel.size:
             return valid, None
-    if t.kind in _STRING_KINDS and not _is_dict(ix, col_id):
+    if c.direct:
         offsets = _piece(ix, streams, col_id, g, 0, present, pieces)
         if offsets is None:
             return None
         got = _string_rows(ix, streams, col_id, g, sel, offsets, blocks)
         return got if isinstance(got, dict) else (valid, got)
     out = []
-    for j, at in _split_pieces(sel, _float_per(ix, col_id) if t.kind in _FLOAT_KINDS else 0):
+    for j, at in _split_pieces(sel, c.per) if c.per else ((0, sel),):
         p = _piece(ix, streams, col_id, g, j, present, pieces)
         if p is None:
             if streams is None:
@@ -2212,10 +2324,10 @@ def _group_rows(ix: StripeIndex, streams: dict | None, col_id: int, g: int,
             # a timestamp group no piece holds (the only kind with one
             # piece a group that _build_piece may refuse): its rows alone
             exs = {kind: pos[2] for kind, pos in ix.positions(col_id, g).items()}
-            parts = _scalar_values(t, ix.encodings[col_id][0],
+            parts = _scalar_values(ix.types[col_id], ix.encodings[col_id][0],
                                    _group_reader(ix, streams, col_id, g, {}),
                                    exs, int(sel[-1]) + 1)
-            return valid, _final_values(ix, col_id, [c[sel] for c in parts])
+            return valid, _final_values(ix, col_id, [v[sel] for v in parts])
         out.append(p.at(at))
     return valid, out[0] if len(out) == 1 else np.concatenate(out)
 
@@ -2257,7 +2369,8 @@ def _decode_column_rows(
     _trace_decode(name)
     if pieces is None:
         pieces = {}
-    if ix.types[col_id].kind in _NESTED_KINDS:
+    c = ix.cols[col_id]
+    if c.kind in _NESTED_KINDS:
         if streams is None:
             return ix.ranges([col_id], list(hits))
         parts = [_decode_column_group(ix, streams, col_id, g, ix.group_rows(g), name,
@@ -2279,7 +2392,7 @@ def _decode_column_rows(
         if got[1] is not None:
             vals.append(got[1])
     dictionary = None
-    if _is_dict(ix, col_id):
+    if c.is_dict:
         dictionary = dict_cache.get(col_id)
         if dictionary is None:
             if streams is None:
@@ -2292,8 +2405,8 @@ def _decode_column_rows(
     valid = np.concatenate(valids) if valids else None
     if not vals:
         # every picked row is null
-        return pa.nulls(len(valid), _arrow_type_of(ix.types, col_id))
-    if ix.types[col_id].kind in _STRING_KINDS and not _is_dict(ix, col_id):
+        return pa.nulls(len(valid), c.arrow)
+    if c.direct:
         dense = _binary_array(ix, col_id, b"".join(v[0] for v in vals),
                               np.concatenate([v[1] for v in vals]))
     else:
@@ -2316,13 +2429,12 @@ def _key_mask(ix: StripeIndex, streams: dict | None, col_id: int, g: int, eq,
     (_decode_column_rows). A null row never matches. With ``streams``
     None nothing is read: -> the stream ranges to fetch, as
     _decode_column_rows."""
-    t = ix.types[col_id]
-    is_dict = _is_dict(ix, col_id)
-    probe = (_probe_bytes(t.kind, eq)
-             if t.kind in _STRING_KINDS and not is_dict else None)
-    if is_dict or probe is not None or (type(eq) is int and t.kind in _INT_KINDS):
+    c = ix.cols[col_id]
+    is_dict = c.is_dict
+    probe = _probe_bytes(c.kind, eq) if c.direct else None
+    if is_dict or probe is not None or (type(eq) is int and c.kind in _INT_KINDS):
         present = None
-        if (col_id, S_PRESENT) in ix.offsets:
+        if c.present:
             present = _piece(ix, streams, col_id, g, _PRESENT, None, pieces)
             if present is None:
                 return ix.ranges([col_id], [g])
@@ -2354,156 +2466,231 @@ def _key_mask(ix: StripeIndex, streams: dict | None, col_id: int, g: int, eq,
     return arr if isinstance(arr, dict) else _eq_mask(arr, eq)
 
 
-def _bloom_probe_ok(col_kind: int, eq) -> bool:
-    """Only probe the bloom filter when the probe value's hash family
-    matches what the writer fed it (i64 for integer columns, utf8 bytes
-    for string columns) — a mismatched probe false-negatives and would
-    WRONGLY prune (three-valued safety)."""
-    if col_kind in _INT_KINDS:
-        return isinstance(eq, int)
-    if col_kind in _STRING_KINDS:
-        return isinstance(eq, (str, bytes))
-    return False
+# --- statistics pruning: one evaluator over NumPy statistics arrays ----------
+
+_I64_MIN, _I64_MAX = -(1 << 63), (1 << 63) - 1
+_DBL_MAX = float(np.finfo(np.float64).max)
+_EPOCH_DAY = _dt.date(1970, 1, 1).toordinal()
+_EPOCH_TS = _dt.datetime(1970, 1, 1)
+_US = _dt.timedelta(microseconds=1)
+
+#: statistics family -> (the Python type _parse_column_stats gives its
+#: bounds, their map into the arrays' domain (None: unusable), the
+#: arrays' dtype)
+_FAMILIES = {
+    "int": (int, int, np.int64), "float": (float, float, np.float64),
+    "bool": (bool, int, np.int64),
+    "date": (_dt.date, lambda d: d.toordinal() - _EPOCH_DAY, np.int64),
+    "ts": (_dt.datetime, lambda t: (t - _EPOCH_TS) // _US, np.int64),
+    "str": (str, str, object),
+    "decimal": (_decimal.Decimal, lambda d: None if d.is_nan() else d, object),
+}
+_FAMILY_OF_KIND = {
+    **dict.fromkeys(_INT_KINDS, "int"), K_FLOAT: "float", K_DOUBLE: "float",
+    K_BOOLEAN: "bool", K_DATE: "date", K_TIMESTAMP: "ts", K_TIMESTAMP_INSTANT: "ts",
+    K_STRING: "str", K_VARCHAR: "str", K_CHAR: "str", K_DECIMAL: "decimal",
+}
 
 
-def _stats_comparable(mn, bound) -> bool:
-    """Probe/stat TYPE agreement gate: comparisons only happen within one
-    family (str, datetime, date, decimal, numeric) — anything else keeps
-    the group/stripe (three-valued safety; a raw-int probe on a date
-    column, say, must never prune). Decimal stats additionally accept
-    int probes (exact comparison, no float rounding)."""
-    import datetime as _dt
-    import decimal as _decimal
+class ColumnStats:
+    """One column's statistics over a file's stripes (OrcMeta.column_stats)
+    or a stripe's row groups (StripeIndex.stats) as the arrays keep_mask
+    reads. The type family comes once from the column's kind
+    (_FAMILIES); ``mins`` and ``maxs`` hold the bounds in its domain
+    (days for dates, microseconds for timestamps, 0/1 for booleans) where
+    ``known`` marks statistics of that family. ``n_values`` (non-null
+    values) and ``has_null`` (0/1) are -1 where the statistics do not
+    say."""
 
-    if isinstance(mn, bool):  # before int: bool is an int subclass
-        return isinstance(bound, bool)
-    if isinstance(mn, str):
-        return isinstance(bound, str)
-    if isinstance(mn, _dt.datetime):
-        # naive-vs-aware comparison raises TypeError; our stats are naive,
-        # so an aware probe is simply not comparable (keep)
-        return (isinstance(bound, _dt.datetime)
-                and (mn.tzinfo is None) == (bound.tzinfo is None))
-    if isinstance(mn, _dt.date):
-        return isinstance(bound, _dt.date) and not isinstance(bound, _dt.datetime)
-    if isinstance(mn, _decimal.Decimal):
-        return (isinstance(bound, _decimal.Decimal)
-                or (isinstance(bound, int) and not isinstance(bound, bool)))
-    if isinstance(mn, (int, float)) and not isinstance(mn, bool):
-        return (isinstance(bound, (int, float))
-                and not isinstance(bound, bool))
-    return False
+    __slots__ = ("family", "known", "all_known", "mins", "maxs", "n_values", "has_null")
 
+    def __init__(self, kind: int, bounds: list, nulls: list | None = None):
+        family = _FAMILY_OF_KIND.get(kind)
+        pairs = [None] * len(bounds)
+        if family is not None:
+            typ, to, _ = _FAMILIES[family]
+            for i, b in enumerate(bounds):
+                if b is not None and type(b[0]) is typ and type(b[1]) is typ:
+                    lo, hi = to(b[0]), to(b[1])
+                    if lo is not None and hi is not None:
+                        pairs[i] = (lo, hi)
+        known = [p is not None for p in pairs]
+        self.family = family if any(known) else None
+        self.known, self.all_known = np.array(known, dtype=bool), all(known)
+        blank = next((p for p in pairs if p is not None), (0, 0))
+        dtype = _FAMILIES[self.family][2] if self.family else np.int64
+        self.mins = np.array([(p or blank)[0] for p in pairs], dtype=dtype)
+        self.maxs = np.array([(p or blank)[1] for p in pairs], dtype=dtype)
+        nulls = nulls or [(None, None)] * len(pairs)
+        self.n_values = np.array([-1 if n is None else n for n, _ in nulls], dtype=np.int64)
+        self.has_null = np.array([-1 if h is None else h for _, h in nulls], dtype=np.int8)
 
-def _bloom_might_contain_i64(bf, value: int) -> bool:
-    """Maybe-present in an ORC integer bloom filter under either hash an
-    ORC writer uses: this engine's writer hashes with ``wang_hash_i64``,
-    liborc and ORC Java with ``wang_hash_i64_orc``. A probe that tried
-    only one would rule out values the other writer added."""
-    from ..codecs.bloom import wang_hash_i64, wang_hash_i64_orc
-
-    v = np.array([value], dtype=np.int64)
-    return bool(bf.test_hashes(
-        np.concatenate([wang_hash_i64(v), wang_hash_i64_orc(v)])).any())
-
-
-def _group_may_match(stats, bf, col_kind: int, lo, hi, eq) -> bool:
-    """Three-valued per-group test: stats range check, then (for an
-    equality probe) the bloom filter — missing/mismatched stats keep."""
-    ok = True
-    if stats is not None:
-        mn, mx = stats
-        # each bound is checked for comparability INDEPENDENTLY: a mixed
-        # lo/hi pair (int lo, str hi) previously passed the single check
-        # and then raised TypeError mid-scan instead of keeping the group
-        # (code-review r6; the contract is three-valued: mismatches keep)
-        if lo is not None and _stats_comparable(mx, lo) and mx < lo:
-            ok = False
-        if ok and hi is not None and _stats_comparable(mn, hi) and mn > hi:
-            ok = False
-    if ok and eq is not None and bf is not None and _bloom_probe_ok(col_kind, eq):
-        if isinstance(eq, int):
-            ok = _bloom_might_contain_i64(bf, eq)
-        else:
-            probe = eq.encode() if isinstance(eq, str) else eq
-            ok = bf.might_contain_bytes(probe)
-    return ok
+    def rules_out(self, lo, hi) -> np.ndarray:
+        """Where the statistics put every value below ``lo`` or above ``hi``
+        (_bound's bounds; None bounds nothing)."""
+        out = False
+        if lo is not None:
+            out = lo if type(lo) is bool else self.maxs < lo
+        if hi is not None:
+            out = out | (hi if type(hi) is bool else self.mins > hi)
+        # entries without statistics rule nothing out
+        return out & self.known if type(out) is bool or not self.all_known else out
 
 
-def _probe_hashes(value) -> list[int] | None:
-    """The bloom hashes of one probe value, hashed once for all groups:
-    an int64 under both integer hashes (``_bloom_might_contain_i64``), a
-    str or bytes value under Murmur3. None for an int outside int64,
-    which no stored value equals: its groups keep (three-valued)."""
+def _double_bound(v: int, lo: bool) -> float:
+    """The double t such that a double x < int ``v`` exactly when x < t
+    (``lo``: the least double >= v), or x > v when x > t (the greatest
+    double <= v)."""
+    try:
+        f = float(v)
+    except OverflowError:
+        f = math.inf if v > 0 else -math.inf
+    if math.isinf(f):
+        return f if (f > 0) == lo else math.copysign(_DBL_MAX, f)
+    if lo:
+        return f if int(f) >= v else math.nextafter(f, math.inf)
+    return f if int(f) <= v else math.nextafter(f, -math.inf)
+
+
+def _bound(family: str | None, v, lo: bool):
+    """Probe value ``v`` as a bound on ``family``'s arrays: t such that an
+    entry's max < v (``lo``), or its min > v, exactly when its max < t
+    (min > t); True or False when that holds for every entry or none;
+    None when ``v`` is not comparable with the family, so the entries
+    keep (three-valued: an int probe on a date column never prunes).
+    Decimal statistics also take int probes, exactly."""
+    if v is None or family is None:
+        return None
+    if family in ("int", "float"):
+        if isinstance(v, bool) or not isinstance(v, (int, float)):
+            return None
+        if family == "float":
+            return v if isinstance(v, float) else _double_bound(v, lo)
+        if isinstance(v, float):
+            if not math.isfinite(v):
+                return None if v != v else (v > 0) == lo
+            v = math.ceil(v) if lo else math.floor(v)
+        return v if _I64_MIN <= v <= _I64_MAX else (v > 0) == lo
+    typ, to, dtype = _FAMILIES[family]
+    if family == "decimal" and isinstance(v, int) and not isinstance(v, bool):
+        t = v
+    elif not isinstance(v, typ) or isinstance(v, _dt.datetime) and (
+            family == "date" or v.tzinfo is not None):
+        return None  # a date column's datetime; an aware one (naive statistics)
+    else:
+        t = to(v)
+    if t is None or dtype is not object:
+        return t
+    # a 0-d object array: NumPy would turn a str into a NumPy string,
+    # which drops trailing NULs, and compare that
+    out = np.empty((), dtype=object)
+    out[()] = t
+    return out
+
+
+def _probe_hashes(kind: int, value) -> list[int] | None:
+    """The bloom hashes of one probe value in a column of type ``kind``, or
+    None where its bloom filter must not be asked: a value outside the
+    hash family the writer fed it (i64 for integer columns, UTF-8 for
+    string ones) would false-negative and wrongly prune, and an int
+    outside int64 equals no stored value. An int64 hashes under both
+    integer hashes: this engine's writer uses ``wang_hash_i64``, liborc
+    and ORC Java ``wang_hash_i64_orc``."""
     from ..codecs.bloom import murmur3_64_int, wang_hash_i64_int, wang_hash_i64_orc_int
 
-    if isinstance(value, int):
-        if not -(1 << 63) <= value < 1 << 63:
+    if kind in _INT_KINDS and isinstance(value, int):
+        if not _I64_MIN <= value <= _I64_MAX:
             return None
         return [wang_hash_i64_int(value), wang_hash_i64_orc_int(value)]
-    data = value.encode() if isinstance(value, str) else value
-    return [murmur3_64_int(data)]
+    if kind in _STRING_KINDS and isinstance(value, (str, bytes)):
+        try:
+            return [murmur3_64_int(value.encode() if isinstance(value, str) else value)]
+        except UnicodeEncodeError:
+            return None
+    return None
 
 
-def _bloom_keep(blooms, value, n: int) -> np.ndarray:
-    """Per group of the first ``n``: may ``value`` be in its bloom filter?
-    Groups past the filters keep."""
-    hashes = _probe_hashes(value)
-    if hashes is None:
-        return np.ones(n, dtype=bool)
-    may = blooms.may_contain(hashes)[:n]
-    if may.size < n:
-        may = np.concatenate([may, np.ones(n - may.size, dtype=bool)])
-    return may
+class Probe:
+    """One column's predicate, normalized once for every stripe and row
+    group it prunes: ``eqs``, an equality probe's values (one, or an
+    IN-list's in any order), or else the range [``lo``, ``hi``] (None:
+    open); and ``not_null`` (True: IS NOT NULL, False: IS NULL). Beside
+    ``eqs``, ``lo`` and ``hi`` go unused. Each value's bounds per
+    statistics family and its bloom hashes and bit positions are found on
+    first use and kept, so a point lookup hashes its value once."""
+
+    __slots__ = ("eqs", "lo", "hi", "not_null", "_bounds", "_bits")
+
+    def __init__(self, eq=None, lo=None, hi=None, not_null=None):
+        self.eqs = (None if eq is None else tuple(eq)
+                    if isinstance(eq, (list, tuple, set, frozenset)) else (eq,))
+        self.lo, self.hi, self.not_null = lo, hi, not_null
+        self._bounds: dict = {}
+        self._bits: dict = {}
+
+    @classmethod
+    def of(cls, p: dict) -> "Probe":
+        """The probe of a predicate {"column", "eq", "lo", "hi", "not_null"}."""
+        return cls(p.get("eq"), p.get("lo"), p.get("hi"), p.get("not_null"))
+
+    def bounds(self, family: str | None) -> list[tuple]:
+        """[(lo, hi)] bounds on ``family``'s arrays (_bound): each eq
+        value's, or the range's."""
+        hit = self._bounds.get(family)
+        if hit is None:
+            pairs = [(v, v) for v in self.eqs] if self.eqs is not None else [(self.lo, self.hi)]
+            hit = self._bounds[family] = [
+                (_bound(family, a, True), _bound(family, b, False)) for a, b in pairs]
+        return hit
+
+    def bloom_may(self, i: int, kind: int, blooms) -> np.ndarray | None:
+        """Per group of ``blooms`` (a BloomMatrix of a column of type
+        ``kind``): may eq value ``i`` be in its filter? None where the
+        filter must not be asked (_probe_hashes)."""
+        key = (i, kind, blooms.k, blooms.n_words)
+        at = self._bits.get(key)
+        if at is None:
+            hashes = _probe_hashes(kind, self.eqs[i])
+            at = self._bits[key] = (hashes, hashes and blooms.positions(hashes))
+        return None if at[0] is None else blooms.may_contain(*at)
 
 
-def _rg_keep_for_stripe(
-    entries: list, blooms, n_rows: int, stride: int,
-    eq=None, lo=None, hi=None, col_kind: int = -1,
-    not_null: bool | None = None,
-) -> list[int]:
-    """Row groups whose index stats (and bloom, for eq) may match — the
-    reference's evaluate_row_group_predicate (src/row_group_filter.rs:54-205,
-    bloom :370-408). Three-valued: missing/mismatched stats keep. ``eq``
-    may be a list/set of values (an IN-list probe): a group is kept if ANY
-    value may match. ``blooms`` (a ``BloomMatrix`` or None) tests every
-    group's filter for one value in one step; the keep set equals that of
-    ``_group_may_match`` per group. ``not_null`` prunes on the null
-    statistics: True (an IS NOT NULL probe) drops groups with zero non-null
-    values, False (IS NULL) drops groups whose stats say hasNull is false."""
-    eqs = None
-    if eq is not None:
-        # the values' keep masks are OR-ed, so a set is taken in any order
-        # (sorting one of mixed types would raise)
-        eqs = (list(eq) if isinstance(eq, (list, tuple, set, frozenset))
-               else [eq])
-    n_groups = (n_rows + stride - 1) // stride
-    n = min(n_groups, len(entries))
-
-    def stats_ok(lo_, hi_) -> np.ndarray:
-        return np.fromiter((_group_may_match(entries[g][1], None, col_kind,
-                                             lo_, hi_, None) for g in range(n)),
-                           dtype=bool, count=n)
-
-    if eqs is not None:
-        ok = np.zeros(n, dtype=bool)
-        for v in eqs:
-            ok_v = stats_ok(v, v)
-            if blooms is not None and ok_v.any() and _bloom_probe_ok(col_kind, v):
-                ok_v &= _bloom_keep(blooms, v, n)
-            ok |= ok_v
+def keep_mask(probe: Probe, stats: ColumnStats, n: int, blooms=None,
+              kind: int = -1) -> np.ndarray:
+    """Which of ``n`` stripes or row groups may hold a row ``probe``
+    matches (the reference's evaluate_row_group_predicate,
+    src/row_group_filter.rs:54-205, bloom :370-408, over whole arrays).
+    ``stats`` covers the first entries, the rest keep; ``blooms`` is the
+    groups' BloomMatrix for an equality probe on a column of type
+    ``kind``, or None. Three-valued: an entry keeps unless its statistics
+    put every value outside the range (each eq value's own; any value
+    may match), its bloom filter rules every eq value out, or its null
+    counts rule out ``not_null``. Missing statistics, a probe of another
+    type family and a value outside the filter's hash family keep."""
+    m = len(stats.known)
+    bounds = probe.bounds(stats.family)
+    if probe.eqs is None:
+        may = ~stats.rules_out(*bounds[0])
     else:
-        ok = stats_ok(lo, hi)
-    keep = []
-    for g in np.flatnonzero(ok).tolist():
-        if not_null is not None and len(entries[g]) > 2:
-            n_values, has_null = entries[g][2]
-            if not_null is True and n_values == 0:
-                continue  # every value in the group is null
-            if not_null is False and has_null is False:
-                continue  # stats guarantee the group has no nulls
-        keep.append(g)
-    keep.extend(range(len(entries), n_groups))  # entries missing: keep
+        # an empty IN-list matches no row
+        may = np.zeros(m, dtype=bool) if not bounds else None
+        for i, (lo, hi) in enumerate(bounds):
+            ok = ~stats.rules_out(lo, hi)
+            if blooms is not None and ok.any():
+                bloom = probe.bloom_may(i, kind, blooms)
+                if bloom is not None and bloom.size == m:
+                    ok &= bloom
+                elif bloom is not None:
+                    ok[: bloom.size] &= bloom[:m]  # groups past the filters keep
+            may = ok if may is None else may | ok
+    if probe.not_null is True:
+        may &= stats.n_values != 0
+    elif probe.not_null is False:
+        may &= stats.has_null != 0
+    if m == n:
+        return may
+    keep = np.ones(n, dtype=bool)
+    keep[:m] = may
     return keep
 
 
@@ -2582,6 +2769,7 @@ def decode_stripe_pruned(
     residual: bool = False,
     index: "StripeIndex | None" = None,
     fetch=None,
+    probe: "Probe | None" = None,
 ) -> tuple[pa.Table, int, int]:
     """Corruption-guarded entry for the predicate/seek decode path — same
     ``ValueError("corrupt ORC stripe ...")`` contract as decode_stripe
@@ -2591,7 +2779,10 @@ def decode_stripe_pruned(
     ``index`` is the stripe's prebuilt StripeIndex (an OrcReader's); with
     it, ``footer_raw`` is unused and ``fetch`` may read the stream ranges
     in place of ``buf`` (see _fetch_streams). Without it, the index is
-    built from ``buf`` and ``footer_raw`` and dropped afterwards."""
+    built from ``buf`` and ``footer_raw`` and dropped afterwards.
+    ``probe`` is the normalized form of ``eq``/``lo``/``hi``/``not_null``
+    when the caller has made one (orc_point_lookup, for all its
+    stripes)."""
     if residual:
         if (column is None or predicates is not None
                 or isinstance(eq, (list, tuple, set, frozenset))):
@@ -2609,14 +2800,12 @@ def decode_stripe_pruned(
         _decode_stripe_pruned_impl, buf, footer_raw, meta, n_rows,
         column=column, eq=eq, lo=lo, hi=hi, columns=columns,
         not_null=not_null, predicates=predicates, row_ranges=row_ranges,
-        residual=residual, index=index, fetch=fetch)
+        residual=residual, index=index, fetch=fetch, probe=probe)
 
 
 def _eq_mask(arr: pa.Array, value) -> np.ndarray:
     """Rows of ``arr`` equal to ``value``; nulls never match, and a probe
     whose type cannot be compared with the column matches nothing."""
-    import pyarrow.compute as pc
-
     if (type(value) is int and -(2**63) <= value < 2**63 and not arr.null_count
             and pa.types.is_signed_integer(arr.type)):
         # an integer key probe, compared in NumPy: pyarrow's kernel
@@ -2641,6 +2830,7 @@ def _decode_stripe_pruned_impl(
     residual: bool = False,
     index: StripeIndex | None = None,
     fetch=None,
+    probe: "Probe | None" = None,
 ) -> tuple[pa.Table, int, int]:
     """Decode only the row groups of this stripe whose ROW_INDEX stats /
     bloom filter may satisfy the predicate on ``column`` — and only the
@@ -2651,9 +2841,11 @@ def _decode_stripe_pruned_impl(
     ``eq`` may be a single value or an IN-list of values. ``predicates``
     generalizes to an AND-list of per-column probes
     ``{"column", "eq", "lo", "hi", "not_null"}`` whose per-column keep
-    lists INTERSECT (the RowSelection::and_then composition,
-    src/row_selection.rs) — columns without a usable index simply don't
-    contribute.
+    masks (keep_mask over StripeIndex.stats and blooms) INTERSECT (the
+    RowSelection::and_then composition, src/row_selection.rs) — columns
+    without a usable index simply don't contribute. The projection's
+    read plan and each column's read facts come from the StripeIndex
+    (plan, cols), made on the stripe's first read.
 
     ``row_ranges`` (r6, VERDICT r5 next #7 — the caller-supplied
     ``RowSelection`` analog, src/row_selection.rs:32-260): STRIPE-LOCAL
@@ -2703,9 +2895,7 @@ def _decode_stripe_pruned_impl(
     if fetch is None:
         def fetch(spans):
             return [(buf, 0)] * len(spans)
-    root = meta.types[0]
     stride, n_groups = ix.stride, ix.n_groups
-    proj = [n for n in root.field_names if columns is None or n in columns]
 
     def _slice_exact(tbl: pa.Table, groups) -> pa.Table:
         """Exact row-range slice over the concatenated rows of ``groups``
@@ -2726,36 +2916,35 @@ def _decode_stripe_pruned_impl(
         return tbl, n_groups, n_groups
 
     if predicates is None:
-        predicates = ([dict(column=column, eq=eq, lo=lo, hi=hi,
-                            not_null=not_null)] if column is not None else [])
+        probes = [] if column is None else [
+            (column, probe or Probe(eq, lo, hi, not_null))]
+    else:
+        probes = [(p["column"], Probe.of(p)) for p in predicates]
     # (stride is always >= 1: a legacy stride-0 footer maps to the 10k
     # default, so no stride-0 branch exists here)
 
     # predicate columns parse their row index with statistics, and their
-    # blooms only for an equality probe; the index parses each once
-    keep_sets: list[set[int]] = []
-    for p in predicates:
-        try:
-            col_id = root.subtypes[root.field_names.index(p["column"])]
-        except ValueError:
+    # blooms only for an equality probe; the index parses each once. The
+    # keep masks of the AND-list and the row ranges intersect
+    keep = None
+    for name, pr in probes:
+        cid = ix.col_ids.get(name)
+        stats = None if cid is None else ix.stats(cid)
+        if stats is None:
             continue
-        entries = ix.entries(col_id)
-        if entries is None:
-            continue
-        p_eq = p.get("eq")
-        keep_sets.append(set(_rg_keep_for_stripe(
-            entries, ix.blooms(col_id) if p_eq is not None else None,
-            n_rows, stride, eq=p_eq, lo=p.get("lo"), hi=p.get("hi"),
-            col_kind=meta.types[col_id].kind, not_null=p.get("not_null"))))
+        mask = keep_mask(pr, stats, n_groups,
+                         None if pr.eqs is None else ix.blooms(cid), ix.types[cid].kind)
+        keep = mask if keep is None else keep & mask
     if row_ranges is not None:
-        keep_sets.append({
-            g for g in range(n_groups)
-            if any(lo_ < min((g + 1) * stride, n_rows) and hi_ > g * stride
-                   for lo_, hi_ in row_ranges)
-        })
-    if not keep_sets:
+        starts = np.arange(n_groups) * stride
+        ends = np.minimum(starts + stride, n_rows)
+        mask = np.zeros(n_groups, dtype=bool)
+        for lo_, hi_ in row_ranges:
+            mask |= (starts < hi_) & (ends > lo_)
+        keep = mask if keep is None else keep & mask
+    if keep is None:
         return full()
-    keep = sorted(set.intersection(*keep_sets))
+    keep = np.flatnonzero(keep).tolist()
     if len(keep) >= n_groups and not residual:
         # every group kept: one whole-stripe decode is cheaper than a
         # seek per group — unless the residual probe spares the other
@@ -2767,13 +2956,10 @@ def _decode_stripe_pruned_impl(
     # seek-decode every PROJECTED column (including its nested subtree)
     # group by group; columns whose type has no seek support or whose
     # index is missing/truncated force the full-decode fallback
-    proj_ids = [root.subtypes[root.field_names.index(n)] for n in proj]
-    need = max(keep) + 1
-    for top in proj_ids:
-        for cid in _subtree_ids(meta.types, top):
-            entries = ix.seek_entries(cid)
-            if entries is None or len(entries) < need:
-                return full()  # no index, or a truncated/short one
+    plan = ix.plan(columns)
+    if not plan.seeks(ix, keep[-1] + 1):
+        return full()  # no index, or a truncated/short one
+    proj, proj_ids = plan.names, plan.ids
 
     read = None if ix.owner is None else _PoolRead(ix.owner)
     if read is None:
@@ -2807,7 +2993,7 @@ def _decode_stripe_pruned_impl(
             # projected column at the matching rows of each kept group only.
             # Each phase asks the pool first and then reads, in one fetch,
             # just the byte ranges of what it missed
-            key_id = proj_ids[proj.index(column)]
+            key_id = ix.col_ids[column]
             masks = {g: _key_mask(ix, None, key_id, g, eq, column, dict_cache,
                                   block_cache, pieces) for g in keep}
             missed = [m for m in masks.values() if isinstance(m, dict)]
@@ -3148,8 +3334,6 @@ def _group_bounds(kind: int, arr: pa.Array, group_starts: np.ndarray,
       at each group's min and max rank, which is byte order;
     - direct strings and decimals: one pyarrow ``min_max`` per group.
     """
-    import pyarrow.compute as pc
-
     n_groups = len(group_starts) - 1
     out = [(None, None)] * n_groups
     stringy = kind in (K_STRING, K_VARCHAR, K_CHAR)
@@ -3323,8 +3507,6 @@ def _encode_indexed_column(
         row_index_proto (uncompressed), bloom_proto | None,
         enc_proto, (n_values, has_null, mn, mx))
     """
-    import pyarrow.compute as pc  # noqa: F401
-
     from ..codecs.boolean_rle import encode_boolean_rle
     from ..codecs.rle_v2 import FILE_BATCH_VALUES, encode_rlev2
     from ..operators.encode import (
@@ -3582,8 +3764,6 @@ def _valid_list_parts(arr):
     array(s)) for a list/large_list/map array — offset-safe, null slots
     skipped (the ORC LENGTH-stream model: lengths and children cover
     present parents only, src/array_decoder/list.rs:36-104)."""
-    import pyarrow.compute as pc
-
     if pa.types.is_map(arr.type):
         # view the map as list<struct<key,value>> — offset- and
         # null-safe — then split the flat struct into the two children
@@ -4155,44 +4335,22 @@ def write_orc(table: pa.Table, path: str, compression: str = "zlib",
 
 
 def prune_stripes(meta: OrcMeta, column: str, lo=None, hi=None,
-                  values: list | None = None) -> list[int]:
+                  values=None, probe: "Probe | None" = None) -> list[int]:
     """Stripe indexes whose Metadata stats may intersect [lo, hi] — or,
-    for an IN-list probe, contain ANY of ``values`` — the reference's
-    stripe-level predicate pushdown over StripeStatistics (three-valued:
-    stripes without stats are kept)."""
+    for an equality probe, hold ANY of ``values`` (one value or an
+    IN-list) — the reference's stripe-level predicate pushdown over
+    StripeStatistics: keep_mask over OrcMeta.column_stats (three-valued:
+    stripes without stats are kept). ``probe`` is the same test
+    normalized, when the caller has made one."""
     root = meta.types[0]
     try:
-        col_id = root.subtypes[root.field_names.index(column)]
+        cid = root.subtypes[root.field_names.index(column)]
     except ValueError:
         return list(range(len(meta.stripes)))
-
-    def may_match(mn, mx, lo_, hi_) -> bool:
-        # three-valued safety for probe/stat TYPE confusion (int probe on a
-        # string column would raise or misprune): mismatch keeps the
-        # stripe. Each bound is gated INDEPENDENTLY — a mixed lo/hi pair
-        # must keep, not raise (code-review r6, same fix as
-        # _group_may_match)
-        if lo_ is not None and _stats_comparable(mx, lo_) and mx < lo_:
-            return False
-        if hi_ is not None and _stats_comparable(mn, hi_) and mn > hi_:
-            return False
-        return True
-
-    keep = []
-    for i in range(len(meta.stripes)):
-        stats = meta.stripe_stats[i] if i < len(meta.stripe_stats) else {}
-        mm = stats.get(col_id)
-        if mm is None:
-            keep.append(i)
-            continue
-        mn, mx = mm
-        if values is not None:
-            ok = any(may_match(mn, mx, v, v) for v in values)
-        else:
-            ok = may_match(mn, mx, lo, hi)
-        if ok:
-            keep.append(i)
-    return keep
+    if probe is None:
+        probe = Probe(values, lo, hi)
+    return np.flatnonzero(keep_mask(probe, meta.column_stats(cid),
+                                    len(meta.stripes))).tolist()
 
 
 # --- the split planner and split reader of every Spark ORC scan --------------
@@ -4234,8 +4392,7 @@ def plan_splits(metas: dict, predicates=(),
         idx = set(range(len(meta.stripes)))
         for p in predicates:
             if p["column"] in have:
-                idx &= set(prune_stripes(meta, p["column"], p.get("lo"),
-                                         p.get("hi"), values=p.get("eq")))
+                idx &= set(prune_stripes(meta, p["column"], probe=Probe.of(p)))
         idx, local = sorted(idx), {}
         if row_ranges is not None:
             idx, local = clip_ranges_to_stripes(meta, idx, row_ranges)
@@ -4566,7 +4723,7 @@ class DataPool:
       scaled integers (float_plain.encode_scaled), and booleans, bytes,
       decimals and other floats dense values; j is _PRESENT for the group's
       PRESENT map, and a float or double group has a piece per seek
-      block's worth of values (_float_per). The key column's groups are
+      block's worth of values (_Column.per). The key column's groups are
       pieces too.
     - ("dict", column): a string dictionary in its Arrow type.
     - ("block", ((column, stream kind), block offset)): a decompressed
@@ -4821,10 +4978,14 @@ def orc_point_lookup(path: str, column: str, value,
     forget_reader and the reader cache's eviction drop them, so a
     replaced file is never served pooled data.
 
-    The probe is hashed once (Python ints, under both integer bloom
-    hashes) and each kept stripe's groups are bit-tested in one
-    vectorized step. Each kept stripe is then read in two phases on one
-    code path (decode_stripe_pruned with ``residual=True``): the kept
+    The probe is normalized once (Probe) and pruned by one evaluator,
+    keep_mask, over NumPy arrays of statistics: the stripes over the
+    file's stripe statistics (prune_stripes, OrcMeta.column_stats), then
+    each kept stripe's row groups over its row-index statistics
+    (StripeIndex.stats) and bloom filters, with the value's bounds, its
+    bloom hashes (under both integer hashes) and their bit positions found
+    once for every stripe. Each kept stripe is then read in two phases on
+    one code path (decode_stripe_pruned with ``residual=True``): the kept
     groups' ``column`` alone is compared with ``value`` (a probe whose
     type cannot be compared with the column matches nothing), then each
     column is read at the matching rows only, once over all the hit
@@ -4842,31 +5003,26 @@ def orc_point_lookup(path: str, column: str, value,
     in every file, by its group's block directory. A reader that is not
     cached (a filesystem without mtimes) reads the same way, keeping its
     pieces for the call only."""
-    import datetime as _dt
-    import decimal as _decimal
-
     if filesystem is None:
         filesystem, path = fsio.resolve(path)
-    lo = hi = (value if isinstance(
-        value, (int, float, str, _dt.date, _decimal.Decimal)) else None)
     # a list/set probe prunes as an IN-list but, like any probe that
     # cannot be compared with the column, matches no row: its kept groups
     # decode whole and the residual filter drops them
     residual = not isinstance(value, (list, tuple, set, frozenset))
-    parts, decoded, total = [], 0, 0
+    probe = Probe(value)
+    parts, decoded = [], 0
     with fsio.open_input(path, filesystem) as fh:
         reader = _open_reader(path, filesystem, fh)
         meta = reader.meta
-        keep = prune_stripes(meta, column, lo, hi)
         stride = int(meta.row_index_stride or 10_000)
-        for i, st in enumerate(meta.stripes):
-            total += (st.number_of_rows + stride - 1) // stride
-            if i not in keep:
-                continue
+        total = sum((st.number_of_rows + stride - 1) // stride for st in meta.stripes)
+        for i in prune_stripes(meta, column, probe=probe):
+            st = meta.stripes[i]
             ix = _corrupt_guarded(reader.stripe, i, fh)
             tbl, kept, _ = decode_stripe_pruned(
                 None, None, meta, st.number_of_rows, column, eq=value,
-                residual=residual, index=ix, fetch=_span_reader(fh, st.offset))
+                residual=residual, index=ix, fetch=_span_reader(fh, st.offset),
+                probe=probe)
             decoded += kept
             if not residual:
                 tbl = tbl.filter(

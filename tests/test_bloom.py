@@ -118,8 +118,13 @@ def test_i64_probe_hash_per_reader():
     """The engine's own blooms (chunk tables) are probed with the writer's
     hash alone; the ORC reader, which also reads liborc files, tries
     liborc's arithmetic-shift hash too."""
-    from orc_rust_spark.codecs.bloom import wang_hash_i64_orc
-    from orc_rust_spark.sources.orc_file import _bloom_might_contain_i64
+    from orc_rust_spark.codecs.bloom import BloomMatrix, wang_hash_i64_orc
+    from orc_rust_spark.sources import orc_file as of
+
+    def orc_reader_keeps(bf, v) -> bool:
+        # one group without statistics: only its bloom filter can prune
+        stats = of.ColumnStats(of.K_LONG, [None])
+        return bool(of.keep_mask(of.Probe(v), stats, 1, BloomMatrix([bf]), of.K_LONG)[0])
 
     probes = np.array([0, -1, -(2**40), 2**62 - 3], dtype=np.int64)
     assert (wang_hash_i64(probes) != wang_hash_i64_orc(probes)).all()
@@ -127,10 +132,12 @@ def test_i64_probe_hash_per_reader():
     liborc.add_hashes(wang_hash_i64_orc(probes))
     for v in probes.tolist():
         assert not liborc.might_contain_i64(v)
-        assert _bloom_might_contain_i64(liborc, v)
+        assert orc_reader_keeps(liborc, v)
     ours = BloomFilter.for_expected(probes.size)
     ours.add_i64(probes)
-    assert all(_bloom_might_contain_i64(ours, v) for v in probes.tolist())
+    assert all(orc_reader_keeps(ours, v) for v in probes.tolist())
+    empty = BloomFilter.for_expected(probes.size)
+    assert not any(orc_reader_keeps(empty, v) for v in probes.tolist())
 
 
 def test_scalar_int_hashes_equal_numpy_hashes():

@@ -1833,7 +1833,7 @@ def test_writer_tz_out_of_ns_range(tmp_path):
 
 def test_pruned_uncomparable_probe_keeps_not_crashes(tmp_path):
     """A probe value outside every stats family must KEEP all groups
-    (three-valued contract, _stats_comparable) — and if a TypeError ever
+    (three-valued contract, orc_file._bound) — and if a TypeError ever
     does escape a decode impl, the corruption guard re-raises it raw
     instead of mislabeling it 'corrupt ORC stripe' (code-review r7,
     second pass)."""
@@ -2433,21 +2433,16 @@ def test_point_lookup_threads_match_serial(tmp_path):
 
 
 def _per_group_keep(ix, cid, eq):
-    """The keep set of the per-group test (_group_may_match with each
-    group's own BloomFilter), the reference the array probe must equal."""
+    """The keep set of the per-group rules (the oracle of
+    tests/test_prune_evaluator.py, with each group's own BloomFilter),
+    the reference the evaluator must equal."""
     from orc_rust_spark.sources import orc_file as of
+    from tests.test_prune_evaluator import oracle_keep
 
-    entries = ix.entries(cid)
     kind = ix.bloom_kind(cid)
     filters = ([] if kind is None else of._parse_bloom_index(
         of.blockc.decompress_stream(ix._index_stream(cid, kind), ix.comp)))
-    eqs = list(eq) if isinstance(eq, list) else [eq]
-    col_kind = ix.types[cid].kind
-    n = min(ix.n_groups, len(entries))
-    keep = [g for g in range(n) if any(
-        of._group_may_match(entries[g][1], filters[g] if g < len(filters) else None,
-                            col_kind, v, v, v) for v in eqs)]
-    return keep + list(range(len(entries), ix.n_groups))
+    return oracle_keep(ix.entries(cid), filters, ix.n_groups, ix.types[cid].kind, eq=eq)
 
 
 def _legacy_bloom_copy(src, dst):
@@ -2517,9 +2512,9 @@ def test_bloom_array_probe_equals_per_group_test(tmp_path, writer):
                 assert ix.bloom_kind(cid) is not None
             pruned = 0
             for v in values:
-                got = of._rg_keep_for_stripe(
-                    ix.entries(cid), ix.blooms(cid), st.number_of_rows, ix.stride,
-                    eq=v, col_kind=meta.types[cid].kind)
+                got = np.flatnonzero(of.keep_mask(
+                    of.Probe(v), ix.stats(cid), ix.n_groups, ix.blooms(cid),
+                    meta.types[cid].kind)).tolist()
                 assert got == _per_group_keep(ix, cid, v), (writer, col, v)
                 pruned += len(got) < ix.n_groups
             assert pruned  # the probes exercise pruning, not just keeps
@@ -2530,6 +2525,7 @@ def test_unequal_bloom_sizes_fall_back_to_per_group_test():
     group, with the same keep set as the per-group test."""
     from orc_rust_spark.codecs.bloom import BloomFilter, BloomMatrix, wang_hash_i64
     from orc_rust_spark.sources import orc_file as of
+    from tests.test_prune_evaluator import group_may_match
 
     rng = np.random.default_rng(2)
     groups = [np.arange(g * 100, g * 100 + 100) for g in range(4)]
@@ -2543,10 +2539,10 @@ def test_unequal_bloom_sizes_fall_back_to_per_group_test():
         filters.append(bf)
     bm = BloomMatrix(filters)
     assert bm.filters is not None
-    entries = [([0], None, (100, False))] * 4
+    stats = of.ColumnStats(of.K_LONG, [None] * 4, [(100, False)] * 4)
     for v in [5, 150, 250, 399, 1000, -3] + rng.integers(0, 400, 20).tolist():
-        got = of._rg_keep_for_stripe(entries, bm, 400, 100, eq=v, col_kind=of.K_LONG)
+        got = np.flatnonzero(of.keep_mask(of.Probe(v), stats, 4, bm, of.K_LONG)).tolist()
         want = [g for g in range(4)
-                if of._group_may_match(None, filters[g], of.K_LONG, v, v, v)]
+                if group_may_match(None, filters[g], of.K_LONG, v, v, v)]
         assert got == want, v
         assert v // 100 not in range(4) or v // 100 in got

@@ -925,7 +925,7 @@ def _direct(path, column):
         fh.seek(st.offset + st.index_length + st.data_length)
         ix = of.StripeIndex(fh.read(st.footer_length), meta, st.number_of_rows,
                             lambda end: b"")
-    return not of._is_dict(ix, cid)
+    return not ix.cols[cid].is_dict
 
 
 def _string_key_table(seed=5) -> pa.Table:

@@ -1,0 +1,292 @@
+"""The ORC reader's one pruning evaluator (``orc_file.keep_mask`` over
+``ColumnStats`` arrays) against the per-group rules it replaced, kept
+here as the reference oracle: ``group_may_match`` tests one group's
+(min, max) statistics and bloom filter for one probe value in Python.
+
+The Hypothesis test draws per-group values of int, double, string, date,
+timestamp and decimal columns (null-only groups and groups without
+statistics included) and probes of every kind, and checks that the
+evaluator keeps exactly the oracle's groups, and every group that holds
+a matching row."""
+
+import datetime as dt
+import decimal
+
+import numpy as np
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from orc_rust_spark.codecs.bloom import (BloomFilter, BloomMatrix, murmur3_64_int,
+                                         wang_hash_i64, wang_hash_i64_orc)
+from orc_rust_spark.sources import orc_file as of
+
+I64_MIN, I64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+# --- the reference oracle: one group, one probe value, in Python -----------
+
+def stats_comparable(mn, bound) -> bool:
+    """Probe/stat type agreement: comparisons happen within one family
+    (str, datetime, date, decimal, numeric); anything else keeps. Decimal
+    stats also accept int probes."""
+    if isinstance(mn, bool):  # before int: bool is an int subclass
+        return isinstance(bound, bool)
+    if isinstance(mn, str):
+        return isinstance(bound, str)
+    if isinstance(mn, dt.datetime):
+        # naive statistics: an aware probe is not comparable
+        return (isinstance(bound, dt.datetime)
+                and (mn.tzinfo is None) == (bound.tzinfo is None))
+    if isinstance(mn, dt.date):
+        return isinstance(bound, dt.date) and not isinstance(bound, dt.datetime)
+    if isinstance(mn, decimal.Decimal):
+        return (isinstance(bound, decimal.Decimal)
+                or (isinstance(bound, int) and not isinstance(bound, bool)))
+    if isinstance(mn, (int, float)) and not isinstance(mn, bool):
+        return isinstance(bound, (int, float)) and not isinstance(bound, bool)
+    return False
+
+
+def bloom_might_contain(bf, col_kind: int, value) -> bool:
+    """Maybe-present in one group's filter; True where the filter must not
+    be asked: a value outside the column's hash family, or an int outside
+    int64 (no stored value equals it). An int64 is tried under both ORC
+    integer hashes."""
+    if col_kind in of._INT_KINDS and isinstance(value, int):
+        if not I64_MIN <= value <= I64_MAX:
+            return True
+        v = np.array([value], dtype=np.int64)
+        return bool(bf.test_hashes(np.concatenate(
+            [wang_hash_i64(v), wang_hash_i64_orc(v)])).any())
+    if col_kind in of._STRING_KINDS and isinstance(value, (str, bytes)):
+        return bf.might_contain_bytes(value.encode() if isinstance(value, str) else value)
+    return True
+
+
+def group_may_match(stats, bf, col_kind: int, lo, hi, eq) -> bool:
+    """Three-valued per-group test: the stats range check (each bound
+    gated on its own), then for an equality probe the bloom filter."""
+    if stats is not None:
+        mn, mx = stats
+        if lo is not None and stats_comparable(mx, lo) and mx < lo:
+            return False
+        if hi is not None and stats_comparable(mn, hi) and mn > hi:
+            return False
+    return eq is None or bf is None or bloom_might_contain(bf, col_kind, eq)
+
+
+def oracle_keep(entries, filters, n_groups: int, col_kind: int, eq=None,
+                lo=None, hi=None, not_null=None) -> list[int]:
+    """The groups the per-group rules keep: ``entries`` are row-index
+    entries (positions, (min, max) or None, (n_values, has_null)), and
+    ``filters`` each group's BloomFilter or None. An eq list keeps a group
+    if ANY value may match; beside eq, lo and hi go unused."""
+    eqs = (None if eq is None else list(eq)
+           if isinstance(eq, (list, tuple, set, frozenset)) else [eq])
+    n = min(n_groups, len(entries))
+    keep = []
+    for g in range(n):
+        stats = entries[g][1]
+        bf = filters[g] if g < len(filters) else None
+        if eqs is not None:
+            ok = any(group_may_match(stats, bf, col_kind, v, v, v) for v in eqs)
+        else:
+            ok = group_may_match(stats, None, col_kind, lo, hi, None)
+        n_values, has_null = entries[g][2]
+        if not_null is True and n_values == 0:
+            ok = False
+        if not_null is False and has_null is False:
+            ok = False
+        if ok:
+            keep.append(g)
+    return keep + list(range(n, n_groups))
+
+
+def evaluator_keep(entries, filters, n_groups: int, col_kind: int, eq=None,
+                   lo=None, hi=None, not_null=None) -> list[int]:
+    """The same groups by the reader's evaluator, as StripeIndex feeds it."""
+    n = min(n_groups, len(entries))
+    stats = of.ColumnStats(col_kind, [e[1] for e in entries[:n]],
+                           [e[2] for e in entries[:n]])
+    probe = of.Probe(eq, lo, hi, not_null)
+    blooms = BloomMatrix(filters) if filters and eq is not None else None
+    return np.flatnonzero(of.keep_mask(probe, stats, n_groups, blooms, col_kind)).tolist()
+
+
+# --- the property test -------------------------------------------------------
+
+UTC = dt.timezone.utc
+_VALUES = {
+    of.K_LONG: st.one_of(st.integers(-40, 40), st.integers(I64_MIN, I64_MAX)),
+    of.K_DOUBLE: st.one_of(st.integers(-40, 40).map(float),
+                           st.floats(allow_nan=False, width=64)),
+    of.K_STRING: st.text(alphabet="ab\x00é", max_size=3),
+    of.K_DATE: st.dates(dt.date(1960, 1, 1), dt.date(1960, 3, 1)) | st.dates(),
+    of.K_TIMESTAMP: st.datetimes(dt.datetime(2020, 1, 1), dt.datetime(2020, 1, 2))
+    | st.datetimes(),
+    of.K_DECIMAL: st.decimals(-50, 50, places=1),
+}
+_PROBES = st.one_of(
+    st.integers(-40, 40), st.integers(I64_MIN, I64_MAX),
+    st.integers(1 << 63, 1 << 70), st.integers(-(1 << 70), I64_MIN - 1),
+    st.floats(width=64), st.booleans(), st.text(alphabet="ab\x00é", max_size=3),
+    st.binary(max_size=2), st.dates(), st.datetimes(),
+    st.datetimes(timezones=st.just(UTC)), st.decimals(-50, 50, places=1),
+)
+
+
+def _filter(kind: int, vals: list, size: int | None, liborc: bool):
+    bf = BloomFilter.for_expected(size or len(vals))
+    if vals and kind == of.K_LONG:
+        ints = np.array(vals, dtype=np.int64)
+        bf.add_hashes(wang_hash_i64_orc(ints) if liborc else wang_hash_i64(ints))
+    for v in vals if kind == of.K_STRING else ():
+        bf.add_hashes(np.array([murmur3_64_int(v.encode())], dtype=np.uint64))
+    return bf
+
+
+@st.composite
+def _stripes(draw):
+    """(kind, per-group values with None for nulls, entries, filters,
+    n_groups): statistics as a writer computes them, a group's dropped at
+    random (missing statistics), and, for int and string columns, a
+    bloom filter per group (one shape for all, or one per group)."""
+    kind = draw(st.sampled_from(sorted(_VALUES)))
+    groups = draw(st.lists(st.lists(st.none() | _VALUES[kind], max_size=6),
+                           min_size=1, max_size=6))
+    entries = []
+    for vals in groups:
+        live = [v for v in vals if v is not None]
+        stats = (min(live), max(live)) if live and draw(st.integers(0, 3)) else None
+        nulls = draw(st.sampled_from([(len(live), len(live) < len(vals)), (None, None)]))
+        entries.append(([0], stats, nulls))
+    filters = []
+    if kind in (of.K_LONG, of.K_STRING) and draw(st.booleans()):
+        size = draw(st.sampled_from([None, 64]))
+        liborc = draw(st.booleans())
+        filters = [None if draw(st.integers(0, 5)) == 0 else
+                   _filter(kind, [v for v in vals if v is not None], size, liborc)
+                   for vals in groups]
+    n_groups = len(groups)
+    # entries past the groups bound nothing; groups past the entries keep
+    cut = draw(st.integers(max(1, n_groups - 1), n_groups))
+    return kind, groups, entries[:cut], filters, n_groups
+
+
+def _neighbours(v) -> list:
+    """``v`` and probes of other types at or next to it: the values where
+    a type gate or a rounding rule decides."""
+    out = [v]
+    if isinstance(v, int):
+        out += [float(v), v + 0.5, v - 0.5, decimal.Decimal(v), v + (1 << 64)]
+    elif isinstance(v, float):
+        out += [int(v), int(v) + 1] if np.isfinite(v) else []
+    elif isinstance(v, str):
+        out += [v.encode(), v + "\x00"]
+    elif isinstance(v, dt.datetime):
+        out += [v.replace(tzinfo=UTC), v.date()]
+    elif isinstance(v, dt.date):
+        out += [dt.datetime.combine(v, dt.time())]
+    elif isinstance(v, decimal.Decimal):
+        out += [int(v), float(v), v + decimal.Decimal("0.05")]
+    return out
+
+
+@st.composite
+def _probes(draw, groups):
+    """(eq, lo, hi, not_null): values from the column, next to them (of
+    other types too), and of every type."""
+    pool = [v for vals in groups for v in vals if v is not None]
+    value = (st.sampled_from(pool).flatmap(lambda v: st.sampled_from(_neighbours(v)))
+             | _PROBES) if pool else _PROBES
+    shape = draw(st.sampled_from(["eq", "in", "range"]))
+    eq = lo = hi = None
+    if shape == "eq":
+        eq = draw(value)
+    elif shape == "in":
+        eq = draw(st.lists(value, max_size=4))
+    else:
+        lo, hi = draw(st.none() | value), draw(st.none() | value)
+    return eq, lo, hi, draw(st.sampled_from([None, True, False]))
+
+
+def _matches(v, eq, lo, hi, not_null) -> bool:
+    """May row value ``v`` (None: null) satisfy the probe? Values a range
+    cannot order count as matching."""
+    if v is None:
+        return not_null is not True and eq is None and lo is None and hi is None
+    if not_null is False:
+        return False
+    if eq is not None:
+        return any(v == e for e in (eq if isinstance(eq, list) else [eq]))
+    try:
+        return (lo is None or v >= lo) and (hi is None or v <= hi)
+    except (TypeError, decimal.InvalidOperation):
+        return True
+
+
+@settings(max_examples=1500, deadline=None, derandomize=True)
+@given(data=st.data())
+def test_evaluator_equals_oracle_and_keeps_every_match(data):
+    kind, groups, entries, filters, n_groups = data.draw(_stripes())
+    eq, lo, hi, not_null = data.draw(_probes(groups))
+    want = oracle_keep(entries, filters, n_groups, kind, eq, lo, hi, not_null)
+    got = evaluator_keep(entries, filters, n_groups, kind, eq, lo, hi, not_null)
+    assert got == want
+    for g, vals in enumerate(groups):
+        if any(_matches(v, eq, lo, hi, not_null) for v in vals):
+            assert g in got, (g, vals)
+
+
+@pytest.mark.parametrize("probe, keep", [
+    (dict(eq=5), [0, 3]), (dict(eq=[5, 250]), [0, 2, 3]), (dict(eq=[]), []),
+    (dict(lo=150), [1, 2, 3]), (dict(hi=150), [0, 1, 3]),
+    (dict(lo=150, hi=160), [1, 3]), (dict(eq=5.0), [0, 3]), (dict(eq=5.5), [0, 3]),
+    (dict(eq=True), [0, 1, 2, 3]), (dict(eq="5"), [0, 1, 2, 3]),
+    (dict(eq=1 << 64), [3]), (dict(lo=1 << 64), [3]), (dict(hi=-(1 << 64)), [3]),
+    (dict(lo=-(1 << 64)), [0, 1, 2, 3]), (dict(lo=float("inf")), [3]),
+    (dict(hi=float("-inf")), [3]), (dict(lo=float("nan")), [0, 1, 2, 3]),
+    (dict(lo=0, not_null=True), [0, 2, 3]), (dict(lo=0, not_null=False), [0, 1, 3]),
+])
+def test_int_statistics_probes(probe, keep):
+    """Group statistics [0, 99], [100, 199] (all null: no non-null value),
+    [200, 299] with no nulls, and a group without statistics: equality,
+    IN-lists, ranges, a float or bool or str probe, ints outside int64,
+    infinities, NaN and null tests."""
+    entries = [([0], (0, 99), (100, True)), ([0], (100, 199), (0, True)),
+               ([0], (200, 299), (100, False)), ([0], None, (None, None))]
+    args = (probe.get("eq"), probe.get("lo"), probe.get("hi"), probe.get("not_null"))
+    assert oracle_keep(entries, [], 4, of.K_LONG, *args) == keep
+    assert evaluator_keep(entries, [], 4, of.K_LONG, *args) == keep
+
+
+def test_double_statistics_compare_int_probes_exactly():
+    """An int probe of a double column compares as Python does, past
+    2**53 and past the doubles' range."""
+    big = float(1 << 60)
+    entries = [([0], (big, big), (1, False)), ([0], (-1.5, 2.5), (2, False)),
+               ([0], (float("inf"), float("inf")), (1, False))]
+    for v in [(1 << 60) + 1, (1 << 60) - 1, 1 << 60, 2, 3, 1 << 2000, -(1 << 2000)]:
+        for args in [(v, None, None), (None, v, None), (None, None, v)]:
+            want = oracle_keep(entries, [], 3, of.K_DOUBLE, *args)
+            assert evaluator_keep(entries, [], 3, of.K_DOUBLE, *args) == want, (v, args)
+
+
+def test_scalar_eq_plans_splits(tmp_path):
+    """A scalar ``eq`` predicate plans and reads splits like a one-value
+    IN-list; it raised a TypeError before the stripe pruning took it."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "ids.orc")
+    of.write_orc(pa.table({"id": pa.array(np.arange(30_000))}), path,
+                 stripe_rows=10_000)
+    metas = {path: of.read_metadata(path)}
+    splits = of.plan_splits(metas, [dict(column="id", eq=12_345)])
+    assert [s.offset for s in splits] == [
+        s.offset for s in of.plan_splits(metas, [dict(column="id", eq=[12_345])])]
+    assert len(splits) == 1
+    got = [of.decode_split(s, *of.fetch_split(s), predicates=[dict(column="id", eq=12_345)])
+           for s in splits]
+    ids = pa.concat_tables(got).column("id").to_numpy()
+    assert 12_345 in ids and len(ids) < 30_000
