@@ -317,7 +317,7 @@ def _mix_sql(group_cols: str, vals: dict[str, str], from_table: str,
 
 def _roundtrip(spark: SparkSession, sf_dir: str, table: str, cols: list[str]) -> DataFrame:
     """Encode a testdata table into the chunk-table and decode it back."""
-    from orc_rust_spark.operators.decode import decode_table_arrow as decode_table
+    from orc_rust_spark.operators.decode import decode_table_arrow
     from orc_rust_spark.operators.encode import encode_table
     from orc_rust_spark.plans.pipeline import plan_codecs
 
@@ -325,7 +325,7 @@ def _roundtrip(spark: SparkSession, sf_dir: str, table: str, cols: list[str]) ->
     chunks = encode_table(src, plan=plan_codecs(src))
     # encode output pipes straight into decode: chunk rows are already
     # contiguous per task, so the roundtrip is one map-only stage
-    return decode_table(chunks, src.schema, co_locate=False).select(*cols)
+    return decode_table_arrow(chunks, src.schema, co_locate=False).select(*cols)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -1307,10 +1307,10 @@ def q_pruned_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row_group_filter.rs + bloom_filter.rs + row_index.rs analogs): typed
     min/max comparison prunes whole chunks, then surviving chunks decode
     only the 10k-row groups whose per-group stats may match."""
-    from orc_rust_spark.operators.pruned_read import pruned_point_lookup_rg
+    from orc_rust_spark.operators.predicate import Comparison, pruned_scan
 
     schema, chunks, probe = _lineitem_chunks(spark, sf_dir)
-    rows, _keys = pruned_point_lookup_rg(chunks, schema, "l_orderkey", probe)
+    rows, _keys = pruned_scan(chunks, schema, Comparison("l_orderkey", "=", probe))
     return rows
 
 

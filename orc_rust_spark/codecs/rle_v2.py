@@ -43,15 +43,6 @@ computed together. SHORT_REPEAT runs are filled and PATCHED_BASE runs
 decoded one at a time. A stream that ends before its runs do raises
 CorruptStream.
 
-A point read of a few values out of thousands (decode_rlev2_points)
-walks the run headers once, up to the run that holds the last selected
-value, and decodes no run it does not need: DIRECT and SHORT_REPEAT
-values are read by bit arithmetic and fixed-delta values as ``base + i *
-delta``; only a bit-packed DELTA or a PATCHED_BASE run that holds a
-selected value is decoded, alone. A selection too dense for that
-per-value work (POINT_VALUES) is decoded as one stretch by decode_rlev2
-instead.
-
 Reference parity (behavioral, not code): the state machine and selector in
 src/encoding/integer/rle_v2/mod.rs:255-531 and the per-sub-encoding readers
 and writers in rle_v2/{short_repeat,direct,delta,patched_base}.rs. Golden
@@ -117,15 +108,8 @@ FILE_BATCH_VALUES = 32 * MAX_RUN_LENGTH
 # unpacked matrix and its zigzag or cumsum temporaries to 32 KB, for the
 # same reason (a DIRECT width that unpacks narrower holds more values)
 DECODE_BATCH_VALUES = 8 * MAX_RUN_LENGTH
-# a point read pays ~1 us of Python per selected value, a stretch decode
-# ~30 us of set-up plus ~20 ns per value of its span (10,000-value
-# DIRECT, small-int and fixed-delta streams of this encoder, 4-vCPU x86
-# host): a selection takes the walker while it holds fewer than
-# POINT_VALUES + span / 64 values
-POINT_VALUES = 32
 
 _U64 = np.uint64
-_MASK64 = (1 << 64) - 1
 
 
 # ---------------------------------------------------------------------------
@@ -590,97 +574,6 @@ class _RunWalk:
         self.direct, self.delta, self.fixed = direct, delta, fixed
         self.repeats, self.patched = repeats, patched
         self.got, self.end = got, pos
-
-
-def decode_rlev2_points(buf, sel, signed: bool = True, skip: int = 0) -> np.ndarray:
-    """The int64 values at the sorted offsets ``sel`` (counted after the
-    first ``skip`` values) of an ORC RLEv2 stream.
-
-    A sparse selection is read by one walk over the run headers. Runs
-    that hold no selected value are passed by header arithmetic (a
-    DIRECT header inline, the others through _run_extent). In a run that
-    holds some, SHORT_REPEAT and DIRECT values are read by bit
-    arithmetic and fixed-delta values (two-value and one-value DELTA
-    runs included) as ``base + i * delta``; a bit-packed DELTA or a
-    PATCHED_BASE run is decoded alone. The walk stops at the run that
-    holds the last selected value. A selection of at least
-    ``POINT_VALUES + span // 64`` values is decoded by decode_rlev2 from
-    its first value through its last instead. A run that holds a
-    selected value and ends past the buffer, or a header read past it,
-    raises CorruptStream."""
-    sel = np.asarray(sel, dtype=np.int64)
-    if not sel.size:
-        return np.zeros(0, dtype=np.int64)
-    lo, span = int(sel[0]), int(sel[-1]) - int(sel[0]) + 1
-    if sel.size >= POINT_VALUES + span // 64:
-        return decode_rlev2(buf, span, signed=signed, skip=skip + lo,
-                            exact=False)[sel - lo]
-    size = len(buf)
-    targets = (sel + skip).tolist()
-    out: list[int] = []
-    i, n = 0, len(targets)
-    pos = first = 0  # byte and value offset of the run at pos
-    try:
-        while i < n:
-            h = buf[pos]
-            if h >> 6 == 1:
-                # DIRECT, the most common run, sized inline
-                count = (((h & 1) << 8) | buf[pos + 1]) + 1
-                nxt = pos + 2 + (count * decode_bit_width((h >> 1) & 0x1F) + 7) // 8
-            else:
-                count, nxt = _run_extent(buf, pos)
-            end = first + count
-            if targets[i] < end:
-                if nxt > size:
-                    raise CorruptStream(
-                        f"truncated RLEv2 stream: a run needs {nxt} bytes, have {size}")
-                j = i + 1
-                while j < n and targets[j] < end:
-                    j += 1
-                out += _run_points(buf, pos, count,
-                                   [t - first for t in targets[i:j]], signed)
-                i = j
-            pos, first = nxt, end
-    except IndexError:
-        raise CorruptStream(
-            f"truncated RLEv2 stream: a run header runs past its {size} bytes") from None
-    return np.array(out, dtype=np.int64)
-
-
-def _run_points(buf, pos: int, count: int, offs: list, signed: bool) -> list:
-    """The values at the run offsets ``offs`` of the ``count``-value run
-    at ``pos``, whose bytes lie inside ``buf``."""
-    h = buf[pos]
-    enc = h >> 6
-    if enc == 0:
-        width_bytes = ((h >> 3) & 0x7) + 1
-        u = int.from_bytes(buf[pos + 1 : pos + 1 + width_bytes], "big")
-        return [_to_int64(((u >> 1) ^ -(u & 1)) if signed else u)] * len(offs)
-    if enc == 1:
-        width = decode_bit_width((h >> 1) & 0x1F)
-        start = pos + 2
-        mask = (1 << width) - 1
-        vals = []
-        for o in offs:
-            bit = o * width
-            a = start + (bit >> 3)
-            b = start + ((bit + width + 7) >> 3)
-            u = (int.from_bytes(buf[a:b], "big")
-                 >> ((b - a) * 8 - (bit & 7) - width)) & mask
-            vals.append(((u >> 1) ^ -(u & 1)) if signed else _to_int64(u))
-        return vals
-    if enc == 3:
-        code = (h >> 1) & 0x1F
-        base, p = read_varint(buf, pos + 2)
-        base = _to_int64(((base >> 1) ^ -(base & 1)) if signed else base)
-        delta, p = read_signed_varint(buf, p)
-        if code == 0 or count <= 2:
-            return [_to_int64((base + o * delta) & _MASK64) for o in offs]
-        vals = np.empty(count, dtype=np.int64)
-        _delta_groups(vals, np.frombuffer(buf, dtype=np.uint8), decode_bit_width(code),
-                      count, [p], [0], [base], [delta])
-        return vals[offs].tolist()
-    return _read_patched_base(buf, pos)[0][offs].tolist()
 
 
 def _to_int64(v: int) -> int:

@@ -9,7 +9,7 @@ Usage:
     python -m orc_rust_spark.inspect <chunks_dir> index <column>
       (per-row-group min/max of a row_index-encoded column)
     python -m orc_rust_spark.inspect <chunks_dir> bloom <column> <value>
-      (test a value against every chunk's bloom filter)
+      (test a value against every chunk's statistics and bloom filter)
 
 A path ending in .orc is inspected as a REAL ORC file instead (no Spark
 session; pure tail/stream parse, like the reference CLI):
@@ -420,16 +420,16 @@ def _main_chunks(argv, spark, chunks_dir, cmd, F) -> int:
         int_codecs = ("rle_v2", "rle_v1", "byte_rle")
         value = _parse_probe(
             raw_val, codec_row is not None and codec_row[0] in int_codecs)
-        from .operators.pruned_read import prune_chunks_bloom
+        from .operators.predicate import Comparison, prune_chunks_predicate
 
         total = chunks.select("part_id", "chunk_ord").distinct().count()
         with_bloom = chunks.where(
             (F.col("column") == col) & (F.col("stream_kind") == "BLOOM_FILTER")
         ).count()
-        kept = prune_chunks_bloom(chunks, col, value).count()
+        kept = prune_chunks_predicate(chunks, Comparison(col, "=", value)).count()
         print(f"chunks total        : {total}")
         print(f"chunks with bloom   : {with_bloom}")
-        print(f"chunks maybe-contain: {kept}")
+        print(f"chunks stats+bloom  : {kept} maybe-contain")
     else:
         print(f"unknown command {cmd!r}; use info|stats|layout|export|index|bloom")
         return 2

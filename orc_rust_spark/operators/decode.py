@@ -6,18 +6,14 @@ operators.encode, playing the role of the reference's NaiveStripeDecoder
 DATA/LENGTH/SECONDARY/DICTIONARY_DATA through the block decompressor and
 the RLE/FSST decoders, then re-space nulls.
 
-Two execution strategies over the same Arrow-array core:
-- decode_table        groupBy(part_id, chunk_ord).applyInPandas — robust,
-                      works on any row layout
-- decode_table_arrow  mapInArrow over runs of one chunk's stream rows —
-                      decoded values stay Arrow end to end (no Python
-                      string objects), the fast path. It reads a stored
-                      chunk table in place (one map-only stage, like the
-                      reference decoding a stripe where it lies) when
-                      chunk_layout proves from the parquet footers that
-                      no chunk can reach two tasks, and otherwise first
-                      co-locates each chunk with repartition +
-                      sortWithinPartitions.
+decode_table_arrow runs it as mapInArrow over runs of one chunk's stream
+rows, so decoded values stay Arrow end to end (no Python string objects).
+It reads a stored chunk table in place (one map-only stage, like the
+reference decoding a stripe where it lies) when chunk_layout proves from
+the parquet footers that no chunk can reach two tasks, and otherwise
+first co-locates each chunk with repartition + sortWithinPartitions. With
+a predicate (``where``) it decodes only the row groups of each chunk that
+may hold a matching row (operators.predicate.pruned_scan).
 """
 
 from __future__ import annotations
@@ -27,7 +23,6 @@ import os
 from collections.abc import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -121,11 +116,11 @@ def _arrow_of(dt: T.DataType) -> pa.DataType:
 
 def decode_chunk_arrays(
     stream_rows: list[dict], col_kinds: dict[str, str | T.DataType],
-    rg_keep: list[int] | None = None,
+    groups: list[int] | None = None,
 ) -> dict[str, pa.Array]:
     """Decode one chunk's stream rows -> {column: pa.Array} (dense schema).
 
-    ``rg_keep``: row-group indexes to decode for chunks written with a
+    ``groups``: row-group indexes to decode for chunks written with a
     row index (operators.encode ROW_INDEX analog); None decodes all.
 
     ``stream_rows``: dicts with column/stream_kind/codec/block_codec/data/
@@ -139,7 +134,7 @@ def decode_chunk_arrays(
     by_col: dict[str, dict[str, dict]] = {}
     for r in stream_rows:
         by_col.setdefault(r["column"], {})[r["stream_kind"]] = r
-    if rg_keep is None:
+    if groups is None:
         return {
             name: _decode_column(name, _as_datatype(kind), by_col)
             for name, kind in col_kinds.items()
@@ -161,13 +156,13 @@ def decode_chunk_arrays(
     for name, kind in col_kinds.items():
         dt = _as_datatype(kind)
         if _rg_of(by_col[name]) is not None:
-            out[name] = _decode_column(name, dt, by_col, rg_keep=rg_keep)
+            out[name] = _decode_column(name, dt, by_col, groups=groups)
         else:
             full = _decode_column(name, dt, by_col)
             if grid is None:
                 out[name] = full
             else:
-                spans = [full.slice(s, e - s) for s, e in rg_row_ranges(grid, rg_keep)]
+                spans = [full.slice(s, e - s) for s, e in rg_row_ranges(grid, groups)]
                 out[name] = (
                     pa.concat_arrays([p.combine_chunks() if hasattr(p, "combine_chunks") else p for p in spans])
                     if spans else full.slice(0, 0)
@@ -242,7 +237,7 @@ def rg_row_ranges(rg: dict, keep: list[int]) -> list[tuple[int, int]]:
 
 
 def _decode_column(
-    name: str, dt: T.DataType, by_col: dict, rg_keep: list[int] | None = None
+    name: str, dt: T.DataType, by_col: dict, groups: list[int] | None = None
 ) -> pa.Array:
     metas = by_col[name]
     streams = {
@@ -253,7 +248,7 @@ def _decode_column(
     }
     rg = _rg_of(metas)
     if rg is not None:
-        return _decode_column_rg(name, dt, metas, streams, rg, rg_keep)
+        return _decode_column_rg(name, dt, metas, streams, rg, groups)
     any_meta = next(iter(metas.values()))
     n = int(any_meta["row_count"])
     null_count = int(any_meta["null_count"])
@@ -357,50 +352,6 @@ def _decode_column(
         raise ValueError(f"unknown codec {codec!r} for column {name!r}")
 
     return _respace(dense, not_null)
-
-
-def _rows_to_stream_dicts(pdf: pd.DataFrame) -> list[dict]:
-    return pdf[
-        ["column", "stream_kind", "codec", "block_codec", "data",
-         "row_count", "null_count", "dict_size", "stats_json"]
-    ].to_dict("records")
-
-
-def decode_chunk_pdf(
-    pdf: pd.DataFrame, col_kinds: dict, rg_keep: list[int] | None = None
-) -> pd.DataFrame:
-    arrays = decode_chunk_arrays(_rows_to_stream_dicts(pdf), col_kinds, rg_keep=rg_keep)
-    cols = {}
-    for name, arr in arrays.items():
-        kind = _kind_of(_as_datatype(col_kinds[name]))
-        if kind == "timestamp":
-            cols[name] = arr.cast(pa.timestamp("us")).to_pandas()
-        elif kind in ("string", "binary", "bool", "nested"):
-            cols[name] = arr.to_pandas()  # object dtype, None for nulls
-        else:
-            s = arr.to_pandas()
-            if kind == "int64" and arr.null_count:
-                s = pd.array(s, dtype="Int64")
-            cols[name] = s
-    return pd.DataFrame(cols, columns=list(col_kinds.keys()))
-
-
-def decode_table(
-    chunks: DataFrame, schema: T.StructType,
-    group_cols: tuple[str, ...] = ("part_id", "chunk_ord"),
-) -> DataFrame:
-    """Chunk-table DataFrame -> DataFrame with the original schema
-    (grouped applyInPandas strategy).
-
-    ``group_cols`` identifies one chunk; streaming sinks that land one
-    directory per micro-batch reuse task-local part_ids across batches and
-    pass ("stream_batch_id", "part_id", "chunk_ord")."""
-    col_kinds = {f.name: f.dataType for f in schema.fields}
-
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return decode_chunk_pdf(pdf, col_kinds)
-
-    return chunks.groupBy(*group_cols).applyInPandas(decode_group, schema=schema)
 
 
 def _binary_views(arr: pa.Array) -> list[memoryview]:
@@ -543,9 +494,10 @@ def _key_str(group_cols: Sequence[str], key: tuple) -> str:
 
 def decode_table_arrow(
     chunks: DataFrame, schema: T.StructType, co_locate: bool = True,
-    group_cols: tuple[str, ...] = ("part_id", "chunk_ord"),
+    group_cols: tuple[str, ...] = ("part_id", "chunk_ord"), where=None,
 ) -> DataFrame:
-    """Fast path: decode chunk rows to Arrow RecordBatches directly.
+    """Chunk-table DataFrame -> DataFrame with the original schema, decoded
+    to Arrow RecordBatches directly.
 
     Stream metadata is read column-wise off the Arrow batch (no per-row
     Python dicts) and the encoded `data` bytes are zero-copy memoryview
@@ -579,7 +531,14 @@ def decode_table_arrow(
     packed-integer key, so no bound on chunk_ord or part_id magnitude);
     streaming consumers add "stream_batch_id" since per-batch landing
     dirs reuse task-local part_ids.
+
+    ``where`` (an operators.predicate Predicate) decodes of each chunk
+    only the row groups whose statistics say they may hold a matching
+    row (predicate.chunk_keep over its DATA rows); other rows of those
+    groups stay, for the caller's filter. None decodes every row.
     """
+    if where is not None:
+        from .predicate import chunk_keep
     col_kinds = {f.name: f.dataType for f in schema.fields}
     arrow_schema = pa.schema(
         [pa.field(f.name, _arrow_of(f.dataType)) for f in schema.fields]
@@ -601,7 +560,9 @@ def decode_table_arrow(
         seen: set[tuple] = set()
 
         def flush(rows):
-            arrays = decode_chunk_arrays(rows, col_kinds)
+            keep = None if where is None else chunk_keep(
+                [r for r in rows if r["stream_kind"] == ct.DATA], where)[1]
+            arrays = decode_chunk_arrays(rows, col_kinds, groups=keep)
             cols = []
             for name in names:
                 arr = arrays[name]

@@ -434,8 +434,8 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit, *,
         raw = stats["total_bytes"]
         if is_str and len(dense):
             mm = pa.compute.min_max(dense.cast(pa.large_string()))
-            minv = (mm["min"].as_py() or "")[:64]
-            maxv = (mm["max"].as_py() or "")[:64]
+            minv = (mm["min"].as_py() or "")[:ct.STAT_CHARS]
+            maxv = (mm["max"].as_py() or "")[:ct.STAT_CHARS]
     else:
         raise TypeError(f"unsupported column type {typ} for {name!r}")
 

@@ -1,31 +1,52 @@
-"""Composite predicate AST evaluated three-valued over chunk statistics.
+"""Composite predicate AST, pruned over the chunk table by the ORC reader's
+evaluator.
 
 Mirrors the reference's Predicate AST (src/predicate.rs:28-200: Comparison
-with 6 ops, IsNull/IsNotNull, And/Or/Not with negation push-down) and its
-three-valued min/max evaluation (src/row_group_filter.rs:54-205): a chunk
-is skipped only when the predicate is DEFINITELY false given the chunk's
-min/max/null_count; unknown stats keep the chunk. NOT is handled by
-pushing the negation down De Morgan-style (Not(a AND b) -> Not(a) OR
-Not(b), Not(Comparison) -> flipped op), exactly as the reference does,
-because "might match" is not closed under complement.
+with 6 ops, IsNull/IsNotNull, And/Or/Not with negation push-down). Each
+leaf is a few ``orc_file.Probe``s, and a chunk's or its row groups' keep
+mask is composed from ``orc_file.keep_mask`` over the chunk table's
+statistics as ``ColumnStats`` arrays (column_stats): And is ``&``, Or is
+``|``, and Not is pushed down De Morgan-style (Not(a AND b) -> Not(a) OR
+Not(b), Not(Comparison) -> flipped op), because "might match" is not
+closed under complement. Three-valued, as the reference's
+src/row_group_filter.rs:54-205: a chunk or group is skipped only when its
+statistics or bloom filter rule every row out; unknown statistics keep.
 
-Typed comparison: chunk stats are persisted as strings; numeric predicate
-values try_cast the stat back to bigint/double before comparing
-(row_group_filter.rs:207-368 typed eval analog; see pruned_read._typed_stat).
+Timestamp statistics are UTC microseconds and a datetime probe is read as
+naive UTC, the session time zone ``session.get_spark`` sets.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import json
+from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..codecs import block as blockc
+from ..codecs.bloom import BloomFilter, BloomMatrix
 from ..sources import chunk_table as ct
-from .pruned_read import MAX_STAT_LEN, _rg_keep_groups, _stat_usable_bound, _typed_stat
+from ..sources import orc_file as of
 
 _NEG_OP = {"=": "!=", "!=": "=", "<": ">=", "<=": ">", ">": "<=", ">=": "<"}
+
+#: chunk codec -> the statistics family of its min/max strings and their
+#: parse into the family's domain (days for dates, microseconds for
+#: timestamps). Decimal statistics are unscaled mantissas, which no probe
+#: compares with, and booleans keep none.
+_FAMILY_OF_CODEC = {
+    **dict.fromkeys(("rle_v2", "rle_v1", "byte_rle"), ("int", int)),
+    "float_plain": ("float", float), "date": ("date", int),
+    "timestamp_split": ("ts", int),
+    **dict.fromkeys(("direct", "dict", "fsst"), ("str", str)),
+}
+#: chunk codec -> the ORC column kind whose hash family its bloom holds
+_BLOOM_KIND = {**dict.fromkeys(("rle_v2", "rle_v1", "byte_rle"), of.K_LONG),
+               **dict.fromkeys(("direct", "dict", "fsst"), of.K_STRING)}
 
 
 class Predicate:
@@ -33,18 +54,6 @@ class Predicate:
         raise NotImplementedError
 
     def negate(self) -> "Predicate":
-        raise NotImplementedError
-
-    def rg_keep(self, rg_by_col: dict, n_groups: int) -> set[int]:
-        """Row groups (within one chunk) this predicate MIGHT match, given
-        each indexed column's per-group stats. Composition mirrors the
-        reference's RowSelection algebra (src/row_selection.rs:32-260
-        from_filters/and_then): And intersects, Or unions, Not pushes the
-        negation down. Columns without an index keep every group."""
-        return set(range(n_groups))
-
-    def might_match(self) -> Column:
-        """Boolean Column over the per-chunk stats pivot (True = keep)."""
         raise NotImplementedError
 
     def to_spark(self) -> Column:
@@ -57,57 +66,24 @@ class Comparison(Predicate):
     col: str
     op: str  # = != < <= > >=
     value: object
+    #: the Probes whose keep masks OR to this comparison's: != is < or >,
+    #: so a constant chunk prunes
+    probes: tuple = field(init=False, repr=False, compare=False)
+
+    def __post_init__(self):
+        v = self.value
+        lt, gt = of.Probe(hi=v, hi_strict=True), of.Probe(lo=v, lo_strict=True)
+        probes = {"=": (of.Probe(v),), "!=": (lt, gt), "<": (lt,), "<=": (of.Probe(hi=v),),
+                  ">": (gt,), ">=": (of.Probe(lo=v),)}.get(self.op)
+        if probes is None:
+            raise ValueError(f"unknown op {self.op!r}")
+        object.__setattr__(self, "probes", probes)
 
     def columns(self) -> set[str]:
         return {self.col}
 
     def negate(self) -> Predicate:
         return Comparison(self.col, _NEG_OP[self.op], self.value)
-
-    def might_match(self) -> Column:
-        # the same probe-usability and codec-compatibility guards as
-        # prune_chunks_stats / rg_keep (code-review r6): a datetime or
-        # Decimal probe would compare lexicographically against
-        # epoch/mantissa stat strings and wrongly prune, and decimal
-        # mantissa stats are never comparable to user values
-        if not _stat_usable_bound(self.value):
-            return F.lit(True)
-        codec = F.col(f"codec__{self.col}")
-        numeric_codecs = ("rle_v2", "rle_v1", "byte_rle", "date",
-                          "timestamp_split")
-        if isinstance(self.value, bool):
-            comparable = codec == "boolean_rle"
-        elif isinstance(self.value, (int, float)):
-            comparable = codec.isin(*numeric_codecs, "float_plain")
-        elif isinstance(self.value, str):
-            comparable = ~codec.isin(
-                *numeric_codecs, "decimal", "float_plain", "boolean_rle")
-        else:
-            comparable = F.lit(False)
-        min_stat, lit = _typed_stat(f"min__{self.col}", self.value)
-        max_stat, _ = _typed_stat(f"max__{self.col}", self.value)
-        # a string max truncated to MAX_STAT_LEN chars is an unusable upper
-        # bound (the true max extends past the prefix)
-        if isinstance(self.value, str):
-            max_stat = F.when(
-                F.length(F.col(f"max__{self.col}")) < MAX_STAT_LEN, max_stat
-            )
-        if self.op == "=":
-            definitely_false = (max_stat < lit) | (min_stat > lit)
-        elif self.op == "!=":
-            # false only when every value in the chunk equals v
-            definitely_false = (min_stat == lit) & (max_stat == lit)
-        elif self.op == "<":
-            definitely_false = min_stat >= lit
-        elif self.op == "<=":
-            definitely_false = min_stat > lit
-        elif self.op == ">":
-            definitely_false = max_stat <= lit
-        elif self.op == ">=":
-            definitely_false = max_stat < lit
-        else:
-            raise ValueError(f"unknown op {self.op!r}")
-        return ~(comparable & definitely_false).eqNullSafe(F.lit(True))
 
     def to_spark(self) -> Column:
         c, v = F.col(self.col), F.lit(self.value)
@@ -116,54 +92,12 @@ class Comparison(Predicate):
             "<=": c <= v, ">": c > v, ">=": c >= v,
         }[self.op]
 
-    def rg_keep(self, rg_by_col: dict, n_groups: int) -> set[int]:
-        """Delegates the shared typed three-valued evaluation to
-        pruned_read._rg_keep_groups (one implementation for both pruning
-        paths — code-review r6); only the != op, which the lo/hi algebra
-        cannot express, is handled here."""
-        rg = rg_by_col.get(self.col)
-        universe = set(range(n_groups))
-        if rg is None or len(rg["n"]) != n_groups:
-            return universe
-        v, op = self.value, self.op
-        if op == "!=":
-            if rg["codec"] == "decimal" or not _stat_usable_bound(v):
-                return universe
-            numeric = rg["codec"] in (
-                "rle_v2", "rle_v1", "byte_rle", "date", "timestamp_split")
-            floaty = rg["codec"] == "float_plain"
-            stringy = not numeric and not floaty
-            if stringy != isinstance(v, str):
-                return universe
-
-            def parse(x):
-                try:
-                    return int(x) if numeric else float(x) if floaty else x
-                except (TypeError, ValueError):
-                    return None
-
-            keep = set()
-            for g in range(n_groups):
-                mn, mx = parse(rg["min"][g]), parse(rg["max"][g])
-                mx_usable = not (stringy and isinstance(mx, str)
-                                 and len(mx) >= MAX_STAT_LEN)
-                # false only when every value in the group equals v
-                if not (mn is not None and mx_usable and mn == v and mx == v):
-                    keep.add(g)
-            return keep
-        kw = {
-            "=": {"eq_value": v},
-            "<": {"hi": v, "hi_strict": True},
-            "<=": {"hi": v},
-            ">": {"lo": v, "lo_strict": True},
-            ">=": {"lo": v},
-        }[op]
-        return set(_rg_keep_groups(rg, **kw))
-
 
 @dataclass(frozen=True)
 class IsNull(Predicate):
     col: str
+    probes: tuple = field(default_factory=lambda: (of.Probe(not_null=False),),
+                          init=False, repr=False, compare=False)
 
     def columns(self) -> set[str]:
         return {self.col}
@@ -171,23 +105,15 @@ class IsNull(Predicate):
     def negate(self) -> Predicate:
         return IsNotNull(self.col)
 
-    def might_match(self) -> Column:
-        nulls = F.col(f"nulls__{self.col}")
-        return ~(nulls == 0).eqNullSafe(F.lit(True))
-
     def to_spark(self) -> Column:
         return F.col(self.col).isNull()
-
-    def rg_keep(self, rg_by_col: dict, n_groups: int) -> set[int]:
-        rg = rg_by_col.get(self.col)
-        if rg is None or len(rg["n"]) != n_groups:
-            return set(range(n_groups))
-        return {g for g in range(n_groups) if int(rg["nulls"][g]) > 0}
 
 
 @dataclass(frozen=True)
 class IsNotNull(Predicate):
     col: str
+    probes: tuple = field(default_factory=lambda: (of.Probe(not_null=True),),
+                          init=False, repr=False, compare=False)
 
     def columns(self) -> set[str]:
         return {self.col}
@@ -195,18 +121,8 @@ class IsNotNull(Predicate):
     def negate(self) -> Predicate:
         return IsNull(self.col)
 
-    def might_match(self) -> Column:
-        nulls, rows = F.col(f"nulls__{self.col}"), F.col(f"rows__{self.col}")
-        return ~(nulls == rows).eqNullSafe(F.lit(True))
-
     def to_spark(self) -> Column:
         return F.col(self.col).isNotNull()
-
-    def rg_keep(self, rg_by_col: dict, n_groups: int) -> set[int]:
-        rg = rg_by_col.get(self.col)
-        if rg is None or len(rg["n"]) != n_groups:
-            return set(range(n_groups))
-        return {g for g in range(n_groups) if int(rg["nulls"][g]) < int(rg["n"][g])}
 
 
 @dataclass(frozen=True)
@@ -222,22 +138,10 @@ class And(Predicate):
     def negate(self) -> Predicate:
         return Or(*(p.negate() for p in self.preds))
 
-    def might_match(self) -> Column:
-        out = F.lit(True)
-        for p in self.preds:
-            out = out & p.might_match()
-        return out
-
     def to_spark(self) -> Column:
         out = F.lit(True)
         for p in self.preds:
             out = out & p.to_spark()
-        return out
-
-    def rg_keep(self, rg_by_col: dict, n_groups: int) -> set[int]:
-        out = set(range(n_groups))
-        for p in self.preds:
-            out &= p.rg_keep(rg_by_col, n_groups)
         return out
 
 
@@ -254,22 +158,10 @@ class Or(Predicate):
     def negate(self) -> Predicate:
         return And(*(p.negate() for p in self.preds))
 
-    def might_match(self) -> Column:
-        out = F.lit(False)
-        for p in self.preds:
-            out = out | p.might_match()
-        return out
-
     def to_spark(self) -> Column:
         out = F.lit(False)
         for p in self.preds:
             out = out | p.to_spark()
-        return out
-
-    def rg_keep(self, rg_by_col: dict, n_groups: int) -> set[int]:
-        out: set[int] = set()
-        for p in self.preds:
-            out |= p.rg_keep(rg_by_col, n_groups)
         return out
 
 
@@ -283,67 +175,121 @@ class Not(Predicate):
     def negate(self) -> Predicate:
         return self.pred
 
-    def might_match(self) -> Column:
-        # push-down: evaluate the negated predicate (reference
-        # row_group_filter.rs handles NOT via Predicate::negate())
-        return self.pred.negate().might_match()
-
     def to_spark(self) -> Column:
         return ~self.pred.to_spark()
 
-    def rg_keep(self, rg_by_col: dict, n_groups: int) -> set[int]:
-        return self.pred.negate().rg_keep(rg_by_col, n_groups)
+
+def column_stats(codec: str, mins: list, maxs: list, nulls: list | None,
+                 rows: list) -> of.ColumnStats:
+    """A chunk's (one entry) or its row groups' statistics as ColumnStats:
+    the min and max strings parsed straight into the domain of the
+    family their codec gives (_FAMILY_OF_CODEC); a None or unparsable one
+    is unknown. A string max of ``ct.STAT_CHARS`` characters or more is a
+    prefix of the true max; with its last code point bumped it is an
+    upper bound, and unknown where that code point is U+10FFFF. ``nulls``
+    (None: not known) and ``rows`` count each entry's nulls and rows."""
+    family, parse = _FAMILY_OF_CODEC.get(codec, (None, None))
+    pairs = []
+    for mn, mx in zip(mins, maxs):
+        pair = None
+        if family is not None and mn is not None and mx is not None:
+            try:
+                pair = (parse(mn), parse(mx))
+            except ValueError:
+                pass
+            if family == "str" and len(mx) >= ct.STAT_CHARS:
+                pair = None if mx[-1] == "\U0010ffff" else (mn, mx[:-1] + chr(ord(mx[-1]) + 1))
+        pairs.append(pair)
+    counts = None if nulls is None else [(r - k, int(k > 0)) for k, r in zip(nulls, rows)]
+    return of.ColumnStats.of(family, pairs, counts)
 
 
-def chunk_stats_pivot(chunks: DataFrame, cols: list[str]) -> DataFrame:
-    """One row per chunk with min__c/max__c/nulls__c/rows__c per column."""
-    meta = chunks.where(
-        (F.col("stream_kind") == ct.DATA) & F.col("column").isin(list(cols))
-    )
-    aggs = []
-    for c in cols:
-        is_c = F.col("column") == c
-        aggs += [
-            F.first(F.when(is_c, F.col("codec")), ignorenulls=True).alias(f"codec__{c}"),
-            F.first(F.when(is_c, F.col("min_val")), ignorenulls=True).alias(f"min__{c}"),
-            F.first(F.when(is_c, F.col("max_val")), ignorenulls=True).alias(f"max__{c}"),
-            F.first(F.when(is_c, F.col("null_count")), ignorenulls=True).alias(f"nulls__{c}"),
-            F.first(F.when(is_c, F.col("row_count")), ignorenulls=True).alias(f"rows__{c}"),
-        ]
-    return meta.groupBy("part_id", "chunk_ord").agg(*aggs)
+def _keep(pred: Predicate, cols: dict, n: int) -> np.ndarray:
+    """Which of ``n`` entries may hold a row ``pred`` matches. ``cols`` maps
+    a column to (ColumnStats, BloomMatrix or None, the bloom's ORC kind);
+    a column without statistics keeps every entry."""
+    if isinstance(pred, Not):
+        return _keep(pred.pred.negate(), cols, n)
+    if isinstance(pred, And):
+        out = np.ones(n, dtype=bool)
+        for p in pred.preds:
+            out &= _keep(p, cols, n)
+        return out
+    if isinstance(pred, Or):
+        out = np.zeros(n, dtype=bool)
+        for p in pred.preds:
+            out |= _keep(p, cols, n)
+        return out
+    got = cols.get(pred.col)
+    if got is None:
+        return np.ones(n, dtype=bool)
+    stats, blooms, kind = got
+    out = np.zeros(n, dtype=bool)
+    for probe in pred.probes:
+        out |= of.keep_mask(probe, stats, n, blooms, kind)
+    return out
+
+
+def chunk_keep(rows: list[dict], pred: Predicate) -> tuple[bool, list[int] | None]:
+    """One chunk's pruning -> (may the chunk hold a row ``pred`` matches,
+    the row groups to decode or None for all).
+
+    ``rows`` are the chunk's stream rows as dicts: a DATA row's
+    ``min_val``, ``max_val``, ``null_count`` and ``row_count`` give the
+    chunk's statistics, its ``stats_json`` "rg" index its groups', and a
+    BLOOM_FILTER row's ``data`` its bloom filter; a row without them
+    keeps. The group list is None too when no column is indexed, every
+    group may match, or the indexed columns lie on different group grids
+    (per-column strides): one keep list would slice them at different
+    rows."""
+    cols = pred.columns()
+    chunk, groups, grids, blooms = {}, {}, [], []
+    for r in rows:
+        name = r["column"]
+        if r["stream_kind"] == ct.BLOOM_FILTER and name in cols and r["codec"] in _BLOOM_KIND:
+            blooms.append(r)
+        if r["stream_kind"] != ct.DATA:
+            continue
+        sj = r.get("stats_json")
+        rg = json.loads(sj).get("rg") if sj else None
+        if rg:
+            grids.append(rg["n"])
+        if name in cols:
+            chunk[name] = (column_stats(r["codec"], [r.get("min_val")], [r.get("max_val")],
+                                        [r["null_count"]], [r["row_count"]]), None, -1)
+            if rg:
+                groups[name] = (column_stats(rg["codec"], rg["min"], rg["max"],
+                                             rg.get("nulls"), rg["n"]), None, -1)
+    for r in blooms:
+        if r["column"] in chunk:
+            bf = BloomFilter.deserialize(blockc.decompress_stream(r["data"], r["block_codec"]))
+            chunk[r["column"]] = (chunk[r["column"]][0], BloomMatrix([bf]), _BLOOM_KIND[r["codec"]])
+    verdict = bool(_keep(pred, chunk, 1)[0])
+    if not grids or any(g != grids[0] for g in grids[1:]):
+        return verdict, None
+    n = len(grids[0])
+    keep = np.flatnonzero(_keep(pred, groups, n))
+    return verdict, None if len(keep) == n else keep.tolist()
 
 
 def prune_chunks_predicate(chunks: DataFrame, pred: Predicate) -> DataFrame:
-    """Chunk keys whose stats say the predicate MIGHT match."""
-    pivot = chunk_stats_pivot(chunks, sorted(pred.columns()))
-    return pivot.where(pred.might_match()).select("part_id", "chunk_ord")
+    """Keys (part_id, chunk_ord) of the chunks whose statistics and bloom
+    filters say ``pred`` MIGHT match: one grouped Arrow pass over the DATA
+    and BLOOM_FILTER rows of its columns, which reads ``data`` for the
+    BLOOM_FILTER rows only."""
+    kind = F.col("stream_kind")
+    meta = chunks.where(
+        F.col("column").isin(sorted(pred.columns())) & kind.isin(ct.DATA, ct.BLOOM_FILTER)
+    ).select("part_id", "chunk_ord", "column", "stream_kind", "codec", "block_codec",
+             "min_val", "max_val", "null_count", "row_count",
+             F.when(kind == ct.BLOOM_FILTER, F.col("data")).alias("data"))
 
+    def verdict(table: pa.Table) -> pa.Table:
+        keep, _ = chunk_keep(table.to_pylist(), pred)
+        return table.select(["part_id", "chunk_ord"]).slice(0, int(keep))
 
-def rg_keep_for_chunk(pdf, pred: Predicate) -> list[int] | None:
-    """Composed row-group keep list for one chunk's stream rows (pandas
-    frame), or None when no column is indexed / nothing can be skipped."""
-    import json
-
-    rg_by_col: dict[str, dict] = {}
-    sel = pdf[pdf["stream_kind"] == ct.DATA]
-    for col, sj in zip(sel["column"], sel["stats_json"]):
-        if sj:
-            rg = json.loads(sj).get("rg")
-            if rg:
-                rg_by_col[col] = rg
-    if not rg_by_col:
-        return None
-    grids = list(rg_by_col.values())
-    if any(g["n"] != grids[0]["n"] for g in grids[1:]):
-        # per-column row_index_stride overrides put the indexed columns on
-        # DIFFERENT group grids: a keep list computed on one grid would
-        # slice the others at wrong row spans (code-review r6) — skip
-        # group pruning; the chunk still decodes and the residual filter
-        # gives exact rows
-        return None
-    n_groups = len(grids[0]["n"])
-    keep = sorted(pred.rg_keep(rg_by_col, n_groups))
-    return None if len(keep) >= n_groups else keep
+    return meta.groupBy("part_id", "chunk_ord").applyInArrow(
+        verdict, schema="part_id int, chunk_ord int")
 
 
 def pruned_scan(
@@ -351,23 +297,15 @@ def pruned_scan(
 ) -> tuple[DataFrame, DataFrame]:
     """-> (decoded rows satisfying pred exactly, kept chunk keys).
 
-    Two pruning granularities: chunk-level stats (might_match pivot), then
-    within each surviving chunk the per-COLUMN row-group keep lists are
-    COMPOSED across the predicate tree (And intersects, Or unions — the
-    reference's RowSelection and_then/union, src/row_selection.rs:32-260)
-    so a multi-column predicate skips groups on every indexed column, not
-    just one."""
-    import pandas as pd
+    Two pruning granularities: prune_chunks_predicate keeps whole chunks,
+    a broadcast semi-join leaves the others' streams in the JVM, and
+    decode_table_arrow(where=pred) decodes in each kept chunk only the
+    row groups chunk_keep keeps, its per-column keep masks COMPOSED
+    across the predicate tree (And intersects, Or unions — the reference's
+    RowSelection and_then/union, src/row_selection.rs:32-260). The
+    residual filter gives the exact rows."""
+    from .decode import decode_table_arrow
 
     keys = prune_chunks_predicate(chunks, pred)
-    pruned = chunks.join(F.broadcast(keys), ["part_id", "chunk_ord"], "left_semi")
-    from .decode import decode_chunk_pdf
-
-    col_types = {f.name: f.dataType for f in schema.fields}
-
-    def decode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return decode_chunk_pdf(pdf, col_types, rg_keep=rg_keep_for_chunk(pdf, pred))
-
-    decoded = pruned.groupBy("part_id", "chunk_ord").applyInPandas(
-        decode_group, schema=schema)
-    return decoded.where(pred.to_spark()), keys
+    kept = chunks.join(F.broadcast(keys), ["part_id", "chunk_ord"], "left_semi")
+    return decode_table_arrow(kept, schema, where=pred).where(pred.to_spark()), keys

@@ -23,6 +23,9 @@ SECONDARY = "SECONDARY"
 SYMBOL_TABLE = "SYMBOL_TABLE"
 BLOOM_FILTER = "BLOOM_FILTER"
 
+#: characters of a string column's min_val / max_val the encoder keeps
+STAT_CHARS = 64
+
 CHUNK_ARROW_SCHEMA = pa.schema(
     [
         pa.field("part_id", pa.int32()),

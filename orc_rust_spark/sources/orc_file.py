@@ -2514,6 +2514,17 @@ class ColumnStats:
                     lo, hi = to(b[0]), to(b[1])
                     if lo is not None and hi is not None:
                         pairs[i] = (lo, hi)
+        self._fill(family, pairs, nulls)
+
+    @classmethod
+    def of(cls, family: str | None, pairs: list, nulls: list | None = None) -> "ColumnStats":
+        """ColumnStats of (min, max) ``pairs`` already in ``family``'s
+        domain (None: no statistics), as the chunk table keeps them."""
+        out = cls.__new__(cls)
+        out._fill(family, pairs, nulls)
+        return out
+
+    def _fill(self, family: str | None, pairs: list, nulls: list | None) -> None:
         known = [p is not None for p in pairs]
         self.family = family if any(known) else None
         self.known, self.all_known = np.array(known, dtype=bool), all(known)
@@ -2525,14 +2536,16 @@ class ColumnStats:
         self.n_values = np.array([-1 if n is None else n for n, _ in nulls], dtype=np.int64)
         self.has_null = np.array([-1 if h is None else h for _, h in nulls], dtype=np.int8)
 
-    def rules_out(self, lo, hi) -> np.ndarray:
+    def rules_out(self, lo, hi, lo_strict: bool = False, hi_strict: bool = False) -> np.ndarray:
         """Where the statistics put every value below ``lo`` or above ``hi``
-        (_bound's bounds; None bounds nothing)."""
+        (at or below, at or above, where strict; _bound's bounds, None
+        bounds nothing)."""
         out = False
         if lo is not None:
-            out = lo if type(lo) is bool else self.maxs < lo
+            out = lo if type(lo) is bool else self.maxs <= lo if lo_strict else self.maxs < lo
         if hi is not None:
-            out = out | (hi if type(hi) is bool else self.mins > hi)
+            out = out | (hi if type(hi) is bool else
+                         self.mins >= hi if hi_strict else self.mins > hi)
         # entries without statistics rule nothing out
         return out & self.known if type(out) is bool or not self.all_known else out
 
@@ -2614,17 +2627,20 @@ class Probe:
     """One column's predicate, normalized once for every stripe and row
     group it prunes: ``eqs``, an equality probe's values (one, or an
     IN-list's in any order), or else the range [``lo``, ``hi``] (None:
-    open); and ``not_null`` (True: IS NOT NULL, False: IS NULL). Beside
-    ``eqs``, ``lo`` and ``hi`` go unused. Each value's bounds per
-    statistics family and its bloom hashes and bit positions are found on
-    first use and kept, so a point lookup hashes its value once."""
+    open; an end is exclusive where ``lo_strict`` or ``hi_strict``); and
+    ``not_null`` (True: IS NOT NULL, False: IS NULL). Beside ``eqs``,
+    the range goes unused. Each value's bounds per statistics family and
+    its bloom hashes and bit positions are found on first use and kept,
+    so a point lookup hashes its value once."""
 
-    __slots__ = ("eqs", "lo", "hi", "not_null", "_bounds", "_bits")
+    __slots__ = ("eqs", "lo", "hi", "lo_strict", "hi_strict", "not_null", "_bounds", "_bits")
 
-    def __init__(self, eq=None, lo=None, hi=None, not_null=None):
+    def __init__(self, eq=None, lo=None, hi=None, not_null=None,
+                 lo_strict: bool = False, hi_strict: bool = False):
         self.eqs = (None if eq is None else tuple(eq)
                     if isinstance(eq, (list, tuple, set, frozenset)) else (eq,))
         self.lo, self.hi, self.not_null = lo, hi, not_null
+        self.lo_strict, self.hi_strict = lo_strict, hi_strict
         self._bounds: dict = {}
         self._bits: dict = {}
 
@@ -2635,12 +2651,19 @@ class Probe:
 
     def bounds(self, family: str | None) -> list[tuple]:
         """[(lo, hi)] bounds on ``family``'s arrays (_bound): each eq
-        value's, or the range's."""
+        value's, or the range's. A strict end takes the other rounding,
+        which makes ``max <= lo`` (``min >= hi``) exact, and its True and
+        False swap."""
         hit = self._bounds.get(family)
         if hit is None:
-            pairs = [(v, v) for v in self.eqs] if self.eqs is not None else [(self.lo, self.hi)]
-            hit = self._bounds[family] = [
-                (_bound(family, a, True), _bound(family, b, False)) for a, b in pairs]
+            if self.eqs is not None:
+                hit = [(_bound(family, v, True), _bound(family, v, False)) for v in self.eqs]
+            else:
+                lo = _bound(family, self.lo, not self.lo_strict)
+                hi = _bound(family, self.hi, self.hi_strict)
+                hit = [(not lo if self.lo_strict and type(lo) is bool else lo,
+                        not hi if self.hi_strict and type(hi) is bool else hi)]
+            self._bounds[family] = hit
         return hit
 
     def bloom_may(self, i: int, kind: int, blooms) -> np.ndarray | None:
@@ -2670,7 +2693,7 @@ def keep_mask(probe: Probe, stats: ColumnStats, n: int, blooms=None,
     m = len(stats.known)
     bounds = probe.bounds(stats.family)
     if probe.eqs is None:
-        may = ~stats.rules_out(*bounds[0])
+        may = ~stats.rules_out(*bounds[0], probe.lo_strict, probe.hi_strict)
     else:
         # an empty IN-list matches no row
         may = np.zeros(m, dtype=bool) if not bounds else None

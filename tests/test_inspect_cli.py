@@ -73,10 +73,10 @@ def test_bloom(spark, chunks_dir, capsys):
     out = _run(spark, capsys, chunks_dir, "bloom", "id", "123")
     assert "chunks total        : 1" in out
     assert "chunks with bloom   : 1" in out
-    assert "chunks maybe-contain: 1" in out
-    # absent value: the single chunk's filter must reject it
+    assert "chunks stats+bloom  : 1 maybe-contain" in out
+    # absent value: the single chunk's statistics or filter must reject it
     out2 = _run(spark, capsys, chunks_dir, "bloom", "id", "999999999")
-    assert "chunks maybe-contain: 0" in out2
+    assert "chunks stats+bloom  : 0 maybe-contain" in out2
 
 
 def test_export_csv_and_json(spark, chunks_dir, capsys, tmp_path):

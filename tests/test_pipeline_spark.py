@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from orc_rust_spark.operators.decode import decode_table
+from orc_rust_spark.operators.decode import decode_table_arrow
 from orc_rust_spark.operators.encode import encode_table
 from orc_rust_spark.plans.pipeline import (
     encode_dataset,
@@ -40,7 +40,7 @@ def test_encode_decode_roundtrip(spark, source):
     plan = plan_codecs(source)
     chunks = encode_table(source, plan=plan).cache()
     assert chunks.count() > 0
-    decoded = decode_table(chunks, WEBTEXT_SCHEMA)
+    decoded = decode_table_arrow(chunks, WEBTEXT_SCHEMA)
     s, d = source.alias("s"), decoded.alias("d")
     joined = s.join(d, on="url", how="full")
     bad = joined.where(
@@ -231,7 +231,7 @@ def test_nulls_and_empties_roundtrip(spark):
     empties = df.where(F.col("text") == "").count()
     assert nulls > 0 and empties > 0
     chunks = encode_table(df, plan={})
-    decoded = decode_table(chunks, WEBTEXT_SCHEMA)
+    decoded = decode_table_arrow(chunks, WEBTEXT_SCHEMA)
     assert decoded.where(F.col("text").isNull()).count() == nulls
     assert decoded.where(F.col("text") == "").count() == empties
 

@@ -110,30 +110,40 @@ def test_rg_keep_composition_intersects_and_unions():
         Or,
     )
 
+    import json
+
+    from orc_rust_spark.operators.predicate import chunk_keep
+
     # two indexed columns over 4 groups of 10 rows
     rg_a = {"codec": "rle_v2", "n": [10] * 4, "nulls": [0] * 4,
             "min": ["0", "100", "200", "300"], "max": ["99", "199", "299", "399"]}
     rg_b = {"codec": "direct", "n": [10] * 4, "nulls": [0, 10, 0, 0],
             "min": ["a", "e", "k", "p"], "max": ["d", "j", "o", "z"]}
-    rgs = {"a": rg_a, "b": rg_b}
+    rows = [{"column": c, "stream_kind": "DATA", "codec": rg["codec"],
+             "null_count": sum(rg["nulls"]), "row_count": 40,
+             "stats_json": json.dumps({"rg": rg})} for c, rg in (("a", rg_a), ("b", rg_b))]
+
+    def groups(pred) -> set[int]:
+        keep = chunk_keep(rows, pred)[1]
+        return set(range(4)) if keep is None else set(keep)
 
     a_cond = Comparison("a", ">=", 150)        # groups {1,2,3}
     b_cond = Comparison("b", "<", "k")         # groups {0,1}
-    assert a_cond.rg_keep(rgs, 4) == {1, 2, 3}
-    assert b_cond.rg_keep(rgs, 4) == {0, 1}
+    assert groups(a_cond) == {1, 2, 3}
+    assert groups(b_cond) == {0, 1}
     # And: intersection — strictly smaller than either single-column plan
-    both = And(a_cond, b_cond).rg_keep(rgs, 4)
+    both = groups(And(a_cond, b_cond))
     assert both == {1}
-    assert len(both) < len(a_cond.rg_keep(rgs, 4))
-    assert len(both) < len(b_cond.rg_keep(rgs, 4))
+    assert len(both) < len(groups(a_cond))
+    assert len(both) < len(groups(b_cond))
     # Or: union
-    assert Or(a_cond, b_cond).rg_keep(rgs, 4) == {0, 1, 2, 3}
+    assert groups(Or(a_cond, b_cond)) == {0, 1, 2, 3}
     # null-aware + Not push-down
-    assert IsNotNull("b").rg_keep(rgs, 4) == {0, 2, 3}
-    assert And(a_cond, IsNotNull("b")).rg_keep(rgs, 4) == {2, 3}
-    assert Not(Comparison("a", "<", 100)).rg_keep(rgs, 4) == {1, 2, 3}
+    assert groups(IsNotNull("b")) == {0, 2, 3}
+    assert groups(And(a_cond, IsNotNull("b"))) == {2, 3}
+    assert groups(Not(Comparison("a", "<", 100))) == {1, 2, 3}
     # unindexed column keeps the universe
-    assert Comparison("zz", "=", 5).rg_keep(rgs, 4) == {0, 1, 2, 3}
+    assert groups(Comparison("zz", "=", 5)) == {0, 1, 2, 3}
 
 
 def test_pruned_scan_rg_composition_end_to_end(spark):
@@ -143,8 +153,8 @@ def test_pruned_scan_rg_composition_end_to_end(spark):
     from orc_rust_spark.operators.predicate import (
         And,
         Comparison,
+        chunk_keep,
         pruned_scan,
-        rg_keep_for_chunk,
     )
     from pyspark.sql import types as T
 
@@ -165,9 +175,9 @@ def test_pruned_scan_rg_composition_end_to_end(spark):
             if i >= 2500 and (chr(ord("a") + (i * 26) // n) * 3) < "j"]
     assert got == want
     # the composed keep list is strictly smaller than either single-column
-    pdf = chunks.toPandas()
-    single_id = rg_keep_for_chunk(pdf, Comparison("id", ">=", 2500))
-    composed = rg_keep_for_chunk(pdf, pred)
+    rows = [r.asDict() for r in chunks.collect()]
+    single_id = chunk_keep(rows, Comparison("id", ">=", 2500))[1]
+    composed = chunk_keep(rows, pred)[1]
     assert composed is not None and len(composed) < len(single_id)
     chunks.unpersist()
 
@@ -189,8 +199,8 @@ def test_unusable_probe_types_keep_all_chunks(spark, encoded):
 
 def test_decimal_codec_chunks_never_pruned_by_predicate(spark):
     """Mantissa stats (decimal codec) are not comparable to user values:
-    Comparison.might_match must keep those chunks (code-review r6 — the
-    pivot previously dropped the codec so d=5.0 pruned everything)."""
+    chunk pruning must keep those chunks (code-review r6 — an earlier
+    stats pivot dropped the codec so d=5.0 pruned everything)."""
     import decimal as D
 
     rows = [(i, D.Decimal(f"{1 + i % 9}.{i % 100:02d}")) for i in range(1000)]
@@ -210,26 +220,22 @@ def test_bloom_type_mismatch_keeps_chunks(spark):
     """An int probe against a STRING column's bloom (utf8-fed) must not
     prune — the filter would false-negative on every chunk
     (code-review r6)."""
-    from orc_rust_spark.operators.pruned_read import prune_chunks_bloom
-
     df = spark.createDataFrame(
         [(i, str(i)) for i in range(5000)], "id long, s string").coalesce(1)
     chunks = encode_table(df, plan={"s": {"bloom": True}}).cache()
     total = chunks.select("part_id", "chunk_ord").distinct().count()
-    assert prune_chunks_bloom(chunks, "s", 7).count() == total  # int probe
+    assert _kept(chunks, Comparison("s", "=", 7)) == total  # int probe
     # matched-type probes still prune: a value NOT in the column
-    assert prune_chunks_bloom(chunks, "s", "not-present").count() < total
+    assert _kept(chunks, Comparison("s", "=", "not-present")) < total
 
 
 def test_pruned_range_scan_open_bounds(spark):
-    from orc_rust_spark.operators.pruned_read import pruned_range_scan
-
     df = spark.createDataFrame([(i,) for i in range(1000)], "id long").coalesce(1)
     chunks = encode_table(df).cache()
     schema = T.StructType([T.StructField("id", T.LongType())])
-    lo_open, _ = pruned_range_scan(chunks, schema, "id", None, 100)
+    lo_open, _ = pruned_scan(chunks, schema, Comparison("id", "<=", 100))
     assert lo_open.count() == 101
-    hi_open, _ = pruned_range_scan(chunks, schema, "id", 900, None)
+    hi_open, _ = pruned_scan(chunks, schema, Comparison("id", ">=", 900))
     assert hi_open.count() == 100
 
 

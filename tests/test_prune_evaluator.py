@@ -11,6 +11,7 @@ a matching row."""
 
 import datetime as dt
 import decimal
+import math
 
 import numpy as np
 import pytest
@@ -290,3 +291,141 @@ def test_scalar_eq_plans_splits(tmp_path):
            for s in splits]
     ids = pa.concat_tables(got).column("id").to_numpy()
     assert 12_345 in ids and len(ids) < 30_000
+
+
+# --- the chunk table's statistics through the same evaluator ----------------
+#
+# operators.predicate.column_stats turns a chunk's or its row groups' min
+# and max strings into ColumnStats by codec family; chunk_keep composes
+# keep_mask over them. Per-group values are drawn per codec, their
+# statistics strings written as operators.encode writes them (string
+# bounds cut to 64 characters, decimals as unscaled mantissas, null-only
+# groups with None), and every group, and the chunk, that holds a row the
+# predicate matches must be kept.
+
+EPOCH = dt.datetime(1970, 1, 1)
+_US = dt.timedelta(microseconds=1)
+_LONG_TEXT = st.text(alphabet="ab\U0010ffff", min_size=60, max_size=70)
+_CHUNK_VALUES = {
+    "rle_v2": st.integers(-40, 40) | st.integers(I64_MIN, I64_MAX),
+    "byte_rle": st.integers(-128, 127),
+    "float_plain": st.integers(-40, 40).map(float)
+    | st.floats(allow_nan=False, allow_infinity=False),
+    "date": st.dates(dt.date(1960, 1, 1), dt.date(1960, 3, 1)) | st.dates(),
+    "timestamp_split": st.datetimes(dt.datetime(2020, 1, 1), dt.datetime(2020, 1, 2))
+    | st.datetimes(),
+    "direct": st.text(alphabet="ab\x00é", max_size=3) | _LONG_TEXT,
+    "decimal": st.decimals(-50, 50, places=2),
+}
+
+
+def _stat(codec: str, v) -> str:
+    """A bound's statistics string as the encoder writes it."""
+    if codec == "float_plain":
+        return repr(v)
+    if codec == "date":
+        return str(v.toordinal() - EPOCH.toordinal())
+    if codec == "timestamp_split":
+        return str((v - EPOCH) // _US)
+    if codec == "decimal":
+        return str(int(v.scaleb(2)))
+    if codec == "direct":
+        return v[:64]
+    return str(v)
+
+
+def _chunk_neighbours(v) -> list:
+    """Probes at and next to a row value, and of other types."""
+    out = _neighbours(v)
+    if isinstance(v, int):
+        out += [v - 1, v + 1]
+    elif isinstance(v, float):
+        out += [math.nextafter(v, math.inf), math.nextafter(v, -math.inf)]
+    elif isinstance(v, str):
+        out += [v[:64], v[:63], v + "\U0010ffff", v[:-1] if v else "a"]
+    elif isinstance(v, dt.datetime):
+        out += [v + _US, v - _US]
+    elif isinstance(v, dt.date):
+        out += [v + dt.timedelta(days=1), v - dt.timedelta(days=1)]
+    return out
+
+
+@st.composite
+def _chunk_predicates(draw, values):
+    """A Comparison of every op, IS [NOT] NULL, or two of them under And,
+    Or or Not, on column "c"."""
+    from orc_rust_spark.operators import predicate as pr
+
+    pool = [v for v in values if v is not None]
+    near = st.sampled_from(pool).flatmap(lambda v: st.sampled_from(_chunk_neighbours(v)))
+    value = st.one_of(near, near, _PROBES) if pool else _PROBES
+    comparison = st.builds(pr.Comparison, st.just("c"),
+                           st.sampled_from(["=", "!=", "<", "<=", ">", ">="]), value)
+    leaf = st.one_of(comparison, comparison, comparison,
+                     st.sampled_from([pr.IsNull("c"), pr.IsNotNull("c")]))
+    shape = draw(st.sampled_from(["leaf", "leaf", "leaf", "and", "or", "not"]))
+    if shape == "leaf":
+        return draw(leaf)
+    if shape == "not":
+        return pr.Not(draw(leaf))
+    a, b = draw(leaf), draw(leaf)
+    return pr.And(a, b) if shape == "and" else pr.Or(a, b)
+
+
+def _sql(v, pred):
+    """``pred`` on row value ``v`` (None: null): True, False or None
+    (unknown), as SQL evaluates it; values it cannot order may match."""
+    from orc_rust_spark.operators import predicate as pr
+
+    if isinstance(pred, pr.IsNull):
+        return v is None
+    if isinstance(pred, pr.IsNotNull):
+        return v is not None
+    if isinstance(pred, pr.Not):
+        got = _sql(v, pred.pred)
+        return None if got is None else not got
+    if isinstance(pred, (pr.And, pr.Or)):
+        got = [_sql(v, p) for p in pred.preds]
+        decided = False if isinstance(pred, pr.And) else True
+        if decided in got:
+            return decided
+        return None if None in got else not decided
+    if v is None:
+        return None
+    p = pred.value
+    try:
+        return {"=": lambda: v == p, "!=": lambda: v != p, "<": lambda: v < p,
+                "<=": lambda: v <= p, ">": lambda: v > p, ">=": lambda: v >= p}[pred.op]()
+    except (TypeError, decimal.InvalidOperation):
+        return True
+
+
+@pytest.mark.parametrize("codec", sorted(_CHUNK_VALUES))
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(data=st.data())
+def test_chunk_stats_keep_every_matching_group(codec, data):
+    import json
+
+    from orc_rust_spark.operators.predicate import chunk_keep
+
+    value = _CHUNK_VALUES[codec]
+    groups = data.draw(st.lists(st.lists(st.one_of(value, value, st.none()), min_size=1,
+                                         max_size=6), min_size=1, max_size=6))
+    rg = {"codec": codec, "n": [len(g) for g in groups],
+          "nulls": [g.count(None) for g in groups], "min": [], "max": []}
+    for vals in groups:
+        live = [v for v in vals if v is not None]
+        rg["min"].append(_stat(codec, min(live)) if live else None)
+        rg["max"].append(_stat(codec, max(live)) if live else None)
+    live = [v for vals in groups for v in vals if v is not None]
+    row = {"column": "c", "stream_kind": "DATA", "codec": codec,
+           "min_val": _stat(codec, min(live)) if live else None,
+           "max_val": _stat(codec, max(live)) if live else None,
+           "null_count": sum(rg["nulls"]), "row_count": sum(rg["n"]),
+           "stats_json": json.dumps({"rg": rg})}
+    pred = data.draw(_chunk_predicates([v for vals in groups for v in vals]))
+    verdict, keep = chunk_keep([row], pred)
+    kept = range(len(groups)) if keep is None else keep
+    for g, vals in enumerate(groups):
+        if any(_sql(v, pred) is True for v in vals):
+            assert verdict and g in kept, (g, vals, rg["min"][g], rg["max"][g])

@@ -2,12 +2,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from orc_rust_spark.operators.encode import encode_table
-from orc_rust_spark.operators.pruned_read import (
-    prune_chunks_bloom,
-    prune_chunks_stats,
-    pruned_point_lookup,
+from orc_rust_spark.operators.predicate import (
+    And,
+    Comparison,
+    prune_chunks_predicate,
+    pruned_scan,
 )
 from orc_rust_spark.sources.webtext import WEBTEXT_SCHEMA, webtext_df
+
+
+def _kept(chunks, column, eq_value=None, lo=None, hi=None):
+    """Chunks kept for column = eq_value, or lo <= column <= hi."""
+    if eq_value is not None:
+        pred = Comparison(column, "=", eq_value)
+    else:
+        pred = And(*([Comparison(column, ">=", lo)] if lo is not None else []),
+                   *([Comparison(column, "<=", hi)] if hi is not None else []))
+    return prune_chunks_predicate(chunks, pred).count()
 
 
 @pytest.fixture(scope="module")
@@ -33,19 +44,48 @@ def test_bloom_pruning_skips_chunks(spark, encoded):
     df, chunks = encoded
     target = df.select("url").orderBy("url").limit(1).collect()[0][0]
     total = chunks.select("part_id", "chunk_ord").distinct().count()
-    kept_bloom = prune_chunks_bloom(chunks, "url", target).count()
-    kept_absent = prune_chunks_bloom(chunks, "url", "https://nope.invalid/xyz").count()
+    kept_bloom = _kept(chunks, "url", target)
+    kept_absent = _kept(chunks, "url", "https://nope.invalid/xyz")
     assert kept_bloom >= 1
     assert kept_absent < total  # bloom rules out most chunks for absent keys
 
 
 def test_stats_pruning_ints(spark, encoded):
+    import datetime as dt
+
     df, chunks = encoded
-    # warc_ts stats prune: a timestamp-us range beyond the data cuts all chunks
-    kept = prune_chunks_stats(chunks, "warc_ts", lo=9_999_999_999_999_999).count()
+    # warc_ts stats prune: a timestamp range beyond the data cuts all chunks
+    kept = _kept(chunks, "warc_ts", lo=dt.datetime(9999, 1, 1))
     assert kept == 0
-    kept_all = prune_chunks_stats(chunks, "warc_ts", lo=0).count()
+    kept_all = _kept(chunks, "warc_ts", lo=dt.datetime(1970, 1, 1))
     assert kept_all == chunks.select("part_id", "chunk_ord").distinct().count()
+
+
+def test_datetime_probe_prunes_timestamp_and_date_chunks(spark):
+    """A datetime probe of a timestamp column and a date probe of a date
+    column prune by the chunks' microsecond and day statistics, and the
+    residual filter takes them: 2,000 rows in two chunks, each probe's
+    matches all in one of them."""
+    import datetime as dt
+
+    import pyspark.sql.types as T
+
+    base = dt.datetime(2024, 3, 1)
+    rows = [(i, base + dt.timedelta(seconds=i), (base + dt.timedelta(days=i)).date())
+            for i in range(2000)]
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("ts", T.TimestampType()),
+                           T.StructField("d", T.DateType())])
+    df = spark.createDataFrame(rows, schema).repartitionByRange(2, "id")
+    chunks = encode_table(df, plan={}).cache()
+    assert chunks.select("part_id", "chunk_ord").distinct().count() == 2
+    got, keys = pruned_scan(chunks, schema, Comparison("ts", "<=", base + dt.timedelta(seconds=10)))
+    assert sorted(r.id for r in got.collect()) == list(range(11))
+    assert keys.count() == 1
+    got, keys = pruned_scan(chunks, schema, Comparison("d", ">", (base + dt.timedelta(days=1994)).date()))
+    assert sorted(r.id for r in got.collect()) == list(range(1995, 2000))
+    assert keys.count() == 1
+    chunks.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -62,17 +102,17 @@ def two_chunk_ids(spark):
 def test_stats_pruning_typed_not_lexicographic(spark, two_chunk_ids):
     chunks = two_chunk_ids
     # lo=500 must keep the 995-1004 chunk ("1004" < "500" as strings!)
-    assert prune_chunks_stats(chunks, "id", lo=500).count() == 1
-    assert prune_chunks_stats(chunks, "id", hi=99).count() == 1
-    assert prune_chunks_stats(chunks, "id", lo=100, hi=900).count() == 0
-    assert prune_chunks_stats(chunks, "id", eq_value=998).count() == 1
+    assert _kept(chunks, "id", lo=500) == 1
+    assert _kept(chunks, "id", hi=99) == 1
+    assert _kept(chunks, "id", lo=100, hi=900) == 0
+    assert _kept(chunks, "id", eq_value=998) == 1
 
 
 def test_pruned_point_lookup_mixed_digit_widths(spark, two_chunk_ids):
     import pyspark.sql.types as T
 
     schema = T.StructType([T.StructField("id", T.LongType())])
-    rows, keys = pruned_point_lookup(two_chunk_ids, schema, "id", 998)
+    rows, keys = pruned_scan(two_chunk_ids, schema, Comparison("id", "=", 998))
     got = rows.collect()
     assert len(got) == 1 and got[0].id == 998
     assert keys.count() == 1  # stats alone prune the 90-99 chunk
@@ -82,23 +122,23 @@ def test_stats_pruning_negative_values(spark):
     ids = list(range(-50, -39)) + list(range(40, 51))
     df = spark.createDataFrame([(i,) for i in ids], "id long").repartitionByRange(2, "id")
     chunks = encode_table(df, plan={})
-    assert prune_chunks_stats(chunks, "id", lo=0).count() == 1
-    assert prune_chunks_stats(chunks, "id", hi=-45).count() == 1
-    assert prune_chunks_stats(chunks, "id", eq_value=-100).count() == 0
+    assert _kept(chunks, "id", lo=0) == 1
+    assert _kept(chunks, "id", hi=-45) == 1
+    assert _kept(chunks, "id", eq_value=-100) == 0
 
 
 def test_stats_pruning_doubles(spark):
     vs = [float(i) for i in range(9, 12)] + [float(i) for i in range(100, 103)]
     df = spark.createDataFrame([(v,) for v in vs], "v double").repartitionByRange(2, "v")
     chunks = encode_table(df, plan={})
-    assert prune_chunks_stats(chunks, "v", lo=50.0).count() == 1
-    assert prune_chunks_stats(chunks, "v", hi=12.5).count() == 1
+    assert _kept(chunks, "v", lo=50.0) == 1
+    assert _kept(chunks, "v", hi=12.5) == 1
 
 
 def test_pruned_point_lookup_end_to_end(spark, encoded):
     df, chunks = encoded
     target = df.select("url").orderBy(F.desc("url")).limit(1).collect()[0][0]
-    rows, keys = pruned_point_lookup(chunks, WEBTEXT_SCHEMA, "url", target)
+    rows, keys = pruned_scan(chunks, WEBTEXT_SCHEMA, Comparison("url", "=", target))
     got = rows.collect()
     assert len(got) == 1 and got[0].url == target
     total = chunks.select("part_id", "chunk_ord").distinct().count()

@@ -792,46 +792,8 @@ def test_reader_truncated_stream_raises_corrupt_stream(signed):
                          exact=False)
 
 
-# --- point walker ------------------------------------------------------------
-#
-# decode_rlev2_points reads the values at a few offsets by one walk over
-# the run headers, decoding a run only where it must. It has to agree with
-# a slice of the full decode for every sub-encoding, at run edges, after
-# any skip, and fail as the full decode does on a cut stream.
-
-def _selections(bounds, skip, size, rng):
-    """Offsets after ``skip``: every run's first and last value, single
-    run edges, random picks, and a dense window (whole runs unpacked)."""
-    edges = sorted({b - skip for b in bounds[:-1] if b >= skip}
-                   | {b - 1 - skip for b in bounds[1:] if b > skip})
-    out = [np.array(edges[:1]), np.array(edges[-1:]), np.array(edges)]
-    for k in (1, 3, 40):
-        out.append(np.unique(rng.integers(0, size, k)))
-    lo = int(rng.integers(0, size))
-    out.append(np.arange(lo, min(size, lo + 600)))
-    return [s for s in out if s.size]
-
-
-@pytest.mark.parametrize("signed", [True, False])
-@pytest.mark.parametrize("name", sorted(ENCODER_CASES) + ["<mixed>", "<delta shapes>"])
-def test_point_walker_equals_decode_slices(name, signed):
-    from orc_rust_spark.codecs.rle_v2 import decode_rlev2_points
-
-    v, enc = _rle_case(name, signed)
-    bounds = _run_bounds(enc)
-    assert bounds[-1] == v.size
-    rng = np.random.default_rng(zlib.crc32(name.encode()) + signed)
-    for skip in _skips(bounds, rng, picks=8):
-        ref = decode_rlev2(enc, v.size - skip, signed=signed, skip=skip)
-        assert np.array_equal(ref, v[skip:]), skip
-        for sel in _selections(bounds, skip, v.size - skip, rng):
-            got = decode_rlev2_points(enc, sel, signed, skip)
-            assert got.dtype == np.int64
-            assert np.array_equal(got, ref[sel]), (skip, sel[:5])
-
-
 def test_walker_cases_cover_every_shape():
-    """The walker cases hold every sub-encoding, the DELTA shapes the
+    """The reader cases hold every sub-encoding, the DELTA shapes the
     encoder never writes, int64 extremes and unsigned values >= 2**63."""
     kinds = set()
     for name in list(ENCODER_CASES) + ["<mixed>"]:
@@ -841,57 +803,3 @@ def test_walker_cases_cover_every_shape():
     assert _run_bounds(enc) == [0, 1, 3, 15, 21, 23]
     assert v.min() == I64_MIN and v.max() == I64_MAX
     assert (_rle_case("unsigned_high", False)[0] < 0).all()  # >= 2**63 as uint64
-
-
-def test_point_walker_decodes_dense_selections_as_one_stretch(monkeypatch):
-    """A selection of POINT_VALUES + span // 64 values or more is decoded
-    by one decode_rlev2 stretch; a sparser one is read by the walk."""
-    from orc_rust_spark.codecs import rle_v2
-
-    v = np.random.default_rng(3).integers(0, 1 << 40, 10_000)
-    enc = encode_rlev2(v, signed=True)
-    stretches = []
-    real = rle_v2.decode_rlev2
-
-    def counting(buf, n, **kw):
-        stretches.append((n, kw["skip"]))
-        return real(buf, n, **kw)
-
-    monkeypatch.setattr(rle_v2, "decode_rlev2", counting)
-    k = rle_v2.POINT_VALUES
-    cases = [(np.arange(0, 9_000, 400), 700, False),   # 23 of an 8,801 span
-             (np.arange(100, 100 + k - 1), 5, False),
-             (np.arange(100, 100 + k), 5, True),
-             (np.arange(0, 6_400, 64), 30, False),     # 100 < 32 + 6,337 // 64
-             (np.arange(0, 6_400, 40), 30, True)]      # 160 >= 32 + 6,361 // 64
-    for sel, skip, stretch in cases:
-        stretches.clear()
-        got = rle_v2.decode_rlev2_points(enc, sel, True, skip)
-        assert np.array_equal(got, v[skip:][sel])
-        assert stretches == ([(int(sel[-1] - sel[0]) + 1, skip + int(sel[0]))]
-                             if stretch else []), (sel.size, skip)
-
-
-@pytest.mark.parametrize("name", ["<mixed>", "<delta shapes>"])
-@pytest.mark.parametrize("signed", [True, False])
-def test_point_walker_truncated_stream_raises_corrupt_stream(name, signed):
-    """A stream cut at any byte raises CorruptStream when the walk must
-    reach past the cut, never IndexError; a walk that stops before the
-    cut returns the right values."""
-    from orc_rust_spark.codecs.rle_v2 import decode_rlev2_points
-    from orc_rust_spark.codecs.util import CorruptStream
-
-    v, enc = _rle_case(name, signed)
-    half = v.size // 2
-    reach_end = np.array([0, half, v.size - 1])
-    for cut in range(len(enc)):
-        part = enc[:cut]
-        with pytest.raises(CorruptStream):
-            decode_rlev2_points(part, reach_end, signed)
-        with pytest.raises(CorruptStream):
-            decode_rlev2_points(part, np.array([v.size - 1 - half]), signed, skip=half)
-        try:
-            got = decode_rlev2_points(part, np.array([half]), signed)
-        except CorruptStream:
-            continue
-        assert got.tolist() == [v[half]], cut

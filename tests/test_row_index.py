@@ -12,7 +12,12 @@ from pyspark.sql import types as T
 
 from orc_rust_spark.operators.decode import decode_chunk_arrays
 from orc_rust_spark.operators.encode import encode_chunk
-from orc_rust_spark.operators.pruned_read import _rg_keep_groups, pruned_point_lookup_rg
+from orc_rust_spark.operators.predicate import (
+    Comparison,
+    chunk_keep,
+    prune_chunks_predicate,
+    pruned_scan,
+)
 
 RG_PLAN = {
     "id": {"row_index": True, "row_index_stride": 1000, "bloom": True},
@@ -55,37 +60,48 @@ def test_rg_stats_recorded():
 
 def test_rg_partial_decode_matches_slices():
     tbl, batch = _chunk()
-    out = decode_chunk_arrays(batch.to_pylist(), TYPES, rg_keep=[1, 3])
+    out = decode_chunk_arrays(batch.to_pylist(), TYPES, groups=[1, 3])
     want_idx = list(range(1000, 2000)) + list(range(3000, 4000))
     for c in tbl.column_names:
         want = tbl.column(c).combine_chunks().take(pa.array(want_idx))
         assert out[c].cast(want.type).equals(want), c
 
 
+def _groups(rg: dict, pred) -> list[int]:
+    """The groups chunk_keep keeps of one indexed column "c" with row
+    index ``rg``."""
+    row = {"column": "c", "stream_kind": "DATA", "codec": rg["codec"],
+           "null_count": 0, "row_count": sum(rg["n"]),
+           "stats_json": json.dumps({"rg": rg})}
+    keep = chunk_keep([row], pred)[1]
+    return list(range(len(rg["n"]))) if keep is None else keep
+
+
 def test_rg_keep_groups_typed():
     rg = {"codec": "rle_v2", "n": [10, 10], "min": ["90", "995"], "max": ["99", "1004"]}
-    assert _rg_keep_groups(rg, lo=500) == [1]
-    assert _rg_keep_groups(rg, eq_value=998) == [1]
-    assert _rg_keep_groups(rg, hi=99) == [0]
+    assert _groups(rg, Comparison("c", ">=", 500)) == [1]
+    assert _groups(rg, Comparison("c", "=", 998)) == [1]
+    assert _groups(rg, Comparison("c", "<=", 99)) == [0]
 
 
 def test_rg_keep_truncated_string_max_not_pruned():
     """VERDICT r2 'What's wrong' #1: a group string max stat at the 64-char
     truncation limit is a PREFIX of the true max (a lower bound), so
-    `max < lo` must not prune the group. Min side stays prunable."""
+    `max < lo` must not prune the group by it; its last character bumped
+    bounds the true max from above. Min side stays prunable."""
     rg = {
         "codec": "direct", "n": [10, 10],
         "min": ["a" * 10, "m" * 10],
         # group 0's true max is "a"*100, stored truncated to 64 chars
         "max": ["a" * 64, "m" * 20],
     }
-    assert _rg_keep_groups(rg, eq_value="a" * 100) == [0]
+    assert _groups(rg, Comparison("c", "=", "a" * 100)) == [0]
     # an untruncated max still prunes normally
     rg2 = {"codec": "direct", "n": [10, 10], "min": ["a", "m"], "max": ["c", "p"]}
-    assert _rg_keep_groups(rg2, eq_value="z") == []
+    assert _groups(rg2, Comparison("c", "=", "z")) == []
     # min is a prefix of the true min -> lower bound -> `min > hi` is sound:
     # group 1 (min "m"*10 > hi) pruned, group 0 kept
-    assert _rg_keep_groups(rg, hi="a" * 20) == [0]
+    assert _groups(rg, Comparison("c", "<=", "a" * 20)) == [0]
 
 
 def test_rg_keep_decimal_and_mismatched_probes_never_prune():
@@ -95,11 +111,11 @@ def test_rg_keep_decimal_and_mismatched_probes_never_prune():
 
     rg = {"codec": "decimal", "n": [10, 10], "min": ["1000", "5000"],
           "max": ["1999", "5999"]}
-    assert _rg_keep_groups(rg, eq_value=Decimal("19.99")) == [0, 1]
-    assert _rg_keep_groups(rg, eq_value=1500) == [0, 1]
+    assert _groups(rg, Comparison("c", "=", Decimal("19.99"))) == [0, 1]
+    assert _groups(rg, Comparison("c", "=", 1500)) == [0, 1]
     # int probe against a string-stat codec: type mismatch, keep all
     rg2 = {"codec": "direct", "n": [5], "min": ["a"], "max": ["b"]}
-    assert _rg_keep_groups(rg2, eq_value=7) == [0]
+    assert _groups(rg2, Comparison("c", "=", 7)) == [0]
 
 
 def test_long_string_lookup_end_to_end_straddling_groups(spark):
@@ -119,7 +135,7 @@ def test_long_string_lookup_end_to_end_straddling_groups(spark):
         T.StructField("id", T.LongType()), T.StructField("text", T.StringType()),
     ])
     target = f"{'pad' * 30}-{n - 1:06d}"  # lives in the LAST group
-    got, _keys = pruned_point_lookup_rg(chunks, schema, "text", target)
+    got, _keys = pruned_scan(chunks, schema, Comparison("text", "=", target))
     out = got.collect()
     assert len(out) == 1 and out[0].id == n - 1
     chunks.unpersist()
@@ -129,10 +145,6 @@ def test_chunk_level_decimal_probe_keeps_all(spark):
     from decimal import Decimal
 
     from orc_rust_spark.operators.encode import encode_table
-    from orc_rust_spark.operators.pruned_read import (
-        prune_chunks_bloom,
-        prune_chunks_stats,
-    )
 
     df = spark.createDataFrame(
         [(i, Decimal(i) / 100) for i in range(2000)],
@@ -141,8 +153,7 @@ def test_chunk_level_decimal_probe_keeps_all(spark):
     chunks = encode_table(df, plan={"price": {"bloom": True}}).cache()
     n_chunks = chunks.select("part_id", "chunk_ord").distinct().count()
     probe = Decimal("5.55")
-    assert prune_chunks_stats(chunks, "price", eq_value=probe).count() == n_chunks
-    assert prune_chunks_bloom(chunks, "price", probe).count() == n_chunks
+    assert prune_chunks_predicate(chunks, Comparison("price", "=", probe)).count() == n_chunks
     chunks.unpersist()
 
 
@@ -160,7 +171,7 @@ def test_rg_mixed_codecs_across_groups():
     out = decode_chunk_arrays(batch.to_pylist(), {"s": T.StringType()})
     assert out["s"].cast(arr.type).equals(arr)
     # partial decode of just the second group
-    out2 = decode_chunk_arrays(batch.to_pylist(), {"s": T.StringType()}, rg_keep=[1])
+    out2 = decode_chunk_arrays(batch.to_pylist(), {"s": T.StringType()}, groups=[1])
     assert out2["s"].cast(arr.type).equals(pa.array(high))
 
 
@@ -179,7 +190,7 @@ def test_pruned_point_lookup_rg_end_to_end(spark):
         T.StructField("val", T.DoubleType()),
     ])
     target = (n - 1) * 3
-    rows, keys = pruned_point_lookup_rg(chunks, schema, "id", target)
+    rows, keys = pruned_scan(chunks, schema, Comparison("id", "=", target))
     got = rows.collect()
     assert len(got) == 1 and got[0].id == target and got[0].val == float(n - 1)
     assert keys.count() == 1  # chunk-level pruning still applies
