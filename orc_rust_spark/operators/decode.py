@@ -534,11 +534,11 @@ def decode_table_arrow(
 
     ``where`` (an operators.predicate Predicate) decodes of each chunk
     only the row groups whose statistics say they may hold a matching
-    row (predicate.chunk_keep over its DATA rows); other rows of those
+    row (predicate.group_keep over its DATA rows); other rows of those
     groups stay, for the caller's filter. None decodes every row.
     """
     if where is not None:
-        from .predicate import chunk_keep
+        from .predicate import group_keep
     col_kinds = {f.name: f.dataType for f in schema.fields}
     arrow_schema = pa.schema(
         [pa.field(f.name, _arrow_of(f.dataType)) for f in schema.fields]
@@ -560,8 +560,7 @@ def decode_table_arrow(
         seen: set[tuple] = set()
 
         def flush(rows):
-            keep = None if where is None else chunk_keep(
-                [r for r in rows if r["stream_kind"] == ct.DATA], where)[1]
+            keep = None if where is None else group_keep(rows, where)
             arrays = decode_chunk_arrays(rows, col_kinds, groups=keep)
             cols = []
             for name in names:

@@ -12,13 +12,21 @@ closed under complement. Three-valued, as the reference's
 src/row_group_filter.rs:54-205: a chunk or group is skipped only when its
 statistics or bloom filter rule every row out; unknown statistics keep.
 
-Timestamp statistics are UTC microseconds and a datetime probe is read as
-naive UTC, the session time zone ``session.get_spark`` sets.
+Timestamp statistics are UTC microseconds: of instants for a TimestampType
+column, of wall clocks for a TimestampNTZType one. A naive datetime probe
+stands for two of them (_span): PySpark's F.lit reads it in the Python
+process's local zone (TimestampType.toInternal's time.mktime), as
+createDataFrame does its values, and an NTZ literal or an NTZ column
+compared at the UTC session time zone ``session.get_spark`` sets reads it
+as UTC. Its bounds take the wider of the two, so neither prunes a chunk
+the residual filter would match.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+import time
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -49,6 +57,29 @@ _BLOOM_KIND = {**dict.fromkeys(("rle_v2", "rle_v1", "byte_rle"), of.K_LONG),
                **dict.fromkeys(("direct", "dict", "fsst"), of.K_STRING)}
 
 
+_EPOCH = dt.datetime(1970, 1, 1)
+
+
+def _span(v) -> tuple:
+    """(least, greatest) value a probe of ``v`` may stand for against the
+    chunk statistics. A datetime's are naive UTC datetimes ("ts" family):
+    an aware one's instant, a naive one's instant in the local zone (read
+    here, on the driver, where F.lit reads it) and the naive value itself
+    (see the module docstring); (None, None), which prunes nothing, where
+    they overflow. Any other value stands for itself."""
+    if not isinstance(v, dt.datetime):
+        return v, v
+    try:
+        if v.tzinfo is not None:
+            u = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+            return u, u
+        local = _EPOCH + dt.timedelta(seconds=int(time.mktime(v.timetuple())),
+                                      microseconds=v.microsecond)
+    except (OverflowError, ValueError):
+        return None, None
+    return (v, v) if local == v else (min(v, local), max(v, local))
+
+
 class Predicate:
     def columns(self) -> set[str]:
         raise NotImplementedError
@@ -71,10 +102,11 @@ class Comparison(Predicate):
     probes: tuple = field(init=False, repr=False, compare=False)
 
     def __post_init__(self):
-        v = self.value
-        lt, gt = of.Probe(hi=v, hi_strict=True), of.Probe(lo=v, lo_strict=True)
-        probes = {"=": (of.Probe(v),), "!=": (lt, gt), "<": (lt,), "<=": (of.Probe(hi=v),),
-                  ">": (gt,), ">=": (of.Probe(lo=v),)}.get(self.op)
+        lo, hi = _span(self.value)
+        lt, gt = of.Probe(hi=hi, hi_strict=True), of.Probe(lo=lo, lo_strict=True)
+        eq = of.Probe(lo) if lo is hi else of.Probe(lo=lo, hi=hi)
+        probes = {"=": (eq,), "!=": (lt, gt), "<": (lt,), "<=": (of.Probe(hi=hi),),
+                  ">": (gt,), ">=": (of.Probe(lo=lo),)}.get(self.op)
         if probes is None:
             raise ValueError(f"unknown op {self.op!r}")
         object.__setattr__(self, "probes", probes)
@@ -230,46 +262,46 @@ def _keep(pred: Predicate, cols: dict, n: int) -> np.ndarray:
     return out
 
 
-def chunk_keep(rows: list[dict], pred: Predicate) -> tuple[bool, list[int] | None]:
-    """One chunk's pruning -> (may the chunk hold a row ``pred`` matches,
-    the row groups to decode or None for all).
-
-    ``rows`` are the chunk's stream rows as dicts: a DATA row's
-    ``min_val``, ``max_val``, ``null_count`` and ``row_count`` give the
-    chunk's statistics, its ``stats_json`` "rg" index its groups', and a
-    BLOOM_FILTER row's ``data`` its bloom filter; a row without them
-    keeps. The group list is None too when no column is indexed, every
-    group may match, or the indexed columns lie on different group grids
-    (per-column strides): one keep list would slice them at different
-    rows."""
-    cols = pred.columns()
-    chunk, groups, grids, blooms = {}, {}, [], []
+def chunk_keep(rows: list[dict], pred: Predicate) -> bool:
+    """May one chunk hold a row ``pred`` matches? ``rows`` are the chunk's
+    stream rows as dicts: a DATA row's ``min_val``, ``max_val``,
+    ``null_count`` and ``row_count`` give a column's statistics and a
+    BLOOM_FILTER row's ``data`` its bloom filter; a column without them
+    keeps."""
+    cols, stats = pred.columns(), {}
+    for r in rows:
+        if r["stream_kind"] == ct.DATA and r["column"] in cols:
+            stats[r["column"]] = (column_stats(r["codec"], [r["min_val"]], [r["max_val"]],
+                                               [r["null_count"]], [r["row_count"]]), None, -1)
     for r in rows:
         name = r["column"]
-        if r["stream_kind"] == ct.BLOOM_FILTER and name in cols and r["codec"] in _BLOOM_KIND:
-            blooms.append(r)
-        if r["stream_kind"] != ct.DATA:
-            continue
-        sj = r.get("stats_json")
+        if r["stream_kind"] == ct.BLOOM_FILTER and name in stats and r["codec"] in _BLOOM_KIND:
+            bf = BloomFilter.deserialize(blockc.decompress_stream(r["data"], r["block_codec"]))
+            stats[name] = (stats[name][0], BloomMatrix([bf]), _BLOOM_KIND[r["codec"]])
+    return bool(_keep(pred, stats, 1)[0])
+
+
+def group_keep(rows: list[dict], pred: Predicate) -> list[int] | None:
+    """The row groups of one chunk that may hold a row ``pred`` matches,
+    by each DATA row's ``stats_json`` "rg" index (a row without one
+    keeps), or None for all: also when no column is indexed, every group
+    may match, or the indexed columns lie on different group grids
+    (per-column strides), where one keep list would slice them at
+    different rows."""
+    cols, stats, grids = pred.columns(), {}, []
+    for r in rows:
+        sj = r["stream_kind"] == ct.DATA and r["stats_json"]
         rg = json.loads(sj).get("rg") if sj else None
         if rg:
             grids.append(rg["n"])
-        if name in cols:
-            chunk[name] = (column_stats(r["codec"], [r.get("min_val")], [r.get("max_val")],
-                                        [r["null_count"]], [r["row_count"]]), None, -1)
-            if rg:
-                groups[name] = (column_stats(rg["codec"], rg["min"], rg["max"],
-                                             rg.get("nulls"), rg["n"]), None, -1)
-    for r in blooms:
-        if r["column"] in chunk:
-            bf = BloomFilter.deserialize(blockc.decompress_stream(r["data"], r["block_codec"]))
-            chunk[r["column"]] = (chunk[r["column"]][0], BloomMatrix([bf]), _BLOOM_KIND[r["codec"]])
-    verdict = bool(_keep(pred, chunk, 1)[0])
+            if r["column"] in cols:
+                stats[r["column"]] = (column_stats(rg["codec"], rg["min"], rg["max"],
+                                                   rg.get("nulls"), rg["n"]), None, -1)
     if not grids or any(g != grids[0] for g in grids[1:]):
-        return verdict, None
+        return None
     n = len(grids[0])
-    keep = np.flatnonzero(_keep(pred, groups, n))
-    return verdict, None if len(keep) == n else keep.tolist()
+    keep = np.flatnonzero(_keep(pred, stats, n))
+    return None if len(keep) == n else keep.tolist()
 
 
 def prune_chunks_predicate(chunks: DataFrame, pred: Predicate) -> DataFrame:
@@ -285,7 +317,7 @@ def prune_chunks_predicate(chunks: DataFrame, pred: Predicate) -> DataFrame:
              F.when(kind == ct.BLOOM_FILTER, F.col("data")).alias("data"))
 
     def verdict(table: pa.Table) -> pa.Table:
-        keep, _ = chunk_keep(table.to_pylist(), pred)
+        keep = chunk_keep(table.to_pylist(), pred)
         return table.select(["part_id", "chunk_ord"]).slice(0, int(keep))
 
     return meta.groupBy("part_id", "chunk_ord").applyInArrow(
@@ -300,7 +332,7 @@ def pruned_scan(
     Two pruning granularities: prune_chunks_predicate keeps whole chunks,
     a broadcast semi-join leaves the others' streams in the JVM, and
     decode_table_arrow(where=pred) decodes in each kept chunk only the
-    row groups chunk_keep keeps, its per-column keep masks COMPOSED
+    row groups group_keep keeps, its per-column keep masks COMPOSED
     across the predicate tree (And intersects, Or unions — the reference's
     RowSelection and_then/union, src/row_selection.rs:32-260). The
     residual filter gives the exact rows."""

@@ -112,7 +112,7 @@ def test_rg_keep_composition_intersects_and_unions():
 
     import json
 
-    from orc_rust_spark.operators.predicate import chunk_keep
+    from orc_rust_spark.operators.predicate import group_keep
 
     # two indexed columns over 4 groups of 10 rows
     rg_a = {"codec": "rle_v2", "n": [10] * 4, "nulls": [0] * 4,
@@ -124,7 +124,7 @@ def test_rg_keep_composition_intersects_and_unions():
              "stats_json": json.dumps({"rg": rg})} for c, rg in (("a", rg_a), ("b", rg_b))]
 
     def groups(pred) -> set[int]:
-        keep = chunk_keep(rows, pred)[1]
+        keep = group_keep(rows, pred)
         return set(range(4)) if keep is None else set(keep)
 
     a_cond = Comparison("a", ">=", 150)        # groups {1,2,3}
@@ -153,7 +153,7 @@ def test_pruned_scan_rg_composition_end_to_end(spark):
     from orc_rust_spark.operators.predicate import (
         And,
         Comparison,
-        chunk_keep,
+        group_keep,
         pruned_scan,
     )
     from pyspark.sql import types as T
@@ -176,8 +176,8 @@ def test_pruned_scan_rg_composition_end_to_end(spark):
     assert got == want
     # the composed keep list is strictly smaller than either single-column
     rows = [r.asDict() for r in chunks.collect()]
-    single_id = chunk_keep(rows, Comparison("id", ">=", 2500))[1]
-    composed = chunk_keep(rows, pred)[1]
+    single_id = group_keep(rows, Comparison("id", ">=", 2500))
+    composed = group_keep(rows, pred)
     assert composed is not None and len(composed) < len(single_id)
     chunks.unpersist()
 
@@ -225,8 +225,10 @@ def test_bloom_type_mismatch_keeps_chunks(spark):
     chunks = encode_table(df, plan={"s": {"bloom": True}}).cache()
     total = chunks.select("part_id", "chunk_ord").distinct().count()
     assert _kept(chunks, Comparison("s", "=", 7)) == total  # int probe
-    # matched-type probes still prune: a value NOT in the column
+    # matched-type probes still prune: a value NOT in the column, above
+    # its max or (by the bloom filter alone) inside its [min, max]
     assert _kept(chunks, Comparison("s", "=", "not-present")) < total
+    assert _kept(chunks, Comparison("s", "=", "12x")) < total
 
 
 def test_pruned_range_scan_open_bounds(spark):

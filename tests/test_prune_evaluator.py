@@ -351,14 +351,16 @@ def _chunk_neighbours(v) -> list:
 
 
 @st.composite
-def _chunk_predicates(draw, values):
+def _chunk_predicates(draw, values, value=None):
     """A Comparison of every op, IS [NOT] NULL, or two of them under And,
-    Or or Not, on column "c"."""
+    Or or Not, on column "c"; its values drawn from ``value``, by default
+    next to ``values`` or of any type."""
     from orc_rust_spark.operators import predicate as pr
 
-    pool = [v for v in values if v is not None]
-    near = st.sampled_from(pool).flatmap(lambda v: st.sampled_from(_chunk_neighbours(v)))
-    value = st.one_of(near, near, _PROBES) if pool else _PROBES
+    if value is None:
+        pool = [v for v in values if v is not None]
+        near = st.sampled_from(pool).flatmap(lambda v: st.sampled_from(_chunk_neighbours(v)))
+        value = st.one_of(near, near, _PROBES) if pool else _PROBES
     comparison = st.builds(pr.Comparison, st.just("c"),
                            st.sampled_from(["=", "!=", "<", "<=", ">", ">="]), value)
     leaf = st.one_of(comparison, comparison, comparison,
@@ -393,6 +395,11 @@ def _sql(v, pred):
     if v is None:
         return None
     p = pred.value
+    if isinstance(v, dt.datetime) and isinstance(p, dt.datetime) and p.tzinfo is not None:
+        # Spark compares an aware literal's instant with the naive
+        # statistics' UTC reading (an instant, or a wall clock at the UTC
+        # session time zone)
+        p = p.astimezone(UTC).replace(tzinfo=None)
     try:
         return {"=": lambda: v == p, "!=": lambda: v != p, "<": lambda: v < p,
                 "<=": lambda: v <= p, ">": lambda: v > p, ">=": lambda: v >= p}[pred.op]()
@@ -406,7 +413,7 @@ def _sql(v, pred):
 def test_chunk_stats_keep_every_matching_group(codec, data):
     import json
 
-    from orc_rust_spark.operators.predicate import chunk_keep
+    from orc_rust_spark.operators.predicate import chunk_keep, group_keep
 
     value = _CHUNK_VALUES[codec]
     groups = data.draw(st.lists(st.lists(st.one_of(value, value, st.none()), min_size=1,
@@ -424,8 +431,109 @@ def test_chunk_stats_keep_every_matching_group(codec, data):
            "null_count": sum(rg["nulls"]), "row_count": sum(rg["n"]),
            "stats_json": json.dumps({"rg": rg})}
     pred = data.draw(_chunk_predicates([v for vals in groups for v in vals]))
-    verdict, keep = chunk_keep([row], pred)
+    verdict, keep = chunk_keep([row], pred), group_keep([row], pred)
     kept = range(len(groups)) if keep is None else keep
     for g, vals in enumerate(groups):
         if any(_sql(v, pred) is True for v in vals):
             assert verdict and g in kept, (g, vals, rg["min"][g], rg["max"][g])
+
+
+# A TimestampType column holds instants: PySpark turns a naive datetime
+# into one in the Python process's local zone (TimestampType.toInternal),
+# and so does F.lit a probe's; a TimestampNTZType column holds wall
+# clocks, which stand as UTC at the UTC session time zone, as does an NTZ
+# literal. Whichever of these the column and the literal use, a group
+# holding a match must keep, in any local zone (DST transitions included).
+
+_ZONES = ["UTC0", "EST5EDT,M3.2.0,M11.1.0", "JST-9"]
+_TS_VALUES = (st.datetimes(dt.datetime(2024, 3, 9), dt.datetime(2024, 3, 11))
+              | st.datetimes(dt.datetime(2024, 11, 2), dt.datetime(2024, 11, 4))
+              | st.datetimes(dt.datetime(1901, 1, 1), dt.datetime(2100, 1, 1)))
+
+
+def _instant_us(v: dt.datetime) -> int:
+    """PySpark's TimestampType.toInternal of a naive datetime."""
+    import time
+
+    return int(time.mktime(v.timetuple())) * 1_000_000 + v.microsecond
+
+
+def _wall_us(v: dt.datetime) -> int:
+    return (v - EPOCH) // _US
+
+
+def _with_values(pred, f):
+    """``pred`` with every Comparison's value mapped by ``f``."""
+    from orc_rust_spark.operators import predicate as pr
+
+    if isinstance(pred, pr.Comparison):
+        return pr.Comparison(pred.col, pred.op, f(pred.value))
+    if isinstance(pred, pr.Not):
+        return pr.Not(_with_values(pred.pred, f))
+    if isinstance(pred, (pr.And, pr.Or)):
+        return type(pred)(*(_with_values(p, f) for p in pred.preds))
+    return pred
+
+
+@pytest.mark.parametrize("zone", _ZONES)
+@settings(max_examples=200, deadline=None, derandomize=True)
+@given(data=st.data())
+def test_chunk_timestamp_stats_keep_matches_in_any_local_zone(local_zone, zone, data):
+    import json
+
+    from orc_rust_spark.operators.predicate import chunk_keep, group_keep
+
+    with local_zone(zone):
+        column_us = data.draw(st.sampled_from([_instant_us, _wall_us]))
+        literal_us = data.draw(st.sampled_from([_instant_us, _wall_us]))
+        groups = data.draw(st.lists(st.lists(st.one_of(_TS_VALUES, _TS_VALUES, st.none()),
+                                             min_size=1, max_size=6), min_size=1, max_size=6))
+        us = [[None if v is None else column_us(v) for v in vals] for vals in groups]
+        rg = {"codec": "timestamp_split", "n": [len(g) for g in groups],
+              "nulls": [g.count(None) for g in groups], "min": [], "max": []}
+        for vals in us:
+            live = [v for v in vals if v is not None]
+            rg["min"].append(str(min(live)) if live else None)
+            rg["max"].append(str(max(live)) if live else None)
+        live = [v for vals in us for v in vals if v is not None]
+        row = {"column": "c", "stream_kind": "DATA", "codec": "timestamp_split",
+               "min_val": str(min(live)) if live else None,
+               "max_val": str(max(live)) if live else None,
+               "null_count": sum(rg["nulls"]), "row_count": sum(rg["n"]),
+               "stats_json": json.dumps({"rg": rg})}
+        pool = [v for vals in groups for v in vals if v is not None] or [dt.datetime(2024, 3, 10)]
+        shift = st.sampled_from([-9, -5, -4, 0, 4, 5, 9]).map(lambda h: dt.timedelta(hours=h))
+        near = st.builds(lambda v, d, e: v + d + e * _US, st.sampled_from(pool), shift,
+                         st.sampled_from([-1, 0, 1]))
+        pred = data.draw(_chunk_predicates([], near))
+        verdict, keep = chunk_keep([row], pred), group_keep([row], pred)
+        exact = _with_values(pred, literal_us)
+    kept = range(len(groups)) if keep is None else keep
+    for g, vals in enumerate(us):
+        if any(_sql(v, exact) is True for v in vals):
+            assert verdict and g in kept, (g, groups[g], rg["min"][g], rg["max"][g])
+
+
+def test_chunk_bloom_prunes_absent_values_inside_min_max():
+    """A probe inside a chunk's [min, max] but not in it is ruled out by
+    the chunk's bloom filter alone: an odd id of an even-only long column
+    and an absent string, with the filters stored zlib-compressed."""
+    import pyarrow as pa
+
+    from orc_rust_spark.operators.encode import encode_chunk
+    from orc_rust_spark.operators.predicate import Comparison, chunk_keep
+
+    ids = list(range(0, 20_000, 2))
+    table = pa.table({"id": pa.array(ids, pa.int64()),
+                      "s": pa.array([f"key-{i:06d}" for i in ids])})
+    plan = {c: {"bloom": True, "block_codec": "zlib"} for c in ("id", "s")}
+    rows = encode_chunk(table, 0, 0, plan).to_pylist()
+    assert {r["codec"] for r in rows if r["stream_kind"] == "BLOOM_FILTER"} >= {"rle_v2"}
+    for probe in (ids[0], ids[-1], 10_000):
+        assert chunk_keep(rows, Comparison("id", "=", probe))
+        assert chunk_keep(rows, Comparison("s", "=", f"key-{probe:06d}"))
+    odd = range(1, 20_000, 402)
+    kept_ids = sum(chunk_keep(rows, Comparison("id", "=", i)) for i in odd)
+    kept_strs = sum(chunk_keep(rows, Comparison("s", "=", f"key-{i:06d}")) for i in odd)
+    # the filters' false positives only (fpp 5%: about 2 of 50)
+    assert kept_ids <= 10 and kept_strs <= 10, (kept_ids, kept_strs, len(odd))

@@ -48,6 +48,13 @@ def test_bloom_pruning_skips_chunks(spark, encoded):
     kept_absent = _kept(chunks, "url", "https://nope.invalid/xyz")
     assert kept_bloom >= 1
     assert kept_absent < total  # bloom rules out most chunks for absent keys
+    # an absent url inside every chunk's [min, max]: only the bloom
+    # filters can rule it out
+    inside = "https://host-0000.example.com/~absent"
+    bounds = chunks.where((F.col("column") == "url") & (F.col("stream_kind") == "DATA")) \
+        .select("min_val", "max_val").collect()
+    assert all(r.min_val <= inside <= r.max_val for r in bounds)
+    assert _kept(chunks, "url", inside) < total
 
 
 def test_stats_pruning_ints(spark, encoded):
@@ -85,6 +92,35 @@ def test_datetime_probe_prunes_timestamp_and_date_chunks(spark):
     got, keys = pruned_scan(chunks, schema, Comparison("d", ">", (base + dt.timedelta(days=1994)).date()))
     assert sorted(r.id for r in got.collect()) == list(range(1995, 2000))
     assert keys.count() == 1
+    chunks.unpersist()
+
+
+def test_datetime_probe_prunes_soundly_in_a_non_utc_local_zone(spark, local_zone):
+    """PySpark reads naive datetimes in the Python process's local zone,
+    both the rows createDataFrame stores and F.lit's residual filter; the
+    pruning bound must too. In New York (UTC-5) every op returns the
+    rows of an unpruned filter, and ts <= base + 10 s still keeps one of
+    the two chunks."""
+    import datetime as dt
+
+    import pyspark.sql.types as T
+
+    base = dt.datetime(2024, 3, 1)
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("ts", T.TimestampType())])
+    with local_zone("EST5EDT,M3.2.0,M11.1.0"):
+        rows = [(i, base + dt.timedelta(seconds=i)) for i in range(2000)]
+        df = spark.createDataFrame(rows, schema).repartitionByRange(2, "id")
+        chunks = encode_table(df, plan={}).cache()
+        assert chunks.select("part_id", "chunk_ord").distinct().count() == 2
+        for op in ("=", "!=", "<", "<=", ">", ">="):
+            for s in (0, 10, 999, 1000, 1999):
+                pred = Comparison("ts", op, base + dt.timedelta(seconds=s))
+                got, keys = pruned_scan(chunks, schema, pred)
+                want = df.where(pred.to_spark())
+                assert sorted(r.id for r in got.collect()) == sorted(r.id for r in want.collect()), (op, s)
+        _, keys = pruned_scan(chunks, schema, Comparison("ts", "<=", base + dt.timedelta(seconds=10)))
+        assert keys.count() == 1
     chunks.unpersist()
 
 

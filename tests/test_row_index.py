@@ -14,7 +14,7 @@ from orc_rust_spark.operators.decode import decode_chunk_arrays
 from orc_rust_spark.operators.encode import encode_chunk
 from orc_rust_spark.operators.predicate import (
     Comparison,
-    chunk_keep,
+    group_keep,
     prune_chunks_predicate,
     pruned_scan,
 )
@@ -68,12 +68,12 @@ def test_rg_partial_decode_matches_slices():
 
 
 def _groups(rg: dict, pred) -> list[int]:
-    """The groups chunk_keep keeps of one indexed column "c" with row
+    """The groups group_keep keeps of one indexed column "c" with row
     index ``rg``."""
     row = {"column": "c", "stream_kind": "DATA", "codec": rg["codec"],
            "null_count": 0, "row_count": sum(rg["n"]),
            "stats_json": json.dumps({"rg": rg})}
-    keep = chunk_keep([row], pred)[1]
+    keep = group_keep([row], pred)
     return list(range(len(rg["n"]))) if keep is None else keep
 
 
