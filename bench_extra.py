@@ -63,6 +63,16 @@ process-tree CPU of that decode and of the plan it replaces
 (repartition + sortWithinPartitions on the chunk key, then a map-only
 decode), alternating the two after one warm-up round of each. Every
 decode is checked against the source digest.
+
+  python bench_extra.py --encode-split --seed 1 [--reps 7]
+
+rebuilds perfbench's webtext_encode source in a temp directory
+(``local[$SPARK_GRAFT_CPUS]``, as perfbench) and prints the CPU seconds of
+its encode operation (``encode_table`` into the noop sink) by process:
+the JVM, the PySpark workers (read through ``perfbench/procstat``) and
+this driver, as medians over the runs after three warm-ups, and the input
+the encode's plan reads (``FileSourceScanExec`` for the JVM's parquet
+scan, ``RangeExec`` when the workers read the files).
 """
 
 from __future__ import annotations
@@ -436,6 +446,55 @@ def decode_path(seed: int, reps: int) -> dict:
             "cpu_s_runs": {name: [round(x, 3) for x in xs] for name, xs in cpu.items()}}
 
 
+def encode_split(seed: int, reps: int) -> dict:
+    """Per-process CPU of perfbench's webtext_encode encode operation
+    (``encode_table`` into the noop sink): the JVM's, the PySpark
+    workers' and this driver's, as medians over ``reps`` runs after three
+    warm-up runs."""
+    import tempfile
+    from pathlib import Path
+
+    from pyspark import SparkContext
+
+    from orc_rust_spark.operators.encode import encode_table
+    from perfbench import procstat, workloads as wl
+
+    with tempfile.TemporaryDirectory() as tmp:
+        work = Path(tmp)
+        cpus = wl.cpus()
+        spark = wl.start_spark(work, cpus)
+        try:
+            s = wl.spark_inputs(spark, seed, work, wl.ROWS["webtext_encode"],
+                                wl.PARTS_PER_CPU * cpus)
+            jvm = SparkContext._gateway.proc.pid
+
+            def sample() -> tuple:
+                workers = sum(procstat.cpu_seconds(p) for p in procstat.python_workers())
+                return (procstat.cpu_seconds(jvm), workers, time.process_time(),
+                        time.perf_counter())
+
+            runs: dict[str, list[float]] = {"jvm": [], "python_workers": [],
+                                            "driver": [], "wall": []}
+            for i in range(3 + reps):
+                before = sample()
+                wl.noop(encode_table(s.src, plan=s.plan))
+                after = sample()
+                if i >= 3:
+                    for k, a, b in zip(runs, before, after):
+                        runs[k].append(b - a)
+            plan = encode_table(s.src, plan=s.plan)._jdf.queryExecution().executedPlan()
+            leaf = plan.collectLeaves().apply(0).getClass().getSimpleName()
+        finally:
+            wl.stop_spark(spark)
+    med = {k: round(statistics.median(v), 3) for k, v in runs.items()}
+    return {"seed": seed, "reps": reps, "input": leaf, "cpu_s": {
+        "jvm": med["jvm"], "python_workers": med["python_workers"],
+        "driver": med["driver"], "total": round(med["jvm"] + med["python_workers"]
+                                                + med["driver"], 3)},
+        "wall_s": med["wall"],
+        "runs": {k: [round(x, 3) for x in v] for k, v in runs.items()}}
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--lookup-blocks", action="store_true",
@@ -446,6 +505,8 @@ def main() -> None:
                     help="print the CPU of a trivial 4-task Python stage")
     ap.add_argument("--decode-path", action="store_true",
                     help="print the stored-table decode path and its CPU")
+    ap.add_argument("--encode-split", action="store_true",
+                    help="print the JVM's and the Python workers' CPU of one webtext encode")
     ap.add_argument("--probe-column", default="",
                     help="with --lookup-cost: probe this column, not the key")
     ap.add_argument("--cold", action="store_true",
@@ -476,6 +537,9 @@ def main() -> None:
         return
     if args.decode_path:
         print(json.dumps(decode_path(args.seed, max(args.reps, 7))))
+        return
+    if args.encode_split:
+        print(json.dumps(encode_split(args.seed, max(args.reps, 7))))
         return
 
     from orc_rust_spark.session import get_spark

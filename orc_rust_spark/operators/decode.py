@@ -396,14 +396,39 @@ def _first_overlap(boxes: list[tuple], members: list[int], col: int) -> tuple[in
     return _first_overlap(boxes, run, col + 1)
 
 
+def parquet_scan(df: DataFrame):
+    """-> (relation, "") when the optimized plan of ``df`` is a bare
+    parquet scan: a parquet ``HadoopFsRelation`` under at most
+    ``Project``s of plain column references (any subset and order; an
+    alias, filter or computed column fails it); else (None, why not).
+    Runs on the driver."""
+    try:
+        node = df._jdf.queryExecution().optimizedPlan()
+    except AttributeError:  # a frame with no JVM behind it (Spark Connect)
+        return None, "no JVM plan to inspect"
+    while node.nodeName() == "Project":
+        exprs = node.projectList()
+        for i in range(exprs.size()):
+            e = exprs.apply(i)
+            if e.getClass().getSimpleName() != "AttributeReference":
+                return None, f"{e.name()} is computed, not read from the files"
+        node = node.child()
+    if node.nodeName() != "LogicalRelation":
+        return None, f"the plan is not a bare parquet scan ({node.nodeName()})"
+    rel = node.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"):
+        return None, "the scan does not read parquet files"
+    return rel, ""
+
+
 def chunk_layout(chunks: DataFrame, group_cols: Sequence[str]) -> tuple[bool, str]:
     """-> (map_only, reason): do the parquet footers prove that no chunk's
     stream rows can be split across tasks? Runs on the driver.
 
     The proof holds when
-    - the optimized plan of ``chunks`` is a parquet scan under at most
-      ``Project``s that pass every group column through unchanged (a
-      repartition, union, sort, filter, join or cache fails it);
+    - ``chunks`` is a bare parquet scan (parquet_scan: a repartition,
+      union, sort, filter, join, cache or computed column fails it);
     - every row group of every input file has min/max statistics for each
       group column, or takes it as a Hive partition value from its path
       (``part_id=`` for encode_dataset, ``stream_batch_id=`` for the
@@ -418,23 +443,9 @@ def chunk_layout(chunks: DataFrame, group_cols: Sequence[str]) -> tuple[bool, st
     import pyarrow.parquet as pq
 
     cols = tuple(group_cols)
-    try:
-        node = chunks._jdf.queryExecution().optimizedPlan()
-    except AttributeError:  # a frame with no JVM behind it (Spark Connect)
-        return False, "shuffle: no JVM plan to inspect"
-    while node.nodeName() == "Project":
-        exprs = node.projectList()
-        for i in range(exprs.size()):
-            e = exprs.apply(i)
-            if e.name() in cols and e.getClass().getSimpleName() != "AttributeReference":
-                return False, f"shuffle: {e.name()} is computed, not read from the files"
-        node = node.child()
-    if node.nodeName() != "LogicalRelation":
-        return False, f"shuffle: the plan is not a bare parquet scan ({node.nodeName()})"
-    rel = node.relation()
-    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
-            or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"):
-        return False, "shuffle: the scan does not read parquet files"
+    rel, why = parquet_scan(chunks)
+    if rel is None:
+        return False, f"shuffle: {why}"
     part_cols = set(rel.partitionSchema().fieldNames())
     files = chunks.inputFiles()
 

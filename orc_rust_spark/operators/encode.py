@@ -6,18 +6,27 @@ size crosses the stripe threshold (64 MiB, matching
 src/arrow_writer.rs:52,118) the stripe is flushed through the per-column
 encoders and emitted as chunk-table rows. All value work is NumPy/pyarrow;
 rows never materialize as Python objects (mapInArrow, not per-row UDFs).
+
+Two batch sources feed that one flush loop (_flush_chunks). A bare parquet
+scan is read by the Python workers themselves, over Spark's own file
+partitions and in the batches Spark would send (_worker_splits,
+_read_split), like the reference doing its own IO through a byte-range
+ChunkReader (SURVEY §2.3): parquet values never cross the JVM->Python
+boundary. Any other input is handed over by Spark's mapInArrow. Both give
+a task the same rows in the same batches, so they write the same chunks.
 """
 
 from __future__ import annotations
 
 import json
-import os
+import math
 import time
 import zlib
 from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from ..codecs import block as blockc
@@ -35,15 +44,25 @@ STRIPE_BYTES = 64 * 1024 * 1024  # reference stripe flush threshold
 BLOCK_MIN_BYTES = 4096  # streams smaller than this skip general compression
 
 
-def _flatten_large_binary(arr: pa.Array) -> tuple[bytes, np.ndarray]:
+def _flatten_large_binary(arr: pa.Array) -> tuple[memoryview, np.ndarray]:
+    """-> (the values' bytes as a view of the Arrow data buffer, not a
+    copy; their n + 1 offsets into it)."""
     arr = arr.cast(pa.large_binary()) if not pa.types.is_large_binary(arr.type) else arr
     offs = np.frombuffer(arr.buffers()[1], dtype=np.int64, count=len(arr) + 1,
                          offset=arr.offset * 8)
-    # slice the buffer through a memoryview so the payload is copied ONCE
-    # (to_pybytes() + a bytes slice copied sliced arrays twice)
-    data = (bytes(memoryview(arr.buffers()[2])[offs[0]: offs[-1]])
-            if len(arr) else b"")
-    return data, (offs - offs[0]).astype(np.int64)
+    data = (memoryview(arr.buffers()[2])[offs[0]: offs[-1]]
+            if len(arr) else memoryview(b""))
+    return data, offs - offs[0]
+
+
+def _float_bounds(mins: np.ndarray, maxs: np.ndarray) -> tuple[str, str]:
+    """min and max statistics strings of float values in Spark's order,
+    where NaN sorts above +inf: the max of values holding NaN is 'nan', an
+    upper bound no probe rules out, and the min is 'nan' only when every
+    value is. repr() round-trips exactly, infinities included."""
+    finite_min = mins[~np.isnan(mins)]
+    return (repr(float(finite_min.min())) if finite_min.size else "nan",
+            "nan" if np.isnan(maxs).any() else repr(float(maxs.max())))
 
 
 def _encode_string_column(
@@ -119,7 +138,7 @@ def encode_chunk(
         rows["stream_kind"].append(kind)
         rows["codec"].append(codec)
         rows["block_codec"].append(block_codec)
-        rows["data"].append(final)
+        rows["data"].append(bytes(final))  # an uncompressed view becomes bytes
         rows["row_count"].append(n)
         rows["null_count"].append(null_count)
         rows["dict_size"].append(dict_size)
@@ -134,7 +153,11 @@ def encode_chunk(
 
     for name in table.column_names:
         arr = table.column(name)
-        arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+        # drop each source column once taken, so a caller that passed
+        # its only reference frees the column as soon as it is encoded
+        table = table.drop_columns([name])
+        if isinstance(arr, pa.ChunkedArray):
+            arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
         _encode_column(name, arr, plan.get(name, {}), emit)
     return pa.RecordBatch.from_pydict(rows, schema=ct.CHUNK_ARROW_SCHEMA)
 
@@ -231,8 +254,8 @@ def _encode_column_row_groups(name: str, arr: pa.Array, col_plan: dict, emit) ->
             minv = str(min(int(m) for m in non_null_min))
             maxv = str(max(int(m) for m in non_null_max))
         elif floaty:
-            minv = repr(min(float(m) for m in non_null_min))
-            maxv = repr(max(float(m) for m in non_null_max))
+            minv, maxv = _float_bounds(np.array(non_null_min, dtype=np.float64),
+                                       np.array(non_null_max, dtype=np.float64))
         else:
             minv, maxv = min(non_null_min), max(non_null_max)
     else:
@@ -316,8 +339,12 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit, *,
             emit(name, ct.PRESENT, "boolean_rle", present, n=n, null_count=null_count)
         emit(name, ct.LENGTH, "map", encode_rlev2(lengths, signed=False),
              n=n, null_count=null_count, ms=(time.perf_counter() - t0) * 1000)
-        _encode_column(f"{name}.key", dense.keys, col_plan.get("key", {}), emit)
-        _encode_column(f"{name}.value", dense.items, col_plan.get("value", {}), emit)
+        # keys and items ignore a sliced array's offset: cut them to its entries
+        start, stop = dense.offsets[0].as_py(), dense.offsets[-1].as_py()
+        _encode_column(f"{name}.key", dense.keys.slice(start, stop - start),
+                       col_plan.get("key", {}), emit)
+        _encode_column(f"{name}.value", dense.items.slice(start, stop - start),
+                       col_plan.get("value", {}), emit)
         return
 
     minv = maxv = None
@@ -415,9 +442,8 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit, *,
         codec = "float_plain"
         streams = [(ct.DATA, encode_float(np.ascontiguousarray(vals)))]
         raw = n * vals.dtype.itemsize
-        finite = vals[np.isfinite(vals)] if vals.size else vals
-        if finite.size:  # repr() round-trips exactly through try_cast double
-            minv, maxv = repr(float(finite.min())), repr(float(finite.max()))
+        if vals.size:
+            minv, maxv = _float_bounds(vals, vals)
     elif pa.types.is_boolean(typ):
         vals = np.asarray(dense)
         codec = "boolean_rle"
@@ -477,6 +503,8 @@ def _encode_column(name: str, arr: pa.Array, col_plan: dict, emit, *,
 #: the input column that carries each row's Spark partition id into the
 #: encode task; dropped before the rows are encoded
 PART_ID_COL = "__encode_part_id"
+#: rows per pyarrow batch of a worker's parquet read: bounds its temporaries
+READ_BATCH_ROWS = 1024
 
 
 def _with_part_id(df: DataFrame) -> DataFrame:
@@ -491,89 +519,197 @@ def _with_part_id(df: DataFrame) -> DataFrame:
     return df.withColumn(PART_ID_COL, F.spark_partition_id())
 
 
-def _split_part_id(b: pa.RecordBatch) -> tuple[pa.RecordBatch, int]:
-    """-> (the batch without PART_ID_COL, its rows' partition id)."""
-    return b.drop_columns([PART_ID_COL]), b.column(PART_ID_COL)[0].as_py()
+def _arrow_bytes(arr: pa.ChunkedArray) -> int:
+    """Bytes Spark's Arrow writer counts for these values (Arrow Java's
+    ``getBufferSizeFor``: a validity bitmap per vector, n + 1 int32
+    offsets per list or string vector), however pyarrow types, chunks and
+    buffers them."""
+    n, t = len(arr), arr.type
+    if n == 0 or pa.types.is_null(t):
+        return 0
+    bitmap = -(-n // 8)
+    if pa.types.is_boolean(t):
+        return 2 * bitmap
+    if pa.types.is_struct(t):
+        return bitmap + sum(_arrow_bytes(pc.struct_field(arr, [i])) for i in range(t.num_fields))
+    if pa.types.is_map(t):
+        arr = arr.cast(pa.list_(pa.struct([t.key_field, t.item_field])))
+    if pa.types.is_list(arr.type):
+        return bitmap + 4 * (n + 1) + _arrow_bytes(pc.list_flatten(arr))
+    if (pa.types.is_binary(t) or pa.types.is_string(t)
+            or pa.types.is_large_binary(t) or pa.types.is_large_string(t)):
+        return bitmap + 4 * (n + 1) + (pc.sum(pc.binary_length(arr)).as_py() or 0)
+    return bitmap + n * (t.bit_width // 8)
 
 
-def encode_parquet_files(
-    spark,
-    input_dir: str,
-    plan: dict | None = None,
-    stripe_bytes: int = STRIPE_BYTES,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Parquet files -> chunk table, reading the parquet INSIDE the Python
-    workers (pyarrow), so only file paths cross into Python and only
-    compressed chunk rows cross back out.
+def _table_bytes(t: pa.Table) -> int:
+    return sum(_arrow_bytes(c) for c in t.columns)
 
-    This sidesteps the JVM->Python Arrow exchange entirely — the analog of
-    the reference being handed a byte range and doing its own IO
-    (src/reader/mod.rs ChunkReader). On a cluster the same pattern reads
-    from the object store via pyarrow's filesystem layer; locally it is
-    what makes encode scale near-linearly with cores (BASELINE.md).
-    """
-    import glob as _glob
 
-    plan = plan or {}
-    files = sorted(_glob.glob(os.path.join(input_dir, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {input_dir}")
-    n_slots = max(1, spark.sparkContext.defaultParallelism)
-    paths_df = _with_part_id(spark.createDataFrame(
-        [(f,) for f in files], "path string"
-    ).repartition(min(len(files), n_slots * 4)))
+def _sent_bytes(t: pa.Table) -> int:
+    """_table_bytes plus what the JVM sends beside the rows: the int32
+    PART_ID_COL and the bitmap of the struct mapInArrow wraps a row in."""
+    return _table_bytes(t) + 4 * t.num_rows + 2 * -(-t.num_rows // 8)
 
-    def encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
 
-        chunk_ord = 0
-        buf: list[pa.RecordBatch] = []
-        buffered = 0
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            b, part_id = _split_part_id(b)
-            for path in b.column("path").to_pylist():
-                pf = pq.ParquetFile(path)
-                for rb in pf.iter_batches(batch_size=65536, columns=columns):
-                    if rb.num_rows == 0:
-                        continue
-                    buf.append(rb)
-                    buffered += rb.nbytes
-                    if buffered >= stripe_bytes:
-                        yield encode_chunk(
-                            pa.Table.from_batches(buf), part_id, chunk_ord, plan
-                        )
-                        buf, buffered = [], 0
-                        chunk_ord += 1
-        if buf:
-            yield encode_chunk(pa.Table.from_batches(buf), part_id, chunk_ord, plan)
+def _cut(rows: pa.Table, max_rows: int, max_bytes: float) -> int:
+    """Rows in the next batch Spark's Arrow writer sends a mapInArrow
+    task: it adds rows while it holds fewer than ``max_rows`` and fewer
+    than ``max_bytes`` (_sent_bytes)."""
+    lo, hi = 1, min(max_rows, rows.num_rows)
+    while lo < hi:
+        mid = (lo + hi) // 2
+        lo, hi = (lo, mid) if _sent_bytes(rows.slice(0, mid)) >= max_bytes else (mid + 1, hi)
+    return lo
 
-    return paths_df.mapInArrow(encode_files, schema=ct.CHUNK_SPARK_SCHEMA)
+
+def _midpoint(rg) -> int:
+    """Spark's split of a parquet row group: its first page offset plus
+    half its compressed size."""
+    c = rg.column(0)
+    start = c.data_page_offset
+    if c.has_dictionary_page and c.dictionary_page_offset < start:
+        start = c.dictionary_page_offset
+    return start + sum(rg.column(j).total_compressed_size for j in range(rg.num_columns)) // 2
+
+
+def _worker_splits(df: DataFrame) -> list[list[tuple[str, list[int]]]] | None:
+    """Spark's file partitions of ``df``'s scan, each as (file uri, row
+    groups whose midpoint lies in its byte range) in Spark's order, when
+    the Python workers can read them as the JVM would; else None. That
+    takes a bare parquet scan (decode.parquet_scan) without partition
+    columns, ignoreCorruptFiles, ignoreMissingFiles, large Arrow var
+    types or legacy calendar rebasing, whose footers hold every column,
+    no projected INT96 column and no legacy-calendar marker or Spark 2
+    writer."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    from .decode import parquet_scan
+
+    rel, _ = parquet_scan(df)
+    if rel is None or rel.partitionSchema().length():
+        return None
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    if (conf.ignoreCorruptFiles() or conf.ignoreMissingFiles() or conf.arrowUseLargeVarTypes()
+            or conf.getConfString("spark.sql.parquet.datetimeRebaseModeInRead") == "LEGACY"):
+        return None
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    if leaves.size() != 1 or leaves.apply(0).getClass().getSimpleName() != "FileSourceScanExec":
+        return None
+    parts = leaves.apply(0).inputRDD().filePartitions()
+    names, footers, out = set(df.columns), {}, []
+    for i in range(parts.size()):
+        out.append([])
+        for f in parts.apply(i).files():
+            uri = f.filePath().toString()
+            if uri not in footers:
+                try:
+                    fs, path = pafs.FileSystem.from_uri(uri)
+                    md = pq.read_metadata(path, filesystem=fs)
+                except (OSError, ValueError, pa.ArrowException):
+                    return None
+                kv = md.metadata or {}
+                leaf = [md.schema.column(j) for j in range(md.num_columns)]
+                tops = {c.path.split(".")[0] for c in leaf}
+                if (not names <= tops or kv.get(b"org.apache.spark.version", b"3") < b"3"
+                        or {b"org.apache.spark.legacyDateTime", b"org.apache.spark.legacyINT96"} & set(kv)
+                        or any(c.physical_type == "INT96" and c.path.split(".")[0] in names
+                               for c in leaf)):
+                    return None
+                footers[uri] = md
+            md, lo = footers[uri], f.start()
+            groups = [g for g in range(md.num_row_groups)
+                      if lo <= _midpoint(md.row_group(g)) < lo + f.length()]
+            out[-1] += [(uri, groups)] if groups else []
+    return out or None
+
+
+def _read_split(split: list, schema: pa.Schema, max_rows: int,
+                max_bytes: float) -> Iterator[pa.Table]:
+    """One of _worker_splits' partitions, read single-threaded in
+    READ_BATCH_ROWS-row batches cast to ``schema``, and cut across files
+    into the batches Spark's Arrow writer would send (_cut)."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    rest = schema.empty_table()
+    for uri, groups in split:
+        fs, path = pafs.FileSystem.from_uri(uri)
+        with fs.open_input_file(path) as fh:
+            for rb in pq.ParquetFile(fh).iter_batches(
+                    READ_BATCH_ROWS, groups, schema.names, use_threads=False):
+                rest = pa.concat_tables([rest, pa.Table.from_batches([rb.cast(schema)])])
+                while rest.num_rows >= max_rows or _sent_bytes(rest) >= max_bytes:
+                    k = _cut(rest, max_rows, max_bytes)
+                    yield rest.slice(0, k)
+                    rest = rest.slice(k)
+    if rest.num_rows:
+        yield rest
+
+
+def _take(buf: list[pa.Table]) -> pa.Table:
+    """The buffered rows as one table; empties ``buf``, so that
+    encode_chunk frees each column once it is encoded."""
+    t = pa.concat_tables(buf)
+    buf.clear()
+    return t
+
+
+def _flush_chunks(tables: Iterator[tuple[pa.Table, int]], plan: dict,
+                  stripe_bytes: int) -> Iterator[pa.RecordBatch]:
+    """The flush loop of both batch sources: one task's (rows, part_id)
+    batches, encoded as a chunk whenever their _table_bytes reach
+    ``stripe_bytes``, and at the end."""
+    buf: list[pa.Table] = []
+    buffered = chunk_ord = 0
+    for t, part_id in tables:
+        buf.append(t)
+        buffered += _table_bytes(t)
+        del t  # only buf holds the rows, which encode_chunk frees as it goes
+        if buffered >= stripe_bytes:
+            yield encode_chunk(_take(buf), part_id, chunk_ord, plan)
+            buffered, chunk_ord = 0, chunk_ord + 1
+    if buf:
+        yield encode_chunk(_take(buf), part_id, chunk_ord, plan)
 
 
 def encode_table(
     df: DataFrame, plan: dict | None = None, stripe_bytes: int = STRIPE_BYTES
 ) -> DataFrame:
-    """DataFrame -> chunk-table DataFrame (one row per column stream)."""
+    """DataFrame -> chunk-table DataFrame (one row per column stream).
+
+    When ``df`` is a bare parquet scan the Python workers can read as
+    Spark does (_worker_splits), they read its files with pyarrow: task
+    ``i`` of ``spark.range(0, n, 1, n)`` reads Spark's file partition
+    ``i`` in the batches the JVM would send and encodes it under part_id
+    ``i``, so no parquet value crosses the JVM->Python boundary, nothing
+    is shuffled and the chunk table is the JVM scan's. Any other input
+    reaches the same flush loop through mapInArrow."""
     plan = plan or {}
+    splits = _worker_splits(df)
+    if splits is None:
+        def encode_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            return _flush_chunks(((pa.Table.from_batches([b.drop_columns([PART_ID_COL])]),
+                                   b.column(PART_ID_COL)[0].as_py())
+                                  for b in batches if b.num_rows), plan, stripe_bytes)
 
-    def encode_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        buf: list[pa.RecordBatch] = []
-        buffered = 0
-        chunk_ord = 0
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            b, part_id = _split_part_id(b)
-            buf.append(b)
-            buffered += b.nbytes
-            if buffered >= stripe_bytes:
-                yield encode_chunk(pa.Table.from_batches(buf), part_id, chunk_ord, plan)
-                buf, buffered = [], 0
-                chunk_ord += 1
-        if buf:
-            yield encode_chunk(pa.Table.from_batches(buf), part_id, chunk_ord, plan)
+        return _with_part_id(df).mapInArrow(encode_iter, schema=ct.CHUNK_SPARK_SCHEMA)
 
-    return _with_part_id(df).mapInArrow(encode_iter, schema=ct.CHUNK_SPARK_SCHEMA)
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    # large types: the encoder's strings need no copy to 64-bit offsets
+    schema = to_arrow_schema(df.schema, prefers_large_types=True)
+    # Spark's own batch limits: no row limit at <= 0, no byte limit at 2^31 - 1
+    max_rows = conf.arrowMaxRecordsPerBatch() if conf.arrowMaxRecordsPerBatch() > 0 else 2**31
+    max_bytes = conf.arrowMaxBytesPerBatch()
+    max_bytes = math.inf if max_bytes == 2**31 - 1 else max_bytes
+
+    def read_iter(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for i in (i for b in batches for i in b.column(0).to_pylist()):
+            yield from _flush_chunks(((t, i) for t in _read_split(
+                splits[i], schema, max_rows, max_bytes)), plan, stripe_bytes)
+
+    return df.sparkSession.range(0, len(splits), 1, len(splits)).mapInArrow(
+        read_iter, schema=ct.CHUNK_SPARK_SCHEMA)

@@ -218,8 +218,11 @@ def column_stats(codec: str, mins: list, maxs: list, nulls: list | None,
     family their codec gives (_FAMILY_OF_CODEC); a None or unparsable one
     is unknown. A string max of ``ct.STAT_CHARS`` characters or more is a
     prefix of the true max; with its last code point bumped it is an
-    upper bound, and unknown where that code point is U+10FFFF. ``nulls``
-    (None: not known) and ``rows`` count each entry's nulls and rows."""
+    upper bound, and unknown where that code point is U+10FFFF. A float
+    max of 'nan' (the encoder's bound of values holding NaN, which Spark
+    orders above +inf) stays NaN, which no probe's bound rules out.
+    ``nulls`` (None: not known) and ``rows`` count each entry's nulls and
+    rows."""
     family, parse = _FAMILY_OF_CODEC.get(codec, (None, None))
     pairs = []
     for mn, mx in zip(mins, maxs):

@@ -28,6 +28,9 @@ MALLOC_ENV = {
     "MALLOC_MMAP_THRESHOLD_": "2147483648",
     "MALLOC_TRIM_THRESHOLD_": "2147483648",
     "MALLOC_TOP_PAD_": "268435456",
+    # Arrow allocates from the same glibc heap: jemalloc kept the freed
+    # buffers of encode_table's in-worker parquet reads resident beside it
+    "ARROW_DEFAULT_MEMORY_POOL": "system",
 }
 
 # rows per Arrow batch handed to pandas UDFs — the analog of the reference

@@ -47,15 +47,19 @@ def test_decode_arrow_testdata_tables(spark):
         assert joined.where(cond).count() == 0, table
 
 
-def test_encode_parquet_files_roundtrip(spark, tmp_path):
-    from orc_rust_spark.operators.encode import encode_parquet_files
-    from orc_rust_spark.plans.pipeline import plan_codecs
-
+def test_encode_parquet_scan_roundtrip(spark, tmp_path):
+    """A bare parquet scan is read inside the Python workers (of files
+    without INT96 timestamps, Spark's default, which the JVM reads)."""
     src_dir = str(tmp_path / "src")
     df = webtext_df(spark, 1500, num_partitions=3)
-    df.write.mode("overwrite").parquet(src_dir)
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    try:
+        df.write.mode("overwrite").parquet(src_dir)
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
     src = spark.read.parquet(src_dir)
-    chunks = encode_parquet_files(spark, src_dir, plan=plan_codecs(src))
+    chunks = encode_table(src, plan=plan_codecs(src))
+    assert "FileScan" not in chunks._jdf.queryExecution().executedPlan().toString()
     decoded = decode_table_arrow(chunks, WEBTEXT_SCHEMA)
     joined = src.alias("s").join(decoded.alias("d"), on="url", how="full")
     bad = joined.where(

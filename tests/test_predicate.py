@@ -255,3 +255,28 @@ def test_mixed_stride_grids_fall_back_to_full_decode(spark):
     decoded, _ = pruned_scan(chunks, SCHEMA, Comparison("id", "=", 3999))
     got = decoded.collect()
     assert len(got) == 1 and got[0].name == "n03999"
+
+
+def test_float_chunks_holding_nan_or_infinities_keep():
+    """A float chunk's and row group's bounds hold +-inf, and NaN, which
+    Spark orders above +inf, opens the upper bound: a chunk holding them
+    keeps for every probe they match."""
+    import math
+
+    import pyarrow as pa
+
+    from orc_rust_spark.operators.encode import encode_chunk
+    from orc_rust_spark.operators.predicate import chunk_keep, group_keep
+
+    vals = pa.table({"v": [1.0, math.inf, math.nan, -math.inf, 2.0, 3.0]})
+    chunk = encode_chunk(vals, 0, 0, {}).to_pylist()
+    assert chunk_keep(chunk, Comparison("v", ">", 5.0))
+    assert chunk_keep(chunk, Comparison("v", "<", -5.0))
+    assert chunk_keep(chunk, Comparison("v", ">", math.inf))
+    grouped = encode_chunk(vals, 0, 0, {"v": {"row_index": True, "row_index_stride": 2}})
+    rows = grouped.to_pylist()
+    assert group_keep(rows, Comparison("v", ">", 5.0)) == [0, 1]
+    assert group_keep(rows, Comparison("v", "<", -5.0)) == [1]
+    assert group_keep(rows, Comparison("v", ">", math.inf)) == [1]
+    assert not chunk_keep(encode_chunk(pa.table({"v": [1.0, 2.0]}), 0, 0, {}).to_pylist(),
+                          Comparison("v", ">", 5.0))

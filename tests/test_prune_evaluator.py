@@ -310,13 +310,20 @@ _CHUNK_VALUES = {
     "rle_v2": st.integers(-40, 40) | st.integers(I64_MIN, I64_MAX),
     "byte_rle": st.integers(-128, 127),
     "float_plain": st.integers(-40, 40).map(float)
-    | st.floats(allow_nan=False, allow_infinity=False),
+    | st.floats(allow_nan=False, allow_infinity=False)
+    | st.sampled_from([math.nan, math.inf, -math.inf]),
     "date": st.dates(dt.date(1960, 1, 1), dt.date(1960, 3, 1)) | st.dates(),
     "timestamp_split": st.datetimes(dt.datetime(2020, 1, 1), dt.datetime(2020, 1, 2))
     | st.datetimes(),
     "direct": st.text(alphabet="ab\x00é", max_size=3) | _LONG_TEXT,
     "decimal": st.decimals(-50, 50, places=2),
 }
+
+
+def _spark_order(v):
+    """Sort key of a row value in Spark's order, where NaN is above +inf
+    (and equal to itself)."""
+    return (1, 0.0) if isinstance(v, float) and v != v else (0, v)
 
 
 def _stat(codec: str, v) -> str:
@@ -400,6 +407,9 @@ def _sql(v, pred):
         # statistics' UTC reading (an instant, or a wall clock at the UTC
         # session time zone)
         p = p.astimezone(UTC).replace(tzinfo=None)
+    if any(isinstance(x, float) and x != x for x in (v, p)) and all(
+            isinstance(x, (int, float)) and not isinstance(x, bool) for x in (v, p)):
+        v, p = _spark_order(v), _spark_order(p)  # Spark: NaN = NaN, NaN > +inf
     try:
         return {"=": lambda: v == p, "!=": lambda: v != p, "<": lambda: v < p,
                 "<=": lambda: v <= p, ">": lambda: v > p, ">=": lambda: v >= p}[pred.op]()
@@ -422,12 +432,12 @@ def test_chunk_stats_keep_every_matching_group(codec, data):
           "nulls": [g.count(None) for g in groups], "min": [], "max": []}
     for vals in groups:
         live = [v for v in vals if v is not None]
-        rg["min"].append(_stat(codec, min(live)) if live else None)
-        rg["max"].append(_stat(codec, max(live)) if live else None)
+        rg["min"].append(_stat(codec, min(live, key=_spark_order)) if live else None)
+        rg["max"].append(_stat(codec, max(live, key=_spark_order)) if live else None)
     live = [v for vals in groups for v in vals if v is not None]
     row = {"column": "c", "stream_kind": "DATA", "codec": codec,
-           "min_val": _stat(codec, min(live)) if live else None,
-           "max_val": _stat(codec, max(live)) if live else None,
+           "min_val": _stat(codec, min(live, key=_spark_order)) if live else None,
+           "max_val": _stat(codec, max(live, key=_spark_order)) if live else None,
            "null_count": sum(rg["nulls"]), "row_count": sum(rg["n"]),
            "stats_json": json.dumps({"rg": rg})}
     pred = data.draw(_chunk_predicates([v for vals in groups for v in vals]))
